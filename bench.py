@@ -422,7 +422,10 @@ def _wide_ann_cosine_bench(spark, n: int = 100_000, dim: int = 256) -> dict:
     """expr-vs-BLAS cosine top-k at dim 256 (VERDICT r3 item 6): the
     interpreted JVM fold is O(dim) interpreter dispatches per row, the
     pandas-UDF path is one BLAS matrix-vector product per Arrow batch.
-    timed with the canonical _best_of_3 protocol (r12: was min-of-2 — the\n    one metric family whose protocol under-absorbed JIT warm-up; a fresh\n    subprocess pass curve reads expr 3.34/1.02/0.80/0.65/0.54 s, so two\n    passes published whatever slice of the compile curve the host hit)."""
+    timed with the canonical _best_of_3 protocol (r12: was min-of-2 — the
+    one metric family whose protocol under-absorbed JIT warm-up; a fresh
+    subprocess pass curve reads expr 3.34/1.02/0.80/0.65/0.54 s, so two
+    passes published whatever slice of the compile curve the host hit)."""
     from kafka_firehose_nozzle_spark.operators import similarity as S
 
     emb = _ann_corpus(spark, n, dim)

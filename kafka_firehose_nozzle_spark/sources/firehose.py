@@ -30,12 +30,15 @@ Source options (all strings, per the DataSource API):
 - ``fixtureRows``  TEST MODE: emit N deterministic canonical envelopes
   per batch instead of connecting (keeps CI network-free; live mode
   uses the hand-rolled stdlib RFC 6455 client in rfc6455.py — no
-  third-party websocket package required)
-- ``fixtureWire``  with fixtureRows: route the fixture envelopes through
-  the dropsonde wire codec (encode -> decode) so CI exercises the same
-  decode path live traffic takes
+  third-party websocket package required). The envelopes are encoded
+  to wire frames and decoded like live traffic.
 
-Rows conform to schemas.ENVELOPE_SCHEMA.
+``read()`` hands Spark one Arrow batch per micro-batch, built by
+``wire_batch.decode_frames`` — the same decode the lake path runs — in
+``wire_batch.FRAME_SCHEMA``: the envelope fields plus ``_decode_error``
+and ``_raw``, so a bad frame is a quarantined row, not a failed query.
+``streaming.job.firehose_stream`` splits the good rows (ENVELOPE_SCHEMA)
+from the bad ones (counted and logged).
 """
 
 from __future__ import annotations
@@ -44,9 +47,19 @@ import json
 import logging
 from collections.abc import Iterator
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from kafka_firehose_nozzle_spark import schemas
+from kafka_firehose_nozzle_spark.sources.dropsonde_wire import encode_envelope
+from kafka_firehose_nozzle_spark.sources.wire_batch import (
+    FRAME_SCHEMA,
+    decode_frames,
+)
+
+_ARROW_SCHEMA = to_arrow_schema(FRAME_SCHEMA)
 
 DEFAULT_IDLE_TIMEOUT = 60  # cli.go:50
 DEFAULT_RETRY_COUNT = 5  # cli.go:53
@@ -135,7 +148,6 @@ class FirehoseStreamReader(SimpleDataSourceStreamReader):
         self.options = options
         self.max_batch = int(options.get("maxBatchRows", DEFAULT_MAX_BATCH_ROWS))
         self.fixture_rows = int(options.get("fixtureRows", 0))
-        self.fixture_wire = options.get("fixtureWire", "false") == "true"
         self.filter_type = options.get("filterType", "")
         if self.filter_type and self.filter_type not in FILTER_EVENT_TYPES:
             raise ValueError(
@@ -284,48 +296,49 @@ class FirehoseStreamReader(SimpleDataSourceStreamReader):
             self._retry_sleep = self._min_retry_delay
             return self._conn
 
-    def _fixture_batch(self, start_n: int, count: int | None = None) -> list[tuple]:
+    def _fixture_frames(self, start_n: int, count: int) -> list[bytes]:
         from kafka_firehose_nozzle_spark.fixtures import canonical_envelopes
 
-        rows = []
+        frames = []
         canon = canonical_envelopes()
-        for i in range(self.fixture_rows if count is None else count):
+        for i in range(count):
             r = dict(canon[(start_n + i) % len(canon)])
             r["timestamp"] = (r["timestamp"] or 0) + start_n + i
-            if self.fixture_wire:
-                # same path live traffic takes: wire bytes -> decode
-                from kafka_firehose_nozzle_spark.sources.dropsonde_wire import (
-                    encode_envelope,
+            frames.append(encode_envelope(r))
+        return frames
+
+    def _kept(self, batch) -> Iterator:
+        """``batch`` as an iterator of at most one batch, without the
+        rows ``filterType`` excludes. Empty when no row is left: Spark
+        rejects a non-empty result whose offset did not advance."""
+        if self._allowed is not None:
+            # belt over the server-side filter; quarantined rows stay so
+            # they are still counted
+            batch = batch.filter(
+                pc.or_kleene(
+                    pc.is_in(
+                        batch.column("eventType"),
+                        value_set=pa.array(sorted(self._allowed), pa.int32()),
+                    ),
+                    pc.is_valid(batch.column("_decode_error")),
                 )
+            )
+        return iter([batch] if batch.num_rows else [])
 
-                rows.append(_decode_dropsonde(encode_envelope(r)))
-            else:
-                rows.append(_envelope_dict_to_tuple(r))
-        return rows
-
-    def _keep(self, row: tuple) -> bool:
-        # eventType is ENVELOPE_SCHEMA field 1
-        return self._allowed is None or row[1] in self._allowed
-
-    def read(self, start: dict) -> tuple[Iterator[tuple], dict]:
-        n = start["n"]
-        if self.fixture_rows:
-            rows = [r for r in self._fixture_batch(n) if self._keep(r)]
-            return iter(rows), {"n": n + self.fixture_rows}
+    def _recv_frames(self, conn) -> Iterator[bytes]:
+        """Frames off the socket until the batch is full or the socket
+        goes quiet, fails or closes."""
         from kafka_firehose_nozzle_spark.sources import rfc6455
 
-        conn = self._connect()
-        rows = []
-        n_read = 0
         idle = float(self.options.get("idleTimeout", DEFAULT_IDLE_TIMEOUT))
-        while n_read < self.max_batch:
+        for n_read in range(self.max_batch):
             try:
-                # quick drain once the batch has rows; full idle wait
+                # quick drain once the batch has frames; full idle wait
                 # only while empty (the stdlib analog of gorilla's
                 # per-read deadline, noaa async.go:255-257)
-                msg = conn.recv(timeout=0.05 if rows else idle)
+                msg = conn.recv(timeout=0.05 if n_read else idle)
             except TimeoutError:
-                if not rows:
+                if not n_read:
                     # a full idleTimeout with zero messages means the
                     # connection is dead (ST5; noaa returns a retry
                     # error on the read deadline, async.go:266-268) —
@@ -333,7 +346,7 @@ class FirehoseStreamReader(SimpleDataSourceStreamReader):
                     # micro-batch redials
                     self._drop_connection()
                     self._spend_retry(f"idle timeout after {idle}s")
-                break
+                return
             except rfc6455.WSClosed as e:
                 if e.code == rfc6455.CLOSE_POLICY_VIOLATION:
                     # go-nozzle detector.go:71-99: ClosePolicyViolation
@@ -347,18 +360,24 @@ class FirehoseStreamReader(SimpleDataSourceStreamReader):
                     )
                 self._drop_connection()
                 self._spend_retry(f"connection closed ({e.code} {e.reason})")
-                break
+                return
             except (rfc6455.WSError, OSError) as e:
                 self._drop_connection()
                 self._spend_retry(str(e))
-                break
-            n_read += 1
-            row = _decode_dropsonde(msg)
-            if self._keep(row):  # belt over the server-side filter
-                rows.append(row)
-        return iter(rows), {"n": n + n_read}
+                return
+            yield msg
 
-    def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[tuple]:
+    def read(self, start: dict) -> tuple[Iterator, dict]:
+        n = start["n"]
+        if self.fixture_rows:
+            frames = self._fixture_frames(n, self.fixture_rows)
+        else:
+            frames = self._recv_frames(self._connect())
+        # one row per frame consumed, good or bad
+        batch = decode_frames(frames, _ARROW_SCHEMA)
+        return self._kept(batch), {"n": n + batch.num_rows}
+
+    def readBetweenOffsets(self, start: dict, end: dict) -> Iterator:
         """Crash-recovery replay: after a restart Spark re-reads every
         batch that was planned but not yet committed (the driver-side
         prefetch cache died with the process). Fixture mode regenerates
@@ -376,9 +395,8 @@ class FirehoseStreamReader(SimpleDataSourceStreamReader):
         than losing it unobservably."""
         n, n_end = start["n"], end["n"]
         if self.fixture_rows:
-            return iter(
-                [r for r in self._fixture_batch(n, n_end - n) if self._keep(r)]
-            )
+            frames = self._fixture_frames(n, n_end - n)
+            return self._kept(decode_frames(frames, _ARROW_SCHEMA))
         lost = max(0, n_end - n)
         self.dropped_replay_rows += lost
         logging.getLogger("kafka_firehose_nozzle_spark").warning(
@@ -396,41 +414,6 @@ class FirehoseStreamReader(SimpleDataSourceStreamReader):
         pass
 
 
-def _envelope_dict_to_tuple(r: dict) -> tuple:
-    """Envelope dict (fixtures format) -> row tuple in schema order."""
-
-    def sub(d: dict | None, schema) -> tuple | None:
-        if d is None:
-            return None
-        return tuple(
-            sub(d[f.name], f.dataType)
-            if hasattr(f.dataType, "fields") and d[f.name] is not None
-            else d[f.name]
-            for f in schema.fields
-        )
-
-    out = []
-    for f in schemas.ENVELOPE_SCHEMA.fields:
-        v = r.get(f.name)
-        if hasattr(f.dataType, "fields"):
-            v = sub(v, f.dataType)
-        out.append(v)
-    return tuple(out)
-
-
-def _decode_dropsonde(msg: bytes) -> tuple:
-    """Dropsonde protobuf wire bytes -> envelope tuple (S1).
-
-    Hand-rolled proto2 wire parser (see dropsonde_wire.py) — the same
-    decode the reference gets from ``proto.Unmarshal`` inside noaa
-    (go-nozzle consumer.go:103), with no descriptor or protobuf runtime
-    required on executors.
-    """
-    from kafka_firehose_nozzle_spark.sources.dropsonde_wire import decode_envelope
-
-    return _envelope_dict_to_tuple(decode_envelope(bytes(msg)))
-
-
 class FirehoseDataSource(DataSource):
     """spark.readStream.format("firehose") after
     spark.dataSource.register(FirehoseDataSource)."""
@@ -440,7 +423,7 @@ class FirehoseDataSource(DataSource):
         return "firehose"
 
     def schema(self):
-        return schemas.ENVELOPE_SCHEMA
+        return FRAME_SCHEMA
 
     def simpleStreamReader(self, schema) -> FirehoseStreamReader:
         return FirehoseStreamReader(self.options)

@@ -1,38 +1,39 @@
-"""Batch decode of dropsonde protobuf wire frames from a binary column.
+"""Dropsonde protobuf wire frames -> typed envelope rows, for the live
+stream and the lake alike.
 
-The streaming source decodes frames one-at-a-time inside the custom
-DataSource reader (firehose.py::_decode_dropsonde); lakes additionally
-accumulate RAW capture files — parquet with a ``binary`` payload column
-of undecoded wire frames (the Kafka-archive / pcap-dump shape).  This
-module turns such a column into typed ENVELOPE_SCHEMA rows at corpus
-scale:
+:func:`decode_frames` is the one decode loop: a list of raw frames in,
+one Arrow ``RecordBatch`` of envelope fields plus ``_decode_error`` /
+``_raw`` out. The firehose reader (firehose.py) returns that batch from
+``read()`` as is; lakes run it per Arrow batch over a ``binary`` column
+of undecoded capture frames (the Kafka-archive / pcap-dump shape) in
+:func:`decode_wire_frames`:
 
-- ``mapInPandas`` over Arrow batches: the pure-python proto2 parser
+- ``mapInArrow``: the pure-python proto2 parser
   (sources/dropsonde_wire.py — no protobuf runtime needed on
   executors) runs per frame inside a batch loop, so the plan stays one
   embarrassingly-parallel map stage — no shuffle, no driver
   involvement, partition-count parallelism.
 - Undecodable frames follow the reference's counted-drop stance
-  (kafka.go:269-271): they land in a ``_decode_error`` column instead
-  of killing the job, and the caller splits good/bad exactly like the
-  JSONL quarantine source.
+  (kafka.go:269-271): they land in a ``_decode_error`` column with
+  their raw bytes instead of killing the job or the stream, and the
+  caller splits good/bad exactly like the JSONL quarantine source.
 
-Reference parity: S1 (protobuf decode), the batch/lake edge of it.
+Reference parity: S1 (protobuf decode).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Iterable
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from kafka_firehose_nozzle_spark import schemas
-
-# every field forced nullable: a quarantined frame carries NULL
-# envelope fields, which the envelope schema's required (non-null)
-# proto2 fields would reject at the Unsafe row writer (JVM NPE)
+from kafka_firehose_nozzle_spark.sources.dropsonde_wire import (
+    decode_envelope,
+    encode_envelope,
+)
 
 
 def _with_residue(dt):
@@ -54,19 +55,80 @@ def _with_residue(dt):
     )
 
 
-DECODED_SCHEMA = T.StructType(
-    [
-        T.StructField(f.name, _with_residue(f.dataType), True)
-        for f in schemas.ENVELOPE_SCHEMA.fields
-    ]
-    + [
-        T.StructField("_decode_error", T.StringType()),
-        # raw frame bytes, populated ONLY for quarantined rows (same
-        # contract as the JSONL source: the byte-exact original is
-        # preserved for repair/replay, good rows don't double-store it)
-        T.StructField("_raw", T.BinaryType()),
-    ]
-)
+def _decoded(payload_type) -> T.StructType:
+    # every field forced nullable: a quarantined frame carries NULL
+    # envelope fields, which the envelope schema's required (non-null)
+    # proto2 fields would reject at the Unsafe row writer (JVM NPE)
+    return T.StructType(
+        [
+            T.StructField(f.name, payload_type(f.dataType), True)
+            for f in schemas.ENVELOPE_SCHEMA.fields
+        ]
+        + [
+            T.StructField("_decode_error", T.StringType()),
+            # raw frame bytes, populated ONLY for quarantined rows (same
+            # contract as the JSONL source: the byte-exact original is
+            # preserved for repair/replay, good rows don't double-store it)
+            T.StructField("_raw", T.BinaryType()),
+        ]
+    )
+
+
+# lake shape: nested residue slots keep decode -> re-encode byte-exact
+DECODED_SCHEMA = _decoded(_with_residue)
+# live shape: no nested residue — sonde_json passes the payload structs
+# through whole, so a nested `_unrecognized` would leak into the JSON
+FRAME_SCHEMA = _decoded(lambda dt: dt)
+
+
+def _quarantine(buf, err: Exception) -> dict:
+    return {
+        "_decode_error": f"{type(err).__name__}: {err}"[:200],
+        # buf can itself be None — the quarantine handler must not raise
+        # (bytes(None) TypeError would fail the job from inside the
+        # never-job-fail path)
+        "_raw": None if buf is None else bytes(buf),
+    }
+
+
+def decode_frames(frames: Iterable, arrow_schema: pa.Schema) -> pa.RecordBatch:
+    """Wire frames -> one Arrow batch in ``arrow_schema`` (DECODED_SCHEMA
+    or FRAME_SCHEMA), one row per frame: envelope fields for good frames,
+    NULL fields plus ``_decode_error`` and ``_raw`` for bad ones. Each
+    frame is decoded as ``frames`` yields it, so a reader that passes a
+    generator over its socket decodes in the gaps between arrivals.
+
+    ``RecordBatch.from_pylist`` against the explicit Arrow schema, not a
+    pandas frame: it keeps a NaN double a value (pandas' object->Arrow
+    conversion would null it), ints exact at any magnitude, and maps
+    nested dicts to struct fields by NAME, ignoring keys the schema
+    lacks."""
+    bufs, rows = [], []
+    for buf in frames:
+        bufs.append(buf)
+        try:
+            if buf is None:
+                raise ValueError("null payload")
+            row = decode_envelope(bytes(buf))
+            # proto2 `required` (envelope.pb.go:99-100): a frame without
+            # them — an empty frame included — is not an envelope
+            if row["origin"] is None or row["eventType"] is None:
+                raise ValueError("missing required field origin/eventType")
+        except Exception as e:  # counted-drop, never job-fail
+            row = _quarantine(buf, e)
+        rows.append(row)
+    try:
+        return pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
+    except (pa.ArrowException, OverflowError):
+        # a parsed value the column cannot hold (e.g. an int32 enum
+        # past 2^31) fails the whole batch: retry row by row so only
+        # that frame is quarantined
+        for i, buf in enumerate(bufs):
+            try:
+                pa.RecordBatch.from_pylist(rows[i : i + 1], schema=arrow_schema)
+            except (pa.ArrowException, OverflowError) as e:
+                rows[i] = _quarantine(buf, e)
+        return pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
 
 
 def decode_wire_frames(
@@ -78,93 +140,16 @@ def decode_wire_frames(
     error text in ``_decode_error``; good rows carry NULL there.  Split
     with ``.filter("_decode_error IS NULL")`` / ``IS NOT NULL`` — both
     halves share the single decode pass.
-
-    ``mapInArrow`` (was mapInPandas): building the output through a
-    pandas frame — even at dtype=object — lets the object->Arrow
-    conversion treat a NaN double as NULL, silently nulling legitimate
-    NaN metric values; ``RecordBatch.from_pylist`` against the explicit
-    Arrow schema keeps NaN a value, ints exact at any magnitude, and
-    maps nested dicts (including the `_unrecognized` residue subfields)
-    to struct fields by NAME.
     """
-    from kafka_firehose_nozzle_spark.sources.dropsonde_wire import (
-        decode_envelope,
-    )
-
-    env_names = [f.name for f in schemas.ENVELOPE_SCHEMA.fields]
 
     def decode(batches):
-        import pyarrow as pa
-
         from pyspark.sql.pandas.types import to_arrow_schema
 
         arrow_schema = to_arrow_schema(DECODED_SCHEMA)
         for batch in batches:
-            rows = []
-            for buf in batch.column(0).to_pylist():
-                try:
-                    if buf is None:
-                        raise ValueError("null payload")
-                    d = decode_envelope(bytes(buf))
-                    row = {name: d.get(name) for name in env_names}
-                    row["_decode_error"] = None
-                    row["_raw"] = None
-                except Exception as e:  # counted-drop, never job-fail
-                    row = {name: None for name in env_names}
-                    row["_decode_error"] = f"{type(e).__name__}: {e}"[:200]
-                    # buf can itself be None — the quarantine handler
-                    # must not raise (bytes(None) TypeError would fail
-                    # the job from inside the never-job-fail path)
-                    row["_raw"] = None if buf is None else bytes(buf)
-                rows.append(row)
-            yield pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
+            yield decode_frames(batch.column(0).to_pylist(), arrow_schema)
 
     return df.select(payload_col).mapInArrow(decode, DECODED_SCHEMA)
-
-
-# arrow-to-pandas cell shapes normalized back to the plain dict format
-# dropsonde_wire's encoder consumes, DRIVEN BY THE SPARK TYPE: a batch
-# that mixes null and non-null rows has its nullable int64 struct
-# children converted to float64 by pyarrow (observed under streaming),
-# so the target type — not the arrived dtype — decides the cast.
-# Also: numpy scalars -> python, MapType list[(k, v)] -> dict,
-# arrays -> list, bytearray -> bytes.
-def _plain(v, dtype):
-    import numpy as np
-
-    # None is the ONLY null here (Arrow to_pylist, not pandas): a float
-    # NaN is a legitimate double VALUE (e.g. a NaN ValueMetric) and must
-    # encode, not vanish — struct.pack round-trips its exact bits
-    if v is None:
-        return None
-    if isinstance(v, np.generic):
-        v = v.item()
-    t = dtype.typeName()
-    if t in ("long", "integer", "short", "byte"):
-        return int(v)
-    if t in ("double", "float"):
-        return float(v)
-    if t == "binary":
-        return bytes(v)
-    if t == "string":
-        return str(v)
-    if t == "struct":
-        out = {
-            f.name: _plain(v.get(f.name), f.dataType) for f in dtype.fields
-        }
-        # nested unknown-field residue rides outside the declared
-        # ENVELOPE_SCHEMA payload types (decode emits it per message
-        # level, DECODED_SCHEMA slots it) — carry it so encode_envelope
-        # re-emits it after that level's known fields
-        if "_unrecognized" not in out and v.get("_unrecognized") is not None:
-            out["_unrecognized"] = bytes(v["_unrecognized"])
-        return out
-    if t == "map":
-        items = v.items() if isinstance(v, dict) else v
-        return {k: _plain(x, dtype.valueType) for k, x in items}
-    if t == "array":
-        return [_plain(x, dtype.elementType) for x in v]
-    return v
 
 
 def encode_wire_frames(
@@ -191,32 +176,23 @@ def encode_wire_frames(
     ``mapInArrow``, NOT ``mapInPandas``: the pandas conversion turns a
     nullable int64 struct child into float64 whenever a batch mixes
     null and non-null parents, silently rounding ns timestamps
-    (> 2^53) to 256-ns multiples — the same hazard the decode path
-    dodges with dtype=object, here on the INPUT side where dtype is
-    not ours to pick. Arrow ``to_pylist`` keeps exact ints."""
-    from kafka_firehose_nozzle_spark.sources.dropsonde_wire import (
-        encode_envelope,
-    )
-
-    env_fields = list(schemas.ENVELOPE_SCHEMA.fields)
-    env_names = [f.name for f in env_fields]
+    (> 2^53) to 256-ns multiples. Arrow ``to_pylist`` yields the plain
+    dict format encode_envelope takes — exact ints, NaN a value, bytes,
+    nested dicts with their ``_unrecognized`` residue — except that a
+    map arrives as (key, value) pairs."""
     out_schema = T.StructType([T.StructField(payload_col, T.BinaryType())])
 
     def encode(batches):
-        import pyarrow as pa
-
         for batch in batches:
-            payloads = [
-                encode_envelope(
-                    {
-                        f.name: _plain(row.get(f.name), f.dataType)
-                        for f in env_fields
-                    }
-                )
-                for row in batch.to_pylist()
-            ]
+            payloads = []
+            for row in batch.to_pylist():
+                if row["tags"] is not None:
+                    row["tags"] = dict(row["tags"])
+                payloads.append(encode_envelope(row))
             yield pa.RecordBatch.from_arrays(
                 [pa.array(payloads, type=pa.binary())], [payload_col]
             )
 
-    return df.select(*env_names).mapInArrow(encode, out_schema)
+    return df.select(*schemas.ENVELOPE_SCHEMA.fieldNames()).mapInArrow(
+        encode, out_schema
+    )

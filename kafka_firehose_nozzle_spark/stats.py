@@ -14,6 +14,7 @@ JSON key order and names — including the reference's literal
 from __future__ import annotations
 
 import json
+import logging
 import os
 import threading
 import time
@@ -26,6 +27,7 @@ from kafka_firehose_nozzle_spark import schemas
 # observation names
 OBS_CONSUME = "nozzle_consume"
 OBS_ROUTED = "nozzle_routed"
+OBS_DECODE = "nozzle_decode"
 
 # slow-consumer alert predicate (go-nozzle/detector.go:116-124): a
 # doppler-originated CounterEvent named TruncatingBuffer.DroppedMessages.
@@ -66,6 +68,29 @@ def observe_consume(df: DataFrame, observation=None) -> DataFrame:
             et.isNull() | ~et.isin(list(schemas.EVENT_TYPE_NAMES))
         ).alias("consume_unknown"),
         F.count_if(slow_consumer_predicate(df)).alias("slow_consumer_alert"),
+    )
+
+
+def observe_decode(df: DataFrame) -> DataFrame:
+    """Attach decode-failure counters to a decoded frame stream (the
+    ``_decode_error``/``_raw`` columns of wire_batch.FRAME_SCHEMA):
+    quarantined frames count into ``consume_fail``, and each one's error
+    and base64 raw bytes ride along for the listener to log."""
+    bad = F.col("_decode_error").isNotNull()
+    return df.observe(
+        OBS_DECODE,
+        F.count_if(bad).alias("consume_fail"),
+        F.collect_list(
+            F.when(
+                bad,
+                F.struct(
+                    F.col("_decode_error").alias("error"),
+                    # unchunked: Spark's base64 breaks lines every 76
+                    # chars, which would split one log line
+                    F.regexp_replace(F.base64("_raw"), "\\s", "").alias("raw"),
+                ),
+            )
+        ).alias("bad_frames"),
     )
 
 
@@ -204,10 +229,17 @@ def make_streaming_listener(stats: Stats, query_id=None):
             if self.query_id is not None and str(prog.id) != str(self.query_id):
                 return
             om = prog.observedMetrics or {}
-            for name in (OBS_CONSUME, OBS_ROUTED):
+            for name in (OBS_CONSUME, OBS_ROUTED, OBS_DECODE):
                 row = om.get(name)
                 if row is not None:
                     stats.merge_observation(row.asDict())
+            if om.get(OBS_DECODE) is not None:
+                for bad in om[OBS_DECODE]["bad_frames"]:
+                    logging.getLogger("kafka_firehose_nozzle_spark").warning(
+                        "firehose frame quarantined: %s; raw frame (base64): %r",
+                        bad["error"],
+                        bad["raw"],
+                    )
             # rows that reached the sink count as published (cli.go:309-313)
             if prog.sink is not None and prog.sink.numOutputRows is not None:
                 n = prog.sink.numOutputRows

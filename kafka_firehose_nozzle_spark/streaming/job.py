@@ -8,16 +8,25 @@ per concern so tests can assemble partial pipelines.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from kafka_firehose_nozzle_spark import schemas
 from kafka_firehose_nozzle_spark.config import Config
 from kafka_firehose_nozzle_spark.pipeline import route_envelopes_config
-from kafka_firehose_nozzle_spark.stats import Stats, make_streaming_listener
+from kafka_firehose_nozzle_spark.stats import (
+    Stats,
+    make_streaming_listener,
+    observe_decode,
+)
 
 
 def firehose_stream(spark: SparkSession, config: Config, **extra_options) -> DataFrame:
-    """Streaming envelope DataFrame from the firehose DataSource
-    (SRC1/SRC2; options map config.go fields)."""
+    """Streaming envelope DataFrame (ENVELOPE_SCHEMA columns) from the
+    firehose DataSource (SRC1/SRC2; options map config.go fields).
+
+    Frames that fail to decode are split off here: ``observe_decode``
+    counts them into ``consume_fail`` and hands their error and raw
+    bytes to the stats listener, which logs each at WARN."""
     from kafka_firehose_nozzle_spark.sources.firehose import FirehoseDataSource
 
     spark.dataSource.register(FirehoseDataSource)
@@ -40,7 +49,8 @@ def firehose_stream(spark: SparkSession, config: Config, **extra_options) -> Dat
         reader = reader.option("retryCount", str(config.cf.retry_count))
     for k, v in extra_options.items():
         reader = reader.option(k, str(v))
-    return reader.load()
+    good = observe_decode(reader.load()).filter(F.col("_decode_error").isNull())
+    return good.select(*schemas.ENVELOPE_SCHEMA.fieldNames())
 
 
 def file_replay_stream(spark: SparkSession, path: str) -> DataFrame:

@@ -1,5 +1,5 @@
 """S1: dropsonde protobuf wire codec — golden bytes, round-trips, and the
-firehose reader's live-decode path driven through fixture-wire mode.
+firehose reader's decode path (fixture mode encodes, then decodes).
 
 Golden semantics mirror the reference's decode fixtures
 (helper_test.go:12-107, kafka_test.go:557-603): the canonical envelopes
@@ -27,10 +27,7 @@ from kafka_firehose_nozzle_spark.sources.dropsonde_wire import (
     decode_envelope,
     encode_envelope,
 )
-from kafka_firehose_nozzle_spark.sources.firehose import (
-    FirehoseStreamReader,
-    _envelope_dict_to_tuple,
-)
+from kafka_firehose_nozzle_spark.sources.firehose import FirehoseStreamReader
 
 # events.Envelope{origin:"fake-origin-2" eventType:ValueMetric
 #   timestamp:TEST_TS valueMetric:{name:"df" value:0.99}}
@@ -236,25 +233,27 @@ def test_double_wire_is_fixed64_little_endian():
     assert struct.pack("<d", 0.99) in raw
 
 
-# --- reader: fixture-wire mode drives the live decode path ------------------
+# --- reader: fixture mode drives the live decode path ----------------------
 
 
-def test_fixture_wire_mode_matches_plain_fixture_mode():
-    plain = FirehoseStreamReader({"fixtureRows": "8"})
-    wired = FirehoseStreamReader({"fixtureRows": "8", "fixtureWire": "true"})
-    rows_p, off_p = plain.read({"n": 0})
-    rows_w, off_w = wired.read({"n": 0})
-    assert list(rows_p) == list(rows_w)
-    assert off_p == off_w == {"n": 8}
-
-
-def test_decode_dropsonde_returns_schema_order_tuple():
-    from kafka_firehose_nozzle_spark.sources.firehose import _decode_dropsonde
-
-    row = _decode_dropsonde(GOLDEN_LOG)
-    expected = _envelope_dict_to_tuple(decode_envelope(GOLDEN_LOG))
-    assert row == expected
-    # spot-check positional contract against ENVELOPE_SCHEMA
+def test_reader_batch_rows_equal_decode_envelope():
+    """The reader's Arrow batch carries exactly what decode_envelope
+    yields for each fixture frame, field for field, in ENVELOPE_SCHEMA
+    column order, with the quarantine columns NULL."""
+    reader = FirehoseStreamReader({"fixtureRows": "8"})
+    batches, end = reader.read({"n": 0})
+    (batch,) = list(batches)
+    assert end == {"n": 8}
     names = [f.name for f in schemas.ENVELOPE_SCHEMA.fields]
-    assert row[names.index("origin")] == "fake-origin-1"
-    assert row[names.index("eventType")] == schemas.LOG_MESSAGE
+    assert batch.schema.names == names + ["_decode_error", "_raw"]
+    frames = reader._fixture_frames(0, 8)
+    assert frames[0] == GOLDEN_LOG
+    for row, frame in zip(batch.to_pylist(), frames, strict=True):
+        want = decode_envelope(frame)
+        assert {k: row[k] for k in want} == want
+        assert row["_unrecognized"] is None
+        assert row["_decode_error"] is None and row["_raw"] is None
+    # spot-check the positional contract against ENVELOPE_SCHEMA
+    first = batch.to_pylist()[0]
+    assert first["origin"] == "fake-origin-1"
+    assert first["eventType"] == schemas.LOG_MESSAGE

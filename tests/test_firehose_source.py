@@ -7,12 +7,19 @@ import time
 
 import pytest
 
+from kafka_firehose_nozzle_spark.config import Config
+from kafka_firehose_nozzle_spark.schemas import ENVELOPE_SCHEMA
 from kafka_firehose_nozzle_spark.sources.firehose import (
-    FirehoseDataSource,
     FirehoseStreamReader,
     fetch_uaa_token,
     firehose_url,
 )
+from kafka_firehose_nozzle_spark.streaming.job import firehose_stream
+
+
+def rows_of(batches) -> list[dict]:
+    """The rows of the Arrow batches a reader returns."""
+    return [r for b in batches for r in b.to_pylist()]
 
 
 def test_firehose_url():
@@ -49,8 +56,8 @@ def test_filter_type_logs_surfaces_only_log_messages():
     # SRC3: filterType=logs -> only LogMessage envelopes (eventType 5)
     reader = FirehoseStreamReader({"fixtureRows": "8", "filterType": "logs"})
     rows, end = reader.read({"n": 0})
-    rows = list(rows)
-    assert rows and all(r[1] == 5 for r in rows)
+    rows = rows_of(rows)
+    assert rows and all(r["eventType"] == 5 for r in rows)
     # offsets still advance by envelopes consumed, not rows surfaced
     assert end == {"n": 8}
 
@@ -58,7 +65,7 @@ def test_filter_type_logs_surfaces_only_log_messages():
 def test_filter_type_metrics_surfaces_only_metric_envelopes():
     reader = FirehoseStreamReader({"fixtureRows": "8", "filterType": "metrics"})
     rows, _ = reader.read({"n": 0})
-    types = {r[1] for r in rows}
+    types = {r["eventType"] for r in rows_of(rows)}
     assert types and types <= {6, 7, 9}  # ValueMetric/CounterEvent/ContainerMetric
 
 
@@ -87,13 +94,13 @@ def test_reader_offsets_fixture_mode():
     reader = FirehoseStreamReader({"fixtureRows": "16"})
     assert reader.initialOffset() == {"n": 0}
     rows, end = reader.read({"n": 0})
-    rows = list(rows)
+    rows = rows_of(rows)
     assert len(rows) == 16
     assert end == {"n": 16}
     rows2, end2 = reader.read(end)
     assert end2 == {"n": 32}
     # deterministic: same offset -> same rows
-    again = list(reader.read({"n": 0})[0])
+    again = rows_of(reader.read({"n": 0})[0])
     assert again == rows
 
 
@@ -111,16 +118,11 @@ def test_crash_recovery_replays_from_checkpoint(spark, tmp_path):
     not lose across a restart."""
     from kafka_firehose_nozzle_spark.fixtures import canonical_envelopes
 
-    spark.dataSource.register(FirehoseDataSource)
     out_dir = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
 
     def start():
-        df = (
-            spark.readStream.format("firehose")
-            .option("fixtureRows", "7")
-            .load()
-        )
+        df = firehose_stream(spark, Config(), fixtureRows=7)
         return (
             df.writeStream.format("parquet")
             .option("path", out_dir)
@@ -181,12 +183,7 @@ def test_crash_recovery_replays_from_checkpoint(spark, tmp_path):
 def test_stream_through_spark(spark, tmp_path):
     """End-to-end: register the DataSource, run a streaming batch into a
     memory sink, check schema + row content."""
-    spark.dataSource.register(FirehoseDataSource)
-    df = (
-        spark.readStream.format("firehose")
-        .option("fixtureRows", "24")
-        .load()
-    )
+    df = firehose_stream(spark, Config(), fixtureRows=24)
     q = (
         df.writeStream.format("memory")
         .queryName("firehose_fixture_out")
@@ -205,3 +202,4 @@ def test_stream_through_spark(spark, tmp_path):
     assert bytes(row.logMessage.message) == b"hello"
     names = [f.name for f in out.schema.fields]
     assert names[:3] == ["origin", "eventType", "timestamp"]
+    assert names == ENVELOPE_SCHEMA.fieldNames()

@@ -20,6 +20,12 @@ import ssl
 import pytest
 
 from kafka_firehose_nozzle_spark import schemas
+from kafka_firehose_nozzle_spark.config import (
+    CFConfig,
+    Config,
+    KafkaConfig,
+    TopicConfig,
+)
 from kafka_firehose_nozzle_spark.fixtures import canonical_envelopes
 from kafka_firehose_nozzle_spark.sources import rfc6455
 from kafka_firehose_nozzle_spark.sources.dropsonde_wire import encode_envelope
@@ -27,6 +33,7 @@ from kafka_firehose_nozzle_spark.sources.firehose import (
     FirehoseStreamReader,
     fetch_uaa_token,
 )
+from kafka_firehose_nozzle_spark.streaming.job import firehose_stream
 
 from tests.stub_doppler import StubDoppler, StubUAA
 
@@ -35,6 +42,32 @@ TOKEN = "bearer test-token"
 
 def wire_frames(n: int = 8) -> list[bytes]:
     return [encode_envelope(e) for e in canonical_envelopes()[:n]]
+
+
+def rows_of(batches) -> list[dict]:
+    """The rows of the Arrow batches a reader returns."""
+    return [r for b in batches for r in b.to_pylist()]
+
+
+# every known event type routed to a topic
+ROUTING = KafkaConfig(
+    topic=TopicConfig(
+        log_message="log",
+        value_metric="metric",
+        container_metric="containermetric",
+        http_start_stop="httpstartstop",
+        counter_event="counterevent",
+        error="error",
+    )
+)
+
+
+def stream_config(stub: StubDoppler, **cf) -> Config:
+    """Config for ``firehose_stream`` against ``stub``."""
+    return Config(
+        subscription_id="kafka-firehose-nozzle",
+        cf=CFConfig(doppler_address=stub.address, **cf),
+    )
 
 
 def reader_opts(stub: StubDoppler, **extra) -> dict:
@@ -214,8 +247,9 @@ def test_connect_auth_filter_and_decode_over_live_socket():
         [{"frames": frames, "then": "silent"}], token=TOKEN
     ) as stub:
         reader = FirehoseStreamReader(reader_opts(stub, filterType="logs"))
-        rows, end = reader.read({"n": 0})
-        rows = list(rows)
+        batches, end = reader.read({"n": 0})
+        (batch,) = list(batches)
+        rows = batch.to_pylist()
 
     assert len(stub.requests) == 1
     req = stub.requests[0]
@@ -225,7 +259,7 @@ def test_connect_auth_filter_and_decode_over_live_socket():
     assert req["headers"]["upgrade"] == "websocket"
     # all 8 wire frames were read; client-side filter keeps only logs
     assert end == {"n": 8}
-    assert rows and all(r[1] == schemas.LOG_MESSAGE for r in rows)
+    assert rows and all(r["eventType"] == schemas.LOG_MESSAGE for r in rows)
     assert len(rows) == sum(
         1 for e in canonical_envelopes() if e["eventType"] == schemas.LOG_MESSAGE
     )
@@ -270,12 +304,12 @@ def test_idle_timeout_spends_retry_then_reconnect_resets_budget():
     ) as stub:
         reader = FirehoseStreamReader(reader_opts(stub, retryCount=3))
         rows1, end1 = reader.read({"n": 0})
-        assert list(rows1) == [] and end1 == {"n": 0}
+        assert rows_of(rows1) == [] and end1 == {"n": 0}
         assert reader._retries_left == 2  # idle timeout spent one
         assert reader._conn is None  # dead connection dropped
 
         rows2, end2 = reader.read({"n": 0})
-        assert len(list(rows2)) == 3 and end2 == {"n": 3}
+        assert len(rows_of(rows2)) == 3 and end2 == {"n": 3}
         assert reader._retries_left == 3  # reset on successful redial
     assert len(stub.requests) == 2
 
@@ -294,12 +328,12 @@ def test_close_1008_raises_slow_consumer_alert_and_reconnects():
     ) as stub:
         reader = FirehoseStreamReader(reader_opts(stub))
         rows1, end1 = reader.read({"n": 0})
-        assert len(list(rows1)) == 1 and end1 == {"n": 1}
+        assert len(rows_of(rows1)) == 1 and end1 == {"n": 1}
         assert reader.slow_consumer_close_alerts == 1
         assert reader._conn is None
 
         rows2, end2 = reader.read(end1)
-        assert len(list(rows2)) == 3 and end2 == {"n": 4}
+        assert len(rows_of(rows2)) == 3 and end2 == {"n": 4}
         assert reader.slow_consumer_close_alerts == 1  # clean session
     assert len(stub.requests) == 2
 
@@ -310,7 +344,7 @@ def test_abrupt_tcp_drop_spends_retry_not_alert():
     ) as stub:
         reader = FirehoseStreamReader(reader_opts(stub, retryCount=5))
         rows, _ = reader.read({"n": 0})
-        assert len(list(rows)) == 2
+        assert len(rows_of(rows)) == 2
         assert reader.slow_consumer_close_alerts == 0
         assert reader._retries_left == 4
 
@@ -336,7 +370,7 @@ def test_uaa_password_grant_live_then_firehose_dial():
             )
             reader = FirehoseStreamReader(opts)
             rows, _ = reader.read({"n": 0})
-            assert len(list(rows)) == 2
+            assert len(rows_of(rows)) == 2
             assert (
                 stub.requests[0]["headers"]["authorization"]
                 == "bearer tok-nozzle-user"
@@ -361,7 +395,7 @@ def test_expired_token_refetched_from_uaa_on_401():
             opts.update(uaaAddress=uaa.address, username="u", password="p")
             reader = FirehoseStreamReader(opts)
             rows, _ = reader.read({"n": 0})
-            assert len(list(rows)) == 2
+            assert len(rows_of(rows)) == 2
         assert uaa.calls == 2  # initial grant + refresh after the 401
         assert reader._token == "bearer tok-u-2"
         # dial 1 carried the stale token (401'd), dial 2 the refreshed one
@@ -425,7 +459,7 @@ def test_uaa_html_maintenance_page_spends_retry_then_recovers():
             opts.update(uaaAddress=uaa.address, username="u", password="p")
             reader = FirehoseStreamReader(opts)
             rows, _ = reader.read({"n": 0})
-            assert len(list(rows)) == 2
+            assert len(rows_of(rows)) == 2
         assert uaa.calls == 1  # grant #0 was the HTML outage, #1 real
         assert reader._retries_left == 3  # reset after successful dial
 
@@ -498,7 +532,7 @@ def test_wss_untrusted_cert_fails_closed_and_skipverify_opens(tmp_path):
             reader_opts(stub, insecureSSLSkipVerify="true")
         )
         rows, _ = reader.read({"n": 0})
-        assert len(list(rows)) == 2
+        assert len(rows_of(rows)) == 2
 
 
 @pytest.mark.slow
@@ -513,8 +547,6 @@ def test_soak_live_websocket_with_faults(spark, tmp_path):
     soak: flat per-batch latency, exact delivery (no loss, no dup),
     fault recovery visible as exactly three server-side connections."""
     import time
-
-    from kafka_firehose_nozzle_spark.sources.firehose import FirehoseDataSource
 
     per_batch = 30
     n_total = 3000  # ~100 micro-batches at maxBatchRows=30
@@ -555,16 +587,11 @@ def test_soak_live_websocket_with_faults(spark, tmp_path):
         ],
         token=TOKEN,
     ) as stub:
-        spark.dataSource.register(FirehoseDataSource)
-        df = (
-            spark.readStream.format("firehose")
-            .option("dopplerAddress", stub.address)
-            .option("subscriptionID", "kafka-firehose-nozzle")
-            .option("token", TOKEN)
-            .option("idleTimeout", "20")
-            .option("retryDelaySeconds", "0.01")
-            .option("maxBatchRows", str(per_batch))
-            .load()
+        df = firehose_stream(
+            spark,
+            stream_config(stub, token=TOKEN, idle_timeout=20),
+            retryDelaySeconds=0.01,
+            maxBatchRows=per_batch,
         )
         q = (
             df.writeStream.format("memory")
@@ -676,8 +703,6 @@ def test_endurance_soak_1000_batches_multi_reconnect(spark, tmp_path):
     import os as _os
     import time
 
-    from kafka_firehose_nozzle_spark.sources.firehose import FirehoseDataSource
-
     per_batch = 30
     n_total = 30_000  # ~1000 micro-batches at maxBatchRows=30
     canon = canonical_envelopes()
@@ -728,18 +753,17 @@ def test_endurance_soak_1000_batches_multi_reconnect(spark, tmp_path):
             ],
             token="bearer tok-u-1",
         ) as stub:
-            spark.dataSource.register(FirehoseDataSource)
-            df = (
-                spark.readStream.format("firehose")
-                .option("dopplerAddress", stub.address)
-                .option("subscriptionID", "kafka-firehose-nozzle")
-                .option("uaaAddress", uaa.address)
-                .option("username", "u")
-                .option("password", "p")
-                .option("idleTimeout", "3")
-                .option("retryDelaySeconds", "0.01")
-                .option("maxBatchRows", str(per_batch))
-                .load()
+            df = firehose_stream(
+                spark,
+                stream_config(
+                    stub,
+                    uaa_address=uaa.address,
+                    username="u",
+                    password="p",
+                    idle_timeout=3,
+                ),
+                retryDelaySeconds=0.01,
+                maxBatchRows=per_batch,
             )
             q = (
                 df.writeStream.format("memory")
@@ -839,25 +863,17 @@ def test_endurance_soak_1000_batches_multi_reconnect(spark, tmp_path):
 
 def test_live_websocket_through_spark_stream(spark, tmp_path):
     """The full Structured Streaming path against a live socket:
-    readStream.format('firehose') -> driver-side RFC 6455 client ->
+    firehose_stream -> the source reader's RFC 6455 client ->
     micro-batches into a memory sink. The stub serves 8 envelopes then
     holds the socket open; we poll the sink to 8 rows and stop."""
     import time
-
-    from kafka_firehose_nozzle_spark.sources.firehose import FirehoseDataSource
 
     frames = wire_frames(8)
     with StubDoppler(
         [{"frames": frames, "then": "silent"}], token=TOKEN
     ) as stub:
-        spark.dataSource.register(FirehoseDataSource)
-        df = (
-            spark.readStream.format("firehose")
-            .option("dopplerAddress", stub.address)
-            .option("subscriptionID", "kafka-firehose-nozzle")
-            .option("token", TOKEN)
-            .option("idleTimeout", "30")
-            .load()
+        df = firehose_stream(
+            spark, stream_config(stub, token=TOKEN, idle_timeout=30)
         )
         q = (
             df.writeStream.format("memory")
@@ -884,3 +900,130 @@ def test_live_websocket_through_spark_stream(spark, tmp_path):
         want[e["eventType"]] = want.get(e["eventType"], 0) + 1
     assert {r.eventType: r.n for r in got} == want
     assert stub.requests[0]["path"] == "/firehose/kafka-firehose-nozzle"
+
+
+def test_bad_frames_mid_stream_quarantined_counted_and_logged(
+    spark, tmp_path, caplog
+):
+    """A truncated frame and an empty frame in the middle of a live
+    stream: the query keeps running, the sink holds exactly what
+    route_envelopes_config makes of the good envelopes as a batch,
+    /stats/app counts the good frames in ``consume`` and the two bad
+    ones in ``consume_fail``, and both raw payloads are logged at WARN
+    (base64)."""
+    import base64
+    import json
+    import re
+    import time
+    import urllib.request
+
+    from kafka_firehose_nozzle_spark.pipeline import route_envelopes_config
+    from kafka_firehose_nozzle_spark.server import start_stats_server
+    from kafka_firehose_nozzle_spark.streaming.job import start_pipeline
+
+    good = wire_frames(8)
+    truncated = good[0][:-3]
+    frames = good[:3] + [truncated] + good[3:5] + [b""] + good[5:]
+    with StubDoppler(
+        [{"frames": frames, "then": "silent"}], token=TOKEN
+    ) as stub:
+        cfg = stream_config(stub, token=TOKEN, idle_timeout=30)
+        cfg.kafka = ROUTING
+        handle = start_pipeline(
+            spark,
+            firehose_stream(spark, cfg),
+            cfg,
+            str(tmp_path / "ckpt"),
+            sink="memory",
+            memory_sink_name="bad_frames_sink",
+        )
+        server = start_stats_server(handle.stats, port=0)
+        url = f"http://127.0.0.1:{server.server_port}/stats/app"
+        try:
+            with caplog.at_level("WARNING", logger="kafka_firehose_nozzle_spark"):
+                deadline = time.time() + 60
+                while time.time() < deadline:
+                    with urllib.request.urlopen(url) as r:
+                        snap = json.loads(r.read())
+                    if (
+                        snap["consume"] >= 8
+                        and snap["consume_fail"] >= 2
+                        and snap["publish"] >= snap["forwarded"]
+                    ):
+                        break
+                    time.sleep(0.2)
+                assert handle.query.isActive
+                assert handle.query.exception() is None
+                got = sorted(
+                    (r.topic, r.value)
+                    for r in spark.table("bad_frames_sink").collect()
+                )
+        finally:
+            server.shutdown()
+            handle.stop()
+
+    want_df = spark.createDataFrame(
+        canonical_envelopes(), schemas.ENVELOPE_SCHEMA
+    )
+    want = sorted(
+        (r.topic, r.value) for r in route_envelopes_config(want_df, cfg).collect()
+    )
+    assert got == want
+    assert snap["consume"] == 8
+    assert snap["consume_fail"] == 2
+    logged = [
+        m.group(1)
+        for rec in caplog.records
+        if rec.levelname == "WARNING"
+        for m in [re.search(r"raw frame \(base64\): '([^']*)'", rec.getMessage())]
+        if m
+    ]
+    assert sorted(logged) == sorted(
+        [base64.b64encode(truncated).decode(), ""]
+    )
+
+
+def test_nested_unknown_field_never_reaches_sink_json(spark, tmp_path):
+    """sonde_json passes ``logMessage`` through whole, so the live stream
+    must not carry nested unknown-field residue: a LogMessage frame with
+    an unknown field (tag 99) inside ``logMessage`` routes to a value
+    byte-identical to the same frame without it."""
+    import time
+
+    from kafka_firehose_nozzle_spark.sources.dropsonde_wire import (
+        _write_uvarint,
+        decode_envelope,
+    )
+    from kafka_firehose_nozzle_spark.streaming.job import start_pipeline
+
+    plain = wire_frames(1)[0]
+    env = decode_envelope(plain)
+    env["logMessage"]["_unrecognized"] = _write_uvarint(99 << 3) + b"\x2a"
+    extended = encode_envelope(env)
+    assert decode_envelope(extended)["logMessage"]["_unrecognized"]
+    with StubDoppler(
+        [{"frames": [plain, extended], "then": "silent"}], token=TOKEN
+    ) as stub:
+        cfg = stream_config(stub, token=TOKEN, idle_timeout=30)
+        cfg.kafka = ROUTING
+        handle = start_pipeline(
+            spark,
+            firehose_stream(spark, cfg),
+            cfg,
+            str(tmp_path / "ckpt"),
+            sink="memory",
+            memory_sink_name="nested_residue_sink",
+        )
+        try:
+            deadline = time.time() + 60
+            while time.time() < deadline:
+                rows = spark.table("nested_residue_sink").collect()
+                if len(rows) >= 2:
+                    break
+                time.sleep(0.2)
+        finally:
+            handle.stop()
+    assert len(rows) == 2
+    assert rows[0].topic == rows[1].topic == "log"
+    assert rows[0].value == rows[1].value
+    assert "_unrecognized" not in rows[0].value

@@ -483,7 +483,12 @@ def test_wire_roundtrip_nested_residue_and_nan_survive_dataframe(spark):
 def test_wire_decode_null_payload_quarantined_not_job_fail(spark):
     """A NULL payload cell must land in the quarantine like any other
     undecodable frame — the counted-drop handler itself must not raise
-    (bytes(None) inside the except block would fail the whole job)."""
+    (bytes(None) inside the except block would fail the whole job).
+    So must frames that parse but lack a proto2-required field: an
+    empty frame, and one with ``origin`` but no ``eventType`` — neither
+    may pass through as an all-NULL envelope. A frame whose int32
+    ``eventType`` overflows its column is quarantined alone, without
+    failing the rest of its Arrow batch."""
     from kafka_firehose_nozzle_spark.sources.dropsonde_wire import (
         encode_envelope,
     )
@@ -496,10 +501,22 @@ def test_wire_decode_null_payload_quarantined_not_job_fail(spark):
             "kafka_firehose_nozzle_spark.fixtures", fromlist=["x"]
         ).canonical_envelopes()[0]
     )
-    raw = spark.createDataFrame([(good,), (None,)], "payload binary")
+    origin_only = encode_envelope({"origin": "fake-origin-1"})
+    overflow = encode_envelope({"origin": "fake-origin-1", "eventType": 2**40})
+    raw = spark.createDataFrame(
+        [(good,), (None,), (b"",), (origin_only,), (overflow,)],
+        "payload binary",
+    ).coalesce(1)
     decoded = decode_wire_frames(raw)
     bad = decoded.filter("_decode_error IS NOT NULL").collect()
-    assert len(bad) == 1
-    assert "null payload" in bad[0]["_decode_error"]
-    assert bad[0]["_raw"] is None
+    assert len(bad) == 4
+    by_raw = {
+        None if r["_raw"] is None else bytes(r["_raw"]): r for r in bad
+    }
+    assert set(by_raw) == {None, b"", origin_only, overflow}
+    assert "null payload" in by_raw[None]["_decode_error"]
+    assert "ArrowInvalid" in by_raw[overflow]["_decode_error"]
+    for frame in (b"", origin_only):
+        assert "missing required field" in by_raw[frame]["_decode_error"]
+        assert by_raw[frame]["origin"] is None
     assert decoded.filter("_decode_error IS NULL").count() == 1

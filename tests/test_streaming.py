@@ -83,20 +83,14 @@ def test_stream_routing_end_to_end(spark, tmp_path):
 
 def test_firehose_source_through_full_pipeline(spark, tmp_path):
     """SRC1 -> P1-P4/S2 -> A1 -> sink in one flow: the firehose fixture
-    source (wire-decode path enabled) feeds the real routing pipeline
+    source (through the wire decode path) feeds the real routing pipeline
     into a memory sink. The canonical fixture set contains an
     unknown-type envelope and the doppler TruncatingBuffer counter, so
     this also pins ConsumeUnknown and SlowConsumerAlert end-to-end
     through the actual source — not a synthetic DataFrame."""
-    from kafka_firehose_nozzle_spark.sources.firehose import FirehoseDataSource
+    from kafka_firehose_nozzle_spark.streaming.job import firehose_stream
 
-    spark.dataSource.register(FirehoseDataSource)
-    envelopes = (
-        spark.readStream.format("firehose")
-        .option("fixtureRows", "16")
-        .option("fixtureWire", "true")
-        .load()
-    )
+    envelopes = firehose_stream(spark, _config(), fixtureRows=16)
     handle = start_pipeline(
         spark,
         envelopes,
@@ -538,16 +532,9 @@ def test_chaos_midbatch_crash_exactly_once(spark, tmp_path):
     from kafka_firehose_nozzle_spark.fixtures import canonical_envelopes
     from kafka_firehose_nozzle_spark.pipeline import route_envelopes_config
     from kafka_firehose_nozzle_spark.schemas import ENVELOPE_SCHEMA
-    from kafka_firehose_nozzle_spark.sources.dropsonde_wire import (
-        encode_envelope,
-    )
-    from kafka_firehose_nozzle_spark.sources.firehose import (
-        FirehoseDataSource,
-        _decode_dropsonde,
-    )
+    from kafka_firehose_nozzle_spark.streaming.job import firehose_stream
     from kafka_firehose_nozzle_spark.streaming.stateful import dedup_envelopes
 
-    spark.dataSource.register(FirehoseDataSource)
     lake = str(tmp_path / "lake")
     ckpt = str(tmp_path / "ckpt")
     crash_marker = str(tmp_path / "crashed")
@@ -578,12 +565,7 @@ def test_chaos_midbatch_crash_exactly_once(spark, tmp_path):
         writer.parquet(lake)
 
     def start():
-        env = (
-            spark.readStream.format("firehose")
-            .option("fixtureRows", str(per_batch))
-            .option("fixtureWire", "true")
-            .load()
-        )
+        env = firehose_stream(spark, _config(), fixtureRows=per_batch)
         routed = route_envelopes_config(dedup_envelopes(env), _config())
         return (
             routed.writeStream.foreachBatch(write_batch)
@@ -623,14 +605,15 @@ def test_chaos_midbatch_crash_exactly_once(spark, tmp_path):
     assert committed >= 2, "restarted stream never progressed past crash"
 
     # sequential model: the fixture source is deterministic per global
-    # offset j (canonical[j % 8] with timestamp += j, through the same
-    # wire encode/decode), and batch b covers offsets [16b, 16(b+1))
+    # offset j (canonical[j % 8] with timestamp += j; the wire encode /
+    # decode round trip is exact), and batch b covers offsets
+    # [16b, 16(b+1))
     canon = canonical_envelopes()
     rows = []
     for j in range(per_batch * (committed + 1)):
         r = dict(canon[j % len(canon)])
         r["timestamp"] = (r["timestamp"] or 0) + j
-        rows.append(_decode_dropsonde(encode_envelope(r)))
+        rows.append(r)
     model = route_envelopes_config(
         dedup_envelopes(spark.createDataFrame(rows, ENVELOPE_SCHEMA)),
         _config(),
