@@ -2,7 +2,8 @@
 
 ``queries()`` exposes every implemented operator from SURVEY.md §2 plus the
 north-star batch analytics (dedup / similarity / text analysis), each with a
-DuckDB oracle in ``oracle_sql()``.
+DuckDB oracle in ``oracle_sql()``. The queries live in the ``queries``
+package, one module per family; each registers itself where it is defined.
 
 Two query styles:
 - shared-SQL: one ANSI string executed by BOTH engines (Spark temp views /
@@ -17,22996 +18,22 @@ identical IEEE fold orders) so value hashes agree across engines.
 
 from __future__ import annotations
 
-import math
-import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from kafka_firehose_nozzle_spark.config import TopicConfig
-from kafka_firehose_nozzle_spark.functions import detmath as DET
-from kafka_firehose_nozzle_spark.functions.routing import route_topic_expr
-from kafka_firehose_nozzle_spark.operators import dedup as D
-from kafka_firehose_nozzle_spark.operators import graph as G
-from kafka_firehose_nozzle_spark.operators import ranking as RK
-from kafka_firehose_nozzle_spark.operators import history as H
-from kafka_firehose_nozzle_spark.operators import layout as LAY
-from kafka_firehose_nozzle_spark.operators import sampling as SA
-from kafka_firehose_nozzle_spark.operators import similarity as S
-from kafka_firehose_nozzle_spark.operators import text as TX
-from kafka_firehose_nozzle_spark.pipeline import route_envelopes
-from kafka_firehose_nozzle_spark.sources.events_adapter import events_to_envelopes
+from queries import REGISTRY
 
-# single source of truth for table names / TIMESTAMP(NANOS) columns /
-# the typed read lives in the package's catalog module — the SQL front
-# door and this driver contract must never drift apart
-from kafka_firehose_nozzle_spark import catalog as CAT
 
-TABLES = CAT.TABLES
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    return {name: fn for name, (fn, _) in REGISTRY.items()}
 
-# Routing config used by the parity queries: templated log topic, disabled
-# counter_event (exercises the drop path, kafka.go:333-338).
-ROUTE_TOPICS = TopicConfig(
-    http_start_stop="topic-http",
-    log_message_fmt="log-%s",
-    value_metric="topic-metrics",
-    error="topic-errors",
-)
 
-
-# Plan-construction memo (r11 optimization, guide §5/§7.3: the driver
-# should do almost no work in the query path). A table's DataFrame and a
-# session's view registration are immutable PLAN METADATA — re-deriving
-# them on every query build costs ~10 parquet footer reads + dozens of
-# py4j round trips per call (~0.6-0.9 s of every shared-SQL bench pass,
-# measured r11), while contributing nothing to the computation, which
-# still runs from the parquet inputs on every action. Keyed by Spark
-# applicationId so a fresh session (new JVM state, new
-# defaultParallelism) never sees another session's plans. This memoizes
-# CONSTRUCTION only — never results, never data.
-_TABLE_MEMO: dict[tuple[str, str, str], DataFrame] = {}
-# appId -> the sf_dir whose tables the session's views CURRENTLY point
-# at (a dict, not a set: alternating sf_dirs in one session must
-# re-register, or the second sf_dir's views would serve the first's).
-_VIEWS_CURRENT: dict[str, str] = {}
-
-# Growth bound for every construction memo (VERDICT r11 item 7): a
-# long-lived session (the streaming entry points) that touches many
-# sf_dirs would otherwise grow these dicts without limit. The cap is
-# sized far above any one session's working set (~350 queries x a
-# handful of sf_dirs); on overflow, entries from OTHER applicationIds
-# (dead sessions — appId is unique per SparkContext) are dropped first,
-# and only if the CURRENT session alone exceeds the cap is the memo
-# cleared outright. Eviction is always safe: these hold unexecuted
-# plan objects that rebuild in milliseconds — never data.
-_MEMO_CAP = 4096
-
-
-def _memo_put(memo: dict, key: tuple, val) -> None:
-    if len(memo) >= _MEMO_CAP:
-        app = key[0]
-        for k in [k for k in memo if k[0] != app]:
-            del memo[k]
-        if len(memo) >= _MEMO_CAP:
-            memo.clear()
-    memo[key] = val
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    cached = _TABLE_MEMO.get(key)
-    if cached is not None:
-        return cached
-    # typed read (nanosAsLong + TIMESTAMP(NANOS) column derivation) is
-    # catalog.read_table — ONE implementation for the SQL views and the
-    # driver contract.
-    df = CAT.read_table(spark, sf_dir, name)
-    # The local testdata is one single-row-group file per table, so the
-    # scan yields ONE split no matter how many cores exist. On a real lake
-    # a 100 TB table arrives as thousands of row groups and this branch
-    # never fires; locally, rebalance tables so downstream stages use all
-    # cores. The r11 refinement: the break-even for the fan-out shuffle
-    # depends on COMPUTE DENSITY, not just bytes. Corpus tables
-    # (documents/embeddings) run explode/hash/pairwise work per row —
-    # parallelism pays earlier than for scan-bound tables, but the second
-    # r11 A/B wave showed NOT at sub-MB sizes: with both corpus tables
-    # single-split at sf0.1 (0.6-0.8 MB), minhash_signatures 0.42 -> 0.22,
-    # dedup_exact 0.55 -> 0.19, bigram_topk 0.62 -> 0.41,
-    # embedding_dup_pairs 2.4 -> 1.9, ann_cosine_topk 0.39 -> 0.31 — the
-    # per-row hash/dot work on a few thousand rows is cheaper than one
-    # 32-way exchange + 32-task stages. The ONE corpus path whose dense
-    # pre-shuffle work still wants the fan at those sizes is the planted
-    # minhash-LSH family (2x rows, regexp mutation, shingles, 8 hash
-    # lanes), and it fans inside `_planted_docs` — the same
-    # fan-where-the-work-lives pattern as `_envelopes`. Dense tables
-    # above 4 MB (sf1+: documents ~6 MB, embeddings ~8 MB) fan at scan
-    # exactly as before. Scan-bound tables (the relational
-    # set AND events): the r11 interleaved A/Bs (2-3 reps x min-of-3)
-    # showed the round-robin exchange costs MORE than a single-task scan
-    # for every such table at sf0.1, lineitem's 10 MB included — q1 0.45
-    # vs 0.91 s, q9 0.51 vs 1.36 s, revenue_rollup 0.27 vs 0.70 s;
-    # events_per_minute 0.23 vs 0.73 s, sessionize 0.21 vs 0.76 s,
-    # error_prior_views 0.23 vs 0.66 s, props_json_stats 0.18 vs 0.41 s —
-    # and the r11 plan audit showed several of those exchanges feeding
-    # straight into BroadcastExchange nodes (shuffle a table 32 ways,
-    # then broadcast it — pure waste; error_prior_views had exactly
-    # that). Most events queries hash-exchange immediately (groupBy /
-    # window / join), so the round-robin exchange bought distribution
-    # the next operator re-did anyway; the one events path with heavy
-    # per-row work BEFORE its first shuffle — the envelope codec — fans
-    # out inside `_envelopes` instead, where the dense work actually
-    # lives. So non-corpus tables stay single-split up to 32 MB (the
-    # measured break-even region); at sf1+ every fact table crosses the
-    # threshold and fans out again. (Catalyst still pushes
-    # filters/pruning through a Repartition node.)
-    try:
-        nbytes = os.path.getsize(f"{sf_dir}/{name}.parquet")
-    except OSError:
-        nbytes = 0
-    dense = name in ("documents", "embeddings")
-    if nbytes > ((4 << 20) if dense else (32 << 20)):
-        df = df.repartition(spark.sparkContext.defaultParallelism)
-    _memo_put(_TABLE_MEMO, key, df)
-    return df
-
-
-def _register_views(spark: SparkSession, sf_dir: str) -> None:
-    app = spark.sparkContext.applicationId
-    if _VIEWS_CURRENT.get(app) == sf_dir:
-        return
-    for name in TABLES:
-        _t(spark, sf_dir, name).createOrReplaceTempView(name)
-    _VIEWS_CURRENT[app] = sf_dir
-
-
-def _parquet_nrows(path: str) -> int | None:
-    """Row count from the parquet footer — a driver-side metadata read
-    (no Spark job, no data scan).  None if the footer can't be read, in
-    which case callers fall back to counting."""
-    try:
-        import pyarrow.parquet as pq
-
-        return pq.ParquetFile(path).metadata.num_rows
-    except Exception:
-        return None
-
-
-def _avg_micro_expr(sum_col: str, n_col: str):
-    """Half-up average of ``sum_col / n_col`` in integer micro-units
-    (6 decimal places), computed entirely in BIGINT arithmetic.
-
-    ``(s div n)*1e6 + ((s % n)*2e6 + n) div (2n)`` is exact half-up
-    rounding for non-negative s, n > 0 (Spark ``div`` and DuckDB ``//``
-    both truncate toward zero, which equals floor on non-negative
-    operands).  The remainder form bounds every intermediate by
-    ``n * 2e6`` so nothing overflows int64 below ~4.6e12 rows per group.
-    Cross-engine determinism: no DOUBLE is produced, so no
-    engine-build-dependent double rounding can occur; callers convert
-    with one exact int64->double cast and one IEEE division by 1e6.
-    """
-    return F.expr(
-        f"(`{sum_col}` div `{n_col}`) * 1000000"
-        f" + ((`{sum_col}` % `{n_col}`) * 2000000 + `{n_col}`)"
-        f" div (2 * `{n_col}`)"
-    )
-
-
-# --------------------------------------------------------------------------
-# Shared-SQL queries: one string, both engines. Sums go through
-# DECIMAL(12,4)/DECIMAL(18,4) so the result is order-independent and casts
-# to the identical double in Spark and DuckDB.
-# --------------------------------------------------------------------------
-
-# Inputs at DECIMAL(10,4) keep the triple product within 38 digits of
-# precision in BOTH engines (Spark adds +1 digit per multiply and would
-# otherwise round scale 12 -> 11 on sum_charge, diverging from DuckDB in
-# the last double bit).
-_REV = "CAST(l_extendedprice AS DECIMAL(10,4)) * (1 - CAST(l_discount AS DECIMAL(10,4)))"
-
-SHARED_SQL: dict[str, str] = {
-    # Ordered conversion funnel (view -> click -> purchase, strict
-    # event-time ordering): each stage is a conditional MIN over the
-    # previous stage's anchor — three partial-aggregated passes, never a
-    # per-user sort. The product-analytics staple.
-    "event_funnel": """
-        WITH s1 AS (SELECT user_id, MIN(ts) AS t1 FROM events
-                    WHERE event_type = 'view' GROUP BY user_id),
-        s2 AS (SELECT e.user_id, MIN(e.ts) AS t2
-               FROM events e JOIN s1 ON e.user_id = s1.user_id
-               WHERE e.event_type = 'click' AND e.ts > s1.t1
-               GROUP BY e.user_id),
-        s3 AS (SELECT e.user_id, MIN(e.ts) AS t3
-               FROM events e JOIN s2 ON e.user_id = s2.user_id
-               WHERE e.event_type = 'purchase' AND e.ts > s2.t2
-               GROUP BY e.user_id)
-        SELECT 1 AS stage, 'view' AS step, COUNT(*) AS n_users FROM s1
-        UNION ALL
-        SELECT 2, 'click_after_view', COUNT(*) FROM s2
-        UNION ALL
-        SELECT 3, 'purchase_after_click', COUNT(*) FROM s3
-    """,
-    # (weekly_retention_cohorts lives OUTSIDE SHARED_SQL: DATE - DATE is
-    # an INTERVAL in Spark but an INTEGER day count in DuckDB, so the
-    # offset arithmetic cannot be one shared string — see
-    # q_weekly_retention_cohorts + ORACLE_RETENTION.)
-    # Temperature-weighted multilingual mix (alpha = 0.5, the
-    # rebalancing exponent multilingual-corpus recipes apply so
-    # low-resource languages are not drowned): weight = sqrt(count) —
-    # sqrt is IEEE-correctly-rounded in both engines, the weight total
-    # is an order-independent decimal sum, and the share emits through
-    # one IEEE division + floor quantization.
-    "temperature_lang_mix": """
-        WITH c AS (SELECT lang, COUNT(*) AS n FROM documents GROUP BY lang),
-        w AS (SELECT lang, n,
-                  CAST(SQRT(CAST(n AS DOUBLE)) AS DECIMAL(20,10)) AS wt
-              FROM c),
-        t AS (SELECT CAST(CAST(SUM(wt) AS VARCHAR(64)) AS DOUBLE)
-                  AS total FROM w)
-        SELECT lang, n,
-            CAST(FLOOR(CAST(CAST(wt AS VARCHAR(64)) AS DOUBLE) / total
-                 * 1000000.0 + 0.5) AS BIGINT) AS share_ppm
-        FROM w CROSS JOIN t
-    """,
-    # TPC-H Q1 style pricing summary: groupBy + 8 aggregates.
-    # Money emissions go decimal -> VARCHAR -> DOUBLE (the repo's
-    # established cross-engine idiom, cf. temperature_lang_mix): the
-    # decimal SUMs are exact and engine-identical, but a direct
-    # decimal->double cast is not correctly rounded in every engine
-    # (DuckDB converts int128/10^scale in two roundings) — the r8 sf1
-    # sweep caught sum_charge one ulp apart on one group.  String ->
-    # double is correctly rounded in both engines.
-    "q1_pricing_summary": f"""
-        SELECT l_returnflag, l_linestatus,
-            CAST(CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(12,4))) AS DECIMAL(30,6)) AS VARCHAR(64)) AS DOUBLE) AS sum_qty,
-            CAST(CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,4))) AS DECIMAL(30,6)) AS VARCHAR(64)) AS DOUBLE) AS sum_base_price,
-            CAST(CAST(CAST(SUM({_REV}) AS DECIMAL(30,6)) AS VARCHAR(64)) AS DOUBLE) AS sum_disc_price,
-            CAST(CAST(CAST(SUM({_REV} * (1 + CAST(l_tax AS DECIMAL(12,4)))) AS DECIMAL(30,6)) AS VARCHAR(64)) AS DOUBLE) AS sum_charge,
-            CAST(CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(12,4))) AS DECIMAL(30,6)) AS VARCHAR(64)) AS DOUBLE) / COUNT(*) AS avg_qty,
-            CAST(CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,4))) AS DECIMAL(30,6)) AS VARCHAR(64)) AS DOUBLE) / COUNT(*) AS avg_price,
-            CAST(CAST(CAST(SUM(CAST(l_discount AS DECIMAL(12,4))) AS DECIMAL(30,6)) AS VARCHAR(64)) AS DOUBLE) / COUNT(*) AS avg_disc,
-            COUNT(*) AS count_order
-        FROM lineitem
-        WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-        GROUP BY l_returnflag, l_linestatus
-    """,
-    # TPC-H Q3 style: 3-way join + group + deterministic top-10
-    "q3_shipping_priority": f"""
-        SELECT l_orderkey,
-            CAST(CAST(CAST(SUM({_REV}) AS DECIMAL(30,6)) AS VARCHAR(64)) AS DOUBLE) AS revenue,
-            o_orderdate, o_orderpriority
-        FROM customer
-        JOIN orders ON c_custkey = o_custkey
-        JOIN lineitem ON l_orderkey = o_orderkey
-        WHERE c_mktsegment = 'BUILDING'
-          AND o_orderdate < TIMESTAMP '1998-03-15 00:00:00'
-          AND l_shipdate > TIMESTAMP '1998-03-15 00:00:00'
-        GROUP BY l_orderkey, o_orderdate, o_orderpriority
-        ORDER BY revenue DESC, o_orderdate, l_orderkey
-        LIMIT 10
-    """,
-    # TPC-H Q5 style: 6-table join, local-supplier revenue by nation
-    "q5_local_supplier": f"""
-        SELECT n_name, CAST(CAST(CAST(SUM({_REV}) AS DECIMAL(30,6)) AS VARCHAR(64)) AS DOUBLE) AS revenue
-        FROM customer
-        JOIN orders ON c_custkey = o_custkey
-        JOIN lineitem ON l_orderkey = o_orderkey
-        JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-        JOIN nation ON s_nationkey = n_nationkey
-        JOIN region ON n_regionkey = r_regionkey
-        WHERE r_name = 'ASIA'
-          AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-          AND o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
-        GROUP BY n_name
-    """,
-    # window ranking: top-3 spenders per market segment
-    "top_spenders_per_segment": """
-        SELECT c_mktsegment, c_custkey, spend, rk FROM (
-            SELECT c_mktsegment, c_custkey, spend,
-                   ROW_NUMBER() OVER (PARTITION BY c_mktsegment
-                                      ORDER BY spend DESC, c_custkey) AS rk
-            FROM (
-                SELECT c_mktsegment, c_custkey,
-                       CAST(CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(12,4))) AS DECIMAL(30,6)) AS VARCHAR(64)) AS DOUBLE) AS spend
-                FROM customer JOIN orders ON c_custkey = o_custkey
-                GROUP BY c_mktsegment, c_custkey
-            ) agg
-        ) ranked WHERE rk <= 3
-    """,
-    # running window aggregate over orders per customer
-    "running_revenue_by_customer": """
-        SELECT o_custkey, o_orderkey, o_orderdate,
-            CAST(CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(12,4)))
-                 OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                 AS DECIMAL(30,6)) AS VARCHAR(64)) AS DOUBLE) AS running_spend
-        FROM orders
-    """,
-    # grouping sets / rollup
-    "revenue_rollup": """
-        SELECT l_returnflag, l_linestatus,
-            CAST(CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(12,4))) AS DECIMAL(30,6)) AS VARCHAR(64)) AS DOUBLE) AS sum_qty,
-            COUNT(*) AS n
-        FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
-    """,
-    # distinct aggregation
-    "distinct_users_per_type": """
-        SELECT event_type, COUNT(DISTINCT user_id) AS n_users, COUNT(*) AS n_events
-        FROM events GROUP BY event_type
-    """,
-    # event-time tumbling window (A2 analog: per-minute rates)
-    "events_per_minute": """
-        SELECT date_trunc('minute', ts) AS minute, COUNT(*) AS n,
-               COUNT(DISTINCT user_id) AS n_users
-        FROM events GROUP BY date_trunc('minute', ts)
-    """,
-    # bit / boolean aggregate coverage (order-insensitive, exact ints)
-    "flag_aggregates": """
-        SELECT l_returnflag,
-            BIT_OR(l_linenumber) AS ln_or,
-            BIT_AND(l_linenumber) AS ln_and,
-            BIT_XOR(l_orderkey) AS key_xor,
-            BOOL_AND(l_quantity > 0) AS all_positive,
-            BOOL_OR(l_discount > 0.09) AS any_high_disc
-        FROM lineitem GROUP BY l_returnflag
-    """,
-    # semi + anti join via EXISTS / NOT EXISTS
-    "urgent_only_customers": """
-        SELECT c.c_custkey, c.c_name FROM customer c
-        WHERE EXISTS (SELECT 1 FROM orders o
-                      WHERE o.o_custkey = c.c_custkey
-                        AND o.o_orderpriority = '1-URGENT')
-          AND NOT EXISTS (SELECT 1 FROM orders o
-                          WHERE o.o_custkey = c.c_custkey
-                            AND o.o_orderstatus = 'F')
-    """,
-    # set operations
-    "purchasers_with_errors": """
-        SELECT user_id FROM events WHERE event_type = 'purchase'
-        INTERSECT
-        SELECT user_id FROM events WHERE event_type = 'error'
-    """,
-    "purchasers_without_errors": """
-        SELECT user_id FROM events WHERE event_type = 'purchase'
-        EXCEPT
-        SELECT user_id FROM events WHERE event_type = 'error'
-    """,
-    # range join: lineitems shipped within 30 days of their order's date
-    "order_shipment_window": """
-        SELECT o_orderpriority, COUNT(*) AS n_shipments,
-            COUNT(DISTINCT o_orderkey) AS n_orders
-        FROM orders JOIN lineitem ON l_orderkey = o_orderkey
-        WHERE l_shipdate >= o_orderdate
-          AND l_shipdate < o_orderdate + INTERVAL 30 DAY
-        GROUP BY o_orderpriority
-    """,
-    # correlated scalar subquery (TPC-H Q17 style): small-quantity orders.
-    # avg_yearly rides the VARCHAR round-trip (revenue_cube/q1 precedent):
-    # the r11 sf100 sweep caught the direct DECIMAL->DOUBLE casts
-    # diverging by 2 ulps (1.787029149528571[5|8]e11) once the exact
-    # decimal sum outgrew double's 2^53 integer range — Spark's
-    # BigDecimal cast is correctly rounded, DuckDB's int128 path double-
-    # rounds; the decimal-digits-as-text parse is correctly rounded in
-    # both engines.
-    "q17_small_qty_revenue": """
-        SELECT CAST(CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,4))) AS DECIMAL(30,6)) AS VARCHAR(64)) AS DOUBLE) / 7.0
-               AS avg_yearly
-        FROM lineitem JOIN part ON p_partkey = l_partkey
-        WHERE p_brand LIKE 'Brand#1%'
-          AND l_quantity < (SELECT 0.2 * AVG(l2.l_quantity) FROM lineitem l2
-                            WHERE l2.l_partkey = p_partkey)
-    """,
-    # CUBE with GROUPING() null-vs-rollup disambiguation.  sum_base
-    # rides the VARCHAR round-trip (like q1's money columns): direct
-    # DECIMAL->DOUBLE is correctly rounded in Spark (BigDecimal) but
-    # double-rounded in DuckDB (int128, then /10^6 in float), and the
-    # r8 sf10 sweep caught the two diverging by 1 ulp on the rollup
-    # rows once sums outgrew double's exact integer range.
-    "revenue_cube": """
-        SELECT l_returnflag, l_linestatus,
-            CAST(GROUPING(l_returnflag) AS INT) AS g_rf,
-            CAST(GROUPING(l_linestatus) AS INT) AS g_ls,
-            CAST(CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,4))) AS DECIMAL(30,6)) AS VARCHAR(64)) AS DOUBLE) AS sum_base,
-            COUNT(*) AS n
-        FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)
-    """,
-    # full outer join: customers without orders + order coverage per custkey
-    "customer_order_coverage": """
-        SELECT COALESCE(c_custkey, o_custkey) AS custkey,
-            COUNT(o_orderkey) AS n_orders,
-            MAX(CASE WHEN o_orderkey IS NULL THEN 1 ELSE 0 END) AS has_no_orders
-        FROM customer FULL JOIN orders ON c_custkey = o_custkey
-        GROUP BY COALESCE(c_custkey, o_custkey)
-    """,
-    # scalar string/math function coverage (exact-valued functions only)
-    "scalar_string_math": """
-        SELECT c_custkey,
-            UPPER(c_name) AS name_upper,
-            LOWER(c_mktsegment) AS seg_lower,
-            LENGTH(c_name) AS name_len,
-            SUBSTR(c_name, 1, 8) AS name_prefix,
-            REVERSE(c_mktsegment) AS seg_rev,
-            LPAD(CAST(c_custkey AS STRING), 10, '0') AS key_padded,
-            ABS(c_acctbal) AS bal_abs,
-            CAST(FLOOR(c_acctbal) AS BIGINT) AS bal_floor,
-            CAST(CEIL(c_acctbal) AS BIGINT) AS bal_ceil,
-            c_custkey % 7 AS key_mod7,
-            GREATEST(c_nationkey, 12) AS nk_hi,
-            LEAST(c_nationkey, 12) AS nk_lo
-        FROM customer
-    """,
-    # date-part extraction coverage
-    "order_date_parts": """
-        SELECT o_orderkey,
-            YEAR(o_orderdate) AS yr, QUARTER(o_orderdate) AS qtr,
-            MONTH(o_orderdate) AS mon, DAY(o_orderdate) AS dom,
-            DATE_TRUNC('month', o_orderdate) AS month_start
-        FROM orders
-    """,
-    # analytic-function coverage: lag/lead/ntile/percent_rank/cume_dist/
-    # first_value over per-customer order history
-    "order_analytics": """
-        SELECT o_custkey, o_orderkey,
-            LAG(o_totalprice) OVER w AS prev_price,
-            LEAD(o_totalprice) OVER w AS next_price,
-            FIRST_VALUE(o_orderkey) OVER w AS first_orderkey,
-            NTILE(4) OVER w AS qtile,
-            PERCENT_RANK() OVER w AS pr,
-            CUME_DIST() OVER w AS cd
-        FROM orders
-        WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-    """,
-    # min_by / max_by (deterministic: custkey is unique per segment)
-    "segment_minmax_by": """
-        SELECT c_mktsegment,
-            MAX_BY(c_name, c_custkey) AS last_customer,
-            MIN_BY(c_name, c_custkey) AS first_customer,
-            MAX(c_acctbal) AS max_bal,
-            MIN(c_acctbal) AS min_bal,
-            COUNT(*) AS n
-        FROM customer GROUP BY c_mktsegment
-    """,
-    # TPC-H Q4 style: orders with any late lineitem (EXISTS), per priority.
-    # "Late" adapted to the reduced schema: shipped >60 days after order.
-    "q4_priority_late": """
-        SELECT o_orderpriority, COUNT(*) AS order_count
-        FROM orders o
-        WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-          AND o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
-          AND EXISTS (SELECT 1 FROM lineitem l
-                      WHERE l.l_orderkey = o.o_orderkey
-                        AND l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY)
-        GROUP BY o_orderpriority
-    """,
-    # TPC-H Q7 style: trade volume between two nations by ship year
-    "q7_nation_trade": f"""
-        SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-            YEAR(l_shipdate) AS yr,
-            CAST(CAST(CAST(SUM({_REV}) AS DECIMAL(30,6)) AS VARCHAR(64)) AS DOUBLE) AS revenue
-        FROM supplier
-        JOIN lineitem ON s_suppkey = l_suppkey
-        JOIN orders ON o_orderkey = l_orderkey
-        JOIN customer ON c_custkey = o_custkey
-        JOIN nation n1 ON s_nationkey = n1.n_nationkey
-        JOIN nation n2 ON c_nationkey = n2.n_nationkey
-        WHERE n1.n_name IN ('NATION_1', 'NATION_2')
-          AND n2.n_name IN ('NATION_1', 'NATION_2')
-          AND n1.n_name <> n2.n_name
-        GROUP BY n1.n_name, n2.n_name, YEAR(l_shipdate)
-    """,
-    # TPC-H Q8 style: one nation's market share inside a region per year
-    "q8_market_share": f"""
-        SELECT YEAR(o_orderdate) AS yr,
-            CAST(CAST(CAST(SUM(CASE WHEN n2.n_name = 'NATION_3' THEN {_REV}
-                               ELSE CAST(0 AS DECIMAL(10,4)) END)
-                 AS DECIMAL(30,6)) AS VARCHAR(64)) AS DOUBLE)
-            / CAST(CAST(CAST(SUM({_REV}) AS DECIMAL(30,6)) AS VARCHAR(64)) AS DOUBLE)
-                AS mkt_share
-        FROM lineitem
-        JOIN orders ON o_orderkey = l_orderkey
-        JOIN customer ON c_custkey = o_custkey
-        JOIN nation n1 ON c_nationkey = n1.n_nationkey
-        JOIN region ON n1.n_regionkey = r_regionkey
-        JOIN supplier ON s_suppkey = l_suppkey
-        JOIN nation n2 ON s_nationkey = n2.n_nationkey
-        WHERE r_name = 'ASIA'
-        GROUP BY YEAR(o_orderdate)
-    """,
-    # TPC-H Q9 style: profit (revenue minus retail cost) by supplier
-    # nation and year; partsupp is absent so p_retailprice stands in
-    "q9_profit": f"""
-        SELECT n_name, YEAR(o_orderdate) AS yr,
-            CAST(CAST(CAST(SUM({_REV}
-                - CAST(p_retailprice AS DECIMAL(10,4))
-                  * CAST(l_quantity AS DECIMAL(10,4)))
-                 AS DECIMAL(30,6)) AS VARCHAR(64)) AS DOUBLE) AS profit
-        FROM lineitem
-        JOIN part ON p_partkey = l_partkey
-        JOIN supplier ON s_suppkey = l_suppkey
-        JOIN orders ON o_orderkey = l_orderkey
-        JOIN nation ON s_nationkey = n_nationkey
-        WHERE p_name LIKE '%gear%'
-        GROUP BY n_name, YEAR(o_orderdate)
-    """,
-    # TPC-H Q10 style: top-20 customers by returned-lineitem revenue
-    "q10_returned_revenue": f"""
-        SELECT c_custkey, c_name, n_name,
-            CAST(CAST(CAST(SUM({_REV}) AS DECIMAL(30,6)) AS VARCHAR(64)) AS DOUBLE) AS revenue
-        FROM customer
-        JOIN orders ON c_custkey = o_custkey
-        JOIN lineitem ON l_orderkey = o_orderkey
-        JOIN nation ON c_nationkey = n_nationkey
-        WHERE l_returnflag = 'R'
-          AND o_orderdate >= TIMESTAMP '1997-01-01 00:00:00'
-          AND o_orderdate < TIMESTAMP '1997-07-01 00:00:00'
-        GROUP BY c_custkey, c_name, n_name
-        ORDER BY revenue DESC, c_custkey
-        LIMIT 20
-    """,
-    # TPC-H Q12 style: priority-class shipment counts per ship year
-    # (CASE aggregation; shipmode is absent so late/ontime classes split)
-    "q12_priority_classes": """
-        SELECT YEAR(l_shipdate) AS yr,
-            CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-                     THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-            CAST(SUM(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
-                     THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
-        FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        WHERE l_shipdate > o_orderdate + INTERVAL 60 DAY
-        GROUP BY YEAR(l_shipdate)
-    """,
-    # TPC-H Q14 style: promo-part revenue share in one quarter
-    "q14_promo_quarter": f"""
-        SELECT CAST(100 AS DOUBLE)
-            * CAST(CAST(CAST(SUM(CASE WHEN p_type = 'PROMO' THEN {_REV}
-                                 ELSE CAST(0 AS DECIMAL(10,4)) END)
-                   AS DECIMAL(30,6)) AS VARCHAR(64)) AS DOUBLE)
-            / CAST(CAST(CAST(SUM({_REV}) AS DECIMAL(30,6)) AS VARCHAR(64)) AS DOUBLE)
-                AS promo_revenue_pct
-        FROM lineitem JOIN part ON p_partkey = l_partkey
-        WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
-          AND l_shipdate < TIMESTAMP '1997-04-01 00:00:00'
-    """,
-    # TPC-H Q16 style: distinct supplier count per brand/size bucket
-    "q16_supplier_variety": """
-        SELECT p_brand, p_size, COUNT(DISTINCT l_suppkey) AS supplier_cnt
-        FROM part JOIN lineitem ON p_partkey = l_partkey
-        WHERE p_brand <> 'Brand#3' AND p_type <> 'PROMO' AND p_size < 30
-        GROUP BY p_brand, p_size
-    """,
-    # TPC-H Q7 style: volume shipping between two nations by year
-    "q7_volume_shipping": f"""
-        SELECT supp_nation, cust_nation, l_year,
-            CAST(CAST(CAST(SUM(vol) AS DECIMAL(30,6)) AS VARCHAR(64)) AS DOUBLE) AS revenue
-        FROM (
-            SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-                   YEAR(l_shipdate) AS l_year, {_REV} AS vol
-            FROM supplier
-            JOIN lineitem ON s_suppkey = l_suppkey
-            JOIN orders ON o_orderkey = l_orderkey
-            JOIN customer ON c_custkey = o_custkey
-            JOIN nation n1 ON s_nationkey = n1.n_nationkey
-            JOIN nation n2 ON c_nationkey = n2.n_nationkey
-            WHERE ((n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
-                OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1'))
-              AND l_shipdate BETWEEN TIMESTAMP '1995-01-01 00:00:00'
-                                 AND TIMESTAMP '1997-12-31 00:00:00'
-        ) shipping
-        GROUP BY supp_nation, cust_nation, l_year
-    """,
-    # TPC-H Q10 style: returned-item revenue by customer, top 20
-    "q10_returned_items": f"""
-        SELECT c_custkey, c_name,
-            CAST(CAST(CAST(SUM({_REV}) AS DECIMAL(30,6)) AS VARCHAR(64)) AS DOUBLE) AS revenue,
-            c_acctbal, n_name
-        FROM customer
-        JOIN orders ON c_custkey = o_custkey
-        JOIN lineitem ON l_orderkey = o_orderkey
-        JOIN nation ON c_nationkey = n_nationkey
-        WHERE o_orderdate >= TIMESTAMP '1995-10-01 00:00:00'
-          AND o_orderdate < TIMESTAMP '1996-10-01 00:00:00'
-          AND l_returnflag = 'R'
-        GROUP BY c_custkey, c_name, c_acctbal, n_name
-        ORDER BY revenue DESC, c_custkey
-        LIMIT 20
-    """,
-    # TPC-H Q14 style: promo revenue share by ship year. Each decimal sum
-    # goes to DOUBLE via the VARCHAR route before the division (the
-    # documented int128->double trap), identically in both engines.
-    "q14_promo_share": f"""
-        SELECT YEAR(l_shipdate) AS l_year,
-            CAST(COALESCE(CAST(CAST(SUM({_REV}) FILTER (WHERE p_type = 'PROMO')
-                     AS DECIMAL(30,6)) AS VARCHAR(64)), '0') AS DOUBLE) * 100.0
-            / CAST(CAST(CAST(SUM({_REV}) AS DECIMAL(30,6)) AS VARCHAR(64))
-                   AS DOUBLE) AS promo_pct
-        FROM lineitem JOIN part ON l_partkey = p_partkey
-        GROUP BY YEAR(l_shipdate)
-    """,
-    # (q18_big_orders moved to the DataFrame-native section in r11: the
-    # IN-subquery form made Spark aggregate lineitem TWICE — Catalyst
-    # pushes the semi-join down both sides of the orders/lineitem join,
-    # duplicating the whole subquery agg subtree (24 Exchange nodes).
-    # The Spark side now runs the single-aggregation formulation in
-    # q_q18_big_orders; the original string stays as ORACLE_Q18.)
-    # TPC-H Q19 style: OR-of-ANDs predicate (brand x size x quantity bands)
-    "q19_banded_revenue": f"""
-        SELECT CAST(CAST(CAST(SUM({_REV}) AS DECIMAL(30,6)) AS VARCHAR(64)) AS DOUBLE) AS revenue
-        FROM lineitem JOIN part ON p_partkey = l_partkey
-        WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 15
-               AND l_quantity >= 1 AND l_quantity <= 21)
-           OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 20
-               AND l_quantity >= 10 AND l_quantity <= 30)
-           OR (p_brand = 'Brand#34' AND p_size BETWEEN 1 AND 25
-               AND l_quantity >= 20 AND l_quantity <= 40)
-    """,
-    # TPC-H Q21 style: suppliers owning the last shipment of
-    # multi-supplier orders (window-free formulation: max-shipdate join)
-    "q21_last_shipper": """
-        WITH last AS (
-            SELECT l_orderkey, MAX(l_shipdate) AS max_shipdate,
-                   COUNT(DISTINCT l_suppkey) AS n_suppliers
-            FROM lineitem GROUP BY l_orderkey
-        )
-        SELECT s_name, COUNT(*) AS numwait
-        FROM supplier
-        JOIN lineitem l ON s_suppkey = l.l_suppkey
-        JOIN last ON l.l_orderkey = last.l_orderkey
-                 AND l.l_shipdate = last.max_shipdate
-        WHERE last.n_suppliers > 1
-        GROUP BY s_name
-        ORDER BY numwait DESC, s_name
-        LIMIT 20
-    """,
-    # TPC-H Q22 style: idle rich customers by name-prefix code
-    # (scalar avg subquery + anti join)
-    "q22_idle_customers": """
-        SELECT SUBSTR(c_name, 10, 2) AS code, COUNT(*) AS numcust,
-            CAST(CAST(CAST(SUM(CAST(c_acctbal AS DECIMAL(12,4)))
-                 AS DECIMAL(30,6)) AS VARCHAR(64)) AS DOUBLE) AS total_bal
-        FROM customer c
-        WHERE c_acctbal > (
-                SELECT CAST(CAST(CAST(SUM(CAST(c_acctbal AS DECIMAL(12,4)))
-                       AS DECIMAL(30,6)) AS VARCHAR(64)) AS DOUBLE) / COUNT(*)
-                FROM customer WHERE c_acctbal > 0)
-          AND NOT EXISTS (SELECT 1 FROM orders o
-                          WHERE o.o_custkey = c.c_custkey
-                            AND o.o_orderpriority = '1-URGENT')
-        GROUP BY SUBSTR(c_name, 10, 2)
-    """,
-    # TPC-H Q2 style: min-cost supplier per part in a region (correlated
-    # scalar subquery). The testdata has no partsupp table; the supply
-    # relation is derived from lineitem as each (part, supplier)'s minimum
-    # observed unit price. unit_cost stays DOUBLE throughout: IEEE divide
-    # and MIN are order-independent and bit-identical across engines.
-    "q2_min_cost_supplier": """
-        WITH supply AS (
-            SELECT l_partkey AS partkey, l_suppkey AS suppkey,
-                   MIN(l_extendedprice / l_quantity) AS unit_cost
-            FROM lineitem GROUP BY l_partkey, l_suppkey
-        )
-        SELECT s_acctbal, s_name, n_name, p_partkey, p_name, unit_cost
-        FROM part
-        JOIN supply ON p_partkey = partkey
-        JOIN supplier ON s_suppkey = suppkey
-        JOIN nation ON s_nationkey = n_nationkey
-        JOIN region ON n_regionkey = r_regionkey
-        WHERE p_size = 15 AND p_type = 'STANDARD' AND r_name = 'EUROPE'
-          AND unit_cost = (
-              SELECT MIN(s2.unit_cost)
-              FROM supply s2
-              JOIN supplier sp ON sp.s_suppkey = s2.suppkey
-              JOIN nation n2 ON sp.s_nationkey = n2.n_nationkey
-              JOIN region r2 ON n2.n_regionkey = r2.r_regionkey
-              WHERE s2.partkey = p_partkey AND r2.r_name = 'EUROPE')
-        ORDER BY s_acctbal DESC, n_name, s_name, p_partkey, s_suppkey
-        LIMIT 100
-    """,
-    # TPC-H Q6 style: forecast revenue change (single-pass filtered sum)
-    "q6_forecast_revenue": """
-        SELECT CAST(CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(10,4))
-                             * CAST(l_discount AS DECIMAL(10,4)))
-                    AS DECIMAL(30,6)) AS VARCHAR(64)) AS DOUBLE) AS revenue
-        FROM lineitem
-        WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-          AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
-          AND l_discount BETWEEN 0.05 AND 0.07
-          AND l_quantity < 24
-    """,
-    # TPC-H Q11 style: parts whose one-nation supply value exceeds 0.1% of
-    # the total (scalar subquery over a reused CTE). partsupp-free: value =
-    # lineitem revenue from NATION_3 suppliers. The threshold compare is
-    # kept in exact decimal — val * 1000 > total — so no engine-specific
-    # decimal-division rounding can flip a borderline row.
-    "q11_important_parts": """
-        WITH value_by_part AS (
-            SELECT l_partkey,
-                   SUM(CAST(l_extendedprice AS DECIMAL(12,4))) AS val
-            FROM lineitem
-            JOIN supplier ON s_suppkey = l_suppkey
-            JOIN nation ON s_nationkey = n_nationkey
-            WHERE n_name = 'NATION_3'
-            GROUP BY l_partkey
-        )
-        SELECT l_partkey, CAST(CAST(CAST(val AS DECIMAL(30,6)) AS VARCHAR(64)) AS DOUBLE) AS part_value
-        FROM value_by_part
-        WHERE val * 1000 > (SELECT SUM(val) FROM value_by_part)
-    """,
-    # TPC-H Q13 style: customer order-count distribution (left outer join
-    # with a join-time filter, then a two-level aggregate)
-    "q13_order_distribution": """
-        SELECT c_count, COUNT(*) AS custdist
-        FROM (
-            SELECT c_custkey, COUNT(o_orderkey) AS c_count
-            FROM customer LEFT OUTER JOIN orders
-              ON c_custkey = o_custkey
-             AND o_orderpriority <> '4-NOT SPECIFIED'
-            GROUP BY c_custkey
-        ) c_orders
-        GROUP BY c_count
-    """,
-    # TPC-H Q15 style: top supplier by quarterly revenue (CTE + MAX scalar
-    # subquery; revenue fixed to double identically before the compare)
-    "q15_top_supplier": f"""
-        WITH revenue AS (
-            SELECT l_suppkey AS supplier_no,
-                CAST(CAST(CAST(SUM({_REV}) AS DECIMAL(30,6)) AS VARCHAR(64)) AS DOUBLE) AS total_revenue
-            FROM lineitem
-            WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-              AND l_shipdate < TIMESTAMP '1996-04-01 00:00:00'
-            GROUP BY l_suppkey
-        )
-        SELECT s_suppkey, s_name, total_revenue
-        FROM supplier JOIN revenue ON s_suppkey = supplier_no
-        WHERE total_revenue = (SELECT MAX(total_revenue) FROM revenue)
-    """,
-    # TPC-H Q20 style: suppliers who moved significant volume of a part
-    # family in a year (nested IN subqueries -> semi-join chain;
-    # partsupp-free: volume threshold on lineitem instead of availqty)
-    "q20_part_promotion": """
-        SELECT s_name, s_acctbal
-        FROM supplier JOIN nation ON s_nationkey = n_nationkey
-        WHERE n_name = 'NATION_5' AND s_suppkey IN (
-            SELECT l_suppkey FROM lineitem
-            WHERE l_partkey IN (SELECT p_partkey FROM part
-                                WHERE p_name LIKE 'red%')
-              AND l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
-              AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
-            GROUP BY l_suppkey, l_partkey
-            HAVING SUM(CAST(l_quantity AS DECIMAL(12,4))) > 50
-        )
-    """,
-    # bit / bool aggregate coverage (identical names in both engines)
-    "bit_bool_aggs": """
-        SELECT l_returnflag,
-            BIT_AND(l_linenumber) AS lines_and,
-            BIT_OR(l_linenumber) AS lines_or,
-            BIT_XOR(l_linenumber) AS lines_xor,
-            BOOL_AND(l_quantity > 1) AS all_multi,
-            BOOL_OR(l_discount > 0.09) AS any_deep_discount,
-            COUNT(*) AS n
-        FROM lineitem GROUP BY l_returnflag
-    """,
-    # sliding-frame moving average (ROWS BETWEEN), decimal-exact division
-    "moving_avg_spend": """
-        SELECT o_custkey, o_orderkey,
-            CAST(CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(12,4)))
-                 OVER w AS DECIMAL(30,6)) AS VARCHAR(64)) AS DOUBLE)
-            / COUNT(*) OVER w AS moving_avg
-        FROM orders
-        WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-                     ROWS BETWEEN 3 PRECEDING AND CURRENT ROW)
-    """,
-    # range_frame_peers moved out of SHARED_SQL in round 4: the Spark side
-    # is now a bucketed equi-join (q_range_frame_peers) because an
-    # unpartitioned RANGE window moves the whole table to ONE task; the
-    # original window SQL survives as its DuckDB oracle, so the hash
-    # compare proves the join rewrite equivalent.
-    # string-function coverage round 2: split_part/position/left/right/
-    # translate/repeat/ascii/chr — exact string semantics in both engines
-    "scalar_string_extra": """
-        SELECT c_custkey,
-            SPLIT_PART(c_name, '#', 2) AS cust_num,
-            POSITION('#' IN c_name) AS hash_pos,
-            LEFT(c_mktsegment, 3) AS seg3,
-            RIGHT(c_name, 4) AS name_tail,
-            TRANSLATE(c_mktsegment, 'AEIOU', 'aeiou') AS seg_xlat,
-            REPEAT(LEFT(c_mktsegment, 1), 3) AS seg_echo,
-            ASCII(c_mktsegment) AS seg_ascii,
-            CHR(65 + CAST(c_custkey % 26 AS INT)) AS letter
-        FROM customer
-    """,
-    # explicit GROUPING SETS (finer than ROLLUP/CUBE)
-    "grouping_sets_flagstatus": """
-        SELECT l_returnflag, l_linestatus, COUNT(*) AS n,
-            CAST(CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(12,4)))
-                 AS DECIMAL(30,6)) AS VARCHAR(64)) AS DOUBLE) AS sum_qty
-        FROM lineitem
-        GROUP BY GROUPING SETS ((l_returnflag, l_linestatus),
-                                (l_returnflag), (l_linestatus), ())
-    """,
-    # UNION ALL + global sort + LIMIT/OFFSET pagination
-    "union_paginated": """
-        SELECT * FROM (
-            SELECT c_custkey AS key, 'customer' AS kind FROM customer
-            UNION ALL
-            SELECT s_suppkey AS key, 'supplier' AS kind FROM supplier
-        ) u
-        ORDER BY key, kind
-        LIMIT 50 OFFSET 10
-    """,
-    # inline VALUES dimension joined against a fact table
-    "values_dim_join": """
-        SELECT pr.label, COUNT(*) AS n_orders,
-            CAST(CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(12,4)))
-                 AS DECIMAL(30,6)) AS VARCHAR(64)) AS DOUBLE) AS total
-        FROM orders
-        JOIN (VALUES ('1-URGENT', 'rush'), ('2-HIGH', 'rush'),
-                     ('3-MEDIUM', 'normal'), ('4-NOT SPECIFIED', 'normal'),
-                     ('5-LOW', 'lazy')) AS pr(priority, label)
-          ON o_orderpriority = pr.priority
-        GROUP BY pr.label
-    """,
-    # variance / stddev / correlation via exact decimal moments — the
-    # built-in stddev/corr differ between engines in the last 1-2 ULPs
-    # (different summation orders), so the moments are decimal-exact sums
-    # and the final arithmetic is the identical IEEE expression in both.
-    # Wide decimals (> 2^53 of scaled integer) go through VARCHAR before
-    # DOUBLE: DuckDB's int128->double cast double-rounds, while string
-    # parsing is correctly rounded in both engines.
-    "dispersion_stats": """
-        WITH m AS (
-            SELECT l_returnflag,
-                COUNT(*) AS n,
-                CAST(CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(12,4)))
-                     AS DECIMAL(30,6)) AS VARCHAR(64)) AS DOUBLE) AS sx,
-                CAST(CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))
-                            * CAST(l_quantity AS DECIMAL(12,2)))
-                     AS DECIMAL(30,6)) AS VARCHAR(64)) AS DOUBLE) AS sxx,
-                CAST(CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,4)))
-                     AS DECIMAL(30,6)) AS VARCHAR(64)) AS DOUBLE) AS sy,
-                CAST(CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))
-                            * CAST(l_extendedprice AS DECIMAL(12,2)))
-                     AS DECIMAL(38,6)) AS VARCHAR(64)) AS DOUBLE) AS syy,
-                CAST(CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))
-                            * CAST(l_extendedprice AS DECIMAL(12,2)))
-                     AS DECIMAL(38,6)) AS VARCHAR(64)) AS DOUBLE) AS sxy
-            FROM lineitem GROUP BY l_returnflag
-        )
-        SELECT l_returnflag, n,
-            (sxx - sx * sx / n) / (n - 1) AS var_qty,
-            SQRT((sxx - sx * sx / n) / (n - 1)) AS stddev_qty,
-            (sxy - sx * sy / n)
-                / SQRT((sxx - sx * sx / n) * (syy - sy * sy / n))
-                AS corr_qty_price
-        FROM m
-    """,
-    # REGR_* family (slope / intercept / R^2) from the same decimal-
-    # exact moments as dispersion_stats — the built-in regr_slope/corr
-    # fold doubles in shuffle order and differs across engines in the
-    # last ULPs; here every moment is an exact decimal sum and the
-    # closed-form arithmetic is the identical IEEE expression on both.
-    "regression_price_qty": """
-        WITH m AS (
-            SELECT l_returnflag,
-                COUNT(*) AS n,
-                CAST(CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(12,4)))
-                     AS DECIMAL(30,6)) AS VARCHAR(64)) AS DOUBLE) AS sx,
-                CAST(CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))
-                            * CAST(l_quantity AS DECIMAL(12,2)))
-                     AS DECIMAL(30,6)) AS VARCHAR(64)) AS DOUBLE) AS sxx,
-                CAST(CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,4)))
-                     AS DECIMAL(30,6)) AS VARCHAR(64)) AS DOUBLE) AS sy,
-                CAST(CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))
-                            * CAST(l_extendedprice AS DECIMAL(12,2)))
-                     AS DECIMAL(38,6)) AS VARCHAR(64)) AS DOUBLE) AS syy,
-                CAST(CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))
-                            * CAST(l_extendedprice AS DECIMAL(12,2)))
-                     AS DECIMAL(38,6)) AS VARCHAR(64)) AS DOUBLE) AS sxy
-            FROM lineitem GROUP BY l_returnflag
-        )
-        SELECT l_returnflag, n,
-            (n * sxy - sx * sy) / (n * sxx - sx * sx) AS slope,
-            (sy - ((n * sxy - sx * sy) / (n * sxx - sx * sx)) * sx) / n
-                AS intercept,
-            ((n * sxy - sx * sy) * (n * sxy - sx * sy))
-                / ((n * sxx - sx * sx) * (n * syy - sy * sy)) AS r2
-        FROM m
-    """,
-    # interval self-join (batch analog of the streaming error<-http
-    # correlation, streaming/stateful.correlate_errors_with_http): for
-    # each error event, how many views the same user made in the prior
-    # 10 minutes
-    "error_prior_views": """
-        SELECT e.user_id, e.event_id AS error_event_id,
-            COUNT(v.event_id) AS prior_views
-        FROM events e
-        LEFT JOIN events v
-          ON v.user_id = e.user_id
-         AND v.event_type = 'view'
-         AND v.ts >= e.ts - INTERVAL 10 MINUTE
-         AND v.ts < e.ts
-        WHERE e.event_type = 'error'
-        GROUP BY e.user_id, e.event_id
-    """,
-    # calendar-function coverage round 2: last_day / weekofyear /
-    # dayofyear / week truncation / interval month arithmetic.
-    # DATE-typed outputs are cast to TIMESTAMP: Spark's DATE arrives in
-    # pandas as object(datetime.date) while DuckDB's arrives as
-    # datetime64, so the driver's canonicalizer stringifies them
-    # differently; TIMESTAMP round-trips identically in both engines.
-    "order_calendar": """
-        SELECT o_orderkey,
-            CAST(LAST_DAY(o_orderdate) AS TIMESTAMP) AS month_end,
-            WEEKOFYEAR(o_orderdate) AS iso_week,
-            DAYOFYEAR(o_orderdate) AS doy,
-            CAST(DATE_TRUNC('week', o_orderdate) AS TIMESTAMP) AS week_start,
-            o_orderdate + INTERVAL 1 MONTH AS next_month,
-            GREATEST(o_orderdate, TIMESTAMP '1998-01-01 00:00:00') AS floored
-        FROM orders
-    """,
-    # document length histogram: 100-char buckets (training-data profile)
-    "doc_length_histogram": """
-        SELECT CAST(FLOOR(n_chars / 100) AS BIGINT) AS bucket_100,
-            COUNT(*) AS n_docs,
-            MIN(n_chars) AS min_chars, MAX(n_chars) AS max_chars
-        FROM documents
-        GROUP BY CAST(FLOOR(n_chars / 100) AS BIGINT)
-    """,
-    # correlated LATERAL subquery: per-customer top-2 orders by price.
-    # Spark plans this as a rewritten window/join (DecorrelateInnerQuery);
-    # DuckDB as a lateral dependent join — same rows either way.
-    "lateral_top_orders": """
-        SELECT c.c_custkey, o.o_orderkey, o.o_totalprice
-        FROM customer c,
-        LATERAL (SELECT o_orderkey, o_totalprice FROM orders
-                 WHERE o_custkey = c.c_custkey
-                 ORDER BY o_totalprice DESC, o_orderkey LIMIT 2) o
-        WHERE c.c_custkey <= 500
-    """,
-    # ordered funnel: first view -> first later click -> first later
-    # purchase per user; stage counts in one row (scalar subqueries)
-    "funnel_conversion": """
-        WITH v AS (SELECT user_id, MIN(ts) AS t1 FROM events
-                   WHERE event_type = 'view' GROUP BY user_id),
-        c AS (SELECT e.user_id, MIN(e.ts) AS t2 FROM events e
-              JOIN v ON e.user_id = v.user_id
-              WHERE e.event_type = 'click' AND e.ts > v.t1
-              GROUP BY e.user_id),
-        p AS (SELECT e.user_id, MIN(e.ts) AS t3 FROM events e
-              JOIN c ON e.user_id = c.user_id
-              WHERE e.event_type = 'purchase' AND e.ts > c.t2
-              GROUP BY e.user_id)
-        SELECT (SELECT COUNT(*) FROM v) AS n_view,
-               (SELECT COUNT(*) FROM c) AS n_view_click,
-               (SELECT COUNT(*) FROM p) AS n_view_click_purchase
-    """,
-    # session entry/exit matrix + bounce share: which event types open
-    # and close 30-min-gap sessions (the landing/exit-page analog), in
-    # exact ppm of all sessions.  first/last via full-frame windows —
-    # identical semantics on both engines; all windows user-partitioned.
-    "session_entry_exit": """
-        WITH d AS (
-            SELECT user_id, event_id, ts, event_type,
-                CASE WHEN ts - LAG(ts) OVER (PARTITION BY user_id
-                                             ORDER BY ts, event_id)
-                          > INTERVAL 30 MINUTE
-                     THEN 1 ELSE 0 END AS brk
-            FROM events
-        ), s AS (
-            SELECT user_id, event_id, ts, event_type,
-                SUM(brk) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                               ROWS BETWEEN UNBOUNDED PRECEDING
-                               AND CURRENT ROW) AS sess_ix
-            FROM d
-        ), fe AS (
-            SELECT user_id, sess_ix,
-                FIRST_VALUE(event_type) OVER w AS entry_type,
-                LAST_VALUE(event_type) OVER w AS exit_type,
-                COUNT(*) OVER w AS n_events
-            FROM s
-            WINDOW w AS (PARTITION BY user_id, sess_ix
-                         ORDER BY ts, event_id
-                         ROWS BETWEEN UNBOUNDED PRECEDING
-                         AND UNBOUNDED FOLLOWING)
-        ), ses AS (
-            SELECT user_id, sess_ix, entry_type, exit_type,
-                MAX(n_events) AS n_ev
-            FROM fe GROUP BY user_id, sess_ix, entry_type, exit_type
-        ), tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_total FROM ses)
-        SELECT entry_type, exit_type,
-            CAST(COUNT(*) AS BIGINT) AS n_sessions,
-            CAST(SUM(CASE WHEN n_ev = 1 THEN 1 ELSE 0 END) AS BIGINT)
-                AS n_bounce,
-            CAST(FLOOR(CAST(COUNT(*) AS BIGINT) * 1000000.0
-                / (SELECT n_total FROM tot)) AS BIGINT) AS share_ppm
-        FROM ses GROUP BY entry_type, exit_type
-        ORDER BY entry_type, exit_type
-    """,
-    # sessionization: 30-minute-gap sessions per user (lag + cumsum)
-    "sessionize_events": """
-        WITH d AS (
-            SELECT user_id, event_id, ts,
-                CASE WHEN ts - LAG(ts) OVER (PARTITION BY user_id
-                                             ORDER BY ts, event_id)
-                          > INTERVAL 30 MINUTE
-                     THEN 1 ELSE 0 END AS brk
-            FROM events
-        ), s AS (
-            SELECT user_id,
-                SUM(brk) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                AS sess_ix
-            FROM d
-        )
-        SELECT user_id, COUNT(DISTINCT sess_ix) AS n_sessions, COUNT(*) AS n_events
-        FROM s GROUP BY user_id
-    """,
-}
-
-
-# --------------------------------------------------------------------------
-# DataFrame-native queries (the engine's own operators) + handwritten oracles
-# --------------------------------------------------------------------------
-
-# oracle fragment: the event_type -> topic routing CASE (events_adapter map)
-_TOPIC_CASE = """CASE event_type
-    WHEN 'view' THEN 'topic-http'
-    WHEN 'click' THEN 'log-app-' || CAST(user_id AS VARCHAR)
-    WHEN 'purchase' THEN 'topic-metrics'
-    WHEN 'error' THEN 'topic-errors'
-    ELSE NULL END"""
-
-# oracle fragment: normalized whitespace tokens of a text column
-_TOKS = (
-    "list_filter(string_split_regex(lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))),"
-    " '\\s+'), x -> x <> '')"
-)
-
-
-# Prepared-plan memo for the envelope/routing source adapters (same
-# rationale and keying as _TABLE_MEMO): events_to_envelopes and
-# route_envelopes build several-hundred-node expression trees through
-# fine-grained py4j calls (~1.5-2 s of pure driver time per build,
-# measured r11) that are a pure function of (session, sf_dir, frozen
-# ROUTE_TOPICS). The DataFrames are unexecuted plans; every action
-# still scans the parquet. NOT used for anything holding a checkpoint
-# or other materialized state (roundtrip rebuilds its encode/decode
-# chain every call).
-_ENV_MEMO: dict[tuple[str, str], DataFrame] = {}
-_ROUTED_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-# Whole-query plan memo for PURE constructors (r11 optimization wave 2,
-# guide §7.3: driver plan work is single-threaded and the bench pays it
-# per pass). Eligibility is strict: a constructor may be decorated with
-# ``_pure_plan`` ONLY if it runs no Spark action (no collect/head/count),
-# holds no checkpoint/persisted state, and derives nothing from data —
-# the memoized object is an UNEXECUTED logical plan, so every action on
-# it still scans the parquet inputs (same class as _TABLE_MEMO/_ENV_MEMO,
-# never results). Constructors that materialize anything during
-# construction (roundtrip's localCheckpoint, embedding_dup_pairs' plane
-# collect, dup_components' iterative jobs) must NOT be decorated: caching
-# those would reuse computed data across passes, which the bench contract
-# forbids. Measured construction cost per bench pass at sf0.1:
-# route_topics 0.50 s, stats_counters 0.45 s, minhash 0.27 s,
-# ann_cosine 0.19 s, doc_fingerprints 0.19 s, bigram 0.12 s — ~6 s of
-# the ~20 s bench total was construction re-done identically each pass.
-_PLAN_MEMO: dict[tuple[str, str, str], DataFrame] = {}
-
-# Column-object memo for reusable UNRESOLVED expressions (keyed by
-# applicationId): a Column built purely from field names binds to its
-# parent at analysis time, so one object can serve every pass's fresh
-# lineage. Same construction-only contract as _PLAN_MEMO.
-_RT_COL_MEMO: dict[tuple[str, str], tuple] = {}
-
-
-def _pure_plan(fn):
-    """Memoize a pure query constructor per (session, sf_dir) — see the
-    eligibility contract on _PLAN_MEMO above."""
-    import functools
-
-    @functools.wraps(fn)
-    def wrapper(spark: SparkSession, sf_dir: str) -> DataFrame:
-        key = (spark.sparkContext.applicationId, sf_dir, fn.__name__)
-        df = _PLAN_MEMO.get(key)
-        if df is None:
-            df = fn(spark, sf_dir)
-            _memo_put(_PLAN_MEMO, key, df)
-        return df
-
-    return wrapper
-
-
-def _envelopes(
-    spark: SparkSession, sf_dir: str, fan: bool = True
-) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, fan)
-    if key not in _ENV_MEMO:
-        # ``fan=True``: the envelope CODEC paths (sonde JSON encode in
-        # roundtrip/salted) do heavy per-row work BEFORE their first
-        # shuffle, so the fan-out lives here rather than in _t():
-        # every other events consumer hash-exchanges immediately and a
-        # table-level round-robin exchange only duplicated that work
-        # (r11 A/B: events_per_minute 0.73 -> 0.23 s etc. with events
-        # single-split, route/stats unchanged with this fan-out kept).
-        # ``fan=False``: consumers whose per-row work is a topic CASE +
-        # one counting aggregate (route_topics, stats_counters) measured
-        # FASTER without the exchange at sf0.1 (topic-only agg 0.61 s
-        # single-split vs 1.55 s fanned) — the lazy CASE never evaluates
-        # the expensive uuid-hex branch on this corpus mix, so the
-        # projection is scan-class, not codec-class.
-        ev = _t(spark, sf_dir, "events")
-        if fan:
-            ev = ev.repartition(spark.sparkContext.defaultParallelism)
-        _memo_put(_ENV_MEMO, key, events_to_envelopes(ev))
-    return _ENV_MEMO[key]
-
-
-def _routed_envelopes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _ROUTED_MEMO:
-        _memo_put(
-            _ROUTED_MEMO,
-            key,
-            route_envelopes(_envelopes(spark, sf_dir), ROUTE_TOPICS),
-        )
-    return _ROUTED_MEMO[key]
-
-
-@_pure_plan
-def q_route_topics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P1+P2+P3: the routing dispatch over the events stream, aggregated
-    per destination topic.
-
-    r11 (guide §7.3, "very large plans: planning time itself can become
-    the bottleneck"): built topic-only rather than over the full
-    ``route_envelopes`` (topic, value) frame. Catalyst prunes the unused
-    sonde-JSON ``value`` column from the EXECUTED plan either way — the
-    physical plans are identical — but ``.count()`` re-optimizes the
-    logical tree on every action, and carrying the ~300-node encode tree
-    just to prune it measured +0.33 s per bench pass. The full encode
-    path stays benched by roundtrip_route_topics, route_topics_salted
-    and the routing-throughput side metric. Same filter semantics
-    (``topic IS NOT NULL`` = route_envelopes' drop rule); oracle
-    unchanged."""
-    env = _envelopes(spark, sf_dir, fan=False)
-    topic = route_topic_expr(env, ROUTE_TOPICS)
-    return (
-        env.withColumn("topic", topic)
-        .filter(F.col("topic").isNotNull())
-        .groupBy("topic")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
-ORACLE_ROUTE_TOPICS = f"""
-    WITH routed AS (SELECT {_TOPIC_CASE} AS topic FROM events)
-    SELECT topic, COUNT(*) AS n FROM routed
-    WHERE topic IS NOT NULL GROUP BY topic
-"""
-
-
-def q_route_topics_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The route_topics aggregation through the salted two-stage path
-    (operators/skew.py): identical results, skew-proof shuffle layout —
-    each hot topic fans out over 32 salts before the final per-topic sum.
-    """
-    from kafka_firehose_nozzle_spark.operators.skew import salted_counts
-
-    routed = _routed_envelopes(spark, sf_dir)
-    return salted_counts(routed, "topic", salt_from=["value"], n_salts=32)
-
-
-@_pure_plan
-def q_stats_counters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A1: the reference's consume/ignore/forward counters as one
-    aggregation over the envelope stream (stats.go:19-37)."""
-    from kafka_firehose_nozzle_spark import schemas
-
-    # fan=False: one CASE projection + one 1-row aggregate — scan-class
-    # work, the fan-out exchange measured as pure loss (see _envelopes)
-    env = _envelopes(spark, sf_dir, fan=False)
-    env = env.withColumn("topic", route_topic_expr(env, ROUTE_TOPICS))
-    et = F.col("eventType")
-    return env.agg(
-        F.count(F.lit(1)).alias("consume"),
-        F.count_if(et == schemas.HTTP_START_STOP).alias("consume_http_start_stop"),
-        F.count_if(et == schemas.LOG_MESSAGE).alias("consume_log_message"),
-        F.count_if(et == schemas.VALUE_METRIC).alias("consume_value_metric"),
-        F.count_if(et == schemas.COUNTER_EVENT).alias("consume_counter_event"),
-        F.count_if(et == schemas.ERROR).alias("consume_error"),
-        F.count_if(~et.isin(list(schemas.EVENT_TYPE_NAMES))).alias("consume_unknown"),
-        F.count_if(F.col("topic").isNull()).alias("ignored"),
-        F.count_if(F.col("topic").isNotNull()).alias("forwarded"),
-    )
-
-
-ORACLE_STATS_COUNTERS = f"""
-    WITH routed AS (SELECT event_type, {_TOPIC_CASE} AS topic FROM events)
-    SELECT COUNT(*) AS consume,
-        COUNT(*) FILTER (WHERE event_type = 'view') AS consume_http_start_stop,
-        COUNT(*) FILTER (WHERE event_type = 'click') AS consume_log_message,
-        COUNT(*) FILTER (WHERE event_type = 'purchase') AS consume_value_metric,
-        COUNT(*) FILTER (WHERE event_type = 'signup') AS consume_counter_event,
-        COUNT(*) FILTER (WHERE event_type = 'error') AS consume_error,
-        COUNT(*) FILTER (WHERE event_type NOT IN
-            ('view','click','purchase','signup','error')) AS consume_unknown,
-        COUNT(*) FILTER (WHERE topic IS NULL) AS ignored,
-        COUNT(*) FILTER (WHERE topic IS NOT NULL) AS forwarded
-    FROM routed
-"""
-
-
-def q_doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Text analysis: token counts, stopword hits, punctuation, word len."""
-    docs = _t(spark, sf_dir, "documents")
-    text = TX.normalize_text(F.col("text"))
-    toks = TX.tokens(text)
-    total_len = F.aggregate(toks, F.lit(0), lambda a, w: a + F.length(w))
-    return docs.select(
-        "doc_id",
-        F.size(toks).alias("n_tokens"),
-        F.size(F.filter(toks, lambda t: t.isin(TX.STOPWORDS))).alias("n_stopwords"),
-        (
-            F.length(F.col("text"))
-            - F.length(F.regexp_replace(F.col("text"), r"[^\w\s]", ""))
-        ).alias("n_punct"),
-        (total_len.cast("double") / F.size(toks)).alias("avg_word_len"),
-    )
-
-
-ORACLE_DOC_STATS = f"""
-    WITH t AS (SELECT doc_id, text, {_TOKS} AS toks FROM documents)
-    SELECT doc_id, len(toks) AS n_tokens,
-        len(list_filter(toks, x -> list_contains(
-            ['the','a','of','to','and','in','is','it','for','on'], x))) AS n_stopwords,
-        length(text) - length(regexp_replace(text, '[^\\w\\s]', '', 'g')) AS n_punct,
-        CAST(list_sum(list_transform(toks, x -> length(x))) AS DOUBLE) / len(toks)
-            AS avg_word_len
-    FROM t
-"""
-
-
-def q_lang_pred_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Language-ID heuristic -> documents per predicted language."""
-    docs = _t(spark, sf_dir, "documents")
-    return (
-        docs.select(TX.lang_id(F.col("text")).alias("lang_pred"))
-        .groupBy("lang_pred")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
-ORACLE_LANG_PRED = f"""
-    WITH t AS (SELECT list_slice({_TOKS}, 1, 64) AS toks FROM documents),
-    h AS (SELECT
-        len(list_filter(toks, x -> list_contains(['the','and','of','is','to'], x))) AS en,
-        len(list_filter(toks, x -> list_contains(['der','die','das','und','ist'], x))) AS de,
-        len(list_filter(toks, x -> list_contains(['le','la','les','et','est'], x))) AS fr,
-        len(list_filter(toks, x -> list_contains(['el','los','las','y','es'], x))) AS es
-    FROM t)
-    SELECT CASE
-        WHEN de > en AND de >= fr AND de >= es THEN 'de'
-        WHEN fr > en AND fr >= es THEN 'fr'
-        WHEN es > en THEN 'es'
-        ELSE 'en' END AS lang_pred, COUNT(*) AS n
-    FROM h GROUP BY 1
-"""
-
-
-@_pure_plan
-def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact dedup groups by md5 fingerprint of normalized text."""
-    return D.exact_dup_groups(_t(spark, sf_dir, "documents"))
-
-
-ORACLE_DEDUP_EXACT = """
-    SELECT md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))) AS fp,
-           MIN(doc_id) AS canonical_id, COUNT(*) AS n_copies
-    FROM documents GROUP BY 1
-"""
-
-
-@_pure_plan
-def q_doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Content fingerprints: md5 + winnowing-style rolling-hash minimum."""
-    docs = _t(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id",
-        TX.fingerprint(F.col("text")).alias("fp"),
-        TX.rolling_hash_fingerprint(F.col("text"), 8).alias("rolling_fp"),
-    )
-
-
-ORACLE_DOC_FINGERPRINTS = f"""
-    WITH t AS (SELECT doc_id, text, {_TOKS} AS toks FROM documents)
-    SELECT doc_id,
-        md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))) AS fp,
-        CASE WHEN len(toks) >= 8 THEN
-            list_min(list_transform(range(len(toks) - 7), i ->
-                ('0x' || substr(md5(array_to_string(list_slice(toks, i + 1, i + 8), ' ')),
-                                1, 15))::BIGINT))
-        ELSE ('0x' || substr(md5(array_to_string(toks, ' ')), 1, 15))::BIGINT
-        END AS rolling_fp
-    FROM t
-"""
-
-
-@_pure_plan
-def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash signatures (4 hashes) over 3-word token-hash shingles,
-    per document. The hashed-shingle array is staged in its own
-    projection so the 4 lanes share one construction (interpreted HOFs
-    get no CSE — the single-expression convenience form would rebuild
-    it per lane)."""
-    docs = _t(spark, sf_dir, "documents")
-    staged = docs.withColumn(
-        "_hsh", D.token_hash_shingles(F.col("text"))
-    )
-    sig = D.minhash_from_hashed(F.col("_hsh"), 4)
-    return staged.select(
-        "doc_id",
-        *[F.element_at(sig, i + 1).alias(f"m{i}") for i in range(4)],
-    )
-
-
-def _minhash_lane_sql(arr: str, j: int) -> str:
-    """Affine MinHash lane j over integer shingle hashes
-    ((2j+3)*s + 97j+1 mod 2^31-1; mirrors
-    operators/dedup.minhash_from_hashed — all values positive, so
-    DuckDB % equals Spark pmod)."""
-    return (
-        f"list_min(list_transform({arr}, s -> "
-        f"({2 * j + 3} * s + {97 * j + 1}) % 2147483647))"
-    )
-
-
-# token-hash shingles (mirrors operators/dedup.token_hash_shingles):
-# one md5 per token -> 32-bit int, k=3 combined as h1*P^2 + h2*P + h3
-_TH = "list_transform(toks, t -> ('0x' || substr(md5(t), 1, 8))::BIGINT)"
-_HSH = (
-    "list_distinct(CASE WHEN len(th) >= 3 THEN "
-    "list_transform(range(len(th) - 2), i -> "
-    "th[i + 1] * 16752649 + th[i + 2] * 4093 + th[i + 3]) "
-    "WHEN len(th) = 2 THEN [th[1] * 4093 + th[2]] "
-    "WHEN len(th) = 1 THEN [th[1]] "
-    "ELSE [CAST(0 AS BIGINT)] END)"
-)
-
-
-def _oracle_minhash_cols() -> str:
-    return ",\n        ".join(
-        f"{_minhash_lane_sql('hsh', i)} AS m{i}" for i in range(4)
-    )
-
-
-ORACLE_MINHASH = f"""
-    WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
-    h AS (SELECT doc_id, {_TH} AS th FROM t),
-    hs AS (SELECT doc_id, {_HSH} AS hsh FROM h)
-    SELECT doc_id,
-        {_oracle_minhash_cols()}
-    FROM hs
-"""
-
-
-@_pure_plan
-def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force cosine top-10 against the vec_id=0 query vector."""
-    emb = _t(spark, sf_dir, "embeddings")
-    return S.cosine_topk(emb, S.query_vector(emb, 0), k=10)
-
-
-ORACLE_ANN = """
-    WITH q AS (SELECT list_transform(embedding, x -> CAST(x AS DOUBLE)) AS qv
-               FROM embeddings WHERE vec_id = 0),
-    e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-          FROM embeddings WHERE vec_id <> 0),
-    s AS (SELECT vec_id,
-        list_sum(list_transform(range(len(v)), i -> v[i + 1] * qv[i + 1])) /
-        (sqrt(list_sum(list_transform(v, x -> x * x))) *
-         sqrt(list_sum(list_transform(qv, x -> x * x)))) AS sim
-        FROM e CROSS JOIN q)
-    SELECT vec_id, (FLOOR((sim) * 10000.0 + 0.5) / 10000.0) AS cos_sim
-    FROM s ORDER BY sim DESC, vec_id LIMIT 10
-"""
-
-
-def q_embedding_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-dup pairs, blocked by banded sign-LSH
-    buckets (bucket count grows ~n/100, so block sizes stay bounded at
-    any corpus scale — r2's label-blocking grew quadratically at sf1).
-
-    k is sized from the parquet footer row count (a driver-side metadata
-    read), so the operator no longer spends a full Spark job on
-    ``df.count()`` before doing any work."""
-    emb = _t(spark, sf_dir, "embeddings")
-    return D.embedding_lsh_dup_pairs(
-        emb, threshold=0.2, n=_parquet_nrows(f"{sf_dir}/embeddings.parquet")
-    )
-
-
-_EMB_DOT = (
-    "list_sum(list_transform(range(len({a})), i -> {a}[i + 1] * {b}[i + 1]))"
-)
-
-# replays embedding_lsh_dup_pairs: k = max(4, ceil(log2(n/100))) sign bits
-# per band over planes = the first 2k corpus vectors; candidates are the
-# OR of both bands' intra-bucket pairs. The CTE block (through `p`, all
-# scored candidate pairs) is shared with the kNN-graph oracle.
-_EMB_LSH_PAIRS_CTE = f"""
-    WITH e AS (SELECT vec_id,
-                      list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-               FROM embeddings),
-    params AS (SELECT GREATEST(4, CAST(CEIL(LOG2(COUNT(*) / 100.0)) AS INT))
-                   AS k FROM e),
-    pl AS (SELECT p.vec_id // params.k AS band, p.vec_id % params.k AS j, p.v
-           FROM e p, params WHERE p.vec_id < 2 * params.k),
-    b AS (SELECT e.vec_id, pl.band,
-                 SUM(CASE WHEN {_EMB_DOT.format(a='e.v', b='pl.v')} >= 0
-                     THEN CAST(POWER(2, pl.j) AS BIGINT) ELSE 0 END) AS bucket
-          FROM e CROSS JOIN pl GROUP BY 1, 2),
-    cand AS (SELECT DISTINCT x.vec_id AS id_a, y.vec_id AS id_b
-             FROM b x JOIN b y ON x.band = y.band AND x.bucket = y.bucket
-                              AND x.vec_id < y.vec_id),
-    s AS (SELECT vec_id, v,
-                 sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm FROM e),
-    p AS (SELECT c.id_a, c.id_b,
-                 (FLOOR(({_EMB_DOT.format(a='a.v', b='bb.v')}
-                       / (a.nrm * bb.nrm)) * 1000000.0 + 0.5)
-                  / 1000000.0) AS cos_sim
-          FROM cand c JOIN s a ON c.id_a = a.vec_id
-                      JOIN s bb ON c.id_b = bb.vec_id)
-"""
-
-ORACLE_EMB_DUPS = (
-    _EMB_LSH_PAIRS_CTE
-    + "SELECT id_a, id_b, cos_sim FROM p WHERE cos_sim >= 0.2"
-)
-
-
-# --------------------------------------------------------------------------
-# Wave 2: simhash, LSH near-dup end-to-end, token/quality metrics, pivot,
-# as-of join, IVF ANN, centroid norms, multimodal batch features
-# --------------------------------------------------------------------------
-
-# oracle fragment: cosine over double lists with identical fold order
-def _sim_sql(a: str, b: str) -> str:
-    return (
-        f"(list_sum(list_transform(range(len({a})), i -> {a}[i + 1] * {b}[i + 1])) / "
-        f"(sqrt(list_sum(list_transform({a}, x -> x * x))) * "
-        f"sqrt(list_sum(list_transform({b}, x -> x * x)))))"
-    )
-
-
-def q_simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
-    # with_simhash stages the token-hash array once per row instead of
-    # inlining it into each of the 16 per-bit majority expressions.
-    return D.with_simhash(docs, "text", "simhash16", bits=16).select(
-        "doc_id", "simhash16"
-    )
-
-
-def _oracle_simhash() -> str:
-    hashes = (
-        "list_transform(list_distinct(toks), t -> "
-        "('0x' || substr(md5(t || '#0'), 1, 15))::BIGINT)"
-    )
-    bit_terms = " + ".join(
-        f"(CASE WHEN 2 * len(list_filter(hs, h -> (h & {1 << i}) <> 0)) > len(hs) "
-        f"THEN {1 << i} ELSE 0 END)"
-        for i in range(16)
-    )
-    return f"""
-        WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
-        hh AS (SELECT doc_id, {hashes} AS hs FROM t)
-        SELECT doc_id, CAST({bit_terms} AS BIGINT) AS simhash16 FROM hh
-    """
-
-
-def q_simhash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-duplicate pair HISTOGRAM (Hamming <= 2 over 16
-    bits). The oracle computes the pair set by brute force (sf0.01 is
-    small enough); the engine side computes the identical counts from
-    the fingerprint value histogram (r7 sufficient-statistics rewrite:
-    on this low-entropy corpus the pair SET is ~40% of all doc pairs —
-    quadratic at any blocking — while the counts need only the <= 2^16
-    value histogram and popcount-mask arithmetic; the old chunk-join
-    enumeration timed out >600 s in the sf10 audit, this runs in the
-    one corpus scan). Pair-set completeness of the enumerating operator
-    (simhash_near_pairs) stays pinned by its own unit tests."""
-    return D.simhash_hamming_pair_counts(
-        _planted_docs(spark, sf_dir), bits=16, max_hamming=2
-    )
-
-
-def _oracle_simhash_near_pairs() -> str:
-    hashes = (
-        "list_transform(list_distinct(toks), t -> "
-        "('0x' || substr(md5(t || '#0'), 1, 15))::BIGINT)"
-    )
-    bit_terms = " + ".join(
-        f"(CASE WHEN 2 * len(list_filter(hs, h -> (h & {1 << i}) <> 0)) > len(hs) "
-        f"THEN {1 << i} ELSE 0 END)"
-        for i in range(16)
-    )
-    return f"""
-        WITH docs2 AS ({_PLANTED_SQL}),
-        t AS (SELECT doc_id, {_TOKS} AS toks FROM docs2),
-        hh AS (SELECT doc_id, {hashes} AS hs FROM t),
-        sh_out AS (SELECT doc_id, CAST({bit_terms} AS BIGINT) AS simhash16
-                   FROM hh)
-        SELECT bit_count(xor(a.simhash16, b.simhash16)) AS hamming,
-            COUNT(*) AS n_pairs
-        FROM sh_out a JOIN sh_out b ON a.doc_id < b.doc_id
-        WHERE bit_count(xor(a.simhash16, b.simhash16)) <= 2
-        GROUP BY 1
-    """
-
-
-def _fanned_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents with the fan-where-the-work-lives exchange for span
-    operators (`_planted_docs` pattern): the per-row work is tokenize +
-    explode every 8-token window at stride 4 + md5 per window — the
-    densest map in the doc family — and its first shuffle (groupBy
-    window hash) comes only AFTER that map, so a single-split scan
-    serializes the whole thing in one task. r11 idle interleaved A/B at
-    sf0.1 (min-of-3 warm passes): substring_dup_spans 4.1-4.5 s
-    single-split vs 1.4-1.8 s fanned; boilerplate_topk same shape.
-    Same (256 KB, 4 MB] band as `_planted_docs`: above 4 MB `_t`
-    already fanned the scan, below 256 KB the corpus is too small for
-    either to matter."""
-    docs = _t(spark, sf_dir, "documents")
-    try:
-        nbytes = os.path.getsize(f"{sf_dir}/documents.parquet")
-    except OSError:
-        nbytes = 0
-    if (256 << 10) < nbytes <= (4 << 20):
-        docs = docs.repartition(spark.sparkContext.defaultParallelism)
-    return docs
-
-
-# planted near-duplicates: every document re-appears (id + 1000000) with
-# its last word dropped; LSH must surface orig->copy candidate pairs.
-_PLANT_OFFSET = 1_000_000
-
-
-def _planted_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoized PURE plan (see _PLAN_MEMO contract): scan + fan + the
-    2-struct explode — no action, no state; every consumer's action
-    re-reads the parquet."""
-    key = (spark.sparkContext.applicationId, sf_dir, "_planted_docs")
-    df = _PLAN_MEMO.get(key)
-    if df is None:
-        df = _build_planted_docs(spark, sf_dir)
-        _memo_put(_PLAN_MEMO, key, df)
-    return df
-
-
-def _planted_component_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Star edges over the planted corpus (num_hashes=8, num_bands=4,
-    dedup_edges=False) — the shared input of the four components
-    consumers. Pure plan (shingle/minhash expressions + window min;
-    lsh_component_edges runs no action), memoized per (session, sf_dir):
-    its py4j construction was re-done identically on every bench pass
-    (r11 optimization wave 2, guide §7.3)."""
-    key = (spark.sparkContext.applicationId, sf_dir, "_planted_edges")
-    df = _PLAN_MEMO.get(key)
-    if df is None:
-        df = D.lsh_component_edges(
-            _planted_docs(spark, sf_dir),
-            num_hashes=8,
-            num_bands=4,
-            dedup_edges=False,
-        )
-        _memo_put(_PLAN_MEMO, key, df)
-    return df
-
-
-def _build_planted_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    # The planted family is the corpus path with dense per-row work
-    # BEFORE its first shuffle (2x rows via the mutation union, then
-    # shingling + 8 minhash lanes per row), so when `_t` left documents
-    # single-split (<= 4 MB) the fan-out lives HERE — the `_envelopes`
-    # pattern. r11 A/B at sf0.1: lsh_dup_components 2.8/2.1 s fanned-at-
-    # scan, 3.3/2.8 s nowhere, 2.1/2.0 s fanned-here — while the
-    # non-planted doc queries all got faster without the scan fan.
-    # Above 4 MB the scan already fanned and a second exchange would be
-    # pure cost; below ~256 KB (sf0.01 correctness runs) the corpus is
-    # too small for either to matter.
-    try:
-        nbytes = os.path.getsize(f"{sf_dir}/documents.parquet")
-    except OSError:
-        nbytes = 0
-    if (256 << 10) < nbytes <= (4 << 20):
-        docs = docs.repartition(spark.sparkContext.defaultParallelism)
-    # One scan, not two: the original union(docs, mutated) planned BOTH
-    # branches as independent Scan->(Exchange)->Project subtrees, so the
-    # corpus was read (and, in the fan band above, shuffled) twice per
-    # action. Emitting [original, mutated] as a 2-struct array and
-    # exploding keeps the exact same output multiset from ONE scan and
-    # one fan exchange. r11 idle A/B at sf0.1 (min-of-3, noop sink):
-    # docs2 0.505 -> 0.377 s, full lsh_dup_components chain 2.91 ->
-    # 1.95 s (with the edge-dedup skip below), toPandas outputs equal.
-    pair = F.array(
-        F.struct(F.col("doc_id"), F.col("text")),
-        F.struct(
-            (F.col("doc_id") + _PLANT_OFFSET).alias("doc_id"),
-            F.regexp_replace(F.col("text"), r"\s+\S+\s*$", "").alias("text"),
-        ),
-    )
-    return docs.select(F.explode(pair).alias("_d")).select(
-        "_d.doc_id", "_d.text"
-    )
-
-
-_PLANTED_SQL = f"""
-        SELECT doc_id, text FROM documents
-        UNION ALL
-        SELECT doc_id + {_PLANT_OFFSET} AS doc_id,
-               regexp_replace(text, '\\s+\\S+\\s*$', '') AS text
-        FROM documents
-"""
-
-# oracle fragments for minhash signature + 4 two-row bands over planted docs
-_ORACLE_SIG8 = ", ".join(
-    f"{_minhash_lane_sql('hsh', i)} AS m{i}" for i in range(8)
-)
-_ORACLE_BANDS_UNION = " UNION ALL ".join(
-    f"SELECT doc_id, {b} AS band_ix, md5(m{2*b}::VARCHAR || ',' || m{2*b+1}::VARCHAR) AS band_hash FROM sig"
-    for b in range(4)
-)
-# `sh` (string shingles) is only consumed by the exact-jaccard suffix in
-# ORACLE_JACCARD_PLANTED; DuckDB prunes it from the other consumers
-_ORACLE_LSH_CAND = f"""
-    WITH docs2 AS ({_PLANTED_SQL}),
-    t AS (SELECT doc_id, {_TOKS} AS toks FROM docs2),
-    sh AS (SELECT doc_id, list_distinct(
-        CASE WHEN len(toks) >= 3 THEN
-            list_transform(range(len(toks) - 2), i ->
-                array_to_string(list_slice(toks, i + 1, i + 3), ' '))
-        ELSE [array_to_string(toks, ' ')] END) AS shingles FROM t),
-    h AS (SELECT doc_id, {_TH} AS th FROM t),
-    hs AS (SELECT doc_id, {_HSH} AS hsh FROM h),
-    sig AS (SELECT doc_id, {_ORACLE_SIG8} FROM hs),
-    bands AS ({_ORACLE_BANDS_UNION}),
-    cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-             FROM bands a JOIN bands b
-               ON a.band_ix = b.band_ix AND a.band_hash = b.band_hash
-              AND a.doc_id < b.doc_id)
-"""
-
-
-def q_lsh_planted_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash-LSH candidate pairs over the corpus + planted near-dups."""
-    return D.lsh_candidate_pairs(
-        _planted_docs(spark, sf_dir), num_hashes=8, num_bands=4
-    )
-
-
-ORACLE_LSH_PLANTED = _ORACLE_LSH_CAND + "SELECT id_a, id_b FROM cand"
-
-
-def q_jaccard_planted_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH candidates verified by exact shingle Jaccard >= 0.5."""
-    docs2 = _planted_docs(spark, sf_dir)
-    cands = D.lsh_candidate_pairs(docs2, num_hashes=8, num_bands=4)
-    return D.jaccard_verify_pairs(cands, docs2, threshold=0.5)
-
-
-ORACLE_JACCARD_PLANTED = _ORACLE_LSH_CAND + """,
-    jac AS (SELECT id_a, id_b,
-        CAST(len(list_intersect(sa.shingles, sb.shingles)) AS DOUBLE) /
-        len(list_distinct(list_concat(sa.shingles, sb.shingles))) AS j
-        FROM cand JOIN sh sa ON sa.doc_id = id_a JOIN sh sb ON sb.doc_id = id_b)
-    SELECT id_a, id_b, (FLOOR((j) * 1000000.0 + 0.5) / 1000000.0) AS jaccard FROM jac WHERE j >= 0.5
-"""
-
-
-def q_lsh_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-duplicate clusters: LSH candidate pairs -> connected
-    components (iterative min-label propagation; one shuffle per round,
-    rounds = cluster diameter). Oracle is a DuckDB recursive CTE over the
-    same candidate edges."""
-    # star edges, not all-pairs (identical components, r11 A/B); shared
-    # memoized plan — see _planted_component_edges
-    pairs = _planted_component_edges(spark, sf_dir)
-    return D.dup_components(pairs)
-
-
-ORACLE_DUP_COMPONENTS = (
-    _ORACLE_LSH_CAND.replace("WITH docs2", "WITH RECURSIVE docs2", 1)
-    + """,
-    edges AS (SELECT id_a AS src, id_b AS dst FROM cand
-              UNION SELECT id_b, id_a FROM cand),
-    reach AS (
-        SELECT src AS id, src AS lbl FROM edges
-        UNION
-        SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.id
-    )
-    SELECT id AS doc_id, MIN(lbl) AS component_id FROM reach GROUP BY id
-"""
-)
-
-
-def q_dedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end fuzzy dedup: LSH candidates -> connected components ->
-    keep one canonical doc per cluster (the min id), drop the rest. The
-    final step is a left-anti join of the corpus against the
-    non-canonical member set — at 100 TB the anti-join side is only the
-    duplicate fringe, orders of magnitude smaller than the corpus."""
-    docs2 = _planted_docs(spark, sf_dir)
-    # star edges, not all-pairs (identical components, r11 A/B); shared
-    # memoized plan — see _planted_component_edges
-    pairs = _planted_component_edges(spark, sf_dir)
-    comp = D.dup_components(pairs)
-    drop = comp.filter(F.col("component_id") != F.col("doc_id")).select("doc_id")
-    return docs2.join(drop, "doc_id", "left_anti").select("doc_id")
-
-
-ORACLE_DEDUP_CORPUS = (
-    _ORACLE_LSH_CAND.replace("WITH docs2", "WITH RECURSIVE docs2", 1)
-    + """,
-    edges AS (SELECT id_a AS src, id_b AS dst FROM cand
-              UNION SELECT id_b, id_a FROM cand),
-    reach AS (
-        SELECT src AS id, src AS lbl FROM edges
-        UNION
-        SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.id
-    ),
-    comp AS (SELECT id, MIN(lbl) AS component_id FROM reach GROUP BY id)
-    SELECT d.doc_id FROM docs2 d
-    WHERE d.doc_id NOT IN (SELECT id FROM comp WHERE component_id <> id)
-"""
-)
-
-
-def q_pii_scrubbed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PII redaction over documents with synthesized contact lines (the
-    corpus itself has none): emails, IPv4, phone numbers -> placeholders.
-    Pure regexp_replace chain — codegen'd, no shuffle."""
-    docs = _t(spark, sf_dir, "documents")
-    dirty = F.concat(
-        F.col("text"),
-        F.format_string(
-            " contact user%d@example.com at 10.0.%d.7 or +1-555-%04d-001",
-            F.col("doc_id"),
-            F.pmod(F.col("doc_id"), F.lit(256)),
-            F.pmod(F.col("doc_id"), F.lit(10000)),
-        ),
-    )
-    # Stage dirty and the scrubbed text each in their own projection so
-    # the 3-regex chain runs once per row, not once per referencing
-    # expression (CollapseProject keeps multiply-referenced non-cheap
-    # expressions staged).
-    return (
-        docs.select("doc_id", dirty.alias("_dirty"))
-        .withColumn("clean_text", TX.scrub_pii(F.col("_dirty")))
-        .select(
-            "doc_id",
-            "clean_text",
-            (F.length("_dirty") - F.length("clean_text")).alias("chars_removed"),
-        )
-    )
-
-
-ORACLE_PII = """
-    WITH d AS (SELECT doc_id,
-        text || ' contact user' || doc_id || '@example.com at 10.0.'
-             || (doc_id % 256) || '.7 or +1-555-'
-             || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') || '-001'
-            AS dirty FROM documents),
-    s AS (SELECT doc_id, dirty,
-        regexp_replace(regexp_replace(regexp_replace(dirty,
-            '[A-Za-z0-9._%+\\-]+@[A-Za-z0-9.\\-]+\\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-            '\\b\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\b', '<IP>', 'g'),
-            '\\+\\d[\\d\\-]{7,}\\d', '<PHONE>', 'g') AS clean_text
-        FROM d)
-    SELECT doc_id, clean_text,
-        length(dirty) - length(clean_text) AS chars_removed
-    FROM s
-"""
-
-
-# oracle fragment: word 3-grams of the normalized tokens (matches
-# operators.text.word_ngrams(n=3))
-_GRAMS3 = (
-    "CASE WHEN len(toks) >= 3 THEN list_transform(range(len(toks) - 2), "
-    "i -> array_to_string(toks[i + 1:i + 3], ' ')) "
-    "ELSE [array_to_string(toks, ' ')] END"
-)
-
-
-def q_repetition_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Within-doc repetition (1 - distinct/total word 3-grams): the
-    boilerplate/looped-generation quality gate. Pure column expressions,
-    fused into the scan."""
-    docs = _t(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id", TX.repetition_score(F.col("text"), 3).alias("rep_3gram")
-    )
-
-
-ORACLE_REPETITION = f"""
-    WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
-    g AS (SELECT doc_id, {_GRAMS3} AS grams FROM t)
-    SELECT doc_id,
-        (FLOOR((1.0 - len(list_distinct(grams)) / CAST(len(grams) AS DOUBLE)) * 1000000.0 + 0.5) / 1000000.0)
-            AS rep_3gram
-    FROM g
-"""
-
-
-def q_ngram_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Train/test contamination: per held-out doc (doc_id % 5 = 0), the
-    fraction of its distinct word 3-grams found anywhere in the train
-    split. Explode + hash semi-join + partial-agg count — never a
-    pairwise doc comparison."""
-    docs = _t(spark, sf_dir, "documents")
-    train = docs.filter(F.pmod(F.col("doc_id"), F.lit(5)) != 0)
-    test = docs.filter(F.pmod(F.col("doc_id"), F.lit(5)) == 0)
-    return TX.ngram_containment(train, test)
-
-
-ORACLE_CONTAINMENT = f"""
-    WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
-    g AS (SELECT doc_id, {_GRAMS3} AS grams FROM t),
-    tr AS (SELECT DISTINCT unnest(list_distinct(grams)) AS gram FROM g
-           WHERE doc_id % 5 <> 0),
-    te AS (SELECT doc_id, unnest(list_distinct(grams)) AS gram FROM g
-           WHERE doc_id % 5 = 0),
-    m AS (SELECT doc_id, COUNT(*) AS mt FROM te
-          WHERE gram IN (SELECT gram FROM tr) GROUP BY doc_id),
-    tot AS (SELECT doc_id, COUNT(*) AS tt FROM te GROUP BY doc_id)
-    SELECT tot.doc_id,
-        (FLOOR((COALESCE(mt, 0) / CAST(tt AS DOUBLE)) * 1000000.0 + 0.5) / 1000000.0) AS containment
-    FROM tot LEFT JOIN m ON tot.doc_id = m.doc_id
-"""
-
-
-def q_unigram_logprob_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-statistics quality score: per document, the mean ln
-    probability of its tokens under the corpus unigram model (the
-    KenLM-style filter's simplest form — rare-token-heavy docs score
-    low). Each ln(c/T) term routes through DECIMAL(20,6) before the
-    per-doc sum, so the aggregation is order-independent AND a last-ulp
-    libm ln() difference cannot survive (1e-6 granularity vs ~1e-15
-    ulps). Scale shape: one token-cardinality aggregation for the
-    vocabulary, a frequency join (broadcastable vocab is the knob at
-    100 TB), one per-doc partial agg."""
-    docs = _t(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id",
-        F.explode(TX.tokens(TX.normalize_text(F.col("text")))).alias("tok"),
-    )
-    freq = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("cnt"))
-    total = toks.count()
-    term = F.log(F.col("cnt").cast("double") / F.lit(float(total))).cast(
-        "decimal(20,6)"
-    )
-    return (
-        toks.join(freq, "tok")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_toks"),
-            DET.det_round(
-                F.sum(term).cast("double") / F.count(F.lit(1)), 4
-            ).alias("avg_logprob"),
-        )
-    )
-
-
-ORACLE_UNIGRAM = f"""
-    WITH t AS (SELECT doc_id, unnest({_TOKS}) AS tok FROM documents),
-    freq AS (SELECT tok, COUNT(*) AS cnt FROM t GROUP BY tok),
-    tot AS (SELECT CAST(COUNT(*) AS DOUBLE) AS total FROM t)
-    SELECT t.doc_id, COUNT(*) AS n_toks,
-        (FLOOR((CAST(SUM(CAST(ln(freq.cnt / tot.total) AS DECIMAL(20,6)))
-                   AS DOUBLE) / COUNT(*)) * 10000.0 + 0.5) / 10000.0)
-            AS avg_logprob
-    FROM t JOIN freq ON t.tok = freq.tok CROSS JOIN tot
-    GROUP BY t.doc_id
-"""
-
-
-def q_weighted_sample_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic weighted sampling (Efraimidis-Spirakis A-ES): take
-    the 25 documents with the largest ln(u)/w priority, u from the md5
-    hash of the doc id (so the 'random' draw is reproducible on any
-    engine), w = n_chars — longer documents proportionally likelier.
-    Priorities are ROUNDED to 12dp with a doc_id tie-break so libm ln()
-    ulp differences cannot reorder the sample; the top-k is a
-    TakeOrdered, not a global sort."""
-    docs = _t(spark, sf_dir, "documents")
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat(F.col("doc_id").cast("string"), F.lit("#ws"))),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("long")
-    u = (h + 1).cast("double") / F.lit(float(2**60))
-    pri = DET.det_round(F.log(u) / F.col("n_chars"), 12)
-    return (
-        docs.select("doc_id", pri.alias("priority"))
-        .orderBy(F.desc("priority"), "doc_id")
-        .limit(25)
-    )
-
-
-ORACLE_WEIGHTED_SAMPLE = """
-    WITH t AS (SELECT doc_id,
-        (FLOOR((ln((CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR) || '#ws'),
-                       1, 15)) AS BIGINT) + 1) / POWER(2, 60))
-              / n_chars) * 1000000000000.0 + 0.5) / 1000000000000.0)
-            AS priority
-    FROM documents)
-    SELECT doc_id, priority FROM t
-    ORDER BY priority DESC, doc_id LIMIT 25
-"""
-
-
-def q_resample_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time-series resampling with forward fill: per user (id < 10),
-    'view' values resampled onto an hourly grid between the user's first
-    and last observation, gaps carrying the last observed value. Grid
-    generation is sequence+explode, the fill is last(ignorenulls) over a
-    per-user window — partitioned, so the fill never needs a global
-    sort and shards by user at any scale."""
-    from pyspark.sql import Window
-
-    ev = _t(spark, sf_dir, "events").filter(
-        (F.col("user_id") < 10) & (F.col("event_type") == "view")
-    )
-    obs = (
-        ev.select("user_id", F.date_trunc("hour", "ts").alias("h"), "value")
-        .groupBy("user_id", "h")
-        .agg(F.max("value").alias("v"))
-    )
-    grid = (
-        obs.groupBy("user_id")
-        .agg(F.min("h").alias("h0"), F.max("h").alias("h1"))
-        .select(
-            "user_id",
-            F.explode(
-                F.sequence("h0", "h1", F.expr("interval 1 hour"))
-            ).alias("h"),
-        )
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("h")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return grid.join(obs, ["user_id", "h"], "left").select(
-        "user_id",
-        "h",
-        F.last("v", ignorenulls=True).over(w).alias("value_ffill"),
-    )
-
-
-ORACLE_RESAMPLE = """
-    WITH ev AS (SELECT user_id, date_trunc('hour', ts) AS h, value
-                FROM events WHERE user_id < 10 AND event_type = 'view'),
-    obs AS (SELECT user_id, h, MAX(value) AS v FROM ev GROUP BY 1, 2),
-    bounds AS (SELECT user_id, MIN(h) AS h0, MAX(h) AS h1
-               FROM obs GROUP BY 1),
-    grid AS (SELECT user_id,
-                 unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS h
-             FROM bounds)
-    SELECT g.user_id, g.h,
-        last_value(o.v IGNORE NULLS) OVER (PARTITION BY g.user_id
-            ORDER BY g.h
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS value_ffill
-    FROM grid g LEFT JOIN obs o ON g.user_id = o.user_id AND g.h = o.h
-"""
-
-
-def q_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Document chunking for training: split each doc into 64-token
-    chunks with 8-token overlap (stride 56); per chunk emit its index
-    and token count. Pure map + explode — the chunk boundaries are
-    arithmetic over the token array, so the whole op fuses into the
-    scan and shards perfectly at any corpus size."""
-    docs = _t(spark, sf_dir, "documents")
-    toks = TX.tokens(TX.normalize_text(F.col("text")))
-    n = F.size(toks)
-    size, stride = 64, 56
-    n_chunks = F.greatest(
-        F.lit(1), F.ceil((n - F.lit(size)) / F.lit(stride)) + 1
-    ).cast("int")
-    chunks = F.transform(
-        F.sequence(F.lit(0), n_chunks - 1),
-        lambda i: F.least(n - i * stride, F.lit(size)),
-    )
-    return docs.select(
-        "doc_id", F.posexplode(chunks).alias("chunk_ix", "chunk_tokens")
-    )
-
-
-ORACLE_DOC_CHUNKS = f"""
-    WITH t AS (SELECT doc_id, len({_TOKS}) AS n FROM documents),
-    c AS (SELECT doc_id,
-              CAST(GREATEST(1, CEIL((n - 64) / 56.0) + 1) AS INT) AS nc, n
-          FROM t)
-    SELECT doc_id, CAST(i AS INT) AS chunk_ix,
-           CAST(LEAST(n - i * 56, 64) AS INT) AS chunk_tokens
-    FROM c, UNNEST(range(nc)) AS u(i)
-"""
-
-
-def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sequential context-window packing: documents are concatenated in
-    doc_id order and cut every 2048 tokens (the way LLM training packs
-    samples); each doc is assigned the pack its FIRST token lands in.
-    The global running sum uses the two-pass prefix-sum operator
-    (operators/packing.py) — range partition, per-partition subtotals,
-    broadcast offsets, PARTITIONED cumulative window — never the
-    single-task unpartitioned window Spark would otherwise plan."""
-    from kafka_firehose_nozzle_spark.operators.packing import pack_assignments
-
-    docs = _t(spark, sf_dir, "documents")
-    base = docs.select(
-        "doc_id", TX.token_count(F.col("text")).alias("n_toks")
-    )
-    assigned = pack_assignments(
-        base, order_col="doc_id", weight_col="n_toks", pack_size=2048
-    )
-    return assigned.groupBy("pack_id").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_toks").alias("n_tokens"),
-        F.min("doc_id").alias("first_doc"),
-        F.max("doc_id").alias("last_doc"),
-    )
-
-
-ORACLE_PACK_SEQUENCES = """
-    WITH t AS (SELECT doc_id,
-        len(list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> ''))
-            AS n_toks
-    FROM documents),
-    a AS (SELECT doc_id, n_toks,
-              CAST(FLOOR((SUM(n_toks) OVER (ORDER BY doc_id
-                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                          - n_toks) / 2048) AS BIGINT) AS pack_id
-          FROM t)
-    SELECT pack_id, COUNT(*) AS n_docs,
-           CAST(SUM(n_toks) AS BIGINT) AS n_tokens,
-           MIN(doc_id) AS first_doc, MAX(doc_id) AS last_doc
-    FROM a GROUP BY pack_id
-"""
-
-
-def q_edit_distance_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Character-level edit distance between each document and its
-    planted mutant (last word removed), on the first 80 normalized
-    chars: levenshtein + a length-normalized similarity. Exercises the
-    string-similarity function family (both engines implement the same
-    Wagner-Fischer levenshtein); the truncation bounds the O(len^2) DP
-    per row, which is the knob that keeps this scan-shaped at 100 TB."""
-    docs = _t(spark, sf_dir, "documents")
-    norm = F.substring(TX.normalize_text(F.col("text")), 1, 80)
-    mut = F.substring(
-        TX.normalize_text(
-            F.regexp_replace(F.col("text"), r"\s+\S+\s*$", "")
-        ),
-        1,
-        80,
-    )
-    d = F.levenshtein(norm, mut)
-    mx = F.greatest(F.length(norm), F.length(mut))
-    return docs.select(
-        "doc_id",
-        d.alias("edit_dist"),
-        DET.det_round(
-            F.when(mx == 0, F.lit(1.0)).otherwise(1.0 - d / mx), 6
-        ).alias("edit_sim"),
-    )
-
-
-_NORM80 = "substr(lower(trim(regexp_replace({src}, '\\s+', ' ', 'g'))), 1, 80)"
-_NORM80_A = _NORM80.format(src="text")
-_NORM80_B = _NORM80.format(src="regexp_replace(text, '\\s+\\S+\\s*$', '')")
-ORACLE_EDIT_DISTANCE = f"""
-    WITH t AS (SELECT doc_id,
-        {_NORM80_A} AS a,
-        {_NORM80_B} AS b
-    FROM documents)
-    SELECT doc_id, levenshtein(a, b) AS edit_dist,
-        (FLOOR((CASE WHEN GREATEST(LENGTH(a), LENGTH(b)) = 0 THEN 1.0
-              ELSE 1.0 - levenshtein(a, b)
-                   / CAST(GREATEST(LENGTH(a), LENGTH(b)) AS DOUBLE) END)
-            * 1000000.0 + 0.5) / 1000000.0)
-            AS edit_sim
-    FROM t
-"""
-
-
-def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental corpus ingestion dedup: an incoming batch (held-out
-    split) is admitted only if its content fingerprint (a) isn't already
-    in the existing corpus's fingerprint store and (b) is the first
-    occurrence within the batch (min doc_id wins). The store side is
-    fingerprints only — at 100 TB that's the compact state a pipeline
-    keeps between ingestion runs, and the admission check is an anti-join
-    against it, never a scan of stored documents."""
-    from pyspark.sql import Window
-
-    docs = _t(spark, sf_dir, "documents")
-    store = (
-        docs.filter(F.pmod(F.col("doc_id"), F.lit(5)) != 0)
-        .select(TX.fingerprint(F.col("text")).alias("fp"))
-        .distinct()
-    )
-    inc = docs.filter(F.pmod(F.col("doc_id"), F.lit(5)) == 0).select(
-        "doc_id", TX.fingerprint(F.col("text")).alias("fp")
-    )
-    w = Window.partitionBy("fp").orderBy("doc_id")
-    first = (
-        inc.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1)
-    )
-    return first.join(store, "fp", "left_anti").select("doc_id")
-
-
-_NORM_MD5 = "md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))))"
-ORACLE_INCREMENTAL_DEDUP = f"""
-    WITH store AS (SELECT DISTINCT {_NORM_MD5} AS fp FROM documents
-                   WHERE doc_id % 5 <> 0),
-    inc AS (SELECT doc_id, {_NORM_MD5} AS fp FROM documents
-            WHERE doc_id % 5 = 0),
-    first AS (SELECT doc_id, fp FROM (
-        SELECT doc_id, fp, ROW_NUMBER() OVER (PARTITION BY fp
-                                              ORDER BY doc_id) AS rn
-        FROM inc) r WHERE rn = 1)
-    SELECT doc_id FROM first WHERE fp NOT IN (SELECT fp FROM store)
-"""
-
-
-def q_bloom_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bloom-filter contamination audit on the same train/test split as
-    ngram_containment: per held-out doc, total 3-grams, Bloom maybe-hits
-    (m=65536, k=4), exact hits, and false positives. The filter is a
-    broadcast-sized position table regardless of train-corpus size —
-    the 100 TB replacement for the full-gram semi-join."""
-    docs = _t(spark, sf_dir, "documents")
-    train = docs.filter(F.pmod(F.col("doc_id"), F.lit(5)) != 0)
-    test = docs.filter(F.pmod(F.col("doc_id"), F.lit(5)) == 0)
-    return TX.bloom_contamination(train, test)
-
-
-_BLOOM_POS_EXPRS = ", ".join(
-    f"CAST(('0x' || substr(md5(gram || '#{101 + j}'), 1, 15)) AS BIGINT) % 65536"
-    for j in range(4)
-)
-ORACLE_BLOOM = f"""
-    WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
-    g AS (SELECT doc_id, list_distinct({_GRAMS3}) AS grams FROM t),
-    tr AS (SELECT DISTINCT unnest(grams) AS gram FROM g WHERE doc_id % 5 <> 0),
-    trpos AS (SELECT DISTINCT pos FROM
-        (SELECT unnest([{_BLOOM_POS_EXPRS}]) AS pos FROM tr)),
-    te AS (SELECT doc_id, unnest(grams) AS gram FROM g WHERE doc_id % 5 = 0),
-    tepos AS (SELECT doc_id, gram, unnest([{_BLOOM_POS_EXPRS}]) AS pos FROM te),
-    mb AS (SELECT doc_id, COUNT(*) AS n_maybe FROM (
-        SELECT doc_id, gram FROM tepos
-        WHERE pos IN (SELECT pos FROM trpos)
-        GROUP BY doc_id, gram HAVING COUNT(*) = 4) q GROUP BY doc_id),
-    ex AS (SELECT doc_id, COUNT(*) AS n_exact FROM te
-           WHERE gram IN (SELECT gram FROM tr) GROUP BY doc_id),
-    tot AS (SELECT doc_id, COUNT(*) AS n_grams FROM te GROUP BY doc_id)
-    SELECT tot.doc_id, tot.n_grams,
-        COALESCE(mb.n_maybe, 0) AS n_maybe,
-        COALESCE(ex.n_exact, 0) AS n_exact,
-        COALESCE(mb.n_maybe, 0) - COALESCE(ex.n_exact, 0) AS n_false_pos
-    FROM tot LEFT JOIN mb ON tot.doc_id = mb.doc_id
-             LEFT JOIN ex ON tot.doc_id = ex.doc_id
-"""
-
-
-def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic stratified sampling: 5 documents per language by md5
-    hash rank — reproducible on any engine at any parallelism."""
-    from kafka_firehose_nozzle_spark.operators.sampling import stratified_sample
-
-    docs = _t(spark, sf_dir, "documents")
-    return stratified_sample(docs, "lang", "doc_id", 5).select("lang", "doc_id")
-
-
-ORACLE_STRATIFIED = """
-    SELECT lang, doc_id FROM (
-        SELECT lang, doc_id,
-            ROW_NUMBER() OVER (PARTITION BY lang
-                               ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id)
-                AS rk
-        FROM documents) t
-    WHERE rk <= 5
-"""
-
-
-def q_hash_fraction_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic ~20% document sample: shuffle-free hash filter that
-    evaluates inside the scan stage."""
-    from kafka_firehose_nozzle_spark.operators.sampling import hash_fraction_sample
-
-    docs = _t(spark, sf_dir, "documents")
-    return hash_fraction_sample(docs, "doc_id", 20).select("doc_id", "lang")
-
-
-ORACLE_HASH_FRACTION = """
-    SELECT doc_id, lang FROM documents
-    WHERE ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))::BIGINT * 100
-          < 65536 * 20
-"""
-
-
-def q_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id",
-        TX.token_count(F.col("text")).alias("n_ws_tokens"),
-        TX.bpe_ish_token_count(F.col("text")).alias("n_bpe_ish"),
-    )
-
-
-ORACLE_TOKEN_COUNTS = """
-    WITH t AS (SELECT doc_id,
-        list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '') AS ws,
-        list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '') AS words
-    FROM documents)
-    SELECT doc_id, len(ws) AS n_ws_tokens,
-        CAST(list_sum(list_transform(words, w ->
-            CASE WHEN length(w) <= 4 THEN 1
-                 ELSE CAST(ceil(length(w) / 4.0) AS BIGINT) END)) AS INT)
-            AS n_bpe_ish
-    FROM t
-"""
-
-
-def q_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id", TX.quality_score(F.col("text")).alias("quality")
-    )
-
-
-ORACLE_QUALITY = """
-    WITH t AS (SELECT doc_id, text,
-        list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '') AS toks
-    FROM documents),
-    m AS (SELECT doc_id,
-        len(toks) AS n_tok,
-        len(list_filter(list_transform(toks, x -> lower(x)), x -> list_contains(
-            ['the','a','of','to','and','in','is','it','for','on'], x))) AS n_stop,
-        length(text) AS n_chars,
-        length(regexp_replace(text, '[^\\w\\s]', '', 'g')) AS n_nopunct,
-        list_sum(list_transform(toks, x -> length(x))) AS tok_chars
-    FROM t)
-    SELECT doc_id, (
-        (CASE WHEN n_tok >= 10 AND n_tok <= 100000 THEN 1.0 ELSE 0.0 END) +
-        (CASE WHEN n_tok > 0 AND CAST(n_stop AS DOUBLE) / n_tok >= 0.01 THEN 1.0 ELSE 0.0 END) +
-        (CASE WHEN n_chars = 0 OR CAST(n_chars - n_nopunct AS DOUBLE) / n_chars <= 0.2 THEN 1.0 ELSE 0.0 END) +
-        (CASE WHEN n_tok > 0 AND CAST(tok_chars AS DOUBLE) / n_tok >= 2
-                   AND CAST(tok_chars AS DOUBLE) / n_tok <= 12 THEN 1.0 ELSE 0.0 END)
-    ) / 4.0 AS quality
-    FROM m
-"""
-
-def q_train_val_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic hash-based train/val/test split report (80/10/10)
-    per language: the assignment every training pipeline needs to be
-    reproducible across runs, engines, and re-partitioning.  The split
-    key is an md5-derived 60-bit hash of doc_id mod 100 — a pure map, so
-    the split adds zero shuffles on top of the report's one partial
-    aggregation; at 100 TB the same expression is the partition filter
-    that materializes each split."""
-    docs = _t(spark, sf_dir, "documents")
-    h = F.pmod(
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(F.col("doc_id").cast("string"), F.lit("#split"))
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("long"),
-        F.lit(100),
-    )
-    split = (
-        F.when(h < 80, F.lit("train"))
-        .when(h < 90, F.lit("val"))
-        .otherwise(F.lit("test"))
-    )
-    return docs.groupBy("lang", split.alias("split")).agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_chars").alias("total_chars"),
-    )
-
-
-ORACLE_SPLIT = """
-    WITH t AS (SELECT lang, n_chars,
-        (CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR) || '#split'),
-               1, 15)) AS BIGINT) % 100) AS h
-    FROM documents)
-    SELECT lang,
-        CASE WHEN h < 80 THEN 'train' WHEN h < 90 THEN 'val'
-             ELSE 'test' END AS split,
-        COUNT(*) AS n_docs, CAST(SUM(n_chars) AS BIGINT) AS total_chars
-    FROM t GROUP BY 1, 2
-"""
-
-
-def q_quality_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cumulative quality-gate funnel: how many documents survive each
-    successive Gopher-style filter (length -> stopwords -> punctuation ->
-    word length).  The per-gate attrition report a corpus curation run
-    publishes before committing a filter config.  Pure map indicators +
-    one single-row aggregation — fuses into the scan at any scale."""
-    docs = _t(spark, sf_dir, "documents")
-    text = F.col("text")
-    n_tok = TX.token_count(text)
-    g1 = (n_tok >= 10) & (n_tok <= 100000)
-    g2 = g1 & (TX.stopword_ratio(text) >= 0.01)
-    g3 = g2 & (TX.punct_ratio(text) <= 0.2)
-    wl = TX.avg_word_len(text)
-    g4 = g3 & (wl >= 2) & (wl <= 12)
-    return docs.agg(
-        F.count(F.lit(1)).alias("n_total"),
-        F.sum(g1.cast("long")).alias("pass_length"),
-        F.sum(g2.cast("long")).alias("pass_stopword"),
-        F.sum(g3.cast("long")).alias("pass_punct"),
-        F.sum(g4.cast("long")).alias("pass_wordlen"),
-    )
-
-
-ORACLE_FUNNEL = """
-    WITH t AS (SELECT doc_id, text,
-        list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '') AS toks
-    FROM documents),
-    m AS (SELECT doc_id,
-        len(toks) AS n_tok,
-        len(list_filter(list_transform(toks, x -> lower(x)), x -> list_contains(
-            ['the','a','of','to','and','in','is','it','for','on'], x))) AS n_stop,
-        length(text) AS n_chars,
-        length(regexp_replace(text, '[^\\w\\s]', '', 'g')) AS n_nopunct,
-        list_sum(list_transform(toks, x -> length(x))) AS tok_chars
-    FROM t),
-    g AS (SELECT
-        (n_tok >= 10 AND n_tok <= 100000) AS g1,
-        (n_tok > 0 AND CAST(n_stop AS DOUBLE) / n_tok >= 0.01) AS s2,
-        (n_chars = 0 OR CAST(n_chars - n_nopunct AS DOUBLE) / n_chars <= 0.2) AS s3,
-        (n_tok > 0 AND CAST(tok_chars AS DOUBLE) / n_tok >= 2
-             AND CAST(tok_chars AS DOUBLE) / n_tok <= 12) AS s4
-    FROM m)
-    SELECT COUNT(*) AS n_total,
-        CAST(SUM(CASE WHEN g1 THEN 1 ELSE 0 END) AS BIGINT) AS pass_length,
-        CAST(SUM(CASE WHEN g1 AND s2 THEN 1 ELSE 0 END) AS BIGINT) AS pass_stopword,
-        CAST(SUM(CASE WHEN g1 AND s2 AND s3 THEN 1 ELSE 0 END) AS BIGINT) AS pass_punct,
-        CAST(SUM(CASE WHEN g1 AND s2 AND s3 AND s4 THEN 1 ELSE 0 END) AS BIGINT)
-            AS pass_wordlen
-    FROM g
-"""
-
-
-_BM25_TERMS = ["table", "spark", "query"]
-_BM25_K1, _BM25_B = 1.2, 0.75
-
-
-def q_bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BM25 relevance of every document against a fixed 3-term query —
-    the inverted-index scoring shape: explode to (doc, term) postings,
-    partial-agg tf at posting cardinality, df at term cardinality
-    (3 rows -> broadcast), corpus length stats via a broadcast single-row
-    crossJoin (never a driver-side collect on the data path).  Scores
-    use ln() so the emitted value is det-rounded; ranking is by the
-    rounded score with a doc_id tie-break (libm-safe)."""
-    docs = _t(spark, sf_dir, "documents")
-    n_docs = _parquet_nrows(f"{sf_dir}/documents.parquet")
-    toks = docs.select(
-        "doc_id",
-        F.explode(TX.tokens(TX.normalize_text(F.col("text")))).alias("term"),
-    )
-    # doc lengths + corpus mean length (exact integer sum / exact count)
-    dl = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
-    avgdl = dl.agg(
-        (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl")
-    )
-    tf = (
-        toks.filter(F.col("term").isin(_BM25_TERMS))
-        .groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    dfreq = tf.groupBy("term").agg(F.count_distinct("doc_id").alias("df"))
-    idf = F.log(
-        (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-        + 1.0
-    )
-    contrib = idf * (
-        F.col("tf")
-        * (_BM25_K1 + 1)
-        / (
-            F.col("tf")
-            + _BM25_K1
-            * (1 - _BM25_B + _BM25_B * F.col("dl") / F.col("avgdl"))
-        )
-    )
-    return (
-        tf.join(F.broadcast(dfreq), "term")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(avgdl))
-        .groupBy("doc_id")
-        .agg(
-            F.sum(DET.det_round(contrib, 8).cast("decimal(20,8)")).alias(
-                "_s"
-            ),
-            F.count(F.lit(1)).alias("n_terms_hit"),
-        )
-        .select(
-            "doc_id",
-            "n_terms_hit",
-            DET.det_round(F.col("_s").cast("double"), 6).alias("bm25"),
-        )
-    )
-
-
-# CTE chain shared with the RRF-fusion oracle (which ranks bm25_out)
-_BM25_CTES = f"""
-    t AS (SELECT doc_id, unnest({_TOKS}) AS term FROM documents),
-    dl AS (SELECT doc_id, COUNT(*) AS dl FROM t GROUP BY doc_id),
-    stats AS (SELECT CAST(SUM(dl) AS DOUBLE) / COUNT(*) AS avgdl FROM dl),
-    tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM t
-           WHERE term IN ('table', 'spark', 'query') GROUP BY 1, 2),
-    df AS (SELECT term, COUNT(DISTINCT doc_id) AS df FROM tf GROUP BY 1),
-    n AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n_docs FROM documents),
-    c AS (SELECT tf.doc_id,
-              (FLOOR((ln((n.n_docs - df.df + 0.5) / (df.df + 0.5) + 1.0)
-                  * (tf.tf * ({_BM25_K1} + 1)
-                     / (tf.tf + {_BM25_K1} * (1 - {_BM25_B} + {_BM25_B}
-                        * dl.dl / stats.avgdl))))
-                  * 100000000.0 + 0.5) / 100000000.0) AS contrib
-          FROM tf JOIN df USING (term) JOIN dl USING (doc_id)
-          CROSS JOIN stats CROSS JOIN n),
-    bm25_out AS (SELECT doc_id, COUNT(*) AS n_terms_hit,
-        (FLOOR(CAST(SUM(CAST(contrib AS DECIMAL(20,8))) AS DOUBLE)
-            * 1000000.0 + 0.5) / 1000000.0) AS bm25
-    FROM c GROUP BY doc_id)
-"""
-
-ORACLE_BM25 = (
-    "WITH " + _BM25_CTES + " SELECT doc_id, n_terms_hit, bm25 FROM bm25_out"
-)
-
-
-def q_char_trigram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-30 character trigrams of the normalized corpus — the input
-    statistic for byte/char-level tokenizer training.  Same staged
-    shifted-slice zip_with shape as the word-bigram query (the
-    per-position substring alternative rescans the string per call);
-    explode -> partial-agg -> TakeOrdered 30."""
-    docs = _t(spark, sf_dir, "documents")
-    chars = F.split(TX.normalize_text(F.col("text")), "")
-    m = F.size(F.col("_c")) - 2
-    tri = F.when(
-        m >= 1,
-        F.zip_with(
-            F.zip_with(
-                F.slice(F.col("_c"), 1, m),
-                F.slice(F.col("_c"), 2, m),
-                lambda a, b: F.concat(a, b),
-            ),
-            F.slice(F.col("_c"), 3, m),
-            lambda ab, c: F.concat(ab, c),
-        ),
-    ).otherwise(F.lit(None).cast("array<string>"))
-    return (
-        docs.select(chars.alias("_c"))
-        .select(F.explode_outer(tri).alias("trigram"))
-        .filter(F.col("trigram").isNotNull())
-        .groupBy("trigram")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.desc("n"), "trigram")
-        .limit(30)
-    )
-
-
-ORACLE_CHAR_TRIGRAMS = """
-    WITH t AS (SELECT lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))
-                   AS s FROM documents),
-    g AS (SELECT unnest(list_transform(range(length(s) - 2),
-                     i -> substr(s, i + 1, 3))) AS trigram
-          FROM t WHERE length(s) >= 3)
-    SELECT trigram, COUNT(*) AS n FROM g
-    GROUP BY trigram ORDER BY n DESC, trigram LIMIT 30
-"""
-
-
-def q_ewma_user_values(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user EWMA (alpha = 0.25) of purchase values in event-time
-    order — the sequential-state statistic that CANNOT be a window
-    cumulative sum without changing float semantics.  Expressed as a
-    deterministic LEFT FOLD over the per-user time-sorted value array:
-    collect_list + array_sort (one shuffle at user cardinality; group
-    arrays are session-scale) then F.aggregate, which both engines
-    replay with the identical operation order (DuckDB list_reduce).
-    Per-user event counts are bounded (sessions), so the collected
-    arrays stay small at any corpus scale."""
-    ev = _t(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
-    arr = F.array_sort(F.collect_list(F.struct("ts", "event_id", "value")))
-    vals = F.transform(arr, lambda x: x.getField("value"))
-    a = 0.25
-    ewma = F.aggregate(
-        F.expr("slice(_vals, 2, size(_vals) - 1)"),
-        F.element_at(F.col("_vals"), 1),
-        lambda acc, v: F.lit(a) * v + F.lit(1 - a) * acc,
-    )
-    return (
-        ev.groupBy("user_id")
-        .agg(vals.alias("_vals"))
-        .select(
-            "user_id",
-            F.size(F.col("_vals")).alias("n_purchases"),
-            DET.det_round(ewma, 6).alias("ewma_value"),
-        )
-    )
-
-
-ORACLE_EWMA = """
-    WITH a AS (SELECT user_id, list(value ORDER BY ts, event_id) AS vs
-               FROM events WHERE event_type = 'purchase' GROUP BY user_id)
-    SELECT user_id, len(vs) AS n_purchases,
-        (FLOOR(list_reduce(vs, (acc, v) -> 0.25 * v + 0.75 * acc)
-            * 1000000.0 + 0.5) / 1000000.0) AS ewma_value
-    FROM a
-"""
-
-
-_EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
-
-
-def q_pivot_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = _t(spark, sf_dir, "events")
-    pivoted = (
-        events.groupBy("user_id")
-        .pivot("event_type", _EVENT_TYPES)
-        .agg(F.count(F.lit(1)))
-    )
-    return pivoted.select(
-        "user_id",
-        *[
-            F.coalesce(F.col(t), F.lit(0)).alias(f"n_{t}")
-            for t in _EVENT_TYPES
-        ],
-    )
-
-
-ORACLE_PIVOT = "SELECT user_id, " + ", ".join(
-    f"COUNT(*) FILTER (WHERE event_type = '{t}') AS n_{t}" for t in _EVENT_TYPES
-) + " FROM events GROUP BY user_id"
-
-
-def q_asof_purchase_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """As-of join: each purchase event matched to the user's most recent
-    order at-or-before the event time (merge_asof per key via cogrouped
-    applyInPandas — operators/asof.py)."""
-    from kafka_firehose_nozzle_spark.operators.asof import asof_join
-
-    purchases = (
-        _t(spark, sf_dir, "events")
-        .filter(F.col("event_type") == "purchase")
-        .select("event_id", (F.col("user_id") + 1).alias("custkey"), "ts")
-    )
-    orders = _t(spark, sf_dir, "orders").select(
-        F.col("o_custkey").alias("custkey"),
-        F.col("o_orderdate").alias("ts"),
-        "o_orderkey",
-    )
-    joined = asof_join(
-        purchases, orders, on="ts", by="custkey", right_value_cols=["o_orderkey"]
-    )
-    return joined.select(
-        "event_id",
-        "custkey",
-        F.col("o_orderkey").alias("last_orderkey"),
-    )
-
-
-ORACLE_ASOF = """
-    WITH p AS (SELECT event_id, user_id + 1 AS custkey, ts FROM events
-               WHERE event_type = 'purchase'),
-    j AS (SELECT p.event_id, p.custkey, o.o_orderkey,
-            ROW_NUMBER() OVER (PARTITION BY p.event_id
-                ORDER BY o.o_orderdate DESC NULLS LAST,
-                         o.o_orderkey DESC NULLS LAST) AS rn
-          FROM p LEFT JOIN orders o
-            ON o.o_custkey = p.custkey AND o.o_orderdate <= p.ts)
-    SELECT event_id, custkey, o_orderkey AS last_orderkey FROM j WHERE rn = 1
-"""
-
-
-def q_asof_next_order(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Forward as-of join: each purchase event matched to the user's
-    earliest order at-or-after the event time (direction="forward")."""
-    from kafka_firehose_nozzle_spark.operators.asof import asof_join
-
-    purchases = (
-        _t(spark, sf_dir, "events")
-        .filter(F.col("event_type") == "purchase")
-        .select("event_id", (F.col("user_id") + 1).alias("custkey"), "ts")
-    )
-    orders = _t(spark, sf_dir, "orders").select(
-        F.col("o_custkey").alias("custkey"),
-        F.col("o_orderdate").alias("ts"),
-        "o_orderkey",
-    )
-    joined = asof_join(
-        purchases,
-        orders,
-        on="ts",
-        by="custkey",
-        right_value_cols=["o_orderkey"],
-        direction="forward",
-    )
-    return joined.select(
-        "event_id",
-        "custkey",
-        F.col("o_orderkey").alias("next_orderkey"),
-    )
-
-
-ORACLE_ASOF_FWD = """
-    WITH p AS (SELECT event_id, user_id + 1 AS custkey, ts FROM events
-               WHERE event_type = 'purchase'),
-    j AS (SELECT p.event_id, p.custkey, o.o_orderkey,
-            ROW_NUMBER() OVER (PARTITION BY p.event_id
-                ORDER BY o.o_orderdate ASC NULLS LAST,
-                         o.o_orderkey ASC NULLS LAST) AS rn
-          FROM p LEFT JOIN orders o
-            ON o.o_custkey = p.custkey AND o.o_orderdate >= p.ts)
-    SELECT event_id, custkey, o_orderkey AS next_orderkey FROM j WHERE rn = 1
-"""
-
-
-def q_asof_nearest_order(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Nearest-direction as-of join: each purchase event matched to the
-    user's closest order in absolute time, either side. Tie semantics
-    (pinned empirically against pandas and replicated in the oracle):
-    equidistant candidates prefer the backward row; duplicate timestamps
-    resolve to the last row in (ts, value)-sorted order backward, first
-    forward."""
-    from kafka_firehose_nozzle_spark.operators.asof import asof_join
-
-    purchases = (
-        _t(spark, sf_dir, "events")
-        .filter(F.col("event_type") == "purchase")
-        .select("event_id", (F.col("user_id") + 1).alias("custkey"), "ts")
-    )
-    orders = _t(spark, sf_dir, "orders").select(
-        F.col("o_custkey").alias("custkey"),
-        F.col("o_orderdate").alias("ts"),
-        "o_orderkey",
-    )
-    joined = asof_join(
-        purchases,
-        orders,
-        on="ts",
-        by="custkey",
-        right_value_cols=["o_orderkey"],
-        direction="nearest",
-    )
-    return joined.select(
-        "event_id",
-        "custkey",
-        F.col("o_orderkey").alias("nearest_orderkey"),
-    )
-
-
-ORACLE_ASOF_NEAREST = """
-    WITH p AS (SELECT event_id, user_id + 1 AS custkey, ts FROM events
-               WHERE event_type = 'purchase'),
-    j AS (SELECT p.event_id, p.custkey, o.o_orderkey,
-            ROW_NUMBER() OVER (PARTITION BY p.event_id
-                ORDER BY ABS(epoch_us(o.o_orderdate) - epoch_us(p.ts))
-                             ASC NULLS LAST,
-                         o.o_orderdate ASC NULLS LAST,
-                         CASE WHEN o.o_orderdate <= p.ts
-                              THEN -o.o_orderkey ELSE o.o_orderkey END
-                             ASC NULLS LAST) AS rn
-          FROM p LEFT JOIN orders o ON o.o_custkey = p.custkey)
-    SELECT event_id, custkey, o_orderkey AS nearest_orderkey
-    FROM j WHERE rn = 1
-"""
-
-
-def q_sliding_window_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sliding event-time windows (10 min width, 5 min slide): every event
-    lands in exactly two overlapping windows. The streaming path uses the
-    identical F.window operator with a watermark."""
-    events = _t(spark, sf_dir, "events")
-    return (
-        events.groupBy(F.window("ts", "10 minutes", "5 minutes"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.col("window.start").alias("w_start"),
-            F.col("window.end").alias("w_end"),
-            "n_events",
-        )
-    )
-
-
-# each event belongs to windows starting at its 5-min floor and the one
-# before it (width 10 = 2 slides); Spark aligns slides to the epoch, and
-# 5 minutes divides DuckDB's time_bucket origin offset exactly
-ORACLE_SLIDING = """
-    WITH w AS (
-        SELECT time_bucket(INTERVAL '5 minutes', ts) AS w_start FROM events
-        UNION ALL
-        SELECT time_bucket(INTERVAL '5 minutes', ts) - INTERVAL '5 minutes'
-        FROM events
-    )
-    SELECT w_start, w_start + INTERVAL '10 minutes' AS w_end,
-           COUNT(*) AS n_events
-    FROM w GROUP BY w_start
-"""
-
-
-def q_ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-style ANN: assign to 8 medoid cells, probe the 2 nearest."""
-    emb = _t(spark, sf_dir, "embeddings")
-    cents = S.medoid_centroids(emb, 8)
-    assigned = S.ivf_assign(emb, cents)
-    return S.ivf_topk(assigned, cents, S.query_vector(emb, 0), k=10, nprobe=2)
-
-
-def q_ivf_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trained-IVF ANN: spherical Lloyd's k-means centroids (10 cells,
-    zero-shuffle literal-centroid assignment + one partial-agg shuffle
-    per iteration), probe the 2 nearest cells.
-
-    Oracle-checked since r3: mod-C seeding + exact-decimal component
-    averages make training bit-reproducible in plain SQL, so the DuckDB
-    oracle replays all 4 Lloyd's iterations as unrolled CTEs
-    (ORACLE_IVF_TRAINED). Recall vs brute force is separately bounded in
-    tests/test_operators.py::test_kmeans_centroids_train_and_recall."""
-    emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    cents = S.kmeans_centroids(emb, 10, max_iter=4, init="mod")
-    assigned = S.ivf_assign(emb, cents)
-    return S.ivf_topk(assigned, cents, S.query_vector(emb, 0), k=10, nprobe=2)
-
-
-ORACLE_IVF = f"""
-    WITH e AS (SELECT vec_id,
-                      list_transform(embedding, y -> CAST(y AS DOUBLE)) AS v
-               FROM embeddings),
-    c AS (SELECT vec_id AS cell_id, v AS centroid FROM e WHERE vec_id < 8),
-    assign AS (SELECT vec_id, cell_id FROM (
-        SELECT e.vec_id, c.cell_id,
-               ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                   ORDER BY {_sim_sql('e.v', 'c.centroid')} DESC, c.cell_id) AS rn
-        FROM e CROSS JOIN c) ranked WHERE rn = 1),
-    q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-    probes AS (SELECT cell_id FROM c CROSS JOIN q
-               ORDER BY {_sim_sql('centroid', 'qv')} DESC, cell_id LIMIT 2),
-    cand AS (SELECT e.vec_id, e.v FROM e
-             JOIN assign ON e.vec_id = assign.vec_id
-             WHERE assign.cell_id IN (SELECT cell_id FROM probes)
-               AND e.vec_id <> 0)
-    SELECT vec_id, (FLOOR(({_sim_sql('v', 'qv')}) * 10000.0 + 0.5)
-                    / 10000.0) AS cos_sim
-    FROM cand CROSS JOIN q
-    ORDER BY {_sim_sql('v', 'qv')} DESC, vec_id LIMIT 10
-"""
-
-
-def _ivf_trained_oracle(num_cells: int = 10, max_iter: int = 4) -> str:
-    """Unrolled-CTE DuckDB replay of kmeans_centroids(init='mod') + IVF
-    search. Lloyd's with a FIXED iteration count needs no recursion: each
-    iteration is (normalize -> assign -> decimal-avg update -> empty-cell
-    fallback), chained as four CTE blocks. Bit-equality with Spark holds
-    because every float-order-sensitive reduction is either an exact
-    decimal sum (component averages) or the same left-fold dot product
-    both engines use (list_sum / F.aggregate); convergence early-exit on
-    the Spark side is a fixed point, so extra unrolled iterations are
-    no-ops."""
-
-    def dot(a: str, b: str) -> str:
-        return (
-            f"list_sum(list_transform(range(len({a})), "
-            f"i -> {a}[i + 1] * {b}[i + 1]))"
-        )
-
-    # decimal sum -> VARCHAR -> DOUBLE: mirrors _component_avg — DuckDB's
-    # int128->double cast double-rounds above 2^53, string parsing is
-    # correctly rounded in both engines.
-    davg = (
-        "CAST(CAST(SUM(CAST(val AS DECIMAL(20,12))) AS VARCHAR(64))"
-        " AS DOUBLE) / COUNT(*)"
-    )
-    ctes = [
-        "e AS (SELECT vec_id, list_transform(embedding, y -> CAST(y AS "
-        "DOUBLE)) AS v FROM embeddings)",
-        "ex AS (SELECT vec_id, unnest(range(len(v))) AS pos, unnest(v) AS "
-        "val FROM e)",
-        f"c0 AS (SELECT cell_id, list(c ORDER BY pos) AS centroid FROM ("
-        f"SELECT vec_id % {num_cells} AS cell_id, pos, {davg} AS c "
-        f"FROM ex GROUP BY 1, 2) g GROUP BY cell_id)",
-    ]
-    prev = "c0"
-    for i in range(1, max_iter + 1):
-        norm = "sqrt(list_sum(list_transform(centroid, y -> y * y)))"
-        ctes.append(
-            f"u{i} AS (SELECT cell_id, list_transform(centroid, x -> x / "
-            f"(CASE WHEN {norm} = 0 THEN 1.0 ELSE {norm} END)) AS uc "
-            f"FROM {prev})"
-        )
-        ctes.append(
-            f"a{i} AS (SELECT vec_id, cell_id FROM ("
-            f"SELECT e.vec_id, u.cell_id, ROW_NUMBER() OVER ("
-            f"PARTITION BY e.vec_id ORDER BY {dot('e.v', 'u.uc')} DESC, "
-            f"u.cell_id) AS rn FROM e CROSS JOIN u{i} u) r WHERE rn = 1)"
-        )
-        ctes.append(
-            f"n{i} AS (SELECT a.cell_id, ex.pos, {davg} AS c "
-            f"FROM ex JOIN a{i} a USING (vec_id) GROUP BY 1, 2)"
-        )
-        ctes.append(
-            f"c{i} AS (SELECT p.cell_id, COALESCE(g.centroid, p.centroid) "
-            f"AS centroid FROM {prev} p LEFT JOIN ("
-            f"SELECT cell_id, list(c ORDER BY pos) AS centroid FROM n{i} "
-            f"GROUP BY cell_id) g USING (cell_id))"
-        )
-        prev = f"c{i}"
-    ctes += [
-        f"assign AS (SELECT vec_id, cell_id FROM ("
-        f"SELECT e.vec_id, c.cell_id, ROW_NUMBER() OVER ("
-        f"PARTITION BY e.vec_id ORDER BY "
-        f"{_sim_sql('e.v', 'c.centroid')} DESC, c.cell_id) AS rn "
-        f"FROM e CROSS JOIN {prev} c) r WHERE rn = 1)",
-        "q AS (SELECT v AS qv FROM e WHERE vec_id = 0)",
-        f"probes AS (SELECT cell_id FROM {prev} CROSS JOIN q "
-        f"ORDER BY {_sim_sql('centroid', 'qv')} DESC, cell_id LIMIT 2)",
-        "cand AS (SELECT e.vec_id, e.v FROM e "
-        "JOIN assign ON e.vec_id = assign.vec_id "
-        "WHERE assign.cell_id IN (SELECT cell_id FROM probes) "
-        "AND e.vec_id <> 0)",
-    ]
-    return (
-        "WITH " + ",\n    ".join(ctes) + f"""
-    SELECT vec_id, (FLOOR(({_sim_sql('v', 'qv')}) * 10000.0 + 0.5)
-                    / 10000.0) AS cos_sim
-    FROM cand CROSS JOIN q
-    ORDER BY {_sim_sql('v', 'qv')} DESC, vec_id LIMIT 10
-"""
-    )
-
-
-ORACLE_IVF_TRAINED = _ivf_trained_oracle(10, 4)
-
-
-def q_pq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product-quantization ANN: 64-dim float vectors compressed to 4
-    one-byte codes (4 subspaces x 16 centroids), searched by asymmetric
-    distance — the query's LUT rides into the plan as literals, scoring
-    is 4 lookups + 4 adds per row with NO join and NO shuffle, and at
-    100 TB the scan reads the codes column only (16x less IO than raw
-    embeddings).  Codebook training is the deterministic mod-group
-    decimal average (S.pq_codebook), so the DuckDB oracle replays the
-    entire train -> encode -> ADC pipeline (ORACLE_PQ_ANN)."""
-    emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    cb = S.pq_codebook(emb, num_sub=4, num_codes=16, dim=64)
-    codes = S.pq_encode(emb, cb, num_sub=4, num_codes=16, dim=64)
-    qrow = emb.filter(F.col("vec_id") == 0).head()
-    return S.pq_topk(
-        codes,
-        cb,
-        [float(x) for x in qrow["embedding"]],
-        k=10,
-        num_sub=4,
-        num_codes=16,
-        exclude_id=0,
-    )
-
-
-def _pq_oracle(num_sub: int = 4, num_codes: int = 16, dim: int = 64) -> str:
-    """DuckDB replay of pq_codebook + pq_encode + pq_topk.  Same
-    determinism ledger as the IVF-trained oracle: component averages are
-    decimal sums through VARCHAR, every distance is the identical
-    (x-y)*(x-y) left fold, argmin ties break to the lowest code, and the
-    final 4-term ADC sum is an ordered list_sum."""
-    subdim = dim // num_sub
-
-    def sqd(a: str, b: str) -> str:
-        return (
-            f"list_sum(list_transform(range(len({a})), i -> "
-            f"({a}[i + 1] - {b}[i + 1]) * ({a}[i + 1] - {b}[i + 1])))"
-        )
-
-    davg = (
-        "CAST(CAST(SUM(CAST(val AS DECIMAL(20,12))) AS VARCHAR(64))"
-        " AS DOUBLE) / COUNT(*)"
-    )
-    return f"""
-    WITH e AS (SELECT vec_id,
-                      list_transform(embedding, y -> CAST(y AS DOUBLE)) AS v
-               FROM embeddings),
-    comp AS (SELECT vec_id % {num_codes} AS code,
-                    CAST(p // {subdim} AS INT) AS sub, p % {subdim} AS pos, val
-             FROM (SELECT vec_id, unnest(range(len(v))) AS p,
-                          unnest(v) AS val FROM e)),
-    cb AS (SELECT sub, code, list(c ORDER BY pos) AS centroid FROM (
-               SELECT sub, code, pos, {davg} AS c
-               FROM comp GROUP BY sub, code, pos) g
-           GROUP BY sub, code),
-    sub AS (SELECT e.vec_id, ms.s,
-                   list_slice(e.v, ms.s * {subdim} + 1,
-                              ms.s * {subdim} + {subdim}) AS sv
-            FROM e CROSS JOIN (SELECT unnest(range({num_sub})) AS s) ms),
-    codes AS (SELECT vec_id, s, code FROM (
-                  SELECT sub.vec_id, sub.s, cb.code,
-                         ROW_NUMBER() OVER (PARTITION BY sub.vec_id, sub.s
-                             ORDER BY {sqd('sub.sv', 'cb.centroid')} ASC,
-                                      cb.code) AS rn
-                  FROM sub JOIN cb ON sub.s = cb.sub) r WHERE rn = 1),
-    lut AS (SELECT cb.sub AS s, cb.code,
-                   {sqd('q.sv', 'cb.centroid')} AS d
-            FROM cb JOIN (SELECT * FROM sub WHERE vec_id = 0) q
-              ON cb.sub = q.s),
-    score AS (SELECT c.vec_id, list_sum(list(lut.d ORDER BY c.s)) AS dist
-              FROM codes c JOIN lut ON c.s = lut.s AND c.code = lut.code
-              GROUP BY c.vec_id)
-    SELECT vec_id, {DET.det_round_sql('dist', 6)} AS pq_dist
-    FROM score WHERE vec_id <> 0
-    ORDER BY dist ASC, vec_id LIMIT 10
-"""
-
-
-ORACLE_PQ_ANN = _pq_oracle(4, 16, 64)
-
-
-def q_embedding_centroid_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """L2 norm of the per-label mean embedding (array aggregation)."""
-    emb = _t(spark, sf_dir, "embeddings")
-    comp = (
-        emb.select(
-            "label",
-            F.posexplode(F.col("embedding").cast("array<double>")).alias(
-                "pos", "v"
-            ),
-        )
-        .groupBy("label", "pos")
-        .agg(
-            (
-                F.sum(F.col("v").cast("decimal(20,12)")).cast("double")
-                / F.count(F.lit(1))
-            ).alias("c")
-        )
-    )
-    return (
-        comp.groupBy("label")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "c"))).alias("pc"))
-        .select(
-            "label",
-            DET.det_round(
-                F.sqrt(
-                    F.aggregate(
-                        F.transform(
-                            F.col("pc"), lambda x: x.getField("c") * x.getField("c")
-                        ),
-                        F.lit(0.0),
-                        lambda acc, v: acc + v,
-                    )
-                ),
-                4,
-            ).alias("centroid_norm"),
-        )
-    )
-
-
-ORACLE_CENTROID_NORMS = """
-    WITH e AS (SELECT label, list_transform(embedding, y -> CAST(y AS DOUBLE)) AS v
-               FROM embeddings),
-    comp AS (SELECT label, i AS pos,
-        CAST(SUM(CAST(v[i + 1] AS DECIMAL(20,12))) AS DOUBLE) / COUNT(*) AS c
-        FROM e CROSS JOIN range(64) t(i) GROUP BY label, i),
-    agg AS (SELECT label, list(c * c ORDER BY pos) AS cs FROM comp GROUP BY label)
-    SELECT label, (FLOOR(sqrt(list_sum(cs)) * 10000.0 + 0.5) / 10000.0)
-        AS centroid_norm FROM agg
-"""
-
-
-def q_frame_sample_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Metadata-only frame-sampling plan (every 500 duration units):
-    planning reads typed metadata only — the payload binary never
-    enters the scan (ReadSchema plan-guarded)."""
-    from kafka_firehose_nozzle_spark.operators.multimodal import (
-        documents_as_media,
-        frame_sample_plan,
-    )
-
-    media = documents_as_media(_t(spark, sf_dir, "documents"))
-    return frame_sample_plan(media, every_ms=500)
-
-
-ORACLE_FRAME_PLAN = """
-    WITH m AS (SELECT doc_id AS media_id, n_chars AS duration_ms
-               FROM documents WHERE n_chars IS NOT NULL),
-    c AS (SELECT media_id,
-              CAST(GREATEST(1, CEIL(duration_ms / 500.0)) AS INT) AS n
-          FROM m)
-    SELECT media_id, CAST(i AS INT) AS frame_ix,
-           CAST(i * 500 AS INT) AS ts_ms
-    FROM c, UNNEST(range(n)) AS u(i)
-"""
-
-
-def q_media_batch_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal plumbing: documents as opaque binary media. Features
-    that built-ins can express (length, md5) stay JVM-side — no Python
-    evaluator in this plan; the Arrow-batched mapInPandas path
-    (media_features) remains the seam for real codec work and keeps its
-    own unit test."""
-    from kafka_firehose_nozzle_spark.operators.multimodal import (
-        documents_as_media,
-        media_features_builtin,
-    )
-
-    media = documents_as_media(_t(spark, sf_dir, "documents"))
-    return media_features_builtin(media)
-
-
-ORACLE_MEDIA = """
-    SELECT doc_id AS media_id,
-           CAST(octet_length(encode(text)) AS INT) AS n_bytes,
-           md5(text) AS content_hash
-    FROM documents
-"""
-
-
-def q_media_decoded_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL image-header decode (the round-5 stub closed): spec-correct
-    PNG/JPEG/GIF payload bytes are built per doc (doc_id % 3 picks the
-    format) and the dependency-free parser recovers format + dims from
-    the BYTES — fixed big-endian offsets for PNG, a JPEG marker walk
-    past APP0+DQT to SOF0, little-endian GIF logical screen.  The
-    oracle states the dims arithmetically, so a parser that misreads
-    any offset, endianness, or marker hash-mismatches.  Scale shape:
-    one Arrow-batched mapInPandas over the payload column, zero
-    shuffle; real corpora read the same bytes from parquet."""
-    from kafka_firehose_nozzle_spark.operators.multimodal import (
-        decode_image_headers,
-        synthetic_image_payloads,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    return decode_image_headers(synthetic_image_payloads(docs)).orderBy(
-        "media_id"
-    )
-
-
-ORACLE_MEDIA_DIMS = """
-    SELECT doc_id AS media_id,
-           CASE doc_id % 3 WHEN 0 THEN 'png'
-                           WHEN 1 THEN 'jpeg'
-                           ELSE 'gif' END AS format,
-           CAST(64 + doc_id % 1857 AS INT) AS width,
-           CAST(64 + (doc_id * 7) % 1017 AS INT) AS height
-    FROM documents ORDER BY media_id
-"""
-
-
-def q_media_av_durations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A/V container header decode, the audio/video twin of
-    media_decoded_dims: spec-correct WAV (RIFF chunk walk, little-
-    endian) and MP4 (ISO BMFF box walk into moov/mvhd, big-endian)
-    payloads built per doc, parsed back to sample_rate/channels/
-    duration_ms by the dependency-free parser; the oracle states the
-    same values arithmetically, so any offset/endianness/box-walk
-    mistake hash-mismatches.  duration_ms is exact integer math
-    (ticks * 1000 div timescale; data_bytes * 1000 div byte_rate) on
-    both sides.  One mapInPandas pass, zero shuffle."""
-    from kafka_firehose_nozzle_spark.operators.multimodal import (
-        decode_av_headers,
-        synthetic_av_payloads,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    return decode_av_headers(synthetic_av_payloads(docs)).orderBy(
-        "media_id"
-    )
-
-
-ORACLE_MEDIA_AV = """
-    SELECT doc_id AS media_id,
-        CASE WHEN doc_id % 2 = 0 THEN 'wav' ELSE 'mp4' END AS container,
-        CASE WHEN doc_id % 2 = 0
-             THEN CAST(8000 + 4000 * (doc_id % 8) AS INT) END AS sample_rate,
-        CASE WHEN doc_id % 2 = 0 THEN CAST(1 AS INT) END AS channels,
-        CASE WHEN doc_id % 2 = 0
-             THEN (4 * (1 + doc_id % 997) * 1000)
-                  // ((8000 + 4000 * (doc_id % 8)) * 2)
-             ELSE ((31 * doc_id) % 100000) * 1000
-                  // (1000 + doc_id % 9000)
-        END AS duration_ms
-    FROM documents ORDER BY media_id
-"""
-
-
-def q_av_frame_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Decode -> plan composition: REAL MP4 container durations (box
-    walk, not stand-in metadata) feed frame_sample_plan's work-list
-    grid — the full metadata path a video ingest runs before ffmpeg
-    touches a byte.  Planning never reads the payload after the decode
-    stage; one frame per second, t=0 always included."""
-    from kafka_firehose_nozzle_spark.operators.multimodal import (
-        decode_av_headers,
-        frame_sample_plan,
-        synthetic_av_payloads,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    av = decode_av_headers(synthetic_av_payloads(docs)).filter(
-        F.col("container") == "mp4"
-    )
-    media = av.select(
-        "media_id",
-        F.lit(None).cast("binary").alias("payload"),
-        F.struct(
-            F.lit(None).cast("int").alias("width"),
-            F.lit(None).cast("int").alias("height"),
-            F.col("duration_ms").cast("int").alias("duration_ms"),
-            F.lit("mp4").alias("codec"),
-        ).alias("meta"),
-    )
-    return frame_sample_plan(media, every_ms=1000)
-
-
-ORACLE_AV_FRAME_PLAN = """
-    WITH mp4 AS (SELECT doc_id AS media_id,
-            ((31 * doc_id) % 100000) * 1000
-                // (1000 + doc_id % 9000) AS dur
-          FROM documents WHERE doc_id % 2 = 1),
-    n AS (SELECT media_id,
-            greatest(1, CAST(ceil(dur / 1000.0) AS INT)) AS nf
-          FROM mp4)
-    SELECT media_id, CAST(u.i AS INT) AS frame_ix,
-           CAST(u.i * 1000 AS INT) AS ts_ms
-    FROM n, unnest(range(nf)) AS u(i)
-"""
-
-
-def q_frame_extract_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL video frame extraction (the last stub closed, VERDICT r6
-    item 3): spec-correct uncompressed-DIB AVI payloads are built per
-    doc (RIFF/hdrl/avih/strl/strf + movi '00db' frames, bottom-up rows
-    padded to 4 bytes) and ``sample_frames`` walks the container back —
-    RIFF chunk walk, DIB row unpadding + flip, fps-grid sampling
-    (every k-th frame, k = 1s // frame interval) — emitting a
-    position-weighted exact-integer pixel hash per sampled frame.  The
-    oracle restates frame grid and hash arithmetically from the fixture
-    closed form, so a misread stride, flip, offset, or sampling stride
-    hash-mismatches.  New mechanism exercised: video-container frame
-    walk + frame-body byte decode (registry-budget note, COVERAGE.md).
-    Scale shape: one Arrow-batched mapInPandas, zero shuffle; frame
-    bytes never leave the worker."""
-    from kafka_firehose_nozzle_spark.operators.multimodal import (
-        sample_frames,
-        synthetic_avi_payloads,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    return sample_frames(
-        synthetic_avi_payloads(docs), every_ms=1000
-    ).orderBy("media_id", "frame_idx")
-
-
-ORACLE_FRAME_EXTRACT = """
-    WITH params AS (
-      SELECT doc_id AS media_id,
-             17 + doc_id % 7 AS w,
-             11 + doc_id % 5 AS h,
-             3 + doc_id % 10 AS n_frames,
-             250000 * (1 + doc_id % 4) AS uspf
-      FROM documents
-    ), sampled AS (
-      SELECT media_id, w, h, uspf,
-             CAST(UNNEST(range(0, n_frames,
-                               GREATEST(1, 1000000 // uspf))) AS INT)
-                 AS frame_idx
-      FROM params
-    )
-    SELECT media_id,
-           frame_idx,
-           CAST(frame_idx * uspf // 1000 AS BIGINT) AS t_ms,
-           CAST(w AS INT) AS width,
-           CAST(h AS INT) AS height,
-           CAST(list_sum(list_transform(range(0, w * h),
-                p -> (p + 1) * ((media_id * 31 + frame_idx * 97 + p * 7)
-                                % 256))) AS BIGINT) AS pixel_hash
-    FROM sampled
-    ORDER BY media_id, frame_idx
-"""
-
-
-def q_session_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark-native session windows (F.session_window, the same operator the
-    streaming path uses with a watermark) in batch mode; the oracle derives
-    identical sessions via lag + cumulative sum."""
-    events = _t(spark, sf_dir, "events")
-    return (
-        events.groupBy("user_id", F.session_window("ts", "30 minutes"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            "user_id",
-            F.col("session_window.start").alias("session_start"),
-            F.col("session_window.end").alias("session_end"),
-            "n_events",
-        )
-    )
-
-
-ORACLE_SESSION_WINDOW = """
-    WITH d AS (
-        SELECT user_id, ts,
-            CASE WHEN ts - LAG(ts) OVER (PARTITION BY user_id
-                                         ORDER BY ts, event_id)
-                      > INTERVAL 30 MINUTE
-                 THEN 1 ELSE 0 END AS brk
-        FROM events
-    ), s AS (
-        SELECT user_id, ts,
-            SUM(brk) OVER (PARTITION BY user_id ORDER BY ts
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-            AS sess_ix
-        FROM d
-    )
-    SELECT user_id, MIN(ts) AS session_start,
-           MAX(ts) + INTERVAL 30 MINUTE AS session_end,
-           COUNT(*) AS n_events
-    FROM s GROUP BY user_id, sess_ix
-"""
-
-
-# --------------------------------------------------------------------------
-# Wave 3: sonde-JSON round-trip source, JSON props extraction, corpus
-# bigrams, lang-ID confusion, per-source profiling, listagg
-# --------------------------------------------------------------------------
-
-
-def q_roundtrip_route_topics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S2 encoder + its inverse as a source: events -> envelopes -> sonde
-    JSON -> parse back -> route. Proves sonde-JSON files/topics are a
-    lossless replayable envelope source; per-topic counts must equal
-    route_topics exactly.
-
-    The ``localCheckpoint`` models the materialization boundary that exists
-    in reality between the two halves (the Kafka topic / JSON file): the
-    decoder's ~40 field references each inline the paired
-    from_json(to_json(<full envelope struct>)) if encode and decode share
-    one lineage, and Catalyst's per-field-access json-schema pruning
-    (OptimizeJsonExprs) then optimizes each copy separately — 200+ s of
-    pure plan-optimization time at ANY data size. The barrier keeps both
-    halves' plans small; encode runs once.
-
-    Storage level is GATED on the estimated corpus size
-    (session.checkpoint_storage_level): the checkpoint holds the FULL
-    encoded corpus (~30 GB of JSON strings at sf100 — ~20x the events
-    parquet), and deserialized on-heap block building across all
-    executor threads starves execution memory ("Unable to acquire ...
-    got 0", reproduced solo at sf100), so past ~25% of heap it goes
-    DISK_ONLY — the same lesson as pagerank's edge list; a real
-    deployment would land the topic/file on storage, which is exactly
-    what serialized disk blocks model. Below the cliff the
-    MEMORY_AND_DISK default skips the serialize/decode pass that the r9
-    unconditional DISK_ONLY paid everywhere (~4% of the sf0.1 bench for
-    zero benefit — the r10 drift adjudication, SCALE.md)."""
-    from kafka_firehose_nozzle_spark.functions.sonde_json import sonde_json
-    from kafka_firehose_nozzle_spark.session import (
-        checkpoint_storage_level,
-        input_bytes,
-    )
-
-    env = _envelopes(spark, sf_dir)
-    level = checkpoint_storage_level(
-        spark,
-        input_bytes(spark, f"{sf_dir}/events.parquet"),
-        expansion=20.0,  # snappy parquet -> raw sonde-JSON strings
-    )
-    # The PURE encode plan (select of the ~300-node sonde_json tree) is
-    # memoized — 0.32 s of py4j construction per bench pass (r11 wave 2);
-    # the localCheckpoint wrapper below stays per-call, so every pass
-    # still encodes the corpus from parquet and materializes its own
-    # checkpoint (nothing computed is ever reused across calls).
-    ekey = (spark.sparkContext.applicationId, sf_dir, "_rt_encoded")
-    encoded_plan = _PLAN_MEMO.get(ekey)
-    if encoded_plan is None:
-        encoded_plan = env.select(sonde_json(env).alias("value"))
-        _memo_put(_PLAN_MEMO, ekey, encoded_plan)
-    encoded = encoded_plan.localCheckpoint(eager=False, storageLevel=level)
-    # r11: the count-only tail routes DIRECTLY from the parsed wire
-    # struct (route_topic_from_wire) instead of materializing all 14
-    # envelope columns first — same dispatch, same decode transforms on
-    # the fields routing touches, but OptimizeJsonExprs can then prune
-    # the parse to those leaves (1.36 s vs 2.00 s for this half at
-    # sf0.1, results identical; equivalence pinned in test_routing.py).
-    # Forwarding pipelines keep envelopes_from_json_with_value.
-    from kafka_firehose_nozzle_spark.functions.routing import (
-        route_topic_from_wire,
-    )
-    from kafka_firehose_nozzle_spark.functions.sonde_json import (
-        _decode_read_schema,
-    )
-
-    # The decode-tail COLUMNS are unresolved expressions over field
-    # names ("value", "_raw"), so they are reusable against any parent —
-    # memoizing them saves ~0.2 s of py4j construction per pass (the
-    # route dispatch + uuid-hex branch is dozens of JVM round trips).
-    # They attach to THIS pass's fresh checkpoint below.
-    ckey = (spark.sparkContext.applicationId, "_rt_decode_cols")
-    cols = _RT_COL_MEMO.get(ckey)
-    if cols is None:
-        cols = (
-            F.from_json(F.col("value"), _decode_read_schema()).alias("_raw"),
-            route_topic_from_wire(F.col("_raw"), ROUTE_TOPICS).alias("topic"),
-        )
-        _memo_put(_RT_COL_MEMO, ckey, cols)
-    parse_col, topic_col = cols
-    return (
-        encoded.select(parse_col)
-        .select(topic_col)
-        .filter(F.col("topic").isNotNull())
-        .groupBy("topic")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
-def q_props_json_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JSON extraction (from_json) over the events ``props`` column:
-    per-event-type stats of the embedded ``k`` value."""
-    events = _t(spark, sf_dir, "events")
-    k = F.from_json(F.col("props"), "k BIGINT").getField("k")
-    g = (
-        events.select("event_type", k.alias("k"))
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("k").alias("sum_k"),
-            F.min("k").alias("min_k"),
-            F.max("k").alias("max_k"),
-        )
-    )
-    # The 6dp average is produced entirely in BIGINT half-up arithmetic —
-    # no ROUND on DOUBLE anywhere (ROUND(double, 6) differs across DuckDB
-    # builds and kept this query driver-red for three rounds).  With
-    # s, n >= 0:  avg_micro = (s div n)*1e6 + ((s%n)*2e6 + n) div (2n)
-    # is exact half-up rounding of s/n to 6dp; the remainder form keeps
-    # every intermediate < 2^54 even at 1e10+ rows (r < n, r*2e6 bounded).
-    # int64 -> double is exact below 2^53 and one IEEE division by 1e6 is
-    # bit-deterministic on every engine.
-    avg_micro = _avg_micro_expr("sum_k", "n")
-    return g.select(
-        "event_type",
-        "n",
-        "sum_k",
-        (avg_micro.cast("double") / F.lit(1000000.0)).alias("avg_k"),
-        "min_k",
-        "max_k",
-    )
-
-
-ORACLE_PROPS_JSON = """
-    WITH t AS (SELECT event_type,
-                      CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
-               FROM events),
-    g AS (SELECT event_type, COUNT(*) AS n, SUM(k) AS sum_k,
-                 MIN(k) AS min_k, MAX(k) AS max_k
-          FROM t GROUP BY event_type)
-    SELECT event_type, n, CAST(sum_k AS BIGINT) AS sum_k,
-        CAST((sum_k // n) * 1000000
-             + ((sum_k % n) * 2000000 + n) // (2 * n) AS DOUBLE)
-            / 1000000.0 AS avg_k,
-        min_k, max_k
-    FROM g
-"""
-
-
-@_pure_plan
-def q_q18_big_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q18 style, single-aggregation formulation (r11 optimization,
-    guide §2.4: remove shuffles outright).
-
-    The shared-SQL ``IN (SELECT l_orderkey ... HAVING SUM(qty) > 180)``
-    form planned as TWO full lineitem aggregations: Catalyst rewrites the
-    IN-subquery to a LeftSemi join and pushes it down BOTH sides of the
-    orders=lineitem join, duplicating the agg subtree (measured: 24
-    Exchange nodes, 3.1 s at sf0.1). But the outer GROUP BY
-    (c_name, c_custkey, o_orderkey, o_orderdate) is keyed by the order
-    primary key — each group IS one order, and its SUM(l_quantity) is
-    exactly the per-order sum the subquery already computes. So compute
-    the per-order sum ONCE, filter > 180, and join the surviving (tiny)
-    order keys to orders + customer; lineitem is scanned and aggregated
-    a single time and never re-shuffled. Equivalence holds because
-    o_orderkey functionally determines (o_orderdate, o_custkey) ->
-    (c_name, c_custkey); pinned by the unchanged ORACLE_Q18 (the
-    original query text) across sf0.001/0.01/0.1 strict hash checks.
-
-    At 100 TB this halves the dominant cost (two full scans + two
-    shuffles of the fact table -> one of each) and turns the final join
-    into broadcast-size work: orders past the >180 filter are a
-    vanishing fraction of lineitem."""
-    _register_views(spark, sf_dir)
-    return spark.sql(
-        """
-        WITH big AS (
-            SELECT l_orderkey,
-                   SUM(CAST(l_quantity AS DECIMAL(12,4))) AS qty
-            FROM lineitem
-            GROUP BY l_orderkey
-            HAVING SUM(CAST(l_quantity AS DECIMAL(12,4))) > 180
-        )
-        SELECT c_name, c_custkey, o_orderkey, o_orderdate,
-            CAST(CAST(CAST(qty AS DECIMAL(30,6)) AS VARCHAR(64)) AS DOUBLE)
-                AS total_qty
-        FROM big
-        JOIN orders ON o_orderkey = l_orderkey
-        JOIN customer ON c_custkey = o_custkey
-        """
-    )
-
-
-# the original shared string, unchanged, as the DuckDB replay
-ORACLE_Q18 = """
-    SELECT c_name, c_custkey, o_orderkey, o_orderdate,
-        CAST(CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(12,4)))
-             AS DECIMAL(30,6)) AS VARCHAR(64)) AS DOUBLE) AS total_qty
-    FROM customer
-    JOIN orders ON c_custkey = o_custkey
-    JOIN lineitem ON o_orderkey = l_orderkey
-    WHERE o_orderkey IN (
-        SELECT l_orderkey FROM lineitem
-        GROUP BY l_orderkey
-        HAVING SUM(CAST(l_quantity AS DECIMAL(12,4))) > 180
-    )
-    GROUP BY c_name, c_custkey, o_orderkey, o_orderdate
-"""
-
-
-def q_range_frame_peers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bounded-value-range window count, expressed scale-first.
-
-    Semantics: for each order, how many orders have o_totalprice within
-    [p - 100, p] — i.e. ``COUNT(*) OVER (ORDER BY o_totalprice RANGE
-    BETWEEN 100 PRECEDING AND CURRENT ROW)``.  An unpartitioned RANGE
-    window moves every row to ONE task (Spark warns exactly that), so
-    here the frame is a **bucketed equi-join**: bucket width = the range
-    width (100), the probe side joins its own bucket only, and the build
-    side emits each row into its bucket and the one above — every
-    qualifying pair lands in exactly one (probe-bucket, build-emission)
-    slot, then an exact range filter trims the corners.  Shuffles by
-    bucket (uniformly distributed), never a global sort; the oracle runs
-    the textbook window SQL and the hash compare proves equivalence."""
-    orders = _t(spark, sf_dir, "orders").filter(
-        F.col("o_orderdate") >= F.lit("2001-06-01 00:00:00").cast("timestamp")
-    )
-    bucket = F.floor(F.col("o_totalprice") / 100).cast("long")
-    probe = orders.select(
-        "o_orderkey", "o_totalprice", bucket.alias("_b")
-    )
-    build = orders.select(
-        F.col("o_totalprice").alias("_bp"),
-        F.explode(F.array(bucket, bucket + 1)).alias("_b"),
-    )
-    return (
-        probe.join(build, "_b")
-        .filter(
-            (F.col("_bp") >= F.col("o_totalprice") - 100)
-            & (F.col("_bp") <= F.col("o_totalprice"))
-        )
-        .groupBy("o_orderkey", "o_totalprice")
-        .agg(F.count(F.lit(1)).alias("n_similar_cheaper"))
-    )
-
-
-ORACLE_RANGE_FRAME = """
-    SELECT o_orderkey, o_totalprice,
-        COUNT(*) OVER (ORDER BY o_totalprice
-                       RANGE BETWEEN 100 PRECEDING AND CURRENT ROW)
-            AS n_similar_cheaper
-    FROM orders
-    WHERE o_orderdate >= TIMESTAMP '2001-06-01 00:00:00'
-"""
-
-
-@_pure_plan
-def q_bigram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-wide top-20 word bigrams. explode -> partial-aggregated
-    count -> TakeOrdered 20 (no global sort); at 100 TB the map-side
-    combine keeps the shuffle at distinct-bigram, not token, cardinality.
-
-    Round-4 rewrite (VERDICT r3 item 7, the 3.1x sf1 grower): the old
-    positions-transform called ``F.slice(toks, i+1, 2)`` INSIDE the
-    lambda, and interpreted HOFs re-evaluate their array argument per
-    call — the same O(tokens^2) trap the MinHash shingle path hit in r3.
-    Now the token array is staged through its own projection
-    (CollapseProject keeps multiply-referenced non-cheap expressions
-    staged) and pairs come from zip_with over two shifted slices, which
-    evaluates each slice once per ROW.  explode_outer avoids the
-    generator's implicit ``size(arr) > 0`` pushdown filter that would
-    substitute the whole zip_with chain below the scan (SCALE.md
-    round-1 finding); short docs surface as one NULL row filtered right
-    after the generator."""
-    docs = _t(spark, sf_dir, "documents")
-    toks = TX.tokens(TX.normalize_text(F.col("text")))
-    m = F.size(F.col("toks")) - 1
-    bigrams = F.when(
-        m >= 1,
-        F.zip_with(
-            F.slice(F.col("toks"), 1, m),
-            F.slice(F.col("toks"), 2, m),
-            lambda a, b: F.concat(a, F.lit(" "), b),
-        ),
-    ).otherwise(F.lit(None).cast("array<string>"))
-    return (
-        docs.select(toks.alias("toks"))
-        .select(F.explode_outer(bigrams).alias("bigram"))
-        .filter(F.col("bigram").isNotNull())
-        .groupBy("bigram")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.desc("n"), "bigram")
-        .limit(20)
-    )
-
-
-ORACLE_BIGRAM_TOPK = f"""
-    WITH t AS (SELECT {_TOKS} AS toks FROM documents),
-    b AS (SELECT unnest(list_transform(range(len(toks) - 1), i ->
-               array_to_string(list_slice(toks, i + 1, i + 2), ' '))) AS bigram
-          FROM t WHERE len(toks) >= 2)
-    SELECT bigram, COUNT(*) AS n FROM b
-    GROUP BY bigram ORDER BY n DESC, bigram LIMIT 20
-"""
-
-
-def q_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Language-ID confusion matrix: ground-truth ``lang`` column vs the
-    n-gram-heuristic prediction."""
-    docs = _t(spark, sf_dir, "documents")
-    return (
-        docs.select("lang", TX.lang_id(F.col("text")).alias("lang_pred"))
-        .groupBy("lang", "lang_pred")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
-ORACLE_LANG_CONFUSION = f"""
-    WITH t AS (SELECT lang, list_slice({_TOKS}, 1, 64) AS toks FROM documents),
-    h AS (SELECT lang,
-        len(list_filter(toks, x -> list_contains(['the','and','of','is','to'], x))) AS en,
-        len(list_filter(toks, x -> list_contains(['der','die','das','und','ist'], x))) AS de,
-        len(list_filter(toks, x -> list_contains(['le','la','les','et','est'], x))) AS fr,
-        len(list_filter(toks, x -> list_contains(['el','los','las','y','es'], x))) AS es
-    FROM t)
-    SELECT lang, CASE
-        WHEN de > en AND de >= fr AND de >= es THEN 'de'
-        WHEN fr > en AND fr >= es THEN 'fr'
-        WHEN es > en THEN 'es'
-        ELSE 'en' END AS lang_pred, COUNT(*) AS n
-    FROM h GROUP BY 1, 2
-"""
-
-
-def q_source_doc_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source corpus profile: doc count, distinct languages, exact
-    decimal-summed avg length, total whitespace tokens."""
-    docs = _t(spark, sf_dir, "documents")
-    g = (
-        docs.select(
-            "source",
-            "lang",
-            "n_chars",
-            TX.token_count(F.col("text")).alias("n_toks"),
-        )
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.count_distinct(F.col("lang")).alias("n_langs"),
-            F.sum("n_chars").alias("sum_chars"),
-            F.sum("n_toks").alias("total_tokens"),
-        )
-    )
-    # BIGINT half-up micro-units average — see q_props_json_stats for the
-    # determinism argument (no ROUND on DOUBLE anywhere in the pipeline).
-    avg_micro = _avg_micro_expr("sum_chars", "n_docs")
-    return g.select(
-        "source",
-        "n_docs",
-        "n_langs",
-        (avg_micro.cast("double") / F.lit(1000000.0)).alias("avg_chars"),
-        "total_tokens",
-    )
-
-
-ORACLE_SOURCE_PROFILE = """
-    WITH t AS (SELECT source, lang, n_chars,
-        len(list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> ''))
-            AS n_toks
-    FROM documents),
-    g AS (SELECT source, COUNT(*) AS n_docs, COUNT(DISTINCT lang) AS n_langs,
-                 SUM(n_chars) AS sum_chars, SUM(n_toks) AS total_tokens
-          FROM t GROUP BY source)
-    SELECT source, n_docs, n_langs,
-        CAST((sum_chars // n_docs) * 1000000
-             + ((sum_chars % n_docs) * 2000000 + n_docs) // (2 * n_docs)
-             AS DOUBLE)
-            / 1000000.0 AS avg_chars,
-        CAST(total_tokens AS BIGINT) AS total_tokens
-    FROM g
-"""
-
-
-def q_segment_listagg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordered string aggregation: per nation, the sorted distinct market
-    segments joined with ','. collect_set + array_sort + array_join is the
-    deterministic Spark form (listagg without a within-group sort is not)."""
-    cust = _t(spark, sf_dir, "customer")
-    return cust.groupBy("c_nationkey").agg(
-        F.array_join(
-            F.array_sort(F.collect_set("c_mktsegment")), ","
-        ).alias("segments"),
-        F.count(F.lit(1)).alias("n_customers"),
-    )
-
-
-ORACLE_SEGMENT_LISTAGG = """
-    SELECT c_nationkey,
-        string_agg(DISTINCT c_mktsegment, ',' ORDER BY c_mktsegment) AS segments,
-        COUNT(*) AS n_customers
-    FROM customer GROUP BY c_nationkey
-"""
-
-
-def q_unpivot_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Wide-to-long unpivot (stack): customer numeric columns to
-    (metric, value) rows — the inverse of pivot_event_counts."""
-    cust = _t(spark, sf_dir, "customer")
-    return cust.select(
-        "c_custkey",
-        F.expr(
-            "stack(2, 'acctbal', CAST(c_acctbal AS DOUBLE),"
-            " 'nationkey', CAST(c_nationkey AS DOUBLE))"
-        ).alias("metric", "value"),
-    )
-
-
-ORACLE_UNPIVOT = """
-    SELECT c_custkey, 'acctbal' AS metric, CAST(c_acctbal AS DOUBLE) AS value
-    FROM customer
-    UNION ALL
-    SELECT c_custkey, 'nationkey' AS metric, CAST(c_nationkey AS DOUBLE)
-    FROM customer
-"""
-
-
-def q_embedding_hof_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Higher-order array functions over the embedding column: left-fold
-    sum of squares (AGGREGATE), reversed-self dot product (ZIP_WITH +
-    AGGREGATE), max component. Left folds produce the identical IEEE
-    result in both engines (same add order)."""
-    emb = _t(spark, sf_dir, "embeddings")
-    x2 = F.aggregate(
-        F.col("embedding"),
-        F.lit(0.0).cast("double"),
-        lambda acc, x: acc + x.cast("double") * x.cast("double"),
-    )
-    rev_dot = F.aggregate(
-        F.zip_with(
-            F.col("embedding"),
-            F.reverse(F.col("embedding")),
-            lambda a, b: a.cast("double") * b.cast("double"),
-        ),
-        F.lit(0.0).cast("double"),
-        lambda acc, x: acc + x,
-    )
-    return emb.select(
-        "vec_id",
-        x2.alias("sq_norm"),
-        rev_dot.alias("rev_dot"),
-        F.array_max("embedding").cast("double").alias("max_component"),
-        F.size("embedding").alias("n_dims"),
-    )
-
-
-ORACLE_EMB_HOF = """
-    SELECT vec_id,
-        list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-            list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))),
-            (acc, x) -> acc + x) AS sq_norm,
-        list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-            list_transform(range(len(embedding)), i ->
-                CAST(embedding[i + 1] AS DOUBLE)
-                * CAST(embedding[len(embedding) - i] AS DOUBLE))),
-            (acc, x) -> acc + x) AS rev_dot,
-        CAST(list_max(embedding) AS DOUBLE) AS max_component,
-        len(embedding) AS n_dims
-    FROM embeddings
-"""
-
-
-def q_percentile_quantities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact percentiles of l_quantity per return flag. Spark's exact
-    ``percentile`` and DuckDB's ``quantile_cont`` share the same linear
-    interpolation; quantity values are small integers so the interpolated
-    doubles are bit-identical."""
-    li = _t(spark, sf_dir, "lineitem")
-    return li.groupBy("l_returnflag").agg(
-        F.expr("percentile(l_quantity, 0.25)").alias("q25"),
-        F.expr("percentile(l_quantity, 0.5)").alias("q50"),
-        F.expr("percentile(l_quantity, 0.75)").alias("q75"),
-        F.expr("percentile(l_quantity, 0.9)").alias("q90"),
-    )
-
-
-ORACLE_PERCENTILES = """
-    SELECT l_returnflag,
-        quantile_cont(l_quantity, 0.25) AS q25,
-        quantile_cont(l_quantity, 0.5) AS q50,
-        quantile_cont(l_quantity, 0.75) AS q75,
-        quantile_cont(l_quantity, 0.9) AS q90
-    FROM lineitem GROUP BY l_returnflag
-"""
-
-
-def q_order_linenumber_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Array construction/inspection per order: sorted collect_list of
-    line numbers rendered as a string (hash-safe), plus size and
-    membership predicates."""
-    li = _t(spark, sf_dir, "lineitem")
-    lns = F.sort_array(F.collect_list("l_linenumber"))
-    return li.groupBy("l_orderkey").agg(
-        F.concat_ws(",", lns).alias("linenumbers"),
-        F.size(lns).alias("n_lines"),
-        F.array_contains(lns, 4).alias("has_line4"),
-        F.element_at(lns, 1).alias("first_line"),
-        F.element_at(lns, -1).alias("last_line"),
-    )
-
-
-ORACLE_LINENUMBER_SETS = """
-    WITH g AS (SELECT l_orderkey, list_sort(array_agg(l_linenumber)) AS lns
-               FROM lineitem GROUP BY l_orderkey)
-    SELECT l_orderkey,
-        array_to_string(lns, ',') AS linenumbers,
-        len(lns) AS n_lines,
-        list_contains(lns, 4) AS has_line4,
-        lns[1] AS first_line,
-        lns[-1] AS last_line
-    FROM g
-"""
-
-
-def q_token_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Positional explode (posexplode / unnest-with-index): first 5
-    normalized tokens of each document with their position."""
-    docs = _t(spark, sf_dir, "documents")
-    toks = F.slice(TX.tokens(TX.normalize_text(F.col("text"))), 1, 5)
-    return docs.select(
-        "doc_id", F.posexplode(toks).alias("pos", "token")
-    )
-
-
-ORACLE_TOKEN_POSITIONS = f"""
-    WITH t AS (SELECT doc_id, list_slice({_TOKS}, 1, 5) AS toks
-               FROM documents)
-    SELECT doc_id, u.i AS pos, toks[u.i + 1] AS token
-    FROM t, unnest(range(len(toks))) AS u(i)
-"""
-
-
-def q_rare_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-rare terms: tokens appearing in at most 1/5th of documents,
-    ranked by total occurrences. Integer-only outputs (hash-safe); the
-    shuffle is at distinct-term cardinality after partial aggregation."""
-    docs = _t(spark, sf_dir, "documents")
-    toks = TX.tokens(TX.normalize_text(F.col("text")))
-    # scale-relative rarity threshold (docs/5) via a broadcast scalar —
-    # no driver-side action, works at any corpus size
-    thr = docs.agg((F.count(F.lit(1)) / 5).alias("_thr"))
-    return (
-        docs.select("doc_id", F.explode(toks).alias("term"))
-        .groupBy("term")
-        .agg(
-            F.count(F.lit(1)).alias("tf"),
-            F.countDistinct("doc_id").alias("df"),
-        )
-        .join(F.broadcast(thr))
-        .filter(F.col("df") <= F.col("_thr"))
-        .drop("_thr")
-        .orderBy(F.desc("tf"), "term")
-        .limit(25)
-    )
-
-
-ORACLE_RARE_TERMS = f"""
-    WITH t AS (SELECT doc_id, unnest({_TOKS}) AS term FROM documents),
-    g AS (SELECT term, COUNT(*) AS tf, COUNT(DISTINCT doc_id) AS df
-          FROM t GROUP BY term)
-    SELECT term, tf, df FROM g WHERE df <= (SELECT COUNT(*) / 5 FROM documents)
-    ORDER BY tf DESC, term LIMIT 25
-"""
-
-
-# --------------------------------------------------------------------------
-# Wave 3 (round 3): deterministic sketches, TF-IDF, embedding quantization
-# --------------------------------------------------------------------------
-
-
-def q_kmv_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """KMV (k-minimum-values) distinct-count sketch over event user_ids:
-    keep the k=64 smallest 60-bit md5 hashes; estimate D ~ (k-1) * 2^60
-    / h_(k). The hash is the same md5 route the dedup operators use, so
-    the sketch is bit-deterministic and the DuckDB oracle replays it
-    exactly — unlike HLL, whose register layout is engine-private.
-
-    Scale shape: the k-smallest select is a TakeOrdered (per-partition
-    top-k then a k-row driver merge), so the full corpus is never
-    globally sorted; the distinct dedups at hash cardinality with
-    map-side combine. At 100 TB you would fold the k-smallest into an
-    aggregator per partition; the estimate math is identical."""
-    ev = _t(spark, sf_dir, "events")
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat(F.col("user_id").cast("string"), F.lit("#kmv"))),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("long")
-    kmin = ev.select(h.alias("h")).distinct().orderBy("h").limit(64)
-    return kmin.agg(
-        F.count(F.lit(1)).alias("k"),
-        F.max("h").alias("kth_hash"),
-        # (k-1) from the actual row count, not a hardcoded 63 — at a
-        # corpus with fewer than k distinct users the estimate degrades
-        # gracefully toward the exact count
-        DET.det_round(
-            (F.count(F.lit(1)) - 1).cast("double")
-            * F.lit(float(2**60))
-            / F.max("h"),
-            4,
-        ).alias("est_distinct"),
-    )
-
-
-ORACLE_KMV = """
-    WITH h AS (SELECT DISTINCT CAST(('0x' || substr(md5(CAST(user_id AS
-                   VARCHAR) || '#kmv'), 1, 15)) AS BIGINT) AS h
-               FROM events),
-    k AS (SELECT h FROM h ORDER BY h LIMIT 64)
-    SELECT COUNT(*) AS k, MAX(h) AS kth_hash,
-           (FLOOR((CAST(COUNT(*) - 1 AS DOUBLE) * POWER(2, 60) / MAX(h))
-                  * 10000.0 + 0.5) / 10000.0)
-               AS est_distinct
-    FROM k
-"""
-
-
-def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document top-3 terms by TF-IDF (tf * ln(N/df)).
-
-    Plan shape: one explode -> (doc, term) partial-agg for tf, a second
-    partial-agg for df at term cardinality, an equi-join tf x df, and a
-    per-doc top-3 window. Ranking uses the ROUNDED score (6dp) with a
-    term tie-break so a last-ulp ln() difference between engine libms
-    can't reorder near-equal terms."""
-    from pyspark.sql import Window
-
-    docs = _t(spark, sf_dir, "documents")
-    n_docs = docs.count()
-    terms = docs.select(
-        "doc_id",
-        F.explode(TX.tokens(TX.normalize_text(F.col("text")))).alias("term"),
-    )
-    tf = terms.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
-    dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    scored = tf.join(dfreq, "term").withColumn(
-        "score",
-        DET.det_round(
-            F.col("tf") * F.log(F.lit(float(n_docs)) / F.col("df")), 6
-        ),
-    )
-    w = Window.partitionBy("doc_id").orderBy(F.desc("score"), "term")
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 3)
-        .select("doc_id", "term", "tf", "df", "score", "rk")
-    )
-
-
-ORACLE_TFIDF = f"""
-    WITH t AS (SELECT doc_id, unnest({_TOKS}) AS term FROM documents),
-    tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM t GROUP BY 1, 2),
-    df AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY 1),
-    sc AS (SELECT tf.doc_id, tf.term, tf.tf, df.df,
-               (FLOOR((tf.tf * ln(CAST((SELECT COUNT(*) FROM documents)
-                                     AS DOUBLE) / df.df))
-                      * 1000000.0 + 0.5) / 1000000.0) AS score
-           FROM tf JOIN df USING (term)),
-    r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY doc_id
-                        ORDER BY score DESC, term) AS rk FROM sc)
-    SELECT doc_id, term, tf, df, score, rk FROM r WHERE rk <= 3
-"""
-
-
-def q_minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash-ESTIMATED Jaccard vs exact Jaccard on the planted pairs
-    (doc vs doc-minus-last-word): estimate = fraction of agreeing
-    signature components. Demonstrates the sketch's accuracy contract
-    the way a pipeline would validate it before trusting banded LSH.
-
-    Join-free: both signatures and both shingle sets are computed in ONE
-    projection over documents (the planted pair shares the row), so the
-    whole query is a pure map — no shuffle at any corpus size."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    mut = F.regexp_replace(F.col("text"), r"\s+\S+\s*$", "")
-    staged = (
-        docs.withColumn("_ha", D.token_hash_shingles(F.col("text")))
-        .withColumn("_hb", D.token_hash_shingles(mut))
-        .withColumn("_sa", D.minhash_from_hashed(F.col("_ha"), 8))
-        .withColumn("_sb", D.minhash_from_hashed(F.col("_hb"), 8))
-    )
-    sh_a = D.word_shingles(F.col("text"))
-    sh_b = D.word_shingles(mut)
-    agree = F.size(
-        F.filter(
-            F.zip_with(F.col("_sa"), F.col("_sb"), lambda x, y: x == y),
-            lambda z: z,
-        )
-    )
-    exact = F.size(F.array_intersect(sh_a, sh_b)) / F.size(
-        F.array_union(sh_a, sh_b)
-    )
-    return staged.select(
-        "doc_id",
-        DET.det_round(agree / F.lit(8.0), 6).alias("est_jaccard"),
-        DET.det_round(exact, 6).alias("exact_jaccard"),
-    )
-
-
-_ORACLE_SIGB = ", ".join(
-    f"{_minhash_lane_sql('hsh_b', i)} AS mb{i}" for i in range(8)
-)
-_ORACLE_JACC_AGREE = " + ".join(
-    f"CASE WHEN m{i} = mb{i} THEN 1 ELSE 0 END" for i in range(8)
-)
-_TOKS_MUT = _TOKS.replace("text", "regexp_replace(text, '\\s+\\S+\\s*$', '')")
-_TH_B = _TH.replace("toks", "toks_b")
-_HSH_B = _HSH.replace("th", "th_b")
-# signatures ride the token-hash shingles (hsh/hsh_b); the EXACT jaccard
-# stays on string shingles — that's its definition
-ORACLE_MINHASH_EST = f"""
-    WITH t AS (SELECT doc_id, {_TOKS} AS toks,
-                   {_TOKS_MUT} AS toks_b
-               FROM documents),
-    sh AS (SELECT doc_id,
-        list_distinct(CASE WHEN len(toks) >= 3 THEN
-            list_transform(range(len(toks) - 2), i ->
-                array_to_string(list_slice(toks, i + 1, i + 3), ' '))
-        ELSE [array_to_string(toks, ' ')] END) AS shingles,
-        list_distinct(CASE WHEN len(toks_b) >= 3 THEN
-            list_transform(range(len(toks_b) - 2), i ->
-                array_to_string(list_slice(toks_b, i + 1, i + 3), ' '))
-        ELSE [array_to_string(toks_b, ' ')] END) AS shingles_b
-    FROM t),
-    h AS (SELECT doc_id, {_TH} AS th, {_TH_B} AS th_b FROM t),
-    hs AS (SELECT doc_id, {_HSH} AS hsh, {_HSH_B} AS hsh_b FROM h),
-    sig AS (SELECT hs.doc_id, {_ORACLE_SIG8}, {_ORACLE_SIGB},
-                sh.shingles, sh.shingles_b
-            FROM hs JOIN sh ON hs.doc_id = sh.doc_id)
-    SELECT doc_id,
-        (FLOOR((({_ORACLE_JACC_AGREE}) / 8.0) * 1000000.0 + 0.5)
-            / 1000000.0) AS est_jaccard,
-        (FLOOR((CAST(len(list_intersect(shingles, shingles_b)) AS DOUBLE)
-              / len(list_distinct(list_concat(shingles, shingles_b))))
-            * 1000000.0 + 0.5) / 1000000.0)
-            AS exact_jaccard
-    FROM sig
-"""
-
-
-def q_embedding_quantization_error(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Int8 scalar quantization (per-vector max-abs scale) reconstruction
-    error, aggregated per label — the compression-accuracy profile a
-    pipeline checks before storing quantized vectors. Pure-map quantize/
-    reconstruct (higher-order functions, zero shuffle), one partial-agg
-    shuffle at label cardinality; the per-label mean goes through an
-    exact decimal sum like every other cross-engine average."""
-    emb = _t(spark, sf_dir, "embeddings")
-    v = F.col("embedding").cast("array<double>")
-    scale = F.array_max(F.transform(v, lambda x: F.abs(x)))
-    recon = F.transform(
-        v, lambda x: F.floor(x / scale * 127 + F.lit(0.5)) * scale / 127
-    )
-    err = F.aggregate(
-        F.zip_with(v, recon, lambda a, b: F.abs(a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    ) / F.size(v)
-    return (
-        emb.select("label", err.alias("err"))
-        .groupBy("label")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            DET.det_round(
-                F.sum(F.col("err").cast("decimal(20,12)")).cast("double")
-                / F.count(F.lit(1)),
-                8,
-            ).alias("avg_err"),
-            DET.det_round(F.max("err"), 8).alias("max_err"),
-        )
-    )
-
-
-ORACLE_QUANT = """
-    WITH e AS (SELECT label,
-                   list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-               FROM embeddings),
-    q AS (SELECT label,
-              list_max(list_transform(v, x -> abs(x))) AS s, v FROM e),
-    r AS (SELECT label,
-              list_sum(list_transform(range(len(v)), i ->
-                  abs(v[i + 1] - (FLOOR(v[i + 1] / s * 127 + 0.5)) * s / 127)))
-                  / len(v) AS err
-          FROM q)
-    SELECT label, COUNT(*) AS n,
-        (FLOOR((CAST(SUM(CAST(err AS DECIMAL(20,12))) AS DOUBLE)
-                / COUNT(*)) * 100000000.0 + 0.5) / 100000000.0) AS avg_err,
-        (FLOOR(MAX(err) * 100000000.0 + 0.5) / 100000000.0) AS max_err
-    FROM r GROUP BY label
-"""
-
-
-# --------------------------------------------------------------------------
-# Wave 4 (round 4): PQ-ANN, data layout (Z-order), SCD2 history, corpus
-# curation (domain caps), integer PageRank
-# --------------------------------------------------------------------------
-
-
-def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Z-order (Morton) clustering report over orders: minmax-scale
-    (o_custkey, o_orderdate-as-days) to 10 bits each, interleave to a
-    20-bit curve key, bucket by the top 6 bits, and emit each z-bucket's
-    row count and per-dimension min/max spans.  Narrow spans in BOTH
-    columns are the point: sorted by this key, parquet row-group stats
-    prune scans for filters on EITHER dimension (single-column sort only
-    prunes one).  The key is a flat BIGINT shift/mask OR-chain — pure
-    codegen projection, bounds from one broadcast 1-row aggregate; the
-    layout write itself is exercised in
-    tests/test_operators.py::test_zorder_write_narrows_file_stats."""
-    o = _t(spark, sf_dir, "orders").select(
-        F.col("o_custkey").alias("c"),
-        F.datediff(F.col("o_orderdate"), F.lit("1992-01-01")).alias("d"),
-    )
-    bounds = o.agg(
-        F.min("c").alias("c_lo"),
-        F.max("c").alias("c_hi"),
-        F.min("d").alias("d_lo"),
-        F.max("d").alias("d_hi"),
-    )
-    zkey = LAY.scaled_zorder2(
-        F.col("c"), F.col("c_lo"), F.col("c_hi"),
-        F.col("d"), F.col("d_lo"), F.col("d_hi"),
-        bits=10,
-    )
-    return (
-        o.crossJoin(F.broadcast(bounds))
-        .select("c", "d", F.shiftright(zkey, 14).alias("zbucket"))
-        .groupBy("zbucket")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.min("c").alias("c_min"),
-            F.max("c").alias("c_max"),
-            F.min("d").alias("d_min"),
-            F.max("d").alias("d_max"),
-        )
-    )
-
-
-def _zorder_oracle() -> str:
-    scale_c = ("((c - c_lo) * 1023) // (CASE WHEN c_hi - c_lo > 1 "
-               "THEN c_hi - c_lo ELSE 1 END)")
-    scale_d = ("((d - d_lo) * 1023) // (CASE WHEN d_hi - d_lo > 1 "
-               "THEN d_hi - d_lo ELSE 1 END)")
-    zk = LAY.zorder_key2_sql(f"({scale_c})", f"({scale_d})", bits=10)
-    return f"""
-    WITH o AS (SELECT o_custkey AS c,
-                      datediff('day', DATE '1992-01-01', o_orderdate) AS d
-               FROM orders),
-    b AS (SELECT MIN(c) AS c_lo, MAX(c) AS c_hi,
-                 MIN(d) AS d_lo, MAX(d) AS d_hi FROM o),
-    z AS (SELECT c, d, {zk} >> 14 AS zbucket FROM o CROSS JOIN b)
-    SELECT zbucket, COUNT(*) AS n_orders,
-           MIN(c) AS c_min, MAX(c) AS c_max,
-           MIN(d) AS d_min, MAX(d) AS d_max
-    FROM z GROUP BY zbucket
-"""
-
-
-ORACLE_ZORDER = _zorder_oracle()
-
-
-def q_scd2_user_history(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SCD2 dimension build: each user's event_type runs become
-    versioned [valid_from, valid_to) periods with an is_current flag —
-    the warehouse history table an as-of join consumes.  One hash
-    shuffle on user_id (both window passes share the Exchange+Sort;
-    plan-guarded).  Restricted to user_id < 30 to keep the oracle
-    comparison compact; the plan is user-count-independent.
-
-    Open periods use the warehouse high-date convention (sentinel
-    2200-01-01) rather than NULL: a NULL valid_to would make every
-    BETWEEN-style point-in-time predicate need an extra IS NULL arm,
-    and NaT columns push pandas' frame comparison onto a raw-int64
-    path where the engines' different timestamp units false-diff."""
-    ev = _t(spark, sf_dir, "events").filter(F.col("user_id") < 30)
-    hist = H.scd2_history(ev, "user_id", "event_type", "ts", "event_id")
-    return hist.withColumn(
-        "valid_to",
-        F.coalesce(F.col("valid_to"), F.lit("2200-01-01").cast("timestamp")),
-    )
-
-
-ORACLE_SCD2 = """
-    WITH e AS (SELECT user_id, event_type, ts, event_id FROM events
-               WHERE user_id < 30),
-    marked AS (SELECT *,
-                   (LAG(event_type) OVER w IS NULL
-                    OR LAG(event_type) OVER w <> event_type) AS chg
-               FROM e WINDOW w AS (PARTITION BY user_id
-                                   ORDER BY ts, event_id)),
-    starts AS (SELECT user_id, event_type, ts AS valid_from,
-                      event_id AS tb
-               FROM marked WHERE chg)
-    SELECT user_id, event_type, valid_from,
-           COALESCE(LEAD(valid_from) OVER w2,
-                    TIMESTAMP '2200-01-01 00:00:00') AS valid_to,
-           CAST(ROW_NUMBER() OVER w2 AS INT) AS version,
-           (LEAD(valid_from) OVER w2 IS NULL) AS is_current
-    FROM starts WINDOW w2 AS (PARTITION BY user_id ORDER BY valid_from, tb)
-"""
-
-
-def q_domain_cap_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus curation frequency cap: at most 20 documents per source,
-    best-first by length (n_chars DESC, doc_id tiebreak) — the guard
-    that stops a handful of giant domains from dominating a training
-    mix.  One shuffle on source; skewed sources emit at most cap rows
-    each (operators/sampling.py::cap_per_group)."""
-    from kafka_firehose_nozzle_spark.operators import sampling as SA
-
-    docs = _t(spark, sf_dir, "documents")
-    return SA.cap_per_group(
-        docs, "source", [F.desc("n_chars"), F.col("doc_id")], 20
-    ).select("doc_id", "source", "n_chars")
-
-
-ORACLE_DOMAIN_CAP = """
-    SELECT doc_id, source, n_chars FROM (
-        SELECT doc_id, source, n_chars,
-               ROW_NUMBER() OVER (PARTITION BY source
-                   ORDER BY n_chars DESC, doc_id) AS rk
-        FROM documents) r
-    WHERE rk <= 20
-"""
-
-
-def q_supplier_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Integer PageRank over the customer<->supplier trade graph
-    (operators/graph.py::pagerank_int, 3 iterations, damping 85%).
-    Vertices are custkey*2 / suppkey*2+1; edges are the distinct
-    trading pairs from orders |x| lineitem, both directions so the
-    bipartite graph has no sinks.  Exact BIGINT arithmetic end-to-end
-    makes the ranks a pure function of the graph — the DuckDB oracle
-    replays all 3 iterations as unrolled CTEs (ORACLE_PAGERANK)."""
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    pairs = (
-        li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .select(
-            (F.col("o_custkey") * 2).alias("cv"),
-            (F.col("l_suppkey") * 2 + 1).alias("sv"),
-        )
-        .distinct()
-    )
-    e = pairs.select(F.col("cv").alias("src"), F.col("sv").alias("dst")).union(
-        pairs.select(F.col("sv").alias("src"), F.col("cv").alias("dst"))
-    )
-    from kafka_firehose_nozzle_spark.session import (
-        checkpoint_storage_level,
-        input_bytes,
-    )
-
-    # edge rows are two BIGINTs; the distinct trade-pair count tracks
-    # lineitem row count, so ~1.5x lineitem's parquet bytes bounds the
-    # materialized edge list (sf100: 13.7 GB parquet -> ~19 GB edges)
-    level = checkpoint_storage_level(
-        spark,
-        input_bytes(spark, f"{sf_dir}/lineitem.parquet"),
-        expansion=1.5,
-    )
-    ranks = G.pagerank_int(
-        e, iterations=3, damping_pct=85, edge_storage_level=level
-    )
-    return (
-        ranks.orderBy(F.desc("rank"), F.col("vertex"))
-        .limit(20)
-        .select(
-            F.when(F.col("vertex") % 2 == 0, F.lit("cust"))
-            .otherwise(F.lit("supp"))
-            .alias("node_type"),
-            F.expr("vertex div 2").alias("key"),
-            F.col("rank"),
-        )
-    )
-
-
-def _pagerank_oracle(iterations: int = 3, damping_pct: int = 85) -> str:
-    # Every CTE MATERIALIZED: the unrolled-iteration inlining bomb
-    # (r3 -> c3 -> r2 -> ... -> e, whole ancestry re-evaluated per
-    # reference) filled DuckDB temp at sf10 — same class and fix as
-    # the hits/assortativity/triangle oracles.
-    mass = "CAST(1000000000000000 AS BIGINT)"
-    ctes = [
-        "pairs AS MATERIALIZED (SELECT DISTINCT o.o_custkey * 2 AS cv, "
-        "l.l_suppkey * 2 + 1 AS sv "
-        "FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey)",
-        "e AS MATERIALIZED (SELECT cv AS src, sv AS dst FROM pairs "
-        "UNION ALL SELECT sv, cv FROM pairs)",
-        "v AS MATERIALIZED (SELECT src AS vertex FROM e UNION SELECT dst FROM e)",
-        "deg AS MATERIALIZED (SELECT src, COUNT(*) AS outdeg FROM e GROUP BY src)",
-        f"params AS MATERIALIZED (SELECT COUNT(*) AS n, {mass} // COUNT(*) AS base, "
-        f"({100 - damping_pct} * ({mass} // COUNT(*))) // 100 AS tele "
-        f"FROM v)",
-        "r0 AS MATERIALIZED (SELECT vertex, base AS rank FROM v CROSS JOIN params)",
-    ]
-    prev = "r0"
-    for i in range(1, iterations + 1):
-        ctes.append(
-            f"c{i} AS MATERIALIZED (SELECT d.src AS cv, p.rank // d.outdeg AS contrib "
-            f"FROM {prev} p JOIN deg d ON p.vertex = d.src)"
-        )
-        ctes.append(
-            f"s{i} AS MATERIALIZED (SELECT e.dst, SUM(contrib) AS inflow "
-            f"FROM e JOIN c{i} ON e.src = c{i}.cv GROUP BY e.dst)"
-        )
-        ctes.append(
-            f"r{i} AS MATERIALIZED (SELECT v.vertex, tele + "
-            f"(({damping_pct} * COALESCE(s{i}.inflow, 0)) // 100) AS rank "
-            f"FROM v LEFT JOIN s{i} ON v.vertex = s{i}.dst "
-            f"CROSS JOIN params)"
-        )
-        prev = f"r{i}"
-    return (
-        "WITH " + ",\n    ".join(ctes) + f"""
-    SELECT CASE WHEN vertex % 2 = 0 THEN 'cust' ELSE 'supp' END AS node_type,
-           vertex // 2 AS key, CAST(rank AS BIGINT) AS rank
-    FROM {prev} ORDER BY rank DESC, vertex LIMIT 20
-"""
-    )
-
-
-ORACLE_PAGERANK = _pagerank_oracle(3, 85)
-
-
-def q_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mergeable quantile sketch: a 256-bucket fixed-grid histogram of
-    l_extendedprice, then p50/p90/p99 read off the cumulative counts
-    (upper bucket edge of the first bucket reaching the rank).  Unlike
-    percentile_quantities' exact per-group sort, this is the SHAPE that
-    survives 100 TB: one partial-aggregated shuffle of <= 256 groups
-    regardless of row count, merges associatively across partitions
-    (the property t-digest/KLL trade exactness for — here with
-    deterministic integer bucket math a SQL oracle replays), and error
-    bounded by the bucket width.  Bounds ride in from a 1-row broadcast
-    aggregate like zorder's."""
-    from pyspark.sql import Window
-
-    li = _t(spark, sf_dir, "lineitem").select(
-        F.col("l_extendedprice").cast("double").alias("x")
-    )
-    b = li.agg(
-        F.min("x").alias("lo"),
-        F.max("x").alias("hi"),
-        F.count(F.lit(1)).alias("n"),
-    )
-    # integer bucket index: 0..255; hi maps to 255 via the LEAST guard
-    bucket = F.least(
-        F.lit(255),
-        F.floor(
-            (F.col("x") - F.col("lo"))
-            * F.lit(256.0)
-            / (F.col("hi") - F.col("lo"))
-        ).cast("int"),
-    )
-    hist = (
-        li.crossJoin(F.broadcast(b))
-        .groupBy(bucket.alias("bucket"))
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.first("lo").alias("lo"),
-            F.first("hi").alias("hi"),
-            F.first("n").alias("n"),
-        )
-    )
-    # the running sum runs over the <=256-row histogram, not the corpus
-    # — the unpartitioned window is bounded by the bucket count
-    wsum = Window.orderBy("bucket").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    cum = hist.withColumn("cum", F.sum("cnt").over(wsum))
-    # 256-row frame: the quantile picks are driver-scale work expressed
-    # relationally (one row per quantile via a VALUES-style dim)
-    qs = cum.sparkSession.createDataFrame(
-        [(50,), (90,), (99,)], "pct int"
-    )
-    picked = (
-        cum.crossJoin(F.broadcast(qs))
-        .filter(F.col("cum") * 100 >= F.col("pct") * F.col("n"))
-        .groupBy("pct")
-        .agg(
-            F.min("bucket").alias("bucket"),
-            F.first("lo").alias("lo"),
-            F.first("hi").alias("hi"),
-        )
-    )
-    edge = F.col("lo") + (F.col("bucket") + 1) * (F.col("hi") - F.col("lo")) / F.lit(256.0)
-    return picked.select(
-        "pct",
-        F.col("bucket").cast("int").alias("bucket"),
-        DET.det_round(edge, 6).alias("upper_edge"),
-    )
-
-
-ORACLE_HISTOGRAM_Q = f"""
-    WITH x AS (SELECT CAST(l_extendedprice AS DOUBLE) AS x FROM lineitem),
-    b AS (SELECT MIN(x) AS lo, MAX(x) AS hi, COUNT(*) AS n FROM x),
-    h AS (SELECT LEAST(255, CAST(FLOOR((x - lo) * 256.0 / (hi - lo))
-                                 AS INT)) AS bucket,
-                 COUNT(*) AS cnt
-          FROM x CROSS JOIN b GROUP BY 1),
-    c AS (SELECT bucket, SUM(cnt) OVER (ORDER BY bucket
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-          FROM h),
-    q AS (SELECT unnest([50, 90, 99]) AS pct)
-    SELECT pct, CAST(MIN(bucket) AS INT) AS bucket,
-           {DET.det_round_sql(
-               'MIN(lo) + (MIN(bucket) + 1) * (MIN(hi) - MIN(lo)) / 256.0', 6
-           )} AS upper_edge
-    FROM c CROSS JOIN q CROSS JOIN b
-    WHERE cum * 100 >= pct * n
-    GROUP BY pct
-"""
-
-
-def q_profile_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One-pass column profiler — the data-quality summary every
-    ingestion pipeline runs before training: per column null count,
-    distinct count, min/max.  Numeric extrema stay DOUBLE (bit-exact on
-    both engines; stringifying floats is renderer-version-sensitive) and
-    only genuinely-string columns report string extrema.  All aggregates
-    fuse into a single scan + one partial-agg shuffle (count_distinct is
-    exact here; at 100 TB swap in the KMV sketch the engine also
-    provides).  Unpivoted to (column, metric rows) so adding columns
-    never changes the schema."""
-    li = _t(spark, sf_dir, "lineitem")
-    num_cols = ["l_quantity", "l_extendedprice", "l_discount"]
-    str_cols = ["l_returnflag"]
-    cols = num_cols + str_cols
-    aggs = []
-    for c in cols:
-        aggs += [
-            F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)).alias(f"{c}__nulls"),
-            F.count_distinct(F.col(c)).alias(f"{c}__distinct"),
-            F.min(F.col(c)).alias(f"{c}__min"),
-            F.max(F.col(c)).alias(f"{c}__max"),
-        ]
-    one = li.agg(*aggs)
-    pieces = []
-    for c in cols:
-        is_num = c in num_cols
-        pieces.append(
-            one.select(
-                F.lit(c).alias("column"),
-                F.col(f"{c}__nulls").cast("bigint").alias("n_nulls"),
-                F.col(f"{c}__distinct").cast("bigint").alias("n_distinct"),
-                (
-                    F.col(f"{c}__min").cast("double")
-                    if is_num
-                    else F.lit(None).cast("double")
-                ).alias("min_num"),
-                (
-                    F.col(f"{c}__max").cast("double")
-                    if is_num
-                    else F.lit(None).cast("double")
-                ).alias("max_num"),
-                (
-                    F.lit(None).cast("string")
-                    if is_num
-                    else F.col(f"{c}__min").cast("string")
-                ).alias("min_str"),
-                (
-                    F.lit(None).cast("string")
-                    if is_num
-                    else F.col(f"{c}__max").cast("string")
-                ).alias("max_str"),
-            )
-        )
-    out = pieces[0]
-    for p in pieces[1:]:
-        out = out.unionAll(p)
-    return out
-
-
-ORACLE_PROFILE = """
-    WITH a AS (SELECT
-        CAST(SUM(CASE WHEN l_quantity IS NULL THEN 1 ELSE 0 END)
-             AS BIGINT) AS q_nulls,
-        COUNT(DISTINCT l_quantity) AS q_dist,
-        CAST(MIN(l_quantity) AS DOUBLE) AS q_min,
-        CAST(MAX(l_quantity) AS DOUBLE) AS q_max,
-        CAST(SUM(CASE WHEN l_extendedprice IS NULL THEN 1 ELSE 0 END)
-             AS BIGINT) AS p_nulls,
-        COUNT(DISTINCT l_extendedprice) AS p_dist,
-        CAST(MIN(l_extendedprice) AS DOUBLE) AS p_min,
-        CAST(MAX(l_extendedprice) AS DOUBLE) AS p_max,
-        CAST(SUM(CASE WHEN l_discount IS NULL THEN 1 ELSE 0 END)
-             AS BIGINT) AS d_nulls,
-        COUNT(DISTINCT l_discount) AS d_dist,
-        CAST(MIN(l_discount) AS DOUBLE) AS d_min,
-        CAST(MAX(l_discount) AS DOUBLE) AS d_max,
-        CAST(SUM(CASE WHEN l_returnflag IS NULL THEN 1 ELSE 0 END)
-             AS BIGINT) AS s_nulls,
-        COUNT(DISTINCT l_returnflag) AS s_dist,
-        MIN(l_returnflag) AS s_min,
-        MAX(l_returnflag) AS s_max
-        FROM lineitem)
-    SELECT 'l_quantity' AS "column", q_nulls AS n_nulls, q_dist AS n_distinct,
-           q_min AS min_num, q_max AS max_num,
-           CAST(NULL AS VARCHAR) AS min_str, CAST(NULL AS VARCHAR) AS max_str
-    FROM a
-    UNION ALL
-    SELECT 'l_extendedprice', p_nulls, p_dist, p_min, p_max,
-           CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR) FROM a
-    UNION ALL
-    SELECT 'l_discount', d_nulls, d_dist, d_min, d_max,
-           CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR) FROM a
-    UNION ALL
-    SELECT 'l_returnflag', s_nulls, s_dist,
-           CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE), s_min, s_max FROM a
-"""
-
-
-def q_count_min_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Count-min sketch frequency estimation: 4 hash rows x 256 buckets
-    (md5-derived, engine-replayable), estimate = min over rows — checked
-    against the exact counts of the 10 heaviest users.  The sketch is
-    the heavy-hitter shape that survives 100 TB: the shuffle carries at
-    most 1024 cells regardless of corpus size (partial-aggregated
-    map-side), point estimates never rescan the corpus, and sketches
-    merge by cell-wise addition across days/streams.  CM guarantees
-    est >= exact; the test asserts the bound and the oracle replays the
-    exact cell values."""
-    ev = _t(spark, sf_dir, "events").select("user_id")
-    rows = spark.createDataFrame([(0,), (1,), (2,), (3,)], "r int")
-    sketch = (
-        ev.crossJoin(F.broadcast(rows))
-        .groupBy(
-            F.col("r"),
-            F.pmod(
-                F.conv(
-                    F.substring(
-                        F.md5(
-                            F.concat(
-                                F.col("user_id").cast("string"),
-                                F.lit("#cm"),
-                                F.col("r").cast("string"),
-                            )
-                        ),
-                        1,
-                        8,
-                    ),
-                    16,
-                    10,
-                ).cast("long"),
-                F.lit(256),
-            ).alias("bucket"),
-        )
-        .agg(F.count(F.lit(1)).alias("cell"))
-    )
-    top = (
-        ev.groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("exact_cnt"))
-        .orderBy(F.desc("exact_cnt"), F.col("user_id"))
-        .limit(10)
-    )
-    probes = top.crossJoin(F.broadcast(rows)).select(
-        "user_id",
-        "exact_cnt",
-        "r",
-        F.pmod(
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.col("user_id").cast("string"),
-                            F.lit("#cm"),
-                            F.col("r").cast("string"),
-                        )
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long"),
-            F.lit(256),
-        ).alias("bucket"),
-    )
-    return (
-        probes.join(F.broadcast(sketch), ["r", "bucket"])
-        .groupBy("user_id", "exact_cnt")
-        .agg(F.min("cell").alias("cm_est"))
-    )
-
-
-ORACLE_COUNT_MIN = """
-    WITH ev AS (SELECT user_id FROM events),
-    rows_ AS (SELECT unnest([0, 1, 2, 3]) AS r),
-    cells AS (SELECT r,
-                  CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR) || '#cm'
-                      || CAST(r AS VARCHAR)), 1, 8)) AS BIGINT) % 256
-                      AS bucket,
-                  COUNT(*) AS cell
-              FROM ev CROSS JOIN rows_ GROUP BY 1, 2),
-    top AS (SELECT user_id, COUNT(*) AS exact_cnt FROM ev GROUP BY 1
-            ORDER BY exact_cnt DESC, user_id LIMIT 10),
-    probes AS (SELECT user_id, exact_cnt, r,
-                   CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR) || '#cm'
-                       || CAST(r AS VARCHAR)), 1, 8)) AS BIGINT) % 256
-                       AS bucket
-               FROM top CROSS JOIN rows_)
-    SELECT p.user_id, p.exact_cnt, MIN(c.cell) AS cm_est
-    FROM probes p JOIN cells c ON p.r = c.r AND p.bucket = c.bucket
-    GROUP BY 1, 2
-"""
-
-
-def q_kmv_distinct_per_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-group KMV sketch: distinct users per event_type estimated
-    from each group's 32 smallest 60-bit hashes — the grouped version of
-    kmv_distinct_users.  The per-group k-smallest is a rank <= k window
-    (one shuffle on event_type, skew-bounded: each group keeps 32 rows);
-    merging sketches = union + re-rank, never a re-scan."""
-    from pyspark.sql import Window
-
-    ev = _t(spark, sf_dir, "events").select("event_type", "user_id").distinct()
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat(F.col("user_id").cast("string"), F.lit("#kmv"))),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("long")
-    w = Window.partitionBy("event_type").orderBy("h")
-    kmin = (
-        ev.select("event_type", h.alias("h"))
-        .withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= 32)
-    )
-    return kmin.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("k"),
-        DET.det_round(
-            (F.count(F.lit(1)) - 1).cast("double")
-            * F.lit(float(2**60))
-            / F.max("h"),
-            4,
-        ).alias("est_distinct"),
-    )
-
-
-ORACLE_KMV_PER_TYPE = """
-    WITH u AS (SELECT DISTINCT event_type, user_id FROM events),
-    h AS (SELECT event_type,
-              CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR) || '#kmv'),
-                  1, 15)) AS BIGINT) AS h
-          FROM u),
-    r AS (SELECT event_type, h,
-              ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY h) AS rk
-          FROM h)
-    SELECT event_type, COUNT(*) AS k,
-           (FLOOR((CAST(COUNT(*) - 1 AS DOUBLE) * POWER(2, 60) / MAX(h))
-                  * 10000.0 + 0.5) / 10000.0) AS est_distinct
-    FROM r WHERE rk <= 32 GROUP BY event_type
-"""
-
-
-def q_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tokenizer-prep vocabulary report: build the top-500 token vocab
-    by corpus frequency (TakeOrdered, count-desc/token tiebreak) and
-    report what fraction of all token occurrences it covers — the
-    decision metric for vocab-size tradeoffs.  Two partial-aggregated
-    passes over the exploded token stream (distinct-token cardinality
-    shuffles, never corpus rows); the ratio is emitted in exact integer
-    micro-units (no double until the final IEEE division)."""
-    docs = _t(spark, sf_dir, "documents")
-    toks = docs.select(
-        F.explode(TX.tokens(TX.normalize_text(F.col("text")))).alias("tok")
-    )
-    counts = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("cnt"))
-    vocab = counts.orderBy(F.desc("cnt"), F.col("tok")).limit(500)
-    totals = counts.agg(
-        F.sum("cnt").alias("total_occ"), F.count(F.lit(1)).alias("n_types")
-    )
-    cov = vocab.agg(F.sum("cnt").alias("covered_occ"))
-    return (
-        cov.crossJoin(F.broadcast(totals))
-        .select(
-            F.lit(500).alias("vocab_size"),
-            "covered_occ",
-            "total_occ",
-            "n_types",
-            (
-                F.expr("(covered_occ * 1000000) div total_occ").cast("bigint")
-            ).alias("coverage_ppm"),
-        )
-    )
-
-
-ORACLE_VOCAB = f"""
-    WITH toks AS (SELECT unnest({_TOKS}) AS tok FROM documents),
-    counts AS (SELECT tok, COUNT(*) AS cnt FROM toks GROUP BY tok),
-    vocab AS (SELECT cnt FROM counts ORDER BY cnt DESC, tok LIMIT 500),
-    tot AS (SELECT SUM(cnt) AS total_occ, COUNT(*) AS n_types FROM counts),
-    cov AS (SELECT SUM(cnt) AS covered_occ FROM vocab)
-    SELECT 500 AS vocab_size,
-           CAST(covered_occ AS BIGINT) AS covered_occ,
-           CAST(total_occ AS BIGINT) AS total_occ,
-           CAST(n_types AS BIGINT) AS n_types,
-           CAST((covered_occ * 1000000) // total_occ AS BIGINT)
-               AS coverage_ppm
-    FROM cov CROSS JOIN tot
-"""
-
-
-def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE tokenizer training, in-engine: 8 merge-learning rounds over
-    the documents corpus (operators/text.py::bpe_learn_merges — pair
-    counting is a partial-aggregated explode, the winner is one driver
-    scalar per round, the merge is a literal-replace map).  Emits the
-    learned merge table in rank order; the DuckDB oracle replays the
-    ENTIRE training run as 8 unrolled CTE rounds (ORACLE_BPE_MERGES)."""
-    docs = _t(spark, sf_dir, "documents")
-    merges = TX.bpe_learn_merges(docs, "text", n_merges=8)
-    return spark.createDataFrame(
-        [(i + 1, p, c) for i, (p, c) in enumerate(merges)],
-        "rank int, pair string, cnt bigint",
-    )
-
-
-_BPE_SPACED = (
-    "trim(regexp_replace(replace(lower(trim(regexp_replace(text, "
-    "'\\s+', ' ', 'g'))), ' ', '_'), '(.)', '\\1 ', 'g'))"
-)
-
-
-def _bpe_train_ctes(n_merges: int = 8) -> list[str]:
-    """Unrolled merge-learning rounds (d0..dN corpora, m1..mN winners) —
-    shared by the training oracle and the encode oracle."""
-    # MATERIALIZED throughout: every d{i} corpus state is consumed
-    # TWICE (pair-count p{i+1} and next state d{i+1}) and every m{i}
-    # winner twice in the encode oracle (training chain + enc chain).
-    # Inlined, the recompute tree doubles per round — 2^8 rescans of
-    # the spaced corpus at 8 merges — which is what pushed the sf10
-    # oracle past the 1200 s sweep timeout (same temp-bomb class as
-    # the pagerank/kcore fixes; 90.5 s -> seconds at sf1).
-    ctes = [f"d0 AS MATERIALIZED (SELECT {_BPE_SPACED} AS s FROM documents)"]
-    for i in range(1, n_merges + 1):
-        ctes.append(
-            f"p{i} AS (SELECT unnest(list_transform(range(len(sy) - 1), "
-            f"j -> sy[j + 1] || ' ' || sy[j + 2])) AS p "
-            f"FROM (SELECT string_split(s, ' ') AS sy FROM d{i - 1}) t "
-            f"WHERE len(sy) >= 2)"
-        )
-        ctes.append(
-            f"m{i} AS MATERIALIZED (SELECT p, COUNT(*) AS cnt FROM p{i} "
-            f"GROUP BY p ORDER BY cnt DESC, p LIMIT 1)"
-        )
-        rep = "' ' || replace(m.p, ' ', '') || ' '"
-        pat = "' ' || m.p || ' '"
-        ctes.append(
-            f"d{i} AS MATERIALIZED (SELECT trim(replace(replace(' ' || d.s || ' ', "
-            f"{pat}, {rep}), {pat}, {rep})) AS s "
-            f"FROM d{i - 1} d CROSS JOIN m{i} m)"
-        )
-    return ctes
-
-
-def _bpe_oracle(n_merges: int = 8) -> str:
-    sel = [
-        f"SELECT {i} AS rank, p AS pair, cnt FROM m{i}"
-        for i in range(1, n_merges + 1)
-    ]
-    return (
-        "WITH "
-        + ",\n    ".join(_bpe_train_ctes(n_merges))
-        + "\n    "
-        + "\n    UNION ALL ".join(sel)
-    )
-
-
-ORACLE_BPE_MERGES = _bpe_oracle(8)
-
-
-def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tokenizer APPLICATION at corpus scale: learn the 8-merge BPE
-    table (same training loop as bpe_merges), then encode every
-    document with it (text.py::bpe_apply — a chain of literal replaces,
-    pure JVM map fused into the scan; the learned merges ride into the
-    plan as literals exactly like k-means centroids). Emits per-doc
-    base-symbol and BPE-token counts plus the exact-ppm compression
-    ratio. The oracle replays training AND encoding: the merge values
-    flow from the training CTEs into per-doc replace() calls as column
-    arguments."""
-    docs = _t(spark, sf_dir, "documents")
-    merges = TX.bpe_learn_merges(docs, "text", n_merges=8)
-    base = TX.bpe_base_symbols(F.col("text"))
-    n_base = F.size(F.filter(F.split(base, " "), lambda t: t != ""))
-    toks = TX.bpe_apply(F.col("text"), [p for p, _ in merges])
-    return docs.select(
-        "doc_id",
-        n_base.alias("n_base_symbols"),
-        F.size(toks).alias("n_bpe_tokens"),
-    ).withColumn(
-        "compression_ppm",
-        F.expr("n_bpe_tokens * 1000000 div n_base_symbols"),
-    )
-
-
-def _bpe_encode_oracle(n_merges: int = 8) -> str:
-    ctes_part = ",\n    ".join(_bpe_train_ctes(n_merges))
-    # enc0 is consumed twice (the replace chain and the final join's
-    # base-symbol count) — materialize so the spacing pass runs once.
-    enc = [
-        f"enc0 AS MATERIALIZED (SELECT doc_id, {_BPE_SPACED} AS s FROM documents)",
-    ]
-    for i in range(1, n_merges + 1):
-        rep = "' ' || replace(m.p, ' ', '') || ' '"
-        pat = "' ' || m.p || ' '"
-        enc.append(
-            f"enc{i} AS (SELECT doc_id, trim(replace(replace("
-            f"' ' || e.s || ' ', {pat}, {rep}), {pat}, {rep})) AS s "
-            f"FROM enc{i - 1} e CROSS JOIN m{i} m)"
-        )
-    return (
-        "WITH "
-        + ctes_part
-        + ",\n    "
-        + ",\n    ".join(enc)
-        + f"""
-    SELECT e0.doc_id,
-           len(list_filter(string_split(e0.s, ' '), x -> x <> ''))
-               AS n_base_symbols,
-           len(list_filter(string_split(e{n_merges}.s, ' '), x -> x <> ''))
-               AS n_bpe_tokens,
-           (len(list_filter(string_split(e{n_merges}.s, ' '), x -> x <> ''))
-                * 1000000)
-               // len(list_filter(string_split(e0.s, ' '), x -> x <> ''))
-               AS compression_ppm
-    FROM enc0 e0 JOIN enc{n_merges} e{n_merges} USING (doc_id)
-"""
-    )
-
-
-ORACLE_BPE_ENCODE = _bpe_encode_oracle(8)
-
-
-def q_changelog_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CDC apply / compacted-topic semantics over the event log: each
-    user's latest event wins (ts DESC, event_id tiebreak); a latest
-    'error' event acts as a tombstone and removes the key — the merge
-    that rebuilds current state from an append-only change stream
-    (operators/history.py::compact_changelog, one key shuffle)."""
-    ev = _t(spark, sf_dir, "events")
-    out = H.compact_changelog(
-        ev, "user_id", "ts", "event_id", F.col("event_type") == "error"
-    )
-    return out.select(
-        "user_id",
-        F.col("ts").alias("last_ts"),
-        F.col("event_type").alias("last_type"),
-        DET.det_round(F.col("value"), 6).alias("last_value"),
-    )
-
-
-ORACLE_CHANGELOG = f"""
-    WITH r AS (SELECT user_id, ts, event_type, value,
-                   ROW_NUMBER() OVER (PARTITION BY user_id
-                       ORDER BY ts DESC, event_id DESC) AS rn
-               FROM events)
-    SELECT user_id, ts AS last_ts, event_type AS last_type,
-           {DET.det_round_sql('value', 6)} AS last_value
-    FROM r WHERE rn = 1 AND event_type <> 'error'
-"""
-
-
-def q_media_resize_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Aspect-preserving resize planning over the media adapter
-    (operators/multimodal.py::resize_dims): fit-into-224 output dims as
-    pure integer arithmetic fused into the scan — the work order the
-    decode seam executes.  Dims are deterministic synthetics (no codecs
-    in this environment); the arithmetic is the production path."""
-    from kafka_firehose_nozzle_spark.operators import multimodal as MM
-
-    media = MM.with_fake_dims(
-        MM.documents_as_media(_t(spark, sf_dir, "documents"))
-    )
-    w = F.col("meta").getField("width")
-    h = F.col("meta").getField("height")
-    rd = MM.resize_dims(w, h, box=224)
-    return media.select(
-        "media_id",
-        w.alias("width"),
-        h.alias("height"),
-        rd.getField("out_w").alias("out_w"),
-        rd.getField("out_h").alias("out_h"),
-    )
-
-
-ORACLE_RESIZE_PLAN = """
-    WITH m AS (SELECT doc_id AS media_id,
-                      octet_length(encode(text)) AS n
-               FROM documents),
-    d AS (SELECT media_id,
-                 CAST(64 + n % 1857 AS INT) AS width,
-                 CAST(64 + (n * 7) % 1017 AS INT) AS height
-          FROM m)
-    SELECT media_id, width, height,
-           CAST(GREATEST(1, (width * 224) // GREATEST(width, height))
-                AS INT) AS out_w,
-           CAST(GREATEST(1, (height * 224) // GREATEST(width, height))
-                AS INT) AS out_h
-    FROM d
-"""
-
-
-def q_curriculum_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Curriculum split: quartile the corpus by quality score WITHOUT a
-    global NTILE (whose single-partition sort dies at 100 TB).  The
-    quality score is low-cardinality, so the quartile boundaries come
-    from a tiny value histogram (distinct-value shuffle + a <=5-row
-    window) and each doc's stage is a broadcast join on its value —
-    same-value docs land in the same stage (value-banded quartiles:
-    deterministic, unlike NTILE's arbitrary tie splitting).  Emits per
-    stage: doc count and the quality band."""
-    from pyspark.sql import Window
-
-    docs = _t(spark, sf_dir, "documents")
-    q = docs.select(TX.quality_score(F.col("text")).alias("q"))
-    hist = q.groupBy("q").agg(F.count(F.lit(1)).alias("cnt"))
-    w = Window.orderBy(F.desc("q")).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    # the window runs over the value histogram (bounded rows), best first
-    staged = (
-        hist.withColumn("cum", F.sum("cnt").over(w))
-        .crossJoin(F.broadcast(hist.agg(F.sum("cnt").alias("n"))))
-        .select(
-            "q",
-            "cnt",
-            F.least(
-                F.lit(4),
-                F.expr("(4 * (cum - cnt)) div n").cast("int") + 1,
-            ).alias("stage"),
-        )
-    )
-    return staged.groupBy("stage").agg(
-        F.sum("cnt").alias("n_docs"),
-        F.min("q").alias("q_lo"),
-        F.max("q").alias("q_hi"),
-    )
-
-
-def _curriculum_oracle() -> str:
-    q_expr = ORACLE_QUALITY.strip()
-    return f"""
-    WITH scores AS ({q_expr}),
-    hist AS (SELECT quality AS q, COUNT(*) AS cnt FROM scores GROUP BY 1),
-    c AS (SELECT q, cnt, SUM(cnt) OVER (ORDER BY q DESC
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-              (SELECT SUM(cnt) FROM hist) AS n
-          FROM hist),
-    s AS (SELECT q, cnt,
-              LEAST(4, CAST((4 * (cum - cnt)) // n AS INT) + 1) AS stage
-          FROM c)
-    SELECT stage, CAST(SUM(cnt) AS BIGINT) AS n_docs,
-           MIN(q) AS q_lo, MAX(q) AS q_hi
-    FROM s GROUP BY stage
-"""
-
-
-ORACLE_CURRICULUM = _curriculum_oracle()
-
-
-def q_lang_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Training-mix rebalancing: downsample every language to ~the
-    smallest language's share with a deterministic hash filter (keep
-    doc iff bucket16(md5(id)) * lang_count < 65536 * min_count) — the
-    same rows survive on any engine at any parallelism.  Per-lang
-    counts ride in via one broadcast aggregate; the filter itself is a
-    pure scan predicate.  Emits lang, n_total, n_kept."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "lang")
-    counts = docs.groupBy("lang").agg(F.count(F.lit(1)).alias("n_total"))
-    m = counts.agg(F.min("n_total").alias("m"))
-    bucket = F.conv(
-        F.substring(
-            F.md5(F.concat(F.col("doc_id").cast("string"), F.lit("#mix"))),
-            1,
-            4,
-        ),
-        16,
-        10,
-    ).cast("long")
-    kept = (
-        docs.join(F.broadcast(counts), "lang")
-        .crossJoin(F.broadcast(m))
-        .filter(bucket * F.col("n_total") < F.lit(65536) * F.col("m"))
-        .groupBy("lang")
-        .agg(F.count(F.lit(1)).alias("n_kept"))
-    )
-    return counts.join(kept, "lang", "left").select(
-        "lang", "n_total", F.coalesce("n_kept", F.lit(0)).alias("n_kept")
-    )
-
-
-ORACLE_REBALANCE = """
-    WITH d AS (SELECT doc_id, lang FROM documents),
-    counts AS (SELECT lang, COUNT(*) AS n_total FROM d GROUP BY lang),
-    m AS (SELECT MIN(n_total) AS m FROM counts),
-    kept AS (SELECT d.lang, COUNT(*) AS n_kept
-             FROM d JOIN counts USING (lang) CROSS JOIN m
-             WHERE CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)
-                       || '#mix'), 1, 4)) AS BIGINT) * n_total
-                   < 65536 * m
-             GROUP BY d.lang)
-    SELECT lang, n_total, COALESCE(n_kept, 0) AS n_kept
-    FROM counts LEFT JOIN kept USING (lang)
-"""
-
-
-def q_supplier_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Triangle count of the supplier co-purchase graph (suppliers
-    linked when >= 3 customers buy from both): co-occurrence edge build
-    sharded by customer, then degree-ordered wedge counting
-    (operators/graph.py::triangle_count — out-degree bounded by
-    O(sqrt(E)) so hub suppliers can't explode the wedge join).  Emits
-    [n_edges, n_triangles]."""
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    pairs = (
-        li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .select(F.col("o_custkey").alias("cust"), F.col("l_suppkey").alias("supp"))
-        .distinct()
-    )
-    edges = G.undirected_edges_min_support(
-        pairs, "cust", "supp", min_support=3
-    ).localCheckpoint()
-    tri = G.triangle_count(edges)
-    ne = edges.agg(F.count(F.lit(1)).alias("n_edges"))
-    return ne.crossJoin(tri)
-
-
-ORACLE_TRIANGLES = """
-    WITH pairs AS MATERIALIZED (
-        SELECT DISTINCT o.o_custkey AS g, l.l_suppkey AS s
-        FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey),
-    edges AS MATERIALIZED (
-        SELECT a.s AS a, b.s AS b
-        FROM pairs a JOIN pairs b ON a.g = b.g AND a.s < b.s
-        GROUP BY 1, 2 HAVING COUNT(*) >= 3),
-    deg AS MATERIALIZED (
-        SELECT v, COUNT(*) AS d FROM (
-            SELECT a AS v FROM edges UNION ALL SELECT b FROM edges) t
-        GROUP BY v),
-    o AS MATERIALIZED (
-        SELECT CASE WHEN da.d < db.d OR (da.d = db.d AND e.a < e.b)
-                    THEN e.a ELSE e.b END AS u,
-               CASE WHEN da.d < db.d OR (da.d = db.d AND e.a < e.b)
-                    THEN e.b ELSE e.a END AS w
-        FROM edges e JOIN deg da ON e.a = da.v JOIN deg db ON e.b = db.v),
-    tri AS (SELECT COUNT(*) AS n_triangles
-            FROM o e1 JOIN o e2 ON e1.w = e2.u
-                 JOIN o e3 ON e3.u = e1.u AND e3.w = e2.w)
-    SELECT (SELECT COUNT(*) FROM edges) AS n_edges, n_triangles FROM tri
-"""
-# MATERIALIZED, deliberately (sf1 post-mortem): inlined CTEs made DuckDB
-# recompute the pairs->edges->deg pipeline FOUR times and mis-estimate
-# the wedge join at 96 rows (compressed-projection stats), so it hash-
-# BUILT on the 1.7 B-row wedge stream — 78 GB of temp, disk-full crash.
-# Materialized, every build side is a real <= 5 M-row table and the
-# wedge stream is pure probe traffic: 313 s, zero temp, at sf1's
-# 1,661,670,000 triangles (10 replicas x C(1000,3) — exact).
-
-
-def q_prefix_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACT all-pairs Jaccard >= 0.6 via prefix filtering (PPJoin
-    family; operators/dedup.py::prefix_jaccard_pairs) — no false
-    negatives, unlike the probabilistic MinHash-LSH path the corpus
-    dedup uses; candidates come only from rarest-token prefixes so the
-    equi-join buckets stay small at any corpus size."""
-    docs = _t(spark, sf_dir, "documents")
-    return D.prefix_jaccard_pairs(docs, "text", "doc_id", threshold_pct=60)
-
-
-ORACLE_PREFIX_JACCARD = f"""
-    WITH grp AS MATERIALIZED (
-        SELECT md5(text) AS tk, MIN(doc_id) AS rep
-        FROM documents GROUP BY md5(text)),
-    mem AS MATERIALIZED (
-        SELECT g.rep, d.doc_id AS m
-        FROM documents d JOIN grp g ON md5(d.text) = g.tk),
-    norm AS MATERIALIZED (
-        SELECT g.rep AS doc_id,
-               lower(trim(regexp_replace(d.text, '\\s+', ' ', 'g'))) AS s
-        FROM grp g JOIN documents d ON d.doc_id = g.rep),
-    toks AS MATERIALIZED (
-        SELECT doc_id,
-               CAST(('0x' || substr(md5(tok0), 1, 15)) AS BIGINT) AS tok
-        FROM (SELECT doc_id, unnest(
-                 CASE WHEN length(s) >= 5
-                      THEN list_distinct(list_transform(
-                               range(length(s) - 4),
-                               i -> substr(s, i + 1, 5)))
-                      ELSE [''] END) AS tok0
-              FROM norm) t0),
-    dfc AS MATERIALIZED (SELECT tok, COUNT(*) AS df_ FROM toks GROUP BY tok),
-    o2 AS MATERIALIZED (
-        SELECT doc_id, ts, len(ts) AS n FROM (
-            SELECT doc_id, list(tok ORDER BY df_, tok) AS ts
-            FROM toks JOIN dfc USING (tok) GROUP BY doc_id) t),
-    pre0 AS (SELECT doc_id, n,
-                 unnest(list_transform(
-                     range(n - ((60 * n + 99) // 100) + 1),
-                     i -> {{'pos': i + 1, 'tok': ts[i + 1]}})) AS s
-             FROM o2),
-    pre AS MATERIALIZED (
-        SELECT doc_id, n, s.pos AS pos, s.tok AS tok FROM pre0),
-    cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-             FROM pre a JOIN pre b
-               ON a.tok = b.tok AND a.doc_id < b.doc_id
-              AND LEAST(a.n, b.n) * 100 >= GREATEST(a.n, b.n) * 60
-              AND LEAST(a.n - a.pos, b.n - b.pos) + 1
-                  >= (60 * (a.n + b.n) + 159) // 160),
-    v AS (SELECT id_a, id_b,
-              len(list_intersect(x.ts, y.ts)) AS i,
-              x.n + y.n - len(list_intersect(x.ts, y.ts)) AS u
-          FROM cand JOIN o2 x ON cand.id_a = x.doc_id
-               JOIN o2 y ON cand.id_b = y.doc_id),
-    rep_pairs AS MATERIALIZED (
-        SELECT id_a, id_b, CAST((i * 1000000) // u AS BIGINT) AS jac_ppm
-        FROM v WHERE i * 100 >= u * 60)
-    SELECT LEAST(xa.m, xb.m) AS id_a, GREATEST(xa.m, xb.m) AS id_b, jac_ppm
-    FROM rep_pairs JOIN mem xa ON xa.rep = rep_pairs.id_a
-         JOIN mem xb ON xb.rep = rep_pairs.id_b
-    UNION ALL
-    SELECT a.m AS id_a, b.m AS id_b, CAST(1000000 AS BIGINT) AS jac_ppm
-    FROM mem a JOIN mem b ON a.rep = b.rep AND a.m < b.m
-"""
-# Exact-duplicate collapse + MATERIALIZED CTEs, mirroring the operator
-# (operators/dedup.py::prefix_jaccard_pairs): the pairwise prefix
-# machinery runs on one representative per distinct text, identical-
-# text pairs are jaccard 1 by definition, cross-group pairs inherit
-# their representatives' jaccard.  Same exact output — verification is
-# exact, so the qualifying pair SET is implementation-independent.
-
-
-# --------------------------------------------------------------------------
-# Wave 4c: kNN graph, SemDeDup, constraint audit
-# --------------------------------------------------------------------------
-
-
-def q_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Approximate 3-NN graph over the embedding corpus via the banded
-    sign-LSH blocking (operators/similarity.py::knn_graph_lsh) — the
-    scale-bounded alternative to the O(n^2) exact graph; feeds
-    graph-based clustering / diversity pipelines."""
-    emb = _t(spark, sf_dir, "embeddings")
-    return S.knn_graph_lsh(
-        emb, k=3, n=_parquet_nrows(f"{sf_dir}/embeddings.parquet")
-    )
-
-
-ORACLE_KNN_GRAPH = _EMB_LSH_PAIRS_CTE + """,
-    sym AS (SELECT id_a AS vec_id, id_b AS neighbor_id, cos_sim FROM p
-            UNION ALL
-            SELECT id_b AS vec_id, id_a AS neighbor_id, cos_sim FROM p),
-    r AS (SELECT vec_id, neighbor_id, cos_sim,
-              ROW_NUMBER() OVER (PARTITION BY vec_id
-                  ORDER BY cos_sim DESC, neighbor_id) AS nn_rank
-          FROM sym)
-    SELECT vec_id, neighbor_id, nn_rank, cos_sim FROM r WHERE nn_rank <= 3
-"""
-
-
-def q_semdedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup (Abbas et al. 2023) over the embedding corpus: medoid
-    cells, drop every vector with a lower-id in-cell neighbor at cosine
-    >= 0.35, keep the rest (operators/similarity.py::semantic_dedup_keep).
-    The pairwise comparison never leaves a cluster — O(n^2/C) total
-    work, equi-join on cell_id, no cross join. The cell count GROWS
-    with the corpus (max(8, n // 600), n from the parquet footer), so
-    expected cluster size — and with it the per-cluster quadratic —
-    stays ~600 at any scale; the centroid table remains broadcastable
-    (C x dim doubles)."""
-    emb = _t(spark, sf_dir, "embeddings")
-    n = _parquet_nrows(f"{sf_dir}/embeddings.parquet")
-    cents = S.medoid_centroids(emb, max(8, n // 600))
-    return S.semantic_dedup_keep(emb, cents, threshold=0.35)
-
-
-ORACLE_SEMDEDUP = f"""
-    WITH e AS MATERIALIZED (SELECT vec_id,
-                      list_transform(embedding, y -> CAST(y AS DOUBLE)) AS v
-               FROM embeddings),
-    params AS (SELECT GREATEST(8, COUNT(*) // 600) AS nc FROM e),
-    c AS MATERIALIZED (SELECT vec_id AS cell_id, v AS centroid
-          FROM e CROSS JOIN params WHERE vec_id < params.nc),
-    sims AS (SELECT e.vec_id, c.cell_id,
-                    {_sim_sql('e.v', 'c.centroid')} AS s
-             FROM e CROSS JOIN c),
-    assign AS MATERIALIZED (SELECT vec_id, cell_id FROM (
-        SELECT vec_id, cell_id,
-               ROW_NUMBER() OVER (PARTITION BY vec_id
-                   ORDER BY s DESC, cell_id) AS rn
-        FROM sims) ranked WHERE rn = 1),
-    m AS MATERIALIZED (SELECT a.vec_id, a.cell_id, e.v,
-                 sqrt(list_sum(list_transform(e.v, y -> y * y))) AS nrm
-          FROM assign a JOIN e ON e.vec_id = a.vec_id),
-    drops AS (SELECT DISTINCT y.vec_id
-              FROM m x JOIN m y ON x.cell_id = y.cell_id
-                               AND x.vec_id < y.vec_id
-              WHERE {_EMB_DOT.format(a='x.v', b='y.v')} / (x.nrm * y.nrm)
-                    >= 0.35)
-    SELECT vec_id, cell_id FROM m
-    WHERE vec_id NOT IN (SELECT vec_id FROM drops)
-"""
-# Scalar-only assignment window + MATERIALIZED reuse points: the cell
-# count grows with the corpus (nc = n // 600), so the assignment cross
-# product is n * nc = O(n^2/600) rows — 66.6M at sf10.  The original
-# oracle windowed that product with both 64-dim double lists still in
-# the row and inlined `m` into each of its three consumers; DuckDB's
-# window materialization hit 105 GB RSS and was OOM-killed in the r8
-# stretch sweep.  Computing the cosine into a scalar CTE first shrinks
-# the window input to 24 bytes/row (~1.6 GB), and MATERIALIZED stops
-# the 66.6M-row assignment from being recomputed per consumer.  A/B
-# equality with the previous text pinned at sf0.01 (424 rows) and sf1
-# (4,074 rows) before the swap; sf10 now completes under a 40 GB cap.
-
-
-def q_constraint_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Data-quality invariant report over the TPC-H-ish lake
-    (operators/audit.py): FK orphans, key uniqueness, value ranges,
-    temporal ordering — each check one scan + tiny aggregate, glued into
-    a [check_name, violations, checked] report. The synthetic lake is
-    clean on the FK/dup checks and dirty on none of them by
-    construction, so the report doubles as a fixture regression guard."""
-    from kafka_firehose_nozzle_spark.operators import audit as AU
-
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    cust = _t(spark, sf_dir, "customer")
-    checks = [
-        (
-            "orders_fk_customer",
-            AU.fk_orphans(orders, cust, "o_custkey", "c_custkey"),
-            orders,
-        ),
-        (
-            "lineitem_fk_orders",
-            AU.fk_orphans(li, orders, "l_orderkey", "o_orderkey"),
-            li,
-        ),
-        ("customer_pk_unique", AU.duplicate_keys(cust, "c_custkey"), cust),
-        (
-            "lineitem_price_positive",
-            AU.check(li, F.col("l_extendedprice") > 0),
-            li,
-        ),
-        (
-            "lineitem_discount_range",
-            AU.check(
-                li,
-                (F.col("l_discount") >= 0) & (F.col("l_discount") <= 1),
-            ),
-            li,
-        ),
-        (
-            "orders_totalprice_positive",
-            AU.check(orders, F.col("o_totalprice") > 0),
-            orders,
-        ),
-    ]
-    return AU.audit_report(checks)
-
-
-ORACLE_AUDIT = """
-    SELECT * FROM (
-    SELECT 'orders_fk_customer' AS check_name,
-           (SELECT COUNT(*) FROM orders o
-            WHERE o.o_custkey IS NOT NULL
-              AND o.o_custkey NOT IN (SELECT c_custkey FROM customer))
-               AS violations,
-           (SELECT COUNT(*) FROM orders) AS checked
-    UNION ALL
-    SELECT 'lineitem_fk_orders',
-           (SELECT COUNT(*) FROM lineitem l
-            WHERE l.l_orderkey IS NOT NULL
-              AND l.l_orderkey NOT IN (SELECT o_orderkey FROM orders)),
-           (SELECT COUNT(*) FROM lineitem)
-    UNION ALL
-    SELECT 'customer_pk_unique',
-           (SELECT COALESCE(CAST(SUM(extra) AS BIGINT), 0) FROM (
-                SELECT COUNT(*) - 1 AS extra FROM customer
-                GROUP BY c_custkey HAVING COUNT(*) > 1) t),
-           (SELECT COUNT(*) FROM customer)
-    UNION ALL
-    SELECT 'lineitem_price_positive',
-           (SELECT COUNT(*) FROM lineitem
-            WHERE NOT (l_extendedprice > 0)
-               OR (l_extendedprice > 0) IS NULL),
-           (SELECT COUNT(*) FROM lineitem)
-    UNION ALL
-    SELECT 'lineitem_discount_range',
-           (SELECT COUNT(*) FROM lineitem
-            WHERE NOT (l_discount >= 0 AND l_discount <= 1)
-               OR (l_discount >= 0 AND l_discount <= 1) IS NULL),
-           (SELECT COUNT(*) FROM lineitem)
-    UNION ALL
-    SELECT 'orders_totalprice_positive',
-           (SELECT COUNT(*) FROM orders
-            WHERE NOT (o_totalprice > 0) OR (o_totalprice > 0) IS NULL),
-           (SELECT COUNT(*) FROM orders)
-    ) ORDER BY check_name
-"""
-
-
-def q_dup_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-substring-sharing profile over the planted corpus: per doc,
-    how many of its word 8-gram windows appear verbatim in another
-    document (operators/text.py::duplicated_window_stats — the
-    distributed stand-in for suffix-array substring dedup). Run over
-    ``_planted_docs`` so every original/copy pair shares nearly all
-    windows and the signal is non-trivial."""
-    return TX.duplicated_window_stats(_planted_docs(spark, sf_dir), n=8)
-
-
-_GRAMS8 = (
-    "CASE WHEN len(toks) >= 8 THEN list_transform(range(len(toks) - 7), "
-    "i -> array_to_string(toks[i + 1:i + 8], ' ')) "
-    "ELSE [array_to_string(toks, ' ')] END"
-)
-
-ORACLE_DUP_WINDOWS = f"""
-    WITH docs2 AS ({_PLANTED_SQL}),
-    t AS (SELECT doc_id, {_TOKS} AS toks FROM docs2),
-    g AS (SELECT doc_id, {_GRAMS8} AS grams FROM t),
-    h AS (SELECT doc_id,
-                 ('0x' || substr(md5(gram), 1, 15))::BIGINT AS gh
-          FROM (SELECT doc_id, unnest(list_distinct(grams)) AS gram
-                FROM g) u),
-    dfc AS (SELECT gh, COUNT(*) AS df_ FROM h GROUP BY gh),
-    per AS (SELECT doc_id, COUNT(*) AS n_windows,
-                   CAST(SUM(CASE WHEN df_ >= 2 THEN 1 ELSE 0 END) AS BIGINT)
-                       AS dup_windows
-            FROM h JOIN dfc USING (gh) GROUP BY doc_id)
-    SELECT doc_id, n_windows, dup_windows,
-           (dup_windows * 1000000) // n_windows AS dup_ppm
-    FROM per
-"""
-
-
-def q_posting_lists(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Inverted-index construction: per term, document frequency and the
-    first 10 postings (sorted doc ids, comma-joined for hash-stable
-    comparison); top 30 terms by df. One explode + one hash aggregation
-    — the canonical search-index build, partial-agg safe at any corpus
-    size (collect_list is bounded per term by the slice)."""
-    docs = _t(spark, sf_dir, "documents")
-    terms = docs.select(
-        "doc_id",
-        F.explode(
-            F.array_distinct(TX.tokens(TX.normalize_text(F.col("text"))))
-        ).alias("term"),
-    )
-    return (
-        terms.groupBy("term")
-        .agg(
-            F.count(F.lit(1)).alias("doc_freq"),
-            F.concat_ws(
-                ",", F.slice(F.sort_array(F.collect_list("doc_id")), 1, 10)
-            ).alias("postings10"),
-        )
-        .orderBy(F.desc("doc_freq"), "term")
-        .limit(30)
-    )
-
-
-ORACLE_POSTINGS = f"""
-    WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
-    e AS (SELECT doc_id, unnest(list_distinct(toks)) AS term FROM t)
-    SELECT term, COUNT(*) AS doc_freq,
-           array_to_string(list_sort(list(doc_id))[1:10], ',') AS postings10
-    FROM e GROUP BY term
-    ORDER BY doc_freq DESC, term LIMIT 30
-"""
-
-
-def q_conjunctive_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Boolean AND search through the inverted-index shape: documents
-    containing ALL three query terms, resolved as a term-filtered
-    explode + per-doc distinct-term count (the posting-intersection
-    plan: the scan prunes to rows matching any term — at scale, the
-    posting table is term-bucketed so this reads 3 buckets, not the
-    corpus)."""
-    docs = _t(spark, sf_dir, "documents")
-    qterms = ["data", "join", "hash"]
-    terms = docs.select(
-        "doc_id",
-        F.explode(
-            F.array_distinct(TX.tokens(TX.normalize_text(F.col("text"))))
-        ).alias("term"),
-    ).filter(F.col("term").isin(qterms))
-    return (
-        terms.groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("n_matched"))
-        .filter(F.col("n_matched") == len(qterms))
-        .select("doc_id")
-    )
-
-
-ORACLE_CONJUNCTIVE = f"""
-    WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
-    e AS (SELECT doc_id, unnest(list_distinct(toks)) AS term FROM t)
-    SELECT doc_id FROM e WHERE term IN ('data', 'join', 'hash')
-    GROUP BY doc_id HAVING COUNT(*) = 3
-"""
-
-
-def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality-aware canonical selection: LSH near-dup clusters, but the
-    survivor is the LONGEST member (ties: lowest id), not the lowest id
-    — real curation keeps the best copy, not the first-seen. One window
-    over the small component table picks the canonical; cluster sizes
-    and canonical ids are reported per component."""
-    from pyspark.sql import Window
-
-    docs2 = _planted_docs(spark, sf_dir)
-    # star edges, not all-pairs (identical components, r11 A/B); shared
-    # memoized plan — see _planted_component_edges
-    pairs = _planted_component_edges(spark, sf_dir)
-    comp = D.dup_components(pairs)
-    sized = comp.join(
-        docs2.select("doc_id", F.length("text").alias("n_chars")), "doc_id"
-    )
-    w = Window.partitionBy("component_id").orderBy(
-        F.desc("n_chars"), F.col("doc_id")
-    )
-    return (
-        sized.withColumn("_rn", F.row_number().over(w))
-        .groupBy("component_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_members"),
-            F.max(F.when(F.col("_rn") == 1, F.col("doc_id"))).alias(
-                "canonical_id"
-            ),
-        )
-    )
-
-
-ORACLE_KEEP_BEST = (
-    _ORACLE_LSH_CAND.replace("WITH docs2", "WITH RECURSIVE docs2", 1)
-    + """,
-    edges AS (SELECT id_a AS src, id_b AS dst FROM cand
-              UNION SELECT id_b, id_a FROM cand),
-    reach AS (
-        SELECT src AS id, src AS lbl FROM edges
-        UNION
-        SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.id
-    ),
-    comp AS (SELECT id AS doc_id, MIN(lbl) AS component_id
-             FROM reach GROUP BY id),
-    sized AS (SELECT c.component_id, c.doc_id, length(d.text) AS n_chars
-              FROM comp c JOIN docs2 d ON d.doc_id = c.doc_id),
-    ranked AS (SELECT component_id, doc_id,
-                   ROW_NUMBER() OVER (PARTITION BY component_id
-                       ORDER BY n_chars DESC, doc_id) AS rn
-               FROM sized)
-    SELECT component_id, COUNT(*) AS n_members,
-           MAX(CASE WHEN rn = 1 THEN doc_id END) AS canonical_id
-    FROM ranked GROUP BY component_id
-"""
-)
-
-
-def q_rrf_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hybrid-search fusion: the dense ranking (cosine vs query vector 0
-    over embeddings, exact-ppm relevance) and the sparse ranking (the
-    BM25 query) fused with reciprocal-rank fusion
-    (operators/retrieval.py::rrf_fuse) on the shared id space. Scores
-    are exact integers (1e9 div (60 + rank)), so the fused order is a
-    pure function of the two input rankings."""
-    from kafka_firehose_nozzle_spark.operators import retrieval as R
-
-    emb = _t(spark, sf_dir, "embeddings")
-    q = F.broadcast(S.query_vector(emb, 0))
-    v = F.col("embedding").cast("array<double>")
-    sim = S.cosine(v, F.col("query_vec").cast("array<double>"))
-    dense = (
-        emb.crossJoin(q)
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            F.col("vec_id").alias("id"),
-            F.floor(sim * 1000000.0 + F.lit(0.5))
-            .cast("long")
-            .alias("rel_ppm"),
-        )
-    )
-    sparse = q_bm25_scores(spark, sf_dir).select(
-        F.col("doc_id").alias("id"), "bm25"
-    )
-    ra = R.ranked(dense, "rel_ppm", "id", 50)
-    rb = R.ranked(sparse, "bm25", "id", 50)
-    return R.rrf_fuse([ra, rb], id_col="id", k=60)
-
-
-ORACLE_RRF = f"""
-    WITH {_BM25_CTES.strip()},
-    e AS (SELECT vec_id,
-                 list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-          FROM embeddings),
-    qv AS (SELECT v FROM e WHERE vec_id = 0),
-    dense AS (SELECT vec_id AS id,
-                  CAST(FLOOR({_sim_sql('e.v', 'qv.v')} * 1000000.0 + 0.5)
-                      AS BIGINT) AS rel_ppm
-              FROM e CROSS JOIN qv WHERE vec_id <> 0),
-    ra AS (SELECT id, rank FROM (
-               SELECT id, ROW_NUMBER() OVER (
-                   ORDER BY rel_ppm DESC, id) AS rank FROM dense) t
-           WHERE rank <= 50),
-    rb AS (SELECT id, rank FROM (
-               SELECT doc_id AS id, ROW_NUMBER() OVER (
-                   ORDER BY bm25 DESC, doc_id) AS rank FROM bm25_out) t
-           WHERE rank <= 50),
-    u AS (SELECT id, 1000000000 // (60 + rank) AS pts FROM ra
-          UNION ALL SELECT id, 1000000000 // (60 + rank) FROM rb)
-    SELECT id, CAST(SUM(pts) AS BIGINT) AS rrf_score,
-           COUNT(*) AS n_lists
-    FROM u GROUP BY id
-"""
-
-
-def q_mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Maximal-marginal-relevance diversified top-5 from the 20 most
-    relevant candidates (lambda = 0.7) —
-    operators/retrieval.py::mmr_rerank. All picks happen in exact ppm
-    integer space, so the DuckDB oracle replays the greedy selection as
-    5 unrolled CTE steps."""
-    from kafka_firehose_nozzle_spark.operators import retrieval as R
-
-    emb = _t(spark, sf_dir, "embeddings")
-    return R.mmr_rerank(
-        emb, S.query_vector(emb, 0), k=5, pool=20, lam_pct=70
-    )
-
-
-def _mmr_oracle(k: int = 5, pool: int = 20, lam: int = 70) -> str:
-    ctes = [
-        "e AS (SELECT vec_id, list_transform(embedding, x -> "
-        "CAST(x AS DOUBLE)) AS v FROM embeddings)",
-        "qv AS (SELECT v FROM e WHERE vec_id = 0)",
-        f"cand AS (SELECT vec_id, CAST(FLOOR({_sim_sql('e.v', 'qv.v')}"
-        f" * 1000000.0 + 0.5) AS BIGINT) AS rel_ppm, e.v"
-        f" FROM e CROSS JOIN qv WHERE vec_id <> 0"
-        f" ORDER BY rel_ppm DESC, vec_id LIMIT {pool})",
-        f"ps AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b,"
-        f" CAST(FLOOR({_sim_sql('a.v', 'b.v')} * 1000000.0 + 0.5)"
-        f" AS BIGINT) AS sim_ppm"
-        f" FROM cand a JOIN cand b ON a.vec_id <> b.vec_id)",
-        "sel1 AS (SELECT 1 AS mmr_rank, vec_id, rel_ppm FROM cand "
-        "ORDER BY rel_ppm DESC, vec_id LIMIT 1)",
-        "picked1 AS (SELECT vec_id FROM sel1)",
-    ]
-    for i in range(2, k + 1):
-        p = i - 1
-        ctes.append(
-            f"step{i} AS (SELECT c.vec_id, c.rel_ppm, "
-            f"{lam} * c.rel_ppm - {100 - lam} * MAX(ps.sim_ppm) AS score "
-            f"FROM cand c JOIN ps ON ps.id_a = c.vec_id "
-            f"JOIN picked{p} s ON ps.id_b = s.vec_id "
-            f"WHERE c.vec_id NOT IN (SELECT vec_id FROM picked{p}) "
-            f"GROUP BY c.vec_id, c.rel_ppm)"
-        )
-        ctes.append(
-            f"sel{i} AS (SELECT {i} AS mmr_rank, vec_id, rel_ppm "
-            f"FROM step{i} ORDER BY score DESC, vec_id LIMIT 1)"
-        )
-        ctes.append(
-            f"picked{i} AS (SELECT vec_id FROM picked{p} "
-            f"UNION ALL SELECT vec_id FROM sel{i})"
-        )
-    union = " UNION ALL ".join(f"SELECT * FROM sel{i}" for i in range(1, k + 1))
-    return "WITH " + ",\n    ".join(ctes) + f" {union}"
-
-
-ORACLE_MMR = _mmr_oracle(5, 20, 70)
-
-
-def q_pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top principal direction of the embedding corpus (3 power
-    iterations, exact-decimal matrix-vector products, centering via the
-    decimal-mean route) — operators/similarity.py::pca_top_component.
-    The DuckDB oracle replays mean, centering, and all 3 iterations as
-    unrolled CTEs."""
-    emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    return S.pca_top_component(emb, iterations=3)
-
-
-def _pca_oracle(iterations: int = 3, dim: int = 64) -> str:
-    davg20 = (
-        "CAST(CAST(SUM(CAST(val AS DECIMAL(20,12))) AS VARCHAR(64)) "
-        "AS DOUBLE) / COUNT(*)"
-    )
-    dsum30 = (
-        "CAST(CAST(SUM(CAST(term AS DECIMAL(30,12))) AS VARCHAR(64)) "
-        "AS DOUBLE)"
-    )
-
-    def dotl(a: str, b: str) -> str:
-        return (
-            f"list_sum(list_transform(range(len({a})), "
-            f"j -> {a}[j + 1] * {b}[j + 1]))"
-        )
-
-    nrm = "sqrt(list_sum(list_transform(yv, x2 -> x2 * x2)))"
-    ctes = [
-        "e AS (SELECT vec_id, list_transform(embedding, x -> "
-        "CAST(x AS DOUBLE)) AS v FROM embeddings)",
-        "ex AS (SELECT vec_id, unnest(range(len(v))) AS pos, "
-        "unnest(v) AS val FROM e)",
-        f"mean AS (SELECT pos, {davg20} AS m FROM ex GROUP BY pos)",
-        "ml AS (SELECT list(m ORDER BY pos) AS mv FROM mean)",
-        "c AS (SELECT vec_id, list_transform(range(len(v)), "
-        "i -> v[i + 1] - mv[i + 1]) AS cv FROM e CROSS JOIN ml)",
-        f"v0 AS (SELECT list_transform(range({dim}), i -> 0.125) AS vv)",
-    ]
-    for i in range(1, iterations + 1):
-        p = i - 1
-        ctes.append(
-            f"p{i} AS (SELECT vec_id, {dotl('cv', 'vv')} AS proj "
-            f"FROM c CROSS JOIN v{p})"
-        )
-        ctes.append(
-            f"t{i} AS (SELECT u.j AS pos, p.proj * c.cv[u.j + 1] AS term "
-            f"FROM p{i} p JOIN c USING (vec_id), "
-            f"unnest(range({dim})) AS u(j))"
-        )
-        ctes.append(
-            f"y{i} AS (SELECT pos, {dsum30} AS y FROM t{i} GROUP BY pos)"
-        )
-        ctes.append(
-            f"yl{i} AS (SELECT list(y ORDER BY pos) AS yv FROM y{i})"
-        )
-        ctes.append(
-            f"v{i} AS (SELECT list_transform(yv, x -> x / "
-            f"(CASE WHEN {nrm} = 0 THEN 1.0 ELSE {nrm} END)) AS vv "
-            f"FROM yl{i})"
-        )
-    return (
-        "WITH "
-        + ",\n    ".join(ctes)
-        + f"""
-    SELECT u.j AS pos,
-           CAST(FLOOR(vv[u.j + 1] * 1000000.0 + 0.5) AS BIGINT)
-               AS loading_ppm
-    FROM v{iterations}, unnest(range({dim})) AS u(j)
-"""
-    )
-
-
-ORACLE_PCA = _pca_oracle(3, 64)
-
-
-def q_embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-space outlier filter — the curation step that drops
-    noise/garbled vectors before training: assign to medoid cells, then
-    flag vectors whose cosine-to-own-centroid sits more than 1.5
-    population std-devs BELOW the cell mean (the synthetic corpus's
-    z-scores top out ~1.8, so 1.5 keeps the check non-trivial).
-
-    Everything after the assignment is EXACT INTEGER arithmetic on ppm
-    similarities (dev = sum - n*sim; flag iff dev > 0 and
-    4*dev^2 > 9*(n*sumsq - sum^2)) — no float moment ever forms, so both
-    engines agree bit-for-bit with no rounding-route machinery. Scale
-    shape: zero-shuffle assignment (broadcast centroids), one
-    partial-agg shuffle for C x 3 BIGINT moments, broadcast join back."""
-    emb = _t(spark, sf_dir, "embeddings")
-    n = _parquet_nrows(f"{sf_dir}/embeddings.parquet")
-    cents = S.medoid_centroids(emb, max(8, n // 600))
-    assigned = S.ivf_assign(emb, cents)
-    v = F.col("embedding").cast("array<double>")
-    sim = S.cosine(v, F.col("centroid"))
-    scored = assigned.join(F.broadcast(cents), "cell_id").select(
-        "vec_id",
-        "cell_id",
-        F.floor(sim * 1000000.0 + F.lit(0.5)).cast("long").alias("sim_ppm"),
-    )
-    stats = scored.groupBy("cell_id").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("sim_ppm").alias("s1"),
-        F.sum(F.col("sim_ppm") * F.col("sim_ppm")).alias("s2"),
-    )
-    j = scored.join(F.broadcast(stats), "cell_id")
-    dev = F.col("s1") - F.col("n") * F.col("sim_ppm")
-    var9 = F.lit(9) * (
-        F.col("n") * F.col("s2") - F.col("s1") * F.col("s1")
-    )
-    return j.filter((dev > 0) & (F.lit(4) * dev * dev > var9)).select(
-        "vec_id", "cell_id", "sim_ppm"
-    )
-
-
-ORACLE_EMB_OUTLIERS = f"""
-    WITH e AS MATERIALIZED (SELECT vec_id,
-                      list_transform(embedding, y -> CAST(y AS DOUBLE)) AS v
-               FROM embeddings),
-    params AS (SELECT GREATEST(8, COUNT(*) // 600) AS nc FROM e),
-    c AS MATERIALIZED (SELECT vec_id AS cell_id, v AS centroid
-          FROM e CROSS JOIN params WHERE vec_id < params.nc),
-    sims AS (SELECT e.vec_id, c.cell_id,
-                    {_sim_sql('e.v', 'c.centroid')} AS s
-             FROM e CROSS JOIN c),
-    assign AS MATERIALIZED (SELECT vec_id, cell_id FROM (
-        SELECT vec_id, cell_id,
-               ROW_NUMBER() OVER (PARTITION BY vec_id
-                   ORDER BY s DESC, cell_id) AS rn
-        FROM sims) ranked WHERE rn = 1),
-    scored AS MATERIALIZED (SELECT a.vec_id, a.cell_id,
-                   CAST(FLOOR({_sim_sql('e.v', 'c.centroid')} * 1000000.0
-                        + 0.5) AS BIGINT) AS sim_ppm
-               FROM assign a JOIN e ON e.vec_id = a.vec_id
-                             JOIN c ON c.cell_id = a.cell_id),
-    st AS (SELECT cell_id, COUNT(*) AS n,
-                  CAST(SUM(sim_ppm) AS BIGINT) AS s1,
-                  CAST(SUM(sim_ppm * sim_ppm) AS BIGINT) AS s2
-           FROM scored GROUP BY cell_id)
-    SELECT s.vec_id, s.cell_id, s.sim_ppm
-    FROM scored s JOIN st USING (cell_id)
-    WHERE st.s1 - st.n * s.sim_ppm > 0
-      AND 4 * (st.s1 - st.n * s.sim_ppm) * (st.s1 - st.n * s.sim_ppm)
-          > 9 * (st.n * st.s2 - st.s1 * st.s1)
-"""
-# Same growing-cell-count window bomb as ORACLE_SEMDEDUP (nc = n // 600
-# makes the assignment cross product 66.6 M rows at sf10; windowed with
-# two 64-dim double lists per row, DuckDB spilled past the machine —
-# this one filled 76 GB of /tmp before dying): cosine into a scalar CTE
-# first, MATERIALIZED reuse points, and scored (consumed by both the
-# moment aggregate and the final filter) materialized at 200 k scalar
-# rows.  A/B-pinned and strict-compared like the semdedup rewrite.
-
-
-def q_weekly_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weekly retention cohort matrix: cohort = each user's first active
-    week, cell = distinct users active k weeks later. Two hash
-    aggregations (first-week, then cohort x offset distinct) — the
-    growth-dashboard staple. DataFrame-native because Spark and DuckDB
-    type DATE subtraction differently (interval vs day count); the
-    cohort key emits as a string so both engines hash identically."""
-    ev = _t(spark, sf_dir, "events")
-    wk = F.date_trunc("week", F.col("ts")).cast("date")
-    fw = ev.groupBy("user_id").agg(F.min(wk).alias("cohort_week"))
-    act = (
-        ev.join(fw, "user_id")
-        .select(
-            "user_id",
-            "cohort_week",
-            F.expr(
-                "datediff(cast(date_trunc('week', ts) as date), cohort_week)"
-                " div 7"
-            ).alias("week_offset"),
-        )
-        .distinct()
-    )
-    return act.groupBy("cohort_week", "week_offset").agg(
-        F.count(F.lit(1)).alias("n_users")
-    ).select(
-        F.col("cohort_week").cast("string").alias("cohort_week"),
-        "week_offset",
-        "n_users",
-    )
-
-
-ORACLE_RETENTION = """
-    WITH fw AS (SELECT user_id,
-                    MIN(CAST(date_trunc('week', ts) AS DATE)) AS cohort_week
-                FROM events GROUP BY user_id),
-    act AS (SELECT DISTINCT e.user_id, fw.cohort_week,
-                (CAST(date_trunc('week', e.ts) AS DATE) - fw.cohort_week)
-                    // 7 AS week_offset
-            FROM events e JOIN fw ON e.user_id = fw.user_id)
-    SELECT CAST(cohort_week AS VARCHAR) AS cohort_week, week_offset,
-           COUNT(*) AS n_users
-    FROM act GROUP BY cohort_week, week_offset
-"""
-
-
-def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MERGE INTO over the customer table (operators/history.py::
-    merge_upsert): a deterministic update batch rewrites every 10th
-    customer's segment and inserts 50 new keys; the merged result is
-    probed at the affected keys (updated rows show the new segment, the
-    inserts appear, untouched keys keep their column). One unionByName +
-    one per-key window shuffle."""
-    cust = _t(spark, sf_dir, "customer").select(
-        "c_custkey", "c_mktsegment", "c_acctbal"
-    )
-    updates = cust.filter(F.col("c_custkey") % 10 == 0).select(
-        "c_custkey",
-        F.lit("UPDATED").alias("c_mktsegment"),
-        (F.col("c_acctbal") + 1000).alias("c_acctbal"),
-    )
-    inserts = spark.range(50).select(
-        (F.col("id") + 9_000_000).alias("c_custkey"),
-        F.lit("NEWSEG").alias("c_mktsegment"),
-        F.lit(0.0).alias("c_acctbal"),
-    )
-    merged = H.merge_upsert(cust, updates.unionByName(inserts), "c_custkey")
-    return merged.filter(
-        (F.col("c_custkey") % 10 == 0) | (F.col("c_custkey") >= 9_000_000)
-    ).select("c_custkey", "c_mktsegment", "c_acctbal")
-
-
-ORACLE_MERGE = """
-    WITH upd AS (
-        SELECT c_custkey, 'UPDATED' AS c_mktsegment,
-               c_acctbal + 1000 AS c_acctbal
-        FROM customer WHERE c_custkey % 10 = 0
-        UNION ALL
-        SELECT 9000000 + i, 'NEWSEG', 0.0 FROM range(50) t(i)
-    ),
-    merged AS (
-        SELECT * FROM upd
-        UNION ALL
-        SELECT c_custkey, c_mktsegment, c_acctbal FROM customer c
-        WHERE c.c_custkey NOT IN (SELECT c_custkey FROM upd)
-    )
-    SELECT c_custkey, c_mktsegment, CAST(c_acctbal AS DOUBLE) AS c_acctbal
-    FROM merged
-    WHERE c_custkey % 10 = 0 OR c_custkey >= 9000000
-"""
-
-
-def q_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Key-skew diagnosis for the events table — the report that decides
-    whether a join/agg needs salting BEFORE the 100 TB run discovers it:
-    per event_type, row count, distinct users, the heaviest user's exact
-    share in ppm, and the mean rows-per-user in ppm. Two partial-agg
-    passes (per-(type,user) counts, then per-type max/sum) — integer
-    arithmetic end-to-end."""
-    ev = _t(spark, sf_dir, "events")
-    per_user = ev.groupBy("event_type", "user_id").agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    per_type = per_user.groupBy("event_type").agg(
-        F.sum("n").alias("n_rows"),
-        F.count(F.lit(1)).alias("n_users"),
-        F.max("n").alias("max_user_rows"),
-    )
-    return per_type.select(
-        "event_type",
-        "n_rows",
-        "n_users",
-        "max_user_rows",
-        F.expr("max_user_rows * 1000000 div n_rows").alias(
-            "top_user_share_ppm"
-        ),
-        F.expr("n_rows * 1000000 div n_users").alias("rows_per_user_ppm"),
-    )
-
-
-ORACLE_SKEW = """
-    WITH pu AS (SELECT event_type, user_id, COUNT(*) AS n
-                FROM events GROUP BY event_type, user_id),
-    pt AS (SELECT event_type, CAST(SUM(n) AS BIGINT) AS n_rows,
-               COUNT(*) AS n_users, MAX(n) AS max_user_rows
-           FROM pu GROUP BY event_type)
-    SELECT event_type, n_rows, n_users, max_user_rows,
-        (max_user_rows * 1000000) // n_rows AS top_user_share_ppm,
-        (n_rows * 1000000) // n_users AS rows_per_user_ppm
-    FROM pt
-"""
-
-
-def q_contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Contrastive training-pair mining for embedding-model data prep:
-    for every document long enough to yield two chunks, the (anchor,
-    positive) pair is its first two 64-token chunks and the negative is
-    the first chunk of a deterministically hashed OTHER document
-    (in-batch-negative style, but reproducible). Chunks travel as md5
-    digests — fixed-width keys, never chunk text, cross the one
-    neg-doc join shuffle."""
-    docs = _t(spark, sf_dir, "documents")
-    n_docs = _parquet_nrows(f"{sf_dir}/documents.parquet")
-    toks = TX.tokens(TX.normalize_text(F.col("text")))
-    base = docs.select("doc_id", toks.alias("tk")).withColumn(
-        "n", F.size("tk")
-    )
-    neg = F.pmod(F.col("doc_id") * 31 + 7, F.lit(n_docs))
-    anchors = (
-        base.filter(F.col("n") > 64)
-        .select(
-            "doc_id",
-            F.md5(F.concat_ws(" ", F.slice("tk", 1, 64))).alias(
-                "anchor_md5"
-            ),
-            F.md5(F.concat_ws(" ", F.slice("tk", 57, 64))).alias(
-                "positive_md5"
-            ),
-            neg.alias("neg_doc_id"),
-        )
-        .withColumn(
-            "neg_doc_id",
-            F.when(
-                F.col("neg_doc_id") == F.col("doc_id"),
-                F.pmod(F.col("neg_doc_id") + 1, F.lit(n_docs)),
-            ).otherwise(F.col("neg_doc_id")),
-        )
-    )
-    negs = base.select(
-        F.col("doc_id").alias("neg_doc_id"),
-        F.md5(F.concat_ws(" ", F.slice("tk", 1, 64))).alias("negative_md5"),
-    )
-    return anchors.join(negs, "neg_doc_id").select(
-        "doc_id", "anchor_md5", "positive_md5", "neg_doc_id", "negative_md5"
-    )
-
-
-ORACLE_CONTRASTIVE = f"""
-    WITH t AS (SELECT doc_id, {_TOKS} AS tk FROM documents),
-    b AS (SELECT doc_id, tk, len(tk) AS n FROM t),
-    nd AS (SELECT COUNT(*) AS n_docs FROM documents),
-    a0 AS (SELECT doc_id,
-               md5(array_to_string(tk[1:64], ' ')) AS anchor_md5,
-               md5(array_to_string(tk[57:120], ' ')) AS positive_md5,
-               (doc_id * 31 + 7) % n_docs AS neg0, n_docs
-           FROM b CROSS JOIN nd WHERE n > 64),
-    a AS (SELECT doc_id, anchor_md5, positive_md5,
-              CASE WHEN neg0 = doc_id THEN (neg0 + 1) % n_docs
-                   ELSE neg0 END AS neg_doc_id
-          FROM a0),
-    negs AS (SELECT doc_id AS neg_doc_id,
-                 md5(array_to_string(tk[1:64], ' ')) AS negative_md5
-             FROM b)
-    SELECT a.doc_id, anchor_md5, positive_md5, a.neg_doc_id, negative_md5
-    FROM a JOIN negs ON a.neg_doc_id = negs.neg_doc_id
-"""
-
-
-def q_quality_classifier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Linear quality-classifier INFERENCE in-engine (the fasttext-style
-    filter LLM pipelines run over every document): hashing-trick
-    bag-of-words (64 buckets), per-bucket integer milli-weights derived
-    from md5 (a stand-in for trained weights — the plan shape is what
-    matters: swap in real weights as a literal map), logit and
-    per-token logit emitted as EXACT integers. explode -> bucket tf
-    partial agg -> 64-row broadcast weight join -> per-doc sum; no
-    float forms anywhere."""
-    docs = _t(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id",
-        F.explode(TX.tokens(TX.normalize_text(F.col("text")))).alias("tok"),
-    )
-    bucket = F.pmod(
-        F.conv(F.substring(F.md5(F.col("tok")), 1, 15), 16, 10).cast("long"),
-        F.lit(64),
-    )
-    tf = toks.select("doc_id", bucket.alias("b")).groupBy(
-        "doc_id", "b"
-    ).agg(F.count(F.lit(1)).alias("tf"))
-    w = spark.range(64).select(
-        F.col("id").alias("b"),
-        (
-            F.pmod(
-                F.conv(
-                    F.substring(
-                        F.md5(F.concat(F.lit("w#"), F.col("id"))), 1, 15
-                    ),
-                    16,
-                    10,
-                ).cast("long"),
-                F.lit(2001),
-            )
-            - 1000
-        ).alias("w_milli"),
-    )
-    per_doc = (
-        tf.join(F.broadcast(w), "b")
-        .groupBy("doc_id")
-        .agg(
-            F.sum(F.col("w_milli") * F.col("tf")).alias("z_milli"),
-            F.sum("tf").alias("n_tokens"),
-        )
-    )
-    return per_doc.select(
-        "doc_id",
-        "z_milli",
-        F.expr("z_milli * 1000 div n_tokens").alias("per_token_z_ppm"),
-        (F.col("z_milli") > 0).alias("keep"),
-    )
-
-
-ORACLE_QUALITY_CLF = f"""
-    WITH t AS (SELECT doc_id, unnest({_TOKS}) AS tok FROM documents),
-    tf AS (SELECT doc_id,
-               ('0x' || substr(md5(tok), 1, 15))::BIGINT % 64 AS b,
-               COUNT(*) AS tf
-           FROM t GROUP BY 1, 2),
-    w AS (SELECT i AS b,
-              ('0x' || substr(md5('w#' || i), 1, 15))::BIGINT % 2001 - 1000
-                  AS w_milli
-          FROM range(64) r(i)),
-    per_doc AS (SELECT doc_id,
-                    CAST(SUM(w_milli * tf) AS BIGINT) AS z_milli,
-                    CAST(SUM(tf) AS BIGINT) AS n_tokens
-                FROM tf JOIN w USING (b) GROUP BY doc_id)
-    SELECT doc_id, z_milli,
-        -- DuckDB's // ALSO truncates toward zero (-7 // 2 = -3, verified;
-        -- same as Spark div), so this CASE is purely defensive: it pins
-        -- truncation semantics for negative logits even on a DuckDB
-        -- build that switched // to flooring. See _avg_micro_expr.
-        CASE WHEN z_milli >= 0 THEN (z_milli * 1000) // n_tokens
-             ELSE -((-z_milli * 1000) // n_tokens)
-        END AS per_token_z_ppm,
-        z_milli > 0 AS keep
-    FROM per_doc
-"""
-
-
-def q_corpus_datasheet(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One-stop dataset datasheet (the 'datasheets for datasets' summary
-    a corpus release ships with): doc/vocab/language/source
-    cardinalities, total token count, exact-duplicate count, and the
-    mean length in exact ppm — every value a BIGINT, produced from two
-    scans (one raw aggregate + one tokenized aggregate) glued by a
-    metric/value union."""
-    docs = _t(spark, sf_dir, "documents")
-    toks = docs.select(
-        F.explode(TX.tokens(TX.normalize_text(F.col("text")))).alias("t")
-    )
-    base = docs.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.count_distinct("lang").alias("n_langs"),
-        F.count_distinct("source").alias("n_sources"),
-        F.sum("n_chars").alias("sum_chars"),
-        (
-            F.count(F.lit(1))
-            - F.count_distinct(F.md5(TX.normalize_text(F.col("text"))))
-        ).alias("exact_dup_docs"),
-    )
-    tok = toks.agg(
-        F.count(F.lit(1)).alias("total_tokens"),
-        F.count_distinct("t").alias("vocab_size"),
-    )
-    j = base.crossJoin(tok)
-    metrics = [
-        ("n_docs", F.col("n_docs")),
-        ("n_langs", F.col("n_langs")),
-        ("n_sources", F.col("n_sources")),
-        ("exact_dup_docs", F.col("exact_dup_docs")),
-        ("mean_chars_ppm", F.expr("sum_chars * 1000000 div n_docs")),
-        ("total_tokens", F.col("total_tokens")),
-        ("vocab_size", F.col("vocab_size")),
-        ("mean_tokens_ppm", F.expr("total_tokens * 1000000 div n_docs")),
-    ]
-    out = None
-    for name, col in metrics:
-        row = j.select(
-            F.lit(name).alias("metric"), col.cast("long").alias("value")
-        )
-        out = row if out is None else out.unionAll(row)
-    return out.orderBy("metric")
-
-
-ORACLE_DATASHEET = f"""
-    WITH base AS (SELECT COUNT(*) AS n_docs,
-                      COUNT(DISTINCT lang) AS n_langs,
-                      COUNT(DISTINCT source) AS n_sources,
-                      CAST(SUM(n_chars) AS BIGINT) AS sum_chars,
-                      COUNT(*) - COUNT(DISTINCT md5(lower(trim(
-                          regexp_replace(text, '\\s+', ' ', 'g')))))
-                          AS exact_dup_docs
-                  FROM documents),
-    tok AS (SELECT COUNT(*) AS total_tokens, COUNT(DISTINCT t) AS vocab_size
-            FROM (SELECT unnest({_TOKS}) AS t FROM documents) u)
-    SELECT metric, value FROM (
-        SELECT 'n_docs' AS metric, CAST(n_docs AS BIGINT) AS value
-        FROM base
-        UNION ALL SELECT 'n_langs', n_langs FROM base
-        UNION ALL SELECT 'n_sources', n_sources FROM base
-        UNION ALL SELECT 'exact_dup_docs', exact_dup_docs FROM base
-        UNION ALL SELECT 'mean_chars_ppm',
-            (sum_chars * 1000000) // n_docs FROM base
-        UNION ALL SELECT 'total_tokens', total_tokens FROM tok
-        UNION ALL SELECT 'vocab_size', vocab_size FROM tok
-        UNION ALL SELECT 'mean_tokens_ppm',
-            (tok.total_tokens * 1000000) // base.n_docs
-        FROM tok CROSS JOIN base
-    ) ORDER BY metric
-"""
-
-
-def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """END-TO-END corpus curation — the full pre-training prep chain in
-    one plan: Gopher-style quality gates (the funnel's g1..g4) ->
-    exact dedup (keep min id per content fingerprint) -> per-source
-    frequency cap (30 best by md5 rank) -> chunk arithmetic; reported
-    per source as (docs kept, chunks produced). Every stage is an
-    operator the registry checks in isolation; this query proves they
-    COMPOSE — one plan, three shuffles (dedup agg, source-cap window,
-    final rollup), no driver loop."""
-    from kafka_firehose_nozzle_spark.operators.sampling import (
-        cap_per_group,
-        hash_rank,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    text = F.col("text")
-    n_tok = TX.token_count(text)
-    g1 = (n_tok >= 10) & (n_tok <= 100000)
-    g2 = g1 & (TX.stopword_ratio(text) >= 0.01)
-    g3 = g2 & (TX.punct_ratio(text) <= 0.2)
-    wl = TX.avg_word_len(text)
-    g4 = g3 & (wl >= 2) & (wl <= 12)
-    passed = docs.filter(g4)
-    from pyspark.sql import Window
-
-    fp = F.md5(TX.normalize_text(text))
-    wded = Window.partitionBy("_fp").orderBy("doc_id")
-    deduped = (
-        passed.withColumn("_fp", fp)
-        .withColumn("_rn", F.row_number().over(wded))
-        .filter(F.col("_rn") == 1)
-        .drop("_fp", "_rn")
-    )
-    capped = cap_per_group(
-        deduped, "source", [hash_rank(F.col("doc_id")), F.col("doc_id")], 30
-    )
-    toks = TX.tokens(TX.normalize_text(text))
-    n = F.size(toks)
-    n_chunks = F.greatest(
-        F.lit(1), F.ceil((n - F.lit(64)) / F.lit(56)) + 1
-    ).cast("long")
-    return (
-        capped.withColumn("n_chunks", n_chunks)
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("docs_kept"),
-            F.sum("n_chunks").alias("total_chunks"),
-        )
-    )
-
-
-ORACLE_CURATION = f"""
-    WITH t AS (SELECT doc_id, source, text,
-        list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '')
-            AS rtoks
-    FROM documents),
-    m AS (SELECT doc_id, source, text,
-        len(rtoks) AS n_tok,
-        len(list_filter(list_transform(rtoks, x -> lower(x)),
-            x -> list_contains(
-                ['the','a','of','to','and','in','is','it','for','on'], x)))
-            AS n_stop,
-        length(text) AS n_chars,
-        length(regexp_replace(text, '[^\\w\\s]', '', 'g')) AS n_nopunct,
-        list_sum(list_transform(rtoks, x -> length(x))) AS tok_chars
-    FROM t),
-    passed AS (SELECT doc_id, source, text FROM m
-        WHERE (n_tok >= 10 AND n_tok <= 100000)
-          AND (n_tok > 0 AND CAST(n_stop AS DOUBLE) / n_tok >= 0.01)
-          AND (n_chars = 0
-               OR CAST(n_chars - n_nopunct AS DOUBLE) / n_chars <= 0.2)
-          AND (n_tok > 0 AND CAST(tok_chars AS DOUBLE) / n_tok >= 2
-               AND CAST(tok_chars AS DOUBLE) / n_tok <= 12)),
-    deduped AS (SELECT doc_id, source, text FROM (
-        SELECT doc_id, source, text, ROW_NUMBER() OVER (
-            PARTITION BY md5(lower(trim(regexp_replace(text, '\\s+', ' ',
-            'g')))) ORDER BY doc_id) AS rn FROM passed) d WHERE rn = 1),
-    capped AS (SELECT doc_id, source, text FROM (
-        SELECT doc_id, source, text, ROW_NUMBER() OVER (
-            PARTITION BY source
-            ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rk
-        FROM deduped) c WHERE rk <= 30),
-    chunked AS (SELECT source,
-        CAST(GREATEST(1, CEIL((len({_TOKS}) - 64) / 56.0) + 1) AS BIGINT)
-            AS n_chunks
-    FROM capped)
-    SELECT source, COUNT(*) AS docs_kept,
-        CAST(SUM(n_chunks) AS BIGINT) AS total_chunks
-    FROM chunked GROUP BY source
-"""
-
-
-def q_substring_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Substring-level dedup signal (Lee et al. 2022): per document, the
-    fraction of its sampled 8-token windows (stride 4) whose hash occurs
-    in more than one distinct document. Whole-document fingerprints miss
-    boilerplate shared across otherwise-different pages; this catches it
-    with explode + two-phase agg + equi-join — never pairwise in docs.
-    The fraction is produced in exact BIGINT micro-units (no double is
-    ever rounded)."""
-    docs = _fanned_docs(spark, sf_dir)
-    per = D.duplicated_span_counts(docs, k=8, stride=4)
-    frac_micro = _avg_micro_expr("dup_windows", "n_windows")
-    return per.select(
-        "doc_id",
-        "n_windows",
-        "dup_windows",
-        (frac_micro.cast("double") / F.lit(1000000.0)).alias("dup_frac"),
-    )
-
-
-ORACLE_SUBSTRING_SPANS = f"""
-    WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
-    w AS (SELECT doc_id, CASE WHEN len(toks) >= 8 THEN
-            list_transform(
-                list_filter(generate_series(1, len(toks) - 7),
-                            i -> (i - 1) % 4 = 0),
-                i -> md5(array_to_string(toks[i:i+7], ' ')))
-          ELSE [md5(array_to_string(toks, ' '))] END AS ws FROM t),
-    e AS (SELECT doc_id, unnest(ws) AS wh FROM w),
-    c AS (SELECT wh, COUNT(DISTINCT doc_id) AS nd FROM e GROUP BY wh),
-    p AS (SELECT e.doc_id, COUNT(*) AS n_windows,
-                 CAST(SUM(CASE WHEN nd > 1 THEN 1 ELSE 0 END) AS BIGINT)
-                     AS dup_windows
-          FROM e JOIN c USING (wh) GROUP BY e.doc_id)
-    SELECT doc_id, n_windows, dup_windows,
-        CAST((dup_windows // n_windows) * 1000000
-             + ((dup_windows % n_windows) * 2000000 + n_windows)
-               // (2 * n_windows) AS DOUBLE) / 1000000.0 AS dup_frac
-    FROM p
-"""
-
-
-def q_loglog_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Durand–Flajolet LogLog distinct-user estimate per event type,
-    bit-reproducible across engines (md5 registers, string-op rank,
-    exact int64 register combine, one IEEE division). The scale story
-    vs count_distinct: the shuffle carries <= 64 rows per group instead
-    of every raw key. Exact count alongside for the error budget."""
-    ev = _t(spark, sf_dir, "events")
-    est = D.loglog_distinct(ev, "user_id", ["event_type"], m=64)
-    exact = ev.groupBy("event_type").agg(
-        F.count_distinct("user_id").alias("exact_distinct")
-    )
-    return est.join(exact, "event_type").select(
-        "event_type", "est_distinct", "n_regs", "exact_distinct"
-    )
-
-
-ORACLE_LOGLOG = """
-    WITH h AS (SELECT event_type,
-            md5(CAST(user_id AS VARCHAR) || '#hll') AS hx
-        FROM events),
-    r AS (SELECT event_type,
-            CAST(('0x' || substr(hx, 1, 2)) AS BIGINT) % 64 AS reg,
-            length(regexp_extract(substr(hx, 3, 12), '^0*')) AS z,
-            substr(substr(hx, 3, 12),
-                   length(regexp_extract(substr(hx, 3, 12), '^0*')) + 1,
-                   1) AS d
-        FROM h),
-    rk AS (SELECT event_type, reg,
-            CASE WHEN z >= 12 THEN 49
-                 ELSE 4 * z + (4 - CASE WHEN d >= '8' THEN 4
-                                        WHEN d >= '4' THEN 3
-                                        WHEN d >= '2' THEN 2
-                                        ELSE 1 END) + 1 END AS rank
-        FROM r),
-    regs AS (SELECT event_type, reg, MAX(rank) AS mx
-             FROM rk GROUP BY event_type, reg),
-    per AS (SELECT event_type,
-            SUM(CAST(1 AS BIGINT) << CAST(50 - mx AS INT)) AS s_present,
-            COUNT(*) AS n_regs
-        FROM regs GROUP BY event_type),
-    ex AS (SELECT event_type, COUNT(DISTINCT user_id) AS exact_distinct
-           FROM events GROUP BY event_type),
-    est AS (SELECT event_type, n_regs,
-            3271368652461744128.0
-                / CAST(s_present + (64 - n_regs)
-                       * CAST(1125899906842624 AS BIGINT) AS DOUBLE)
-                AS raw
-        FROM per)
-    SELECT est.event_type,
-        FLOOR(CASE WHEN raw < 160.0 AND n_regs < 64
-                   THEN 64.0 * ln(64.0 / CAST(64 - n_regs AS DOUBLE))
-                   ELSE raw END * 1000000.0 + 0.5) / 1000000.0
-            AS est_distinct,
-        CAST(n_regs AS BIGINT) AS n_regs,
-        exact_distinct
-    FROM est JOIN ex ON est.event_type = ex.event_type
-"""
-
-
-def q_part_name_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Entity resolution over the part catalog: near-duplicate canonical
-    names via rarest-token blocking + Levenshtein verify. Candidate
-    pairs form over DISTINCT names (vocabulary-bound at 100 TB), never
-    raw rows; per-row facts come along as aggregated counts."""
-    from kafka_firehose_nozzle_spark.operators.linkage import (
-        blocked_name_pairs,
-    )
-
-    part = _t(spark, sf_dir, "part")
-    return blocked_name_pairs(
-        part.select(F.col("p_name")), "p_name", max_distance=4
-    )
-
-
-ORACLE_PART_MATCHES = """
-    WITH names AS (SELECT p_name AS name, COUNT(*) AS n_rows
-                   FROM part GROUP BY p_name),
-    toks AS (SELECT name, unnest(list_distinct(string_split(name, ' ')))
-                 AS tok FROM names),
-    freq AS (SELECT tok, COUNT(*) AS df_tok FROM toks GROUP BY tok),
-    keyed AS (SELECT name, block_key, n_rows FROM (
-        SELECT t.name, t.tok AS block_key, n.n_rows,
-            ROW_NUMBER() OVER (PARTITION BY t.name
-                               ORDER BY f.df_tok, t.tok) AS rn
-        FROM toks t JOIN freq f ON t.tok = f.tok
-        JOIN names n ON t.name = n.name) k WHERE rn <= 2),
-    cand AS (SELECT DISTINCT a.name AS name_1, b.name AS name_2,
-            a.n_rows AS n_rows_1, b.n_rows AS n_rows_2
-        FROM keyed a JOIN keyed b ON a.block_key = b.block_key
-        WHERE a.name < b.name)
-    SELECT name_1, name_2, levenshtein(name_1, name_2) AS lev,
-        n_rows_1, n_rows_2
-    FROM cand
-    WHERE levenshtein(name_1, name_2) BETWEEN 1 AND 4
-"""
-
-
-def q_trimmed_event_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Robust per-type statistics: the 5%-trimmed mean of event value
-    (drop floor(n/20) rows from each tail, deterministic (value,
-    event_id) tie-break). Each kept value converts to exact integer
-    micro-units BEFORE summation, so the aggregate is order-independent
-    and no double is ever rounded. Scale shape: one shuffle to rank
-    within event_type; at 100 TB the per-type sort is the cost — for
-    heavy keys you'd swap in an approx-quantile cut, traded here for
-    exact-oracle checkability."""
-    from pyspark.sql import Window
-
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("event_type").orderBy("value", "event_id")
-    ranked = ev.select(
-        "event_type",
-        "value",
-        "event_id",
-        F.row_number().over(w).alias("rn"),
-        F.count(F.lit(1))
-        .over(Window.partitionBy("event_type"))
-        .alias("n"),
-    )
-    kept = ranked.filter(
-        (F.col("rn") > F.expr("n div 20"))
-        & (F.col("rn") <= F.col("n") - F.expr("n div 20"))
-    )
-    vmicro = F.floor(
-        F.col("value") * F.lit(1000000.0) + F.lit(0.5)
-    ).cast("bigint")
-    agg = kept.groupBy("event_type").agg(
-        F.sum(vmicro).alias("s"),
-        F.count(F.lit(1)).alias("k"),
-    )
-    # s is micro-units already: round-half-up s/k stays in BIGINT.
-    # Sign-safe: the remainder form assumes s >= 0 (true for the
-    # fixture, value >= 0.01), so negative sums take the mirrored
-    # branch — half-away-from-zero on both engines, no reliance on
-    # either engine's negative div/% convention.
-    mean_micro = F.expr(
-        "CASE WHEN s >= 0 THEN (s div k) + ((s % k) * 2 + k) div (2 * k)"
-        " ELSE -(((-s) div k) + (((-s) % k) * 2 + k) div (2 * k)) END"
-    )
-    return agg.select(
-        "event_type",
-        F.col("k").alias("n_kept"),
-        (mean_micro.cast("double") / F.lit(1000000.0)).alias(
-            "trimmed_mean"
-        ),
-    )
-
-
-ORACLE_TRIMMED = """
-    WITH ranked AS (SELECT event_type, value, event_id,
-            ROW_NUMBER() OVER (PARTITION BY event_type
-                               ORDER BY value, event_id) AS rn,
-            COUNT(*) OVER (PARTITION BY event_type) AS n
-        FROM events),
-    kept AS (SELECT event_type,
-            CAST(FLOOR(value * 1000000.0 + 0.5) AS BIGINT) AS vm
-        FROM ranked WHERE rn > n // 20 AND rn <= n - n // 20),
-    agg AS (SELECT event_type, SUM(vm) AS s, COUNT(*) AS k
-            FROM kept GROUP BY event_type)
-    SELECT event_type, k AS n_kept,
-        CAST(CASE WHEN s >= 0
-                  THEN (s // k) + ((s % k) * 2 + k) // (2 * k)
-                  ELSE -(((-s) // k) + (((-s) % k) * 2 + k) // (2 * k))
-             END AS DOUBLE)
-            / 1000000.0 AS trimmed_mean
-    FROM agg
-"""
-
-
-def q_user_activity_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sparse time-series similarity: the 5 users whose hourly activity
-    vector (sum of event value per hour, milli-unit exact) is most
-    cosine-similar to the lowest-id anchor user. Vectors never
-    materialize — the dot product is a broadcast equi-join on the hour
-    bucket against the single anchor vector; norms and dots accumulate
-    in exact DECIMAL and convert via VARCHAR (the repo's cross-engine
-    exactness idiom), so ties and last-ulp ranks are deterministic."""
-    ev = _t(spark, sf_dir, "events")
-    anchor = ev.agg(F.min("user_id").alias("user_id"))
-    return S.sparse_cosine_topk(
-        ev,
-        "user_id",
-        F.date_trunc("hour", F.col("ts")),
-        F.col("value"),
-        anchor,
-        k=5,
-    )
-
-
-ORACLE_USER_SIM = """
-    WITH comps AS (SELECT user_id AS k_, date_trunc('hour', ts) AS b_,
-            CAST(SUM(CAST(FLOOR(value * 1000.0 + 0.5) AS DECIMAL(18,0)))
-                 AS DECIMAL(18,0)) AS sv
-        FROM events GROUP BY 1, 2),
-    a AS (SELECT b_, sv AS sa FROM comps
-          WHERE k_ = (SELECT MIN(user_id) FROM events)),
-    na AS (SELECT CAST(SUM(CAST(sa * sa AS DECIMAL(38,0)))
-                       AS DECIMAL(38,0)) AS na2 FROM a),
-    norms AS (SELECT k_, CAST(SUM(CAST(sv * sv AS DECIMAL(38,0)))
-                              AS DECIMAL(38,0)) AS n2
-              FROM comps GROUP BY 1),
-    dots AS (SELECT c.k_, CAST(SUM(CAST(c.sv * a.sa AS DECIMAL(38,0)))
-                               AS DECIMAL(38,0)) AS dot
-             FROM comps c JOIN a USING (b_) GROUP BY 1)
-    SELECT k_ AS user_id,
-        FLOOR(CAST(CAST(dot AS VARCHAR) AS DOUBLE)
-              / (sqrt(CAST(CAST(n2 AS VARCHAR) AS DOUBLE))
-                 * sqrt(CAST(CAST(na2 AS VARCHAR) AS DOUBLE)))
-              * 1000000.0 + 0.5) / 1000000.0 AS cos_sim
-    FROM dots JOIN norms USING (k_) CROSS JOIN na
-    WHERE k_ <> (SELECT MIN(user_id) FROM events)
-    ORDER BY cos_sim DESC, user_id LIMIT 5
-"""
-
-
-def q_daily_distinct_estimates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Daily-active-users by sketch: per (event_type, day), the LogLog
-    distinct-user estimate — the report every 100 TB event lake runs
-    hourly, at <= 64 shuffled rows per group instead of a raw-key
-    count_distinct shuffle. Small groups take the linear-counting path;
-    the estimate is bit-deterministic cross-engine (see
-    operators.dedup.loglog_finalize)."""
-    ev = _t(spark, sf_dir, "events").withColumn(
-        "day", F.date_format(F.col("ts"), "yyyy-MM-dd")
-    )
-    return D.loglog_distinct(ev, "user_id", ["event_type", "day"], m=64)
-
-
-ORACLE_DAILY_LL = """
-    WITH h AS (SELECT event_type, strftime(ts, '%Y-%m-%d') AS day,
-            md5(CAST(user_id AS VARCHAR) || '#hll') AS hx
-        FROM events),
-    r AS (SELECT event_type, day,
-            CAST(('0x' || substr(hx, 1, 2)) AS BIGINT) % 64 AS reg,
-            length(regexp_extract(substr(hx, 3, 12), '^0*')) AS z,
-            substr(substr(hx, 3, 12),
-                   length(regexp_extract(substr(hx, 3, 12), '^0*')) + 1,
-                   1) AS d
-        FROM h),
-    rk AS (SELECT event_type, day, reg,
-            CASE WHEN z >= 12 THEN 49
-                 ELSE 4 * z + (4 - CASE WHEN d >= '8' THEN 4
-                                        WHEN d >= '4' THEN 3
-                                        WHEN d >= '2' THEN 2
-                                        ELSE 1 END) + 1 END AS rank
-        FROM r),
-    regs AS (SELECT event_type, day, reg, MAX(rank) AS mx
-             FROM rk GROUP BY 1, 2, 3),
-    per AS (SELECT event_type, day,
-            SUM(CAST(1 AS BIGINT) << CAST(50 - mx AS INT)) AS s_present,
-            COUNT(*) AS n_regs
-        FROM regs GROUP BY 1, 2),
-    est AS (SELECT event_type, day, n_regs,
-            3271368652461744128.0
-                / CAST(s_present + (64 - n_regs)
-                       * CAST(1125899906842624 AS BIGINT) AS DOUBLE)
-                AS raw
-        FROM per)
-    SELECT event_type, day,
-        FLOOR(CASE WHEN raw < 160.0 AND n_regs < 64
-                   THEN 64.0 * ln(64.0 / CAST(64 - n_regs AS DOUBLE))
-                   ELSE raw END * 1000000.0 + 0.5) / 1000000.0
-            AS est_distinct,
-        CAST(n_regs AS BIGINT) AS n_regs
-    FROM est
-"""
-
-
-def q_boilerplate_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The 20 most widespread boilerplate spans: 8-token windows
-    (stride 4) ranked by how many DISTINCT documents contain them —
-    the report that tells a corpus curator WHAT the substring-dedup
-    pass would remove. TakeOrdered on (docs desc, hash asc); the
-    window hash stands in for the span text so no long strings cross
-    the shuffle."""
-    docs = _fanned_docs(spark, sf_dir)
-    w = D.span_rows(docs)
-    return (
-        w.groupBy("wh")
-        .agg(F.count_distinct("doc_id").alias("n_docs"))
-        .filter(F.col("n_docs") > 1)
-        .orderBy(F.desc("n_docs"), "wh")
-        .limit(20)
-    )
-
-
-ORACLE_BOILERPLATE = f"""
-    WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
-    w AS (SELECT doc_id, CASE WHEN len(toks) >= 8 THEN
-            list_transform(
-                list_filter(generate_series(1, len(toks) - 7),
-                            i -> (i - 1) % 4 = 0),
-                i -> md5(array_to_string(toks[i:i+7], ' ')))
-          ELSE [md5(array_to_string(toks, ' '))] END AS ws FROM t),
-    e AS (SELECT doc_id, unnest(ws) AS wh FROM w)
-    SELECT wh, COUNT(DISTINCT doc_id) AS n_docs
-    FROM e GROUP BY wh HAVING COUNT(DISTINCT doc_id) > 1
-    ORDER BY n_docs DESC, wh LIMIT 20
-"""
-
-
-def q_hourly_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Seasonality profile: per (event_type, hour-of-day), event count,
-    micro-unit mean value, and the seasonality index — this hour's mean
-    over the type's all-hours mean, in ppm by EXACT integer arithmetic
-    (sum_h * n_total * 1e6) div (n_h * sum_total), so no double forms
-    anywhere: Spark holds the product in DECIMAL(38,0); the oracle must
-    use HUGEINT because DuckDB silently widens an over-38-digit decimal
-    product to DOUBLE, which floors one ulp low on ~half the rows
-    (observed at sf0.01). One scan, two partial aggregations, a
-    broadcast-size rejoin on event_type — the 100 TB shape of every
-    diurnal-load report."""
-    ev = _t(spark, sf_dir, "events")
-    vm = F.floor(F.col("value") * F.lit(1000000.0) + F.lit(0.5)).cast(
-        "bigint"
-    )
-    hourly = (
-        ev.select(
-            "event_type",
-            F.hour("ts").alias("hour_of_day"),
-            vm.alias("vm"),
-        )
-        .groupBy("event_type", "hour_of_day")
-        .agg(F.count(F.lit(1)).alias("n_events"), F.sum("vm").alias("s"))
-    )
-    totals = hourly.groupBy("event_type").agg(
-        F.sum("n_events").alias("n_tot"), F.sum("s").alias("s_tot")
-    )
-    # Sign-safe half-up (see trimmed_event_stats): mirrored branch for
-    # negative sums so neither engine's negative div/% convention is
-    # load-bearing; identical to the plain form on the non-negative
-    # fixture values.
-    mean_micro = F.expr(
-        "CASE WHEN s >= 0 THEN (s div n_events)"
-        " + ((s % n_events) * 2 + n_events) div (2 * n_events)"
-        " ELSE -(((-s) div n_events)"
-        " + (((-s) % n_events) * 2 + n_events) div (2 * n_events)) END"
-    )
-    # index_ppm = (s/n) / (s_tot/n_tot) * 1e6, exactly:
-    #   (s * n_tot * 1e6) div (n_events * s_tot)   [all BIGINT-safe at
-    #   micro-units <= 5e8 and group counts <= 1e9 via the decimal cast]
-    idx = F.expr(
-        "CAST((CAST(s AS DECIMAL(38,0)) * n_tot * 1000000)"
-        " div (CAST(n_events AS DECIMAL(38,0)) * s_tot) AS BIGINT)"
-    )
-    return (
-        hourly.join(F.broadcast(totals), "event_type")
-        .select(
-            "event_type",
-            "hour_of_day",
-            "n_events",
-            (mean_micro.cast("double") / F.lit(1000000.0)).alias(
-                "mean_value"
-            ),
-            idx.alias("season_ppm"),
-        )
-    )
-
-
-ORACLE_SEASONALITY = """
-    WITH h AS (SELECT event_type, EXTRACT(hour FROM ts) AS hour_of_day,
-            CAST(FLOOR(value * 1000000.0 + 0.5) AS BIGINT) AS vm
-        FROM events),
-    hourly AS (SELECT event_type, hour_of_day, COUNT(*) AS n_events,
-                      SUM(vm) AS s
-               FROM h GROUP BY 1, 2),
-    totals AS (SELECT event_type, SUM(n_events) AS n_tot, SUM(s) AS s_tot
-               FROM hourly GROUP BY 1)
-    SELECT hourly.event_type, CAST(hour_of_day AS INT) AS hour_of_day,
-        n_events,
-        CAST(CASE WHEN s >= 0
-                  THEN (s // n_events)
-                       + ((s % n_events) * 2 + n_events) // (2 * n_events)
-                  ELSE -(((-s) // n_events)
-                       + (((-s) % n_events) * 2 + n_events) // (2 * n_events))
-             END AS DOUBLE) / 1000000.0 AS mean_value,
-        CAST((CAST(s AS HUGEINT) * n_tot * 1000000)
-             // (CAST(n_events AS HUGEINT) * s_tot) AS BIGINT)
-            AS season_ppm
-    FROM hourly JOIN totals ON hourly.event_type = totals.event_type
-"""
-
-
-def q_corpus_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dataset-versioning manifest: per source, document count, total
-    chars, distinct languages, and an ORDER-INDEPENDENT multiset
-    content signature — the exact DECIMAL sum of per-document 60-bit
-    fingerprints (emitted as a string for cross-engine dtype
-    stability), plus the bit_xor as a cheap secondary. The SUM is the
-    primary because xor cancels even multiplicities ({A,A,B} xors
-    equal to {C,C,B}); a sum collision needs two multisets with equal
-    fingerprint totals — not constructible by swapping duplicated
-    docs. Both combines are commutative/associative, so any
-    partitioning or row order yields the identical manifest. One scan,
-    one partial-aggregating shuffle."""
-    docs = _t(spark, sf_dir, "documents")
-    fp60 = F.conv(
-        F.substring(TX.fingerprint(F.col("text")), 1, 15), 16, 10
-    ).cast("bigint")
-    return docs.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_chars").alias("total_chars"),
-        F.count_distinct("lang").alias("n_langs"),
-        F.sum(fp60.cast("decimal(38,0)"))
-        .cast("decimal(38,0)")
-        .cast("string")
-        .alias("content_sig"),
-        F.bit_xor(fp60).alias("content_xor"),
-    )
-
-
-ORACLE_MANIFEST = """
-    WITH f AS (SELECT source, n_chars, lang,
-            CAST(('0x' || substr(
-                md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))),
-                1, 15)) AS BIGINT) AS fp
-        FROM documents)
-    SELECT source, COUNT(*) AS n_docs,
-        CAST(SUM(n_chars) AS BIGINT) AS total_chars,
-        COUNT(DISTINCT lang) AS n_langs,
-        CAST(CAST(SUM(CAST(fp AS DECIMAL(38,0))) AS DECIMAL(38,0))
-             AS VARCHAR) AS content_sig,
-        bit_xor(fp) AS content_xor
-    FROM f GROUP BY source
-"""
-
-
-def q_dsir_log_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DSIR hashed-unigram importance weights (Xie et al. 2023): score
-    every raw document by how target-like its token distribution is —
-    the importance-resampling recipe for tilting a 100 TB crawl toward
-    a quality target.  Target split here: lang='en' documents; raw: the
-    whole corpus.  See operators/sampling.py::dsir_log_weights for the
-    scale shape (two B-row bucket tables, broadcast log-ratio join)."""
-    docs = _t(spark, sf_dir, "documents")
-    target = docs.filter(F.col("lang") == "en")
-    return SA.dsir_log_weights(docs, target)
-
-
-ORACLE_DSIR = f"""
-    WITH raw_toks AS (
-        SELECT doc_id,
-            ('0x' || substr(md5(tok || '#dsir'), 1, 15))::BIGINT % 1024 AS b
-        FROM (SELECT doc_id, unnest({_TOKS}) AS tok FROM documents)),
-    tgt_toks AS (
-        SELECT ('0x' || substr(md5(tok || '#dsir'), 1, 15))::BIGINT % 1024 AS b
-        FROM (SELECT unnest({_TOKS}) AS tok FROM documents
-              WHERE lang = 'en')),
-    nr AS (SELECT COUNT(*) AS n FROM raw_toks),
-    nt AS (SELECT COUNT(*) AS n FROM tgt_toks),
-    rb AS (SELECT b, COUNT(*) AS cr FROM raw_toks GROUP BY b),
-    tb AS (SELECT b, COUNT(*) AS ct FROM tgt_toks GROUP BY b),
-    ratios AS (SELECT COALESCE(rb.b, tb.b) AS b,
-        CAST(ln((COALESCE(ct, 0) + 1) / CAST(nt.n + 1024 AS DOUBLE))
-             - ln((COALESCE(cr, 0) + 1) / CAST(nr.n + 1024 AS DOUBLE))
-             AS DECIMAL(20,6)) AS term
-        FROM rb FULL OUTER JOIN tb ON rb.b = tb.b
-        CROSS JOIN nr CROSS JOIN nt)
-    SELECT doc_id, COUNT(*) AS n_toks,
-        {DET.det_round_sql('CAST(SUM(term) AS DOUBLE)', 4)} AS log_weight
-    FROM raw_toks JOIN ratios USING (b)
-    GROUP BY doc_id
-"""
-
-
-def q_shuffle_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic corpus shuffle for training order: every document
-    gets a (shard, position) that is a pure function of its id — the
-    reproducible global shuffle a data loader needs (re-running the
-    pipeline, on any engine at any parallelism, yields byte-identical
-    epoch order).  shard = 60-bit md5 hash mod 8; position =
-    rank-by-hash within the shard.  Scale shape: the hash is a scan
-    projection; the only shuffle is the per-shard repartition, and each
-    shard's sort covers 1/n_shards of the corpus — with shards sized to
-    executor count this is the standard distributed-shuffle shape (no
-    global sort ever materializes a total order)."""
-    from pyspark.sql import Window
-
-    docs = _t(spark, sf_dir, "documents")
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat(F.col("doc_id").cast("string"), F.lit("#shuf"))),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("long")
-    w = Window.partitionBy("shard").orderBy("h", "doc_id")
-    return (
-        docs.select("doc_id", h.alias("h"))
-        .withColumn("shard", F.pmod(F.col("h"), F.lit(8)))
-        .select(
-            "doc_id",
-            "shard",
-            F.row_number().over(w).alias("pos"),
-        )
-    )
-
-
-ORACLE_SHUFFLE_SHARDS = """
-    WITH h AS (SELECT doc_id,
-        ('0x' || substr(md5(CAST(doc_id AS VARCHAR) || '#shuf'), 1, 15))
-            ::BIGINT AS h
-    FROM documents)
-    SELECT doc_id, h % 8 AS shard,
-        ROW_NUMBER() OVER (PARTITION BY h % 8 ORDER BY h, doc_id) AS pos
-    FROM h
-"""
-
-
-def q_lang_entropy_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus diversity audit: Shannon entropy of the language mix per
-    source, plus dominant-language share in ppm — the balance report a
-    multilingual training mix is tuned against.  Exact arithmetic
-    everywhere it can be: counts stay int64, the dominant share is an
-    integer ppm division, and each p*ln(p) term quantizes to
-    DECIMAL(20,6) before the (bounded, n_langs-row) sum.  One partial
-    agg to (source, lang) — tiny — then a per-source rollup."""
-    docs = _t(spark, sf_dir, "documents")
-    by_lang = docs.groupBy("source", "lang").agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
-    tot = by_lang.groupBy("source").agg(
-        F.sum("cnt").alias("n_docs"), F.max("cnt").alias("top_cnt")
-    )
-    p = F.col("cnt").cast("double") / F.col("n_docs").cast("double")
-    term = (-p * F.log(p)).cast("decimal(20,6)")
-    return (
-        by_lang.join(F.broadcast(tot), "source")
-        .groupBy("source")
-        .agg(
-            F.first("n_docs").alias("n_docs"),
-            F.count(F.lit(1)).alias("n_langs"),
-            DET.det_round(F.sum(term).cast("double"), 6).alias(
-                "lang_entropy"
-            ),
-            F.expr("first(top_cnt) * 1000000 div first(n_docs)").alias(
-                "top_share_ppm"
-            ),
-        )
-    )
-
-
-ORACLE_LANG_ENTROPY = f"""
-    WITH c AS (SELECT source, lang, COUNT(*) AS cnt
-               FROM documents GROUP BY 1, 2),
-    t AS (SELECT source, CAST(SUM(cnt) AS BIGINT) AS n_docs,
-                 MAX(cnt) AS top_cnt
-          FROM c GROUP BY source)
-    SELECT c.source, t.n_docs, COUNT(*) AS n_langs,
-        {DET.det_round_sql(
-            "CAST(SUM(CAST(-(cnt / CAST(n_docs AS DOUBLE))"
-            " * ln(cnt / CAST(n_docs AS DOUBLE)) AS DECIMAL(20,6)))"
-            " AS DOUBLE)", 6
-        )} AS lang_entropy,
-        top_cnt * 1000000 // n_docs AS top_share_ppm
-    FROM c JOIN t ON c.source = t.source
-    GROUP BY c.source, t.n_docs, t.top_cnt
-"""
-
-
-def q_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tokenizer fertility per language: subword tokens emitted per
-    whitespace word (the BPE-ish proxy count over the word count), in
-    exact micro-units — the metric that decides whether a tokenizer is
-    fair to a language before a multilingual training run.  Pure map +
-    one partial agg; the micro-unit average is the repo's exact
-    integer half-up idiom, so no double forms until the final cast."""
-    docs = _t(spark, sf_dir, "documents")
-    text = F.col("text")
-    per_doc = docs.select(
-        "lang",
-        TX.token_count(text).cast("bigint").alias("n_words"),
-        TX.bpe_ish_token_count(text).cast("bigint").alias("n_sub"),
-    )
-    agg = per_doc.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_words").alias("words"),
-        F.sum("n_sub").alias("subs"),
-    )
-    # remainder-form micro average: intermediates bounded by words*2e6,
-    # so a 100 TB-scale token count cannot overflow int64 (the naive
-    # subs*1e6 form dies at ~9e12 subwords)
-    fert_micro = _avg_micro_expr("subs", "words")
-    return agg.select(
-        "lang",
-        "n_docs",
-        F.col("words").alias("n_words"),
-        F.col("subs").alias("n_subwords"),
-        (fert_micro.cast("double") / F.lit(1000000.0)).alias("fertility"),
-    )
-
-
-ORACLE_FERTILITY = f"""
-    WITH per_doc AS (SELECT lang,
-        len({_TOKS}) AS n_words,
-        CAST(list_sum(list_transform(
-            list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-                        x -> x <> ''),
-            x -> CASE WHEN length(x) <= 4 THEN 1
-                      ELSE CAST(ceil(length(x) / 4.0) AS BIGINT) END))
-            AS BIGINT) AS n_sub
-    FROM documents),
-    agg AS (SELECT lang, COUNT(*) AS n_docs,
-                CAST(SUM(n_words) AS BIGINT) AS words,
-                CAST(SUM(n_sub) AS BIGINT) AS subs
-            FROM per_doc GROUP BY lang)
-    SELECT lang, n_docs, words AS n_words, subs AS n_subwords,
-        CAST((subs // words) * 1000000
-             + ((subs % words) * 2000000 + words) // (2 * words)
-             AS DOUBLE) / 1000000.0 AS fertility
-    FROM agg
-"""
-
-
-def q_robust_outlier_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Robust (median/MAD) outlier report per event type — the
-    loss-spike detector shape: median and median-absolute-deviation of
-    event value in EXACT micro-unit integers (lower median at rank
-    (n+1)/2 under a deterministic (value, event_id) order), then the
-    count of values beyond 3 MADs.  No mean/stddev — one hot key with
-    a fat tail cannot drag the threshold.  Scale: two per-type rank
-    windows (same trade as trimmed_event_stats — swap in approx
-    quantiles at 100 TB; exact here for oracle checkability) and one
-    final partial agg."""
-    from pyspark.sql import Window
-
-    ev = _t(spark, sf_dir, "events")
-    vm = F.floor(F.col("value") * F.lit(1000000.0) + F.lit(0.5)).cast(
-        "bigint"
-    )
-    base = ev.select("event_type", "event_id", vm.alias("vm"))
-    w = Window.partitionBy("event_type").orderBy("vm", "event_id")
-    wn = Window.partitionBy("event_type")
-    med = (
-        base.withColumn("rn", F.row_number().over(w))
-        .withColumn("n", F.count(F.lit(1)).over(wn))
-        .filter(F.col("rn") == F.expr("(n + 1) div 2"))
-        .select("event_type", F.col("vm").alias("med"))
-    )
-    dev = base.join(F.broadcast(med), "event_type").withColumn(
-        "dv", F.abs(F.col("vm") - F.col("med"))
-    )
-    wd = Window.partitionBy("event_type").orderBy("dv", "event_id")
-    mad = (
-        dev.withColumn("rn", F.row_number().over(wd))
-        .withColumn("n", F.count(F.lit(1)).over(wn))
-        .filter(F.col("rn") == F.expr("(n + 1) div 2"))
-        .select("event_type", F.col("dv").alias("mad"))
-    )
-    return (
-        dev.join(F.broadcast(mad), "event_type")
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            (F.first("med").cast("double") / F.lit(1000000.0)).alias(
-                "median_value"
-            ),
-            (F.first("mad").cast("double") / F.lit(1000000.0)).alias(
-                "mad_value"
-            ),
-            F.count_if(
-                F.col("dv") > F.lit(3) * F.col("mad")
-            ).alias("n_outliers"),
-        )
-    )
-
-
-ORACLE_ROBUST_OUTLIERS = """
-    WITH base AS (SELECT event_type, event_id,
-            CAST(FLOOR(value * 1000000.0 + 0.5) AS BIGINT) AS vm
-        FROM events),
-    r AS (SELECT event_type, vm,
-            ROW_NUMBER() OVER (PARTITION BY event_type
-                               ORDER BY vm, event_id) AS rn,
-            COUNT(*) OVER (PARTITION BY event_type) AS n
-          FROM base),
-    med AS (SELECT event_type, vm AS med FROM r WHERE rn = (n + 1) // 2),
-    dev AS (SELECT base.event_type, base.event_id, base.vm,
-                   abs(base.vm - med.med) AS dv, med.med
-            FROM base JOIN med ON base.event_type = med.event_type),
-    rd AS (SELECT event_type, dv,
-            ROW_NUMBER() OVER (PARTITION BY event_type
-                               ORDER BY dv, event_id) AS rn,
-            COUNT(*) OVER (PARTITION BY event_type) AS n
-           FROM dev),
-    mad AS (SELECT event_type, dv AS mad FROM rd WHERE rn = (n + 1) // 2)
-    SELECT dev.event_type, COUNT(*) AS n,
-        CAST(MIN(dev.med) AS DOUBLE) / 1000000.0 AS median_value,
-        CAST(MIN(mad.mad) AS DOUBLE) / 1000000.0 AS mad_value,
-        COUNT(*) FILTER (WHERE dev.dv > 3 * mad.mad) AS n_outliers
-    FROM dev JOIN mad ON dev.event_type = mad.event_type
-    GROUP BY dev.event_type
-"""
-
-
-def q_benchmark_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benchmark decontamination over the planted corpus: benchmark =
-    doc_id % 7 == 3 (the mutated copies of those land on % 7 == 4, i.e.
-    in train — so the planted duplicates ARE the contamination the pass
-    must find).  Flags train docs sharing any verbatim word 8-gram with
-    the benchmark; see operators/text.py::benchmark_decontam for the
-    broadcast-probe scale shape."""
-    docs2 = _planted_docs(spark, sf_dir)
-    bench = docs2.filter(F.pmod(F.col("doc_id"), F.lit(7)) == 3)
-    train = docs2.filter(F.pmod(F.col("doc_id"), F.lit(7)) != 3)
-    return TX.benchmark_decontam(train, bench)
-
-
-ORACLE_DECONTAM = f"""
-    WITH docs2 AS ({_PLANTED_SQL}),
-    tk AS (SELECT doc_id, {_TOKS} AS toks FROM docs2),
-    g AS (SELECT doc_id, {_GRAMS8} AS grams FROM tk),
-    h AS (SELECT doc_id,
-                 ('0x' || substr(md5(gram), 1, 15))::BIGINT AS gh
-          FROM (SELECT doc_id, unnest(list_distinct(grams)) AS gram
-                FROM g) u),
-    t AS (SELECT DISTINCT doc_id AS train_id, gh FROM h
-          WHERE doc_id % 7 <> 3),
-    b AS (SELECT DISTINCT doc_id AS bench_id, gh FROM h
-          WHERE doc_id % 7 = 3)
-    SELECT train_id, COUNT(DISTINCT gh) AS n_shared_grams,
-           COUNT(DISTINCT bench_id) AS n_bench_docs
-    FROM t JOIN b USING (gh)
-    GROUP BY train_id
-"""
-
-
-def q_snapshot_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time travel over the event changelog: per-user state AS OF
-    2024-01-15 00:00:00 — the warehouse snapshot query (reconstruct any
-    historical table version from the append-only log without storing
-    versions).  Same operator as changelog_compact; the as-of bound is
-    a pure scan predicate, so at 100 TB partition pruning on the ts
-    column does the time travel before a single row shuffles."""
-    asof = "2024-01-15 00:00:00"
-    ev = _t(spark, sf_dir, "events").filter(
-        F.col("ts") <= F.lit(asof).cast("timestamp")
-    )
-    out = H.compact_changelog(
-        ev, "user_id", "ts", "event_id", F.col("event_type") == "error"
-    )
-    return out.select(
-        "user_id",
-        F.col("ts").alias("asof_ts"),
-        F.col("event_type").alias("asof_type"),
-        DET.det_round(F.col("value"), 6).alias("asof_value"),
-    )
-
-
-ORACLE_SNAPSHOT_ASOF = f"""
-    WITH r AS (SELECT user_id, ts, event_type, value,
-                   ROW_NUMBER() OVER (PARTITION BY user_id
-                       ORDER BY ts DESC, event_id DESC) AS rn
-               FROM events
-               WHERE ts <= TIMESTAMP '2024-01-15 00:00:00')
-    SELECT user_id, ts AS asof_ts, event_type AS asof_type,
-           {DET.det_round_sql('value', 6)} AS asof_value
-    FROM r WHERE rn = 1 AND event_type <> 'error'
-"""
-
-
-def q_quality_percentile_by_source(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Per-source rank normalization of the quality score — the step
-    that makes scores comparable ACROSS sources before a curriculum or
-    mixing decision (a 0.7 from a clean source and a 0.7 from a noisy
-    one are different animals; their within-source percentiles are
-    not).  Exact integer ppm: pct = (rank - 1) * 1e6 div (n - 1), ties
-    share a rank (RANK, not ROW_NUMBER, so equal scores get equal
-    percentiles).  One per-source sort window — each source sorts
-    independently, the partition-count knob at 100 TB."""
-    from pyspark.sql import Window
-
-    docs = _t(spark, sf_dir, "documents")
-    scored = docs.select(
-        "doc_id", "source", TX.quality_score(F.col("text")).alias("q")
-    )
-    # exact integer ppm with a div-by-zero-proof denominator: NO double
-    # division anywhere (Spark's double->bigint cast truncates while
-    # DuckDB's ROUNDS — the cross-engine trap the integer form avoids)
-    pct = F.expr(
-        "CASE WHEN count(*) OVER (PARTITION BY source) = 1 THEN 0"
-        " ELSE (CAST(rank() OVER (PARTITION BY source ORDER BY q) - 1"
-        "       AS BIGINT) * 1000000)"
-        " div GREATEST(count(*) OVER (PARTITION BY source) - 1, 1) END"
-    )
-    return scored.select(
-        "doc_id", "source", "q", pct.cast("bigint").alias("pct_ppm")
-    )
-
-
-ORACLE_QUALITY_PCT = f"""
-    WITH scores AS ({ORACLE_QUALITY.strip()}),
-    j AS (SELECT s.doc_id, d.source, s.quality AS q
-          FROM scores s JOIN documents d ON s.doc_id = d.doc_id)
-    SELECT doc_id, source, q,
-        CASE WHEN COUNT(*) OVER (PARTITION BY source) = 1 THEN 0
-             ELSE (CAST(RANK() OVER (PARTITION BY source ORDER BY q) - 1
-                        AS BIGINT) * 1000000)
-                  // GREATEST(COUNT(*) OVER (PARTITION BY source) - 1, 1)
-        END AS pct_ppm
-    FROM j
-"""
-
-
-def q_psi_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Population Stability Index per event type: distribution drift of
-    event value between the first and second half of the month (split
-    at 2024-01-16) over 10 fixed-width bins — the ML-monitoring metric
-    that decides whether a feature or label distribution moved enough
-    to retrain.  PSI = sum (p2-p1) * ln(p2/p1), Laplace-smoothed so an
-    empty bin cannot produce infinities; each term quantizes to
-    DECIMAL(20,6) before the (10-row) sum.  One scan, one partial agg
-    to (type, half, bin) — bounded rows — then a broadcast-size
-    pivot."""
-    ev = _t(spark, sf_dir, "events")
-    split = F.lit("2024-01-16 00:00:00").cast("timestamp")
-    binned = ev.select(
-        "event_type",
-        F.when(F.col("ts") < split, F.lit(1)).otherwise(F.lit(2)).alias("half"),
-        F.least(
-            F.lit(9), F.floor(F.col("value") / F.lit(50.0)).cast("int")
-        ).alias("bin"),
-    )
-    cnt = binned.groupBy("event_type", "bin").agg(
-        F.count_if(F.col("half") == 1).alias("c1"),
-        F.count_if(F.col("half") == 2).alias("c2"),
-    )
-    tot = cnt.groupBy("event_type").agg(
-        F.sum("c1").alias("n1"), F.sum("c2").alias("n2")
-    )
-    p1 = (F.col("c1") + F.lit(1)).cast("double") / (
-        F.col("n1") + F.lit(10)
-    ).cast("double")
-    p2 = (F.col("c2") + F.lit(1)).cast("double") / (
-        F.col("n2") + F.lit(10)
-    ).cast("double")
-    term = ((p2 - p1) * F.log(p2 / p1)).cast("decimal(20,6)")
-    return (
-        cnt.join(F.broadcast(tot), "event_type")
-        .groupBy("event_type")
-        .agg(
-            F.first("n1").alias("n_first_half"),
-            F.first("n2").alias("n_second_half"),
-            DET.det_round(F.sum(term).cast("double"), 6).alias("psi"),
-        )
-    )
-
-
-ORACLE_PSI = f"""
-    WITH b AS (SELECT event_type,
-            CASE WHEN ts < TIMESTAMP '2024-01-16 00:00:00'
-                 THEN 1 ELSE 2 END AS half,
-            LEAST(9, CAST(FLOOR(value / 50.0) AS INT)) AS bin
-        FROM events),
-    c AS (SELECT event_type, bin,
-            COUNT(*) FILTER (WHERE half = 1) AS c1,
-            COUNT(*) FILTER (WHERE half = 2) AS c2
-          FROM b GROUP BY 1, 2),
-    t AS (SELECT event_type, CAST(SUM(c1) AS BIGINT) AS n1,
-                 CAST(SUM(c2) AS BIGINT) AS n2
-          FROM c GROUP BY 1)
-    SELECT c.event_type, t.n1 AS n_first_half, t.n2 AS n_second_half,
-        {DET.det_round_sql(
-            "CAST(SUM(CAST(((c2 + 1) / CAST(n2 + 10 AS DOUBLE)"
-            "     - (c1 + 1) / CAST(n1 + 10 AS DOUBLE))"
-            " * ln(((c2 + 1) / CAST(n2 + 10 AS DOUBLE))"
-            "      / ((c1 + 1) / CAST(n1 + 10 AS DOUBLE)))"
-            " AS DECIMAL(20,6))) AS DOUBLE)", 6
-        )} AS psi
-    FROM c JOIN t ON c.event_type = t.event_type
-    GROUP BY c.event_type, t.n1, t.n2
-"""
-
-
-def q_pareto_frontier_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """2-D Pareto frontier (skyline) over documents: keep every doc not
-    DOMINATED by another — no other doc is both strictly shorter
-    (n_chars) and at-least-as-good while being better on one axis
-    (quality, higher better; length, shorter better).  The
-    multi-objective curation shape: 'shortest doc at each quality
-    level you can't beat'.
-
-    Scale-first: a naive skyline is a NOT EXISTS self-join (O(n^2));
-    an unpartitioned sort-window is a single task.  Here dominance
-    against SHORTER docs factors through length buckets: per-bucket
-    max quality is a bounded table, its running max over buckets is a
-    <=256-row window, and each doc compares against (a) the broadcast
-    cumulative max of all strictly-shorter BUCKETS and (b) an
-    intra-bucket running max over strictly-shorter docs — so the only
-    per-row windows are per-bucket (parallel), and the cross-bucket
-    pass is driver-free and bounded.  Dominance is strict on one axis:
-    doc A dominates B iff len(A) < len(B) and q(A) >= q(B), or
-    len(A) == len(B) is never dominance (ties co-exist), matching the
-    oracle's NOT EXISTS formulation exactly."""
-    from pyspark.sql import Window
-
-    docs = _t(spark, sf_dir, "documents")
-    scored = docs.select(
-        "doc_id",
-        "n_chars",
-        TX.quality_score(F.col("text")).alias("q"),
-        F.least(
-            F.lit(255), F.floor(F.col("n_chars") / F.lit(64)).cast("int")
-        ).alias("bkt"),
-    )
-    per_bkt = scored.groupBy("bkt").agg(F.max("q").alias("bq"))
-    wcum = Window.orderBy("bkt").rowsBetween(
-        Window.unboundedPreceding, -1
-    )  # window over <=256 bucket rows — bounded, not the corpus
-    prev_max = per_bkt.select(
-        "bkt", F.max("bq").over(wcum).alias("prev_bkt_max")
-    )
-    # intra-bucket dominance: max q over STRICTLY shorter same-bucket
-    # docs — RANGE to -1 on the integer length excludes equal lengths
-    wlen = Window.partitionBy("bkt").orderBy("n_chars").rangeBetween(
-        Window.unboundedPreceding, -1
-    )
-    flagged = (
-        scored.join(F.broadcast(prev_max), "bkt", "left")
-        .withColumn("shorter_in_bkt_max", F.max("q").over(wlen))
-        .withColumn(
-            "dominated",
-            (
-                F.coalesce(F.col("prev_bkt_max") >= F.col("q"), F.lit(False))
-            )
-            | (
-                F.coalesce(
-                    F.col("shorter_in_bkt_max") >= F.col("q"), F.lit(False)
-                )
-            ),
-        )
-    )
-    return flagged.filter(~F.col("dominated")).select(
-        "doc_id", "n_chars", "q"
-    )
-
-
-ORACLE_PARETO = f"""
-    WITH scores AS ({ORACLE_QUALITY.strip()}),
-    j AS (SELECT d.doc_id, d.n_chars, s.quality AS q
-          FROM documents d JOIN scores s ON d.doc_id = s.doc_id)
-    SELECT doc_id, n_chars, q FROM j a
-    WHERE NOT EXISTS (
-        SELECT 1 FROM j b
-        WHERE b.n_chars < a.n_chars AND b.q >= a.q
-    )
-"""
-
-
-def q_classifier_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact AUC (Mann-Whitney) of the quality score as a predictor of
-    lang='en', in integer ppm — the model-eval primitive a data-quality
-    classifier ships with.  Tie handling is the textbook average-rank
-    form, computed EXACTLY: the score is low-cardinality, so ranks
-    factor through a value histogram (per-score pos/neg counts, a
-    bounded-row cumulative window) and
-    AUC = sum_v pos_v * (neg_below_v + neg_v / 2) / (pos * neg)
-    is emitted as AUC2x * 1e6 div (2 * pos * neg) — all BIGINT, no
-    double ever forms (above ~2e9 docs the rank-sum product needs
-    DECIMAL(38,0); the int64 form is exact to there).  At 100 TB: one
-    partial agg to the histogram,
-    one bounded window, a 1-row result; a global rank window (the
-    naive AUC) would serialize the corpus through one task."""
-    docs = _t(spark, sf_dir, "documents")
-    scored = docs.select(
-        TX.quality_score(F.col("text")).alias("s"),
-        (F.col("lang") == "en").cast("int").alias("y"),
-    )
-    hist = scored.groupBy("s").agg(
-        F.sum("y").alias("pos_v"),
-        F.sum(F.lit(1) - F.col("y")).alias("neg_v"),
-    )
-    from pyspark.sql import Window
-
-    w = Window.orderBy("s").rowsBetween(Window.unboundedPreceding, -1)
-    cum = hist.select(
-        "s",
-        "pos_v",
-        "neg_v",
-        F.coalesce(F.sum("neg_v").over(w), F.lit(0)).alias("neg_below"),
-    )
-    return cum.agg(
-        F.sum("pos_v").alias("n_pos"),
-        F.sum("neg_v").alias("n_neg"),
-        F.expr(
-            "CAST(sum(pos_v * (2 * neg_below + neg_v)) AS BIGINT)"
-            " * 1000000 div (2 * sum(pos_v) * sum(neg_v))"
-        ).alias("auc_ppm"),
-    )
-
-
-ORACLE_AUC = f"""
-    WITH scores AS ({ORACLE_QUALITY.strip()}),
-    j AS (SELECT s.quality AS s,
-                 CASE WHEN d.lang = 'en' THEN 1 ELSE 0 END AS y
-          FROM documents d JOIN scores s ON d.doc_id = s.doc_id),
-    hist AS (SELECT s, CAST(SUM(y) AS BIGINT) AS pos_v,
-                    CAST(SUM(1 - y) AS BIGINT) AS neg_v
-             FROM j GROUP BY s),
-    c AS (SELECT s, pos_v, neg_v,
-            COALESCE(CAST(SUM(neg_v) OVER (ORDER BY s
-                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-                AS BIGINT), 0) AS neg_below
-          FROM hist)
-    SELECT CAST(SUM(pos_v) AS BIGINT) AS n_pos,
-           CAST(SUM(neg_v) AS BIGINT) AS n_neg,
-           CAST(SUM(pos_v * (2 * neg_below + neg_v)) AS BIGINT)
-               * 1000000
-               // (2 * CAST(SUM(pos_v) AS BIGINT)
-                     * CAST(SUM(neg_v) AS BIGINT)) AS auc_ppm
-    FROM c
-"""
-
-
-def q_kmv_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """KMV sketch SET ALGEBRA: estimated vocabulary sizes of sources
-    src0 and src1, their union, and their Jaccard overlap — all from
-    two 64-hash sketches, never from the raw token sets.  This is the
-    sketch property that matters at 100 TB: per-corpus KMV sketches are
-    k rows each; union = merge + re-rank of 2k rows; the Jaccard
-    estimator is the fraction of the union's k smallest hashes present
-    in both sketches (Beyer et al. 2007).  Everything after the two
-    per-source k-smallest windows runs on <= 2k rows.  Jaccard emits as
-    exact integer ppm (matched * 1e6 div k); sizes use the standard
-    (k-1) * 2^60 / h_k estimator, det-rounded."""
-    from pyspark.sql import Window
-
-    k = 64
-    docs = _t(spark, sf_dir, "documents").filter(
-        F.col("source").isin("src0", "src1")
-    )
-    toks = docs.select(
-        "source",
-        F.explode(TX.tokens(TX.normalize_text(F.col("text")))).alias("tok"),
-    ).distinct()
-    h = F.conv(
-        F.substring(F.md5(F.concat(F.col("tok"), F.lit("#kmvv"))), 1, 15),
-        16,
-        10,
-    ).cast("long")
-    hashed = toks.select("source", h.alias("h")).distinct()
-    w = Window.partitionBy("source").orderBy("h")
-    kmin = hashed.withColumn("_rk", F.row_number().over(w)).filter(
-        F.col("_rk") <= k
-    )
-    # everything below operates on <= 2k rows
-    flags = kmin.groupBy("h").agg(
-        F.max((F.col("source") == "src0").cast("int")).alias("in_a"),
-        F.max((F.col("source") == "src1").cast("int")).alias("in_b"),
-    )
-    wu = Window.orderBy("h")
-    union_k = flags.withColumn("_rk", F.row_number().over(wu)).filter(
-        F.col("_rk") <= k
-    )
-    est = lambda cnt, mx: DET.det_round(
-        (cnt - 1).cast("double") * F.lit(float(2**60)) / mx, 4
-    )
-    per = kmin.groupBy("source").agg(
-        F.count(F.lit(1)).alias("kk"), F.max("h").alias("mx")
-    )
-    a = per.filter(F.col("source") == "src0").select(
-        est(F.col("kk"), F.col("mx")).alias("est_vocab_a")
-    )
-    b = per.filter(F.col("source") == "src1").select(
-        est(F.col("kk"), F.col("mx")).alias("est_vocab_b")
-    )
-    u = union_k.agg(
-        est(F.count(F.lit(1)), F.max("h")).alias("est_vocab_union"),
-        F.expr(
-            "CAST(sum(in_a * in_b) AS BIGINT) * 1000000 div count(*)"
-        ).alias("jaccard_ppm"),
-    )
-    return a.crossJoin(b).crossJoin(u)
-
-
-ORACLE_KMV_VOCAB = f"""
-    WITH toks AS (SELECT DISTINCT source, tok
-        FROM (SELECT source, unnest({_TOKS}) AS tok FROM documents
-              WHERE source IN ('src0', 'src1')) t),
-    hashed AS (SELECT DISTINCT source,
-            ('0x' || substr(md5(tok || '#kmvv'), 1, 15))::BIGINT AS h
-        FROM toks),
-    kmin AS (SELECT source, h FROM (
-            SELECT source, h, ROW_NUMBER() OVER (PARTITION BY source
-                ORDER BY h) AS rk FROM hashed) r WHERE rk <= 64),
-    flags AS (SELECT h,
-            MAX(CASE WHEN source = 'src0' THEN 1 ELSE 0 END) AS in_a,
-            MAX(CASE WHEN source = 'src1' THEN 1 ELSE 0 END) AS in_b
-        FROM kmin GROUP BY h),
-    union_k AS (SELECT * FROM (
-            SELECT h, in_a, in_b, ROW_NUMBER() OVER (ORDER BY h) AS rk
-            FROM flags) r WHERE rk <= 64),
-    pa AS (SELECT COUNT(*) AS kk, MAX(h) AS mx FROM kmin
-           WHERE source = 'src0'),
-    pb AS (SELECT COUNT(*) AS kk, MAX(h) AS mx FROM kmin
-           WHERE source = 'src1'),
-    pu AS (SELECT COUNT(*) AS kk, MAX(h) AS mx,
-                  CAST(SUM(in_a * in_b) AS BIGINT) AS matched
-           FROM union_k)
-    SELECT
-        {DET.det_round_sql(
-            "CAST(pa.kk - 1 AS DOUBLE) * 1152921504606846976.0 / pa.mx", 4
-        )} AS est_vocab_a,
-        {DET.det_round_sql(
-            "CAST(pb.kk - 1 AS DOUBLE) * 1152921504606846976.0 / pb.mx", 4
-        )} AS est_vocab_b,
-        {DET.det_round_sql(
-            "CAST(pu.kk - 1 AS DOUBLE) * 1152921504606846976.0 / pu.mx", 4
-        )} AS est_vocab_union,
-        pu.matched * 1000000 // pu.kk AS jaccard_ppm
-    FROM pa, pb, pu
-"""
-
-
-def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lakehouse snapshot diff: per-user state at 2024-01-10 vs
-    2024-01-20 reconstructed from the SAME changelog, classified as
-    created / deleted / changed / unchanged — the version-comparison
-    report a data-versioning layer prints between two table versions.
-    Mechanism: two time-travel compactions (each one key shuffle over
-    the pruned scan) full-outer-joined on the key; the classification
-    is a pure projection.  At 100 TB both sides prune to their ts
-    bound, and the join shuffles state rows (key cardinality), not the
-    log."""
-    def state_at(asof: str) -> DataFrame:
-        ev = _t(spark, sf_dir, "events").filter(
-            F.col("ts") <= F.lit(asof).cast("timestamp")
-        )
-        return H.compact_changelog(
-            ev, "user_id", "ts", "event_id", F.col("event_type") == "error"
-        ).select(
-            "user_id",
-            F.col("event_type").alias("et"),
-            F.col("value").alias("v"),
-        )
-
-    a = state_at("2024-01-10 00:00:00").alias("a")
-    b = state_at("2024-01-20 00:00:00").alias("b")
-    j = a.join(b, F.col("a.user_id") == F.col("b.user_id"), "outer")
-    cls = (
-        F.when(F.col("a.user_id").isNull(), F.lit("created"))
-        .when(F.col("b.user_id").isNull(), F.lit("deleted"))
-        .when(
-            (F.col("a.et") == F.col("b.et")) & (F.col("a.v") == F.col("b.v")),
-            F.lit("unchanged"),
-        )
-        .otherwise(F.lit("changed"))
-    )
-    return j.groupBy(cls.alias("change")).agg(
-        F.count(F.lit(1)).alias("n_users")
-    )
-
-
-ORACLE_SNAPSHOT_DIFF = """
-    WITH sa AS (SELECT user_id, event_type AS et, value AS v FROM (
-            SELECT user_id, event_type, value,
-                ROW_NUMBER() OVER (PARTITION BY user_id
-                    ORDER BY ts DESC, event_id DESC) AS rn
-            FROM events WHERE ts <= TIMESTAMP '2024-01-10 00:00:00') r
-        WHERE rn = 1 AND event_type <> 'error'),
-    sb AS (SELECT user_id, event_type AS et, value AS v FROM (
-            SELECT user_id, event_type, value,
-                ROW_NUMBER() OVER (PARTITION BY user_id
-                    ORDER BY ts DESC, event_id DESC) AS rn
-            FROM events WHERE ts <= TIMESTAMP '2024-01-20 00:00:00') r
-        WHERE rn = 1 AND event_type <> 'error')
-    SELECT CASE WHEN sa.user_id IS NULL THEN 'created'
-                WHEN sb.user_id IS NULL THEN 'deleted'
-                WHEN sa.et = sb.et AND sa.v = sb.v THEN 'unchanged'
-                ELSE 'changed' END AS change,
-           COUNT(*) AS n_users
-    FROM sa FULL OUTER JOIN sb ON sa.user_id = sb.user_id
-    GROUP BY 1
-"""
-
-
-# the ONE Benford expectation table both the Spark query and the DuckDB
-# oracle are generated from (round-half-up ppm of log10(1 + 1/d)) — a
-# single source so the two sides cannot desynchronize
-_BENFORD_PPM = [
-    (d, int(math.floor(1e6 * math.log10(1 + 1 / d) + 0.5)))
-    for d in range(1, 10)
-]
-
-
-def q_benford_price_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benford first-digit audit of order totals — the fraud/synthetic-
-    data screen: observed first-digit counts of o_totalprice vs the
-    Benford expectation, with the chi-square statistic in deterministic
-    arithmetic on the ppm scale: expected_ppm = round-half-up of
-    1e6*log10(1+1/d) as a LITERAL table (no runtime transcendental);
-    observed_ppm = obs*1e6 div n; chi term = (obs_ppm - exp_ppm)^2 div
-    exp_ppm — every intermediate <= 1e12, overflow-proof at any corpus
-    size (the un-rescaled (obs*1e6 - n*exp)^2 form overflows int64 past
-    ~140k rows).  First digit via the string head: both engines render
-    doubles shortest-roundtrip and plain (not E-notation) for
-    1e-3 <= x < 1e7, which bounds o_totalprice at every SF.  One scan,
-    a 9-row aggregate, a broadcast literal join."""
-    ev = _t(spark, sf_dir, "orders")
-    d = F.substring(F.col("o_totalprice").cast("string"), 1, 1).cast("int")
-    obs = (
-        ev.select(d.alias("digit"))
-        .filter(F.col("digit").between(1, 9))
-        .groupBy("digit")
-        .agg(F.count(F.lit(1)).alias("observed"))
-    )
-    exp_df = spark.createDataFrame(
-        _BENFORD_PPM, "digit int, expected_ppm long"
-    )
-    tot = obs.agg(F.sum("observed").alias("n"))
-    return (
-        obs.join(F.broadcast(exp_df), "digit")
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "digit",
-            "observed",
-            "expected_ppm",
-            F.expr(
-                "((observed * 1000000 div n) - expected_ppm)"
-                " * ((observed * 1000000 div n) - expected_ppm)"
-                " div expected_ppm"
-            ).alias("chi_term_micro"),
-        )
-    )
-
-
-_BENFORD_VALUES = ", ".join(f"({d}, {p})" for d, p in _BENFORD_PPM)
-
-ORACLE_BENFORD = f"""
-    WITH obs AS (SELECT digit, COUNT(*) AS observed FROM (
-            SELECT CAST(substr(CAST(o_totalprice AS VARCHAR), 1, 1) AS INT)
-                AS digit FROM orders) t
-        WHERE digit BETWEEN 1 AND 9 GROUP BY digit),
-    e(digit, expected_ppm) AS (VALUES {_BENFORD_VALUES}),
-    n AS (SELECT CAST(SUM(observed) AS BIGINT) AS n FROM obs)
-    SELECT obs.digit, observed, CAST(expected_ppm AS BIGINT) AS expected_ppm,
-        ((observed * 1000000 // n.n) - expected_ppm)
-        * ((observed * 1000000 // n.n) - expected_ppm)
-        // expected_ppm AS chi_term_micro
-    FROM obs JOIN e ON obs.digit = e.digit CROSS JOIN n
-"""
-
-
-def q_emb_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Matryoshka-style truncation eval: per query vector (vec_id < 10),
-    the recall@10 of cosine top-k computed on the FIRST 16 dims against
-    the full-64-dim top-k — the measurement that decides whether a
-    pipeline can store/scan quarter-width embeddings.  Both rankings
-    are brute-force over the corpus side with the query set BROADCAST
-    (10 rows), per-query rank windows, and the overlap joins on
-    (query, id) — at 100 TB this is the eval-harness shape: corpus
-    scanned once per ranking, nothing but top-k rows ever shuffle.
-    recall_ppm is exact integer (matched * 1e6 div k)."""
-    from pyspark.sql import Window
-
-    emb = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    q = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    c = emb.filter(F.col("vec_id") >= 10)
-    pairs = c.crossJoin(F.broadcast(q)).select(
-        "query_id",
-        "vec_id",
-        S.cosine(F.col("v"), F.col("qv")).alias("fs"),
-        S.cosine(
-            F.slice(F.col("v"), 1, 16), F.slice(F.col("qv"), 1, 16)
-        ).alias("ts"),
-    )
-    wf = Window.partitionBy("query_id").orderBy(F.desc("fs"), "vec_id")
-    wt = Window.partitionBy("query_id").orderBy(F.desc("ts"), "vec_id")
-    top_f = (
-        pairs.withColumn("rn", F.row_number().over(wf))
-        .filter(F.col("rn") <= 10)
-        .select("query_id", "vec_id")
-    )
-    top_t = (
-        pairs.withColumn("rn", F.row_number().over(wt))
-        .filter(F.col("rn") <= 10)
-        .select("query_id", "vec_id")
-    )
-    matched = (
-        top_f.join(top_t, ["query_id", "vec_id"])
-        .groupBy("query_id")
-        .agg(F.count(F.lit(1)).alias("n_matched"))
-    )
-    return q.select("query_id").join(matched, "query_id", "left").select(
-        "query_id",
-        F.coalesce(F.col("n_matched"), F.lit(0))
-        .cast("bigint")
-        .alias("n_matched"),
-        F.expr(
-            "CAST(coalesce(n_matched, 0) AS BIGINT) * 1000000 div 10"
-        ).alias("recall_ppm"),
-    )
-
-
-_TRUNC_DOT16 = (
-    "list_sum(list_transform(range(16), i -> {a}[i + 1] * {b}[i + 1]))"
-)
-
-ORACLE_TRUNC_RECALL = f"""
-    WITH e AS (SELECT vec_id,
-            list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        FROM embeddings),
-    q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 10),
-    c AS (SELECT vec_id, v FROM e WHERE vec_id >= 10),
-    pairs AS (SELECT query_id, vec_id,
-        {_EMB_DOT.format(a='v', b='qv')} /
-        (sqrt(list_sum(list_transform(v, x -> x * x))) *
-         sqrt(list_sum(list_transform(qv, x -> x * x)))) AS fs,
-        {_TRUNC_DOT16.format(a='v', b='qv')} /
-        (sqrt({_TRUNC_DOT16.format(a='v', b='v')}) *
-         sqrt({_TRUNC_DOT16.format(a='qv', b='qv')})) AS ts
-        FROM c CROSS JOIN q),
-    tf AS (SELECT query_id, vec_id FROM (
-            SELECT query_id, vec_id, ROW_NUMBER() OVER (
-                PARTITION BY query_id ORDER BY fs DESC, vec_id) AS rn
-            FROM pairs) r WHERE rn <= 10),
-    tt AS (SELECT query_id, vec_id FROM (
-            SELECT query_id, vec_id, ROW_NUMBER() OVER (
-                PARTITION BY query_id ORDER BY ts DESC, vec_id) AS rn
-            FROM pairs) r WHERE rn <= 10),
-    m AS (SELECT tf.query_id, COUNT(*) AS n_matched
-          FROM tf JOIN tt ON tf.query_id = tt.query_id
-                          AND tf.vec_id = tt.vec_id
-          GROUP BY tf.query_id)
-    SELECT q.query_id,
-        COALESCE(CAST(m.n_matched AS BIGINT), 0) AS n_matched,
-        COALESCE(CAST(m.n_matched AS BIGINT), 0) * 1000000 // 10
-            AS recall_ppm
-    FROM q LEFT JOIN m ON q.query_id = m.query_id
-"""
-
-
-def q_calibration_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Reliability diagram of the quality score against the lang='en'
-    label: scores bucketed into deciles, per-bucket observed positive
-    rate in exact integer ppm — with AUC (classifier_auc), the two
-    standard classifier-eval reports.  One scan, a 10-row aggregate."""
-    docs = _t(spark, sf_dir, "documents")
-    s = TX.quality_score(F.col("text"))
-    bkt = F.least(F.lit(9), F.floor(s * F.lit(10.0)).cast("int"))
-    return (
-        docs.select(
-            bkt.alias("bucket"),
-            (F.col("lang") == "en").cast("long").alias("y"),
-        )
-        .groupBy("bucket")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("y").alias("n_pos"),
-        )
-        .select(
-            "bucket",
-            "n",
-            "n_pos",
-            F.expr("n_pos * 1000000 div n").alias("pos_rate_ppm"),
-        )
-    )
-
-
-ORACLE_CALIBRATION = f"""
-    WITH scores AS ({ORACLE_QUALITY.strip()}),
-    j AS (SELECT LEAST(9, CAST(FLOOR(s.quality * 10.0) AS INT)) AS bucket,
-                 CASE WHEN d.lang = 'en' THEN 1 ELSE 0 END AS y
-          FROM documents d JOIN scores s ON d.doc_id = s.doc_id)
-    SELECT bucket, COUNT(*) AS n, CAST(SUM(y) AS BIGINT) AS n_pos,
-           CAST(SUM(y) AS BIGINT) * 1000000 // COUNT(*) AS pos_rate_ppm
-    FROM j GROUP BY bucket
-"""
-
-
-def q_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sweep-line peak concurrency: per day, the maximum number of
-    simultaneously-active users (a user is active between their first
-    and last event of the day) and when the peak is first reached —
-    the capacity-planning query.  Mechanism: each interval becomes a
-    +1 (start) / -1 (end-exclusive) delta, and the peak is the max of
-    the running delta sum in event order — O(n log n) via one per-day
-    window, never interval-pair joins (O(n^2)).  Partitioned by day:
-    each day's sweep is independent; at 100 TB you'd range-partition
-    time finer and carry boundary offsets between ranges (a 2-pass
-    prefix-sum — same algebra, documented trade; per-day is the
-    honest local shape).  Tie order (ts, delta desc, user) counts a
-    user whose interval starts when another's ends as overlapping at
-    that instant; the oracle replays the identical order."""
-    from pyspark.sql import Window
-
-    ev = _t(spark, sf_dir, "events")
-    spans = (
-        ev.withColumn("day", F.to_date("ts"))
-        .groupBy("day", "user_id")
-        .agg(F.min("ts").alias("t0"), F.max("ts").alias("t1"))
-    )
-    deltas = spans.select(
-        "day", "user_id", F.col("t0").alias("t"), F.lit(1).alias("d")
-    ).unionAll(
-        spans.select(
-            "day", "user_id", F.col("t1").alias("t"), F.lit(-1).alias("d")
-        )
-    )
-    w = Window.partitionBy("day").orderBy(
-        "t", F.desc("d"), "user_id"
-    ).rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    running = deltas.withColumn("c", F.sum("d").over(w))
-    wd = Window.partitionBy("day")
-    return (
-        running.withColumn("peak", F.max("c").over(wd))
-        .filter(F.col("c") == F.col("peak"))
-        .groupBy("day")
-        .agg(
-            F.first("peak").alias("peak_concurrent"),
-            F.min("t").alias("first_peak_at"),
-        )
-        .select(
-            # dates emit as ISO strings: Spark DateType reaches pandas as
-            # python objects while DuckDB DATE arrives datetime64 — the
-            # one emission type the (int-width, datetime-unit) coercions
-            # can't align; '2024-01-05' renders identically everywhere
-            F.col("day").cast("string").alias("day"),
-            F.col("peak_concurrent").cast("bigint").alias("peak_concurrent"),
-            "first_peak_at",
-        )
-    )
-
-
-ORACLE_PEAK_CONCURRENCY = """
-    WITH spans AS (SELECT CAST(ts AS DATE) AS day, user_id,
-                          MIN(ts) AS t0, MAX(ts) AS t1
-                   FROM events GROUP BY 1, 2),
-    deltas AS (SELECT day, user_id, t0 AS t, 1 AS d FROM spans
-               UNION ALL
-               SELECT day, user_id, t1 AS t, -1 AS d FROM spans),
-    running AS (SELECT day, t,
-            SUM(d) OVER (PARTITION BY day ORDER BY t, d DESC, user_id
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS c
-        FROM deltas),
-    peaks AS (SELECT day, t, c,
-            MAX(c) OVER (PARTITION BY day) AS peak
-        FROM running)
-    SELECT CAST(day AS VARCHAR) AS day,
-           CAST(MIN(peak) AS BIGINT) AS peak_concurrent,
-           MIN(t) AS first_peak_at
-    FROM peaks WHERE c = peak GROUP BY day
-"""
-
-
-def q_exact_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact (lower) median of l_extendedprice by iterative histogram
-    narrowing — exact selection WITHOUT a global sort (the 100 TB
-    shape: each round is a predicate-pushed scan + a <=1024-row count
-    histogram; the driver sees histograms and bounds, never data).
-    tail_rows=2000 forces the histogram path at every tested SF so the
-    oracle checks the narrowing logic, not just the bounded-sort
-    finish.  See operators/selection.py::exact_kth."""
-    from kafka_firehose_nozzle_spark.operators.selection import exact_median
-
-    li = _t(spark, sf_dir, "lineitem")
-    # n and k come from the selection's own initial aggregate — a
-    # separate count() here would be one extra full scan
-    n, k, med = exact_median(li, "l_extendedprice", tail_rows=2000)
-    return spark.createDataFrame(
-        [(n, k, med)], "n bigint, k bigint, median double"
-    )
-
-
-ORACLE_EXACT_MEDIAN = """
-    WITH v AS (SELECT CAST(l_extendedprice AS DOUBLE) AS x
-               FROM lineitem WHERE l_extendedprice IS NOT NULL),
-    n AS (SELECT COUNT(*) AS n FROM v)
-    SELECT n.n AS n, (n.n + 1) // 2 AS k,
-        (SELECT x FROM v ORDER BY x
-         LIMIT 1 OFFSET ((SELECT n FROM n) + 1) // 2 - 1) AS median
-    FROM n
-"""
-
-
-def q_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First-order event-sequence model: per (event_type -> next
-    event_type within the same user), transition count and probability
-    in exact integer ppm — the Markov matrix behind both
-    next-action prediction and funnel-anomaly detection.  One lead
-    window per user (the key shuffle), one bounded aggregation; ties
-    in event time break on event_id, the repo's standard total
-    order."""
-    from pyspark.sql import Window
-
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    pairs = (
-        ev.select(
-            "user_id",
-            "ts",
-            "event_id",
-            F.col("event_type").alias("src"),
-            F.lead("event_type").over(w).alias("dst"),
-        )
-        .filter(F.col("dst").isNotNull())
-        .groupBy("src", "dst")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    tot = pairs.groupBy("src").agg(F.sum("n").alias("n_src"))
-    return (
-        pairs.join(F.broadcast(tot), "src")
-        .select(
-            "src",
-            "dst",
-            "n",
-            F.expr("n * 1000000 div n_src").alias("p_ppm"),
-        )
-    )
-
-
-ORACLE_MARKOV = """
-    WITH seq AS (SELECT user_id, event_type AS src,
-            LEAD(event_type) OVER (PARTITION BY user_id
-                ORDER BY ts, event_id) AS dst
-        FROM events),
-    pairs AS (SELECT src, dst, COUNT(*) AS n FROM seq
-              WHERE dst IS NOT NULL GROUP BY 1, 2),
-    tot AS (SELECT src, CAST(SUM(n) AS BIGINT) AS n_src
-            FROM pairs GROUP BY src)
-    SELECT pairs.src, dst, n, n * 1000000 // n_src AS p_ppm
-    FROM pairs JOIN tot ON pairs.src = tot.src
-"""
-
-
-def q_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Robust trend per event type: the Theil-Sen slope (median of all
-    pairwise slopes) of daily mean value over the month — the
-    outlier-immune alternative to OLS for drift monitoring (one wild
-    day cannot drag the slope).  Exact arithmetic end-to-end: daily
-    means in micro-units (half-up integer), each pairwise slope in
-    micro-units/day (sign-safe half-up rational rounding), the median
-    by rank.  Scale shape: the pairwise join runs on the DAILY
-    AGGREGATE (<= 31 rows per type — pairs are bounded at 465/type no
-    matter the corpus size), so the only corpus-sized stage is the
-    first partial aggregation."""
-    from pyspark.sql import Window
-
-    ev = _t(spark, sf_dir, "events")
-    vm = F.floor(F.col("value") * F.lit(1000000.0) + F.lit(0.5)).cast(
-        "bigint"
-    )
-    daily = (
-        ev.select(
-            "event_type",
-            # ABSOLUTE day index: dayofmonth would wrap at month
-            # boundaries and merge unrelated days
-            F.expr(
-                "unix_micros(CAST(ts AS TIMESTAMP)) div 86400000000"
-            ).alias("d"),
-            vm.alias("vm"),
-        )
-        .groupBy("event_type", "d")
-        .agg(F.sum("vm").alias("s"), F.count(F.lit(1)).alias("c"))
-        .select(
-            "event_type",
-            "d",
-            # vm is ALREADY micro-units: the mean is plain half-up s/c —
-            # routing it through _avg_micro_expr would scale by 1e6 a
-            # second time and inflate the final slope a million-fold
-            F.expr(
-                "(s div c) + ((s % c) * 2 + c) div (2 * c)"
-            ).alias("mean_micro"),
-        )
-    )
-    a, b = daily.alias("a"), daily.alias("b")
-    slopes = (
-        a.join(
-            b,
-            (F.col("a.event_type") == F.col("b.event_type"))
-            & (F.col("a.d") < F.col("b.d")),
-        )
-        .select(
-            F.col("a.event_type").alias("event_type"),
-            F.expr(
-                "CASE WHEN `b`.`mean_micro` >= `a`.`mean_micro` THEN"
-                " ((`b`.`mean_micro` - `a`.`mean_micro`) div (`b`.`d` - `a`.`d`))"
-                " + (((`b`.`mean_micro` - `a`.`mean_micro`) % (`b`.`d` - `a`.`d`)) * 2"
-                "    + (`b`.`d` - `a`.`d`)) div (2 * (`b`.`d` - `a`.`d`))"
-                " ELSE"
-                " -(((`a`.`mean_micro` - `b`.`mean_micro`) div (`b`.`d` - `a`.`d`))"
-                " + (((`a`.`mean_micro` - `b`.`mean_micro`) % (`b`.`d` - `a`.`d`)) * 2"
-                "    + (`b`.`d` - `a`.`d`)) div (2 * (`b`.`d` - `a`.`d`)))"
-                " END"
-            ).alias("slope_micro"),
-        )
-    )
-    w = Window.partitionBy("event_type").orderBy("slope_micro")
-    wn = Window.partitionBy("event_type")
-    med = (
-        slopes.withColumn("rn", F.row_number().over(w))
-        .withColumn("n", F.count(F.lit(1)).over(wn))
-        .filter(F.col("rn") == F.expr("(n + 1) div 2"))
-    )
-    return med.select(
-        "event_type",
-        F.col("n").alias("n_pairs"),
-        (F.col("slope_micro").cast("double") / F.lit(1000000.0)).alias(
-            "theil_sen_slope"
-        ),
-    )
-
-
-ORACLE_THEIL_SEN = """
-    WITH base AS (SELECT event_type,
-            epoch_us(ts) // 86400000000 AS d,
-            CAST(FLOOR(value * 1000000.0 + 0.5) AS BIGINT) AS vm
-        FROM events),
-    daily AS (SELECT event_type, d, CAST(SUM(vm) AS BIGINT) AS s,
-                     COUNT(*) AS c
-              FROM base GROUP BY 1, 2),
-    m AS (SELECT event_type, d,
-            (s // c) + ((s % c) * 2 + c) // (2 * c) AS mean_micro
-          FROM daily),
-    slopes AS (SELECT a.event_type,
-            CASE WHEN b.mean_micro >= a.mean_micro THEN
-                ((b.mean_micro - a.mean_micro) // (b.d - a.d))
-                + (((b.mean_micro - a.mean_micro) % (b.d - a.d)) * 2
-                   + (b.d - a.d)) // (2 * (b.d - a.d))
-            ELSE
-                -(((a.mean_micro - b.mean_micro) // (b.d - a.d))
-                + (((a.mean_micro - b.mean_micro) % (b.d - a.d)) * 2
-                   + (b.d - a.d)) // (2 * (b.d - a.d)))
-            END AS slope_micro
-        FROM m a JOIN m b ON a.event_type = b.event_type AND a.d < b.d),
-    r AS (SELECT event_type, slope_micro,
-            ROW_NUMBER() OVER (PARTITION BY event_type
-                ORDER BY slope_micro) AS rn,
-            COUNT(*) OVER (PARTITION BY event_type) AS n
-          FROM slopes)
-    SELECT event_type, n AS n_pairs,
-        CAST(slope_micro AS DOUBLE) / 1000000.0 AS theil_sen_slope
-    FROM r WHERE rn = (n + 1) // 2
-"""
-
-
-def q_lead_lag_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lead-lag diagnosis: Pearson correlation between hourly 'view'
-    and 'purchase' counts at lags -3..+3 hours — the cross-correlation
-    scan that finds how far engagement leads conversion.  The hour
-    series densifies over an integer hour spine (missing hours count
-    0 — real gaps, not dropped points), every sum is exact int64
-    (counts and their products), and r forms from those integers with
-    one IEEE sqrt each side + det_round.  Scale shape: one corpus
-    partial agg to (hour, type) counts; everything after runs on the
-    <=744-row month spine x 7 lags."""
-    ev = _t(spark, sf_dir, "events")
-    hourly = (
-        ev.filter(F.col("event_type").isin("view", "purchase"))
-        .select(
-            # integer div, NOT floor(x / 3.6e9): micros exceed 2^53, so
-            # the double route would round hours near the boundary
-            F.expr(
-                "unix_micros(CAST(ts AS TIMESTAMP)) div 3600000000"
-            ).alias("h"),
-            "event_type",
-        )
-        .groupBy("h")
-        .agg(
-            F.count_if(F.col("event_type") == "view").alias("nv"),
-            F.count_if(F.col("event_type") == "purchase").alias("np"),
-        )
-    )
-    bounds = hourly.agg(
-        F.min("h").alias("h0"), F.max("h").alias("h1")
-    ).head()
-    h0, h1 = bounds["h0"], bounds["h1"]
-    spine = spark.range(h0, h1 + 1).select(F.col("id").alias("h"))
-    dense = (
-        spine.join(hourly, "h", "left")
-        .select(
-            "h",
-            F.coalesce("nv", F.lit(0)).alias("nv"),
-            F.coalesce("np", F.lit(0)).alias("np"),
-        )
-    )
-    lags = spark.createDataFrame([(l,) for l in range(-3, 4)], "lag int")
-    x = dense.select("h", F.col("nv").alias("x"))
-    y = dense.select(F.col("h").alias("hy"), F.col("np").alias("y"))
-    joined = (
-        x.crossJoin(F.broadcast(lags))
-        .join(y, F.col("h") + F.col("lag") == F.col("hy"))
-        .groupBy("lag")
-        .agg(
-            F.count(F.lit(1)).alias("n_points"),
-            F.sum("x").alias("sx"),
-            F.sum("y").alias("sy"),
-            F.sum(F.col("x") * F.col("y")).alias("sxy"),
-            F.sum(F.col("x") * F.col("x")).alias("sxx"),
-            F.sum(F.col("y") * F.col("y")).alias("syy"),
-        )
-    )
-    num = (
-        F.col("n_points") * F.col("sxy") - F.col("sx") * F.col("sy")
-    ).cast("double")
-    den = F.sqrt(
-        (F.col("n_points") * F.col("sxx") - F.col("sx") * F.col("sx"))
-        .cast("double")
-    ) * F.sqrt(
-        (F.col("n_points") * F.col("syy") - F.col("sy") * F.col("sy"))
-        .cast("double")
-    )
-    return joined.select(
-        "lag",
-        "n_points",
-        DET.det_round(num / den, 6).alias("r"),
-    ).orderBy("lag")
-
-
-ORACLE_LEAD_LAG = f"""
-    WITH hourly AS (SELECT
-            epoch_us(ts) // 3600000000 AS h,
-            COUNT(*) FILTER (WHERE event_type = 'view') AS nv,
-            COUNT(*) FILTER (WHERE event_type = 'purchase') AS np
-        FROM events WHERE event_type IN ('view', 'purchase')
-        GROUP BY 1),
-    b AS (SELECT MIN(h) AS h0, MAX(h) AS h1 FROM hourly),
-    spine AS (SELECT unnest(generate_series(h0, h1)) AS h FROM b),
-    dense AS (SELECT spine.h, COALESCE(nv, 0) AS nv, COALESCE(np, 0) AS np
-              FROM spine LEFT JOIN hourly ON spine.h = hourly.h),
-    lags AS (SELECT unnest([-3, -2, -1, 0, 1, 2, 3]) AS lag),
-    j AS (SELECT lag, a.nv AS x, c.np AS y
-          FROM dense a CROSS JOIN lags
-          JOIN dense c ON a.h + lag = c.h),
-    agg AS (SELECT lag, COUNT(*) AS n_points,
-            CAST(SUM(x) AS BIGINT) AS sx, CAST(SUM(y) AS BIGINT) AS sy,
-            CAST(SUM(x * y) AS BIGINT) AS sxy,
-            CAST(SUM(x * x) AS BIGINT) AS sxx,
-            CAST(SUM(y * y) AS BIGINT) AS syy
-        FROM j GROUP BY lag)
-    SELECT lag, n_points,
-        {DET.det_round_sql(
-            "CAST(n_points * sxy - sx * sy AS DOUBLE)"
-            " / NULLIF(sqrt(CAST(n_points * sxx - sx * sx AS DOUBLE))"
-            "    * sqrt(CAST(n_points * syy - sy * sy AS DOUBLE)), 0.0)", 6
-        )} AS r
-    FROM agg
-"""
-
-
-def q_gini_spend_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spend-inequality report: exact Gini coefficient of customer
-    lifetime spend per market segment, in integer ppm — the
-    concentration metric behind both revenue-risk and data-diversity
-    audits.  Formula over ascending spend x_1..x_n (rank i):
-    G = (2*sum(i*x_i) - (n+1)*sum(x)) / (n*sum(x)); every product runs
-    in DECIMAL(38,0) (Spark) / HUGEINT (DuckDB) — verified to agree
-    bit-for-bit under integral division — so the arithmetic cannot
-    overflow at ANY corpus scale, and ties order by (cents, custkey)
-    deterministically.  Scale shape: spend aggregates at customer
-    cardinality (one corpus-sized partial agg); the rank window sorts
-    the CUSTOMER dimension per segment — the documented
-    dimension-sized-sort trade, as in trimmed_event_stats."""
-    from pyspark.sql import Window
-
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    orders = _t(spark, sf_dir, "orders")
-    cents = F.floor(
-        F.col("o_totalprice") * F.lit(100.0) + F.lit(0.5)
-    ).cast("bigint")
-    spend = (
-        orders.select("o_custkey", cents.alias("cents"))
-        .groupBy("o_custkey")
-        .agg(F.sum("cents").alias("cents"))
-    )
-    per_cust = cust.join(
-        spend, cust["c_custkey"] == spend["o_custkey"], "left"
-    ).select(
-        "c_mktsegment",
-        "c_custkey",
-        F.coalesce("cents", F.lit(0)).alias("cents"),
-    )
-    w = Window.partitionBy("c_mktsegment").orderBy("cents", "c_custkey")
-    ranked = per_cust.withColumn("rn", F.row_number().over(w))
-    agg = ranked.groupBy("c_mktsegment").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("cents").cast("decimal(38,0)")).alias("s0"),
-        F.sum(
-            F.col("rn").cast("decimal(38,0)")
-            * F.col("cents").cast("decimal(38,0)")
-        ).alias("s1"),
-    )
-    return agg.select(
-        "c_mktsegment",
-        "n",
-        F.col("s0").cast("string").alias("total_cents"),
-        F.expr(
-            "(CAST(2 AS DECIMAL(38,0)) * s1"
-            " - (CAST(n AS DECIMAL(38,0)) + 1) * s0)"
-            " * CAST(1000000 AS DECIMAL(38,0))"
-            " div (CAST(n AS DECIMAL(38,0)) * s0)"
-        ).alias("gini_ppm"),
-    )
-
-
-ORACLE_GINI = """
-    WITH spend AS (SELECT o_custkey,
-            CAST(SUM(CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT))
-                 AS BIGINT) AS cents
-        FROM orders GROUP BY o_custkey),
-    pc AS (SELECT c_mktsegment, c_custkey,
-            COALESCE(cents, 0) AS cents
-        FROM customer LEFT JOIN spend ON c_custkey = o_custkey),
-    r AS (SELECT c_mktsegment, cents,
-            ROW_NUMBER() OVER (PARTITION BY c_mktsegment
-                ORDER BY cents, c_custkey) AS rn
-          FROM pc),
-    agg AS (SELECT c_mktsegment, COUNT(*) AS n,
-            CAST(SUM(CAST(cents AS HUGEINT)) AS HUGEINT) AS s0,
-            CAST(SUM(CAST(rn AS HUGEINT) * CAST(cents AS HUGEINT))
-                 AS HUGEINT) AS s1
-        FROM r GROUP BY c_mktsegment)
-    SELECT c_mktsegment, n, CAST(s0 AS VARCHAR) AS total_cents,
-        CAST((2 * s1 - (CAST(n AS HUGEINT) + 1) * s0) * 1000000
-             // (CAST(n AS HUGEINT) * s0) AS BIGINT) AS gini_ppm
-    FROM agg
-"""
-
-
-def q_lorenz_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lorenz curve of customer spend in deciles: cumulative share of
-    total spend held by the bottom d/10 of customers, exact integer
-    ppm — the curve the Gini summarizes, reported pointwise.  Decile
-    assignment is row_number-based ((10*rn - 1) div n), deterministic
-    under the (cents, custkey) order; cumulative sums run over the
-    10-row decile aggregate, and the share divides in DECIMAL(38,0) /
-    HUGEINT so no corpus size can overflow it.  Same scale shape as
-    the Gini: corpus-sized partial agg to customer spend, then
-    dimension-sized ranking."""
-    from pyspark.sql import Window
-
-    orders = _t(spark, sf_dir, "orders")
-    cents = F.floor(
-        F.col("o_totalprice") * F.lit(100.0) + F.lit(0.5)
-    ).cast("bigint")
-    cust = _t(spark, sf_dir, "customer").select("c_custkey")
-    spend0 = (
-        orders.select("o_custkey", cents.alias("cents"))
-        .groupBy("o_custkey")
-        .agg(F.sum("cents").alias("cents"))
-    )
-    # LEFT join from customer: zero-order customers rank at the bottom
-    # with zero spend, exactly as in the Gini this curve summarizes
-    spend = cust.join(
-        spend0, cust["c_custkey"] == spend0["o_custkey"], "left"
-    ).select(
-        F.col("c_custkey").alias("o_custkey"),
-        F.coalesce("cents", F.lit(0)).alias("cents"),
-    )
-    w = Window.orderBy("cents", "o_custkey")
-    wn = Window.partitionBy()
-    ranked = spend.select(
-        "cents",
-        F.row_number().over(w).alias("rn"),
-        F.count(F.lit(1)).over(wn).alias("n"),
-    )
-    deciles = (
-        ranked.withColumn(
-            "decile", F.expr("(10 * rn - 1) div n").cast("int") + 1
-        )
-        .groupBy("decile")
-        .agg(
-            F.count(F.lit(1)).alias("n_customers"),
-            F.sum(F.col("cents").cast("decimal(38,0)")).alias("dc"),
-        )
-    )
-    wcum = Window.orderBy("decile").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    tot = deciles.agg(
-        F.sum("dc").cast("decimal(38,0)").alias("t")
-    )
-    return (
-        deciles.withColumn("cum", F.sum("dc").over(wcum))
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "decile",
-            "n_customers",
-            F.expr(
-                "CAST(cum AS DECIMAL(38,0))"
-                " * CAST(1000000 AS DECIMAL(38,0))"
-                " div CAST(t AS DECIMAL(38,0))"
-            ).alias("cum_share_ppm"),
-        )
-    )
-
-
-ORACLE_LORENZ = """
-    WITH spend0 AS (SELECT o_custkey,
-            CAST(SUM(CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT))
-                 AS BIGINT) AS cents
-        FROM orders GROUP BY o_custkey),
-    spend AS (SELECT c_custkey AS o_custkey, COALESCE(cents, 0) AS cents
-              FROM customer LEFT JOIN spend0 ON c_custkey = o_custkey),
-    r AS (SELECT cents,
-            ROW_NUMBER() OVER (ORDER BY cents, o_custkey) AS rn,
-            COUNT(*) OVER () AS n
-          FROM spend),
-    d AS (SELECT CAST((10 * rn - 1) // n AS INT) + 1 AS decile,
-                 COUNT(*) AS n_customers,
-                 CAST(SUM(CAST(cents AS HUGEINT)) AS HUGEINT) AS dc
-          FROM r GROUP BY 1),
-    c AS (SELECT decile, n_customers,
-            CAST(SUM(dc) OVER (ORDER BY decile
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                AS HUGEINT) AS cum,
-            CAST(SUM(dc) OVER () AS HUGEINT) AS t
-          FROM d)
-    SELECT decile, n_customers,
-        CAST(cum * 1000000 // t AS BIGINT) AS cum_share_ppm
-    FROM c
-"""
-
-
-def q_dup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Duplicate-cluster size histogram over the planted corpus: how
-    many near-dup clusters exist at each size — the dedup summary that
-    decides keep-one-per-cluster savings before any deletion runs.
-    Composes lsh_candidate_pairs -> dup_components (star contraction +
-    bounded union-find tail) -> two bounded aggregations (component
-    cardinality, then size cardinality)."""
-    # star edges, not all-pairs (identical components, r11 A/B); shared
-    # memoized plan — see _planted_component_edges
-    pairs = _planted_component_edges(spark, sf_dir)
-    comp = D.dup_components(pairs)
-    sizes = comp.groupBy("component_id").agg(
-        F.count(F.lit(1)).alias("size")
-    )
-    return (
-        sizes.groupBy("size")
-        .agg(F.count(F.lit(1)).alias("n_clusters"))
-        .filter(F.col("size") >= 2)
-    )
-
-
-ORACLE_DUP_CLUSTER_SIZES = f"""
-    WITH comp AS ({ORACLE_DUP_COMPONENTS})
-    SELECT size, COUNT(*) AS n_clusters FROM (
-        SELECT component_id, COUNT(*) AS size
-        FROM comp GROUP BY component_id) s
-    WHERE size >= 2
-    GROUP BY size
-"""
-
-
-def q_bounded_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time-bounded conversion funnel: users whose first view is
-    followed by a click within 24h, then a purchase within 24h of that
-    click — the windowed variant of event_funnel (unbounded funnels
-    overcount: a purchase a month later is not a conversion).  Each
-    stage is a conditional MIN over the prior stage's anchor with the
-    bound as a join predicate — partial-aggregated passes, never a
-    per-user sort."""
-    ev = _t(spark, sf_dir, "events")
-    day_us = 24 * 3600 * 1_000_000
-    us = F.expr("unix_micros(CAST(ts AS TIMESTAMP))")
-    base = ev.select("user_id", "event_type", us.alias("us"))
-    s1 = (
-        base.filter(F.col("event_type") == "view")
-        .groupBy("user_id")
-        .agg(F.min("us").alias("t1"))
-    )
-    s2 = (
-        base.filter(F.col("event_type") == "click")
-        .join(s1, "user_id")
-        .filter(
-            (F.col("us") > F.col("t1"))
-            & (F.col("us") <= F.col("t1") + F.lit(day_us))
-        )
-        .groupBy("user_id")
-        .agg(F.min("us").alias("t2"))
-    )
-    s3 = (
-        base.filter(F.col("event_type") == "purchase")
-        .join(s2, "user_id")
-        .filter(
-            (F.col("us") > F.col("t2"))
-            & (F.col("us") <= F.col("t2") + F.lit(day_us))
-        )
-        .groupBy("user_id")
-        .agg(F.min("us").alias("t3"))
-    )
-    one = lambda df, stage, name: df.agg(
-        F.lit(stage).alias("stage"),
-        F.lit(name).alias("step"),
-        F.count(F.lit(1)).alias("n_users"),
-    )
-    return (
-        one(s1, 1, "view")
-        .unionAll(one(s2, 2, "click_within_24h"))
-        .unionAll(one(s3, 3, "purchase_within_24h"))
-    )
-
-
-ORACLE_BOUNDED_FUNNEL = """
-    WITH b AS (SELECT user_id, event_type, epoch_us(ts) AS us FROM events),
-    s1 AS (SELECT user_id, MIN(us) AS t1 FROM b
-           WHERE event_type = 'view' GROUP BY user_id),
-    s2 AS (SELECT b.user_id, MIN(b.us) AS t2
-           FROM b JOIN s1 ON b.user_id = s1.user_id
-           WHERE b.event_type = 'click' AND b.us > s1.t1
-             AND b.us <= s1.t1 + 86400000000
-           GROUP BY b.user_id),
-    s3 AS (SELECT b.user_id, MIN(b.us) AS t3
-           FROM b JOIN s2 ON b.user_id = s2.user_id
-           WHERE b.event_type = 'purchase' AND b.us > s2.t2
-             AND b.us <= s2.t2 + 86400000000
-           GROUP BY b.user_id)
-    SELECT 1 AS stage, 'view' AS step, COUNT(*) AS n_users FROM s1
-    UNION ALL
-    SELECT 2, 'click_within_24h', COUNT(*) FROM s2
-    UNION ALL
-    SELECT 3, 'purchase_within_24h', COUNT(*) FROM s3
-"""
-
-
-def q_embedding_separability(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Label separability of the embedding space: per label, the ratio
-    of between-class to within-class scatter (the Fisher-criterion
-    diagonal), accumulated in deterministic truncated micro-unit
-    integer arithmetic (DECIMAL(38,0) div — bit-equal to DuckDB's
-    HUGEINT //) before ONE final double division — tells a pipeline
-    whether labels are linearly separable enough to train on.  Scale
-    shape: two partial aggs (per-label dim sums at label x dim
-    cardinality, then global); nothing but label-count
-    rows ever reaches the driver."""
-    emb = _t(spark, sf_dir, "embeddings").select(
-        "label", F.col("embedding").cast("array<double>").alias("v")
-    )
-    # posexplode to (label, dim, micro-value): the per-(label, dim)
-    # moment sums are the whole state — label x dim cardinality rows,
-    # never vectors, cross the shuffle
-    ex = emb.select(
-        "label", F.posexplode("v").alias("dim", "x")
-    ).select(
-        "label",
-        "dim",
-        F.floor(F.col("x") * F.lit(1000000.0) + F.lit(0.5))
-        .cast("bigint")
-        .alias("xm"),
-    )
-    per_ld = ex.groupBy("label", "dim").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("xm").alias("s"),
-        # DECIMAL accumulation: xm*xm ~ 1e12, so a BIGINT sum wraps
-        # past ~9.2e6 rows per (label, dim); the oracle uses HUGEINT
-        F.sum(
-            F.col("xm").cast("decimal(38,0)")
-            * F.col("xm").cast("decimal(38,0)")
-        ).alias("ss"),
-    )
-    glob = ex.groupBy("dim").agg(
-        F.count(F.lit(1)).alias("gn"), F.sum("xm").alias("gs")
-    )
-    # within = sum_l (ss_l - s_l^2/n_l); between = sum_l n_l*(mu_l-mu)^2
-    # — all in DECIMAL(38,0) micro^2 space, one double division at the
-    # end (DECIMAL div verified bit-equal to HUGEINT //)
-    j = per_ld.join(F.broadcast(glob), "dim")
-    terms = j.select(
-        "label",
-        F.expr(
-            "CAST(ss AS DECIMAL(38,0))"
-            " - CAST(s AS DECIMAL(38,0)) * CAST(s AS DECIMAL(38,0))"
-            "   div CAST(n AS DECIMAL(38,0))"
-        ).alias("w"),
-        F.expr(
-            "CAST(n AS DECIMAL(38,0))"
-            " * (CAST(s AS DECIMAL(38,0)) div CAST(n AS DECIMAL(38,0))"
-            "    - CAST(gs AS DECIMAL(38,0)) div CAST(gn AS DECIMAL(38,0)))"
-            " * (CAST(s AS DECIMAL(38,0)) div CAST(n AS DECIMAL(38,0))"
-            "    - CAST(gs AS DECIMAL(38,0)) div CAST(gn AS DECIMAL(38,0)))"
-        ).alias("b"),
-    )
-    out = terms.groupBy("label").agg(
-        F.sum("w").alias("within"), F.sum("b").alias("between")
-    )
-    return out.select(
-        "label",
-        DET.det_round(
-            F.col("between").cast("double") / F.col("within").cast("double"),
-            6,
-        ).alias("fisher_ratio"),
-    )
-
-
-ORACLE_SEPARABILITY = """
-    WITH e AS (SELECT label,
-            list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        FROM embeddings),
-    ex AS (SELECT label, i AS dim,
-            CAST(FLOOR(v[i + 1] * 1000000.0 + 0.5) AS BIGINT) AS xm
-        FROM e, (SELECT unnest(range(64)) AS i) r),
-    per_ld AS (SELECT label, dim, COUNT(*) AS n,
-            CAST(SUM(xm) AS HUGEINT) AS s,
-            CAST(SUM(CAST(xm AS HUGEINT) * CAST(xm AS HUGEINT))
-                 AS HUGEINT) AS ss
-        FROM ex GROUP BY 1, 2),
-    gl AS (SELECT dim, COUNT(*) AS gn,
-            CAST(SUM(xm) AS HUGEINT) AS gs
-        FROM ex GROUP BY dim),
-    terms AS (SELECT label,
-            ss - s * s // CAST(n AS HUGEINT) AS w,
-            CAST(n AS HUGEINT)
-            * (s // CAST(n AS HUGEINT) - gs // CAST(gn AS HUGEINT))
-            * (s // CAST(n AS HUGEINT) - gs // CAST(gn AS HUGEINT)) AS b
-        FROM per_ld JOIN gl ON per_ld.dim = gl.dim),
-    agg AS (SELECT label, SUM(w) AS within_, SUM(b) AS between_
-            FROM terms GROUP BY label)
-    SELECT label,
-        (FLOOR((CAST(between_ AS DOUBLE)
-                / NULLIF(CAST(within_ AS DOUBLE), 0.0))
-               * 1000000.0 + 0.5) / 1000000.0) AS fisher_ratio
-    FROM agg
-"""
-
-
-def q_top_parts_with_ties(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-3 part sizes per type WITH TIES (DENSE_RANK <= 3): every
-    part whose size ranks in the three largest distinct sizes of its
-    type — the 'WITH TIES' semantics ROW_NUMBER top-k silently breaks
-    (equal values must not be dropped arbitrarily).  One key-partition
-    window; output bounded by ties, not by an arbitrary cut."""
-    from pyspark.sql import Window
-
-    part = _t(spark, sf_dir, "part")
-    w = Window.partitionBy("p_type").orderBy(F.desc("p_size"))
-    return (
-        part.withColumn("rk", F.dense_rank().over(w))
-        .filter(F.col("rk") <= 3)
-        .select("p_type", "p_partkey", "p_size", F.col("rk").cast("int").alias("rk"))
-    )
-
-
-ORACLE_TOP_TIES = """
-    SELECT p_type, p_partkey, p_size, CAST(rk AS INT) AS rk FROM (
-        SELECT p_type, p_partkey, p_size,
-            DENSE_RANK() OVER (PARTITION BY p_type
-                ORDER BY p_size DESC) AS rk
-        FROM part) r
-    WHERE rk <= 3
-"""
-
-
-def q_burstiness_fano(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temporal burstiness per event type: the Fano factor (variance /
-    mean) of HOURLY event counts over a dense hour spine — Poisson
-    traffic sits at 1, bursty traffic far above; the load-model check
-    behind capacity planning and anomaly thresholds.  Exact integer
-    ppm: F = (n*S2 - S1^2) / ((n-1)*S1) with all products in
-    DECIMAL(38,0)/HUGEINT (n*S2*1e6 crosses int64 already at sf1).
-    Missing hours count ZERO (they carry variance); one corpus partial
-    agg, then spine-sized arithmetic."""
-    ev = _t(spark, sf_dir, "events")
-    hourly = (
-        ev.select(
-            F.expr(
-                "unix_micros(CAST(ts AS TIMESTAMP)) div 3600000000"
-            ).alias("h"),
-            "event_type",
-        )
-        .groupBy("event_type", "h")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    bounds = hourly.agg(
-        F.min("h").alias("h0"), F.max("h").alias("h1")
-    ).head()
-    h0, h1 = bounds["h0"], bounds["h1"]
-    spine = spark.range(h0, h1 + 1).select(F.col("id").alias("h"))
-    types = hourly.select("event_type").distinct()
-    dense = (
-        types.crossJoin(spine)
-        .join(hourly, ["event_type", "h"], "left")
-        .select(
-            "event_type", "h", F.coalesce("c", F.lit(0)).alias("c")
-        )
-    )
-    agg = dense.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("c").alias("s1"),
-        # DECIMAL accumulation: a BIGINT sum of c*c wraps silently once
-        # hourly counts reach ~1e9 (the oracle's HUGEINT would not)
-        F.sum(
-            F.col("c").cast("decimal(38,0)")
-            * F.col("c").cast("decimal(38,0)")
-        ).alias("s2"),
-    )
-    return agg.select(
-        "event_type",
-        F.col("n").alias("n_hours"),
-        F.col("s1").alias("n_events"),
-        F.expr(
-            "(CAST(n AS DECIMAL(38,0)) * CAST(s2 AS DECIMAL(38,0))"
-            " - CAST(s1 AS DECIMAL(38,0)) * CAST(s1 AS DECIMAL(38,0)))"
-            " * CAST(1000000 AS DECIMAL(38,0))"
-            " div ((CAST(n AS DECIMAL(38,0)) - 1)"
-            "      * CAST(s1 AS DECIMAL(38,0)))"
-        ).alias("fano_ppm"),
-    )
-
-
-ORACLE_FANO = """
-    WITH hourly AS (SELECT event_type,
-            epoch_us(ts) // 3600000000 AS h, COUNT(*) AS c
-        FROM events GROUP BY 1, 2),
-    b AS (SELECT MIN(h) AS h0, MAX(h) AS h1 FROM hourly),
-    spine AS (SELECT unnest(generate_series(h0, h1)) AS h FROM b),
-    t AS (SELECT DISTINCT event_type FROM hourly),
-    dense AS (SELECT t.event_type, spine.h, COALESCE(c, 0) AS c
-              FROM t CROSS JOIN spine
-              LEFT JOIN hourly ON hourly.event_type = t.event_type
-                              AND hourly.h = spine.h),
-    agg AS (SELECT event_type, COUNT(*) AS n,
-            CAST(SUM(c) AS BIGINT) AS s1,
-            CAST(SUM(CAST(c AS HUGEINT) * CAST(c AS HUGEINT))
-                 AS HUGEINT) AS s2
-        FROM dense GROUP BY event_type)
-    SELECT event_type, n AS n_hours, s1 AS n_events,
-        CAST((CAST(n AS HUGEINT) * s2
-              - CAST(s1 AS HUGEINT) * CAST(s1 AS HUGEINT)) * 1000000
-             // ((CAST(n AS HUGEINT) - 1) * CAST(s1 AS HUGEINT))
-             AS BIGINT) AS fano_ppm
-    FROM agg
-"""
-
-
-def q_order_gap_median(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Inter-purchase cadence per market segment: the exact lower
-    median of days between a customer's consecutive orders — the
-    re-engagement interval marketing models against.  One lag window
-    per customer (key shuffle), then a per-segment rank median over
-    the GAP rows (order cardinality minus customers — the same
-    dimension-sized-sort trade as trimmed_event_stats)."""
-    from pyspark.sql import Window
-
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer").select(
-        "c_custkey", "c_mktsegment"
-    )
-    w = Window.partitionBy("o_custkey").orderBy("us", "o_orderkey")
-    gaps = (
-        orders.select(
-            "o_custkey",
-            "o_orderkey",
-            F.expr(
-                "unix_micros(CAST(o_orderdate AS TIMESTAMP))"
-            ).alias("us"),
-        )
-        .withColumn("day", F.expr("us div 86400000000"))
-        .withColumn("prev_day", F.lag("day").over(w))
-        .filter(F.col("prev_day").isNotNull())
-        .select(
-            "o_custkey",
-            (F.col("day") - F.col("prev_day")).alias("gap_days"),
-            "o_orderkey",
-        )
-    )
-    j = gaps.join(
-        F.broadcast(cust), gaps["o_custkey"] == cust["c_custkey"]
-    )
-    wm = Window.partitionBy("c_mktsegment").orderBy(
-        "gap_days", "o_orderkey"
-    )
-    wn = Window.partitionBy("c_mktsegment")
-    med = (
-        j.withColumn("rn", F.row_number().over(wm))
-        .withColumn("n", F.count(F.lit(1)).over(wn))
-        .filter(F.col("rn") == F.expr("(n + 1) div 2"))
-    )
-    return med.select(
-        "c_mktsegment",
-        F.col("n").alias("n_gaps"),
-        F.col("gap_days").cast("bigint").alias("median_gap_days"),
-    )
-
-
-ORACLE_ORDER_GAP = """
-    WITH g AS (SELECT o_custkey, o_orderkey,
-            epoch_us(o_orderdate) // 86400000000 AS day,
-            LAG(epoch_us(o_orderdate) // 86400000000) OVER (
-                PARTITION BY o_custkey
-                ORDER BY epoch_us(o_orderdate), o_orderkey) AS prev_day
-        FROM orders),
-    gaps AS (SELECT o_custkey, day - prev_day AS gap_days, o_orderkey
-             FROM g WHERE prev_day IS NOT NULL),
-    j AS (SELECT c_mktsegment, gap_days, o_orderkey
-          FROM gaps JOIN customer ON o_custkey = c_custkey),
-    r AS (SELECT c_mktsegment, gap_days,
-            ROW_NUMBER() OVER (PARTITION BY c_mktsegment
-                ORDER BY gap_days, o_orderkey) AS rn,
-            COUNT(*) OVER (PARTITION BY c_mktsegment) AS n
-          FROM j)
-    SELECT c_mktsegment, n AS n_gaps,
-           CAST(gap_days AS BIGINT) AS median_gap_days
-    FROM r WHERE rn = (n + 1) // 2
-"""
-
-
-def q_session_bounce_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bounce rate by session entry type: of the 30-minute-gap sessions
-    (same definition as sessionize_events), the fraction consisting of
-    exactly one event, grouped by the session's FIRST event type — the
-    landing-quality metric.  Lag + cumulative-sum sessionization (one
-    user-key window), first_value for the entry type, exact ppm."""
-    from pyspark.sql import Window
-
-    ev = _t(spark, sf_dir, "events")
-    wu = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    d = ev.select(
-        "user_id",
-        "event_id",
-        "ts",
-        "event_type",
-        F.when(
-            F.expr("unix_micros(CAST(ts AS TIMESTAMP))")
-            - F.lag(
-                F.expr("unix_micros(CAST(ts AS TIMESTAMP))")
-            ).over(wu)
-            > 1_800_000_000,  # micros, not seconds: a 1800.5 s gap
-            1,  # must break on BOTH engines identically
-        )
-        .otherwise(0)
-        .alias("brk"),
-    )
-    s = d.withColumn(
-        "sess_ix",
-        F.sum("brk").over(
-            wu.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
-    )
-    ws = Window.partitionBy("user_id", "sess_ix").orderBy(
-        "ts", "event_id"
-    )
-    per_sess = (
-        s.withColumn("entry", F.first("event_type").over(ws))
-        .groupBy("user_id", "sess_ix")
-        .agg(
-            F.first("entry").alias("entry"),
-            F.count(F.lit(1)).alias("n_ev"),
-        )
-    )
-    return per_sess.groupBy("entry").agg(
-        F.count(F.lit(1)).alias("n_sessions"),
-        F.count_if(F.col("n_ev") == 1).alias("n_bounces"),
-        F.expr(
-            "count_if(n_ev = 1) * 1000000 div count(*)"
-        ).alias("bounce_ppm"),
-    )
-
-
-ORACLE_BOUNCE = """
-    WITH d AS (SELECT user_id, event_id, ts, event_type,
-            CASE WHEN epoch_us(ts) - LAG(epoch_us(ts)) OVER (
-                     PARTITION BY user_id ORDER BY ts, event_id)
-                      > 1800000000
-                 THEN 1 ELSE 0 END AS brk
-        FROM events),
-    s AS (SELECT user_id, event_id, ts, event_type,
-            SUM(brk) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                AS sess_ix
-          FROM d),
-    w AS (SELECT user_id, sess_ix,
-            FIRST_VALUE(event_type) OVER (PARTITION BY user_id, sess_ix
-                ORDER BY ts, event_id) AS entry
-          FROM s),
-    per_sess AS (SELECT user_id, sess_ix,
-            MIN(entry) AS entry, COUNT(*) AS n_ev
-        FROM w GROUP BY 1, 2)
-    SELECT entry, COUNT(*) AS n_sessions,
-        CAST(COUNT(*) FILTER (WHERE n_ev = 1) AS BIGINT) AS n_bounces,
-        CAST(COUNT(*) FILTER (WHERE n_ev = 1) AS BIGINT) * 1000000
-            // COUNT(*) AS bounce_ppm
-    FROM per_sess GROUP BY entry
-"""
-
-
-def q_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Collocation mining: top-20 word bigrams by pointwise mutual
-    information (min count 5) — the association score that separates
-    'new york' from 'of the' no matter how frequent 'the' is.
-    PMI = ln(p(xy) / (p(x) p(y))) computed in log space —
-    ln(cxy) + 2 ln(n_uni) − ln(n_big) − ln(cx) − ln(cy), identical
-    operation order on both sides — because the one-ln-over-a-ratio
-    form needs the int64 product cxy·n_uni², which past ~3e7 corpus
-    tokens silently wraps in non-ANSI Spark while DuckDB errors
-    (round-5 ADVICE); log-space never overflows at any corpus size.
-    det_round(6) keeps libm determinism; ranking ties break on the
-    bigram string.  Scale shape: two token-cardinality partial aggs, two
-    equi-joins on the word (shuffles carry count rows, not text), a
-    TakeOrdered finish."""
-    docs = _t(spark, sf_dir, "documents")
-    toks = docs.select(
-        TX.tokens(TX.normalize_text(F.col("text"))).alias("toks")
-    )
-    uni = (
-        toks.select(F.explode("toks").alias("w"))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    # BOTH corpus scalars from ONE aggregate action (separate count()
-    # actions would each re-tokenize the corpus — the DSIR lesson)
-    stats = toks.agg(
-        F.sum(F.size("toks")).alias("nu"),
-        F.sum(
-            F.when(F.size("toks") >= 2, F.size("toks") - 1).otherwise(0)
-        ).alias("nb"),
-    ).head()
-    n_uni, n_big = stats["nu"], stats["nb"]
-    big = (
-        toks.filter(F.size("toks") >= 2)
-        .select(
-            F.explode(TX.ngram_strings(F.col("toks"), 2)).alias("bg")
-        )
-        .groupBy("bg")
-        .agg(F.count(F.lit(1)).alias("cxy"))
-        .filter(F.col("cxy") >= 5)
-    )
-    parts = big.select(
-        "bg",
-        "cxy",
-        F.split(F.col("bg"), " ").getItem(0).alias("x"),
-        F.split(F.col("bg"), " ").getItem(1).alias("y"),
-    )
-    ux = uni.select(F.col("w").alias("x"), F.col("c").alias("cx"))
-    uy = uni.select(F.col("w").alias("y"), F.col("c").alias("cy"))
-    scored = (
-        parts.join(ux, "x")
-        .join(uy, "y")
-        .select(
-            "bg",
-            "cxy",
-            "cx",
-            "cy",
-            # log-space sum, left-to-right — the SAME association and
-            # operation order the oracle uses, so the doubles agree
-            # bit-for-bit before det_round
-            DET.det_round(
-                F.log(F.col("cxy").cast("double"))
-                + F.lit(2.0) * F.log(F.lit(float(n_uni)))
-                - F.log(F.lit(float(n_big)))
-                - F.log(F.col("cx").cast("double"))
-                - F.log(F.col("cy").cast("double")),
-                6,
-            ).alias("pmi"),
-        )
-    )
-    return scored.orderBy(F.desc("pmi"), "bg").limit(20)
-
-
-ORACLE_PMI = f"""
-    WITH t AS (SELECT {_TOKS} AS toks FROM documents),
-    uni AS (SELECT w, COUNT(*) AS c FROM (
-            SELECT unnest(toks) AS w FROM t) u GROUP BY w),
-    nu AS (SELECT CAST(SUM(c) AS BIGINT) AS n FROM uni),
-    bt AS (SELECT toks FROM t WHERE len(toks) >= 2),
-    big AS (SELECT bg, COUNT(*) AS cxy FROM (
-            SELECT unnest(list_transform(range(len(toks) - 1),
-                i -> toks[i + 1] || ' ' || toks[i + 2])) AS bg
-            FROM bt) b
-        GROUP BY bg HAVING COUNT(*) >= 5),
-    nb AS (SELECT CAST(SUM(len(toks) - 1) AS BIGINT) AS n FROM bt),
-    parts AS (SELECT bg, cxy,
-            string_split(bg, ' ')[1] AS x,
-            string_split(bg, ' ')[2] AS y
-        FROM big),
-    scored AS (SELECT bg, cxy, ux.c AS cx, uy.c AS cy,
-            {DET.det_round_sql(
-                "ln(CAST(cxy AS DOUBLE))"
-                " + 2.0 * ln(CAST(nu.n AS DOUBLE))"
-                " - ln(CAST(nb.n AS DOUBLE))"
-                " - ln(CAST(ux.c AS DOUBLE))"
-                " - ln(CAST(uy.c AS DOUBLE))", 6
-            )} AS pmi
-        FROM parts
-        JOIN uni ux ON parts.x = ux.w
-        JOIN uni uy ON parts.y = uy.w
-        CROSS JOIN nu CROSS JOIN nb)
-    SELECT bg, cxy, cx, cy, pmi FROM scored
-    ORDER BY pmi DESC, bg LIMIT 20
-"""
-
-
-def q_bigram_lm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CCNet-style bigram-LM perplexity filter: each doc scored by its
-    mean ln p(w2|w1) under the corpus bigram model (add-one smoothing,
-    contexts counted from the bigram table).  Log-space terms (the
-    pmi_bigrams overflow lesson), DECIMAL(20,6) order-independent sums,
-    ppl = exp(-avg) of the already-quantized average.  See
-    operators/text.py::bigram_lm_scores for the scale shape (count
-    tables at vocab cardinality = the broadcast knob)."""
-    return TX.bigram_lm_scores(_t(spark, sf_dir, "documents"))
-
-
-ORACLE_BIGRAM_LM = f"""
-    WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
-    v AS (SELECT CAST(COUNT(DISTINCT tok) AS BIGINT) AS v
-          FROM (SELECT unnest(toks) AS tok FROM t) u),
-    bt AS (SELECT doc_id, toks FROM t WHERE len(toks) >= 2),
-    occ AS (SELECT doc_id, unnest(list_transform(range(len(toks) - 1),
-                i -> toks[i + 1] || ' ' || toks[i + 2])) AS bg FROM bt),
-    cb AS (SELECT bg, COUNT(*) AS cb FROM occ GROUP BY bg),
-    cw AS (SELECT string_split(bg, ' ')[1] AS w1, COUNT(*) AS cw
-           FROM occ GROUP BY 1),
-    s AS (SELECT occ.doc_id,
-            CAST({DET.det_round_sql(
-                "ln(CAST(cb.cb + 1 AS DOUBLE))"
-                " - ln(CAST(cw.cw + v.v AS DOUBLE))", 6
-            )} AS DECIMAL(20,6)) AS term
-          FROM occ JOIN cb USING (bg)
-          JOIN cw ON string_split(occ.bg, ' ')[1] = cw.w1
-          CROSS JOIN v),
-    p AS (SELECT doc_id, COUNT(*) AS n_bigrams,
-            {DET.det_round_sql(
-                "CAST(SUM(term) AS DOUBLE) / COUNT(*)", 4
-            )} AS avg_logprob
-          FROM s GROUP BY doc_id)
-    SELECT doc_id, n_bigrams, avg_logprob,
-        {DET.det_round_sql("exp(-avg_logprob)", 4)} AS ppl
-    FROM p
-"""
-
-
-def q_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MOSS winnowing fingerprints (k=4 word grams, window w=4):
-    guarantees any shared >= w+k-1-token run between two documents
-    produces an identical fingerprint, making boilerplate detection an
-    equi-join.  The (hash, position) window argmin rides ONE int64
-    (hash40 * 2^20 + pos) so no cross-engine struct-ordering semantics
-    are involved.  See operators/text.py::winnow_fingerprints."""
-    return TX.winnow_fingerprints(_t(spark, sf_dir, "documents"))
-
-
-ORACLE_WINNOW = f"""
-    WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
-    g AS (SELECT doc_id, toks FROM t WHERE len(toks) >= 4),
-    p AS (SELECT doc_id, u.i AS pos,
-            ('0x' || substr(md5(
-                array_to_string(toks[u.i + 1:u.i + 4], ' ')), 1, 10)
-            )::BIGINT * 1048576 + u.i AS comb
-          FROM g, unnest(range(len(toks) - 3)) AS u(i)),
-    sel AS (SELECT doc_id, pos,
-            MIN(comb) OVER (PARTITION BY doc_id ORDER BY pos
-                ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS sel,
-            COUNT(*) OVER (PARTITION BY doc_id) AS m
-          FROM p)
-    SELECT DISTINCT doc_id, sel // 1048576 AS fp_hash,
-           CAST(sel % 1048576 AS INT) AS fp_pos
-    FROM sel WHERE pos <= greatest(m - 4, 0)
-"""
-
-
-def q_gram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First-seen attribution of 8-gram content: per doc, the fraction
-    of its distinct grams no lower doc_id contains — spans say WHAT is
-    duplicated, novelty says WHO introduced it.  Exact integer ppm.
-    See operators/text.py::gram_novelty."""
-    return TX.gram_novelty(_t(spark, sf_dir, "documents"))
-
-
-ORACLE_GRAM_NOVELTY = f"""
-    WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
-    g AS (SELECT doc_id, {_GRAMS8} AS grams FROM t),
-    h AS (SELECT DISTINCT doc_id,
-            ('0x' || substr(md5(gram), 1, 15))::BIGINT AS gh
-          FROM (SELECT doc_id, unnest(list_distinct(grams)) AS gram
-                FROM g) u),
-    f AS (SELECT gh, MIN(doc_id) AS first_doc FROM h GROUP BY gh),
-    p AS (SELECT h.doc_id, COUNT(*) AS n_grams,
-            CAST(SUM(CASE WHEN f.first_doc = h.doc_id THEN 1 ELSE 0 END)
-                 AS BIGINT) AS novel_grams
-          FROM h JOIN f USING (gh) GROUP BY h.doc_id)
-    SELECT doc_id, n_grams, novel_grams,
-        (novel_grams // n_grams) * 1000000
-        + ((novel_grams % n_grams) * 2000000 + n_grams)
-          // (2 * n_grams) AS novelty_ppm
-    FROM p
-"""
-
-
-def q_winnow_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MOSS match step over the winnowing fingerprints: doc pairs
-    sharing >= 2 distinct fingerprint hashes, joined WITHIN buckets
-    with ubiquitous fingerprints (> 100 docs) dropped as
-    stop-fingerprints before the self-join — the same heavy-bucket
-    discipline as the LSH paths.  See
-    operators/text.py::winnow_dup_pairs."""
-    return TX.winnow_dup_pairs(_t(spark, sf_dir, "documents"))
-
-
-_WINNOW_FPS_SQL = """
-    t AS (SELECT doc_id, %(toks)s AS toks FROM documents),
-    g AS (SELECT doc_id, toks FROM t WHERE len(toks) >= 4),
-    p AS (SELECT doc_id, u.i AS pos,
-            ('0x' || substr(md5(
-                array_to_string(toks[u.i + 1:u.i + 4], ' ')), 1, 10)
-            )::BIGINT * 1048576 + u.i AS comb
-          FROM g, unnest(range(len(toks) - 3)) AS u(i)),
-    sel AS (SELECT doc_id, pos,
-            MIN(comb) OVER (PARTITION BY doc_id ORDER BY pos
-                ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS sel,
-            COUNT(*) OVER (PARTITION BY doc_id) AS m
-          FROM p),
-    fh AS (SELECT DISTINCT doc_id, sel // 1048576 AS fp_hash
-           FROM sel WHERE pos <= greatest(m - 4, 0))
-""" % {"toks": _TOKS}
-
-
-ORACLE_WINNOW_PAIRS = f"""
-    WITH {_WINNOW_FPS_SQL},
-    width AS (SELECT fp_hash FROM fh GROUP BY fp_hash
-              HAVING COUNT(*) <= 100)
-    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_shared
-    FROM fh a JOIN fh b ON a.fp_hash = b.fp_hash
-         AND a.doc_id < b.doc_id
-    JOIN width ON a.fp_hash = width.fp_hash
-    GROUP BY 1, 2 HAVING COUNT(*) >= 2
-"""
-
-
-def q_gopher_quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher rule-based quality screen (Rae et al. 2021 §A1.1): exact
-    integer word-count / mean-word-length / stopword-presence /
-    top-token-dominance flags per document.  See
-    operators/text.py::gopher_flags."""
-    return TX.gopher_flags(_t(spark, sf_dir, "documents"))
-
-
-ORACLE_GOPHER = f"""
-    WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
-    tok AS (SELECT doc_id, unnest(toks) AS tok FROM t),
-    pt AS (SELECT doc_id, tok, CAST(COUNT(*) AS BIGINT) AS c,
-            CAST(SUM(length(tok)) AS BIGINT) AS chars
-           FROM tok GROUP BY 1, 2),
-    pd AS (SELECT doc_id,
-            CAST(SUM(c) AS BIGINT) AS n_words,
-            CAST(SUM(chars) AS BIGINT) AS n_chars,
-            CAST(MAX(c) AS BIGINT) AS top_c,
-            CAST(SUM(CASE WHEN tok IN ('the','a','of','to','and',
-                'in','is','it','for','on') THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_stop
-           FROM pt GROUP BY doc_id),
-    m AS (SELECT doc_id, n_words,
-            n_chars * 100 // n_words AS mean_centilen,
-            n_stop, top_c * 1000000 // n_words AS top_tok_ppm
-          FROM pd),
-    fl AS (SELECT *,
-            CASE WHEN n_words BETWEEN 20 AND 100000
-                 THEN 1 ELSE 0 END AS flag_word_count,
-            CASE WHEN mean_centilen BETWEEN 300 AND 1000
-                 THEN 1 ELSE 0 END AS flag_mean_len,
-            CASE WHEN n_stop >= 2 THEN 1 ELSE 0 END AS flag_stopwords,
-            CASE WHEN top_tok_ppm <= 200000
-                 THEN 1 ELSE 0 END AS flag_repetition
-           FROM m)
-    SELECT doc_id, n_words, mean_centilen, n_stop, top_tok_ppm,
-        flag_word_count, flag_mean_len, flag_stopwords, flag_repetition,
-        flag_word_count * flag_mean_len * flag_stopwords
-            * flag_repetition AS passes
-    FROM fl
-"""
-
-
-def q_heaps_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Heaps-law curve: cumulative distinct bigram TYPES vs cumulative
-    bigram occurrences per ingest-order decile — the new-type flattening
-    that says when the corpus stops contributing novelty.  The corpus
-    doc count is the one bounded scalar action (fano-bounds idiom).
-    See operators/text.py::heaps_vocab_growth."""
-    docs = _t(spark, sf_dir, "documents")
-    n_docs = docs.count()
-    return TX.heaps_vocab_growth(docs, n_docs=n_docs, n=2, buckets=10)
-
-
-ORACLE_HEAPS = f"""
-    WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
-    g AS (SELECT doc_id,
-            list_transform(range(len(toks) - 1),
-                i -> array_to_string(toks[i + 1:i + 2], ' ')) AS grams
-          FROM t WHERE len(toks) >= 2),
-    o AS (SELECT doc_id,
-            ('0x' || substr(md5(gram), 1, 15))::BIGINT AS gh
-          FROM (SELECT doc_id, unnest(grams) AS gram FROM g) u),
-    nd AS (SELECT COUNT(*) AS n_docs FROM documents),
-    occ AS (SELECT CAST(least(doc_id * 10 // (SELECT n_docs FROM nd), 9)
-                AS BIGINT) AS bucket, gh FROM o),
-    pb AS (SELECT bucket, CAST(COUNT(*) AS BIGINT) AS n_grams
-           FROM occ GROUP BY bucket),
-    first AS (SELECT gh, MIN(doc_id) AS first_doc FROM o GROUP BY gh),
-    nt AS (SELECT CAST(least(first_doc * 10 // (SELECT n_docs FROM nd), 9)
-                AS BIGINT) AS bucket,
-            CAST(COUNT(*) AS BIGINT) AS new_types
-           FROM first GROUP BY 1),
-    j AS (SELECT COALESCE(pb.bucket, nt.bucket) AS bucket,
-            COALESCE(n_grams, 0) AS n_grams,
-            COALESCE(new_types, 0) AS new_types
-          FROM pb FULL OUTER JOIN nt ON pb.bucket = nt.bucket)
-    SELECT bucket, n_grams, new_types,
-        CAST(SUM(n_grams) OVER (ORDER BY bucket
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-            AS BIGINT) AS cum_grams,
-        CAST(SUM(new_types) OVER (ORDER BY bucket
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-            AS BIGINT) AS cum_types
-    FROM j
-"""
-
-
-def q_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Signed hashing-trick featurization per source: top-8 of 64
-    signed token-hash buckets by |weight| — the vocabulary-free sparse
-    features a linear quality classifier trains on.  See
-    operators/text.py::feature_hash_buckets."""
-    return TX.feature_hash_buckets(
-        _t(spark, sf_dir, "documents"), n_buckets=64, top=8
-    )
-
-
-ORACLE_FEATURE_HASH = f"""
-    WITH t AS (SELECT source, {_TOKS} AS toks FROM documents),
-    tok AS (SELECT source AS grp, unnest(toks) AS tok FROM t),
-    h AS (SELECT grp,
-            CAST(('0x' || substr(md5(tok), 1, 15))::BIGINT % 64
-                 AS INTEGER) AS bucket,
-            (('0x' || substr(md5(tok), 16, 1))::BIGINT % 2) * 2 - 1
-                AS sign
-          FROM tok),
-    agg AS (SELECT grp, bucket, CAST(SUM(sign) AS BIGINT) AS weight,
-            CAST(COUNT(*) AS BIGINT) AS n_tokens
-           FROM h GROUP BY 1, 2),
-    r AS (SELECT grp AS source, bucket, weight, n_tokens,
-            CAST(ROW_NUMBER() OVER (PARTITION BY grp
-                ORDER BY abs(weight) DESC, bucket ASC)
-                AS INTEGER) AS rnk
-          FROM agg)
-    SELECT source, bucket, weight, n_tokens, rnk FROM r WHERE rnk <= 8
-"""
-
-
-def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RFM customer segmentation: recency / frequency / monetary
-    quintiles (ntile(5), ties broken by custkey so both engines assign
-    identical tiles), rolled up to segment cells with customer counts
-    and total lifetime cents.  Convention: 5 = most recent / most
-    frequent / highest spend.  Money runs in exact cents; segment
-    totals accumulate in DECIMAL(38,0)/HUGEINT and emit as strings
-    (the gini idiom) so no scale overflows them.
-
-    Scale shape: one fact-table partial agg to customer cardinality,
-    then three ntile windows over the CUSTOMER dimension — the
-    documented dimension-sized-sort trade (gini, trimmed_event_stats);
-    the fact table is never globally sorted.  Final rollup is <= 125
-    cells."""
-    from pyspark.sql import Window
-
-    orders = _t(spark, sf_dir, "orders")
-    per_cust = (
-        orders.select(
-            "o_custkey",
-            F.expr(
-                "datediff(CAST(o_orderdate AS DATE), DATE '1992-01-01')"
-            ).alias("day"),
-            F.floor(F.col("o_totalprice") * F.lit(100.0) + F.lit(0.5))
-            .cast("bigint")
-            .alias("cents"),
-        )
-        .groupBy("o_custkey")
-        .agg(
-            F.max("day").alias("last_day"),
-            F.count(F.lit(1)).alias("n_orders"),
-            F.sum("cents").alias("cents"),
-        )
-    )
-    w_r = Window.orderBy(F.col("last_day").asc(), F.col("o_custkey").asc())
-    w_f = Window.orderBy(F.col("n_orders").asc(), F.col("o_custkey").asc())
-    w_m = Window.orderBy(F.col("cents").asc(), F.col("o_custkey").asc())
-    scored = per_cust.select(
-        "o_custkey",
-        "cents",
-        F.ntile(5).over(w_r).alias("r_score"),
-        F.ntile(5).over(w_f).alias("f_score"),
-        F.ntile(5).over(w_m).alias("m_score"),
-    )
-    return scored.groupBy("r_score", "f_score", "m_score").agg(
-        F.count(F.lit(1)).alias("n_customers"),
-        F.sum(F.col("cents").cast("decimal(38,0)"))
-        .cast("string")
-        .alias("total_cents"),
-    )
-
-
-ORACLE_RFM = """
-    WITH pc AS (SELECT o_custkey,
-            MAX(datediff('day', DATE '1992-01-01',
-                CAST(o_orderdate AS DATE))) AS last_day,
-            CAST(COUNT(*) AS BIGINT) AS n_orders,
-            CAST(SUM(CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT))
-                AS BIGINT) AS cents
-        FROM orders GROUP BY o_custkey),
-    s AS (SELECT o_custkey, cents,
-            CAST(NTILE(5) OVER (ORDER BY last_day ASC, o_custkey ASC)
-                AS INTEGER) AS r_score,
-            CAST(NTILE(5) OVER (ORDER BY n_orders ASC, o_custkey ASC)
-                AS INTEGER) AS f_score,
-            CAST(NTILE(5) OVER (ORDER BY cents ASC, o_custkey ASC)
-                AS INTEGER) AS m_score
-          FROM pc)
-    SELECT r_score, f_score, m_score,
-        CAST(COUNT(*) AS BIGINT) AS n_customers,
-        CAST(CAST(SUM(CAST(cents AS HUGEINT)) AS HUGEINT) AS VARCHAR)
-            AS total_cents
-    FROM s GROUP BY 1, 2, 3
-"""
-
-
-def q_changepoint_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUSUM changepoint per event type: the day maximizing
-    |n * S_i - i * S_n| over the DENSE daily count spine (prefix sum
-    deviation from the linear ramp — the classic at-most-one-changepoint
-    statistic), earliest day on ties.  Missing days count zero; they
-    carry drift signal exactly as in burstiness_fano.  Products run in
-    DECIMAL(38,0)/HUGEINT; the emitted dev fits BIGINT whenever
-    n_days * total_events < 9.2e18 (a 10k-day corpus would need >9e14
-    events/type to cross it).
-
-    Scale shape: one corpus partial agg to (type, day) cardinality,
-    a types x days dense spine (spine bounds are one scalar action),
-    per-type prefix-sum windows partitioned by type, and a
-    spine-sized argmax — the fact table is shuffled once, at
-    (type, day) cardinality."""
-    from pyspark.sql import Window
-
-    ev = _t(spark, sf_dir, "events")
-    daily = (
-        ev.select(
-            F.expr(
-                "unix_micros(CAST(ts AS TIMESTAMP)) div 86400000000"
-            ).alias("d"),
-            "event_type",
-        )
-        .groupBy("event_type", "d")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    bounds = daily.agg(F.min("d").alias("d0"), F.max("d").alias("d1")).head()
-    d0, d1 = bounds["d0"], bounds["d1"]
-    spine = spark.range(d0, d1 + 1).select(F.col("id").alias("d"))
-    types = daily.select("event_type").distinct()
-    dense = (
-        types.crossJoin(spine)
-        .join(daily, ["event_type", "d"], "left")
-        .select("event_type", "d", F.coalesce("c", F.lit(0)).alias("c"))
-    )
-    w_cum = (
-        Window.partitionBy("event_type")
-        .orderBy("d")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    pref = dense.select(
-        "event_type",
-        "d",
-        (F.col("d") - F.lit(d0) + F.lit(1)).alias("i"),
-        F.sum("c").over(w_cum).alias("s_i"),
-    )
-    totals = dense.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"), F.sum("c").alias("s_n")
-    )
-    dev = pref.join(F.broadcast(totals), "event_type").select(
-        "event_type",
-        "d",
-        "n",
-        F.expr(
-            "CAST(abs(CAST(n AS DECIMAL(38,0)) * CAST(s_i AS DECIMAL(38,0))"
-            " - CAST(i AS DECIMAL(38,0)) * CAST(s_n AS DECIMAL(38,0)))"
-            " AS BIGINT)"
-        ).alias("dev"),
-    )
-    w_best = Window.partitionBy("event_type").orderBy(
-        F.col("dev").desc(), F.col("d").asc()
-    )
-    return (
-        dev.withColumn("rk", F.row_number().over(w_best))
-        .filter(F.col("rk") == 1)
-        .select(
-            "event_type",
-            F.col("n").alias("n_days"),
-            F.expr(
-                "CAST(date_add(DATE '1970-01-01', CAST(d AS INT)) AS STRING)"
-            ).alias("change_date"),
-            "dev",
-        )
-    )
-
-
-ORACLE_CHANGEPOINT = """
-    WITH daily AS (SELECT event_type,
-            epoch_us(ts) // 86400000000 AS d, COUNT(*) AS c
-        FROM events GROUP BY 1, 2),
-    b AS (SELECT MIN(d) AS d0, MAX(d) AS d1 FROM daily),
-    spine AS (SELECT unnest(generate_series(d0, d1)) AS d FROM b),
-    t AS (SELECT DISTINCT event_type FROM daily),
-    dense AS (SELECT t.event_type, spine.d, COALESCE(c, 0) AS c
-              FROM t CROSS JOIN spine
-              LEFT JOIN daily ON daily.event_type = t.event_type
-                             AND daily.d = spine.d),
-    pref AS (SELECT event_type, d,
-            d - (SELECT d0 FROM b) + 1 AS i,
-            CAST(SUM(c) OVER (PARTITION BY event_type ORDER BY d
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                AS BIGINT) AS s_i
-          FROM dense),
-    tot AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
-            CAST(SUM(c) AS BIGINT) AS s_n
-           FROM dense GROUP BY event_type),
-    dev AS (SELECT pref.event_type, d, n,
-            CAST(abs(CAST(n AS HUGEINT) * CAST(s_i AS HUGEINT)
-                - CAST(i AS HUGEINT) * CAST(s_n AS HUGEINT))
-                AS BIGINT) AS dev
-          FROM pref JOIN tot ON pref.event_type = tot.event_type),
-    best AS (SELECT event_type, d, n, dev,
-            ROW_NUMBER() OVER (PARTITION BY event_type
-                ORDER BY dev DESC, d ASC) AS rk
-          FROM dev)
-    SELECT event_type, n AS n_days,
-        CAST(DATE '1970-01-01' + CAST(d AS INTEGER) AS VARCHAR)
-            AS change_date,
-        dev
-    FROM best WHERE rk = 1
-"""
-
-
-def q_span_corruption_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T5 span-corruption masking plan: deterministic hash-gated span
-    starts on a stride-5 grid (non-overlap by construction), ~15%
-    expected mask rate, exact integer accounting.  See
-    operators/sampling.py::span_corruption_plan."""
-    return SA.span_corruption_plan(_t(spark, sf_dir, "documents"))
-
-
-ORACLE_SPAN_PLAN = f"""
-    WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
-    n AS (SELECT doc_id, len(toks) AS n FROM t WHERE len(toks) >= 1),
-    g AS (SELECT doc_id, n, unnest(range(0, n, 5)) AS p FROM n),
-    sel AS (SELECT doc_id, n, p FROM g
-            WHERE ('0x' || substr(md5(doc_id || ':' || p), 1, 8))::BIGINT
-                  % 4 = 0),
-    agg AS (SELECT doc_id,
-            CAST(COUNT(*) AS BIGINT) AS n_spans,
-            CAST(SUM(LEAST(3, n - p)) AS BIGINT) AS n_masked
-           FROM sel GROUP BY doc_id)
-    SELECT n.doc_id, CAST(n AS BIGINT) AS n_tokens,
-        COALESCE(n_spans, 0) AS n_spans,
-        COALESCE(n_masked, 0) AS n_masked,
-        COALESCE(n_masked, 0) * 1000000 // n AS mask_ppm
-    FROM n LEFT JOIN agg ON n.doc_id = agg.doc_id
-"""
-
-
-def q_jl_distortion_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JL ±1-projection distance-distortion audit over strided vector
-    pairs — exact micro-integer arithmetic end to end.  See
-    operators/similarity.py::jl_distortion_pairs."""
-    return S.jl_distortion_pairs(_t(spark, sf_dir, "embeddings"))
-
-
-ORACLE_JL = """
-    WITH xi AS (SELECT vec_id AS vid, i AS pos,
-            CAST(FLOOR(CAST(embedding[i + 1] AS DOUBLE) * 1000000 + 0.5)
-                AS BIGINT) AS xi
-        FROM embeddings CROSS JOIN range(64) t(i)),
-    a AS (SELECT vid AS vec_a, pos, xi AS xa FROM xi WHERE vid % 20 = 0),
-    b AS (SELECT vid - 1 AS vec_a, pos, xi AS xb FROM xi
-          WHERE (vid - 1) % 20 = 0),
-    d AS (SELECT a.vec_a, a.pos, xa - xb AS dx
-          FROM a JOIN b ON a.vec_a = b.vec_a AND a.pos = b.pos),
-    fdist AS (SELECT vec_a,
-            CAST(SUM(CAST(dx AS HUGEINT) * CAST(dx AS HUGEINT))
-                AS HUGEINT) AS df
-        FROM d GROUP BY vec_a),
-    s AS (SELECT j, dcol,
-            (('0x' || substr(md5(j || ',' || dcol), 1, 1))::BIGINT % 2)
-                * 2 - 1 AS sgn
-          FROM range(16) r1(j) CROSS JOIN range(64) r2(dcol)),
-    y AS (SELECT vec_a, j, CAST(SUM(sgn * dx) AS HUGEINT) AS yj
-          FROM d JOIN s ON s.dcol = d.pos GROUP BY 1, 2),
-    proj AS (SELECT vec_a, CAST(SUM(yj * yj) AS HUGEINT) AS dp
-             FROM y GROUP BY vec_a)
-    SELECT f.vec_a, f.vec_a + 1 AS vec_b,
-        CAST(df AS BIGINT) AS dist_full,
-        CAST(dp AS BIGINT) AS dist_proj,
-        CAST(dp * 1000000 // nullif(16 * df, 0) AS BIGINT) AS ratio_ppm
-    FROM fdist f JOIN proj ON f.vec_a = proj.vec_a
-"""
-
-
-def q_ngram_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct-n diversity per source (the Self-BLEU-adjacent metric
-    generation-quality audits use): for n = 1, 2, 3, the number of
-    distinct n-grams over total n-gram occurrences, in exact integer
-    ppm — a low distinct-2/3 ratio is the repetitive-corpus signal
-    that per-doc repetition_scores can't see (cross-doc repetition).
-
-    One scan: the three gram arrays are concatenated per row into ONE
-    tagged struct array and exploded once, so the text column is read
-    and tokenized once, not three times; then a single (source, n)
-    partial aggregation carrying count + count_distinct.  At 100 TB
-    the explode output is ~3x token volume — the same volume class as
-    every other gram query here — and the agg is two-phase with the
-    distinct resolved by shuffle on (source, n, gram)."""
-    docs = _t(spark, sf_dir, "documents")
-    toks = docs.select(
-        "source", TX.tokens(TX.normalize_text(F.col("text"))).alias("toks")
-    )
-
-    def tagged(n: int):
-        # ngram_strings' contract: callers guard size(toks) >= n — a
-        # 0/1-token doc would otherwise build slice(toks, 1, -1) and
-        # crash the job (quarantine-don't-crash rule)
-        arr = (
-            F.col("toks")
-            if n == 1
-            else F.when(
-                F.size("toks") >= n,
-                TX.ngram_strings(F.col("toks"), n),
-            ).otherwise(F.array().cast("array<string>"))
-        )
-        return F.transform(
-            arr, lambda g: F.struct(F.lit(n).alias("n"), g.alias("g"))
-        )
-
-    ex = toks.select(
-        "source",
-        F.explode(F.concat(tagged(1), tagged(2), tagged(3))).alias("t"),
-    )
-    agg = ex.groupBy("source", F.col("t.n").alias("n")).agg(
-        F.count(F.lit(1)).alias("occurrences"),
-        F.count_distinct(F.col("t.g")).alias("distinct_grams"),
-    )
-    return agg.select(
-        "source",
-        "n",
-        "occurrences",
-        "distinct_grams",
-        F.expr("distinct_grams * 1000000 div occurrences").alias(
-            "diversity_ppm"
-        ),
-    )
-
-
-ORACLE_NGRAM_DIVERSITY = f"""
-    WITH t AS (SELECT source, {_TOKS} AS toks FROM documents),
-    g AS (
-        SELECT source, 1 AS n, unnest(toks) AS g FROM t
-        UNION ALL
-        SELECT source, 2 AS n,
-            unnest(list_transform(generate_series(1, len(toks) - 1),
-                i -> toks[i] || ' ' || toks[i + 1])) AS g
-        FROM t
-        UNION ALL
-        SELECT source, 3 AS n,
-            unnest(list_transform(generate_series(1, len(toks) - 2),
-                i -> array_to_string(toks[i:i+2], ' '))) AS g
-        FROM t
-    )
-    SELECT source, n,
-        COUNT(*) AS occurrences,
-        COUNT(DISTINCT g) AS distinct_grams,
-        COUNT(DISTINCT g) * 1000000 // COUNT(*) AS diversity_ppm
-    FROM g GROUP BY source, n
-"""
-
-
-def q_token_budget_waterfill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Data-mixing allocator: given per-source token counts and a total
-    token budget (2/5 of the corpus here), find the integer water
-    level L such that sum(min(tokens_s, L)) <= budget — small sources
-    keep everything, large sources are capped at L (the
-    proportional-cap policy behind most pretraining mixes; cf.
-    temperature_lang_mix for the exponent variant).  The level is found
-    CLOSED-FORM, not by iteration: sort sources by token count
-    ascending, and for each prefix the candidate level is the budget
-    remainder spread over the remaining sources; exactly one candidate
-    lands inside its own segment (validity guard B >= prefix keeps the
-    division non-negative, so Spark's truncating div and DuckDB's
-    flooring // agree).
-
-    Scale shape: one corpus partial agg down to SOURCE cardinality;
-    everything after — the sort window, the level, the caps — runs on
-    that dimension-sized table (single-partition window over ~10 rows,
-    bounded by construction, same class as lang_rebalance)."""
-    from pyspark.sql import Window
-
-    docs = _t(spark, sf_dir, "documents")
-    per = (
-        docs.select(
-            "source",
-            F.size(
-                TX.tokens(TX.normalize_text(F.col("text")))
-            ).alias("nt"),
-        )
-        .groupBy("source")
-        .agg(F.sum("nt").alias("tokens"))
-    )
-    tot = per.agg(
-        F.sum("tokens").alias("total"),
-        F.count(F.lit(1)).alias("k"),
-        F.max("tokens").alias("t_max"),
-    )
-    w = Window.orderBy("tokens", "source")
-    wc = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    rows = per.crossJoin(F.broadcast(tot)).select(
-        "source",
-        "tokens",
-        "total",
-        "k",
-        "t_max",
-        F.expr("total * 2 div 5").alias("budget"),
-        F.row_number().over(w).alias("i"),
-        (F.sum("tokens").over(wc) - F.col("tokens")).alias("prev_sum"),
-        F.lag("tokens", 1, 0).over(w).alias("prev_tok"),
-    )
-    cand = rows.withColumn(
-        "li", F.expr("(budget - prev_sum) div (k - i + 1)")
-    ).withColumn(
-        "valid",
-        (F.col("budget") >= F.col("prev_sum"))
-        & (F.col("li") >= F.col("prev_tok"))
-        & (F.col("li") < F.col("tokens")),
-    )
-    level = cand.agg(
-        F.coalesce(
-            F.min(F.when(F.col("valid"), F.col("li"))),
-            F.max("t_max"),
-        ).alias("level")
-    )
-    return (
-        cand.crossJoin(F.broadcast(level))
-        .select(
-            "source",
-            "tokens",
-            F.least(F.col("tokens"), F.col("level")).alias("alloc"),
-            (F.col("tokens") > F.col("level")).alias("capped"),
-            "level",
-            "budget",
-        )
-    )
-
-
-ORACLE_WATERFILL = f"""
-    WITH per AS (SELECT source,
-            CAST(SUM(len({_TOKS})) AS BIGINT) AS tokens
-        FROM documents GROUP BY source),
-    tot AS (SELECT CAST(SUM(tokens) AS BIGINT) AS total,
-            CAST(COUNT(*) AS BIGINT) AS k,
-            CAST(MAX(tokens) AS BIGINT) AS t_max
-        FROM per),
-    rows_ AS (SELECT source, tokens, total, k, t_max,
-            total * 2 // 5 AS budget,
-            ROW_NUMBER() OVER (ORDER BY tokens, source) AS i,
-            CAST(SUM(tokens) OVER (ORDER BY tokens, source
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                AS BIGINT) - tokens AS prev_sum,
-            COALESCE(LAG(tokens) OVER (ORDER BY tokens, source), 0)
-                AS prev_tok
-        FROM per CROSS JOIN tot),
-    cand AS (SELECT *, (budget - prev_sum) // (k - i + 1) AS li,
-            budget >= prev_sum AND (budget - prev_sum) // (k - i + 1)
-                >= prev_tok
-            AND (budget - prev_sum) // (k - i + 1) < tokens AS valid
-        FROM rows_),
-    lvl AS (SELECT COALESCE(
-            CAST(MIN(CASE WHEN valid THEN li END) AS BIGINT),
-            CAST(MAX(t_max) AS BIGINT)) AS level
-        FROM cand)
-    SELECT source, tokens,
-        LEAST(tokens, level) AS alloc,
-        tokens > level AS capped,
-        level, budget
-    FROM cand CROSS JOIN lvl
-"""
-
-
-def q_seasonal_decompose_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trend/residual decomposition of daily event counts per type: a
-    centered 7-day moving-average trend over the DENSE day spine
-    (missing days count zero — absence is signal, as in
-    burstiness_fano), residual = count - trend, reporting the
-    biggest-anomaly day and the mean absolute residual — the
-    volume-anomaly screen changepoint_daily's single-changepoint
-    statistic can't express.  All milli-count integers: trend_milli =
-    (7-day sum x 1000) div frame_rows (edge frames truncate, so the
-    divisor is COUNT over the same frame), residual exact by
-    subtraction — no doubles anywhere.
-
-    Scale shape: identical to changepoint_daily — one corpus partial
-    agg to (type, day) cardinality, a types x days dense spine, and
-    per-type ROWS-framed windows partitioned by type; the anomaly pick
-    and mean-abs agg run at spine cardinality."""
-    from pyspark.sql import Window
-
-    ev = _t(spark, sf_dir, "events")
-    daily = (
-        ev.select(
-            F.expr(
-                "unix_micros(CAST(ts AS TIMESTAMP)) div 86400000000"
-            ).alias("d"),
-            "event_type",
-        )
-        .groupBy("event_type", "d")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    bounds = daily.agg(
-        F.min("d").alias("d0"), F.max("d").alias("d1")
-    ).head()
-    d0, d1 = bounds["d0"], bounds["d1"]
-    spine = spark.range(d0, d1 + 1).select(F.col("id").alias("d"))
-    types = daily.select("event_type").distinct()
-    dense = (
-        types.crossJoin(spine)
-        .join(daily, ["event_type", "d"], "left")
-        .select(
-            "event_type", "d", F.coalesce("c", F.lit(0)).alias("c")
-        )
-    )
-    w7 = (
-        Window.partitionBy("event_type").orderBy("d").rowsBetween(-3, 3)
-    )
-    resid = dense.select(
-        "event_type",
-        "d",
-        "c",
-        F.sum("c").over(w7).alias("s7"),
-        F.count(F.lit(1)).over(w7).alias("n7"),
-    ).select(
-        "event_type",
-        "d",
-        F.expr("c * 1000 - (s7 * 1000) div n7").alias("resid_milli"),
-    )
-    aggs = resid.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_days"),
-        F.expr(
-            "sum(abs(resid_milli)) div count(*)"
-        ).alias("mean_abs_resid_milli"),
-    )
-    w_best = Window.partitionBy("event_type").orderBy(
-        F.abs(F.col("resid_milli")).desc(), F.col("d").asc()
-    )
-    peak = (
-        resid.withColumn("rk", F.row_number().over(w_best))
-        .filter(F.col("rk") == 1)
-        .select(
-            "event_type",
-            F.expr(
-                "CAST(date_add(DATE '1970-01-01', CAST(d AS INT))"
-                " AS STRING)"
-            ).alias("peak_date"),
-            F.col("resid_milli").alias("peak_resid_milli"),
-        )
-    )
-    return aggs.join(F.broadcast(peak), "event_type").select(
-        "event_type",
-        "n_days",
-        "mean_abs_resid_milli",
-        "peak_date",
-        "peak_resid_milli",
-    )
-
-
-ORACLE_SEASONAL_DECOMP = """
-    WITH daily AS (SELECT event_type,
-            epoch_us(ts) // 86400000000 AS d, COUNT(*) AS c
-        FROM events GROUP BY 1, 2),
-    b AS (SELECT MIN(d) AS d0, MAX(d) AS d1 FROM daily),
-    spine AS (SELECT unnest(generate_series(d0, d1)) AS d FROM b),
-    t AS (SELECT DISTINCT event_type FROM daily),
-    dense AS (SELECT t.event_type, spine.d, COALESCE(c, 0) AS c
-              FROM t CROSS JOIN spine
-              LEFT JOIN daily ON daily.event_type = t.event_type
-                             AND daily.d = spine.d),
-    resid AS (SELECT event_type, d,
-            c * 1000 - (CAST(SUM(c) OVER w7 AS BIGINT) * 1000)
-                // CAST(COUNT(*) OVER w7 AS BIGINT) AS resid_milli
-        FROM dense
-        WINDOW w7 AS (PARTITION BY event_type ORDER BY d
-            ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)),
-    aggs AS (SELECT event_type,
-            CAST(COUNT(*) AS BIGINT) AS n_days,
-            CAST(SUM(ABS(resid_milli)) AS BIGINT) // COUNT(*)
-                AS mean_abs_resid_milli
-        FROM resid GROUP BY event_type),
-    peak AS (SELECT event_type,
-            CAST(DATE '1970-01-01' + CAST(d AS INTEGER) AS VARCHAR)
-                AS peak_date,
-            resid_milli AS peak_resid_milli,
-            ROW_NUMBER() OVER (PARTITION BY event_type
-                ORDER BY ABS(resid_milli) DESC, d ASC) AS rk
-        FROM resid)
-    SELECT aggs.event_type, n_days, mean_abs_resid_milli,
-        peak_date, peak_resid_milli
-    FROM aggs JOIN peak ON aggs.event_type = peak.event_type
-    WHERE rk = 1
-"""
-
-
-def q_zipf_slope_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Zipf rank-frequency fit per source: OLS slope/intercept of
-    ln(freq) on ln(rank) over the top-1000 token ranks — natural text
-    sits near slope -1; a flat slope is the synthetic/templated-corpus
-    tell (this corpus's near-uniform vocabulary reads ~-0.3).  Ranks
-    are exact ROW_NUMBER over (freq DESC, token ASC).
-
-    Determinism: each ln term is det_round(_, 9) then DECIMAL(18,9), so
-    every OLS moment (sx, sy, sxx, sxy, products in DECIMAL(36..37,18))
-    is an EXACT order-independent decimal sum; moments go to double
-    through VARCHAR (the dispersion_stats idiom — int128-to-double
-    casts double-round) and the closed form is the identical IEEE
-    expression on both engines.  Sources with < 2 ranks are excluded
-    (undefined slope).
-
-    Scale shape: token counts are one partial agg at (source, token)
-    cardinality; the rank window partitions by source and the fit
-    aggregates 1000 rows/source — vocabulary grows Heaps-sublinearly,
-    so this never becomes the big shuffle."""
-    from pyspark.sql import Window
-
-    docs = _t(spark, sf_dir, "documents")
-    freq = (
-        docs.select(
-            "source",
-            F.explode(
-                TX.tokens(TX.normalize_text(F.col("text")))
-            ).alias("w"),
-        )
-        .groupBy("source", "w")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    w_rank = Window.partitionBy("source").orderBy(
-        F.col("c").desc(), F.col("w").asc()
-    )
-    ranked = freq.withColumn("r", F.row_number().over(w_rank)).filter(
-        F.col("r") <= 1000
-    )
-    x = DET.det_round(F.log(F.col("r").cast("double")), 9).cast(
-        "decimal(18,9)"
-    )
-    y = DET.det_round(F.log(F.col("c").cast("double")), 9).cast(
-        "decimal(18,9)"
-    )
-    m = (
-        ranked.select("source", x.alias("x"), y.alias("y"))
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("x").alias("sx"),
-            F.sum("y").alias("sy"),
-            F.sum(F.col("x") * F.col("x")).alias("sxx"),
-            F.sum(F.col("x") * F.col("y")).alias("sxy"),
-        )
-        .filter(F.col("n") >= 2)
-    )
-    md = m.select(
-        "source",
-        F.col("n").alias("n_ranks"),
-        F.expr("CAST(n AS DOUBLE)").alias("nd"),
-        F.expr("CAST(CAST(sx AS STRING) AS DOUBLE)").alias("dsx"),
-        F.expr("CAST(CAST(sy AS STRING) AS DOUBLE)").alias("dsy"),
-        F.expr("CAST(CAST(sxx AS STRING) AS DOUBLE)").alias("dsxx"),
-        F.expr("CAST(CAST(sxy AS STRING) AS DOUBLE)").alias("dsxy"),
-    )
-    slope = (F.col("nd") * F.col("dsxy") - F.col("dsx") * F.col("dsy")) / (
-        F.col("nd") * F.col("dsxx") - F.col("dsx") * F.col("dsx")
-    )
-    return md.select(
-        "source",
-        "n_ranks",
-        DET.det_round(slope, 6).alias("zipf_slope"),
-        DET.det_round(
-            (F.col("dsy") - slope * F.col("dsx")) / F.col("nd"), 6
-        ).alias("zipf_intercept"),
-    )
-
-
-ORACLE_ZIPF = f"""
-    WITH freq AS (SELECT source, w, COUNT(*) AS c
-        FROM (SELECT source, unnest({_TOKS}) AS w FROM documents)
-        GROUP BY source, w),
-    ranked AS (SELECT source, c,
-            ROW_NUMBER() OVER (PARTITION BY source
-                ORDER BY c DESC, w ASC) AS r
-        FROM freq
-        QUALIFY r <= 1000),
-    q AS (SELECT source,
-            CAST({DET.det_round_sql('ln(CAST(r AS DOUBLE))', 9)}
-                AS DECIMAL(18,9)) AS x,
-            CAST({DET.det_round_sql('ln(CAST(c AS DOUBLE))', 9)}
-                AS DECIMAL(18,9)) AS y
-        FROM ranked),
-    m AS (SELECT source, COUNT(*) AS n,
-            SUM(x) AS sx, SUM(y) AS sy,
-            SUM(x * x) AS sxx, SUM(x * y) AS sxy
-        FROM q GROUP BY source HAVING COUNT(*) >= 2),
-    md AS (SELECT source, n AS n_ranks,
-            CAST(n AS DOUBLE) AS nd,
-            CAST(CAST(sx AS VARCHAR) AS DOUBLE) AS dsx,
-            CAST(CAST(sy AS VARCHAR) AS DOUBLE) AS dsy,
-            CAST(CAST(sxx AS VARCHAR) AS DOUBLE) AS dsxx,
-            CAST(CAST(sxy AS VARCHAR) AS DOUBLE) AS dsxy
-        FROM m)
-    SELECT source, n_ranks,
-        {DET.det_round_sql(
-            '(nd * dsxy - dsx * dsy) / (nd * dsxx - dsx * dsx)', 6
-        )} AS zipf_slope,
-        {DET.det_round_sql(
-            '(dsy - ((nd * dsxy - dsx * dsy) / (nd * dsxx - dsx * dsx))'
-            ' * dsx) / nd', 6
-        )} AS zipf_intercept
-    FROM md
-"""
-
-
-def q_ab_test_zscores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-proportion z-test on a deterministic hash split: users are
-    assigned to variants A/B by the same md5 60-bit hash the
-    train/val/test split uses (so assignment is reproducible across
-    runs, engines, and repartitioning — the property a real experiment
-    assignment needs), the conversion metric is "user has >= 1
-    purchase event", and the z statistic is the pooled-proportion
-    closed form.  Counts are exact integers; the z double is the
-    identical IEEE expression on both engines over exactly-representable
-    integer inputs, det_round(6); conversion rates are exact ppm.
-
-    Scale shape: one shuffle to user cardinality (partial-agg
-    combine), then a single conditional-sum reduce to ONE row — the
-    100 TB shape of every experiment readout."""
-    ev = _t(spark, sf_dir, "events")
-    v = F.pmod(
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(F.col("user_id").cast("string"), F.lit("#ab"))
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("long"),
-        F.lit(2),
-    )
-    per_user = (
-        ev.select("user_id", "event_type")
-        .groupBy("user_id")
-        .agg(
-            F.max(
-                F.when(F.col("event_type") == "purchase", 1).otherwise(0)
-            ).alias("conv")
-        )
-        .select(v.alias("variant"), "conv")
-    )
-    r = per_user.agg(
-        F.count_if(F.col("variant") == 0).alias("n_a"),
-        F.sum(F.when(F.col("variant") == 0, F.col("conv"))).alias("c_a"),
-        F.count_if(F.col("variant") == 1).alias("n_b"),
-        F.sum(F.when(F.col("variant") == 1, F.col("conv"))).alias("c_b"),
-    )
-    pa = F.expr("CAST(c_a AS DOUBLE) / CAST(n_a AS DOUBLE)")
-    pb = F.expr("CAST(c_b AS DOUBLE) / CAST(n_b AS DOUBLE)")
-    pp = F.expr(
-        "CAST(c_a + c_b AS DOUBLE) / CAST(n_a + n_b AS DOUBLE)"
-    )
-    se = F.sqrt(
-        pp
-        * (F.lit(1.0) - pp)
-        * (
-            F.lit(1.0) / F.expr("CAST(n_a AS DOUBLE)")
-            + F.lit(1.0) / F.expr("CAST(n_b AS DOUBLE)")
-        )
-    )
-    return r.select(
-        "n_a",
-        F.col("c_a").alias("conv_a"),
-        F.expr("c_a * 1000000 div n_a").alias("conv_a_ppm"),
-        "n_b",
-        F.col("c_b").alias("conv_b"),
-        F.expr("c_b * 1000000 div n_b").alias("conv_b_ppm"),
-        DET.det_round((pa - pb) / F.nullif(se, F.lit(0.0)), 6).alias(
-            "z_score"
-        ),
-    )
-
-
-ORACLE_AB_TEST = f"""
-    WITH pu AS (SELECT
-            CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR) || '#ab'),
-                1, 15))::BIGINT % 2 AS BIGINT) AS variant,
-            MAX(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-                AS conv
-        FROM events GROUP BY user_id),
-    r AS (SELECT
-            CAST(COUNT(CASE WHEN variant = 0 THEN 1 END) AS BIGINT)
-                AS n_a,
-            CAST(SUM(CASE WHEN variant = 0 THEN conv END) AS BIGINT)
-                AS c_a,
-            CAST(COUNT(CASE WHEN variant = 1 THEN 1 END) AS BIGINT)
-                AS n_b,
-            CAST(SUM(CASE WHEN variant = 1 THEN conv END) AS BIGINT)
-                AS c_b
-        FROM pu)
-    SELECT n_a, c_a AS conv_a, c_a * 1000000 // n_a AS conv_a_ppm,
-        n_b, c_b AS conv_b, c_b * 1000000 // n_b AS conv_b_ppm,
-        {DET.det_round_sql(
-            '(CAST(c_a AS DOUBLE) / CAST(n_a AS DOUBLE)'
-            ' - CAST(c_b AS DOUBLE) / CAST(n_b AS DOUBLE))'
-            ' / NULLIF(SQRT((CAST(c_a + c_b AS DOUBLE)'
-            ' / CAST(n_a + n_b AS DOUBLE))'
-            ' * (1.0 - CAST(c_a + c_b AS DOUBLE)'
-            ' / CAST(n_a + n_b AS DOUBLE))'
-            ' * (1.0 / CAST(n_a AS DOUBLE)'
-            ' + 1.0 / CAST(n_b AS DOUBLE))), 0.0)', 6
-        )} AS z_score
-    FROM r
-"""
-
-
-def q_basket_lift_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Market-basket association mining at brand granularity: support /
-    confidence / lift for every brand pair co-occurring in an order —
-    the co-occurrence statistic behind "docs that cite X also cite Y"
-    curation rules.  Brand (25 values) is the right granularity: the
-    per-order basket is a SET of <= ~7 brands, so the within-basket
-    self-join fans out at most |basket|^2 per order — bounded by data
-    shape, never all-pairs across orders.  Lift in exact integer ppm;
-    the triple product pair*n_orders*1e6 runs in DECIMAL(38,0)/HUGEINT
-    (at 1.5e10 orders the int64 product would wrap).
-
-    Scale shape: one broadcast dim join (part), a distinct at
-    (order, brand) cardinality, an equi-self-join on orderkey with
-    per-order bounded fan-out, and a final agg at brand-pair
-    cardinality (<= 300 rows); brand totals broadcast back.  The
-    baskets subtree feeds four consumers (pair sides, totals,
-    n_orders) — AQE's ReuseExchange dedupes them at runtime (final
-    adaptive plan verified: 3 ReusedExchange nodes), so the fact
-    table is not rescanned per consumer."""
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    part = _t(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    baskets = (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .select(
-            F.col("l_orderkey").alias("okey"),
-            F.col("p_brand").alias("brand"),
-        )
-        .distinct()
-    )
-    tot = baskets.groupBy("brand").agg(F.count(F.lit(1)).alias("cnt"))
-    no = baskets.agg(
-        F.count_distinct(F.col("okey")).alias("n_orders")
-    )
-    a, b = baskets.alias("a"), baskets.alias("b")
-    pairs = (
-        a.join(b, F.col("a.okey") == F.col("b.okey"))
-        .filter(F.col("a.brand") < F.col("b.brand"))
-        .groupBy(
-            F.col("a.brand").alias("brand_a"),
-            F.col("b.brand").alias("brand_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("pair_cnt"))
-    )
-    ta = tot.select(
-        F.col("brand").alias("brand_a"), F.col("cnt").alias("cnt_a")
-    )
-    tb = tot.select(
-        F.col("brand").alias("brand_b"), F.col("cnt").alias("cnt_b")
-    )
-    return (
-        pairs.join(F.broadcast(ta), "brand_a")
-        .join(F.broadcast(tb), "brand_b")
-        .crossJoin(F.broadcast(no))
-        .select(
-            "brand_a",
-            "brand_b",
-            "pair_cnt",
-            "cnt_a",
-            "cnt_b",
-            "n_orders",
-            F.expr("pair_cnt * 1000000 div cnt_a").alias("conf_ab_ppm"),
-            F.expr("pair_cnt * 1000000 div cnt_b").alias("conf_ba_ppm"),
-            F.expr(
-                "CAST(CAST(pair_cnt AS DECIMAL(38,0)) * n_orders"
-                " * 1000000 div (CAST(cnt_a AS DECIMAL(38,0)) * cnt_b)"
-                " AS BIGINT)"
-            ).alias("lift_ppm"),
-        )
-    )
-
-
-ORACLE_BASKET_LIFT = """
-    WITH baskets AS (SELECT DISTINCT l_orderkey AS okey,
-            p_brand AS brand
-        FROM lineitem JOIN part ON l_partkey = p_partkey),
-    tot AS (SELECT brand, CAST(COUNT(*) AS BIGINT) AS cnt
-        FROM baskets GROUP BY brand),
-    no AS (SELECT CAST(COUNT(DISTINCT okey) AS BIGINT) AS n_orders
-        FROM baskets),
-    p AS (SELECT a.brand AS brand_a, b.brand AS brand_b,
-            CAST(COUNT(*) AS BIGINT) AS pair_cnt
-        FROM baskets a JOIN baskets b
-          ON a.okey = b.okey AND a.brand < b.brand
-        GROUP BY 1, 2)
-    SELECT brand_a, brand_b, pair_cnt,
-        ta.cnt AS cnt_a, tb.cnt AS cnt_b, n_orders,
-        pair_cnt * 1000000 // ta.cnt AS conf_ab_ppm,
-        pair_cnt * 1000000 // tb.cnt AS conf_ba_ppm,
-        CAST(CAST(pair_cnt AS HUGEINT) * n_orders * 1000000
-            // (CAST(ta.cnt AS HUGEINT) * tb.cnt) AS BIGINT) AS lift_ppm
-    FROM p JOIN tot ta ON ta.brand = brand_a
-           JOIN tot tb ON tb.brand = brand_b
-           CROSS JOIN no
-"""
-
-
-def q_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pipeline self-evaluation: recall/precision of the MinHash-LSH
-    blocking stage against the PLANTED ground truth — every doc has a
-    known near-dup at doc_id + 1e6 (last word dropped), so the truth
-    pair set is linear in corpus size and the evaluation is pure
-    equi-joins (the standard planted-pair protocol; an exact-Jaccard
-    ground truth would be the all-pairs join LSH exists to avoid).
-    recall = |cand ∩ planted| / |planted|; precision counts how much
-    of the candidate volume the planted pairs explain (the rest is
-    corpus self-similarity + banding collisions).  Exact integer ppm.
-
-    Scale shape: the LSH candidate generation is the existing bucketed
-    band join; truth is a projection of documents; the intersection is
-    a left-semi equi-join on (id_a, id_b); three count aggregates
-    cross-joined as broadcast single-row frames."""
-    docs2 = _planted_docs(spark, sf_dir)
-    cand = D.lsh_candidate_pairs(docs2, num_hashes=8, num_bands=4)
-    truth = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("id_a"),
-        (F.col("doc_id") + _PLANT_OFFSET).alias("id_b"),
-    )
-    hits = cand.join(truth, ["id_a", "id_b"], "left_semi")
-    r = (
-        truth.agg(F.count(F.lit(1)).alias("n_truth"))
-        .crossJoin(
-            F.broadcast(
-                cand.agg(F.count(F.lit(1)).alias("n_candidates"))
-            )
-        )
-        .crossJoin(
-            F.broadcast(hits.agg(F.count(F.lit(1)).alias("n_hits")))
-        )
-    )
-    return r.select(
-        "n_truth",
-        "n_candidates",
-        "n_hits",
-        F.expr("n_hits * 1000000 div n_truth").alias("recall_ppm"),
-        F.expr("n_hits * 1000000 div n_candidates").alias(
-            "precision_ppm"
-        ),
-    )
-
-
-ORACLE_LSH_RECALL = _ORACLE_LSH_CAND + """,
-    tr AS (SELECT doc_id AS id_a, doc_id + 1000000 AS id_b
-           FROM documents),
-    hit AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_hits
-        FROM cand JOIN tr ON cand.id_a = tr.id_a
-                         AND cand.id_b = tr.id_b),
-    ncand AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_candidates
-        FROM cand),
-    ntr AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_truth FROM tr)
-    SELECT n_truth, n_candidates, n_hits,
-        n_hits * 1000000 // n_truth AS recall_ppm,
-        n_hits * 1000000 // n_candidates AS precision_ppm
-    FROM ntr CROSS JOIN ncand CROSS JOIN hit
-"""
-
-
-def q_ks_grid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-sample Kolmogorov-Smirnov drift statistic on a fixed price
-    grid: BUILDING vs MACHINERY order-total distributions, D = max
-    |CDF_a - CDF_b| evaluated at 1000-unit price buckets.  Grid-KS is
-    the scale-correct KS: the exact statistic needs a global ordered
-    cumulative over every distinct value (a single-partition sort of
-    the fact table), while the grid version aggregates to bucket
-    cardinality first — the price domain is bounded (< 500 buckets),
-    so the cumulative window is bounded by construction (the heaps /
-    waterfill dimension-window class).  The D comparison runs in exact
-    integers: |cum_a * n_b - cum_b * n_a| in DECIMAL(38,0)/HUGEINT
-    (cum * n wraps int64 past ~3e9 rows/side), emitted as exact ppm.
-
-    Scale shape: fact join + one partial agg to bucket cardinality;
-    everything downstream is dimension-sized."""
-    from pyspark.sql import Window
-
-    o = _t(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    j = o.join(c, o.o_custkey == c.c_custkey).filter(
-        F.col("c_mktsegment").isin("BUILDING", "MACHINERY")
-    )
-    g = (
-        j.select(
-            F.expr(
-                "CAST(floor(o_totalprice) AS BIGINT) div 1000"
-            ).alias("bucket"),
-            (F.col("c_mktsegment") == F.lit("BUILDING")).alias("is_a"),
-        )
-        .groupBy("bucket")
-        .agg(
-            F.sum(F.when(F.col("is_a"), 1).otherwise(0)).alias("ca"),
-            F.sum(F.when(~F.col("is_a"), 1).otherwise(0)).alias("cb"),
-        )
-    )
-    w = Window.orderBy("bucket").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    cum = g.select(
-        "bucket",
-        F.sum("ca").over(w).alias("cum_a"),
-        F.sum("cb").over(w).alias("cum_b"),
-    )
-    tot = g.agg(
-        F.sum("ca").alias("n_a"), F.sum("cb").alias("n_b")
-    )
-    dev = cum.crossJoin(F.broadcast(tot)).select(
-        "bucket",
-        "n_a",
-        "n_b",
-        F.expr(
-            "abs(CAST(cum_a AS DECIMAL(38,0)) * n_b"
-            " - CAST(cum_b AS DECIMAL(38,0)) * n_a)"
-        ).alias("dev"),
-    )
-    w_best = Window.orderBy(F.col("dev").desc(), F.col("bucket").asc())
-    return (
-        dev.withColumn("rk", F.row_number().over(w_best))
-        .filter(F.col("rk") == 1)
-        .select(
-            "n_a",
-            "n_b",
-            (F.col("bucket") * 1000).alias("ks_price_lo"),
-            F.expr(
-                "CAST(dev * 1000000 div (CAST(n_a AS DECIMAL(38,0))"
-                " * n_b) AS BIGINT)"
-            ).alias("ks_ppm"),
-        )
-    )
-
-
-ORACLE_KS_GRID = """
-    WITH j AS (SELECT CAST(FLOOR(o_totalprice) AS BIGINT) // 1000
-                AS bucket,
-            c_mktsegment = 'BUILDING' AS is_a
-        FROM orders JOIN customer ON o_custkey = c_custkey
-        WHERE c_mktsegment IN ('BUILDING', 'MACHINERY')),
-    g AS (SELECT bucket,
-            CAST(SUM(CASE WHEN is_a THEN 1 ELSE 0 END) AS BIGINT)
-                AS ca,
-            CAST(SUM(CASE WHEN is_a THEN 0 ELSE 1 END) AS BIGINT)
-                AS cb
-        FROM j GROUP BY bucket),
-    cum AS (SELECT bucket,
-            CAST(SUM(ca) OVER (ORDER BY bucket
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                AS BIGINT) AS cum_a,
-            CAST(SUM(cb) OVER (ORDER BY bucket
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                AS BIGINT) AS cum_b
-        FROM g),
-    tot AS (SELECT CAST(SUM(ca) AS BIGINT) AS n_a,
-            CAST(SUM(cb) AS BIGINT) AS n_b FROM g),
-    dev AS (SELECT bucket, n_a, n_b,
-            abs(CAST(cum_a AS HUGEINT) * n_b
-                - CAST(cum_b AS HUGEINT) * n_a) AS dev
-        FROM cum CROSS JOIN tot),
-    best AS (SELECT *, ROW_NUMBER() OVER
-            (ORDER BY dev DESC, bucket ASC) AS rk
-        FROM dev)
-    SELECT n_a, n_b, bucket * 1000 AS ks_price_lo,
-        CAST(dev * 1000000 // (CAST(n_a AS HUGEINT) * n_b) AS BIGINT)
-            AS ks_ppm
-    FROM best WHERE rk = 1
-"""
-
-
-def q_mutual_info_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pointwise mutual-information table between two categorical
-    features: event_type x day-of-week (dow 0 = Monday, derived as
-    (epoch_day + 3) % 7 — engine-independent integer arithmetic, no
-    locale-sensitive dayofweek()).  Each cell carries its exact counts
-    and its MI contribution p_xy * (ln c_xy + ln n - ln c_x - ln c_y)
-    in nats — the feature-dependence screen run before treating
-    features as independent in a mixture design.  Every ln is
-    det_round(9) of an exact integer count, the weight p_xy is one
-    IEEE division, and the product is det_round(9)-emitted: identical
-    doubles on both engines by construction (no cross-cell sum, so no
-    order dependence anywhere).
-
-    Scale shape: one corpus partial agg to (type, dow) cells (~35
-    rows); marginals re-aggregate the cell table; everything after the
-    first agg is dimension-sized with broadcast joins."""
-    ev = _t(spark, sf_dir, "events")
-    cells = (
-        ev.select(
-            "event_type",
-            F.expr(
-                "(unix_micros(CAST(ts AS TIMESTAMP))"
-                " div 86400000000 + 3) % 7"
-            ).alias("dow"),
-        )
-        .groupBy("event_type", "dow")
-        .agg(F.count(F.lit(1)).alias("n_xy"))
-    )
-    cx = cells.groupBy("event_type").agg(F.sum("n_xy").alias("n_x"))
-    cy = cells.groupBy("dow").agg(F.sum("n_xy").alias("n_y"))
-    n = cells.agg(F.sum("n_xy").alias("n"))
-    ln9 = lambda col: DET.det_round(  # noqa: E731
-        F.log(F.col(col).cast("double")), 9
-    )
-    joined = (
-        cells.join(F.broadcast(cx), "event_type")
-        .join(F.broadcast(cy), "dow")
-        .crossJoin(F.broadcast(n))
-    )
-    term = ln9("n_xy") + ln9("n") - ln9("n_x") - ln9("n_y")
-    pxy = F.col("n_xy").cast("double") / F.col("n").cast("double")
-    return joined.select(
-        "event_type",
-        "dow",
-        "n_xy",
-        "n_x",
-        "n_y",
-        "n",
-        DET.det_round(pxy * term, 9).alias("mi_contrib_nats"),
-    )
-
-
-ORACLE_MUTUAL_INFO = f"""
-    WITH cells AS (SELECT event_type,
-            (epoch_us(ts) // 86400000000 + 3) % 7 AS dow,
-            CAST(COUNT(*) AS BIGINT) AS n_xy
-        FROM events GROUP BY 1, 2),
-    cx AS (SELECT event_type, CAST(SUM(n_xy) AS BIGINT) AS n_x
-        FROM cells GROUP BY event_type),
-    cy AS (SELECT dow, CAST(SUM(n_xy) AS BIGINT) AS n_y
-        FROM cells GROUP BY dow),
-    nn AS (SELECT CAST(SUM(n_xy) AS BIGINT) AS n FROM cells)
-    SELECT cells.event_type, cells.dow, n_xy, n_x, n_y, n,
-        {DET.det_round_sql(
-            "(CAST(n_xy AS DOUBLE) / CAST(n AS DOUBLE)) * ("
-            + DET.det_round_sql("ln(CAST(n_xy AS DOUBLE))", 9)
-            + " + " + DET.det_round_sql("ln(CAST(n AS DOUBLE))", 9)
-            + " - " + DET.det_round_sql("ln(CAST(n_x AS DOUBLE))", 9)
-            + " - " + DET.det_round_sql("ln(CAST(n_y AS DOUBLE))", 9)
-            + ")", 9
-        )} AS mi_contrib_nats
-    FROM cells JOIN cx ON cells.event_type = cx.event_type
-               JOIN cy ON cells.dow = cy.dow
-               CROSS JOIN nn
-"""
-
-
-def q_classifier_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohen's kappa between two independent document-quality
-    classifiers: A = the full Gopher structural screen (the
-    gopher_quality_flags conjunction), B = a cheap stopword-density
-    screen (density >= 30 per mille and >= 10 words).  Kappa is the
-    agreement-beyond-chance number that decides whether the cheap
-    classifier can gate the expensive one.  Fully exact: kappa_micro =
-    (n*(n00+n11) - pe_num) * 1e6 div (n*n - pe_num) with pe_num =
-    na0*nb0 + na1*nb1, all products in DECIMAL(38,0)/HUGEINT (n*n
-    wraps int64 past ~3e9 docs).
-
-    Scale shape: the gopher (doc, token) count-table idiom — two
-    partial-combined aggs to per-doc stats, then ONE single-row
-    confusion agg; nothing after the first shuffle exceeds doc
-    cardinality."""
-    docs = _t(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id",
-        F.explode(
-            TX.tokens(TX.normalize_text(F.col("text")))
-        ).alias("tok"),
-    )
-    pt = toks.groupBy("doc_id", "tok").agg(
-        F.count(F.lit(1)).alias("c"),
-        F.sum(F.length("tok")).alias("chars"),
-    )
-    stop = (
-        "('the','a','of','to','and','in','is','it','for','on')"
-    )
-    pd_ = pt.groupBy("doc_id").agg(
-        F.sum("c").alias("n_words"),
-        F.sum("chars").alias("n_chars"),
-        F.max("c").alias("top_c"),
-        # classifier A needs DISTINCT stopword types present (one per
-        # (doc, tok) row — the gopher_quality_flags definition);
-        # classifier B needs stopword OCCURRENCES for its density
-        F.sum(
-            F.expr(f"CASE WHEN tok IN {stop} THEN 1 ELSE 0 END")
-        ).alias("n_stop_types"),
-        F.sum(
-            F.expr(f"CASE WHEN tok IN {stop} THEN c ELSE 0 END")
-        ).alias("n_stop_occ"),
-    )
-    fl = pd_.select(
-        F.expr(
-            "CASE WHEN n_words BETWEEN 20 AND 100000"
-            " AND n_chars * 100 div n_words BETWEEN 300 AND 1000"
-            " AND n_stop_types >= 2"
-            " AND top_c * 1000000 div n_words <= 200000"
-            " THEN 1 ELSE 0 END"
-        ).alias("fa"),
-        F.expr(
-            "CASE WHEN n_words >= 10"
-            " AND n_stop_occ * 1000 div n_words >= 30"
-            " THEN 1 ELSE 0 END"
-        ).alias("fb"),
-    )
-    conf = fl.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.expr("CASE WHEN fa = 1 AND fb = 1 THEN 1 ELSE 0 END")).alias("n11"),
-        F.sum(F.expr("CASE WHEN fa = 1 AND fb = 0 THEN 1 ELSE 0 END")).alias("n10"),
-        F.sum(F.expr("CASE WHEN fa = 0 AND fb = 1 THEN 1 ELSE 0 END")).alias("n01"),
-        F.sum(F.expr("CASE WHEN fa = 0 AND fb = 0 THEN 1 ELSE 0 END")).alias("n00"),
-    )
-    return conf.select(
-        "n",
-        "n11",
-        "n10",
-        "n01",
-        "n00",
-        F.expr("(n11 + n00) * 1000000 div n").alias("po_ppm"),
-        F.expr(
-            "CAST((CAST(n11 + n10 AS DECIMAL(38,0)) * (n11 + n01)"
-            " + CAST(n00 + n01 AS DECIMAL(38,0)) * (n00 + n10))"
-            " * 1000000 div (CAST(n AS DECIMAL(38,0)) * n) AS BIGINT)"
-        ).alias("pe_ppm"),
-        F.expr(
-            "CAST((CAST(n AS DECIMAL(38,0)) * (n11 + n00)"
-            " - (CAST(n11 + n10 AS DECIMAL(38,0)) * (n11 + n01)"
-            "    + CAST(n00 + n01 AS DECIMAL(38,0)) * (n00 + n10)))"
-            " * 1000000 div (CAST(n AS DECIMAL(38,0)) * n"
-            " - (CAST(n11 + n10 AS DECIMAL(38,0)) * (n11 + n01)"
-            "    + CAST(n00 + n01 AS DECIMAL(38,0)) * (n00 + n10)))"
-            " AS BIGINT)"
-        ).alias("kappa_micro"),
-    )
-
-
-ORACLE_KAPPA = f"""
-    WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
-    tok AS (SELECT doc_id, unnest(toks) AS tok FROM t),
-    pt AS (SELECT doc_id, tok, CAST(COUNT(*) AS BIGINT) AS c,
-            CAST(SUM(length(tok)) AS BIGINT) AS chars
-        FROM tok GROUP BY 1, 2),
-    pd AS (SELECT doc_id,
-            CAST(SUM(c) AS BIGINT) AS n_words,
-            CAST(SUM(chars) AS BIGINT) AS n_chars,
-            CAST(MAX(c) AS BIGINT) AS top_c,
-            CAST(SUM(CASE WHEN tok IN ('the','a','of','to','and',
-                'in','is','it','for','on') THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_stop_types,
-            CAST(SUM(CASE WHEN tok IN ('the','a','of','to','and',
-                'in','is','it','for','on') THEN c ELSE 0 END)
-                AS BIGINT) AS n_stop_occ
-        FROM pt GROUP BY doc_id),
-    fl AS (SELECT
-            CASE WHEN n_words BETWEEN 20 AND 100000
-                 AND n_chars * 100 // n_words BETWEEN 300 AND 1000
-                 AND n_stop_types >= 2
-                 AND top_c * 1000000 // n_words <= 200000
-                 THEN 1 ELSE 0 END AS fa,
-            CASE WHEN n_words >= 10
-                 AND n_stop_occ * 1000 // n_words >= 30
-                 THEN 1 ELSE 0 END AS fb
-        FROM pd),
-    conf AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
-            CAST(SUM(CASE WHEN fa = 1 AND fb = 1 THEN 1 ELSE 0 END)
-                AS BIGINT) AS n11,
-            CAST(SUM(CASE WHEN fa = 1 AND fb = 0 THEN 1 ELSE 0 END)
-                AS BIGINT) AS n10,
-            CAST(SUM(CASE WHEN fa = 0 AND fb = 1 THEN 1 ELSE 0 END)
-                AS BIGINT) AS n01,
-            CAST(SUM(CASE WHEN fa = 0 AND fb = 0 THEN 1 ELSE 0 END)
-                AS BIGINT) AS n00
-        FROM fl)
-    SELECT n, n11, n10, n01, n00,
-        (n11 + n00) * 1000000 // n AS po_ppm,
-        CAST((CAST(n11 + n10 AS HUGEINT) * (n11 + n01)
-            + CAST(n00 + n01 AS HUGEINT) * (n00 + n10))
-            * 1000000 // (CAST(n AS HUGEINT) * n) AS BIGINT) AS pe_ppm,
-        CAST((CAST(n AS HUGEINT) * (n11 + n00)
-            - (CAST(n11 + n10 AS HUGEINT) * (n11 + n01)
-               + CAST(n00 + n01 AS HUGEINT) * (n00 + n10)))
-            * 1000000 // (CAST(n AS HUGEINT) * n
-            - (CAST(n11 + n10 AS HUGEINT) * (n11 + n01)
-               + CAST(n00 + n01 AS HUGEINT) * (n00 + n10)))
-            AS BIGINT) AS kappa_micro
-    FROM conf
-"""
-
-
-def q_twap_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time-weighted average of the event value per user (step-function
-    integral between consecutive events over the microsecond clock) —
-    the metric that doesn't over-weight burst periods the way a plain
-    AVG does.  Values quantize to exact micro-ints (floor(v*1e6+0.5)
-    on the shared double — the jl/micro idiom), weights are exact
-    microsecond gaps, and the weighted sum runs in DECIMAL(38,0)/
-    HUGEINT (value_micro * gap_us reaches ~1e15 per term; the SUM
-    would wrap int64 within a single heavy user at 100 TB).  Truncating
-    div == flooring // because values are non-negative.  Users whose
-    events all share one timestamp have zero total weight and are
-    excluded (the NULLIF class, applied as a filter).
-
-    Scale shape: one per-user window (lead) over the natural
-    (user, ts) partitioning, then one agg to user cardinality."""
-    from pyspark.sql import Window
-
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    g = ev.select(
-        "user_id",
-        F.expr(
-            "CAST(floor(value * 1000000.0 + 0.5) AS BIGINT)"
-        ).alias("v_micro"),
-        (
-            F.lead(
-                F.expr("unix_micros(CAST(ts AS TIMESTAMP))"), 1
-            ).over(w)
-            - F.expr("unix_micros(CAST(ts AS TIMESTAMP))")
-        ).alias("gap_us"),
-    )
-    agg = g.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.sum("gap_us").alias("span_us"),
-        F.sum(
-            F.expr("CAST(v_micro AS DECIMAL(38,0)) * gap_us")
-        ).alias("wsum"),
-    )
-    return agg.filter(F.col("span_us") > 0).select(
-        "user_id",
-        "n_events",
-        "span_us",
-        F.expr("CAST(wsum div span_us AS BIGINT)").alias("twap_micro"),
-    )
-
-
-ORACLE_TWAP = """
-    WITH g AS (SELECT user_id,
-            CAST(FLOOR(value * 1000000.0 + 0.5) AS BIGINT) AS v_micro,
-            LEAD(epoch_us(ts)) OVER (PARTITION BY user_id
-                ORDER BY ts, event_id) - epoch_us(ts) AS gap_us
-        FROM events),
-    agg AS (SELECT user_id,
-            CAST(COUNT(*) AS BIGINT) AS n_events,
-            CAST(SUM(gap_us) AS BIGINT) AS span_us,
-            SUM(CAST(v_micro AS HUGEINT) * gap_us) AS wsum
-        FROM g GROUP BY user_id)
-    SELECT user_id, n_events, span_us,
-        CAST(wsum // span_us AS BIGINT) AS twap_micro
-    FROM agg WHERE span_us > 0
-"""
-
-
-def q_png_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL image PIXEL decode end-to-end (the last image seam closed):
-    spec-complete PNGs (real CRCs, zlib IDAT, scanline y filtered with
-    type y % 5 — all five PNG filters exercised) are built per doc,
-    then decoded back through the pure-stdlib decoder (chunk walk ->
-    zlib.decompress -> unfilter) to exact integer channel sums and
-    milli-means.  The oracle states the sums arithmetically from the
-    pixel formula, so any defect in decompression framing or ANY of
-    the five unfilter recurrences (Sub/Up/Average/Paeth) changes a sum
-    and hash-mismatches.  Scale shape: one Arrow-batched mapInPandas
-    over the payload column, zero shuffle; payload bytes cross the
-    Python boundary exactly once.  See
-    operators/multimodal.py::decode_image / decode_png_pixels."""
-    from kafka_firehose_nozzle_spark.operators.multimodal import (
-        decode_image,
-        synthetic_png_pixel_payloads,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    return decode_image(synthetic_png_pixel_payloads(docs)).orderBy(
-        "media_id"
-    )
-
-
-ORACLE_PNG_PIXELS = """
-    WITH d AS (SELECT doc_id, 4 + doc_id % 13 AS w,
-            3 + doc_id % 11 AS h
-        FROM documents),
-    px AS (SELECT doc_id, w, h, xs.x AS x, ys.y AS y
-        FROM d,
-        unnest(generate_series(0, w - 1)) AS xs(x),
-        unnest(generate_series(0, h - 1)) AS ys(y)),
-    s AS (SELECT doc_id, w, h,
-            CAST(COUNT(*) AS BIGINT) AS n_px,
-            CAST(SUM((doc_id + 7 * x + 3 * y) % 256) AS BIGINT) AS sum_r,
-            CAST(SUM((2 * doc_id + 5 * x + 11 * y) % 256) AS BIGINT)
-                AS sum_g,
-            CAST(SUM((3 * doc_id + x + 13 * y) % 256) AS BIGINT) AS sum_b
-        FROM px GROUP BY doc_id, w, h)
-    SELECT doc_id AS media_id,
-        CAST(w AS INT) AS width, CAST(h AS INT) AS height, n_px,
-        sum_r, sum_g, sum_b,
-        sum_r * 1000 // n_px AS mean_r_milli,
-        sum_g * 1000 // n_px AS mean_g_milli,
-        sum_b * 1000 // n_px AS mean_b_milli
-    FROM s ORDER BY media_id
-"""
-
-
-def q_split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Group-leakage audit of an event-level train/val/test split: hash
-    events 80/10/10 by event_id (the WRONG unit when examples from one
-    user are correlated), then count users whose events straddle
-    splits — the audit that catches inflated eval numbers before
-    training does.  Exact integer ppm.
-
-    Scale shape: the split label is a pure map; one partial agg to
-    user cardinality (count + count-distinct-of-3-values), one
-    single-row rollup."""
-    ev = _t(spark, sf_dir, "events")
-    h = F.pmod(
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.col("event_id").cast("string"), F.lit("#esplit")
-                    )
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("long"),
-        F.lit(100),
-    )
-    split = (
-        F.when(h < 80, F.lit("train"))
-        .when(h < 90, F.lit("val"))
-        .otherwise(F.lit("test"))
-    )
-    per_user = ev.select(
-        "user_id", split.alias("split")
-    ).groupBy("user_id").agg(
-        F.count_distinct("split").alias("n_splits"),
-        F.count(F.lit(1)).alias("n_ev"),
-    )
-    return per_user.agg(
-        F.count(F.lit(1)).alias("n_users"),
-        F.sum(
-            F.expr("CASE WHEN n_splits >= 2 THEN 1 ELSE 0 END")
-        ).alias("leaked_users"),
-        F.sum("n_ev").alias("n_events"),
-    ).select(
-        "n_users",
-        "leaked_users",
-        F.expr("leaked_users * 1000000 div n_users").alias(
-            "leaked_ppm"
-        ),
-        "n_events",
-    )
-
-
-ORACLE_SPLIT_LEAKAGE = """
-    WITH s AS (SELECT user_id,
-            CASE WHEN h < 80 THEN 'train' WHEN h < 90 THEN 'val'
-                 ELSE 'test' END AS split
-        FROM (SELECT user_id,
-                CAST(('0x' || substr(md5(CAST(event_id AS VARCHAR)
-                    || '#esplit'), 1, 15)) AS BIGINT) % 100 AS h
-              FROM events) q),
-    pu AS (SELECT user_id,
-            CAST(COUNT(DISTINCT split) AS BIGINT) AS n_splits,
-            CAST(COUNT(*) AS BIGINT) AS n_ev
-        FROM s GROUP BY user_id)
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_users,
-        CAST(SUM(CASE WHEN n_splits >= 2 THEN 1 ELSE 0 END) AS BIGINT)
-            AS leaked_users,
-        CAST(SUM(CASE WHEN n_splits >= 2 THEN 1 ELSE 0 END) AS BIGINT)
-            * 1000000 // COUNT(*) AS leaked_ppm,
-        CAST(SUM(n_ev) AS BIGINT) AS n_events
-    FROM pu
-"""
-
-
-def q_markov_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Conditional next-event entropy H(dst | src) per source state, in
-    exact nano-nats: sum over destinations of p * (ln n_src - ln n)
-    where each ln is det_round(9) of an exact count and each term is
-    half-up quantized to int64 BEFORE the cross-destination sum — so
-    the sum is order-independent (integer addition commutes; a double
-    sum here would be partition-order-dependent).  The sequence-
-    predictability screen on top of markov_transitions: low entropy =
-    scripted/bot-like flows, high = organic.
-
-    Scale shape: identical to markov_transitions (one user-partitioned
-    lead window, one (src, dst) agg); the entropy rollup runs at
-    state-pair cardinality."""
-    from pyspark.sql import Window
-
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    pairs = (
-        ev.select(
-            "user_id",
-            "ts",
-            "event_id",
-            F.col("event_type").alias("src"),
-            F.lead("event_type").over(w).alias("dst"),
-        )
-        .filter(F.col("dst").isNotNull())
-        .groupBy("src", "dst")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    tot = pairs.groupBy("src").agg(
-        F.sum("n").alias("n_src"), F.count(F.lit(1)).alias("n_dsts")
-    )
-    ln9 = lambda c: DET.det_round(  # noqa: E731
-        F.log(F.col(c).cast("double")), 9
-    )
-    term = (
-        F.col("n").cast("double") / F.col("n_src").cast("double")
-    ) * (ln9("n_src") - ln9("n"))
-    per = pairs.join(F.broadcast(tot), "src").select(
-        "src",
-        "n_src",
-        "n_dsts",
-        F.floor(term * F.lit(1e9) + F.lit(0.5))
-        .cast("bigint")
-        .alias("t_nano"),
-    )
-    return per.groupBy("src", "n_src", "n_dsts").agg(
-        F.sum("t_nano").alias("entropy_nano")
-    )
-
-
-ORACLE_MARKOV_ENTROPY = f"""
-    WITH seq AS (SELECT user_id, event_type AS src,
-            LEAD(event_type) OVER (PARTITION BY user_id
-                ORDER BY ts, event_id) AS dst
-        FROM events),
-    pairs AS (SELECT src, dst, CAST(COUNT(*) AS BIGINT) AS n FROM seq
-              WHERE dst IS NOT NULL GROUP BY 1, 2),
-    tot AS (SELECT src, CAST(SUM(n) AS BIGINT) AS n_src,
-            CAST(COUNT(*) AS BIGINT) AS n_dsts
-        FROM pairs GROUP BY src),
-    per AS (SELECT pairs.src, n_src, n_dsts,
-            CAST(FLOOR((CAST(n AS DOUBLE) / CAST(n_src AS DOUBLE))
-                * ({DET.det_round_sql('ln(CAST(n_src AS DOUBLE))', 9)}
-                   - {DET.det_round_sql('ln(CAST(n AS DOUBLE))', 9)})
-                * 1000000000.0 + 0.5) AS BIGINT) AS t_nano
-        FROM pairs JOIN tot ON pairs.src = tot.src)
-    SELECT src, n_src, n_dsts,
-        CAST(SUM(t_nano) AS BIGINT) AS entropy_nano
-    FROM per GROUP BY src, n_src, n_dsts
-"""
-
-
-def q_lineitem_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pearson correlation matrix over (quantity, extendedprice,
-    discount) in ONE fact-table pass: all ten moment sums (n, three
-    first moments, three squares, three cross products) accumulate as
-    exact micro-int DECIMAL(38,0) sums — order-independent, overflow-
-    safe past 1e31 — then bridge to double through VARCHAR (the
-    dispersion idiom: int128-to-double casts double-round) and apply
-    the closed form once, det_round(6).  The multicollinearity screen
-    run before fitting anything on these columns.
-
-    Scale shape: one partial-combined single-row aggregation; zero
-    joins, zero shuffles beyond the final combine."""
-    li = _t(spark, sf_dir, "lineitem")
-    q = "CAST(floor(l_quantity * 1000000.0 + 0.5) AS BIGINT)"
-    p = "CAST(floor(l_extendedprice * 1000000.0 + 0.5) AS BIGINT)"
-    d = "CAST(floor(l_discount * 1000000.0 + 0.5) AS BIGINT)"
-    dec = "DECIMAL(38,0)"
-    m = li.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.expr(f"SUM(CAST({q} AS {dec}))").alias("sx"),
-        F.expr(f"SUM(CAST({p} AS {dec}))").alias("sy"),
-        F.expr(f"SUM(CAST({d} AS {dec}))").alias("sz"),
-        F.expr(f"SUM(CAST({q} AS {dec}) * {q})").alias("sxx"),
-        F.expr(f"SUM(CAST({p} AS {dec}) * {p})").alias("syy"),
-        F.expr(f"SUM(CAST({d} AS {dec}) * {d})").alias("szz"),
-        F.expr(f"SUM(CAST({q} AS {dec}) * {p})").alias("sxy"),
-        F.expr(f"SUM(CAST({q} AS {dec}) * {d})").alias("sxz"),
-        F.expr(f"SUM(CAST({p} AS {dec}) * {d})").alias("syz"),
-    )
-    br = m.select(
-        F.col("n").alias("n_rows"),
-        F.expr("CAST(n AS DOUBLE)").alias("dn"),
-        *[
-            F.expr(f"CAST(CAST({c} AS STRING) AS DOUBLE)").alias(
-                "d" + c
-            )
-            for c in (
-                "sx",
-                "sy",
-                "sz",
-                "sxx",
-                "syy",
-                "szz",
-                "sxy",
-                "sxz",
-                "syz",
-            )
-        ],
-    )
-
-    def corr(sab, sa, sb, saa, sbb):
-        num = F.col("dn") * F.col(sab) - F.col(sa) * F.col(sb)
-        den = F.sqrt(
-            (F.col("dn") * F.col(saa) - F.col(sa) * F.col(sa))
-            * (F.col("dn") * F.col(sbb) - F.col(sb) * F.col(sb))
-        )
-        return DET.det_round(num / den, 6)
-
-    return br.select(
-        "n_rows",
-        corr("dsxy", "dsx", "dsy", "dsxx", "dsyy").alias(
-            "corr_qty_price"
-        ),
-        corr("dsxz", "dsx", "dsz", "dsxx", "dszz").alias(
-            "corr_qty_disc"
-        ),
-        corr("dsyz", "dsy", "dsz", "dsyy", "dszz").alias(
-            "corr_price_disc"
-        ),
-    )
-
-
-def _corr_sql(sab, sa, sb, saa, sbb):
-    num = f"(dn * {sab} - {sa} * {sb})"
-    den = (
-        f"sqrt((dn * {saa} - {sa} * {sa}) * (dn * {sbb} - {sb} * {sb}))"
-    )
-    return DET.det_round_sql(f"{num} / {den}", 6)
-
-
-ORACLE_CORR_MATRIX = f"""
-    WITH m AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
-            SUM(CAST(CAST(FLOOR(l_quantity * 1000000.0 + 0.5) AS BIGINT)
-                AS HUGEINT)) AS sx,
-            SUM(CAST(CAST(FLOOR(l_extendedprice * 1000000.0 + 0.5)
-                AS BIGINT) AS HUGEINT)) AS sy,
-            SUM(CAST(CAST(FLOOR(l_discount * 1000000.0 + 0.5) AS BIGINT)
-                AS HUGEINT)) AS sz,
-            SUM(CAST(CAST(FLOOR(l_quantity * 1000000.0 + 0.5) AS BIGINT)
-                AS HUGEINT)
-              * CAST(FLOOR(l_quantity * 1000000.0 + 0.5) AS BIGINT))
-                AS sxx,
-            SUM(CAST(CAST(FLOOR(l_extendedprice * 1000000.0 + 0.5)
-                AS BIGINT) AS HUGEINT)
-              * CAST(FLOOR(l_extendedprice * 1000000.0 + 0.5) AS BIGINT))
-                AS syy,
-            SUM(CAST(CAST(FLOOR(l_discount * 1000000.0 + 0.5) AS BIGINT)
-                AS HUGEINT)
-              * CAST(FLOOR(l_discount * 1000000.0 + 0.5) AS BIGINT))
-                AS szz,
-            SUM(CAST(CAST(FLOOR(l_quantity * 1000000.0 + 0.5) AS BIGINT)
-                AS HUGEINT)
-              * CAST(FLOOR(l_extendedprice * 1000000.0 + 0.5) AS BIGINT))
-                AS sxy,
-            SUM(CAST(CAST(FLOOR(l_quantity * 1000000.0 + 0.5) AS BIGINT)
-                AS HUGEINT)
-              * CAST(FLOOR(l_discount * 1000000.0 + 0.5) AS BIGINT))
-                AS sxz,
-            SUM(CAST(CAST(FLOOR(l_extendedprice * 1000000.0 + 0.5)
-                AS BIGINT) AS HUGEINT)
-              * CAST(FLOOR(l_discount * 1000000.0 + 0.5) AS BIGINT))
-                AS syz
-        FROM lineitem),
-    br AS (SELECT n AS n_rows, CAST(n AS DOUBLE) AS dn,
-            CAST(CAST(sx AS VARCHAR) AS DOUBLE) AS dsx,
-            CAST(CAST(sy AS VARCHAR) AS DOUBLE) AS dsy,
-            CAST(CAST(sz AS VARCHAR) AS DOUBLE) AS dsz,
-            CAST(CAST(sxx AS VARCHAR) AS DOUBLE) AS dsxx,
-            CAST(CAST(syy AS VARCHAR) AS DOUBLE) AS dsyy,
-            CAST(CAST(szz AS VARCHAR) AS DOUBLE) AS dszz,
-            CAST(CAST(sxy AS VARCHAR) AS DOUBLE) AS dsxy,
-            CAST(CAST(sxz AS VARCHAR) AS DOUBLE) AS dsxz,
-            CAST(CAST(syz AS VARCHAR) AS DOUBLE) AS dsyz
-        FROM m)
-    SELECT n_rows,
-        {_corr_sql('dsxy', 'dsx', 'dsy', 'dsxx', 'dsyy')}
-            AS corr_qty_price,
-        {_corr_sql('dsxz', 'dsx', 'dsz', 'dsxx', 'dszz')}
-            AS corr_qty_disc,
-        {_corr_sql('dsyz', 'dsy', 'dsz', 'dsyy', 'dszz')}
-            AS corr_price_disc
-    FROM br
-"""
-
-
-def q_hll_error_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sketch-accuracy audit: the LogLog distinct-user estimate vs the
-    exact count per event type, with the relative error det_round(6) —
-    the companion evaluation to lsh_recall_eval, answering "is the
-    64-register sketch tight enough to replace count_distinct in the
-    dashboards?" (expected σ ≈ 1.3/√64 ≈ 16%).
-
-    Scale shape: the sketch shuffle carries ≤64 registers per group
-    (the whole point); the exact side is the plain distinct agg it
-    would replace; both land at event-type cardinality before the
-    join."""
-    ev = _t(spark, sf_dir, "events")
-    est = D.loglog_distinct(ev, "user_id", ["event_type"], m=64)
-    exact = ev.groupBy("event_type").agg(
-        F.count_distinct("user_id").alias("exact_distinct")
-    )
-    j = est.join(exact, "event_type")
-    rel = F.abs(
-        F.col("est_distinct") - F.col("exact_distinct").cast("double")
-    ) / F.col("exact_distinct").cast("double")
-    return j.select(
-        "event_type",
-        "est_distinct",
-        "exact_distinct",
-        DET.det_round(rel, 6).alias("rel_err"),
-    )
-
-
-ORACLE_HLL_ERROR = f"""
-    WITH base AS ({ORACLE_LOGLOG})
-    SELECT event_type, est_distinct, exact_distinct,
-        {DET.det_round_sql(
-            'abs(est_distinct - CAST(exact_distinct AS DOUBLE))'
-            ' / CAST(exact_distinct AS DOUBLE)', 6
-        )} AS rel_err
-    FROM base
-"""
-
-
-def q_label_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Centroid-based silhouette per embedding label: a = distance to
-    the own-label centroid, b = distance to the nearest other
-    centroid, s = (b - a) / max(a, b) — the cluster-quality audit that
-    says whether labels are geometrically meaningful (medoid-free
-    silhouette: the classic per-pair form is O(n²), this form is the
-    standard scalable variant).  Distances are EXACT int64 on micro-
-    quantized components (the jl idiom; centroids are truncated-mean
-    micro vectors — Spark div == DuckDB // toward zero, both engines
-    verified); the ratio is one IEEE division on <2^53 integers,
-    det_round(9), quantized to DECIMAL(18,9) before the per-label mean
-    so the cross-row sum is exact and order-independent.
-
-    Scale shape: centroid build is a (label, dim)-cardinality agg;
-    the assignment stage is a bounded broadcast nested loop (vectors x
-    10 centroid rows — the types-x-spine class); per-vector min/max
-    aggregate at vector cardinality, the final agg at label
-    cardinality."""
-    emb = _t(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        "label",
-        F.transform(
-            F.col("embedding").cast("array<double>"),
-            lambda x: F.floor(x * F.lit(1000000.0) + F.lit(0.5)).cast(
-                "bigint"
-            ),
-        ).alias("vm"),
-    )
-    ex = emb.select("label", F.posexplode("vm").alias("dim", "xm"))
-    cent = ex.groupBy("label", "dim").agg(
-        F.expr("SUM(xm) div COUNT(*)").alias("cm")
-    )
-    carr = (
-        cent.groupBy("label")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("dim", "cm"))
-            ).alias("pc")
-        )
-        .select(
-            F.col("label").alias("clabel"),
-            F.transform(
-                F.col("pc"), lambda s: s.getField("cm")
-            ).alias("cvec"),
-        )
-    )
-    dist = F.aggregate(
-        F.zip_with("vm", "cvec", lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("bigint"),
-        lambda acc, v: acc + v,
-    )
-    p = emb.crossJoin(F.broadcast(carr)).select(
-        "vec_id", "label", "clabel", dist.alias("dist")
-    )
-    s = p.groupBy("vec_id", "label").agg(
-        F.max(
-            F.when(F.col("clabel") == F.col("label"), F.col("dist"))
-        ).alias("d_own"),
-        F.min(
-            F.when(F.col("clabel") != F.col("label"), F.col("dist"))
-        ).alias("d_other"),
-    )
-    sil = F.when(
-        F.greatest("d_own", "d_other") == 0, F.lit(0.0)
-    ).otherwise(
-        (
-            F.col("d_other").cast("double")
-            - F.col("d_own").cast("double")
-        )
-        / F.greatest("d_own", "d_other").cast("double")
-    )
-    s9 = s.select(
-        "label",
-        DET.det_round(sil, 9).cast("decimal(18,9)").alias("s9"),
-    )
-    agg = s9.groupBy("label").agg(
-        F.count(F.lit(1)).alias("n_vecs"), F.sum("s9").alias("ssum")
-    )
-    return agg.select(
-        "label",
-        "n_vecs",
-        DET.det_round(
-            F.expr("CAST(CAST(ssum AS STRING) AS DOUBLE)")
-            / F.col("n_vecs").cast("double"),
-            6,
-        ).alias("mean_silhouette"),
-    )
-
-
-ORACLE_SILHOUETTE = f"""
-    WITH e AS (SELECT vec_id, label,
-            list_transform(embedding, x ->
-                CAST(FLOOR(CAST(x AS DOUBLE) * 1000000.0 + 0.5)
-                    AS BIGINT)) AS vm
-        FROM embeddings),
-    ex AS (SELECT label, d.i AS dim, vm[d.i + 1] AS xm
-        FROM e, unnest(generate_series(0, len(vm) - 1)) AS d(i)),
-    cent AS (SELECT label, dim,
-            CAST(CAST(SUM(xm) AS BIGINT) // COUNT(*) AS BIGINT) AS cm
-        FROM ex GROUP BY 1, 2),
-    carr AS (SELECT label AS clabel, list(cm ORDER BY dim) AS cvec
-        FROM cent GROUP BY label),
-    p AS (SELECT e.vec_id, e.label, c.clabel,
-            CAST(list_sum(list_transform(generate_series(1, len(vm)),
-                i -> (vm[i] - cvec[i]) * (vm[i] - cvec[i])))
-                AS BIGINT) AS dist
-        FROM e CROSS JOIN carr c),
-    s AS (SELECT vec_id, label,
-            MAX(CASE WHEN clabel = label THEN dist END) AS d_own,
-            MIN(CASE WHEN clabel <> label THEN dist END) AS d_other
-        FROM p GROUP BY 1, 2),
-    s9 AS (SELECT label,
-            CAST({DET.det_round_sql(
-                'CASE WHEN GREATEST(d_own, d_other) = 0 THEN 0.0'
-                ' ELSE (CAST(d_other AS DOUBLE) - CAST(d_own AS DOUBLE))'
-                ' / CAST(GREATEST(d_own, d_other) AS DOUBLE) END', 9
-            )} AS DECIMAL(18,9)) AS s9
-        FROM s)
-    SELECT label, CAST(COUNT(*) AS BIGINT) AS n_vecs,
-        {DET.det_round_sql(
-            'CAST(CAST(SUM(s9) AS VARCHAR) AS DOUBLE)'
-            ' / CAST(COUNT(*) AS DOUBLE)', 6
-        )} AS mean_silhouette
-    FROM s9 GROUP BY label
-"""
-
-
-def q_last_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Last-touch attribution: each purchase is credited to the most
-    recent preceding view/click by the same user (unbounded lookback;
-    'none' when the purchase is the user's first touch) — the revenue-
-    attribution rule every growth dashboard starts from.  One
-    user-partitioned window (last_value IGNORE NULLS over rows
-    unbounded-preceding .. 1-preceding — identical frame semantics on
-    both engines), then a purchase-cardinality aggregation in exact
-    ppm."""
-    from pyspark.sql import Window
-
-    ev = _t(spark, sf_dir, "events")
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    touched = ev.select(
-        "event_type",
-        F.coalesce(
-            F.last(
-                F.when(
-                    F.col("event_type").isin("view", "click"),
-                    F.col("event_type"),
-                ),
-                ignorenulls=True,
-            ).over(w),
-            F.lit("none"),
-        ).alias("touch"),
-    )
-    p = touched.filter(F.col("event_type") == "purchase")
-    tot = p.groupBy().agg(F.count(F.lit(1)).alias("n_purchases"))
-    return (
-        p.groupBy("touch")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "touch",
-            "n",
-            "n_purchases",
-            F.expr("n * 1000000 div n_purchases").alias("share_ppm"),
-        )
-    )
-
-
-ORACLE_ATTRIBUTION = """
-    WITH t AS (SELECT event_type,
-            COALESCE(LAST_VALUE(CASE WHEN event_type IN ('view', 'click')
-                    THEN event_type END IGNORE NULLS)
-                OVER (PARTITION BY user_id ORDER BY ts, event_id
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                'none') AS touch
-        FROM events),
-    p AS (SELECT touch FROM t WHERE event_type = 'purchase'),
-    tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_purchases FROM p)
-    SELECT touch, CAST(COUNT(*) AS BIGINT) AS n, n_purchases,
-        CAST(COUNT(*) AS BIGINT) * 1000000 // n_purchases AS share_ppm
-    FROM p CROSS JOIN tot GROUP BY touch, n_purchases
-"""
-
-
-def q_session_path_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-20 three-event paths within 30-minute-gap sessions (the
-    session definition shared with sessionize_events /
-    session_bounce_rate, microsecond gap comparison): the funnel-mining
-    view of behavior — which 3-step flows dominate.  Ties break on the
-    path string so the top-20 cut is total-ordered on both engines.
-
-    Scale shape: the session windows are the one user-key shuffle;
-    the path space is bounded (|event types|³ ≈ 125 distinct rows), so
-    the ranking runs on a dimension-sized table."""
-    from pyspark.sql import Window
-
-    ev = _t(spark, sf_dir, "events")
-    wu = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    d = ev.select(
-        "user_id",
-        "event_id",
-        "ts",
-        "event_type",
-        F.when(
-            F.expr("unix_micros(CAST(ts AS TIMESTAMP))")
-            - F.lag(
-                F.expr("unix_micros(CAST(ts AS TIMESTAMP))")
-            ).over(wu)
-            > 1_800_000_000,
-            1,
-        )
-        .otherwise(0)
-        .alias("brk"),
-    )
-    s = d.withColumn(
-        "sess_ix",
-        F.sum("brk").over(
-            wu.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
-    )
-    ws = Window.partitionBy("user_id", "sess_ix").orderBy(
-        "ts", "event_id"
-    )
-    tri = (
-        s.select(
-            F.col("event_type").alias("t0"),
-            F.lead("event_type", 1).over(ws).alias("t1"),
-            F.lead("event_type", 2).over(ws).alias("t2"),
-        )
-        .filter(F.col("t2").isNotNull())
-        .select(
-            F.concat_ws(">", "t0", "t1", "t2").alias("path")
-        )
-        .groupBy("path")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    return (
-        tri.orderBy(F.col("n").desc(), F.col("path").asc()).limit(20)
-    )
-
-
-ORACLE_PATH_TRIGRAMS = """
-    WITH d AS (SELECT user_id, event_id, ts, event_type,
-            CASE WHEN epoch_us(ts) - LAG(epoch_us(ts)) OVER (
-                     PARTITION BY user_id ORDER BY ts, event_id)
-                      > 1800000000
-                 THEN 1 ELSE 0 END AS brk
-        FROM events),
-    s AS (SELECT user_id, event_id, ts, event_type,
-            SUM(brk) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                AS sess_ix
-          FROM d),
-    tri AS (SELECT event_type AS t0,
-            LEAD(event_type, 1) OVER w AS t1,
-            LEAD(event_type, 2) OVER w AS t2
-        FROM s
-        WINDOW w AS (PARTITION BY user_id, sess_ix
-            ORDER BY ts, event_id)),
-    p AS (SELECT t0 || '>' || t1 || '>' || t2 AS path,
-            CAST(COUNT(*) AS BIGINT) AS n
-        FROM tri WHERE t2 IS NOT NULL GROUP BY 1)
-    SELECT path, n FROM p ORDER BY n DESC, path ASC LIMIT 20
-"""
-
-
-def q_quality_length_confound(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Confound screen per source: Pearson correlation between document
-    length (n_chars) and stopword density (permille) — when a quality
-    proxy correlates with length inside a source, a quality-filtered
-    mix silently becomes a length-filtered mix (the Simpson's-paradox
-    audit for curation configs).  Same exact-moment machinery as
-    lineitem_corr_matrix, grouped by source: integer x/y, DECIMAL(38,0)
-    moment sums, VARCHAR-bridged closed form, det_round(6).  Sources
-    with zero variance in either variable emit NULL (NULLIF on the
-    denominator).
-
-    Scale shape: one (doc, token) count-table pass to per-doc stats,
-    a doc-cardinality join back to the docs projection, then a
-    source-cardinality moment aggregation."""
-    docs = _t(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id",
-        F.explode(
-            TX.tokens(TX.normalize_text(F.col("text")))
-        ).alias("tok"),
-    )
-    stop = "('the','a','of','to','and','in','is','it','for','on')"
-    pd_ = toks.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_words"),
-        F.sum(
-            F.expr(f"CASE WHEN tok IN {stop} THEN 1 ELSE 0 END")
-        ).alias("n_stop"),
-    )
-    per_doc = docs.select("doc_id", "source", "n_chars").join(
-        pd_, "doc_id"
-    ).select(
-        "source",
-        F.col("n_chars").alias("x"),
-        F.expr("n_stop * 1000 div n_words").alias("y"),
-    )
-    dec = "DECIMAL(38,0)"
-    m = per_doc.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.expr(f"SUM(CAST(x AS {dec}))").alias("sx"),
-        F.expr(f"SUM(CAST(y AS {dec}))").alias("sy"),
-        F.expr(f"SUM(CAST(x AS {dec}) * x)").alias("sxx"),
-        F.expr(f"SUM(CAST(y AS {dec}) * y)").alias("syy"),
-        F.expr(f"SUM(CAST(x AS {dec}) * y)").alias("sxy"),
-    )
-    br = m.select(
-        "source",
-        F.col("n").alias("n_docs"),
-        F.expr("CAST(n AS DOUBLE)").alias("dn"),
-        *[
-            F.expr(f"CAST(CAST({c} AS STRING) AS DOUBLE)").alias(
-                "d" + c
-            )
-            for c in ("sx", "sy", "sxx", "syy", "sxy")
-        ],
-    )
-    num = F.col("dn") * F.col("dsxy") - F.col("dsx") * F.col("dsy")
-    den = F.sqrt(
-        (F.col("dn") * F.col("dsxx") - F.col("dsx") * F.col("dsx"))
-        * (F.col("dn") * F.col("dsyy") - F.col("dsy") * F.col("dsy"))
-    )
-    return br.select(
-        "source",
-        "n_docs",
-        DET.det_round(num / F.nullif(den, F.lit(0.0)), 6).alias(
-            "corr_len_stop"
-        ),
-    )
-
-
-ORACLE_LEN_CONFOUND = f"""
-    WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
-    pd AS (SELECT doc_id,
-            CAST(len(toks) AS BIGINT) AS n_words,
-            CAST(len(list_filter(toks, x -> list_contains(
-                ['the','a','of','to','and','in','is','it','for','on'],
-                x))) AS BIGINT) AS n_stop
-        FROM t),
-    per_doc AS (SELECT source, CAST(n_chars AS BIGINT) AS x,
-            n_stop * 1000 // n_words AS y
-        FROM documents JOIN pd USING (doc_id)),
-    m AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n,
-            SUM(CAST(x AS HUGEINT)) AS sx,
-            SUM(CAST(y AS HUGEINT)) AS sy,
-            SUM(CAST(x AS HUGEINT) * x) AS sxx,
-            SUM(CAST(y AS HUGEINT) * y) AS syy,
-            SUM(CAST(x AS HUGEINT) * y) AS sxy
-        FROM per_doc GROUP BY source),
-    br AS (SELECT source, n AS n_docs, CAST(n AS DOUBLE) AS dn,
-            CAST(CAST(sx AS VARCHAR) AS DOUBLE) AS dsx,
-            CAST(CAST(sy AS VARCHAR) AS DOUBLE) AS dsy,
-            CAST(CAST(sxx AS VARCHAR) AS DOUBLE) AS dsxx,
-            CAST(CAST(syy AS VARCHAR) AS DOUBLE) AS dsyy,
-            CAST(CAST(sxy AS VARCHAR) AS DOUBLE) AS dsxy
-        FROM m)
-    SELECT source, n_docs,
-        {DET.det_round_sql(
-            '(dn * dsxy - dsx * dsy) / NULLIF('
-            'sqrt((dn * dsxx - dsx * dsx) * (dn * dsyy - dsy * dsy)),'
-            ' 0.0)', 6
-        )} AS corr_len_stop
-    FROM br
-"""
-
-
-def q_norm_quantile_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Within-label quantile rank of each embedding's squared L2 norm —
-    the normalization audit run before cosine vs dot-product decisions
-    (a label whose norms spread wide will dominate unnormalized
-    retrieval).  Norm² is EXACT int64 on micro-quantized components;
-    rank is row_number over the total order (norm2, vec_id);
-    pct_ppm = (rank-1) * 1e6 div (n-1) exact (single-member labels emit
-    0).  One label-partitioned window at vector cardinality."""
-    from pyspark.sql import Window
-
-    emb = _t(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        "label",
-        F.aggregate(
-            F.transform(
-                F.col("embedding").cast("array<double>"),
-                lambda x: F.floor(
-                    x * F.lit(1000000.0) + F.lit(0.5)
-                ).cast("bigint"),
-            ),
-            F.lit(0).cast("bigint"),
-            lambda acc, v: acc + v * v,
-        ).alias("norm2"),
-    )
-    w = Window.partitionBy("label").orderBy("norm2", "vec_id")
-    wn = Window.partitionBy("label")
-    return emb.select(
-        "vec_id",
-        "label",
-        "norm2",
-        F.row_number().over(w).alias("rk"),
-        F.count(F.lit(1)).over(wn).alias("n_label"),
-    ).select(
-        "vec_id",
-        "label",
-        "norm2",
-        # row_number() is IntegerType: (rk-1) * 1e6 in int32 wraps once
-        # a label group exceeds 2,148 rows — sf10 is the first scale
-        # that crosses it (ANSI mode surfaced the wrap in the r8 sweep).
-        F.expr(
-            "CASE WHEN n_label = 1 THEN 0"
-            " ELSE CAST(rk - 1 AS BIGINT) * 1000000 div (n_label - 1) END"
-        ).alias("pct_ppm"),
-    )
-
-
-ORACLE_NORM_QUANTILES = """
-    WITH e AS (SELECT vec_id, label,
-            CAST(list_sum(list_transform(embedding, x ->
-                CAST(FLOOR(CAST(x AS DOUBLE) * 1000000.0 + 0.5)
-                    AS BIGINT)
-                * CAST(FLOOR(CAST(x AS DOUBLE) * 1000000.0 + 0.5)
-                    AS BIGINT))) AS BIGINT) AS norm2
-        FROM embeddings),
-    r AS (SELECT vec_id, label, norm2,
-            ROW_NUMBER() OVER (PARTITION BY label
-                ORDER BY norm2, vec_id) AS rk,
-            COUNT(*) OVER (PARTITION BY label) AS n_label
-        FROM e)
-    SELECT vec_id, label, norm2,
-        CASE WHEN n_label = 1 THEN 0
-             ELSE (rk - 1) * 1000000 // (n_label - 1) END AS pct_ppm
-    FROM r
-"""
-
-
-def q_conversion_latency_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Conversion-latency distribution: per converting user, the time
-    from FIRST view to the first purchase AFTER it, bucketed by hour
-    (capped at 48) — the time-to-convert histogram behind attribution-
-    window choices (how long a lookback does last-touch actually
-    need?).  Exact microsecond arithmetic end-to-end.
-
-    Scale shape: one conditional-MIN aggregate to user cardinality,
-    a purchase rejoin (the first purchase AT/AFTER the first view is
-    not expressible in the same pass), then a ≤49-row bucket
-    rollup."""
-    ev = _t(spark, sf_dir, "events")
-    per_user = ev.groupBy("user_id").agg(
-        F.min(
-            F.when(
-                F.col("event_type") == "view",
-                F.expr("unix_micros(CAST(ts AS TIMESTAMP))"),
-            )
-        ).alias("t_view"),
-    )
-    ev2 = ev.select(
-        "user_id",
-        "event_type",
-        F.expr("unix_micros(CAST(ts AS TIMESTAMP))").alias("t_us"),
-    )
-    conv = (
-        per_user.filter(F.col("t_view").isNotNull())
-        .join(ev2, "user_id")
-        .filter(
-            (F.col("event_type") == "purchase")
-            & (F.col("t_us") >= F.col("t_view"))
-        )
-        .groupBy("user_id", "t_view")
-        .agg(F.min("t_us").alias("t_conv"))
-    )
-    return (
-        conv.select(
-            F.expr(
-                "LEAST((t_conv - t_view) div 3600000000, 48)"
-            ).alias("hour_bucket")
-        )
-        .groupBy("hour_bucket")
-        .agg(F.count(F.lit(1)).alias("n_users"))
-    )
-
-
-ORACLE_CONVERSION_LATENCY = """
-    WITH pu AS (SELECT user_id,
-            MIN(CASE WHEN event_type = 'view' THEN epoch_us(ts) END)
-                AS t_view
-        FROM events GROUP BY user_id),
-    conv AS (SELECT e.user_id, pu.t_view,
-            MIN(epoch_us(e.ts)) AS t_conv
-        FROM events e JOIN pu ON e.user_id = pu.user_id
-        WHERE pu.t_view IS NOT NULL
-          AND e.event_type = 'purchase'
-          AND epoch_us(e.ts) >= pu.t_view
-        GROUP BY e.user_id, pu.t_view)
-    SELECT LEAST((t_conv - t_view) // 3600000000, 48) AS hour_bucket,
-        CAST(COUNT(*) AS BIGINT) AS n_users
-    FROM conv GROUP BY 1
-"""
-
-
-def q_km_survival_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Kaplan-Meier time-to-conversion curve with right-censoring: per
-    user, "death" = first purchase at/after the first view, censor =
-    last observed event otherwise — the survival-analysis answer to
-    "how long do users take to convert, given most never do" (naive
-    latency averages over converters only are survivorship-biased).
-    Per death-day step, ln(1 - d/n) accumulates as HALF-UP-QUANTIZED
-    int64 nano-nats (det-rounded ln of exact counts; the
-    markov_entropy idiom) so the running product is an EXACT integer
-    cumulative sum — survival_lnano is bit-exact, and the companion
-    double is det_round(6) of one exp.  A step that kills all at-risk
-    users takes a -1e15 sentinel (exp underflows to exactly 0.0 on
-    both engines) instead of ln(0).
-
-    Scale shape: two user-cardinality aggregations (first-view /
-    last-event, then earliest qualifying purchase), a ≤ O(days)
-    day-step table, and bounded windows over it (the waterfill
-    dimension-window class)."""
-    from pyspark.sql import Window
-
-    ev = _t(spark, sf_dir, "events")
-    per_user = ev.groupBy("user_id").agg(
-        F.min(
-            F.when(
-                F.col("event_type") == "view",
-                F.expr("unix_micros(CAST(ts AS TIMESTAMP))"),
-            )
-        ).alias("t0"),
-        F.max(
-            F.expr("unix_micros(CAST(ts AS TIMESTAMP))")
-        ).alias("t_last"),
-    ).filter(F.col("t0").isNotNull())
-    ev2 = ev.select(
-        "user_id",
-        "event_type",
-        F.expr("unix_micros(CAST(ts AS TIMESTAMP))").alias("t_us"),
-    )
-    deaths = (
-        per_user.join(ev2, "user_id")
-        .filter(
-            (F.col("event_type") == "purchase")
-            & (F.col("t_us") >= F.col("t0"))
-        )
-        .groupBy("user_id")
-        .agg(F.min("t_us").alias("t_death"))
-    )
-    u = per_user.join(deaths, "user_id", "left").select(
-        F.expr(
-            "CASE WHEN t_death IS NOT NULL"
-            " THEN (t_death - t0) div 86400000000"
-            " ELSE (t_last - t0) div 86400000000 END"
-        ).alias("end_day"),
-        F.col("t_death").isNotNull().alias("is_death"),
-    )
-    g = u.groupBy("end_day").agg(
-        F.count_if(F.col("is_death")).alias("n_deaths"),
-        F.count_if(~F.col("is_death")).alias("n_censored"),
-    )
-    w_prev = Window.orderBy("end_day").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    tot = g.agg(
-        F.sum(F.expr("n_deaths + n_censored")).alias("n_total")
-    )
-    risk = g.crossJoin(F.broadcast(tot)).select(
-        "end_day",
-        "n_deaths",
-        "n_censored",
-        (
-            F.col("n_total")
-            - F.coalesce(
-                F.sum(F.expr("n_deaths + n_censored")).over(w_prev),
-                F.lit(0),
-            )
-        ).alias("n_risk"),
-    )
-    ln9 = lambda c: DET.det_round(  # noqa: E731
-        F.log(c.cast("double")), 9
-    )
-    term = F.when(
-        F.col("n_deaths") == F.col("n_risk"),
-        F.lit(-1_000_000_000_000_000).cast("bigint"),
-    ).otherwise(
-        F.floor(
-            (
-                ln9(F.col("n_risk") - F.col("n_deaths"))
-                - ln9(F.col("n_risk"))
-            )
-            * F.lit(1e9)
-            + F.lit(0.5)
-        ).cast("bigint")
-    )
-    steps = risk.filter(F.col("n_deaths") > 0).select(
-        "end_day", "n_risk", "n_deaths", "n_censored", term.alias("t_nano")
-    )
-    w_cum = Window.orderBy("end_day").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    return steps.select(
-        F.col("end_day").alias("day"),
-        "n_risk",
-        "n_deaths",
-        "n_censored",
-        F.sum("t_nano").over(w_cum).alias("survival_lnano"),
-    ).select(
-        "day",
-        "n_risk",
-        "n_deaths",
-        "n_censored",
-        "survival_lnano",
-        DET.det_round(
-            F.exp(F.col("survival_lnano").cast("double") / F.lit(1e9)),
-            6,
-        ).alias("survival"),
-    )
-
-
-ORACLE_KM_SURVIVAL = f"""
-    WITH pu AS (SELECT user_id,
-            MIN(CASE WHEN event_type = 'view' THEN epoch_us(ts) END)
-                AS t0,
-            MAX(epoch_us(ts)) AS t_last
-        FROM events GROUP BY user_id),
-    pv AS (SELECT * FROM pu WHERE t0 IS NOT NULL),
-    de AS (SELECT e.user_id, MIN(epoch_us(e.ts)) AS t_death
-        FROM events e JOIN pv ON e.user_id = pv.user_id
-        WHERE e.event_type = 'purchase' AND epoch_us(e.ts) >= pv.t0
-        GROUP BY e.user_id),
-    u AS (SELECT CASE WHEN t_death IS NOT NULL
-                 THEN (t_death - t0) // 86400000000
-                 ELSE (t_last - t0) // 86400000000 END AS end_day,
-            t_death IS NOT NULL AS is_death
-        FROM pv LEFT JOIN de ON pv.user_id = de.user_id),
-    g AS (SELECT end_day,
-            CAST(SUM(CASE WHEN is_death THEN 1 ELSE 0 END) AS BIGINT)
-                AS n_deaths,
-            CAST(SUM(CASE WHEN is_death THEN 0 ELSE 1 END) AS BIGINT)
-                AS n_censored
-        FROM u GROUP BY end_day),
-    tot AS (SELECT CAST(SUM(n_deaths + n_censored) AS BIGINT)
-            AS n_total FROM g),
-    risk AS (SELECT end_day, n_deaths, n_censored,
-            n_total - COALESCE(CAST(SUM(n_deaths + n_censored)
-                OVER (ORDER BY end_day ROWS BETWEEN UNBOUNDED
-                    PRECEDING AND 1 PRECEDING) AS BIGINT), 0)
-                AS n_risk
-        FROM g CROSS JOIN tot),
-    steps AS (SELECT end_day, n_risk, n_deaths, n_censored,
-            CASE WHEN n_deaths = n_risk
-                 THEN CAST(-1000000000000000 AS BIGINT)
-                 ELSE CAST(FLOOR((
-                    {DET.det_round_sql(
-                        'ln(CAST(n_risk - n_deaths AS DOUBLE))', 9)}
-                    - {DET.det_round_sql('ln(CAST(n_risk AS DOUBLE))', 9)}
-                    ) * 1000000000.0 + 0.5) AS BIGINT) END AS t_nano
-        FROM risk WHERE n_deaths > 0),
-    cum AS (SELECT end_day AS day, n_risk, n_deaths, n_censored,
-            CAST(SUM(t_nano) OVER (ORDER BY day ROWS BETWEEN
-                UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-                AS survival_lnano
-        FROM steps)
-    SELECT day, n_risk, n_deaths, n_censored, survival_lnano,
-        {DET.det_round_sql(
-            'exp(CAST(survival_lnano AS DOUBLE) / 1000000000.0)', 6
-        )} AS survival
-    FROM cum
-"""
-
-
-def q_cross_source_dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-source contamination matrix: MinHash-LSH near-dup
-    candidate pairs on the RAW corpus, grouped by the (unordered)
-    source pair — the audit that finds one feed plagiarizing another
-    (off-diagonal mass) vs internal boilerplate (diagonal mass).
-    Exact ppm of total candidate volume per cell.
-
-    Scale shape: the banded LSH equi-join (never all-pairs); two
-    doc-cardinality joins to attach sources; a ≤ |sources|² cell
-    aggregation with the total broadcast back."""
-    docs = _t(spark, sf_dir, "documents")
-    cand = D.lsh_candidate_pairs(
-        docs.select("doc_id", "text"), num_hashes=8, num_bands=4
-    )
-    src = docs.select("doc_id", "source")
-    a = src.select(
-        F.col("doc_id").alias("id_a"), F.col("source").alias("src_a")
-    )
-    b = src.select(
-        F.col("doc_id").alias("id_b"), F.col("source").alias("src_b")
-    )
-    cells = (
-        cand.join(a, "id_a")
-        .join(b, "id_b")
-        .select(
-            F.least("src_a", "src_b").alias("source_lo"),
-            F.greatest("src_a", "src_b").alias("source_hi"),
-        )
-        .groupBy("source_lo", "source_hi")
-        .agg(F.count(F.lit(1)).alias("n_pairs"))
-    )
-    tot = cells.agg(F.sum("n_pairs").alias("n_total"))
-    return cells.crossJoin(F.broadcast(tot)).select(
-        "source_lo",
-        "source_hi",
-        "n_pairs",
-        "n_total",
-        F.expr("n_pairs * 1000000 div n_total").alias("share_ppm"),
-    )
-
-
-ORACLE_CROSS_SOURCE_DUPS = f"""
-    WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
-    h AS (SELECT doc_id, {_TH} AS th FROM t),
-    hs AS (SELECT doc_id, {_HSH} AS hsh FROM h),
-    sig AS (SELECT doc_id, {_ORACLE_SIG8} FROM hs),
-    bands AS ({_ORACLE_BANDS_UNION}),
-    cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-             FROM bands a JOIN bands b
-               ON a.band_ix = b.band_ix AND a.band_hash = b.band_hash
-              AND a.doc_id < b.doc_id),
-    cells AS (SELECT LEAST(da.source, db.source) AS source_lo,
-            GREATEST(da.source, db.source) AS source_hi,
-            CAST(COUNT(*) AS BIGINT) AS n_pairs
-        FROM cand
-        JOIN documents da ON da.doc_id = cand.id_a
-        JOIN documents db ON db.doc_id = cand.id_b
-        GROUP BY 1, 2),
-    tot AS (SELECT CAST(SUM(n_pairs) AS BIGINT) AS n_total FROM cells)
-    SELECT source_lo, source_hi, n_pairs, n_total,
-        n_pairs * 1000000 // n_total AS share_ppm
-    FROM cells CROSS JOIN tot
-"""
-
-
-def q_embedding_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-dimension moment profile of the embedding space: exact
-    truncated-integer micro mean and biased variance per dimension —
-    the whitening/PCA-prep audit (dead dims, dominant dims, offset
-    dims) at dimension cardinality.  var_micro2 = (n*sxx - sx²) div n²
-    entirely in DECIMAL(38,0)/HUGEINT; no doubles anywhere.
-
-    Scale shape: one posexplode + (dim)-cardinality partial agg — the
-    shuffle carries dim rows of moment sums, never vectors."""
-    emb = _t(spark, sf_dir, "embeddings")
-    ex = emb.select(
-        F.posexplode(
-            F.col("embedding").cast("array<double>")
-        ).alias("dim", "x")
-    ).select(
-        "dim",
-        F.floor(F.col("x") * F.lit(1000000.0) + F.lit(0.5))
-        .cast("bigint")
-        .alias("xm"),
-    )
-    dec = "DECIMAL(38,0)"
-    return ex.groupBy("dim").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.expr(f"SUM(CAST(xm AS {dec}))").alias("sx"),
-        F.expr(f"SUM(CAST(xm AS {dec}) * xm)").alias("sxx"),
-    ).select(
-        "dim",
-        "n",
-        F.expr("CAST(sx div n AS BIGINT)").alias("mean_micro"),
-        F.expr(
-            "CAST((CAST(n AS DECIMAL(38,0)) * sxx - sx * sx)"
-            " div (CAST(n AS DECIMAL(38,0)) * n) AS BIGINT)"
-        ).alias("var_micro2"),
-    )
-
-
-ORACLE_EMB_DIM_STATS = """
-    WITH ex AS (SELECT d.i AS dim,
-            CAST(FLOOR(CAST(embedding[d.i + 1] AS DOUBLE) * 1000000.0
-                + 0.5) AS BIGINT) AS xm
-        FROM embeddings,
-        unnest(generate_series(0, len(embedding) - 1)) AS d(i)),
-    m AS (SELECT dim, CAST(COUNT(*) AS BIGINT) AS n,
-            SUM(CAST(xm AS HUGEINT)) AS sx,
-            SUM(CAST(xm AS HUGEINT) * xm) AS sxx
-        FROM ex GROUP BY dim)
-    SELECT dim, n,
-        CAST(sx // n AS BIGINT) AS mean_micro,
-        CAST((CAST(n AS HUGEINT) * sxx - sx * sx)
-            // (CAST(n AS HUGEINT) * n) AS BIGINT) AS var_micro2
-    FROM m
-"""
-
-
-def q_k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """k-anonymity audit over customer quasi-identifiers (nation,
-    market segment, account-balance kilobucket): equivalence-class
-    size distribution and the re-identification exposure — rows in
-    classes smaller than k=5, singletons, largest class.  The
-    data-governance gate run before releasing joined analytics
-    extracts.  Exact integers / ppm.
-
-    Scale shape: one partial agg to QI-class cardinality, one
-    single-row rollup — the fact table is touched once."""
-    c = _t(spark, sf_dir, "customer")
-    cls = c.groupBy(
-        "c_nationkey",
-        "c_mktsegment",
-        F.expr(
-            "CAST(floor(c_acctbal) AS BIGINT) div 1000"
-        ).alias("bal_kb"),
-    ).agg(F.count(F.lit(1)).alias("k"))
-    return cls.agg(
-        F.sum("k").alias("n_rows"),
-        F.count(F.lit(1)).alias("n_classes"),
-        F.count_if(F.col("k") == 1).alias("n_singletons"),
-        F.sum(F.when(F.col("k") < 5, F.col("k")).otherwise(0)).alias(
-            "rows_k_lt_5"
-        ),
-        F.max("k").alias("max_class"),
-    ).select(
-        "n_rows",
-        "n_classes",
-        "n_singletons",
-        "rows_k_lt_5",
-        F.expr("rows_k_lt_5 * 1000000 div n_rows").alias(
-            "at_risk_ppm"
-        ),
-        "max_class",
-    )
-
-
-ORACLE_K_ANONYMITY = """
-    WITH cls AS (SELECT c_nationkey, c_mktsegment,
-            CAST(FLOOR(c_acctbal) AS BIGINT) // 1000 AS bal_kb,
-            CAST(COUNT(*) AS BIGINT) AS k
-        FROM customer GROUP BY 1, 2, 3)
-    SELECT CAST(SUM(k) AS BIGINT) AS n_rows,
-        CAST(COUNT(*) AS BIGINT) AS n_classes,
-        CAST(SUM(CASE WHEN k = 1 THEN 1 ELSE 0 END) AS BIGINT)
-            AS n_singletons,
-        CAST(SUM(CASE WHEN k < 5 THEN k ELSE 0 END) AS BIGINT)
-            AS rows_k_lt_5,
-        CAST(SUM(CASE WHEN k < 5 THEN k ELSE 0 END) AS BIGINT)
-            * 1000000 // CAST(SUM(k) AS BIGINT) AS at_risk_ppm,
-        CAST(MAX(k) AS BIGINT) AS max_class
-    FROM cls
-"""
-
-
-def q_gini_stump_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Decision-stump feature screen: the best single threshold on
-    per-user event count for predicting conversion (did the user ever
-    purchase), by weighted Gini impurity — "is activity volume even
-    predictive?" answered with one exact relational pass, the screen
-    run before training anything.  All arithmetic exact:
-    side_micro = (n² - c0² - c1²)·1e6 // n (= n·gini·1e6) per side in
-    DECIMAL(38,0)/HUGEINT, split ppm = (left + right) // n, argmin
-    with threshold-ascending tiebreak.
-
-    Scale shape: one user-cardinality agg; candidate thresholds are
-    the DISTINCT per-user counts (a bounded small-int domain), so the
-    cumulative windows run on that dimension-sized table (waterfill
-    class)."""
-    from pyspark.sql import Window
-
-    ev = _t(spark, sf_dir, "events")
-    pu = ev.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("x"),
-        F.max(
-            F.expr(
-                "CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END"
-            )
-        ).alias("y"),
-    )
-    g = pu.groupBy("x").agg(
-        F.count(F.lit(1)).alias("n_x"),
-        F.sum("y").alias("c1_x"),
-    )
-    w = Window.orderBy("x").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    tot = g.agg(
-        F.sum("n_x").alias("n"), F.sum("c1_x").alias("c1")
-    )
-    cum = g.select(
-        F.col("x").alias("threshold"),
-        F.sum("n_x").over(w).alias("nl"),
-        F.sum("c1_x").over(w).alias("c1l"),
-    ).crossJoin(F.broadcast(tot)).filter(F.col("nl") < F.col("n"))
-    dec = "DECIMAL(38,0)"
-    side = (
-        lambda n_, c1_: f"(CAST({n_} AS {dec}) * {n_}"  # noqa: E731
-        f" - CAST({n_} - {c1_} AS {dec}) * ({n_} - {c1_})"
-        f" - CAST({c1_} AS {dec}) * {c1_}) * 1000000 div {n_}"
-    )
-    scored = cum.select(
-        "threshold",
-        F.col("nl").alias("n_left"),
-        (F.col("n") - F.col("nl")).alias("n_right"),
-        F.expr(
-            f"CAST(({side('nl', 'c1l')}"
-            f" + {side('(n - nl)', '(c1 - c1l)')})"
-            " div n AS BIGINT)"
-        ).alias("split_gini_ppm"),
-        F.expr(
-            f"CAST(({side('n', 'c1')}) div n AS BIGINT)"
-        ).alias("root_gini_ppm"),
-    )
-    w_best = Window.orderBy(
-        F.col("split_gini_ppm").asc(), F.col("threshold").asc()
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w_best))
-        .filter(F.col("rk") == 1)
-        .drop("rk")
-    )
-
-
-def _gini_side_sql(n_, c1_):
-    return (
-        f"(CAST({n_} AS HUGEINT) * {n_}"
-        f" - CAST({n_} - {c1_} AS HUGEINT) * ({n_} - {c1_})"
-        f" - CAST({c1_} AS HUGEINT) * {c1_}) * 1000000 // {n_}"
-    )
-
-
-ORACLE_GINI_STUMP = f"""
-    WITH pu AS (SELECT user_id, CAST(COUNT(*) AS BIGINT) AS x,
-            CAST(MAX(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0
-                END) AS BIGINT) AS y
-        FROM events GROUP BY user_id),
-    g AS (SELECT x, CAST(COUNT(*) AS BIGINT) AS n_x,
-            CAST(SUM(y) AS BIGINT) AS c1_x
-        FROM pu GROUP BY x),
-    tot AS (SELECT CAST(SUM(n_x) AS BIGINT) AS n,
-            CAST(SUM(c1_x) AS BIGINT) AS c1 FROM g),
-    cum AS (SELECT x AS threshold,
-            CAST(SUM(n_x) OVER (ORDER BY x ROWS BETWEEN UNBOUNDED
-                PRECEDING AND CURRENT ROW) AS BIGINT) AS nl,
-            CAST(SUM(c1_x) OVER (ORDER BY x ROWS BETWEEN UNBOUNDED
-                PRECEDING AND CURRENT ROW) AS BIGINT) AS c1l
-        FROM g),
-    scored AS (SELECT threshold, nl AS n_left, n - nl AS n_right,
-            CAST(({_gini_side_sql('nl', 'c1l')}
-                + {_gini_side_sql('(n - nl)', '(c1 - c1l)')})
-                // n AS BIGINT) AS split_gini_ppm,
-            CAST(({_gini_side_sql('n', 'c1')}) // n AS BIGINT)
-                AS root_gini_ppm
-        FROM cum CROSS JOIN tot WHERE nl < n)
-    SELECT threshold, n_left, n_right, split_gini_ppm, root_gini_ppm
-    FROM scored ORDER BY split_gini_ppm ASC, threshold ASC LIMIT 1
-"""
-
-
-def q_ndcg_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NDCG@10 of the BM25 ranking against graded term-coverage
-    relevance (rel = distinct query terms present, gain = 2^rel - 1) —
-    the ranking-quality eval that closes the retrieval loop
-    (bm25_scores produces the ranking, this scores it).  Each DCG term
-    gain/log2(rank+1) is det-rounded then HALF-UP-QUANTIZED to int64
-    nano-units before summing (the km/markov idiom: the cumulative is
-    exact integer), and NDCG emits as exact ppm of the ideal ordering.
-
-    Scale shape: the ranking cut is TakeOrdered(10) on the scored
-    postings aggregate; every window after runs on 10 rows."""
-    from pyspark.sql import Window
-
-    scores = q_bm25_scores(spark, sf_dir)
-    top10 = scores.orderBy(
-        F.col("bm25").desc(), F.col("doc_id").asc()
-    ).limit(10)
-    w_r = Window.orderBy(F.col("bm25").desc(), F.col("doc_id").asc())
-    gain = F.expr("CAST(shiftleft(1, n_terms_hit) - 1 AS BIGINT)")
-    g = top10.select(
-        gain.alias("gain"),
-        "doc_id",
-        F.row_number().over(w_r).alias("i"),
-    )
-    w_i = Window.orderBy(F.col("gain").desc(), F.col("doc_id").asc())
-    disc = lambda pos: DET.det_round(  # noqa: E731
-        F.log(pos.cast("double") + F.lit(1.0)) / F.lit(math.log(2.0)), 9
-    )
-    t_nano = F.floor(
-        (F.col("gain").cast("double") / disc(F.col("i")))
-        * F.lit(1e9)
-        + F.lit(0.5)
-    ).cast("bigint")
-    ranked = g.withColumn("j", F.row_number().over(w_i)).select(
-        t_nano.alias("t_nano"),
-        F.floor(
-            (F.col("gain").cast("double") / disc(F.col("j")))
-            * F.lit(1e9)
-            + F.lit(0.5)
-        )
-        .cast("bigint")
-        .alias("ti_nano"),
-    )
-    return ranked.agg(
-        F.count(F.lit(1)).alias("n_ranked"),
-        F.sum("t_nano").alias("dcg_nano"),
-        F.sum("ti_nano").alias("idcg_nano"),
-    ).select(
-        "n_ranked",
-        "dcg_nano",
-        "idcg_nano",
-        F.expr("dcg_nano * 1000000 div idcg_nano").alias("ndcg_ppm"),
-    )
-
-
-_NDCG_DISC = lambda pos: DET.det_round_sql(  # noqa: E731
-    f"ln(CAST({pos} AS DOUBLE) + 1.0) / {math.log(2.0)!r}", 9
-)
-
-ORACLE_NDCG = (
-    "WITH "
-    + _BM25_CTES
-    + f""",
-    top10 AS (SELECT doc_id, n_terms_hit, bm25 FROM bm25_out
-        ORDER BY bm25 DESC, doc_id ASC LIMIT 10),
-    g AS (SELECT doc_id,
-            CAST((1 << n_terms_hit) - 1 AS BIGINT) AS gain,
-            ROW_NUMBER() OVER (ORDER BY bm25 DESC, doc_id ASC) AS i
-        FROM top10),
-    ranked AS (SELECT gain, i,
-            ROW_NUMBER() OVER (ORDER BY gain DESC, doc_id ASC) AS j
-        FROM g),
-    terms AS (SELECT
-            CAST(FLOOR((CAST(gain AS DOUBLE) / ({_NDCG_DISC('i')}))
-                * 1000000000.0 + 0.5) AS BIGINT) AS t_nano,
-            CAST(FLOOR((CAST(gain AS DOUBLE) / ({_NDCG_DISC('j')}))
-                * 1000000000.0 + 0.5) AS BIGINT) AS ti_nano
-        FROM ranked)
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_ranked,
-        CAST(SUM(t_nano) AS BIGINT) AS dcg_nano,
-        CAST(SUM(ti_nano) AS BIGINT) AS idcg_nano,
-        CAST(SUM(t_nano) AS BIGINT) * 1000000
-            // CAST(SUM(ti_nano) AS BIGINT) AS ndcg_ppm
-    FROM terms
-"""
-)
-
-
-def q_loo_source_influence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Leave-one-out data valuation at source granularity: for each
-    source, the corpus mean document length WITHOUT it vs with it —
-    the cheapest Shapley-flavored answer to "which feed is dragging
-    the average".  Entirely exact: per-source sums, one broadcast
-    total, truncated micro means in DECIMAL(38,0)/HUGEINT, integer
-    delta.
-
-    Scale shape: one partial agg to source cardinality; everything
-    after is dimension-sized."""
-    docs = _t(spark, sf_dir, "documents")
-    per = docs.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_chars").alias("s_chars"),
-    )
-    tot = per.agg(
-        F.sum("n_docs").alias("n_all"), F.sum("s_chars").alias("s_all")
-    )
-    dec = "DECIMAL(38,0)"
-    return per.crossJoin(F.broadcast(tot)).select(
-        "source",
-        "n_docs",
-        F.expr(
-            f"CAST(CAST(s_all AS {dec}) * 1000000 div n_all AS BIGINT)"
-        ).alias("mean_full_micro"),
-        F.expr(
-            f"CAST(CAST(s_all - s_chars AS {dec}) * 1000000"
-            " div (n_all - n_docs) AS BIGINT)"
-        ).alias("mean_loo_micro"),
-        F.expr(
-            f"CAST(CAST(s_all - s_chars AS {dec}) * 1000000"
-            " div (n_all - n_docs)"
-            f" - CAST(s_all AS {dec}) * 1000000 div n_all AS BIGINT)"
-        ).alias("delta_micro"),
-    )
-
-
-ORACLE_LOO_SOURCE = """
-    WITH per AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-            CAST(SUM(n_chars) AS BIGINT) AS s_chars
-        FROM documents GROUP BY source),
-    tot AS (SELECT CAST(SUM(n_docs) AS BIGINT) AS n_all,
-            CAST(SUM(s_chars) AS BIGINT) AS s_all FROM per)
-    SELECT source, n_docs,
-        CAST(CAST(s_all AS HUGEINT) * 1000000 // n_all AS BIGINT)
-            AS mean_full_micro,
-        CAST(CAST(s_all - s_chars AS HUGEINT) * 1000000
-            // (n_all - n_docs) AS BIGINT) AS mean_loo_micro,
-        CAST(CAST(s_all - s_chars AS HUGEINT) * 1000000
-            // (n_all - n_docs)
-            - CAST(s_all AS HUGEINT) * 1000000 // n_all AS BIGINT)
-            AS delta_micro
-    FROM per CROSS JOIN tot
-"""
-
-
-def q_activity_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temporal churn quadrant: split the observation window at its
-    midpoint day and cross-tabulate users by (active in first half,
-    active in second half) — the retained / churned / resurrected /
-    new taxonomy that defines churn-model labels WITHOUT leaking the
-    label window into the feature window (cf. split_leakage_audit).
-    Exact integers; the midpoint is (d0 + d1 + 1) div 2 on epoch days.
-
-    Scale shape: corpus bounds via one broadcast single-row agg, one
-    user-cardinality agg, a 4-row rollup."""
-    ev = _t(spark, sf_dir, "events")
-    days = ev.select(
-        "user_id",
-        F.expr(
-            "unix_micros(CAST(ts AS TIMESTAMP)) div 86400000000"
-        ).alias("d"),
-    )
-    bounds = days.agg(
-        F.min("d").alias("d0"), F.max("d").alias("d1")
-    )
-    pu = (
-        days.crossJoin(F.broadcast(bounds))
-        .select(
-            "user_id",
-            (
-                F.col("d") < F.expr("(d0 + d1 + 1) div 2")
-            ).alias("is_early"),
-        )
-        .groupBy("user_id")
-        .agg(
-            F.max(F.expr("CASE WHEN is_early THEN 1 ELSE 0 END")).alias(
-                "active_early"
-            ),
-            F.max(F.expr("CASE WHEN is_early THEN 0 ELSE 1 END")).alias(
-                "active_late"
-            ),
-        )
-    )
-    tot = pu.agg(F.count(F.lit(1)).alias("n_users"))
-    return (
-        pu.groupBy("active_early", "active_late")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "active_early",
-            "active_late",
-            "n",
-            F.expr("n * 1000000 div n_users").alias("share_ppm"),
-        )
-    )
-
-
-ORACLE_ACTIVITY_TRANSITION = """
-    WITH days AS (SELECT user_id, epoch_us(ts) // 86400000000 AS d
-        FROM events),
-    b AS (SELECT MIN(d) AS d0, MAX(d) AS d1 FROM days),
-    pu AS (SELECT user_id,
-            CAST(MAX(CASE WHEN d < (d0 + d1 + 1) // 2 THEN 1 ELSE 0
-                END) AS BIGINT) AS active_early,
-            CAST(MAX(CASE WHEN d < (d0 + d1 + 1) // 2 THEN 0 ELSE 1
-                END) AS BIGINT) AS active_late
-        FROM days CROSS JOIN b GROUP BY user_id),
-    tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_users FROM pu)
-    SELECT active_early, active_late, CAST(COUNT(*) AS BIGINT) AS n,
-        CAST(COUNT(*) AS BIGINT) * 1000000 // n_users AS share_ppm
-    FROM pu CROSS JOIN tot GROUP BY active_early, active_late, n_users
-"""
-
-
-def q_did_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Difference-in-differences estimate around the window midpoint:
-    treatment series = 'click' event values, control = 'view', DiD =
-    (treat_post - treat_pre) - (ctrl_post - ctrl_pre) on truncated
-    exact micro means — the causal-inference template (parallel-trends
-    differencing) reduced to one grouped aggregation.  All four cell
-    means are DECIMAL(38,0) div BIGINT; the estimate is exact integer
-    subtraction of truncated means.
-
-    Scale shape: one corpus partial agg to 4 cells, one-row finish."""
-    ev = _t(spark, sf_dir, "events")
-    days = ev.filter(F.col("event_type").isin("click", "view")).select(
-        "event_type",
-        F.expr(
-            "unix_micros(CAST(ts AS TIMESTAMP)) div 86400000000"
-        ).alias("d"),
-        F.expr(
-            "CAST(floor(value * 1000000.0 + 0.5) AS BIGINT)"
-        ).alias("vm"),
-    )
-    bounds = days.agg(F.min("d").alias("d0"), F.max("d").alias("d1"))
-    cells = (
-        days.crossJoin(F.broadcast(bounds))
-        .select(
-            (F.col("event_type") == F.lit("click")).alias("treat"),
-            (F.col("d") >= F.expr("(d0 + d1 + 1) div 2")).alias("post"),
-            "vm",
-        )
-        .groupBy("treat", "post")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            # DECIMAL accumulation: vm*rows wraps int64 past ~1e18
-            F.sum(F.expr("CAST(vm AS DECIMAL(38,0))")).alias("s"),
-        )
-    )
-    m = cells.agg(
-        *[
-            F.max(
-                F.expr(
-                    f"CASE WHEN treat = {t} AND post = {p}"
-                    " THEN CAST(s div n AS BIGINT)"
-                    " END"
-                )
-            ).alias(name)
-            for name, t, p in [
-                ("treat_pre_micro", "true", "false"),
-                ("treat_post_micro", "true", "true"),
-                ("ctrl_pre_micro", "false", "false"),
-                ("ctrl_post_micro", "false", "true"),
-            ]
-        ]
-    )
-    return m.select(
-        "treat_pre_micro",
-        "treat_post_micro",
-        "ctrl_pre_micro",
-        "ctrl_post_micro",
-        F.expr(
-            "(treat_post_micro - treat_pre_micro)"
-            " - (ctrl_post_micro - ctrl_pre_micro)"
-        ).alias("did_micro"),
-    )
-
-
-ORACLE_DID = """
-    WITH days AS (SELECT event_type,
-            epoch_us(ts) // 86400000000 AS d,
-            CAST(FLOOR(value * 1000000.0 + 0.5) AS BIGINT) AS vm
-        FROM events WHERE event_type IN ('click', 'view')),
-    b AS (SELECT MIN(d) AS d0, MAX(d) AS d1 FROM days),
-    cells AS (SELECT event_type = 'click' AS treat,
-            d >= (d0 + d1 + 1) // 2 AS post,
-            CAST(COUNT(*) AS BIGINT) AS n,
-            SUM(CAST(vm AS HUGEINT)) AS s
-        FROM days CROSS JOIN b GROUP BY 1, 2),
-    m AS (SELECT
-            MAX(CASE WHEN treat AND NOT post
-                THEN CAST(s // n AS BIGINT) END) AS treat_pre_micro,
-            MAX(CASE WHEN treat AND post
-                THEN CAST(s // n AS BIGINT) END) AS treat_post_micro,
-            MAX(CASE WHEN NOT treat AND NOT post
-                THEN CAST(s // n AS BIGINT) END) AS ctrl_pre_micro,
-            MAX(CASE WHEN NOT treat AND post
-                THEN CAST(s // n AS BIGINT) END) AS ctrl_post_micro
-        FROM cells)
-    SELECT treat_pre_micro, treat_post_micro, ctrl_pre_micro,
-        ctrl_post_micro,
-        (treat_post_micro - treat_pre_micro)
-            - (ctrl_post_micro - ctrl_pre_micro) AS did_micro
-    FROM m
-"""
-
-
-def q_conversion_wilson_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """95% Wilson score interval for the per-arm conversion rate of the
-    deterministic A/B split (ab_test_zscores' arms) — the uncertainty
-    quantification a rate without an interval is missing; Wilson stays
-    valid at small counts where the normal interval collapses.  Counts
-    are exact integers; the interval is the closed-form IEEE expression
-    on those integers (z = 1.96 literal), det_round(6) on both
-    engines."""
-    ev = _t(spark, sf_dir, "events")
-    pu = ev.groupBy("user_id").agg(
-        F.max(
-            F.expr(
-                "CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END"
-            )
-        ).alias("conv")
-    ).select(
-        F.expr(
-            "CAST(conv AS BIGINT) AS conv"
-        ),
-        F.pmod(
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.col("user_id").cast("string"), F.lit("#ab")
-                        )
-                    ),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            ).cast("long"),
-            F.lit(2),
-        ).alias("variant"),
-    )
-    arms = pu.groupBy("variant").agg(
-        F.count(F.lit(1)).alias("n"), F.sum("conv").alias("c")
-    )
-    # z = 1.96; z^2 is the DECIMAL LITERAL 3.8416 on BOTH engines —
-    # Python's 1.96*1.96 is 1 ulp below the parsed literal the oracle
-    # uses, which would break the bit-for-bit contract at a rounding
-    # boundary
-    z2 = 3.8416
-    ph = F.col("c").cast("double") / F.col("n").cast("double")
-    nn = F.col("n").cast("double")
-    denom = F.lit(1.0) + F.lit(z2) / nn
-    center = ph + F.lit(z2) / (F.lit(2.0) * nn)
-    rad = F.lit(1.96) * F.sqrt(
-        ph * (F.lit(1.0) - ph) / nn
-        + F.lit(z2) / (F.lit(4.0) * nn * nn)
-    )
-    return arms.select(
-        "variant",
-        "n",
-        F.col("c").alias("conversions"),
-        F.expr("c * 1000000 div n").alias("rate_ppm"),
-        DET.det_round((center - rad) / denom, 6).alias("wilson_lo"),
-        DET.det_round((center + rad) / denom, 6).alias("wilson_hi"),
-    )
-
-
-_WILSON = (
-    "((CAST(c AS DOUBLE) / CAST(n AS DOUBLE))"
-    " + 3.8416 / (2.0 * CAST(n AS DOUBLE)) {sign} 1.96 * sqrt("
-    "(CAST(c AS DOUBLE) / CAST(n AS DOUBLE))"
-    " * (1.0 - CAST(c AS DOUBLE) / CAST(n AS DOUBLE))"
-    " / CAST(n AS DOUBLE)"
-    " + 3.8416 / (4.0 * CAST(n AS DOUBLE) * CAST(n AS DOUBLE))))"
-    " / (1.0 + 3.8416 / CAST(n AS DOUBLE))"
-)
-
-ORACLE_WILSON = f"""
-    WITH pu AS (SELECT
-            CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR) || '#ab'),
-                1, 15))::BIGINT % 2 AS BIGINT) AS variant,
-            CAST(MAX(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0
-                END) AS BIGINT) AS conv
-        FROM events GROUP BY user_id),
-    arms AS (SELECT variant, CAST(COUNT(*) AS BIGINT) AS n,
-            CAST(SUM(conv) AS BIGINT) AS c
-        FROM pu GROUP BY variant)
-    SELECT variant, n, c AS conversions,
-        c * 1000000 // n AS rate_ppm,
-        {DET.det_round_sql(_WILSON.format(sign='-'), 6)} AS wilson_lo,
-        {DET.det_round_sql(_WILSON.format(sign='+'), 6)} AS wilson_hi
-    FROM arms
-"""
-
-
-def q_vocab_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Vocabulary drift between corpus halves (ingest order): PSI
-    contribution per top-100 token — the token-level companion to
-    psi_value_drift that catches topic/source drift a value-PSI can't.
-    Add-one smoothing keeps ratios finite; each contribution
-    (p2 - p1)·ln(p2/p1) emits per token det_round(9) (no cross-token
-    sum — the mutual_info order-independence idiom).  Top-100 cut is
-    TakeOrdered with token tiebreak.
-
-    Scale shape: token counts partial-combine per half; the PSI table
-    is 100 rows joined to two broadcast one-row totals."""
-    docs = _t(spark, sf_dir, "documents")
-    n_docs = _parquet_nrows(f"{sf_dir}/documents.parquet")
-    half = n_docs // 2
-    toks = docs.select(
-        (F.col("doc_id") < F.lit(half)).alias("first_half"),
-        F.explode(
-            TX.tokens(TX.normalize_text(F.col("text")))
-        ).alias("tok"),
-    )
-    cnt = toks.groupBy("tok").agg(
-        F.sum(F.expr("CASE WHEN first_half THEN 1 ELSE 0 END")).alias(
-            "c1"
-        ),
-        F.sum(F.expr("CASE WHEN first_half THEN 0 ELSE 1 END")).alias(
-            "c2"
-        ),
-    )
-    top = cnt.orderBy(
-        F.expr("c1 + c2").desc(), F.col("tok").asc()
-    ).limit(100)
-    tot = cnt.agg(
-        F.sum("c1").alias("t1"), F.sum("c2").alias("t2"),
-        F.count(F.lit(1)).alias("v"),
-    )
-    j = top.crossJoin(F.broadcast(tot))
-    p1 = (F.col("c1") + F.lit(1)).cast("double") / (
-        F.col("t1") + F.col("v")
-    ).cast("double")
-    p2 = (F.col("c2") + F.lit(1)).cast("double") / (
-        F.col("t2") + F.col("v")
-    ).cast("double")
-    ln9 = lambda c: DET.det_round(F.log(c), 9)  # noqa: E731
-    return j.select(
-        "tok",
-        "c1",
-        "c2",
-        DET.det_round((p2 - p1) * (ln9(p2) - ln9(p1)), 9).alias(
-            "psi_contrib"
-        ),
-    )
-
-
-ORACLE_VOCAB_PSI = f"""
-    WITH nd AS (SELECT COUNT(*) // 2 AS half FROM documents),
-    toks AS (SELECT doc_id < (SELECT half FROM nd) AS first_half,
-            unnest({_TOKS}) AS tok
-        FROM documents),
-    cnt AS (SELECT tok,
-            CAST(SUM(CASE WHEN first_half THEN 1 ELSE 0 END) AS BIGINT)
-                AS c1,
-            CAST(SUM(CASE WHEN first_half THEN 0 ELSE 1 END) AS BIGINT)
-                AS c2
-        FROM toks GROUP BY tok),
-    top AS (SELECT * FROM cnt ORDER BY c1 + c2 DESC, tok ASC LIMIT 100),
-    tot AS (SELECT CAST(SUM(c1) AS BIGINT) AS t1,
-            CAST(SUM(c2) AS BIGINT) AS t2,
-            CAST(COUNT(*) AS BIGINT) AS v
-        FROM cnt)
-    SELECT tok, c1, c2,
-        {DET.det_round_sql(
-            "(CAST(c2 + 1 AS DOUBLE) / CAST(t2 + v AS DOUBLE)"
-            " - CAST(c1 + 1 AS DOUBLE) / CAST(t1 + v AS DOUBLE))"
-            " * ("
-            + DET.det_round_sql(
-                "ln(CAST(c2 + 1 AS DOUBLE) / CAST(t2 + v AS DOUBLE))", 9)
-            + " - "
-            + DET.det_round_sql(
-                "ln(CAST(c1 + 1 AS DOUBLE) / CAST(t1 + v AS DOUBLE))", 9)
-            + ")", 9
-        )} AS psi_contrib
-    FROM top CROSS JOIN tot
-"""
-
-
-def q_order_backlog_timeseries(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Open-order backlog curve: per month, orders placed, orders fully
-    shipped (last lineitem shipdate), and the running backlog =
-    cumulative placed - cumulative shipped — the event-sourcing
-    balance-over-time view (same state math as an inventory or queue
-    depth curve).  Monthly grain keeps the spine bounded by the DATE
-    DOMAIN (~84 rows for 7 years), corpus-size-independent, so the
-    cumulative windows are dimension-sized (dense-spine class).
-
-    Scale shape: one order-cardinality agg for ship dates, two
-    month-cardinality rollups, a bounded spine with cumulative
-    windows."""
-    from pyspark.sql import Window
-
-    o = _t(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        F.expr(
-            "year(o_orderdate) * 12 + month(o_orderdate) - 1"
-        ).alias("m_open"),
-    )
-    li = _t(spark, sf_dir, "lineitem").groupBy("l_orderkey").agg(
-        F.expr(
-            "MAX(year(l_shipdate) * 12 + month(l_shipdate) - 1)"
-        ).alias("m_ship")
-    )
-    placed = o.groupBy(F.col("m_open").alias("m")).agg(
-        F.count(F.lit(1)).alias("n_placed")
-    )
-    shipped = li.groupBy(F.col("m_ship").alias("m")).agg(
-        F.count(F.lit(1)).alias("n_shipped")
-    )
-    months = (
-        placed.select("m")
-        .unionAll(shipped.select("m"))
-        .agg(F.min("m").alias("m0"), F.max("m").alias("m1"))
-        .head()
-    )
-    spine = spark.range(months["m0"], months["m1"] + 1).select(
-        F.col("id").alias("m")
-    )
-    j = (
-        spine.join(placed, "m", "left")
-        .join(shipped, "m", "left")
-        .select(
-            "m",
-            F.coalesce("n_placed", F.lit(0)).alias("n_placed"),
-            F.coalesce("n_shipped", F.lit(0)).alias("n_shipped"),
-        )
-    )
-    w = Window.orderBy("m").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    return j.select(
-        F.expr(
-            "CAST(m div 12 AS BIGINT) * 100 + m % 12 + 1"
-        ).alias("yyyymm"),
-        "n_placed",
-        "n_shipped",
-        (
-            F.sum("n_placed").over(w) - F.sum("n_shipped").over(w)
-        ).alias("backlog"),
-    )
-
-
-ORACLE_BACKLOG = """
-    WITH o AS (SELECT o_orderkey,
-            CAST(year(o_orderdate) * 12 + month(o_orderdate) - 1
-                AS BIGINT) AS m_open
-        FROM orders),
-    li AS (SELECT l_orderkey,
-            CAST(MAX(year(l_shipdate) * 12 + month(l_shipdate) - 1)
-                AS BIGINT) AS m_ship
-        FROM lineitem GROUP BY l_orderkey),
-    placed AS (SELECT m_open AS m, CAST(COUNT(*) AS BIGINT) AS n_placed
-        FROM o GROUP BY 1),
-    shipped AS (SELECT m_ship AS m, CAST(COUNT(*) AS BIGINT)
-            AS n_shipped
-        FROM li GROUP BY 1),
-    b AS (SELECT MIN(m) AS m0, MAX(m) AS m1 FROM
-        (SELECT m FROM placed UNION ALL SELECT m FROM shipped) u),
-    spine AS (SELECT unnest(generate_series(m0, m1)) AS m FROM b),
-    j AS (SELECT spine.m,
-            COALESCE(n_placed, 0) AS n_placed,
-            COALESCE(n_shipped, 0) AS n_shipped
-        FROM spine LEFT JOIN placed ON placed.m = spine.m
-                   LEFT JOIN shipped ON shipped.m = spine.m)
-    SELECT CAST(m // 12 AS BIGINT) * 100 + m % 12 + 1 AS yyyymm,
-        n_placed, n_shipped,
-        CAST(SUM(n_placed) OVER w - SUM(n_shipped) OVER w AS BIGINT)
-            AS backlog
-    FROM j
-    WINDOW w AS (ORDER BY m ROWS BETWEEN UNBOUNDED PRECEDING
-        AND CURRENT ROW)
-"""
-
-
-_ALERT_RULES = [
-    ("spark_query", ["spark", "query"]),
-    ("table_join", ["table", "join"]),
-    ("error_watch", ["error", "failed"]),
-    ("data_stream", ["data", "stream"]),
-]
-
-
-def q_percolator_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Percolator / reverse search: a fixed rule set (term lists) is
-    matched against every document — the standing-alert shape
-    (saved searches, brand monitoring, PII watchlists) where RULES are
-    the small side and the corpus streams past them.  A doc matches a
-    rule when it contains ALL the rule's terms.  Per rule: match
-    count, ppm of corpus, earliest matching doc.
-
-    Scale shape: rules broadcast (literal VALUES on both engines), the
-    corpus tokenizes once into a token SET, the match test is
-    array-containment fused into the scan; one rule-cardinality
-    aggregation."""
-    docs = _t(spark, sf_dir, "documents")
-    n_docs = _parquet_nrows(f"{sf_dir}/documents.parquet")
-    toks = docs.select(
-        "doc_id",
-        F.array_distinct(
-            TX.tokens(TX.normalize_text(F.col("text")))
-        ).alias("ts"),
-    )
-    rules = spark.createDataFrame(
-        [(name, terms) for name, terms in _ALERT_RULES],
-        "rule STRING, terms ARRAY<STRING>",
-    )
-    m = (
-        toks.crossJoin(F.broadcast(rules))
-        .filter(
-            F.size(
-                F.array_except(F.col("terms"), F.col("ts"))
-            )
-            == 0
-        )
-        .groupBy("rule")
-        .agg(
-            F.count(F.lit(1)).alias("n_matches"),
-            F.min("doc_id").alias("first_doc"),
-        )
-    )
-    return m.select(
-        "rule",
-        "n_matches",
-        F.expr(f"n_matches * 1000000 div {n_docs}").alias(
-            "match_ppm"
-        ),
-        "first_doc",
-    )
-
-
-_ALERT_VALUES = ", ".join(
-    "('%s', [%s])" % (name, ", ".join(f"'{t}'" for t in terms))
-    for name, terms in _ALERT_RULES
-)
-
-ORACLE_PERCOLATOR = f"""
-    WITH rules(rule, terms) AS (VALUES {_ALERT_VALUES}),
-    toks AS (SELECT doc_id, list_distinct({_TOKS}) AS ts
-        FROM documents),
-    nd AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs FROM documents),
-    m AS (SELECT rule, CAST(COUNT(*) AS BIGINT) AS n_matches,
-            MIN(doc_id) AS first_doc
-        FROM toks CROSS JOIN rules
-        WHERE len(list_filter(terms, t -> NOT list_contains(ts, t)))
-            = 0
-        GROUP BY rule)
-    SELECT rule, n_matches,
-        n_matches * 1000000 // (SELECT n_docs FROM nd) AS match_ppm,
-        first_doc
-    FROM m
-"""
-
-
-def q_char_entropy_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shannon entropy of the character-bigram distribution per source,
-    in exact nano-nats — the dependency-free compressibility proxy
-    (low bigram entropy = repetitive/templated text; the signal a
-    zlib-ratio filter gives, computable relationally).  Each
-    -p·ln(p) term = (c/total)·(ln total - ln c) with det-rounded lns,
-    HALF-UP-QUANTIZED to int64 per bigram BEFORE the per-source sum
-    (the markov_entropy order-independence idiom).
-
-    Scale shape: char-bigram explode partial-combines to (source,
-    bigram) cardinality; source totals broadcast back; the entropy
-    rollup is dimension-sized."""
-    docs = _t(spark, sf_dir, "documents")
-    chars = F.split(TX.normalize_text(F.col("text")), "")
-    m = F.size(F.col("_c")) - 1
-    bg = F.when(
-        m >= 1,
-        F.zip_with(
-            F.slice(F.col("_c"), 1, m),
-            F.slice(F.col("_c"), 2, m),
-            lambda a, b: F.concat(a, b),
-        ),
-    ).otherwise(F.array())
-    cnt = (
-        docs.select("source", chars.alias("_c"))
-        .select("source", F.explode(bg).alias("bg"))
-        .groupBy("source", "bg")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    tot = cnt.groupBy("source").agg(
-        F.sum("c").alias("total"),
-        F.count(F.lit(1)).alias("n_bigram_types"),
-    )
-    ln9 = lambda c: DET.det_round(  # noqa: E731
-        F.log(F.col(c).cast("double")), 9
-    )
-    term = (
-        F.col("c").cast("double") / F.col("total").cast("double")
-    ) * (ln9("total") - ln9("c"))
-    per = cnt.join(F.broadcast(tot), "source").select(
-        "source",
-        "total",
-        "n_bigram_types",
-        F.floor(term * F.lit(1e9) + F.lit(0.5))
-        .cast("bigint")
-        .alias("t_nano"),
-    )
-    return per.groupBy("source", "total", "n_bigram_types").agg(
-        F.sum("t_nano").alias("entropy_nano")
-    )
-
-
-ORACLE_CHAR_ENTROPY = f"""
-    WITH t AS (SELECT source,
-            lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))) AS s
-        FROM documents),
-    bg AS (SELECT source,
-            unnest(list_transform(range(1, length(s)),
-                i -> substr(s, i, 2))) AS bg
-        FROM t WHERE length(s) >= 2),
-    cnt AS (SELECT source, bg, CAST(COUNT(*) AS BIGINT) AS c
-        FROM bg GROUP BY 1, 2),
-    tot AS (SELECT source, CAST(SUM(c) AS BIGINT) AS total,
-            CAST(COUNT(*) AS BIGINT) AS n_bigram_types
-        FROM cnt GROUP BY source),
-    per AS (SELECT cnt.source, total, n_bigram_types,
-            CAST(FLOOR((CAST(c AS DOUBLE) / CAST(total AS DOUBLE))
-                * ({DET.det_round_sql('ln(CAST(total AS DOUBLE))', 9)}
-                   - {DET.det_round_sql('ln(CAST(c AS DOUBLE))', 9)})
-                * 1000000000.0 + 0.5) AS BIGINT) AS t_nano
-        FROM cnt JOIN tot ON cnt.source = tot.source)
-    SELECT source, total, n_bigram_types,
-        CAST(SUM(t_nano) AS BIGINT) AS entropy_nano
-    FROM per GROUP BY source, total, n_bigram_types
-"""
-
-
-def q_abc_part_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ABC inventory classification: parts bucketed A/B/C by cumulative
-    revenue share (80 / 95 / rest, revenue-descending) — the Pareto
-    actionable form (lorenz_deciles draws the curve; this assigns the
-    classes).  The corpus-wide cumulative runs through the repo's
-    two-pass distributed prefix sum (operators/packing.py::
-    with_global_running_sum — rangepartitioning + per-partition
-    subtotals; NO single-partition window over parts), ordered by a
-    unique fixed-width STRING key encoding (revenue DESC, partkey
-    ASC) whose lexicographic order equals the numeric order.  Row
-    revenues micro-quantize on the shared IEEE double; sums stay
-    DECIMAL(38,0)/HUGEINT; shares are exact ppm.
-
-    Scale shape: fact agg to part cardinality, the scalable prefix
-    sum over parts, and a 3-row class rollup."""
-    li = _t(spark, sf_dir, "lineitem")
-    rev = li.select(
-        "l_partkey",
-        F.expr(
-            "CAST(floor(l_extendedprice * (1.0 - l_discount)"
-            " * 1000000.0 + 0.5) AS BIGINT)"
-        ).alias("rm"),
-    ).groupBy("l_partkey").agg(
-        F.sum(F.expr("CAST(rm AS DECIMAL(38,0))")).alias("rev")
-    )
-    tot = rev.agg(F.sum("rev").alias("total"))
-    # unique ascending key == (revenue DESC, partkey ASC), encoded as a
-    # fixed-width string: lexicographic order == numeric order, and no
-    # arithmetic packing that could overflow DECIMAL(38) or collide
-    # once partkeys outgrow a multiplier (an earlier -rev*1e7+partkey
-    # encoding broke exactly there at TPC-H SF >= 50).  max_rev is one
-    # bounded scalar action (the changepoint-bounds idiom).
-    max_rev = rev.agg(F.max("rev").alias("m")).head()["m"]
-    ordered = rev.select(
-        "l_partkey",
-        "rev",
-        F.concat(
-            F.lpad(
-                (F.lit(max_rev) - F.col("rev")).cast("string"), 39, "0"
-            ),
-            F.lpad(F.col("l_partkey").cast("string"), 15, "0"),
-        ).alias("ord"),
-    )
-    from kafka_firehose_nozzle_spark.operators.packing import (
-        with_global_running_sum,
-    )
-
-    cum = with_global_running_sum(ordered, "ord", "rev", "cum_rev")
-    classed = cum.crossJoin(F.broadcast(tot)).select(
-        F.expr(
-            "CASE WHEN cum_rev * 1000000 div total <= 800000 THEN 'A'"
-            " WHEN cum_rev * 1000000 div total <= 950000 THEN 'B'"
-            " ELSE 'C' END"
-        ).alias("abc_class"),
-        "rev",
-        "total",
-    )
-    return (
-        classed.groupBy("abc_class")
-        .agg(
-            F.count(F.lit(1)).alias("n_parts"),
-            F.sum("rev").alias("class_rev"),
-            F.max("total").alias("total"),
-        )
-        .select(
-            "abc_class",
-            "n_parts",
-            F.expr(
-                "CAST(class_rev * 1000000 div total AS BIGINT)"
-            ).alias("rev_share_ppm"),
-        )
-    )
-
-
-ORACLE_ABC = """
-    WITH rev AS (SELECT l_partkey,
-            SUM(CAST(CAST(FLOOR(l_extendedprice * (1.0 - l_discount)
-                * 1000000.0 + 0.5) AS BIGINT) AS HUGEINT)) AS rev
-        FROM lineitem GROUP BY l_partkey),
-    tot AS (SELECT SUM(rev) AS total FROM rev),
-    cum AS (SELECT rev,
-            SUM(rev) OVER (ORDER BY rev DESC, l_partkey ASC
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                AS cum_rev
-        FROM rev),
-    classed AS (SELECT
-            CASE WHEN cum_rev * 1000000 // total <= 800000 THEN 'A'
-                 WHEN cum_rev * 1000000 // total <= 950000 THEN 'B'
-                 ELSE 'C' END AS abc_class,
-            rev, total
-        FROM cum CROSS JOIN tot)
-    SELECT abc_class, CAST(COUNT(*) AS BIGINT) AS n_parts,
-        CAST(SUM(rev) * 1000000 // MAX(total) AS BIGINT)
-            AS rev_share_ppm
-    FROM classed GROUP BY abc_class
-"""
-
-
-def q_hill_tail_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hill estimator of the document-length tail index over the top
-    k=200 order statistics: H = mean(ln X_(i) - ln X_(k+1)), alpha =
-    1/H — the heavy-tail screen that says whether max-length caps or
-    sequence packing budgets are driven by a power law or by outliers.
-    Each ln difference is det-rounded and HALF-UP-QUANTIZED to int64
-    nano-nats before the mean (exact integer sum; H_nano = sum div k),
-    alpha is one det_round(6) IEEE division.
-
-    Scale shape: TakeOrdered(k+1) is the only corpus-touching stage;
-    everything after runs on 201 rows."""
-    from pyspark.sql import Window
-
-    docs = _t(spark, sf_dir, "documents")
-    k = 200
-    top = (
-        docs.select("doc_id", F.col("n_chars").cast("bigint").alias("x"))
-        .orderBy(F.col("x").desc(), F.col("doc_id").asc())
-        .limit(k + 1)
-    )
-    w = Window.orderBy(F.col("x").desc(), F.col("doc_id").asc())
-    r = top.select(
-        "x", F.row_number().over(w).alias("i")
-    )
-    xk1 = r.filter(F.col("i") == k + 1).select(
-        F.col("x").alias("xk1")
-    )
-    ln9 = lambda c: DET.det_round(  # noqa: E731
-        F.log(F.col(c).cast("double")), 9
-    )
-    terms = (
-        r.filter(F.col("i") <= k)
-        .crossJoin(F.broadcast(xk1))
-        .select(
-            F.floor(
-                (ln9("x") - ln9("xk1")) * F.lit(1e9) + F.lit(0.5)
-            )
-            .cast("bigint")
-            .alias("t_nano")
-        )
-    )
-    return terms.agg(
-        F.count(F.lit(1)).alias("k"),
-        F.sum("t_nano").alias("sum_nano"),
-    ).select(
-        "k",
-        F.expr("sum_nano div k").alias("hill_h_nano"),
-        DET.det_round(
-            F.col("k").cast("double")
-            * F.lit(1e9)
-            / F.col("sum_nano").cast("double"),
-            6,
-        ).alias("tail_alpha"),
-    )
-
-
-ORACLE_HILL = f"""
-    WITH top AS (SELECT doc_id, CAST(n_chars AS BIGINT) AS x
-        FROM documents ORDER BY x DESC, doc_id ASC LIMIT 201),
-    r AS (SELECT x, ROW_NUMBER() OVER (ORDER BY x DESC, doc_id ASC)
-            AS i
-        FROM top),
-    xk1 AS (SELECT x AS xk1 FROM r WHERE i = 201),
-    terms AS (SELECT CAST(FLOOR((
-            {DET.det_round_sql('ln(CAST(x AS DOUBLE))', 9)}
-            - {DET.det_round_sql('ln(CAST(xk1 AS DOUBLE))', 9)})
-            * 1000000000.0 + 0.5) AS BIGINT) AS t_nano
-        FROM r CROSS JOIN xk1 WHERE i <= 200)
-    SELECT CAST(COUNT(*) AS BIGINT) AS k,
-        CAST(SUM(t_nano) // COUNT(*) AS BIGINT) AS hill_h_nano,
-        {DET.det_round_sql(
-            'CAST(COUNT(*) AS DOUBLE) * 1000000000.0'
-            ' / CAST(SUM(t_nano) AS DOUBLE)', 6
-        )} AS tail_alpha
-    FROM terms
-"""
-
-
-def q_lateness_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Watermark-tuning profile: per event, lateness = (max event time
-    seen so far in ARRIVAL order) - own event time, bucketed by minute
-    (capped at 120) — the out-of-orderness distribution that decides
-    `withWatermark` delay (how much state a given lateness bound would
-    drop).  Arrival order is event_id (the ingest sequence).  The
-    global running max runs through the two-pass distributed prefix
-    max (operators/packing.py::with_global_running_max — prefix-MAX
-    twin of the packing prefix sum; NO single-task window), exact
-    microsecond integers throughout.
-
-    Scale shape: rangepartition by event_id, per-partition maxima
-    prefix-combined at partition cardinality, minute-bucket rollup
-    bounded at 121 rows."""
-    from kafka_firehose_nozzle_spark.operators.packing import (
-        with_global_running_max,
-    )
-
-    ev = _t(spark, sf_dir, "events").select(
-        "event_id",
-        F.expr("unix_micros(CAST(ts AS TIMESTAMP))").alias("t_us"),
-    )
-    rm = with_global_running_max(ev, "event_id", "t_us", "max_seen")
-    tot = rm.agg(F.count(F.lit(1)).alias("n_total"))
-    return (
-        rm.select(
-            F.expr(
-                "LEAST((max_seen - t_us) div 60000000, 120)"
-            ).alias("minute_bucket")
-        )
-        .groupBy("minute_bucket")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "minute_bucket",
-            "n_events",
-            F.expr("n_events * 1000000 div n_total").alias(
-                "share_ppm"
-            ),
-        )
-    )
-
-
-ORACLE_LATENESS = """
-    WITH rm AS (SELECT event_id, epoch_us(ts) AS t_us,
-            MAX(epoch_us(ts)) OVER (ORDER BY event_id
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                AS max_seen
-        FROM events),
-    tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_total FROM rm)
-    SELECT LEAST((max_seen - t_us) // 60000000, 120) AS minute_bucket,
-        CAST(COUNT(*) AS BIGINT) AS n_events,
-        CAST(COUNT(*) AS BIGINT) * 1000000 // n_total AS share_ppm
-    FROM rm CROSS JOIN tot GROUP BY minute_bucket, n_total
-"""
-
-
-def q_media_ahash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Perceptual average-hash over REAL decoded pixels (the
-    multimodal near-dup primitive): spec-complete PNGs (>= 8x8 so
-    every 4x4 block is non-empty) are built per doc, decoded through
-    the pure-stdlib pipeline, and hashed with EXACT integer block
-    means — bit = block_sum * n_pixels > total_sum * n_block, no
-    division anywhere, so the oracle replays the 16-bit hash from the
-    pixel formula and any decode/unfilter/blocking defect flips a bit
-    and hash-mismatches.  See operators/multimodal.py::image_ahash.
-
-    Scale shape: one mapInPandas over payloads, zero shuffle."""
-    from kafka_firehose_nozzle_spark.operators.multimodal import (
-        image_ahash,
-        synthetic_png_pixel_payloads,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    media = synthetic_png_pixel_payloads(
-        docs, base_w=8, mod_w=9, base_h=8, mod_h=6
-    )
-    return image_ahash(media).orderBy("media_id")
-
-
-ORACLE_MEDIA_AHASH = """
-    WITH d AS (SELECT doc_id, 8 + doc_id % 9 AS w, 8 + doc_id % 6 AS h
-        FROM documents),
-    px AS (SELECT doc_id, w, h, xs.x AS x, ys.y AS y,
-            (doc_id + 7 * xs.x + 3 * ys.y) % 256
-              + (2 * doc_id + 5 * xs.x + 11 * ys.y) % 256
-              + (3 * doc_id + xs.x + 13 * ys.y) % 256 AS lum
-        FROM d,
-        unnest(generate_series(0, w - 1)) AS xs(x),
-        unnest(generate_series(0, h - 1)) AS ys(y)),
-    blocks AS (SELECT doc_id, w, h,
-            (y * 4) // h AS by, (x * 4) // w AS bx,
-            CAST(SUM(lum) AS BIGINT) AS bsum,
-            CAST(COUNT(*) AS BIGINT) AS bn
-        FROM px GROUP BY 1, 2, 3, 4, 5),
-    tot AS (SELECT doc_id, CAST(SUM(bsum) AS BIGINT) AS total,
-            CAST(SUM(bn) AS BIGINT) AS n_total
-        FROM blocks GROUP BY doc_id),
-    bits AS (SELECT blocks.doc_id, w, h,
-            CASE WHEN bsum * n_total > total * bn
-                 THEN CAST(1 AS BIGINT) << CAST(by * 4 + bx AS INT)
-                 ELSE 0 END AS bitval,
-            CASE WHEN bsum * n_total > total * bn THEN 1 ELSE 0 END
-                AS one
-        FROM blocks JOIN tot ON blocks.doc_id = tot.doc_id)
-    SELECT doc_id AS media_id, CAST(w AS INT) AS width,
-        CAST(h AS INT) AS height,
-        CAST(SUM(bitval) AS BIGINT) AS ahash16,
-        CAST(SUM(one) AS INT) AS bits_set
-    FROM bits GROUP BY doc_id, w, h ORDER BY media_id
-"""
-
-
-def q_ahash_dedup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Image near-dup dedup via perceptual hashing, evaluated end to
-    end: every doc gets a base PNG (channels mod 200, headroom so no
-    clamping) and a +20-brightness variant at id+1e6; BOTH are real
-    encoded PNGs decoded through the stdlib pipeline and aHashed.
-    aHash is exactly invariant under unclamped constant brightness
-    shift (each bit compares block_sum·n vs total·bn; adding c to
-    every pixel adds c·bn·n to both sides), so exact-match blocking on
-    the 16-bit hash must recover EVERY planted pair — recall_ppm ==
-    1e6 is the oracle-checked invariance proof, and distinct-hash /
-    collision counts report the blocking selectivity.
-
-    Scale shape: one mapInPandas per variant (zero shuffle), an
-    id-equi join of two hash projections, single-row rollup."""
-    from kafka_firehose_nozzle_spark.operators.multimodal import (
-        build_png,
-        image_ahash,
-    )
-    import pandas as _pd
-
-    docs = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("media_id")
-    )
-
-    def make_builder(shift: int, offset: int):
-        def build(batches):
-            for pdf in batches:
-                payloads, ids = [], []
-                for mid in pdf["media_id"]:
-                    mid = int(mid)
-                    w, h = 8 + mid % 9, 8 + mid % 6
-                    payloads.append(
-                        build_png(
-                            w,
-                            h,
-                            lambda x, y, d=mid, s=shift: (
-                                (d + 7 * x + 3 * y) % 200 + s,
-                                (2 * d + 5 * x + 11 * y) % 200 + s,
-                                (3 * d + x + 13 * y) % 200 + s,
-                            ),
-                        )
-                    )
-                    ids.append(mid + offset)
-                yield _pd.DataFrame(
-                    {"media_id": ids, "payload": payloads}
-                )
-
-        return build
-
-    from pyspark.sql import types as _T
-
-    schema = _T.StructType(
-        [
-            _T.StructField("media_id", _T.LongType(), False),
-            _T.StructField("payload", _T.BinaryType(), True),
-        ]
-    )
-    base = docs.mapInPandas(make_builder(0, 0), schema=schema)
-    var = docs.mapInPandas(
-        make_builder(20, _PLANT_OFFSET), schema=schema
-    )
-    ah = image_ahash(base.unionAll(var))
-    b = ah.filter(F.col("media_id") < _PLANT_OFFSET).select(
-        F.col("media_id").alias("mid"), F.col("ahash16").alias("hb")
-    )
-    v = ah.filter(F.col("media_id") >= _PLANT_OFFSET).select(
-        (F.col("media_id") - _PLANT_OFFSET).alias("mid"),
-        F.col("ahash16").alias("hv"),
-    )
-    j = b.join(v, "mid")
-    return j.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(
-            F.expr("CASE WHEN hb = hv THEN 1 ELSE 0 END")
-        ).alias("n_matched"),
-        F.count_distinct("hb").alias("n_distinct_hashes"),
-    ).select(
-        "n_docs",
-        "n_matched",
-        F.expr("n_matched * 1000000 div n_docs").alias("recall_ppm"),
-        "n_distinct_hashes",
-    )
-
-
-def _ahash_oracle_pipeline(alias: str, shift: int) -> str:
-    return f"""
-    px_{alias} AS (SELECT doc_id, w, h, xs.x AS x, ys.y AS y,
-            (doc_id + 7 * xs.x + 3 * ys.y) % 200
-              + (2 * doc_id + 5 * xs.x + 11 * ys.y) % 200
-              + (3 * doc_id + xs.x + 13 * ys.y) % 200
-              + {3 * shift} AS lum
-        FROM d,
-        unnest(generate_series(0, w - 1)) AS xs(x),
-        unnest(generate_series(0, h - 1)) AS ys(y)),
-    blocks_{alias} AS (SELECT doc_id,
-            (y * 4) // h AS by, (x * 4) // w AS bx,
-            CAST(SUM(lum) AS BIGINT) AS bsum,
-            CAST(COUNT(*) AS BIGINT) AS bn
-        FROM px_{alias} GROUP BY 1, 2, 3),
-    tot_{alias} AS (SELECT doc_id, CAST(SUM(bsum) AS BIGINT) AS total,
-            CAST(SUM(bn) AS BIGINT) AS n_total
-        FROM blocks_{alias} GROUP BY doc_id),
-    hash_{alias} AS (SELECT b.doc_id,
-            CAST(SUM(CASE WHEN bsum * n_total > total * bn
-                THEN CAST(1 AS BIGINT) << CAST(by * 4 + bx AS INT)
-                ELSE 0 END) AS BIGINT) AS h
-        FROM blocks_{alias} b JOIN tot_{alias} t
-          ON b.doc_id = t.doc_id
-        GROUP BY b.doc_id)"""
-
-
-ORACLE_AHASH_DEDUP = f"""
-    WITH d AS (SELECT doc_id, 8 + doc_id % 9 AS w, 8 + doc_id % 6 AS h
-        FROM documents),
-    {_ahash_oracle_pipeline('b', 0)},
-    {_ahash_oracle_pipeline('v', 20)},
-    j AS (SELECT hash_b.doc_id, hash_b.h AS hb, hash_v.h AS hv
-        FROM hash_b JOIN hash_v ON hash_b.doc_id = hash_v.doc_id)
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
-        CAST(SUM(CASE WHEN hb = hv THEN 1 ELSE 0 END) AS BIGINT)
-            AS n_matched,
-        CAST(SUM(CASE WHEN hb = hv THEN 1 ELSE 0 END) AS BIGINT)
-            * 1000000 // COUNT(*) AS recall_ppm,
-        CAST(COUNT(DISTINCT hb) AS BIGINT) AS n_distinct_hashes
-    FROM j
-"""
-
-
-def q_graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Degree assortativity of the supplier co-purchase graph (the
-    supplier_triangles edge set, min support 3): Pearson correlation
-    of endpoint degrees over both edge orientations — positive =
-    hub-to-hub trading (failure cascades concentrate), negative =
-    hub-to-periphery.  Exact integer degree moments in DECIMAL(38,0)/
-    HUGEINT, VARCHAR-bridged closed form, det_round(6) (the corr
-    idiom).
-
-    Scale shape: the customer-sharded edge build is the corpus stage;
-    degrees aggregate at vertex cardinality; moments at single-row."""
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    pairs = (
-        li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .select(
-            F.col("o_custkey").alias("cust"),
-            F.col("l_suppkey").alias("supp"),
-        )
-        .distinct()
-    )
-    # localCheckpoint: the customer-sharded edge build feeds four
-    # references (two sym orientations, each consumed by degrees AND
-    # endpoint joins); without pinning it can re-execute per consumer
-    # (the supplier_triangles precedent — same edge set, same trade)
-    edges = G.undirected_edges_min_support(
-        pairs, "cust", "supp", min_support=3
-    ).localCheckpoint()
-    sym = edges.select(
-        F.col("a").alias("u"), F.col("b").alias("v")
-    ).unionAll(
-        edges.select(F.col("b").alias("u"), F.col("a").alias("v"))
-    )
-    deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
-    dec = "DECIMAL(38,0)"
-    # sf10 probe lesson (143 s, volume-linear but join-heavy): the old
-    # plan attached BOTH endpoint degrees to every sym row (two
-    # edge-cardinality joins + an edge-cardinality 6-sum agg). Over the
-    # symmetric orientation set, endpoint x takes value d(u) exactly
-    # d(u) times, so n = Σd, sx = sy = Σd², sxx = syy = Σd³ — pure
-    # VERTEX-cardinality math off the degree table. Only the cross
-    # moment is genuinely pairwise: Σ d(u)·d(v) = Σ_u d(u)·Σ_{v∈N(u)}
-    # d(v) — ONE edge-cardinality join, a vertex agg, a vertex join.
-    # Same exact integers (oracle unchanged), half the heavy stages.
-    dm = deg.agg(
-        F.expr(f"SUM(CAST(d AS {dec}))").alias("n_dec"),
-        F.expr(f"SUM(CAST(d AS {dec}) * d)").alias("sx"),
-        F.expr(f"SUM(CAST(d AS {dec}) * d * d)").alias("sxx"),
-    )
-    dv = deg.select(F.col("u").alias("v"), F.col("d").alias("dy"))
-    nbr = (
-        sym.join(dv, "v")
-        .groupBy("u")
-        # nbr_sum <= max_d * max_d (schema-bounded, ~1e6 worst case
-        # here) — comfortably BIGINT
-        .agg(F.sum("dy").alias("nbr_sum"))
-    )
-    m_sxy = nbr.join(deg, "u").agg(
-        F.expr(f"SUM(CAST(d AS {dec}) * nbr_sum)").alias("sxy")
-    )
-    m = dm.crossJoin(F.broadcast(m_sxy))  # two 1-row frames
-    br = m.select(
-        F.expr("CAST(COALESCE(n_dec, 0) AS BIGINT)").alias("n_endpoints"),
-        F.expr("CAST(COALESCE(n_dec, 0) AS DOUBLE)").alias("dn"),
-        F.expr("CAST(CAST(sx AS STRING) AS DOUBLE)").alias("dsx"),
-        F.expr("CAST(CAST(sx AS STRING) AS DOUBLE)").alias("dsy"),
-        F.expr("CAST(CAST(sxx AS STRING) AS DOUBLE)").alias("dsxx"),
-        F.expr("CAST(CAST(sxx AS STRING) AS DOUBLE)").alias("dsyy"),
-        F.expr("CAST(CAST(sxy AS STRING) AS DOUBLE)").alias("dsxy"),
-    )
-    num = F.col("dn") * F.col("dsxy") - F.col("dsx") * F.col("dsy")
-    den = F.sqrt(
-        (F.col("dn") * F.col("dsxx") - F.col("dsx") * F.col("dsx"))
-        * (F.col("dn") * F.col("dsyy") - F.col("dsy") * F.col("dsy"))
-    )
-    return br.select(
-        "n_endpoints",
-        DET.det_round(num / F.nullif(den, F.lit(0.0)), 6).alias(
-            "assortativity"
-        ),
-    )
-
-
-ORACLE_ASSORTATIVITY = f"""
-    WITH pairs AS MATERIALIZED (
-        SELECT DISTINCT o.o_custkey AS g, l.l_suppkey AS s
-        FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey),
-    edges AS MATERIALIZED (
-        SELECT a.s AS a, b.s AS b
-        FROM pairs a JOIN pairs b ON a.g = b.g AND a.s < b.s
-        GROUP BY 1, 2 HAVING COUNT(*) >= 3),
-    sym AS MATERIALIZED (
-        SELECT a AS u, b AS v FROM edges
-        UNION ALL SELECT b, a FROM edges),
-    deg AS MATERIALIZED (
-        SELECT u, CAST(COUNT(*) AS BIGINT) AS d FROM sym
-        GROUP BY u),
-    xy AS (SELECT du.d AS dx, dv.d AS dy
-        FROM sym JOIN deg du ON sym.u = du.u
-                 JOIN deg dv ON sym.v = dv.u),
-    m AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
-            SUM(CAST(dx AS HUGEINT)) AS sx,
-            SUM(CAST(dy AS HUGEINT)) AS sy,
-            SUM(CAST(dx AS HUGEINT) * dx) AS sxx,
-            SUM(CAST(dy AS HUGEINT) * dy) AS syy,
-            SUM(CAST(dx AS HUGEINT) * dy) AS sxy
-        FROM xy),
-    br AS (SELECT n AS n_endpoints, CAST(n AS DOUBLE) AS dn,
-            CAST(CAST(sx AS VARCHAR) AS DOUBLE) AS dsx,
-            CAST(CAST(sy AS VARCHAR) AS DOUBLE) AS dsy,
-            CAST(CAST(sxx AS VARCHAR) AS DOUBLE) AS dsxx,
-            CAST(CAST(syy AS VARCHAR) AS DOUBLE) AS dsyy,
-            CAST(CAST(sxy AS VARCHAR) AS DOUBLE) AS dsxy
-        FROM m)
-    SELECT n_endpoints,
-        {DET.det_round_sql(
-            '(dn * dsxy - dsx * dsy) / NULLIF('
-            'sqrt((dn * dsxx - dsx * dsx) * (dn * dsyy - dsy * dsy)),'
-            ' 0.0)', 6
-        )} AS assortativity
-    FROM br
-"""
-
-
-# --------------------------------------------------------------------------
-# Wave 6r (round 6, continued): boilerplate shingle curation, positional
-# phrase search, Bradley-Terry preference ranking
-# --------------------------------------------------------------------------
-
-
-def q_boilerplate_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source boilerplate detection, the CCNet-style curation pass:
-    a bigram shingle is boilerplate within a source when it appears in
-    >= max(3, ceil(10%)) of that source's documents (headers, nav
-    chrome, license blurbs repeat across a crawl domain; body text
-    doesn't).  Reports, per source, the boilerplate vocabulary size
-    and how much of an average document it covers — the "how much of
-    this feed is template" number a pretraining-mix owner reads.
-
-    All-integer outputs (counts + exact ppm via integer division) —
-    hash-safe across engines.
-
-    Scale shape: gram explode is token volume (the standard gram
-    class here); the df aggregation partial-combines to (source,
-    gram) cardinality; the flag join is equi on (source, gram) —
-    boilerplate rows join back against gram instances without any
-    broadcast assumption (the boiler side is data-dependent, so it
-    stays a shuffle join and AQE may demote it to broadcast when
-    small).  Docs with <2 tokens carry no shingles and drop out on
-    both engines."""
-    docs = _t(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id",
-        "source",
-        TX.tokens(TX.normalize_text(F.col("text"))).alias("toks"),
-    )
-    grams = toks.select(
-        "doc_id",
-        "source",
-        F.explode(
-            F.when(
-                F.size("toks") >= 2, TX.ngram_strings(F.col("toks"), 2)
-            ).otherwise(F.array().cast("array<string>"))
-        ).alias("gram"),
-    )
-    src = docs.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_src_docs")
-    )
-    gdf = grams.groupBy("source", "gram").agg(
-        F.countDistinct("doc_id").alias("df")
-    )
-    boiler = (
-        gdf.join(F.broadcast(src), "source")
-        .filter(
-            F.col("df")
-            >= F.greatest(F.lit(3), F.expr("(n_src_docs + 9) div 10"))
-        )
-        .select("source", "gram")
-    )
-    flagged = grams.join(
-        boiler.withColumn("is_b", F.lit(1)), ["source", "gram"], "left"
-    )
-    perdoc = flagged.groupBy("source", "doc_id").agg(
-        F.count(F.lit(1)).alias("n_grams"),
-        F.sum(F.coalesce(F.col("is_b"), F.lit(0))).alias("n_boiler"),
-    )
-    agg = perdoc.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_grams").alias("gram_occurrences"),
-        F.sum("n_boiler").alias("boiler_occurrences"),
-        F.expr(
-            "sum(n_boiler * 1000000 div n_grams) div count(*)"
-        ).alias("mean_cov_ppm"),
-    )
-    bs = boiler.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_boiler_grams")
-    )
-    return (
-        agg.join(bs, "source", "left")
-        .select(
-            "source",
-            "n_docs",
-            F.coalesce(F.col("n_boiler_grams"), F.lit(0)).alias(
-                "n_boiler_grams"
-            ),
-            "gram_occurrences",
-            "boiler_occurrences",
-            "mean_cov_ppm",
-        )
-        .orderBy("source")
-    )
-
-
-ORACLE_BOILERPLATE_SHINGLES = f"""
-    WITH t AS (SELECT doc_id, source, {_TOKS} AS toks FROM documents),
-    g AS (SELECT doc_id, source,
-            unnest(list_transform(generate_series(1, len(toks) - 1),
-                i -> toks[i] || ' ' || toks[i + 1])) AS gram
-          FROM t WHERE len(toks) >= 2),
-    src AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_src_docs
-            FROM documents GROUP BY source),
-    gdf AS (SELECT source, gram,
-            CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS df
-        FROM g GROUP BY source, gram),
-    boiler AS (SELECT gdf.source, gram
-        FROM gdf JOIN src ON gdf.source = src.source
-        WHERE df >= GREATEST(3, (n_src_docs + 9) // 10)),
-    flag AS (SELECT g.source, g.doc_id,
-            CASE WHEN b.gram IS NOT NULL THEN 1 ELSE 0 END AS is_b
-        FROM g LEFT JOIN boiler b
-          ON g.source = b.source AND g.gram = b.gram),
-    perdoc AS (SELECT source, doc_id,
-            CAST(COUNT(*) AS BIGINT) AS n_grams,
-            CAST(SUM(is_b) AS BIGINT) AS n_boiler
-        FROM flag GROUP BY source, doc_id),
-    agg AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-            CAST(SUM(n_grams) AS BIGINT) AS gram_occurrences,
-            CAST(SUM(n_boiler) AS BIGINT) AS boiler_occurrences,
-            CAST(SUM(n_boiler * 1000000 // n_grams) AS BIGINT)
-                // COUNT(*) AS mean_cov_ppm
-        FROM perdoc GROUP BY source),
-    bs AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_boiler_grams
-        FROM boiler GROUP BY source)
-    SELECT agg.source, n_docs,
-        CAST(COALESCE(bs.n_boiler_grams, 0) AS BIGINT)
-            AS n_boiler_grams,
-        gram_occurrences, boiler_occurrences,
-        CAST(mean_cov_ppm AS BIGINT) AS mean_cov_ppm
-    FROM agg LEFT JOIN bs ON agg.source = bs.source
-    ORDER BY agg.source
-"""
-
-
-def q_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Positional phrase query ("table value" as ADJACENT tokens) via
-    the positional-inverted-index join: per-term posting lists with
-    positions, intersected on (doc_id, pos+1 = pos) — the classic IR
-    phrase primitive that bag-of-words containment can't answer.
-
-    Scale shape: the token filters cut the exploded postings to
-    single-term lists BEFORE the join (filter-then-join, not
-    join-then-filter); the adjacency condition is folded into the
-    equi-join key (doc_id, p1+1) so Catalyst plans a hash/sort-merge
-    join, never a broadcast-nested-loop on the range predicate."""
-    docs = _t(spark, sf_dir, "documents")
-    pos = docs.select(
-        "doc_id",
-        F.posexplode(
-            TX.tokens(TX.normalize_text(F.col("text")))
-        ).alias("pos", "token"),
-    )
-    t1 = pos.filter(F.col("token") == "table").select(
-        "doc_id",
-        F.col("pos").alias("p1"),
-        (F.col("pos") + 1).alias("pnext"),
-    )
-    t2 = pos.filter(F.col("token") == "value").select(
-        F.col("doc_id").alias("doc_id2"), F.col("pos").alias("p2")
-    )
-    m = t1.join(
-        t2,
-        (t1["doc_id"] == t2["doc_id2"]) & (t1["pnext"] == t2["p2"]),
-    )
-    return (
-        m.groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_matches"),
-            F.min("p1").cast("long").alias("first_pos"),
-        )
-        .orderBy("doc_id")
-    )
-
-
-ORACLE_PHRASE_SEARCH = f"""
-    WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
-    pos AS (SELECT doc_id, u.i AS pos, toks[u.i + 1] AS token
-            FROM t, unnest(range(len(toks))) AS u(i)),
-    t1 AS (SELECT doc_id, pos AS p1 FROM pos WHERE token = 'table'),
-    t2 AS (SELECT doc_id, pos AS p2 FROM pos WHERE token = 'value')
-    SELECT t1.doc_id,
-        CAST(COUNT(*) AS BIGINT) AS n_matches,
-        CAST(MIN(p1) AS BIGINT) AS first_pos
-    FROM t1 JOIN t2 ON t1.doc_id = t2.doc_id AND t2.p2 = t1.p1 + 1
-    GROUP BY t1.doc_id ORDER BY t1.doc_id
-"""
-
-
-def q_bradley_terry_brands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bradley-Terry preference strengths over part brands, the
-    reward-model-data primitive: every within-order pair of lineitems
-    with different brands and strictly different quantities is one
-    duel (higher quantity wins); three exact-integer MM iterations
-    with add-one smoothing produce globally comparable micro-unit
-    strengths.  See operators/ranking.py for the fixed-point contract
-    the oracle replays term for term.
-
-    Scale shape: duel generation is the corpus stage — an equi
-    self-join on l_orderkey (<=21 pairs per 7-line order) partial-
-    aggregating to brand-pair cardinality; the MM solve runs on that
-    bounded matrix (brands are a dim attribute, ~25 values at every
-    TPC-H scale), a bounded collect by construction — the same class
-    as the BPE top-1 / IVF-centroid collects."""
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_linenumber", "l_partkey", "l_quantity"
-    )
-    part = _t(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    lb = li.join(
-        F.broadcast(part), F.col("l_partkey") == F.col("p_partkey")
-    ).select(
-        "l_orderkey",
-        "l_linenumber",
-        F.col("p_brand").alias("brand"),
-        "l_quantity",
-    )
-    duels = RK.duel_matrix(
-        lb, ["l_orderkey"], "brand", "l_quantity", "l_linenumber"
-    )
-    rows = duels.collect()  # bounded: brand-pair cardinality
-    brands = sorted(
-        r["p_brand"] for r in part.select("p_brand").distinct().collect()
-    )
-    obs = {(r["winner"], r["loser"]): int(r["w"]) for r in rows}
-    strength = RK.bradley_terry_micro(brands, obs, iters=3)
-    out = []
-    for x in brands:
-        wins = sum(obs.get((x, y), 0) for y in brands)
-        comps = wins + sum(obs.get((y, x), 0) for y in brands)
-        out.append((x, strength[x], wins, comps))
-    res = spark.createDataFrame(
-        out,
-        "brand STRING, strength_micro LONG, wins LONG, comparisons LONG",
-    )
-    return res.orderBy(F.desc("strength_micro"), "brand")
-
-
-ORACLE_BRADLEY_TERRY = """
-    WITH brands AS MATERIALIZED (SELECT DISTINCT p_brand AS brand FROM part),
-    lb AS MATERIALIZED (SELECT l.l_orderkey AS ok, l.l_linenumber AS ln,
-            p.p_brand AS brand, l.l_quantity AS q
-        FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey),
-    duels AS MATERIALIZED (SELECT
-            CASE WHEN a.q > b.q THEN a.brand ELSE b.brand END AS winner,
-            CASE WHEN a.q > b.q THEN b.brand ELSE a.brand END AS loser,
-            CAST(COUNT(*) AS BIGINT) AS w
-        FROM lb a JOIN lb b ON a.ok = b.ok AND a.ln < b.ln
-        WHERE a.brand <> b.brand AND a.q <> b.q
-        GROUP BY 1, 2),
-    w AS MATERIALIZED (SELECT x.brand AS x, y.brand AS y,
-            CAST(1 + COALESCE(d.w, 0) AS HUGEINT) AS wxy
-        FROM brands x JOIN brands y ON x.brand <> y.brand
-        LEFT JOIN duels d ON d.winner = x.brand AND d.loser = y.brand),
-    n AS MATERIALIZED (SELECT a.x, a.y, a.wxy + b.wxy AS nxy
-        FROM w a JOIN w b ON a.x = b.y AND a.y = b.x),
-    wt AS MATERIALIZED (SELECT x, SUM(wxy) AS bw FROM w GROUP BY x),
-    nb AS (SELECT CAST(COUNT(*) AS HUGEINT) AS b FROM brands),
-    s0 AS (SELECT brand, CAST(1000000 AS HUGEINT) AS s FROM brands),
-    d1 AS (SELECT n.x,
-            SUM(nxy * 1000000000000 // (sx.s + sy.s)) AS den
-        FROM n JOIN s0 sx ON n.x = sx.brand
-               JOIN s0 sy ON n.y = sy.brand GROUP BY n.x),
-    r1 AS (SELECT wt.x AS brand, bw * 1000000000000 // den AS s
-        FROM wt JOIN d1 ON wt.x = d1.x),
-    s1 AS (SELECT brand,
-            s * (SELECT b * 1000000 FROM nb)
-              // (SELECT SUM(s) FROM r1) AS s
-        FROM r1),
-    d2 AS (SELECT n.x,
-            SUM(nxy * 1000000000000 // (sx.s + sy.s)) AS den
-        FROM n JOIN s1 sx ON n.x = sx.brand
-               JOIN s1 sy ON n.y = sy.brand GROUP BY n.x),
-    r2 AS (SELECT wt.x AS brand, bw * 1000000000000 // den AS s
-        FROM wt JOIN d2 ON wt.x = d2.x),
-    s2 AS (SELECT brand,
-            s * (SELECT b * 1000000 FROM nb)
-              // (SELECT SUM(s) FROM r2) AS s
-        FROM r2),
-    d3 AS (SELECT n.x,
-            SUM(nxy * 1000000000000 // (sx.s + sy.s)) AS den
-        FROM n JOIN s2 sx ON n.x = sx.brand
-               JOIN s2 sy ON n.y = sy.brand GROUP BY n.x),
-    r3 AS (SELECT wt.x AS brand, bw * 1000000000000 // den AS s
-        FROM wt JOIN d3 ON wt.x = d3.x),
-    s3 AS (SELECT brand,
-            s * (SELECT b * 1000000 FROM nb)
-              // (SELECT SUM(s) FROM r3) AS s
-        FROM r3),
-    obs_w AS (SELECT winner AS brand, CAST(SUM(w) AS BIGINT) AS wins
-        FROM duels GROUP BY winner),
-    obs_l AS (SELECT loser AS brand, CAST(SUM(w) AS BIGINT) AS losses
-        FROM duels GROUP BY loser),
-    obs AS (SELECT b.brand,
-            CAST(COALESCE(ow.wins, 0) AS BIGINT) AS wins,
-            CAST(COALESCE(ow.wins, 0) + COALESCE(ol.losses, 0)
-                AS BIGINT) AS comparisons
-        FROM brands b
-        LEFT JOIN obs_w ow ON b.brand = ow.brand
-        LEFT JOIN obs_l ol ON b.brand = ol.brand)
-    SELECT s3.brand, CAST(s3.s AS BIGINT) AS strength_micro,
-        obs.wins, obs.comparisons
-    FROM s3 JOIN obs ON s3.brand = obs.brand
-    ORDER BY strength_micro DESC, s3.brand
-"""
-
-
-# --------------------------------------------------------------------------
-# Wave 6s (round 6, continued): Poisson bootstrap, split-conformal
-# calibration, selection-parity fairness audit
-# --------------------------------------------------------------------------
-
-# Poisson(1) CDF in exact ppm (floor), the deterministic-bootstrap draw
-# table shared by the Spark query and the DuckDB oracle: a 60-bit md5
-# draw mod 1e6 inverted through this ladder gives each (doc, replicate)
-# its resample multiplicity.  Tail capped at 8 (P(>8) < 1.2e-6).
-_POISSON1_CDF_PPM = (367879, 735758, 919698, 981011, 996340, 999405,
-                     999916, 999989)
-_PB_REPLICATES = 32
-
-
-def _poisson_weight_case(u_col: str) -> str:
-    branches = " ".join(
-        f"WHEN {u_col} < {t} THEN {k}"
-        for k, t in enumerate(_POISSON1_CDF_PPM)
-    )
-    return f"CASE {branches} ELSE 8 END"
-
-
-def q_poisson_bootstrap_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Poisson bootstrap of mean document length — THE bootstrap that
-    works at 100 TB: classic resampling needs n draws with replacement
-    (a global shuffle per replicate), the Poisson(1) approximation
-    gives every row an independent multiplicity, so all B replicates
-    ride ONE scan as a replicate-spine explode + grouped weighted sum
-    (Chamandy et al., "Estimating uncertainty for massive data
-    streams", public Google TR).  Draws are md5-deterministic, the
-    multiplicity ladder is the shared exact-ppm CDF table, and each
-    replicate mean is an exact integer micro-division — the 32-row
-    output IS the sampling distribution (sort it for CI bounds).
-
-    Scale shape: 32x row blowup in one projection (token-volume
-    class), partial-aggregated per replicate; no shuffle wider than
-    32 groups."""
-    docs = _t(spark, sf_dir, "documents")
-    ex = docs.select(
-        "doc_id",
-        "n_chars",
-        F.explode(
-            F.sequence(F.lit(0), F.lit(_PB_REPLICATES - 1))
-        ).alias("b"),
-    )
-    h = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.col("doc_id").cast("string"),
-                    F.lit("#pb"),
-                    F.col("b").cast("string"),
-                )
-            ),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("long")
-    w = F.expr(_poisson_weight_case("u_ppm"))
-    return (
-        ex.withColumn("u_ppm", h % F.lit(1000000))
-        .withColumn("w", w)
-        .groupBy("b")
-        .agg(
-            F.sum("w").alias("n_eff"),
-            F.sum(F.col("w") * F.col("n_chars")).alias("wsum"),
-        )
-        .select(
-            "b",
-            "n_eff",
-            F.expr("wsum * 1000000 div n_eff").alias("mean_micro"),
-        )
-        .orderBy("b")
-    )
-
-
-ORACLE_POISSON_BOOTSTRAP = f"""
-    WITH ex AS (SELECT doc_id, n_chars, r.b AS b
-        FROM documents,
-             unnest(generate_series(0, {_PB_REPLICATES - 1})) AS r(b)),
-    d AS (SELECT b, n_chars,
-            CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR) || '#pb'
-                || CAST(b AS VARCHAR)), 1, 15)) AS BIGINT)
-                % 1000000 AS u_ppm
-        FROM ex),
-    wtab AS (SELECT b, n_chars,
-            {_poisson_weight_case('u_ppm')} AS w
-        FROM d)
-    SELECT b, CAST(SUM(w) AS BIGINT) AS n_eff,
-        CAST(SUM(w * n_chars) AS BIGINT) * 1000000
-            // CAST(SUM(w) AS BIGINT) AS mean_micro
-    FROM wtab GROUP BY b ORDER BY b
-"""
-
-
-def q_conformal_length_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Split-conformal calibration of a per-source length predictor:
-    even doc_ids calibrate, odd doc_ids test.  The predictor is the
-    calibration mean length per source (exact integer micro);
-    nonconformity is |length - prediction|; q_hat is the
-    ceil((n_cal+1)*0.9)-th smallest calibration residual (the standard
-    split-conformal order statistic, Vovk/Angelopoulos, public), and
-    the test half reports achieved coverage in exact ppm — the
-    distribution-free ~90% guarantee, audited.
-
-    Scale shape: residual ranking is a PARTITIONED window (by source),
-    never a global sort; everything else is two grouped aggregates
-    and a broadcast-size per-source stat join."""
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id", "source", "n_chars"
-    )
-    cal = docs.filter(F.col("doc_id") % 2 == 0)
-    test = docs.filter(F.col("doc_id") % 2 == 1)
-    stats = cal.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_cal"),
-        F.expr("sum(n_chars) * 1000000 div count(*)").alias("pred_micro"),
-    )
-    from pyspark.sql import Window
-
-    res = cal.join(F.broadcast(stats), "source").select(
-        "source",
-        "doc_id",
-        "n_cal",
-        F.abs(
-            F.col("n_chars") * F.lit(1000000) - F.col("pred_micro")
-        ).alias("r"),
-    )
-    wnd = Window.partitionBy("source").orderBy("r", "doc_id")
-    ranked = res.withColumn("rn", F.row_number().over(wnd))
-    qhat = ranked.filter(
-        F.col("rn")
-        == F.least(
-            F.col("n_cal"), F.expr("((n_cal + 1) * 9 + 9) div 10")
-        )
-    ).select("source", "n_cal", F.col("r").alias("q_hat_micro"))
-    cov = (
-        test.join(F.broadcast(stats.select("source", "pred_micro")), "source")
-        .join(F.broadcast(qhat), "source")
-        .groupBy("source", "n_cal", "q_hat_micro")
-        .agg(
-            F.count(F.lit(1)).alias("n_test"),
-            F.sum(
-                F.when(
-                    F.abs(
-                        F.col("n_chars") * F.lit(1000000)
-                        - F.col("pred_micro")
-                    )
-                    <= F.col("q_hat_micro"),
-                    1,
-                ).otherwise(0)
-            ).alias("n_covered"),
-        )
-    )
-    return cov.select(
-        "source",
-        "n_cal",
-        "n_test",
-        "q_hat_micro",
-        F.expr("n_covered * 1000000 div n_test").alias("coverage_ppm"),
-    ).orderBy("source")
-
-
-ORACLE_CONFORMAL = """
-    WITH cal AS (SELECT source, doc_id, n_chars FROM documents
-        WHERE doc_id % 2 = 0),
-    tst AS (SELECT source, doc_id, n_chars FROM documents
-        WHERE doc_id % 2 = 1),
-    stats AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_cal,
-            CAST(SUM(n_chars) AS BIGINT) * 1000000 // COUNT(*)
-                AS pred_micro
-        FROM cal GROUP BY source),
-    res AS (SELECT cal.source, cal.doc_id, s.n_cal,
-            ABS(cal.n_chars * 1000000 - s.pred_micro) AS r,
-            ROW_NUMBER() OVER (PARTITION BY cal.source
-                ORDER BY ABS(cal.n_chars * 1000000 - s.pred_micro),
-                    cal.doc_id) AS rn
-        FROM cal JOIN stats s ON cal.source = s.source),
-    qhat AS (SELECT source, n_cal, r AS q_hat_micro FROM res
-        WHERE rn = LEAST(n_cal, ((n_cal + 1) * 9 + 9) // 10)),
-    cov AS (SELECT t.source, q.n_cal, q.q_hat_micro,
-            CAST(COUNT(*) AS BIGINT) AS n_test,
-            CAST(SUM(CASE WHEN ABS(t.n_chars * 1000000 - s.pred_micro)
-                    <= q.q_hat_micro THEN 1 ELSE 0 END) AS BIGINT)
-                AS n_covered
-        FROM tst t JOIN stats s ON t.source = s.source
-             JOIN qhat q ON t.source = q.source
-        GROUP BY t.source, q.n_cal, q.q_hat_micro)
-    SELECT source, n_cal, n_test, q_hat_micro,
-        n_covered * 1000000 // n_test AS coverage_ppm
-    FROM cov ORDER BY source
-"""
-
-
-def q_selection_parity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fairness audit of the length-based selection filter (demographic
-    parity across sources): selected = doc longer than the corpus mean
-    (exact cross-multiplication — n_chars * n_total > total_chars, no
-    float mean ever forms); per source, the selection rate, its signed
-    gap to the overall rate, and the disparate-impact ratio vs the
-    overall rate, all exact ppm.  The governance screen a curation
-    filter needs before it silently drops a feed.
-
-    Scale shape: one corpus aggregate broadcast back (two scalars),
-    one grouped count — two scans, no shuffle wider than source
-    cardinality."""
-    docs = _t(spark, sf_dir, "documents").select("source", "n_chars")
-    tot = docs.agg(
-        F.count(F.lit(1)).alias("n_total"),
-        F.sum("n_chars").alias("total_chars"),
-    )
-    per = (
-        docs.join(F.broadcast(tot))
-        .groupBy("source", "n_total", "total_chars")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum(
-                F.when(
-                    F.col("n_chars") * F.col("n_total")
-                    > F.col("total_chars"),
-                    1,
-                ).otherwise(0)
-            ).alias("n_sel"),
-        )
-    )
-    from pyspark.sql import Window
-
-    # the empty-frame window runs over the per-SOURCE aggregate (a
-    # handful of rows — source is a bounded dim attribute), never the
-    # corpus; this is the bounded-spine exception to the no-global-
-    # window rule, same as the other source-cardinality rollups here
-    withall = per.withColumn(
-        "overall_sel", F.sum("n_sel").over(Window.partitionBy())
-    )
-    return withall.select(
-        "source",
-        "n_docs",
-        "n_sel",
-        F.expr("n_sel * 1000000 div n_docs").alias("rate_ppm"),
-        F.expr(
-            "n_sel * 1000000 div n_docs"
-            " - overall_sel * 1000000 div n_total"
-        ).alias("gap_ppm"),
-        F.expr(
-            "(n_sel * 1000000 div n_docs) * 1000000"
-            " div (overall_sel * 1000000 div n_total)"
-        ).alias("impact_ratio_ppm"),
-    ).orderBy("source")
-
-
-ORACLE_SELECTION_PARITY = """
-    WITH tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_total,
-            CAST(SUM(n_chars) AS BIGINT) AS total_chars
-        FROM documents),
-    per AS (SELECT source, n_total,
-            CAST(COUNT(*) AS BIGINT) AS n_docs,
-            CAST(SUM(CASE WHEN n_chars * n_total > total_chars
-                THEN 1 ELSE 0 END) AS BIGINT) AS n_sel
-        FROM documents CROSS JOIN tot
-        GROUP BY source, n_total, total_chars),
-    wa AS (SELECT source, n_docs, n_sel, n_total,
-            CAST(SUM(n_sel) OVER () AS BIGINT) AS overall_sel
-        FROM per)
-    SELECT source, n_docs, n_sel,
-        n_sel * 1000000 // n_docs AS rate_ppm,
-        n_sel * 1000000 // n_docs
-            - overall_sel * 1000000 // n_total AS gap_ppm,
-        (n_sel * 1000000 // n_docs) * 1000000
-            // (overall_sel * 1000000 // n_total) AS impact_ratio_ppm
-    FROM wa ORDER BY source
-"""
-
-
-# --------------------------------------------------------------------------
-# Wave 6t (round 6, continued): k-core decomposition, autocorrelation
-# function, windowed PPMI co-occurrence
-# --------------------------------------------------------------------------
-
-_KCORE_K = 3
-_KCORE_ROUNDS = 8
-
-
-def q_kcore_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """K-core decomposition (k=3) of the part co-order graph (parts
-    linked when >= 2 orders contain both — the market-basket graph,
-    which unlike the near-complete supplier co-purchase graph is
-    genuinely sparse: avg degree ~4 at sf0.01): iteratively peel
-    vertices with degree < k until fixpoint — the dense-subgraph
-    backbone extraction that degree filtering alone can't do
-    (removing a low-degree vertex can demote its neighbors).  Fixed
-    {rounds} peel rounds with early exit at the fixpoint; a fixpoint
-    test asserts convergence within the budget
-    (tests/test_operators.py), and extra rounds are no-ops so the
-    oracle (same unrolled rounds) matches regardless.
-
-    Scale shape: per round, one vertex-cardinality agg and two equi
-    joins on shrinking edge sets; localCheckpoint truncates the
-    iteration lineage (the star-contraction precedent) — never a
-    driver collect of graph data."""
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    edges = G.undirected_edges_min_support(
-        li.distinct(), "l_orderkey", "l_partkey", min_support=2
-    )
-    core = (
-        edges.select(F.col("a").alias("u"), F.col("b").alias("v"))
-        .unionAll(
-            edges.select(F.col("b").alias("u"), F.col("a").alias("v"))
-        )
-        .localCheckpoint()
-    )
-    # early exit at the fixpoint: once a round removes no edges, every
-    # later round is a no-op — identical results to the oracle's full
-    # unroll (its extra rounds are no-ops too), at a fraction of the
-    # materializations.  The count rides the eager localCheckpoint each
-    # round already pays.
-    n_edges = core.count()
-    for _ in range(_KCORE_ROUNDS):
-        deg = core.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
-        keep = deg.filter(F.col("d") >= _KCORE_K).select("u")
-        core = (
-            core.join(keep, "u")
-            .join(keep.withColumnRenamed("u", "v"), "v")
-            .select("u", "v")
-            .localCheckpoint()
-        )
-        n_next = core.count()
-        if n_next == n_edges:
-            break
-        n_edges = n_next
-    return (
-        core.groupBy("u")
-        .agg(F.count(F.lit(1)).alias("core_degree"))
-        .select(F.col("u").alias("part"), "core_degree")
-        .orderBy("part")
-    )
-
-
-q_kcore_parts.__doc__ = q_kcore_parts.__doc__.format(
-    rounds=_KCORE_ROUNDS
-)
-
-
-def _kcore_oracle_rounds(k: int, rounds: int) -> str:
-    # every e{i} is MATERIALIZED: each round references its predecessor
-    # three times (degree agg + two semi filters), so default CTE
-    # inlining would expand the chain 3^rounds-fold — enough repeated
-    # parquet scans to exhaust the fd limit
-    ctes = []
-    for i in range(1, rounds + 1):
-        p = i - 1
-        ctes.append(
-            f"""d{i} AS MATERIALIZED (
-        SELECT u, COUNT(*) AS d FROM e{p} GROUP BY u),
-    k{i} AS MATERIALIZED (SELECT u FROM d{i} WHERE d >= {k}),
-    e{i} AS MATERIALIZED (SELECT e{p}.u, e{p}.v FROM e{p}
-        JOIN k{i} a ON e{p}.u = a.u
-        JOIN k{i} b ON e{p}.v = b.u)"""
-        )
-    return ",\n    ".join(ctes)
-
-
-ORACLE_KCORE = f"""
-    WITH pairs AS MATERIALIZED (
-        SELECT DISTINCT l_orderkey AS g, l_partkey AS s FROM lineitem),
-    edges AS MATERIALIZED (SELECT a.s AS a, b.s AS b
-        FROM pairs a JOIN pairs b ON a.g = b.g AND a.s < b.s
-        GROUP BY 1, 2 HAVING COUNT(*) >= 2),
-    e0 AS MATERIALIZED (SELECT a AS u, b AS v FROM edges
-           UNION ALL SELECT b, a FROM edges),
-    {_kcore_oracle_rounds(_KCORE_K, _KCORE_ROUNDS)}
-    SELECT u AS part, CAST(COUNT(*) AS BIGINT) AS core_degree
-    FROM e{_KCORE_ROUNDS} GROUP BY u ORDER BY part
-"""
-
-
-def q_acf_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sample autocorrelation of daily order revenue at lags 1..7 —
-    the weekly-seasonality detector feeding forecast / anomaly
-    thresholds (companion to seasonal_decompose_daily, which ASSUMES
-    a period; this measures it).  Pearson r over (day t, day t-L)
-    pairs on the ZERO-FILLED dense day spine; revenue in exact 4dp
-    fixed point (the DECIMAL(12,4) price idiom), all six moments in
-    DECIMAL(38,0)/HUGEINT, VARCHAR-bridged closed form, det6.
-
-    Scale shape: the corpus stage is one day-cardinality aggregate;
-    the spine (~2.4k rows, bounded by the DATE DOMAIN, never corpus
-    size) explodes x7 lags and equi-joins itself on (day - lag) —
-    dimension-sized work; moments partial-combine to 7 rows."""
-    o = _t(spark, sf_dir, "orders").select(
-        F.expr(
-            "datediff(CAST(o_orderdate AS DATE), DATE'1992-01-01')"
-        ).alias("day"),
-        F.expr(
-            "CAST(CAST(o_totalprice AS DECIMAL(12,4)) * 10000 AS LONG)"
-        ).alias("cents4"),
-    )
-    daily = o.groupBy("day").agg(F.sum("cents4").alias("v"))
-    bounds = daily.agg(
-        F.min("day").alias("d0"), F.max("day").alias("d1")
-    ).head()
-    spine = (
-        spark.range(bounds["d0"], bounds["d1"] + 1)
-        .select(F.col("id").alias("day"))
-        .join(daily, "day", "left")
-        .select("day", F.coalesce("v", F.lit(0)).alias("v"))
-    )
-    lagged = spine.select(
-        "day",
-        "v",
-        F.explode(F.sequence(F.lit(1), F.lit(7))).alias("lag"),
-    ).withColumn("prev_day", F.col("day") - F.col("lag"))
-    prev = spine.select(
-        F.col("day").alias("prev_day"), F.col("v").alias("pv")
-    )
-    xy = lagged.join(prev, "prev_day")
-    dec = "DECIMAL(38,0)"
-    m = xy.groupBy("lag").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.expr(f"SUM(CAST(v AS {dec}))").alias("sx"),
-        F.expr(f"SUM(CAST(pv AS {dec}))").alias("sy"),
-        F.expr(f"SUM(CAST(v AS {dec}) * v)").alias("sxx"),
-        F.expr(f"SUM(CAST(pv AS {dec}) * pv)").alias("syy"),
-        F.expr(f"SUM(CAST(v AS {dec}) * pv)").alias("sxy"),
-    )
-    br = m.select(
-        "lag",
-        F.expr("CAST(n AS BIGINT)").alias("n_pairs"),
-        F.expr("CAST(n AS DOUBLE)").alias("dn"),
-        *[
-            F.expr(f"CAST(CAST({c} AS STRING) AS DOUBLE)").alias("d" + c)
-            for c in ("sx", "sy", "sxx", "syy", "sxy")
-        ],
-    )
-    num = F.col("dn") * F.col("dsxy") - F.col("dsx") * F.col("dsy")
-    den = F.sqrt(
-        (F.col("dn") * F.col("dsxx") - F.col("dsx") * F.col("dsx"))
-        * (F.col("dn") * F.col("dsyy") - F.col("dsy") * F.col("dsy"))
-    )
-    return br.select(
-        "lag",
-        "n_pairs",
-        DET.det_round(num / F.nullif(den, F.lit(0.0)), 6).alias("acf"),
-    ).orderBy("lag")
-
-
-ORACLE_ACF = f"""
-    WITH o AS (SELECT
-            date_diff('day', DATE '1992-01-01',
-                CAST(o_orderdate AS DATE)) AS day,
-            CAST(CAST(o_totalprice AS DECIMAL(12,4)) * 10000 AS BIGINT)
-                AS cents4
-        FROM orders),
-    daily AS (SELECT day, CAST(SUM(cents4) AS BIGINT) AS v
-        FROM o GROUP BY day),
-    bounds AS (SELECT MIN(day) AS d0, MAX(day) AS d1 FROM daily),
-    spine AS (SELECT g.day AS day, COALESCE(daily.v, 0) AS v
-        FROM (SELECT unnest(generate_series(
-                (SELECT d0 FROM bounds), (SELECT d1 FROM bounds)))
-                AS day) g
-        LEFT JOIN daily ON g.day = daily.day),
-    lagged AS (SELECT s.day, s.v, l.lag AS lag, s.day - l.lag AS prev_day
-        FROM spine s, unnest(generate_series(1, 7)) AS l(lag)),
-    xy AS (SELECT lagged.lag, lagged.v AS v, p.v AS pv
-        FROM lagged JOIN spine p ON lagged.prev_day = p.day),
-    m AS (SELECT lag, CAST(COUNT(*) AS BIGINT) AS n,
-            SUM(CAST(v AS HUGEINT)) AS sx,
-            SUM(CAST(pv AS HUGEINT)) AS sy,
-            SUM(CAST(v AS HUGEINT) * v) AS sxx,
-            SUM(CAST(pv AS HUGEINT) * pv) AS syy,
-            SUM(CAST(v AS HUGEINT) * pv) AS sxy
-        FROM xy GROUP BY lag),
-    br AS (SELECT lag, n AS n_pairs, CAST(n AS DOUBLE) AS dn,
-            CAST(CAST(sx AS VARCHAR) AS DOUBLE) AS dsx,
-            CAST(CAST(sy AS VARCHAR) AS DOUBLE) AS dsy,
-            CAST(CAST(sxx AS VARCHAR) AS DOUBLE) AS dsxx,
-            CAST(CAST(syy AS VARCHAR) AS DOUBLE) AS dsyy,
-            CAST(CAST(sxy AS VARCHAR) AS DOUBLE) AS dsxy
-        FROM m)
-    SELECT lag, n_pairs,
-        {DET.det_round_sql(
-            '(dn * dsxy - dsx * dsy) / NULLIF('
-            'sqrt((dn * dsxx - dsx * dsx) * (dn * dsyy - dsy * dsy)),'
-            ' 0.0)', 6
-        )} AS acf
-    FROM br ORDER BY lag
-"""
-
-
-def q_ppmi_window_cooc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Windowed PPMI co-occurrence (the word-embedding prep matrix —
-    Levy & Goldberg showed SGNS factorizes exactly this): unordered
-    token pairs within a +-2 window, min count 5, scored
-    PPMI = max(0, ln cxy + 2 ln n_uni - ln n_pairs - ln cx - ln cy)
-    in log space with the pmi_bigrams operation-order contract
-    (identical left-to-right fold on both engines, det_round(6)).
-    Top 25 by score, pair-string tie-break.
-
-    Scale shape: window pairs come from ZIPPED SHIFTED SLICES (two
-    array ops per doc — never a positional self-join of the corpus);
-    pair counts partial-combine at pair cardinality; margins join at
-    word cardinality; TakeOrdered finish."""
-    docs = _t(spark, sf_dir, "documents")
-    toks = docs.select(
-        TX.tokens(TX.normalize_text(F.col("text"))).alias("toks")
-    )
-
-    def upairs(d: int):
-        m = F.size("toks") - d
-        a = F.slice(F.col("toks"), 1, m)
-        b = F.slice(F.col("toks"), 1 + d, m)
-        pair = F.zip_with(
-            a,
-            b,
-            lambda x, y: F.concat_ws(
-                " ", F.least(x, y), F.greatest(x, y)
-            ),
-        )
-        return F.when(F.size("toks") >= d + 1, pair).otherwise(
-            F.array().cast("array<string>")
-        )
-
-    stats = toks.agg(
-        F.sum(F.size("toks")).alias("nu"),
-        F.sum(
-            F.greatest(F.size("toks") - 1, F.lit(0))
-            + F.greatest(F.size("toks") - 2, F.lit(0))
-        ).alias("np"),
-    ).head()
-    n_uni, n_pairs = stats["nu"], stats["np"]
-    pairs = (
-        toks.select(
-            F.explode(F.concat(upairs(1), upairs(2))).alias("pr")
-        )
-        .groupBy("pr")
-        .agg(F.count(F.lit(1)).alias("cxy"))
-        .filter(F.col("cxy") >= 5)
-    )
-    uni = (
-        toks.select(F.explode("toks").alias("w"))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    parts = pairs.select(
-        "pr",
-        "cxy",
-        F.split(F.col("pr"), " ").getItem(0).alias("x"),
-        F.split(F.col("pr"), " ").getItem(1).alias("y"),
-    )
-    ux = uni.select(F.col("w").alias("x"), F.col("c").alias("cx"))
-    uy = uni.select(F.col("w").alias("y"), F.col("c").alias("cy"))
-    scored = (
-        parts.join(ux, "x")
-        .join(uy, "y")
-        .select(
-            "pr",
-            "cxy",
-            "cx",
-            "cy",
-            DET.det_round(
-                F.greatest(
-                    F.lit(0.0),
-                    F.log(F.col("cxy").cast("double"))
-                    + F.lit(2.0) * F.log(F.lit(float(n_uni)))
-                    - F.log(F.lit(float(n_pairs)))
-                    - F.log(F.col("cx").cast("double"))
-                    - F.log(F.col("cy").cast("double")),
-                ),
-                6,
-            ).alias("ppmi"),
-        )
-    )
-    return scored.orderBy(F.desc("ppmi"), "pr").limit(25)
-
-
-ORACLE_PPMI_COOC = f"""
-    WITH t AS (SELECT {_TOKS} AS toks FROM documents),
-    scal AS (SELECT CAST(SUM(len(toks)) AS BIGINT) AS nu,
-            CAST(SUM(GREATEST(len(toks) - 1, 0)
-                + GREATEST(len(toks) - 2, 0)) AS BIGINT) AS np
-        FROM t),
-    pr AS (
-        SELECT unnest(list_transform(generate_series(1, len(toks) - 1),
-            i -> CASE WHEN toks[i] <= toks[i + 1]
-                 THEN toks[i] || ' ' || toks[i + 1]
-                 ELSE toks[i + 1] || ' ' || toks[i] END)) AS pr
-        FROM t WHERE len(toks) >= 2
-        UNION ALL
-        SELECT unnest(list_transform(generate_series(1, len(toks) - 2),
-            i -> CASE WHEN toks[i] <= toks[i + 2]
-                 THEN toks[i] || ' ' || toks[i + 2]
-                 ELSE toks[i + 2] || ' ' || toks[i] END)) AS pr
-        FROM t WHERE len(toks) >= 3),
-    cp AS (SELECT pr, CAST(COUNT(*) AS BIGINT) AS cxy FROM pr
-        GROUP BY pr HAVING COUNT(*) >= 5),
-    uni AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS c
-        FROM (SELECT unnest(toks) AS w FROM t) GROUP BY w),
-    parts AS (SELECT pr, cxy,
-            string_split(pr, ' ')[1] AS x,
-            string_split(pr, ' ')[2] AS y
-        FROM cp),
-    scored AS (SELECT pr, cxy, ux.c AS cx, uy.c AS cy,
-            {DET.det_round_sql(
-                'GREATEST(0.0, ln(CAST(cxy AS DOUBLE))'
-                ' + 2.0 * ln(CAST((SELECT nu FROM scal) AS DOUBLE))'
-                ' - ln(CAST((SELECT np FROM scal) AS DOUBLE))'
-                ' - ln(CAST(ux.c AS DOUBLE))'
-                ' - ln(CAST(uy.c AS DOUBLE)))', 6
-            )} AS ppmi
-        FROM parts JOIN uni ux ON parts.x = ux.w
-                   JOIN uni uy ON parts.y = uy.w)
-    SELECT pr, cxy, cx, cy, ppmi FROM scored
-    ORDER BY ppmi DESC, pr LIMIT 25
-"""
-
-
-# --------------------------------------------------------------------------
-# Wave 6u (round 6, continued): RAKE keyword extraction, greedy set-cover
-# data selection, label-propagation communities
-# --------------------------------------------------------------------------
-
-_RAKE_STOPS = "('the', 'a', 'of', 'to', 'and', 'in', 'is', 'it', 'for', 'on')"
-
-
-def q_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RAKE keyword extraction (Rose et al. 2010, public): candidate
-    phrases are maximal stopword-delimited token runs; word score =
-    degree/frequency over phrase co-membership (deg = sum of
-    (phrase_len - 1) across a word's phrases); phrase score = sum of
-    its words' scores.  Scores in exact integer ppm (deg * 1e6 div
-    freq, summed) so both engines agree bit-for-bit; top 15 phrases
-    by (score, phrase).
-
-    Scale shape: segment ids come from a PARTITIONED cumulative
-    window (by doc); phrase assembly is a per-(doc, segment) ordered
-    aggregation; word stats partial-combine at word cardinality; the
-    phrase-word score join explodes DISTINCT phrases only."""
-    from pyspark.sql import Window
-
-    docs = _t(spark, sf_dir, "documents")
-    pos = docs.select(
-        "doc_id",
-        F.posexplode(
-            TX.tokens(TX.normalize_text(F.col("text")))
-        ).alias("pos", "token"),
-    ).withColumn("is_stop", F.expr(f"token IN {_RAKE_STOPS}"))
-    wnd = (
-        Window.partitionBy("doc_id")
-        .orderBy("pos")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    seg = pos.withColumn(
-        "seg", F.sum(F.col("is_stop").cast("long")).over(wnd)
-    ).filter(~F.col("is_stop"))
-    phrases = seg.groupBy("doc_id", "seg").agg(
-        F.concat_ws(
-            " ",
-            F.transform(
-                F.sort_array(
-                    F.collect_list(F.struct("pos", "token"))
-                ),
-                lambda s: s["token"],
-            ),
-        ).alias("phrase"),
-        F.count(F.lit(1)).alias("plen"),
-    )
-    words = phrases.select(
-        F.explode(F.split("phrase", " ")).alias("w"),
-        (F.col("plen") - 1).alias("deg1"),
-    )
-    wstat = words.groupBy("w").agg(
-        F.count(F.lit(1)).alias("freq"),
-        F.sum("deg1").alias("deg"),
-    )
-    pdist = phrases.groupBy("phrase").agg(
-        F.count(F.lit(1)).alias("n_occ")
-    )
-    pw = pdist.select(
-        "phrase", "n_occ", F.explode(F.split("phrase", " ")).alias("w")
-    )
-    scored = (
-        pw.join(wstat, "w")
-        .groupBy("phrase", "n_occ")
-        .agg(
-            F.sum(F.expr("deg * 1000000 div freq")).alias("score_ppm")
-        )
-    )
-    return scored.orderBy(
-        F.desc("score_ppm"), "phrase"
-    ).limit(15)
-
-
-ORACLE_RAKE = f"""
-    WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
-    pos AS MATERIALIZED (SELECT doc_id, u.i AS pos, toks[u.i + 1] AS token,
-            toks[u.i + 1] IN {_RAKE_STOPS} AS is_stop
-        FROM t, unnest(range(len(toks))) AS u(i)),
-    seg AS (SELECT doc_id, pos, token,
-            SUM(CASE WHEN is_stop THEN 1 ELSE 0 END)
-                OVER (PARTITION BY doc_id ORDER BY pos
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                AS seg
-        FROM pos),
-    ph AS MATERIALIZED (SELECT doc_id, seg,
-            string_agg(token, ' ' ORDER BY pos) AS phrase,
-            CAST(COUNT(*) AS BIGINT) AS plen
-        FROM seg WHERE token NOT IN {_RAKE_STOPS}
-        GROUP BY doc_id, seg),
-    words AS (SELECT unnest(string_split(phrase, ' ')) AS w,
-            plen - 1 AS deg1
-        FROM ph),
-    wstat AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS freq,
-            CAST(SUM(deg1) AS BIGINT) AS deg
-        FROM words GROUP BY w),
-    pdist AS MATERIALIZED (SELECT phrase, CAST(COUNT(*) AS BIGINT) AS n_occ,
-            ROW_NUMBER() OVER (ORDER BY phrase) AS pid
-        FROM ph GROUP BY phrase),
-    pw AS (SELECT pid, unnest(string_split(phrase, ' ')) AS w
-        FROM pdist),
-    sc AS (SELECT pid,
-            CAST(SUM(deg * 1000000 // freq) AS BIGINT) AS score_ppm
-        FROM pw JOIN wstat ON pw.w = wstat.w GROUP BY pid)
-    SELECT p.phrase, p.n_occ, sc.score_ppm
-    FROM sc JOIN pdist p USING (pid)
-    ORDER BY score_ppm DESC, p.phrase LIMIT 15
-"""
-# sf10 hygiene, A/B-pinned at sf1/sf0.01: pos/ph/pdist MATERIALIZED
-# (each is consumed twice — without the boundary the token-position
-# stream and the phrase table re-run per consumer), and the scoring
-# join/aggregate keyed on integer pid with phrase strings joined back
-# only for the final 15 rows, so no multi-million-row hash table holds
-# phrase text.  NOTE the query's original sf10 "OOM" was NOT volume:
-# glibc mmaps each medium DuckDB block separately and the process hit
-# vm.max_map_count (65,530 maps at just 8.4 GB RSS -> bad_alloc); with
-# the knob raised (see tools/sweep_scale.py) the query runs in ~60 s.
-# The phrase<->pid mapping is 1:1 so the scores are unchanged.
-
-_COVER_STEPS = 8
-
-
-def q_greedy_cover_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Greedy maximum-coverage data selection (the facility-location
-    step instruction-diversity pipelines run): pick, {steps} times,
-    the document covering the most NOT-YET-COVERED distinct bigrams
-    (tie -> smallest doc_id).  The classic (1 - 1/e) greedy; each
-    step reports the marginal gain and the running total.
-
-    Scale shape: per step, one anti-join against the covered-gram
-    set (itself a DataFrame derived from the <= {steps} chosen
-    doc_ids — no gram data ever sits on the driver) and one
-    doc-cardinality count agg; the only driver traffic is the 1-row
-    argmax per step."""
-    docs = _t(spark, sf_dir, "documents")
-    dg = (
-        docs.select(
-            "doc_id",
-            F.explode(
-                F.when(
-                    F.size(
-                        TX.tokens(TX.normalize_text(F.col("text")))
-                    )
-                    >= 2,
-                    TX.ngram_strings(
-                        TX.tokens(TX.normalize_text(F.col("text"))), 2
-                    ),
-                ).otherwise(F.array().cast("array<string>"))
-            ).alias("gram"),
-        )
-        .distinct()
-        .localCheckpoint()
-    )
-    chosen: list[tuple[int, int, int, int]] = []
-    chosen_ids: list[int] = []
-    total = 0
-    for step in range(1, _COVER_STEPS + 1):
-        if chosen_ids:
-            cdf = spark.createDataFrame(
-                [(i,) for i in chosen_ids], "doc_id LONG"
-            )
-            covered = (
-                dg.join(cdf, "doc_id").select("gram").distinct()
-            )
-            unc = dg.join(covered, "gram", "left_anti")
-        else:
-            unc = dg
-        top = (
-            unc.groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("gain"))
-            .orderBy(F.desc("gain"), "doc_id")
-            .head()
-        )
-        if top is None:
-            break
-        total += top["gain"]
-        chosen.append((step, top["doc_id"], top["gain"], total))
-        chosen_ids.append(top["doc_id"])
-    return spark.createDataFrame(
-        chosen,
-        "step LONG, doc_id LONG, gain LONG, total_covered LONG",
-    ).orderBy("step")
-
-
-def _cover_oracle_steps(steps: int) -> str:
-    ctes = []
-    for i in range(1, steps + 1):
-        prev_picks = ", ".join(f"(SELECT doc_id FROM p{j})" for j in range(1, i))
-        if i == 1:
-            unc = "dg"
-        else:
-            cov = f"""cov{i} AS MATERIALIZED (
-        SELECT DISTINCT gram FROM dg
-        WHERE doc_id IN ({prev_picks})),
-    """
-            unc = f"(SELECT dg.* FROM dg LEFT JOIN cov{i} c ON dg.gram = c.gram WHERE c.gram IS NULL)"
-            ctes.append(cov.rstrip().rstrip(","))
-        ctes.append(
-            f"""p{i} AS MATERIALIZED (
-        SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS gain
-        FROM {unc} u GROUP BY doc_id
-        ORDER BY gain DESC, doc_id LIMIT 1)"""
-        )
-    picks = "\n        UNION ALL ".join(
-        f"SELECT {i} AS step, doc_id, gain FROM p{i}"
-        for i in range(1, steps + 1)
-    )
-    return ",\n    ".join(ctes), picks
-
-
-_COVER_CTES, _COVER_PICKS = _cover_oracle_steps(_COVER_STEPS)
-
-ORACLE_GREEDY_COVER = f"""
-    WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
-    dg AS MATERIALIZED (SELECT DISTINCT doc_id,
-            unnest(list_transform(generate_series(1, len(toks) - 1),
-                i -> toks[i] || ' ' || toks[i + 1])) AS gram
-        FROM t WHERE len(toks) >= 2),
-    {_COVER_CTES},
-    picks AS ({_COVER_PICKS})
-    SELECT CAST(step AS BIGINT) AS step, doc_id, gain,
-        CAST(SUM(gain) OVER (ORDER BY step) AS BIGINT)
-            AS total_covered
-    FROM picks ORDER BY step
-"""
-
-q_greedy_cover_docs.__doc__ = q_greedy_cover_docs.__doc__.format(
-    steps=_COVER_STEPS
-)
-
-_LPA_ROUNDS = 4
-
-
-def q_label_prop_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Label-propagation communities on the part co-order graph
-    (support >= 2, the kcore_parts substrate): {rounds} synchronous
-    rounds of mode-of-neighbor-labels with deterministic tie-break
-    (highest count, then smallest label) starting from
-    label = own id; isolated semantics: a vertex keeps its label if
-    it has no neighbors (every vertex here has >= 1 edge by
-    construction).  Output: the 20 largest communities.  Fixed round
-    count on BOTH engines — no convergence test needed for parity
-    (LPA can oscillate; the unrolled oracle replays the same rounds).
-
-    Scale shape: per round, an edge-labels equi join + a
-    (vertex, label) count agg + a vertex-partitioned argmax window;
-    localCheckpoint truncates lineage per round."""
-    from pyspark.sql import Window
-
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    edges = G.undirected_edges_min_support(
-        li.distinct(), "l_orderkey", "l_partkey", min_support=2
-    )
-    sym = (
-        edges.select(F.col("a").alias("u"), F.col("b").alias("v"))
-        .unionAll(
-            edges.select(F.col("b").alias("u"), F.col("a").alias("v"))
-        )
-        .localCheckpoint()
-    )
-    labels = sym.select("u").distinct().select(
-        "u", F.col("u").alias("lbl")
-    )
-    wnd = Window.partitionBy("u").orderBy(
-        F.desc("c"), F.col("nlbl")
-    )
-    for _ in range(_LPA_ROUNDS):
-        nl = (
-            sym.join(
-                labels.select(
-                    F.col("u").alias("v"), F.col("lbl").alias("nlbl")
-                ),
-                "v",
-            )
-            .groupBy("u", "nlbl")
-            .agg(F.count(F.lit(1)).alias("c"))
-        )
-        labels = (
-            nl.withColumn("rn", F.row_number().over(wnd))
-            .filter(F.col("rn") == 1)
-            .select("u", F.col("nlbl").alias("lbl"))
-            .localCheckpoint()
-        )
-    return (
-        labels.groupBy("lbl")
-        .agg(F.count(F.lit(1)).alias("n_members"))
-        .orderBy(F.desc("n_members"), "lbl")
-        .limit(20)
-        .select(F.col("lbl").alias("community"), "n_members")
-    )
-
-
-q_label_prop_communities.__doc__ = q_label_prop_communities.__doc__.format(
-    rounds=_LPA_ROUNDS
-)
-
-
-def _lpa_oracle_rounds(rounds: int) -> str:
-    ctes = []
-    for i in range(1, rounds + 1):
-        p = i - 1
-        ctes.append(
-            f"""nl{i} AS MATERIALIZED (
-        SELECT sym.u, l.lbl AS nlbl, CAST(COUNT(*) AS BIGINT) AS c
-        FROM sym JOIN lbl{p} l ON sym.v = l.u
-        GROUP BY sym.u, l.lbl),
-    lbl{i} AS MATERIALIZED (
-        SELECT u, nlbl AS lbl FROM (
-            SELECT u, nlbl, ROW_NUMBER() OVER (
-                PARTITION BY u ORDER BY c DESC, nlbl) AS rn
-            FROM nl{i})
-        WHERE rn = 1)"""
-        )
-    return ",\n    ".join(ctes)
-
-
-ORACLE_LABEL_PROP = f"""
-    WITH pairs AS MATERIALIZED (
-        SELECT DISTINCT l_orderkey AS g, l_partkey AS s FROM lineitem),
-    edges AS MATERIALIZED (SELECT a.s AS a, b.s AS b
-        FROM pairs a JOIN pairs b ON a.g = b.g AND a.s < b.s
-        GROUP BY 1, 2 HAVING COUNT(*) >= 2),
-    sym AS MATERIALIZED (SELECT a AS u, b AS v FROM edges
-           UNION ALL SELECT b, a FROM edges),
-    lbl0 AS MATERIALIZED (
-        SELECT DISTINCT u, u AS lbl FROM sym),
-    {_lpa_oracle_rounds(_LPA_ROUNDS)}
-    SELECT lbl AS community, CAST(COUNT(*) AS BIGINT) AS n_members
-    FROM lbl{_LPA_ROUNDS} GROUP BY lbl
-    ORDER BY n_members DESC, lbl LIMIT 20
-"""
-
-
-# --------------------------------------------------------------------------
-# Wave 6v (round 6, continued): k-fold balance audit, time-decay scoring,
-# negative-sampling table, mixture interleave schedule
-# --------------------------------------------------------------------------
-
-
-def q_kfold_balance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-validation hygiene: md5-deterministic 5-fold assignment
-    over documents, then a per-fold chi-square statistic against the
-    corpus language distribution — the stratification check that
-    catches an unlucky fold before it skews eval.  Chi-square in
-    exact integer micro via cross-multiplication:
-    term = (o*N - nf*nl)^2 * 1e6 // (nf*nl*N), per-term floor in
-    DECIMAL(38,0)/HUGEINT (order-independent integer sum, overflow-
-    proof at any corpus size).
-
-    Scale shape: one corpus scan to (fold, lang) cardinality; every
-    later join is over <= folds x langs rows."""
-    docs = _t(spark, sf_dir, "documents")
-    fold = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(F.col("doc_id").cast("string"), F.lit("#cv"))
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 5
-    )
-    fl = (
-        docs.select(fold.alias("fold"), "lang")
-        .groupBy("fold", "lang")
-        .agg(F.count(F.lit(1)).alias("o"))
-    )
-    f = fl.groupBy("fold").agg(F.sum("o").alias("nf"))
-    lang = fl.groupBy("lang").agg(F.sum("o").alias("nl"))
-    tot = fl.agg(F.sum("o").alias("nn"))
-    dec = "DECIMAL(38,0)"
-    terms = (
-        fl.join(F.broadcast(f), "fold")
-        .join(F.broadcast(lang), "lang")
-        .join(F.broadcast(tot))
-        .select(
-            "fold",
-            "nf",
-            F.expr(
-                f"CAST((CAST(o AS {dec}) * nn - CAST(nf AS {dec}) * nl)"
-                f" * (CAST(o AS {dec}) * nn - CAST(nf AS {dec}) * nl)"
-                f" * 1000000 div (CAST(nf AS {dec}) * nl * nn) AS BIGINT)"
-            ).alias("term"),
-        )
-    )
-    return (
-        terms.groupBy("fold", "nf")
-        .agg(F.sum("term").alias("chi2_micro"))
-        .select(
-            "fold", F.col("nf").alias("n_docs"), "chi2_micro"
-        )
-        .orderBy("fold")
-    )
-
-
-ORACLE_KFOLD = """
-    WITH d AS (SELECT lang,
-            CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR) || '#cv'),
-                1, 15)) AS BIGINT) % 5 AS fold
-        FROM documents),
-    fl AS (SELECT fold, lang, CAST(COUNT(*) AS BIGINT) AS o
-        FROM d GROUP BY fold, lang),
-    f AS (SELECT fold, CAST(SUM(o) AS BIGINT) AS nf FROM fl
-        GROUP BY fold),
-    lg AS (SELECT lang, CAST(SUM(o) AS BIGINT) AS nl FROM fl
-        GROUP BY lang),
-    tot AS (SELECT CAST(SUM(o) AS BIGINT) AS nn FROM fl),
-    terms AS (SELECT fl.fold, f.nf,
-            CAST((CAST(o AS HUGEINT) * nn - CAST(nf AS HUGEINT) * nl)
-                * (CAST(o AS HUGEINT) * nn - CAST(nf AS HUGEINT) * nl)
-                * 1000000 // (CAST(nf AS HUGEINT) * nl * nn) AS BIGINT)
-                AS term
-        FROM fl JOIN f ON fl.fold = f.fold
-             JOIN lg ON fl.lang = lg.lang
-             CROSS JOIN tot)
-    SELECT fold, nf AS n_docs, CAST(SUM(term) AS BIGINT) AS chi2_micro
-    FROM terms GROUP BY fold, nf ORDER BY fold
-"""
-
-
-def q_time_decay_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exponential time-decay purchase scoring (the feature-store
-    recency feature): each purchase's value is halved per 30 days of
-    age relative to the corpus max timestamp — decay applied as an
-    EXACT integer shift (v4 div 2^k, k = age_days div 30, capped) so
-    every engine agrees bit-for-bit; top 20 users by decayed value.
-
-    Scale shape: the max-ts scalar is one aggregate broadcast back;
-    the scoring is a narrow projection; per-user sum partial-
-    combines; TakeOrdered finish."""
-    ev = _t(spark, sf_dir, "events").filter(
-        F.col("event_type") == "purchase"
-    )
-    mx = ev.agg(F.max("ts").alias("mx"))
-    scored = ev.join(F.broadcast(mx)).select(
-        "user_id",
-        F.expr(
-            "CAST(CAST(value AS DECIMAL(12,4)) * 10000 AS BIGINT)"
-        ).alias("v4"),
-        F.expr(
-            "LEAST(datediff(CAST(mx AS DATE), CAST(ts AS DATE))"
-            " div 30, 20)"
-        ).alias("k"),
-    )
-    return (
-        scored.select(
-            "user_id",
-            F.expr("v4 div shiftleft(CAST(1 AS BIGINT), CAST(k AS INT))").alias(
-                "dv4"
-            ),
-        )
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_purchases"),
-            F.sum("dv4").alias("decayed_value4"),
-        )
-        .orderBy(F.desc("decayed_value4"), "user_id")
-        .limit(20)
-    )
-
-
-ORACLE_TIME_DECAY = """
-    WITH ev AS (SELECT user_id, ts,
-            CAST(CAST(value AS DECIMAL(12,4)) * 10000 AS BIGINT) AS v4
-        FROM events WHERE event_type = 'purchase'),
-    mx AS (SELECT MAX(ts) AS mx FROM ev),
-    scored AS (SELECT user_id, v4,
-            LEAST(date_diff('day', CAST(ts AS DATE),
-                CAST((SELECT mx FROM mx) AS DATE)) // 30, 20) AS k
-        FROM ev)
-    SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_purchases,
-        CAST(SUM(v4 // (CAST(1 AS BIGINT) << CAST(k AS INT)))
-            AS BIGINT) AS decayed_value4
-    FROM scored GROUP BY user_id
-    ORDER BY decayed_value4 DESC, user_id LIMIT 20
-"""
-
-
-def q_negative_sampling_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """word2vec negative-sampling table: unigram counts raised to the
-    3/4 power (Mikolov et al. 2013 — flattens the head so frequent
-    words aren't oversampled), normalized to exact ppm shares.  The
-    fractional power is exp(0.75 ln c) quantized HALF-UP to int64
-    nano-units BEFORE the normalizing sum (the km_survival nano-nat
-    idiom: per-term quantization makes the cross-row sum order-
-    independent and engine-exact); shares are integer divisions of
-    those nanos.
-
-    Scale shape: one token-cardinality aggregate; the weight math is
-    per-row; the normalizer is a single-row sum over word cardinality
-    joined back broadcast."""
-    docs = _t(spark, sf_dir, "documents")
-    uni = (
-        docs.select(
-            F.explode(
-                TX.tokens(TX.normalize_text(F.col("text")))
-            ).alias("w")
-        )
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    wn = uni.select(
-        "w",
-        "c",
-        F.expr(
-            "CAST(FLOOR(exp(0.75 * ln(CAST(c AS DOUBLE)))"
-            " * 1000000000.0 + 0.5) AS BIGINT)"
-        ).alias("w_nano"),
-    )
-    tot = wn.agg(F.sum("w_nano").alias("tot"))
-    return (
-        wn.join(F.broadcast(tot))
-        .select(
-            "w",
-            "c",
-            "w_nano",
-            F.expr(
-                "CAST(CAST(w_nano AS DECIMAL(38,0)) * 1000000"
-                " div tot AS BIGINT)"
-            ).alias("share_ppm"),
-        )
-        .orderBy(F.desc("c"), "w")
-    )
-
-
-ORACLE_NEG_SAMPLING = f"""
-    WITH t AS (SELECT {_TOKS} AS toks FROM documents),
-    uni AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS c
-        FROM (SELECT unnest(toks) AS w FROM t) GROUP BY w),
-    wn AS (SELECT w, c,
-            CAST(FLOOR(exp(0.75 * ln(CAST(c AS DOUBLE)))
-                * 1000000000.0 + 0.5) AS BIGINT) AS w_nano
-        FROM uni),
-    tot AS (SELECT CAST(SUM(w_nano) AS BIGINT) AS tot FROM wn)
-    SELECT w, c, w_nano,
-        CAST(CAST(w_nano AS HUGEINT) * 1000000
-            // (SELECT tot FROM tot) AS BIGINT) AS share_ppm
-    FROM wn ORDER BY c DESC, w
-"""
-
-
-def q_mixture_interleave_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic data-mixing interleave: every source's documents
-    are spread evenly over the global training order by the
-    low-discrepancy position (2*rank - 1) / (2*n_src) — the exact
-    round-robin-proportional schedule a mixture loader replays on any
-    worker without coordination.  Positions in exact 1e12 fixed point
-    (integer cross-multiplication, no float compare); first 50 slots.
-
-    Scale shape: per-source ranks come from a SOURCE-PARTITIONED
-    window; the global order is a TakeOrdered(50), never a global
-    sort."""
-    from pyspark.sql import Window
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "source")
-    ns = docs.groupBy("source").agg(F.count(F.lit(1)).alias("n_src"))
-    wnd = Window.partitionBy("source").orderBy("doc_id")
-    ranked = (
-        docs.join(F.broadcast(ns), "source")
-        .withColumn("rank", F.row_number().over(wnd))
-        .select(
-            "source",
-            "doc_id",
-            "rank",
-            F.expr(
-                "(2 * CAST(rank AS BIGINT) - 1) * 1000000000000"
-                " div (2 * n_src)"
-            ).alias("position_p12"),
-        )
-    )
-    return ranked.orderBy("position_p12", "source", "doc_id").limit(50)
-
-
-ORACLE_MIXTURE_INTERLEAVE = """
-    WITH ns AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_src
-        FROM documents GROUP BY source),
-    ranked AS (SELECT d.source, d.doc_id,
-            CAST(ROW_NUMBER() OVER (PARTITION BY d.source
-                ORDER BY d.doc_id) AS BIGINT) AS rank,
-            ns.n_src
-        FROM documents d JOIN ns ON d.source = ns.source)
-    SELECT source, doc_id, rank,
-        (2 * rank - 1) * 1000000000000 // (2 * n_src) AS position_p12
-    FROM ranked
-    ORDER BY position_p12, source, doc_id LIMIT 50
-"""
-
-
-# --------------------------------------------------------------------------
-# Wave 6w (round 6, continued): Burrows' Delta stylometry, item-item
-# collaborative-filtering cosine (+ session_entry_exit in SHARED_SQL)
-# --------------------------------------------------------------------------
-
-
-def q_burrows_delta_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Burrows' Delta stylometric distance between sources (the
-    authorship-attribution classic, Burrows 2002): per-source relative
-    word frequencies in exact ppm over the DENSE source x word grid
-    (absent words count as 0 — skipping them understates distance),
-    per-word population std via exact integer moments + VARCHAR
-    bridge, and Delta(s,t) = mean_w |f_sw - f_tw| / sigma_w with each
-    term HALF-UP-quantized to int64 nanos BEFORE the word sum (the
-    order-independence idiom); sigma=0 words excluded from term and
-    denominator alike.
-
-    Scale shape: the corpus collapses to (source, word) cardinality
-    in one agg; the dense grid, moments, and the source-pair join all
-    live at dim cardinality (sources x words) — broadcast class."""
-    docs = _t(spark, sf_dir, "documents")
-    cnt = (
-        docs.select(
-            "source",
-            F.explode(
-                TX.tokens(TX.normalize_text(F.col("text")))
-            ).alias("w"),
-        )
-        .groupBy("source", "w")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    totals = cnt.groupBy("source").agg(F.sum("c").alias("t"))
-    words = cnt.select("w").distinct()
-    grid = (
-        totals.crossJoin(F.broadcast(words))
-        .join(cnt, ["source", "w"], "left")
-        .select(
-            "source",
-            "w",
-            F.expr(
-                "COALESCE(c, 0) * 1000000 div t"
-            ).alias("f"),
-        )
-    )
-    mom = grid.groupBy("w").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("f").alias("s1"),
-        F.expr("SUM(CAST(f AS DECIMAL(38,0)) * f)").alias("s2"),
-    )
-    sig = mom.select(
-        "w",
-        F.expr(
-            "CAST(CAST(CAST(n AS DECIMAL(38,0)) * s2"
-            " - CAST(s1 AS DECIMAL(38,0)) * s1 AS STRING) AS DOUBLE)"
-        ).alias("dvar_num"),
-        F.col("n").cast("double").alias("dn"),
-    ).select(
-        "w",
-        (F.sqrt(F.col("dvar_num")) / F.col("dn")).alias("sigma"),
-    )
-    a = grid.select(
-        F.col("source").alias("sa"), "w", F.col("f").alias("fa")
-    )
-    b = grid.select(
-        F.col("source").alias("sb"), "w", F.col("f").alias("fb")
-    )
-    pairs = (
-        a.join(b, "w")
-        .filter(F.col("sa") < F.col("sb"))
-        .join(F.broadcast(sig), "w")
-    )
-    terms = pairs.select(
-        "sa",
-        "sb",
-        F.when(
-            F.col("sigma") > 0.0,
-            F.expr(
-                "CAST(FLOOR(ABS(fa - fb) / sigma"
-                " * 1000000000.0 + 0.5) AS BIGINT)"
-            ),
-        )
-        .otherwise(F.lit(None).cast("long"))
-        .alias("term_nano"),
-    )
-    return (
-        terms.groupBy("sa", "sb")
-        .agg(
-            F.count("term_nano").alias("n_words"),
-            F.expr(
-                "CAST(SUM(term_nano) div COUNT(term_nano) AS BIGINT)"
-            ).alias("delta_nano"),
-        )
-        .orderBy("sa", "sb")
-    )
-
-
-ORACLE_BURROWS_DELTA = f"""
-    WITH t AS (SELECT source, {_TOKS} AS toks FROM documents),
-    cnt AS (SELECT source, w, CAST(COUNT(*) AS BIGINT) AS c
-        FROM (SELECT source, unnest(toks) AS w FROM t)
-        GROUP BY source, w),
-    totals AS (SELECT source, CAST(SUM(c) AS BIGINT) AS tt FROM cnt
-        GROUP BY source),
-    words AS (SELECT DISTINCT w FROM cnt),
-    grid AS (SELECT totals.source, words.w,
-            COALESCE(cnt.c, 0) * 1000000 // totals.tt AS f
-        FROM totals CROSS JOIN words
-        LEFT JOIN cnt ON cnt.source = totals.source
-                     AND cnt.w = words.w),
-    mom AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS n,
-            CAST(SUM(f) AS BIGINT) AS s1,
-            SUM(CAST(f AS HUGEINT) * f) AS s2
-        FROM grid GROUP BY w),
-    sig AS (SELECT w,
-            sqrt(CAST(CAST(CAST(n AS HUGEINT) * s2
-                - CAST(s1 AS HUGEINT) * s1 AS VARCHAR) AS DOUBLE))
-                / CAST(n AS DOUBLE) AS sigma
-        FROM mom),
-    pairs AS (SELECT a.source AS sa, b.source AS sb, a.w,
-            a.f AS fa, b.f AS fb, sig.sigma
-        FROM grid a JOIN grid b ON a.w = b.w AND a.source < b.source
-        JOIN sig ON a.w = sig.w),
-    terms AS (SELECT sa, sb,
-            CASE WHEN sigma > 0.0
-                 THEN CAST(FLOOR(ABS(fa - fb) / sigma
-                     * 1000000000.0 + 0.5) AS BIGINT)
-                 ELSE NULL END AS term_nano
-        FROM pairs)
-    SELECT sa, sb, CAST(COUNT(term_nano) AS BIGINT) AS n_words,
-        CAST(CAST(SUM(term_nano) AS HUGEINT)
-            // COUNT(term_nano) AS BIGINT) AS delta_nano
-    FROM terms GROUP BY sa, sb ORDER BY sa, sb
-"""
-
-
-def q_item_item_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Item-item collaborative filtering over the part co-order
-    bipartite projection: cosine similarity n_uv / sqrt(d_u * d_v)
-    (co-order count normalized by order-degree) — the normalization
-    that separates 'genuinely bought together' from 'both popular'.
-    The double is EXACT-IEEE deterministic (int->double exact below
-    2^53, sqrt and divide correctly rounded — no det_round needed);
-    ranking uses the exact integer key n^2 * 1e12 // (d_u * d_v) so
-    ties cannot reorder across engines.  Top 20.
-
-    Scale shape: same bucketed co-order self-join as kcore_parts
-    (equi on order, pairs bounded per order), degree join at item
-    cardinality, TakeOrdered finish."""
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    pp = li.distinct()
-    deg = pp.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("d"))
-    edges = G.undirected_edges_min_support(
-        pp, "l_orderkey", "l_partkey", min_support=2, keep_support=True
-    ).withColumnRenamed("support", "n_co")
-    da = deg.select(F.col("l_partkey").alias("a"), F.col("d").alias("da"))
-    db = deg.select(F.col("l_partkey").alias("b"), F.col("d").alias("db"))
-    j = edges.join(da, "a").join(db, "b")
-    return (
-        j.select(
-            F.col("a").alias("part_a"),
-            F.col("b").alias("part_b"),
-            F.col("n_co"),
-            F.expr(
-                "CAST(CAST(n_co AS DECIMAL(38,0)) * n_co * 1000000000000"
-                " div (CAST(da AS DECIMAL(38,0)) * db) AS BIGINT)"
-            ).alias("key_p12"),
-            F.expr(
-                "CAST(n_co AS DOUBLE)"
-                " / sqrt(CAST(da * db AS DOUBLE))"
-            ).alias("cosine"),
-        )
-        .orderBy(F.desc("key_p12"), "part_a", "part_b")
-        .limit(20)
-    )
-
-
-ORACLE_ITEM_COSINE = """
-    WITH pp AS MATERIALIZED (SELECT DISTINCT l_orderkey AS g,
-            l_partkey AS p
-        FROM lineitem),
-    deg AS (SELECT p, CAST(COUNT(*) AS BIGINT) AS d FROM pp GROUP BY p),
-    edges AS (SELECT a.p AS a, b.p AS b,
-            CAST(COUNT(*) AS BIGINT) AS n_co
-        FROM pp a JOIN pp b ON a.g = b.g AND a.p < b.p
-        GROUP BY 1, 2 HAVING COUNT(*) >= 2)
-    SELECT e.a AS part_a, e.b AS part_b, e.n_co,
-        CAST(CAST(e.n_co AS HUGEINT) * e.n_co * 1000000000000
-            // (CAST(da.d AS HUGEINT) * db.d) AS BIGINT) AS key_p12,
-        CAST(e.n_co AS DOUBLE)
-            / sqrt(CAST(da.d * db.d AS DOUBLE)) AS cosine
-    FROM edges e JOIN deg da ON e.a = da.p
-                 JOIN deg db ON e.b = db.p
-    ORDER BY key_p12 DESC, part_a, part_b LIMIT 20
-"""
-
-
-# ---------------------------------------------------------------- wave 6x
-
-
-def q_revenue_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Worst below-trend revenue stretch per market segment: build the
-    detrended cumulative series D_i = n*S_i - i*S_n over the DENSE
-    daily spine (the CUSUM series of changepoint_daily), then the
-    classic max-drawdown scan — running peak minus current, maximized,
-    earliest trough on ties, and the peak day that stretch fell from.
-    Where changepoint_daily finds the single break, this measures the
-    DEPTH of the worst sustained slump (peak-to-trough, in cents below
-    trend: dd div n).  All arithmetic is exact DECIMAL(38,0)/HUGEINT;
-    missing days count zero revenue, exactly as in burstiness_fano.
-
-    Scale shape: fact join + agg to (segment, day) cardinality, a
-    calendar-bounded dense spine (segments x days — thousands of rows
-    at ANY corpus size), per-segment prefix windows, and a 5-row
-    trough join.  Spine bounds are one scalar action (the
-    changepoint-bounds idiom)."""
-    from pyspark.sql import Window
-
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer").select(
-        "c_custkey", "c_mktsegment"
-    )
-    daily = (
-        orders.join(cust, orders["o_custkey"] == cust["c_custkey"])
-        .select(
-            "c_mktsegment",
-            F.col("o_orderdate").cast("date").alias("day"),
-            # o_totalprice is parquet DOUBLE: bare CAST(x*100 AS BIGINT)
-            # truncates in Spark but rounds in DuckDB — quantize with
-            # the shared IEEE floor(x*100+0.5) instead
-            F.expr(
-                "CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)"
-            ).alias("cents"),
-        )
-        .groupBy("c_mktsegment", "day")
-        .agg(
-            F.sum(F.expr("CAST(cents AS DECIMAL(38,0))")).alias("rev")
-        )
-    )
-    b = daily.agg(F.min("day").alias("lo"), F.max("day").alias("hi")).head()
-    spine = spark.sql(
-        f"SELECT explode(sequence(DATE'{b['lo']}', DATE'{b['hi']}',"
-        " interval 1 day)) AS day"
-    )
-    dense = (
-        daily.select("c_mktsegment")
-        .distinct()
-        .crossJoin(F.broadcast(spine))
-        .join(daily, ["c_mktsegment", "day"], "left")
-        .select(
-            "c_mktsegment",
-            "day",
-            F.coalesce(F.col("rev"), F.lit(0).cast("decimal(38,0)")).alias(
-                "rev"
-            ),
-        )
-    )
-    w = Window.partitionBy("c_mktsegment").orderBy("day")
-    wall = Window.partitionBy("c_mktsegment")
-    cum = dense.select(
-        "c_mktsegment",
-        "day",
-        F.sum("rev")
-        .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-        .alias("s"),
-        F.row_number().over(w).alias("i"),
-        F.sum("rev").over(wall).alias("sn"),
-        F.count(F.lit(1)).over(wall).alias("n"),
-    )
-    dev = cum.select(
-        "c_mktsegment",
-        "day",
-        "n",
-        F.expr(
-            "CAST(n AS DECIMAL(38,0)) * s - CAST(i AS DECIMAL(38,0)) * sn"
-        ).alias("dev"),
-    )
-    dd = dev.select(
-        "c_mktsegment",
-        "day",
-        "n",
-        "dev",
-        (
-            F.max("dev").over(
-                w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-            )
-            - F.col("dev")
-        ).alias("dd"),
-        F.max("dev")
-        .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-        .alias("peak"),
-    )
-    trough = (
-        dd.withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("c_mktsegment").orderBy(
-                    F.desc("dd"), "day"
-                )
-            ),
-        )
-        .filter(F.col("rn") == 1)
-        .select(
-            "c_mktsegment",
-            F.col("day").alias("trough_day"),
-            "n",
-            F.col("peak").alias("peakval"),
-            F.col("dd").alias("ddmax"),
-        )
-    )
-    j = dd.select("c_mktsegment", "day", "dev").join(
-        F.broadcast(trough), "c_mktsegment"
-    )
-    return (
-        j.filter(
-            (F.col("day") <= F.col("trough_day"))
-            & (F.col("dev") == F.col("peakval"))
-        )
-        .groupBy("c_mktsegment", "n", "trough_day", "ddmax")
-        .agg(F.min("day").alias("peak_day"))
-        .select(
-            "c_mktsegment",
-            F.col("n").cast("bigint").alias("n_days"),
-            # TIMESTAMP emission (the order_calendar idiom): Spark DATE
-            # lands in pandas as object, DuckDB's as datetime64 — the
-            # value hash can't see they're the same day
-            F.col("peak_day").cast("timestamp").alias("peak_day"),
-            F.col("trough_day").cast("timestamp").alias("trough_day"),
-            F.expr("CAST(ddmax div n AS BIGINT)").alias("drawdown_cents"),
-        )
-    )
-
-
-ORACLE_REVENUE_DRAWDOWN = """
-    WITH daily AS (SELECT c_mktsegment AS seg,
-            CAST(o_orderdate AS DATE) AS day,
-            CAST(SUM(CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT))
-                 AS HUGEINT) AS rev
-        FROM orders JOIN customer ON o_custkey = c_custkey
-        GROUP BY 1, 2),
-    bounds AS (SELECT MIN(day) AS lo, MAX(day) AS hi FROM daily),
-    spine AS (SELECT seg, d.day
-        FROM (SELECT DISTINCT seg FROM daily) s
-        CROSS JOIN (SELECT UNNEST(generate_series(lo, hi,
-            INTERVAL 1 DAY))::DATE AS day FROM bounds) d),
-    dense AS (SELECT sp.seg, sp.day, COALESCE(rev, 0) AS rev
-        FROM spine sp LEFT JOIN daily
-            ON daily.seg = sp.seg AND daily.day = sp.day),
-    cum AS (SELECT seg, day,
-            CAST(SUM(rev) OVER w AS HUGEINT) AS s,
-            CAST(ROW_NUMBER() OVER w AS HUGEINT) AS i,
-            CAST(SUM(rev) OVER (PARTITION BY seg) AS HUGEINT) AS sn,
-            CAST(COUNT(*) OVER (PARTITION BY seg) AS HUGEINT) AS n
-        FROM dense
-        WINDOW w AS (PARTITION BY seg ORDER BY day
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-    dev AS (SELECT seg, day, n, n * s - i * sn AS dev FROM cum),
-    dd AS (SELECT seg, day, n, dev,
-            MAX(dev) OVER wp AS peak,
-            MAX(dev) OVER wp - dev AS dd
-        FROM dev
-        WINDOW wp AS (PARTITION BY seg ORDER BY day
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-    trough AS (SELECT seg, day AS trough_day, n, peak AS peakval,
-            dd AS ddmax,
-            ROW_NUMBER() OVER (PARTITION BY seg
-                ORDER BY dd DESC, day) AS rn
-        FROM dd)
-    SELECT t.seg AS c_mktsegment, CAST(t.n AS BIGINT) AS n_days,
-        CAST(MIN(p.day) AS TIMESTAMP) AS peak_day,
-        CAST(t.trough_day AS TIMESTAMP) AS trough_day,
-        CAST(t.ddmax // t.n AS BIGINT) AS drawdown_cents
-    FROM (SELECT * FROM trough WHERE rn = 1) t
-    JOIN dd p ON p.seg = t.seg AND p.day <= t.trough_day
-        AND p.dev = t.peakval
-    GROUP BY t.seg, t.n, t.trough_day, t.ddmax
-"""
-
-
-def q_spearman_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spearman rank correlations among (quantity, extendedprice,
-    discount) — the monotonic-association screen Pearson
-    (lineitem_corr_matrix) misses when the relationship is nonlinear.
-    Average ranks with exact tie handling, kept integral as r2 =
-    2*avg_rank (= 2*cum - cnt + 1 from per-value counts); all ten
-    moment sums run in exact DECIMAL(38,0) (r2 <= 2n, products <= 4n^2
-    — inside DECIMAL(38) past n = 1e11), bridge to double through
-    VARCHAR (the dispersion idiom), one closed-form Pearson-on-ranks
-    per pair, det_round(6).
-
-    Scale shape: NO global row sort — ranks come from per-VALUE counts
-    (groupBy at distinct-value cardinality) cumulated by the two-pass
-    distributed prefix sum (operators/packing.py), then equi-joined
-    back; quantity/discount rank maps broadcast, the price map joins
-    at value cardinality.  One 10-moment partial-combined aggregate
-    finishes."""
-    from kafka_firehose_nozzle_spark.operators.packing import (
-        with_global_running_sum,
-    )
-
-    li = _t(spark, sf_dir, "lineitem")
-    base = li.select("l_quantity", "l_extendedprice", "l_discount")
-    ranked = base
-    for col, tag in (
-        ("l_quantity", "q"),
-        ("l_extendedprice", "p"),
-        ("l_discount", "d"),
-    ):
-        grp = base.groupBy(col).agg(F.count(F.lit(1)).alias("cnt"))
-        cum = with_global_running_sum(grp, col, "cnt", "_cum")
-        r2 = cum.select(
-            col,
-            (2 * F.col("_cum") - F.col("cnt") + 1).alias(f"r2{tag}"),
-        )
-        ranked = ranked.join(r2, col)
-    dec = "DECIMAL(38,0)"
-    m = ranked.agg(
-        F.count(F.lit(1)).alias("n"),
-        *[
-            F.expr(f"SUM(CAST(r2{a} AS {dec}))").alias(f"s{a}")
-            for a in "qpd"
-        ],
-        *[
-            F.expr(f"SUM(CAST(r2{a} AS {dec}) * r2{b})").alias(
-                f"s{a}{b}"
-            )
-            for a, b in ("qq", "pp", "dd", "qp", "qd", "pd")
-        ],
-    )
-    br = m.select(
-        F.col("n").alias("n_rows"),
-        F.expr("CAST(n AS DOUBLE)").alias("dn"),
-        *[
-            F.expr(f"CAST(CAST(s{c} AS STRING) AS DOUBLE)").alias(
-                f"d{c}"
-            )
-            for c in ("q", "p", "d", "qq", "pp", "dd", "qp", "qd", "pd")
-        ],
-    )
-
-    def rho(sab, sa, sb, saa, sbb):
-        num = F.col("dn") * F.col(sab) - F.col(sa) * F.col(sb)
-        den = F.sqrt(
-            (F.col("dn") * F.col(saa) - F.col(sa) * F.col(sa))
-            * (F.col("dn") * F.col(sbb) - F.col(sb) * F.col(sb))
-        )
-        return DET.det_round(num / den, 6)
-
-    return br.select(
-        "n_rows",
-        rho("dqp", "dq", "dp", "dqq", "dpp").alias("rho_qty_price"),
-        rho("dqd", "dq", "dd", "dqq", "ddd").alias("rho_qty_disc"),
-        rho("dpd", "dp", "dd", "dpp", "ddd").alias("rho_price_disc"),
-    )
-
-
-ORACLE_SPEARMAN = f"""
-    WITH r AS (SELECT
-            2*RANK() OVER (ORDER BY l_quantity)
-                + COUNT(*) OVER (PARTITION BY l_quantity) - 1 AS r2q,
-            2*RANK() OVER (ORDER BY l_extendedprice)
-                + COUNT(*) OVER (PARTITION BY l_extendedprice) - 1 AS r2p,
-            2*RANK() OVER (ORDER BY l_discount)
-                + COUNT(*) OVER (PARTITION BY l_discount) - 1 AS r2d
-        FROM lineitem),
-    m AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
-            SUM(CAST(r2q AS HUGEINT)) AS sq,
-            SUM(CAST(r2p AS HUGEINT)) AS sp,
-            SUM(CAST(r2d AS HUGEINT)) AS sd,
-            SUM(CAST(r2q AS HUGEINT) * r2q) AS sqq,
-            SUM(CAST(r2p AS HUGEINT) * r2p) AS spp,
-            SUM(CAST(r2d AS HUGEINT) * r2d) AS sdd,
-            SUM(CAST(r2q AS HUGEINT) * r2p) AS sqp,
-            SUM(CAST(r2q AS HUGEINT) * r2d) AS sqd,
-            SUM(CAST(r2p AS HUGEINT) * r2d) AS spd
-        FROM r),
-    br AS (SELECT n AS n_rows, CAST(n AS DOUBLE) AS dn,
-            CAST(CAST(sq AS VARCHAR(64)) AS DOUBLE) AS dq,
-            CAST(CAST(sp AS VARCHAR(64)) AS DOUBLE) AS dp,
-            CAST(CAST(sd AS VARCHAR(64)) AS DOUBLE) AS dd,
-            CAST(CAST(sqq AS VARCHAR(64)) AS DOUBLE) AS dqq,
-            CAST(CAST(spp AS VARCHAR(64)) AS DOUBLE) AS dpp,
-            CAST(CAST(sdd AS VARCHAR(64)) AS DOUBLE) AS ddd,
-            CAST(CAST(sqp AS VARCHAR(64)) AS DOUBLE) AS dqp,
-            CAST(CAST(sqd AS VARCHAR(64)) AS DOUBLE) AS dqd,
-            CAST(CAST(spd AS VARCHAR(64)) AS DOUBLE) AS dpd
-        FROM m)
-    SELECT n_rows,
-        {DET.det_round_sql(
-            "(dn * dqp - dq * dp) / SQRT((dn * dqq - dq * dq)"
-            " * (dn * dpp - dp * dp))", 6)} AS rho_qty_price,
-        {DET.det_round_sql(
-            "(dn * dqd - dq * dd) / SQRT((dn * dqq - dq * dq)"
-            " * (dn * ddd - dd * dd))", 6)} AS rho_qty_disc,
-        {DET.det_round_sql(
-            "(dn * dpd - dp * dd) / SQRT((dn * dpp - dp * dp)"
-            " * (dn * ddd - dd * dd))", 6)} AS rho_price_disc
-    FROM br
-"""
-
-
-def q_huber_mean_price(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Huber M-estimator of mean extended price via 3 fixed IRLS
-    rounds — the outlier-resistant location estimate (a handful of
-    corrupt billion-unit rows would drag the plain mean arbitrarily;
-    Huber caps their influence at the threshold c).  Fully exact
-    integer pipeline so DuckDB replays it term for term: micro-unit
-    prices; c = 1.345 * mean-absolute-deviation (the textbook 95%%-
-    efficiency constant, scaled on an exact integer dispersion);
-    weights w = min(1, c/|x - m|) quantized to ppm integers BEFORE the
-    weighted sums, which run in DECIMAL(38,0) (w*x <= 1e17/row — safe
-    past 1e20 rows).  Every div is positive-over-positive, so Spark's
-    truncation and DuckDB's floor agree.
-
-    Scale shape: 5 sequential whole-table aggregates (n+mean, MAD, 3
-    IRLS rounds), each a partial-combined single-row agg chained by
-    1-row broadcast crossJoins — the plan is one lazy DAG, the driver
-    never sees data, and iteration count is FIXED (not data-dependent)
-    so the job graph is static."""
-    li = _t(spark, sf_dir, "lineitem").select(
-        # parquet DOUBLE: micro-quantize on the shared IEEE expression,
-        # never bare CAST (Spark truncates, DuckDB rounds)
-        F.expr(
-            "CAST(floor(l_extendedprice * 1000000.0 + 0.5) AS BIGINT)"
-        ).alias("x")
-    )
-    a0 = li.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.expr("CAST(x AS DECIMAL(38,0))")).alias("sx"),
-    )
-    s0 = a0.select("n", F.expr("CAST(sx div n AS BIGINT)").alias("m0"))
-    a1 = (
-        li.crossJoin(F.broadcast(s0))
-        .agg(
-            F.max("n").alias("n"),
-            F.max("m0").alias("m0"),
-            F.sum(F.expr("CAST(abs(x - m0) AS DECIMAL(38,0))")).alias(
-                "sad"
-            ),
-        )
-        .select(
-            "n",
-            "m0",
-            F.expr(
-                "CAST(((sad div n) * 1345) div 1000 AS BIGINT)"
-            ).alias("c"),
-        )
-    )
-    prev = a1.withColumn("m", F.col("m0"))
-    w_expr = (
-        "CASE WHEN x = m THEN CAST(1000000 AS DECIMAL(38,0))"
-        " ELSE LEAST(CAST(1000000 AS DECIMAL(38,0)),"
-        " CAST(c AS DECIMAL(38,0)) * 1000000 div abs(x - m)) END"
-    )
-    for _ in range(3):
-        prev = (
-            li.crossJoin(F.broadcast(prev))
-            .select("x", "n", "m0", "c", F.expr(w_expr).alias("w"))
-            .agg(
-                F.max("n").alias("n"),
-                F.max("m0").alias("m0"),
-                F.max("c").alias("c"),
-                F.expr(
-                    "CAST(SUM(w * x) div SUM(w) AS BIGINT)"
-                ).alias("m"),
-                F.sum("w").alias("sw"),
-            )
-        )
-    return prev.select(
-        "n",
-        F.col("m0").alias("mean_micro"),
-        F.col("c").alias("c_micro"),
-        F.col("m").alias("huber_micro"),
-        F.expr("CAST(sw div n AS BIGINT)").alias("eff_weight_ppm"),
-    )
-
-
-ORACLE_HUBER = """
-    WITH x AS (SELECT
-            CAST(FLOOR(l_extendedprice * 1000000.0 + 0.5) AS BIGINT) AS x
-        FROM lineitem),
-    a0 AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
-            CAST(SUM(CAST(x AS HUGEINT)) AS HUGEINT) AS sx FROM x),
-    s0 AS (SELECT n, CAST(sx // n AS BIGINT) AS m0 FROM a0),
-    a1 AS (SELECT n, m0,
-            CAST(((SUM(CAST(ABS(x - m0) AS HUGEINT)) // n) * 1345)
-                 // 1000 AS BIGINT) AS c
-        FROM x CROSS JOIN s0 GROUP BY n, m0),
-    w1 AS (SELECT n, m0, c,
-            CASE WHEN x = m0 THEN CAST(1000000 AS HUGEINT)
-                 ELSE LEAST(CAST(1000000 AS HUGEINT),
-                     CAST(c AS HUGEINT) * 1000000 // ABS(x - m0)) END
-                AS w, x
-        FROM x CROSS JOIN a1),
-    it1 AS (SELECT n, m0, c,
-            CAST(SUM(w * x) // SUM(w) AS BIGINT) AS m
-        FROM w1 GROUP BY n, m0, c),
-    w2 AS (SELECT n, m0, c, m,
-            CASE WHEN x = m THEN CAST(1000000 AS HUGEINT)
-                 ELSE LEAST(CAST(1000000 AS HUGEINT),
-                     CAST(c AS HUGEINT) * 1000000 // ABS(x - m)) END
-                AS w, x
-        FROM x CROSS JOIN it1),
-    it2 AS (SELECT n, m0, c,
-            CAST(SUM(w * x) // SUM(w) AS BIGINT) AS m
-        FROM w2 GROUP BY n, m0, c),
-    w3 AS (SELECT n, m0, c, m,
-            CASE WHEN x = m THEN CAST(1000000 AS HUGEINT)
-                 ELSE LEAST(CAST(1000000 AS HUGEINT),
-                     CAST(c AS HUGEINT) * 1000000 // ABS(x - m)) END
-                AS w, x
-        FROM x CROSS JOIN it2),
-    it3 AS (SELECT n, m0, c,
-            CAST(SUM(w * x) // SUM(w) AS BIGINT) AS m,
-            CAST(SUM(w) AS HUGEINT) AS sw
-        FROM w3 GROUP BY n, m0, c)
-    SELECT n, m0 AS mean_micro, c AS c_micro, m AS huber_micro,
-        CAST(sw // n AS BIGINT) AS eff_weight_ppm
-    FROM it3
-"""
-
-
-# ---------------------------------------------------------------- wave 6y
-
-# ln(2) as an exact double literal — F.log(F.lit(2.0)) would trust both
-# engines' ln() to round the constant identically; a literal removes
-# the bet entirely
-_LN2 = "0.6931471805599453"
-
-
-def q_js_divergence_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pairwise Jensen-Shannon divergence between source unigram
-    distributions — the distributional-shift matrix a data-mixing run
-    consults before blending corpora (symmetric, bounded by ln 2,
-    defined even where vocabularies don't overlap — the reasons it
-    beats KL here).  Emitted as js2_nano = 2*JS in half-up-quantized
-    nano-nats: each common-word term quantizes to int64 BEFORE the
-    cross-word sum (the markov_entropy_rate idiom — integer addition
-    commutes where a double sum would be partition-order-dependent),
-    and the disjoint-vocabulary tail mass enters in closed form as
-    (1 - overlap) * ln 2 — no full-outer join needed, since a word
-    absent from the other source contributes exactly p*ln2.  Log
-    arguments are exact DECIMAL(38,0) integer products bridged to
-    double through VARCHAR (the dispersion idiom), det_round(9).
-
-    Scale shape: corpus collapses to (source, word) counts in one
-    partial agg; the word self-join produces at most C(sources,2)
-    rows per word (sources are a dim attribute); totals broadcast;
-    the final matrix is pair-cardinality."""
-    docs = _t(spark, sf_dir, "documents")
-    uni = (
-        docs.select(
-            "source",
-            F.explode(
-                TX.tokens(TX.normalize_text(F.col("text")))
-            ).alias("w"),
-        )
-        .groupBy("source", "w")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    tot = uni.groupBy("source").agg(F.sum("c").alias("n"))
-    a = uni.select(
-        F.col("source").alias("sa"), "w", F.col("c").alias("ca")
-    )
-    b = uni.select(
-        F.col("source").alias("sb"), "w", F.col("c").alias("cb")
-    )
-    ta = tot.select(F.col("source").alias("sa"), F.col("n").alias("na"))
-    tb = tot.select(F.col("source").alias("sb"), F.col("n").alias("nb"))
-    j = (
-        a.join(b, "w")
-        .filter(F.col("sa") < F.col("sb"))
-        .join(F.broadcast(ta), "sa")
-        .join(F.broadcast(tb), "sb")
-    )
-
-    def _bridge(prod: str) -> str:
-        # exact integer product -> VARCHAR -> double (correctly-rounded
-        # string parse on both engines; avoids int128->double casts)
-        return f"CAST(CAST({prod} AS STRING) AS DOUBLE)"
-
-    num_a = _bridge("CAST(2 AS DECIMAL(38,0)) * ca * nb")
-    num_b = _bridge("CAST(2 AS DECIMAL(38,0)) * cb * na")
-    den = _bridge(
-        "CAST(ca AS DECIMAL(38,0)) * nb + CAST(cb AS DECIMAL(38,0)) * na"
-    )
-    # ONE ln per term of the exact-integer ratio — subtracting two
-    # separately det-rounded lns doubles the rounding radius to the
-    # nano-boundary flip zone (9 of 190 pairs diverged at authoring
-    # time); ln of the IEEE-exact ratio leaves ~1e-7 nano of margin
-    terms = j.select(
-        "sa",
-        "sb",
-        "ca",
-        "cb",
-        "na",
-        "nb",
-        F.expr(
-            "CAST(FLOOR((CAST(ca AS DOUBLE) / CAST(na AS DOUBLE))"
-            f" * ln({num_a} / {den}) * 1000000000.0 + 0.5) AS BIGINT)"
-        ).alias("tna"),
-        F.expr(
-            "CAST(FLOOR((CAST(cb AS DOUBLE) / CAST(nb AS DOUBLE))"
-            f" * ln({num_b} / {den}) * 1000000000.0 + 0.5) AS BIGINT)"
-        ).alias("tnb"),
-    )
-    agg = terms.groupBy("sa", "sb").agg(
-        F.count(F.lit(1)).alias("n_common"),
-        F.sum(F.col("tna") + F.col("tnb")).alias("common_nano"),
-        F.sum("ca").alias("sca"),
-        F.sum("cb").alias("scb"),
-        F.max("na").alias("na"),
-        F.max("nb").alias("nb"),
-    )
-    tail = (
-        "CAST(FLOOR((CAST(n{s} - sc{s} AS DOUBLE)"
-        f" / CAST(n{{s}} AS DOUBLE)) * {_LN2}"
-        " * 1000000000.0 + 0.5) AS BIGINT)"
-    )
-    return agg.select(
-        F.col("sa").alias("source_a"),
-        F.col("sb").alias("source_b"),
-        "n_common",
-        F.expr(
-            "common_nano + "
-            + tail.format(s="a")
-            + " + "
-            + tail.format(s="b")
-        ).alias("js2_nano"),
-    )
-
-
-def _int_bridge_sql(prod: str) -> str:
-    return f"CAST(CAST({prod} AS VARCHAR) AS DOUBLE)"
-
-
-ORACLE_JS_DIVERGENCE = f"""
-    WITH t AS (SELECT source, {_TOKS} AS toks FROM documents),
-    u AS (SELECT source, unnest(toks) AS w FROM t),
-    uni AS (SELECT source, w, CAST(COUNT(*) AS BIGINT) AS c
-            FROM u GROUP BY 1, 2),
-    tot AS (SELECT source, CAST(SUM(c) AS BIGINT) AS n
-            FROM uni GROUP BY 1),
-    j AS (SELECT a.source AS sa, b.source AS sb, a.c AS ca, b.c AS cb,
-            ta.n AS na, tb.n AS nb
-        FROM uni a JOIN uni b ON a.w = b.w AND a.source < b.source
-        JOIN tot ta ON ta.source = a.source
-        JOIN tot tb ON tb.source = b.source),
-    terms AS (SELECT sa, sb, ca, cb, na, nb,
-            CAST(FLOOR((CAST(ca AS DOUBLE) / CAST(na AS DOUBLE))
-                * LN({_int_bridge_sql("2 * CAST(ca AS HUGEINT) * nb")}
-                     / {_int_bridge_sql(
-                         "CAST(ca AS HUGEINT) * nb"
-                         " + CAST(cb AS HUGEINT) * na"
-                     )})
-                * 1000000000.0 + 0.5) AS BIGINT) AS tna,
-            CAST(FLOOR((CAST(cb AS DOUBLE) / CAST(nb AS DOUBLE))
-                * LN({_int_bridge_sql("2 * CAST(cb AS HUGEINT) * na")}
-                     / {_int_bridge_sql(
-                         "CAST(ca AS HUGEINT) * nb"
-                         " + CAST(cb AS HUGEINT) * na"
-                     )})
-                * 1000000000.0 + 0.5) AS BIGINT) AS tnb
-        FROM j),
-    agg AS (SELECT sa, sb, CAST(COUNT(*) AS BIGINT) AS n_common,
-            CAST(SUM(tna + tnb) AS BIGINT) AS common_nano,
-            CAST(SUM(ca) AS BIGINT) AS sca,
-            CAST(SUM(cb) AS BIGINT) AS scb,
-            MAX(na) AS na, MAX(nb) AS nb
-        FROM terms GROUP BY 1, 2)
-    SELECT sa AS source_a, sb AS source_b, n_common,
-        common_nano
-        + CAST(FLOOR((CAST(na - sca AS DOUBLE) / CAST(na AS DOUBLE))
-            * {_LN2} * 1000000000.0 + 0.5) AS BIGINT)
-        + CAST(FLOOR((CAST(nb - scb AS DOUBLE) / CAST(nb AS DOUBLE))
-            * {_LN2} * 1000000000.0 + 0.5) AS BIGINT)
-        AS js2_nano
-    FROM agg
-"""
-
-
-def q_flesch_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Flesch reading-ease profile per source: 206.835 - 1.015(W/S) -
-    84.6(Syl/W), the readability screen cheap enough to run over a
-    whole pretraining corpus (quality classifiers are models;
-    readability is arithmetic).  Syllables are the standard
-    vowel-group heuristic (runs of [aeiouy], min 1 per word);
-    sentences are [.!?]+ runs, min 1.  The per-doc score is EXACT
-    integer milli-points — 206835 - (1015*W) div S - (84600*Syl)
-    div W, all divisions positive — and the per-source mean uses the
-    sign-safe half-up idiom (scores can go negative on dense text,
-    so neither engine's negative-div convention may be load-bearing).
-
-    Scale shape: per-row expression work (no UDFs — regexp + list
-    higher-order functions), one partial agg to source cardinality."""
-    docs = _t(spark, sf_dir, "documents")
-    toks = TX.tokens(TX.normalize_text(F.col("text")))
-    syl = F.aggregate(
-        F.transform(
-            toks,
-            lambda t: F.greatest(
-                F.lit(1),
-                F.size(
-                    F.regexp_extract_all(t, F.lit("[aeiouy]+"), F.lit(0))
-                ),
-            ),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, s: acc + s,
-    )
-    per = docs.select(
-        "source",
-        syl.alias("syl"),
-        F.size(toks).cast("long").alias("w_cnt"),
-        F.greatest(
-            F.lit(1),
-            F.size(
-                F.regexp_extract_all(
-                    F.col("text"), F.lit("[.!?]+"), F.lit(0)
-                )
-            ),
-        )
-        .cast("long")
-        .alias("s_cnt"),
-    ).filter(F.col("w_cnt") >= 1)
-    scored = per.select(
-        "source",
-        F.expr(
-            "206835 - (1015 * CAST(w_cnt AS BIGINT)) div s_cnt"
-            " - (84600 * CAST(syl AS BIGINT)) div w_cnt"
-        ).alias("score_milli"),
-    )
-    g = scored.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("score_milli").alias("s"),
-        F.min("score_milli").alias("min_milli"),
-        F.max("score_milli").alias("max_milli"),
-    )
-    return g.select(
-        "source",
-        "n_docs",
-        F.expr(
-            "CASE WHEN s >= 0 THEN (s div n_docs)"
-            " + ((s % n_docs) * 2 + n_docs) div (2 * n_docs)"
-            " ELSE -(((-s) div n_docs)"
-            " + (((-s) % n_docs) * 2 + n_docs) div (2 * n_docs)) END"
-        ).alias("mean_milli"),
-        "min_milli",
-        "max_milli",
-    )
-
-
-ORACLE_FLESCH = f"""
-    WITH t AS (SELECT source, text, {_TOKS} AS toks FROM documents),
-    per AS (SELECT source,
-            CAST(list_sum(list_transform(toks, w ->
-                GREATEST(1, len(regexp_extract_all(w, '[aeiouy]+')))))
-                AS BIGINT) AS syl,
-            CAST(len(toks) AS BIGINT) AS w_cnt,
-            CAST(GREATEST(1, len(regexp_extract_all(text, '[.!?]+')))
-                AS BIGINT) AS s_cnt
-        FROM t WHERE len(toks) >= 1),
-    scored AS (SELECT source,
-            206835 - (1015 * w_cnt) // s_cnt
-                   - (84600 * syl) // w_cnt AS score_milli
-        FROM per),
-    g AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-            CAST(SUM(score_milli) AS BIGINT) AS s,
-            CAST(MIN(score_milli) AS BIGINT) AS min_milli,
-            CAST(MAX(score_milli) AS BIGINT) AS max_milli
-        FROM scored GROUP BY 1)
-    SELECT source, n_docs,
-        CAST(CASE WHEN s >= 0 THEN (s // n_docs)
-                + ((s % n_docs) * 2 + n_docs) // (2 * n_docs)
-            ELSE -(((-s) // n_docs)
-                + (((-s) % n_docs) * 2 + n_docs) // (2 * n_docs)) END
-            AS BIGINT) AS mean_milli,
-        min_milli, max_milli
-    FROM g
-"""
-
-
-def q_simpson_diversity_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Simpson diversity of the word distribution per source: D =
-    1 - sum c(c-1) / (n(n-1)), the probability two tokens drawn
-    without replacement differ — the concentration complement to
-    lang_entropy_by_source (entropy weights the tail, Simpson the
-    head; a boilerplate-heavy source scores low here first).  Exact
-    ppm: the collision sum runs in DECIMAL(38,0)/HUGEINT and the
-    share is one integer division — no doubles anywhere.
-
-    Scale shape: one partial agg to (source, word), one rollup to
-    source cardinality."""
-    docs = _t(spark, sf_dir, "documents")
-    uni = (
-        docs.select(
-            "source",
-            F.explode(
-                TX.tokens(TX.normalize_text(F.col("text")))
-            ).alias("w"),
-        )
-        .groupBy("source", "w")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    g = uni.groupBy("source").agg(
-        F.sum("c").alias("n_tokens"),
-        F.count(F.lit(1)).alias("n_types"),
-        F.sum(
-            F.expr("CAST(c AS DECIMAL(38,0)) * (c - 1)")
-        ).alias("coll"),
-    )
-    return g.filter(F.col("n_tokens") >= 2).select(
-        "source",
-        "n_tokens",
-        "n_types",
-        F.expr(
-            "CAST(1000000 - (coll * 1000000)"
-            " div (CAST(n_tokens AS DECIMAL(38,0)) * (n_tokens - 1))"
-            " AS BIGINT)"
-        ).alias("simpson_ppm"),
-    )
-
-
-ORACLE_SIMPSON = f"""
-    WITH t AS (SELECT source, {_TOKS} AS toks FROM documents),
-    u AS (SELECT source, unnest(toks) AS w FROM t),
-    uni AS (SELECT source, w, CAST(COUNT(*) AS BIGINT) AS c
-            FROM u GROUP BY 1, 2),
-    g AS (SELECT source, CAST(SUM(c) AS BIGINT) AS n_tokens,
-            CAST(COUNT(*) AS BIGINT) AS n_types,
-            CAST(SUM(CAST(c AS HUGEINT) * (c - 1)) AS HUGEINT) AS coll
-        FROM uni GROUP BY 1)
-    SELECT source, n_tokens, n_types,
-        CAST(1000000 - (coll * 1000000)
-            // (CAST(n_tokens AS HUGEINT) * (n_tokens - 1))
-            AS BIGINT) AS simpson_ppm
-    FROM g WHERE n_tokens >= 2
-"""
-
-
-# ---------------------------------------------------------------- wave 6z
-
-
-def q_kneser_ney_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Interpolated Kneser-Ney bigram probabilities, top 50 — the
-    smoothing every serious n-gram LM uses (continuation counts fix
-    the 'San Francisco' problem: 'francisco' is frequent but follows
-    almost nothing, so its unigram backoff must be small).  With the
-    textbook discount D = 0.75 every term is rational, so the whole
-    model is ONE exact integer formula per bigram:
-
-        p = ((4*c12 - 3)*T + 3*N1(w1)*Nc(w2)) / (4*c1*T)   [c12 >= 1]
-
-    (N1 = distinct continuations of w1, Nc = distinct left-contexts
-    of w2, T = distinct bigram types; common denominator 4*c1*T),
-    emitted as exact nano-units via DECIMAL(38,0)/HUGEINT — numerator
-    stays under 1e38 past 1e11 tokens x 1e12 types.  Complements
-    bigram_lm_scores (add-one): same count tables, the smoothing the
-    reference model family would actually ship.
-
-    Scale shape: one bigram partial agg (token -> bigram-type
-    cardinality), two vocab-cardinality stat aggs joined back equi,
-    one broadcast scalar (T), TakeOrdered(50) finish."""
-    docs = _t(spark, sf_dir, "documents")
-    toks = TX.tokens(TX.normalize_text(F.col("text")))
-    m = F.size(F.col("toks")) - 1
-    pairs_arr = F.when(
-        m >= 1,
-        F.zip_with(
-            F.slice(F.col("toks"), 1, m),
-            F.slice(F.col("toks"), 2, m),
-            lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
-        ),
-    )
-    pairs = (
-        docs.select(toks.alias("toks"))
-        .select(F.explode_outer(pairs_arr).alias("p"))
-        .filter(F.col("p").isNotNull())
-        .select("p.w1", "p.w2")
-        .groupBy("w1", "w2")
-        .agg(F.count(F.lit(1)).alias("c12"))
-    )
-    left = pairs.groupBy("w1").agg(
-        F.sum("c12").alias("c1"), F.count(F.lit(1)).alias("n1")
-    )
-    right = pairs.groupBy("w2").agg(F.count(F.lit(1)).alias("nc"))
-    types = pairs.agg(F.count(F.lit(1)).alias("t"))
-    j = (
-        pairs.join(left, "w1")
-        .join(right, "w2")
-        .crossJoin(F.broadcast(types))
-    )
-    return (
-        j.select(
-            "w1",
-            "w2",
-            "c12",
-            "n1",
-            "nc",
-            F.expr(
-                "CAST(((CAST(4 AS DECIMAL(38,0)) * c12 - 3) * t"
-                " + CAST(3 AS DECIMAL(38,0)) * n1 * nc) * 1000000000"
-                " div (CAST(4 AS DECIMAL(38,0)) * c1 * t) AS BIGINT)"
-            ).alias("p_kn_nano"),
-        )
-        .orderBy(F.desc("p_kn_nano"), "w1", "w2")
-        .limit(50)
-    )
-
-
-ORACLE_KNESER_NEY = f"""
-    WITH t AS (SELECT {_TOKS} AS toks FROM documents),
-    occ AS (SELECT unnest(list_transform(range(len(toks) - 1), i ->
-                struct_pack(w1 := toks[i + 1], w2 := toks[i + 2]))) AS p
-        FROM t WHERE len(toks) >= 2),
-    pairs AS (SELECT p.w1 AS w1, p.w2 AS w2,
-            CAST(COUNT(*) AS BIGINT) AS c12
-        FROM occ GROUP BY 1, 2),
-    lft AS (SELECT w1, CAST(SUM(c12) AS BIGINT) AS c1,
-            CAST(COUNT(*) AS BIGINT) AS n1
-        FROM pairs GROUP BY 1),
-    rgt AS (SELECT w2, CAST(COUNT(*) AS BIGINT) AS nc
-        FROM pairs GROUP BY 1),
-    ty AS (SELECT CAST(COUNT(*) AS BIGINT) AS t FROM pairs)
-    SELECT pairs.w1, pairs.w2, c12, n1, nc,
-        CAST(((CAST(4 AS HUGEINT) * c12 - 3) * t
-              + CAST(3 AS HUGEINT) * n1 * nc) * 1000000000
-             // (CAST(4 AS HUGEINT) * c1 * t) AS BIGINT) AS p_kn_nano
-    FROM pairs JOIN lft ON pairs.w1 = lft.w1
-               JOIN rgt ON pairs.w2 = rgt.w2
-               CROSS JOIN ty
-    ORDER BY p_kn_nano DESC, pairs.w1, pairs.w2 LIMIT 50
-"""
-
-
-def q_gains_curve_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cumulative gains (lift) curve: rank users by view count
-    descending, cut into deciles, and measure how fast purchasers
-    concentrate in the top — the canonical pre-deployment eval of any
-    targeting score, here applied to the 'views predict purchase'
-    heuristic.  Lift is exact ppm: (cum_pos * n_users * 1e6) div
-    (cum_users * tot_pos) in DECIMAL(38,0).
-
-    Scale shape: user-cardinality agg, then the global rank comes
-    from the two-pass distributed prefix sum over a UNIQUE
-    fixed-width string key (views DESC, user_id ASC — the abc
-    lexicographic encoding, with a constant 1e18 ceiling instead of a
-    data-dependent max so NO scalar action is needed); decile rollup
-    is 10 rows, where the unpartitioned cum window is driver-scale by
-    construction."""
-    from kafka_firehose_nozzle_spark.operators.packing import (
-        with_global_running_sum,
-    )
-    from pyspark.sql import Window
-
-    ev = _t(spark, sf_dir, "events")
-    users = ev.groupBy("user_id").agg(
-        F.count_if(F.col("event_type") == "view").alias("views"),
-        F.count_if(F.col("event_type") == "purchase").alias("purch"),
-    )
-    keyed = users.select(
-        F.concat(
-            F.lpad(
-                (F.lit(1000000000000000000) - F.col("views")).cast(
-                    "string"
-                ),
-                19,
-                "0",
-            ),
-            F.lpad(F.col("user_id").cast("string"), 19, "0"),
-        ).alias("k"),
-        (F.col("purch") > 0).cast("bigint").alias("pos"),
-        F.lit(1).cast("bigint").alias("one"),
-    )
-    ranked = with_global_running_sum(keyed, "k", "one", "rank")
-    tot = users.agg(
-        F.count(F.lit(1)).alias("n_users"),
-        F.count_if(F.col("purch") > 0).alias("tot_pos"),
-    )
-    dec = (
-        ranked.crossJoin(F.broadcast(tot))
-        .select(
-            F.expr("((rank - 1) * 10) div n_users").alias("decile"),
-            "pos",
-            "n_users",
-            "tot_pos",
-        )
-        .groupBy("decile")
-        .agg(
-            F.count(F.lit(1)).alias("n_in_decile"),
-            F.sum("pos").alias("n_pos"),
-            F.max("n_users").alias("n_users"),
-            F.max("tot_pos").alias("tot_pos"),
-        )
-    )
-    w = Window.orderBy("decile").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    return (
-        dec.select(
-            "decile",
-            "n_in_decile",
-            "n_pos",
-            F.sum("n_in_decile").over(w).alias("cum_users"),
-            F.sum("n_pos").over(w).alias("cum_pos"),
-            "n_users",
-            "tot_pos",
-        )
-        .select(
-            "decile",
-            "n_in_decile",
-            "n_pos",
-            "cum_users",
-            "cum_pos",
-            "n_users",
-            "tot_pos",
-            F.expr(
-                "CAST(CAST(cum_pos AS DECIMAL(38,0)) * n_users"
-                " * 1000000 div (CAST(cum_users AS DECIMAL(38,0))"
-                " * tot_pos) AS BIGINT)"
-            ).alias("lift_ppm"),
-        )
-        .orderBy("decile")
-    )
-
-
-ORACLE_GAINS_CURVE = """
-    WITH users AS (SELECT user_id,
-            CAST(COUNT(*) FILTER (WHERE event_type = 'view') AS BIGINT)
-                AS views,
-            CAST(COUNT(*) FILTER (WHERE event_type = 'purchase') AS BIGINT)
-                AS purch
-        FROM events GROUP BY 1),
-    tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_users,
-            CAST(COUNT(*) FILTER (WHERE purch > 0) AS BIGINT) AS tot_pos
-        FROM users),
-    ranked AS (SELECT CASE WHEN purch > 0 THEN 1 ELSE 0 END AS pos,
-            ROW_NUMBER() OVER (ORDER BY views DESC, user_id) AS rank
-        FROM users),
-    dec AS (SELECT ((rank - 1) * 10) // n_users AS decile,
-            CAST(COUNT(*) AS BIGINT) AS n_in_decile,
-            CAST(SUM(pos) AS BIGINT) AS n_pos,
-            MAX(n_users) AS n_users, MAX(tot_pos) AS tot_pos
-        FROM ranked CROSS JOIN tot GROUP BY 1)
-    SELECT decile, n_in_decile, n_pos,
-        CAST(SUM(n_in_decile) OVER w AS BIGINT) AS cum_users,
-        CAST(SUM(n_pos) OVER w AS BIGINT) AS cum_pos,
-        n_users, tot_pos,
-        CAST(CAST(SUM(n_pos) OVER w AS HUGEINT) * n_users * 1000000
-             // (CAST(SUM(n_in_decile) OVER w AS HUGEINT) * tot_pos)
-             AS BIGINT) AS lift_ppm
-    FROM dec
-    WINDOW w AS (ORDER BY decile
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-    ORDER BY decile
-"""
-
-
-def q_propensity_strata_att(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Propensity-stratified treatment-effect estimate (ATT): treated =
-    AUTOMOBILE-segment customers, control = BUILDING, stratified on
-    account balance (fixed $1000 strata — data-independent bucket
-    edges, so no scalar action and no quantile job), outcome = order
-    count.  Within each stratum that has BOTH groups, the mean-outcome
-    difference is weighted by the stratum's treated share — the
-    subclassification estimator (Rosenbaum & Rubin 1984), the
-    scale-correct alternative to 1:1 nearest matching (whose global
-    score sort does not distribute).  Per-stratum means are exact
-    positive integer micro-divisions; the final weighted sum can be
-    negative, so the closing division uses the sign-safe mirrored
-    idiom (neither engine's negative-div convention is load-bearing).
-
-    Scale shape: one customer-cardinality outcome join (orders agg to
-    customer first), one (stratum, group) agg — dozens of rows — and
-    a single-row rollup."""
-    cust = _t(spark, sf_dir, "customer").filter(
-        F.col("c_mktsegment").isin("AUTOMOBILE", "BUILDING")
-    )
-    orders = (
-        _t(spark, sf_dir, "orders")
-        .groupBy("o_custkey")
-        .agg(F.count(F.lit(1)).alias("n_orders"))
-    )
-    base = (
-        cust.join(
-            orders, cust["c_custkey"] == orders["o_custkey"], "left"
-        )
-        .select(
-            (F.col("c_mktsegment") == "AUTOMOBILE")
-            .cast("int")
-            .alias("treated"),
-            F.expr(
-                "(CAST(floor(c_acctbal * 100.0 + 0.5) AS BIGINT)"
-                " + 100000) div 100000"
-            ).alias("stratum"),
-            F.coalesce(F.col("n_orders"), F.lit(0))
-            .cast("bigint")
-            .alias("y"),
-        )
-    )
-    g = base.groupBy("stratum").agg(
-        F.sum(F.expr("CASE WHEN treated = 1 THEN 1 ELSE 0 END")).alias(
-            "n_t"
-        ),
-        F.sum(F.expr("CASE WHEN treated = 0 THEN 1 ELSE 0 END")).alias(
-            "n_c"
-        ),
-        F.sum(F.expr("CASE WHEN treated = 1 THEN y ELSE 0 END")).alias(
-            "sy_t"
-        ),
-        F.sum(F.expr("CASE WHEN treated = 0 THEN y ELSE 0 END")).alias(
-            "sy_c"
-        ),
-    )
-    used = g.filter((F.col("n_t") > 0) & (F.col("n_c") > 0)).select(
-        "n_t",
-        "n_c",
-        F.expr(
-            "n_t * ((sy_t * 1000000) div n_t - (sy_c * 1000000) div n_c)"
-        ).alias("contrib"),
-    )
-    r = used.agg(
-        F.sum("n_t").alias("n_treated"),
-        F.sum("n_c").alias("n_control"),
-        F.count(F.lit(1)).alias("n_strata"),
-        F.sum("contrib").alias("s"),
-    )
-    return r.select(
-        "n_treated",
-        "n_control",
-        "n_strata",
-        F.expr(
-            "CASE WHEN s >= 0 THEN s div n_treated"
-            " ELSE -((-s) div n_treated) END"
-        ).alias("att_micro"),
-    )
-
-
-ORACLE_PROPENSITY_ATT = """
-    WITH o AS (SELECT o_custkey, CAST(COUNT(*) AS BIGINT) AS n_orders
-        FROM orders GROUP BY 1),
-    base AS (SELECT
-            CASE WHEN c_mktsegment = 'AUTOMOBILE' THEN 1 ELSE 0 END
-                AS treated,
-            (CAST(FLOOR(c_acctbal * 100.0 + 0.5) AS BIGINT) + 100000)
-                // 100000 AS stratum,
-            CAST(COALESCE(n_orders, 0) AS BIGINT) AS y
-        FROM customer LEFT JOIN o ON c_custkey = o_custkey
-        WHERE c_mktsegment IN ('AUTOMOBILE', 'BUILDING')),
-    g AS (SELECT stratum,
-            CAST(SUM(CASE WHEN treated = 1 THEN 1 ELSE 0 END) AS BIGINT)
-                AS n_t,
-            CAST(SUM(CASE WHEN treated = 0 THEN 1 ELSE 0 END) AS BIGINT)
-                AS n_c,
-            CAST(SUM(CASE WHEN treated = 1 THEN y ELSE 0 END) AS BIGINT)
-                AS sy_t,
-            CAST(SUM(CASE WHEN treated = 0 THEN y ELSE 0 END) AS BIGINT)
-                AS sy_c
-        FROM base GROUP BY 1),
-    used AS (SELECT n_t, n_c,
-            n_t * ((sy_t * 1000000) // n_t - (sy_c * 1000000) // n_c)
-                AS contrib
-        FROM g WHERE n_t > 0 AND n_c > 0),
-    r AS (SELECT CAST(SUM(n_t) AS BIGINT) AS n_treated,
-            CAST(SUM(n_c) AS BIGINT) AS n_control,
-            CAST(COUNT(*) AS BIGINT) AS n_strata,
-            CAST(SUM(contrib) AS BIGINT) AS s
-        FROM used)
-    SELECT n_treated, n_control, n_strata,
-        CAST(CASE WHEN s >= 0 THEN s // n_treated
-             ELSE -((-s) // n_treated) END AS BIGINT) AS att_micro
-    FROM r
-"""
-
-
-# ---------------------------------------------------------------- wave 7a
-
-
-def q_wav_rms_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Real PCM decode: 16-bit mono WAV payloads with deterministic
-    sample content are parsed back byte-for-byte (RIFF chunk walk,
-    little-endian int16) and reduced to n_samples + the EXACT int64
-    sum of squares; RMS lands in micro-units via the shared IEEE
-    sqrt expression.  The oracle restates the samples arithmetically
-    (sample i of doc d = ((d*31 + i*7919) % 65536) - 32768), so any
-    offset, width, endianness, or chunk-walk defect in the decoder
-    hash-mismatches — the audio twin of png_pixel_stats.
-
-    Scale shape: one Arrow-batched mapInPandas over payloads (bodies
-    are KB-scale by design), zero shuffle; RMS math is per-row SQL."""
-    from kafka_firehose_nozzle_spark.operators.multimodal import (
-        synthetic_pcm_payloads,
-        wav_pcm_stats,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    stats = wav_pcm_stats(synthetic_pcm_payloads(docs))
-    return stats.select(
-        "media_id",
-        "n_samples",
-        "sumsq",
-        F.expr(
-            "CAST(FLOOR(SQRT(CAST(sumsq AS DOUBLE)"
-            " / CAST(n_samples AS DOUBLE)) * 1000000.0 + 0.5)"
-            " AS BIGINT)"
-        ).alias("rms_micro"),
-    ).orderBy("media_id")
-
-
-ORACLE_WAV_RMS = """
-    WITH s AS (SELECT doc_id AS media_id,
-            64 + doc_id % 193 AS n_samples,
-            u.i AS i,
-            ((doc_id * 31 + u.i * 7919) % 65536) - 32768 AS smp
-        FROM documents,
-            UNNEST(generate_series(0, 63 + doc_id % 193)) AS u(i)),
-    g AS (SELECT media_id, MAX(n_samples) AS n_samples,
-            CAST(SUM(CAST(smp AS BIGINT) * smp) AS BIGINT) AS sumsq
-        FROM s GROUP BY 1)
-    SELECT media_id, CAST(n_samples AS BIGINT) AS n_samples, sumsq,
-        CAST(FLOOR(SQRT(CAST(sumsq AS DOUBLE)
-            / CAST(n_samples AS DOUBLE)) * 1000000.0 + 0.5)
-            AS BIGINT) AS rms_micro
-    FROM g ORDER BY media_id
-"""
-
-
-def q_sigma_band_days(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Control-chart audit of daily revenue: classify every day into
-    sigma bands (<=1, 1-2, 2-3, >3 sigma from the all-days mean) with
-    EXACT integer comparisons — (n*x - S)^2 vs k^2*(n*Q - S^2)
-    multiplies the empirical rule out to a common n^2 denominator, so
-    no sqrt, no double, no boundary ambiguity.  Revenue at integer-
-    dollar resolution keeps every square inside DECIMAL(38)/HUGEINT
-    past TPC-H sf 1e5.  The 68/95/99.7 sanity check a monitoring
-    pipeline runs before alerting on 'anomalous' days.
-
-    Scale shape: fact agg to day cardinality, one 3-moment single-row
-    agg broadcast back, a 4-row band rollup."""
-    orders = _t(spark, sf_dir, "orders")
-    daily = (
-        orders.select(
-            F.col("o_orderdate").cast("date").alias("day"),
-            F.expr(
-                "CAST(floor(o_totalprice + 0.5) AS BIGINT)"
-            ).alias("usd"),
-        )
-        .groupBy("day")
-        .agg(F.sum(F.expr("CAST(usd AS DECIMAL(38,0))")).alias("x"))
-    )
-    m = daily.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("x").alias("s"),
-        F.sum(F.expr("x * x")).alias("q"),
-    )
-    banded = daily.crossJoin(F.broadcast(m)).select(
-        F.expr(
-            "CASE WHEN (n*x - s)*(n*x - s) <= (n*q - s*s) THEN 0"
-            " WHEN (n*x - s)*(n*x - s) <= 4*(n*q - s*s) THEN 1"
-            " WHEN (n*x - s)*(n*x - s) <= 9*(n*q - s*s) THEN 2"
-            " ELSE 3 END"
-        ).alias("band"),
-        "n",
-    )
-    return (
-        banded.groupBy("band")
-        .agg(F.count(F.lit(1)).alias("n_days"), F.max("n").alias("n"))
-        .select(
-            "band",
-            "n_days",
-            F.expr(
-                "CAST(n_days * 1000000 div n AS BIGINT)"
-            ).alias("share_ppm"),
-        )
-        .orderBy("band")
-    )
-
-
-ORACLE_SIGMA_BANDS = """
-    WITH daily AS (SELECT CAST(o_orderdate AS DATE) AS day,
-            CAST(SUM(CAST(FLOOR(o_totalprice + 0.5) AS BIGINT))
-                 AS HUGEINT) AS x
-        FROM orders GROUP BY 1),
-    m AS (SELECT CAST(COUNT(*) AS HUGEINT) AS n,
-            CAST(SUM(x) AS HUGEINT) AS s,
-            CAST(SUM(x * x) AS HUGEINT) AS q
-        FROM daily),
-    banded AS (SELECT
-            CASE WHEN (n*x - s)*(n*x - s) <= (n*q - s*s) THEN 0
-                 WHEN (n*x - s)*(n*x - s) <= 4*(n*q - s*s) THEN 1
-                 WHEN (n*x - s)*(n*x - s) <= 9*(n*q - s*s) THEN 2
-                 ELSE 3 END AS band, n
-        FROM daily CROSS JOIN m)
-    SELECT band, CAST(COUNT(*) AS BIGINT) AS n_days,
-        CAST(COUNT(*) * 1000000 // MAX(n) AS BIGINT) AS share_ppm
-    FROM banded GROUP BY band ORDER BY band
-"""
-
-
-def q_cdc_chunk_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Content-defined chunking profile: token-level Rabin-style
-    boundaries (a chunk ends where the token's md5-derived 40-bit
-    value is divisible by 64 — expected chunk ~64 tokens, boundaries
-    survive insertions/deletions unlike fixed-stride windows), rolled
-    up per source: chunks, exact milli mean chunk length, corpus max.
-    The chunk-size health report for CDC-based dedup/storage (a
-    source whose mean drifts far from 64 has pathological token
-    distribution — same md5-int idiom as winnow_fingerprints).
-
-    Scale shape: per-row list expressions (boundaries + chunk lengths
-    never leave the row), one agg to source cardinality."""
-    docs = _t(spark, sf_dir, "documents")
-    toks = TX.tokens(TX.normalize_text(F.col("text")))
-    staged = docs.select("source", toks.alias("toks")).filter(
-        F.size(F.col("toks")) >= 1
-    )
-    bounds = F.filter(
-        F.sequence(F.lit(1), F.size(F.col("toks"))),
-        lambda i: F.conv(
-            F.substring(F.md5(F.element_at(F.col("toks"), i)), 1, 10),
-            16,
-            10,
-        ).cast("long")
-        % 64
-        == 0,
-    )
-    st = staged.select(
-        "source",
-        F.size(F.col("toks")).cast("long").alias("n_toks"),
-        bounds.alias("b"),
-    )
-    lens = F.filter(
-        F.zip_with(
-            F.concat(F.array(F.lit(0)), F.col("b")),
-            F.concat(F.col("b"), F.array(F.col("n_toks").cast("int"))),
-            lambda s, e: e - s,
-        ),
-        lambda x: x > 0,
-    )
-    per = st.select(
-        "source",
-        "n_toks",
-        F.size(lens).cast("long").alias("n_chunks"),
-        F.array_max(lens).cast("long").alias("max_chunk"),
-    )
-    return (
-        per.groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_toks").alias("n_tokens"),
-            F.sum("n_chunks").alias("n_chunks"),
-            F.max("max_chunk").alias("max_chunk"),
-        )
-        .select(
-            "source",
-            "n_docs",
-            "n_tokens",
-            "n_chunks",
-            F.expr(
-                "CAST(n_tokens * 1000 div n_chunks AS BIGINT)"
-            ).alias("mean_chunk_milli"),
-            "max_chunk",
-        )
-    )
-
-
-ORACLE_CDC_CHUNKS = f"""
-    WITH t AS (SELECT source, {_TOKS} AS toks FROM documents),
-    st AS (SELECT source, toks, CAST(len(toks) AS BIGINT) AS n_toks,
-            list_filter(generate_series(1, len(toks)), i ->
-                ('0x' || substr(md5(toks[i]), 1, 10))::BIGINT % 64 = 0)
-                AS b
-        FROM t WHERE len(toks) >= 1),
-    per AS (SELECT source, n_toks,
-            CAST(len(list_filter(
-                list_transform(generate_series(1, len(b) + 1), k ->
-                    list_append(b, CAST(n_toks AS BIGINT))[k]
-                    - list_prepend(0, b)[k]),
-                x -> x > 0)) AS BIGINT) AS n_chunks,
-            CAST(list_max(list_filter(
-                list_transform(generate_series(1, len(b) + 1), k ->
-                    list_append(b, CAST(n_toks AS BIGINT))[k]
-                    - list_prepend(0, b)[k]),
-                x -> x > 0)) AS BIGINT) AS max_chunk
-        FROM st)
-    SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-        CAST(SUM(n_toks) AS BIGINT) AS n_tokens,
-        CAST(SUM(n_chunks) AS BIGINT) AS n_chunks,
-        CAST(SUM(n_toks) * 1000 // SUM(n_chunks) AS BIGINT)
-            AS mean_chunk_milli,
-        CAST(MAX(max_chunk) AS BIGINT) AS max_chunk
-    FROM per GROUP BY 1
-"""
-
-
-# ---------------------------------------------------------------- wave 7b
-
-
-def q_pq_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Accuracy eval of the PQ compressed index: recall@10 of the ADC
-    top-10 (pq_ann_topk) against the exact brute-force cosine top-10
-    (ann_cosine_topk) for the same query vector — the number that
-    decides whether 16x IO compression is worth it.  Completes the
-    eval family: lsh_recall_eval grades the dedup blocker,
-    hll_error_audit the sketches, THIS grades the vector index.
-
-    Scale shape: both rankings are bounded TakeOrdered(10) plans over
-    the scan; the overlap is a 10-row left-semi join; three 1-row
-    broadcast aggregates."""
-    pq10 = q_pq_ann_topk(spark, sf_dir).select("vec_id")
-    ex10 = q_ann_cosine_topk(spark, sf_dir).select("vec_id")
-    hits = ex10.join(pq10, "vec_id", "left_semi")
-    r = (
-        ex10.agg(F.count(F.lit(1)).alias("n_exact"))
-        .crossJoin(
-            F.broadcast(pq10.agg(F.count(F.lit(1)).alias("n_pq")))
-        )
-        .crossJoin(
-            F.broadcast(hits.agg(F.count(F.lit(1)).alias("n_overlap")))
-        )
-    )
-    return r.select(
-        "n_exact",
-        "n_pq",
-        "n_overlap",
-        F.expr("n_overlap * 1000000 div n_exact").alias("recall_ppm"),
-    )
-
-
-ORACLE_PQ_RECALL = f"""
-    SELECT n_exact, n_pq, n_overlap,
-        n_overlap * 1000000 // n_exact AS recall_ppm
-    FROM (SELECT CAST(COUNT(*) AS BIGINT) AS n_exact
-          FROM ({ORACLE_ANN}) a)
-    CROSS JOIN (SELECT CAST(COUNT(*) AS BIGINT) AS n_pq
-                FROM ({ORACLE_PQ_ANN}) p)
-    CROSS JOIN (SELECT CAST(COUNT(*) AS BIGINT) AS n_overlap
-                FROM ({ORACLE_ANN}) a JOIN ({ORACLE_PQ_ANN}) p
-                ON a.vec_id = p.vec_id)
-"""
-
-
-def q_seasonal_naive_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Forecast backtest per event type: the seasonal-naive baseline
-    (predict today = same weekday last week) over the DENSE daily
-    spine, scored with exact integer error metrics — MAE in milli-
-    events, WAPE in ppm (the division-safe MAPE replacement: zero-
-    count days are legal on a dense spine), and signed bias.  Any
-    fancier forecaster has to beat THIS row before it ships; the
-    spine's missing-days-are-zeros convention matches
-    changepoint_daily/burstiness_fano.
-
-    Scale shape: fact agg to (type, day), calendar-bounded spine,
-    per-type lag-7 window, one rollup to type cardinality."""
-    from pyspark.sql import Window
-
-    ev = _t(spark, sf_dir, "events")
-    daily = (
-        ev.select(
-            "event_type", F.col("ts").cast("date").alias("day")
-        )
-        .groupBy("event_type", "day")
-        .agg(F.count(F.lit(1)).alias("y"))
-    )
-    b = daily.agg(F.min("day").alias("lo"), F.max("day").alias("hi")).head()
-    spine = spark.sql(
-        f"SELECT explode(sequence(DATE'{b['lo']}', DATE'{b['hi']}',"
-        " interval 1 day)) AS day"
-    )
-    dense = (
-        daily.select("event_type")
-        .distinct()
-        .crossJoin(F.broadcast(spine))
-        .join(daily, ["event_type", "day"], "left")
-        .select(
-            "event_type",
-            "day",
-            F.coalesce(F.col("y"), F.lit(0)).cast("bigint").alias("y"),
-        )
-    )
-    w = Window.partitionBy("event_type").orderBy("day")
-    scored = (
-        dense.withColumn("yhat", F.lag("y", 7).over(w))
-        .filter(F.col("yhat").isNotNull())
-        .select(
-            "event_type",
-            "y",
-            "yhat",
-            F.abs(F.col("y") - F.col("yhat")).alias("ae"),
-        )
-    )
-    g = scored.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_days_eval"),
-        F.sum("ae").alias("sae"),
-        F.sum("y").alias("sy"),
-        F.sum(F.col("y") - F.col("yhat")).alias("bias_events"),
-    )
-    return g.filter(F.col("sy") > 0).select(
-        "event_type",
-        "n_days_eval",
-        F.expr("sae * 1000 div n_days_eval").alias("mae_milli"),
-        F.expr("sae * 1000000 div sy").alias("wape_ppm"),
-        "bias_events",
-    )
-
-
-ORACLE_SEASONAL_NAIVE = """
-    WITH daily AS (SELECT event_type, CAST(ts AS DATE) AS day,
-            CAST(COUNT(*) AS BIGINT) AS y
-        FROM events GROUP BY 1, 2),
-    bounds AS (SELECT MIN(day) AS lo, MAX(day) AS hi FROM daily),
-    spine AS (SELECT event_type, d.day
-        FROM (SELECT DISTINCT event_type FROM daily) s
-        CROSS JOIN (SELECT UNNEST(generate_series(lo, hi,
-            INTERVAL 1 DAY))::DATE AS day FROM bounds) d),
-    dense AS (SELECT sp.event_type, sp.day,
-            CAST(COALESCE(y, 0) AS BIGINT) AS y
-        FROM spine sp LEFT JOIN daily
-            ON daily.event_type = sp.event_type
-            AND daily.day = sp.day),
-    scored AS (SELECT event_type, y,
-            LAG(y, 7) OVER (PARTITION BY event_type ORDER BY day)
-                AS yhat
-        FROM dense),
-    g AS (SELECT event_type,
-            CAST(COUNT(*) AS BIGINT) AS n_days_eval,
-            CAST(SUM(ABS(y - yhat)) AS BIGINT) AS sae,
-            CAST(SUM(y) AS BIGINT) AS sy,
-            CAST(SUM(y - yhat) AS BIGINT) AS bias_events
-        FROM scored WHERE yhat IS NOT NULL GROUP BY 1)
-    SELECT event_type, n_days_eval,
-        sae * 1000 // n_days_eval AS mae_milli,
-        sae * 1000000 // sy AS wape_ppm,
-        bias_events
-    FROM g WHERE sy > 0
-"""
-
-
-def q_l_diversity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """l-diversity audit — the companion k_anonymity_audit doesn't
-    cover: a quasi-identifier group can be k-anonymous yet leak its
-    sensitive attribute if every member shares one value.  Quasi-ID =
-    (market segment, nation), sensitive = order priority; per
-    diversity level l (distinct priorities seen in the group), report
-    group count, row coverage, and the smallest group — the l=1 row
-    IS the disclosure list.
-
-    Scale shape: one order->customer equi-join, one agg to quasi-group
-    cardinality, one <=5-row rollup."""
-    cust = _t(spark, sf_dir, "customer").select(
-        "c_custkey", "c_mktsegment", "c_nationkey"
-    )
-    orders = _t(spark, sf_dir, "orders").select(
-        "o_custkey", "o_orderpriority"
-    )
-    rows = orders.join(
-        cust, orders["o_custkey"] == cust["c_custkey"]
-    ).select("c_mktsegment", "c_nationkey", "o_orderpriority")
-    g = rows.groupBy("c_mktsegment", "c_nationkey").agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.count_distinct("o_orderpriority").alias("l"),
-    )
-    return (
-        g.groupBy("l")
-        .agg(
-            F.count(F.lit(1)).alias("n_groups"),
-            F.sum("n_rows").alias("n_rows"),
-            F.min("n_rows").alias("min_group_rows"),
-        )
-        .orderBy("l")
-    )
-
-
-ORACLE_L_DIVERSITY = """
-    WITH rows_ AS (SELECT c_mktsegment, c_nationkey, o_orderpriority
-        FROM orders JOIN customer ON o_custkey = c_custkey),
-    g AS (SELECT c_mktsegment, c_nationkey,
-            CAST(COUNT(*) AS BIGINT) AS n_rows,
-            CAST(COUNT(DISTINCT o_orderpriority) AS BIGINT) AS l
-        FROM rows_ GROUP BY 1, 2)
-    SELECT l, CAST(COUNT(*) AS BIGINT) AS n_groups,
-        CAST(SUM(n_rows) AS BIGINT) AS n_rows,
-        CAST(MIN(n_rows) AS BIGINT) AS min_group_rows
-    FROM g GROUP BY l ORDER BY l
-"""
-
-
-# ---------------------------------------------------------------- wave 7c
-
-
-def q_hilbert_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hilbert-curve clustering report over orders — the locality
-    upgrade over zorder_layout: Morton order makes 2^k-long diagonal
-    jumps where the Hilbert curve moves one cell at a time, so
-    per-bucket min/max spans (= parquet row-group stats after a
-    layout write) stay narrower for the SAME bucket count.  Same
-    minmax scaling as zorder_layout (5 bits/dim here), then the
-    staged xy2d iteration (operators/layout.py::hilbert_stages —
-    validated cell-exact against the textbook algorithm), bucketed
-    by the top 6 of 10 curve bits.  Read next to zorder_layout's
-    report to see the span win.
-
-    Scale shape: one 1-row bounds aggregate broadcast back, 5 staged
-    integer projections (pure codegen, no shuffle), one bucket agg."""
-    o = _t(spark, sf_dir, "orders").select(
-        F.col("o_custkey").alias("c"),
-        F.datediff(F.col("o_orderdate"), F.lit("1992-01-01")).alias(
-            "d"
-        ),
-    )
-    bounds = o.agg(
-        F.min("c").alias("c_lo"),
-        F.max("c").alias("c_hi"),
-        F.min("d").alias("d_lo"),
-        F.max("d").alias("d_hi"),
-    )
-    scaled = o.crossJoin(F.broadcast(bounds)).select(
-        "c",
-        "d",
-        LAY._floor_div(
-            (F.col("c") - F.col("c_lo")).cast("bigint") * F.lit(31),
-            F.greatest(
-                F.col("c_hi") - F.col("c_lo"), F.lit(1)
-            ).cast("bigint"),
-        ).alias("sx"),
-        LAY._floor_div(
-            (F.col("d") - F.col("d_lo")).cast("bigint") * F.lit(31),
-            F.greatest(
-                F.col("d_hi") - F.col("d_lo"), F.lit(1)
-            ).cast("bigint"),
-        ).alias("sy"),
-    )
-    h = LAY.hilbert_stages(scaled, "sx", "sy", out="hkey", bits=5)
-    return (
-        h.select("c", "d", F.shiftright(F.col("hkey"), 4).alias("hbucket"))
-        .groupBy("hbucket")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.min("c").alias("c_min"),
-            F.max("c").alias("c_max"),
-            F.min("d").alias("d_min"),
-            F.max("d").alias("d_max"),
-        )
-    )
-
-
-def _hilbert_oracle() -> str:
-    scale_c = (
-        "((c - c_lo) * 31) // (CASE WHEN c_hi - c_lo > 1 "
-        "THEN c_hi - c_lo ELSE 1 END)"
-    )
-    scale_d = (
-        "((d - d_lo) * 31) // (CASE WHEN d_hi - d_lo > 1 "
-        "THEN d_hi - d_lo ELSE 1 END)"
-    )
-    ctes = LAY.hilbert_oracle_ctes("sx", "sy", bits=5)
-    return f"""
-    WITH o AS (SELECT o_custkey AS c,
-                      datediff('day', DATE '1992-01-01', o_orderdate) AS d
-               FROM orders),
-    b AS (SELECT MIN(c) AS c_lo, MAX(c) AS c_hi,
-                 MIN(d) AS d_lo, MAX(d) AS d_hi FROM o),
-    h_in AS (SELECT c, d, {scale_c} AS sx, {scale_d} AS sy
-             FROM o CROSS JOIN b),
-    {ctes}
-    SELECT hkey >> 4 AS hbucket, COUNT(*) AS n_orders,
-           MIN(c) AS c_min, MAX(c) AS c_max,
-           MIN(d) AS d_min, MAX(d) AS d_max
-    FROM h_out GROUP BY 1
-"""
-
-
-ORACLE_HILBERT = _hilbert_oracle()
-
-
-def q_shrunk_return_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Empirical-Bayes (beta-binomial) shrinkage of per-part return
-    rates: raw x/n for a 3-observation part is noise; shrinking toward
-    the corpus prior with method-of-moments strength K = m(1-m)/v - 1
-    gives the rate you'd actually rank parts by.  Everything is exact
-    integer arithmetic: per-part micro rates, the prior mean and
-    between-part variance as micro(-squared) integers, K clamped to
-    >= 1 milli (overdispersion would make it negative — then shrinkage
-    is ill-posed and the clamp degrades gracefully toward raw rates),
-    shrunk rate = (1000x + alpha_milli) / (1000n + K_milli) in exact
-    micro.  Top 20 parts by how far shrinkage moved them — the rows a
-    raw ranking gets most wrong.
-
-    Scale shape: one fact agg to part cardinality, one 1-row moment
-    agg broadcast back, TakeOrdered(20)."""
-    li = _t(spark, sf_dir, "lineitem")
-    per = li.groupBy("l_partkey").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.count_if(F.col("l_returnflag") == "R").alias("x"),
-    )
-    rated = per.select(
-        "l_partkey",
-        "n",
-        "x",
-        F.expr("x * 1000000 div n").alias("r_micro"),
-    )
-    prior = rated.agg(
-        F.count(F.lit(1)).alias("p_cnt"),
-        F.sum("r_micro").alias("sr"),
-        F.sum(
-            F.expr("CAST(r_micro AS DECIMAL(38,0)) * r_micro")
-        ).alias("srr"),
-    ).select(
-        "p_cnt",
-        F.expr("sr div p_cnt").alias("m_micro"),
-        # between-part variance in micro^2: E[r^2] - (E[r])^2, exact;
-        # clamped >= 1 so a degenerate all-equal-rates corpus yields
-        # maximal K (full shrinkage) instead of Spark-null/DuckDB-error
-        F.expr(
-            "greatest(CAST(srr div p_cnt"
-            " - (sr div p_cnt) * (sr div p_cnt) AS BIGINT),"
-            " CAST(1 AS BIGINT))"
-        ).alias("v_micro2"),
-    )
-    k = prior.select(
-        "m_micro",
-        "v_micro2",
-        F.expr(
-            "greatest(CAST(CAST(m_micro AS DECIMAL(38,0))"
-            " * (1000000 - m_micro) * 1000 div v_micro2"
-            " - 1000 AS BIGINT), CAST(1 AS BIGINT))"
-        ).alias("k_milli"),
-    ).select(
-        "m_micro",
-        "v_micro2",
-        "k_milli",
-        F.expr("k_milli * m_micro div 1000000").alias("alpha_milli"),
-    )
-    j = rated.crossJoin(F.broadcast(k))
-    return (
-        j.select(
-            "l_partkey",
-            "n",
-            "x",
-            "r_micro",
-            F.expr(
-                "CAST((CAST(x AS DECIMAL(38,0)) * 1000 + alpha_milli)"
-                " * 1000000 div (CAST(n AS DECIMAL(38,0)) * 1000"
-                " + k_milli) AS BIGINT)"
-            ).alias("shrunk_micro"),
-        )
-        .withColumn(
-            "gap_micro", F.abs(F.col("shrunk_micro") - F.col("r_micro"))
-        )
-        .orderBy(F.desc("gap_micro"), "l_partkey")
-        .limit(20)
-    )
-
-
-ORACLE_SHRUNK_RATES = """
-    WITH per AS (SELECT l_partkey, CAST(COUNT(*) AS BIGINT) AS n,
-            CAST(COUNT(*) FILTER (WHERE l_returnflag = 'R') AS BIGINT)
-                AS x
-        FROM lineitem GROUP BY 1),
-    rated AS (SELECT l_partkey, n, x,
-            x * 1000000 // n AS r_micro FROM per),
-    prior AS (SELECT CAST(COUNT(*) AS BIGINT) AS p_cnt,
-            CAST(SUM(r_micro) AS BIGINT) AS sr,
-            CAST(SUM(CAST(r_micro AS HUGEINT) * r_micro) AS HUGEINT)
-                AS srr
-        FROM rated),
-    pm AS (SELECT p_cnt, sr // p_cnt AS m_micro,
-            GREATEST(CAST(srr // p_cnt
-                 - (sr // p_cnt) * (sr // p_cnt) AS BIGINT),
-                 CAST(1 AS BIGINT)) AS v_micro2
-        FROM prior),
-    kk AS (SELECT m_micro, v_micro2,
-            GREATEST(CAST(CAST(m_micro AS HUGEINT)
-                * (1000000 - m_micro) * 1000 // v_micro2
-                - 1000 AS BIGINT), CAST(1 AS BIGINT)) AS k_milli
-        FROM pm),
-    ka AS (SELECT m_micro, v_micro2, k_milli,
-            k_milli * m_micro // 1000000 AS alpha_milli FROM kk)
-    SELECT l_partkey, n, x, r_micro,
-        CAST((CAST(x AS HUGEINT) * 1000 + alpha_milli) * 1000000
-             // (CAST(n AS HUGEINT) * 1000 + k_milli) AS BIGINT)
-            AS shrunk_micro,
-        ABS(CAST((CAST(x AS HUGEINT) * 1000 + alpha_milli) * 1000000
-             // (CAST(n AS HUGEINT) * 1000 + k_milli) AS BIGINT)
-            - r_micro) AS gap_micro
-    FROM rated CROSS JOIN ka
-    ORDER BY gap_micro DESC, l_partkey LIMIT 20
-"""
-
-
-# ---------------------------------------------------------------- wave 7d
-
-
-def q_pruning_skip_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Data-skipping effectiveness audit — the number the layout
-    family exists for: simulate 1000-row files under three write
-    orders (natural o_orderkey, single-column date sort, 10-bit
-    Z-order) and count how many files a 2%-band predicate on EACH
-    dimension must read given per-file min/max stats (exactly what
-    parquet row-group pruning sees).  Natural order reads ~everything
-    for both; date-sort prunes dates but not customers; Z-order
-    prunes BOTH — the report that justifies paying the layout
-    shuffle at write time.
-
-    Scale shape: per layout, one distributed prefix-sum rank over a
-    unique encoded key (never a single-task window), a file-
-    cardinality min/max agg, and a file-cardinality read/skip rollup;
-    bounds are one scalar action (the changepoint-bounds idiom)."""
-    from kafka_firehose_nozzle_spark.operators.packing import (
-        with_global_running_sum,
-    )
-
-    o = _t(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("okey"),
-        F.col("o_custkey").alias("c"),
-        F.datediff(F.col("o_orderdate"), F.lit("1992-01-01")).alias(
-            "d"
-        ),
-    )
-    b = o.agg(
-        F.min("c").alias("c_lo"),
-        F.max("c").alias("c_hi"),
-        F.min("d").alias("d_lo"),
-        F.max("d").alias("d_hi"),
-    ).head()
-    c_lo, c_hi, d_lo, d_hi = b["c_lo"], b["c_hi"], b["d_lo"], b["d_hi"]
-    cspan, dspan = max(c_hi - c_lo, 1), max(d_hi - d_lo, 1)
-    dp_lo, dp_hi = d_lo + dspan * 40 // 100, d_lo + dspan * 42 // 100
-    cp_lo, cp_hi = c_lo + cspan * 40 // 100, c_lo + cspan * 42 // 100
-    zkey = LAY.scaled_zorder2(
-        F.col("c"), F.lit(c_lo), F.lit(c_hi),
-        F.col("d"), F.lit(d_lo), F.lit(d_hi),
-        bits=10,
-    )
-
-    def report(keyed, label):
-        ranked = with_global_running_sum(keyed, "k", "one", "rank")
-        files = (
-            ranked.select(
-                F.expr("(rank - 1) div 1000").alias("f"), "c", "d"
-            )
-            .groupBy("f")
-            .agg(
-                F.min("c").alias("c_min"),
-                F.max("c").alias("c_max"),
-                F.min("d").alias("d_min"),
-                F.max("d").alias("d_max"),
-            )
-        )
-        return files.agg(
-            F.lit(label).alias("layout"),
-            F.count(F.lit(1)).alias("n_files"),
-            F.count_if(
-                ~((F.col("d_max") < dp_lo) | (F.col("d_min") > dp_hi))
-            ).alias("read_date_pred"),
-            F.count_if(
-                ~((F.col("c_max") < cp_lo) | (F.col("c_min") > cp_hi))
-            ).alias("read_cust_pred"),
-        )
-
-    enc = lambda col: F.concat(  # noqa: E731
-        F.lpad(col.cast("string"), 19, "0"),
-        F.lpad(F.col("okey").cast("string"), 19, "0"),
-    )
-    nat = o.select(
-        F.lpad(F.col("okey").cast("string"), 19, "0").alias("k"),
-        "c",
-        "d",
-        F.lit(1).cast("bigint").alias("one"),
-    )
-    dat = o.select(
-        enc(F.col("d")).alias("k"), "c", "d",
-        F.lit(1).cast("bigint").alias("one"),
-    )
-    zrd = o.select(
-        enc(zkey).alias("k"), "c", "d",
-        F.lit(1).cast("bigint").alias("one"),
-    )
-    return (
-        report(nat, "natural")
-        .unionByName(report(dat, "date_sort"))
-        .unionByName(report(zrd, "zorder"))
-        .orderBy("layout")
-    )
-
-
-def _pruning_oracle() -> str:
-    scale_c = ("((c - c_lo) * 1023) // (CASE WHEN c_hi - c_lo > 1 "
-               "THEN c_hi - c_lo ELSE 1 END)")
-    scale_d = ("((d - d_lo) * 1023) // (CASE WHEN d_hi - d_lo > 1 "
-               "THEN d_hi - d_lo ELSE 1 END)")
-    zk = LAY.zorder_key2_sql(f"({scale_c})", f"({scale_d})", bits=10)
-
-    def chain(order_expr: str, label: str) -> str:
-        return f"""
-    (SELECT '{label}' AS layout,
-        CAST(COUNT(*) AS BIGINT) AS n_files,
-        CAST(COUNT(*) FILTER (WHERE NOT (d_max < dp_lo OR d_min > dp_hi))
-             AS BIGINT) AS read_date_pred,
-        CAST(COUNT(*) FILTER (WHERE NOT (c_max < cp_lo OR c_min > cp_hi))
-             AS BIGINT) AS read_cust_pred
-     FROM (SELECT (rn - 1) // 1000 AS f,
-                MIN(c) AS c_min, MAX(c) AS c_max,
-                MIN(d) AS d_min, MAX(d) AS d_max,
-                MAX(dp_lo) AS dp_lo, MAX(dp_hi) AS dp_hi,
-                MAX(cp_lo) AS cp_lo, MAX(cp_hi) AS cp_hi
-           FROM (SELECT c, d, dp_lo, dp_hi, cp_lo, cp_hi,
-                     ROW_NUMBER() OVER (ORDER BY {order_expr}, okey)
-                         AS rn
-                 FROM ob) GROUP BY 1))"""
-
-    return f"""
-    WITH o AS (SELECT o_orderkey AS okey, o_custkey AS c,
-            datediff('day', DATE '1992-01-01', o_orderdate) AS d
-        FROM orders),
-    b AS (SELECT MIN(c) AS c_lo, MAX(c) AS c_hi,
-            MIN(d) AS d_lo, MAX(d) AS d_hi,
-            GREATEST(MAX(c) - MIN(c), 1) AS cspan,
-            GREATEST(MAX(d) - MIN(d), 1) AS dspan
-        FROM o),
-    ob AS (SELECT o.*, c_lo, c_hi, d_lo, d_hi,
-            d_lo + dspan * 40 // 100 AS dp_lo,
-            d_lo + dspan * 42 // 100 AS dp_hi,
-            c_lo + cspan * 40 // 100 AS cp_lo,
-            c_lo + cspan * 42 // 100 AS cp_hi
-        FROM o CROSS JOIN b)
-    SELECT * FROM (
-        {chain("okey", "natural")}
-        UNION ALL {chain("d", "date_sort")}
-        UNION ALL {chain(zk, "zorder")}
-    ) ORDER BY layout
-"""
-
-
-ORACLE_PRUNING_AUDIT = _pruning_oracle()
-
-
-def q_chi2_keywords_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinguishing keywords per source by chi-square on document
-    frequency: for each (source, word) 2x2 table (a = docs in source
-    with the word, b/c/d the complements), chi2 = N(ad-bc)^2 /
-    ((a+b)(c+d)(a+c)(b+d)) — the classic feature-selection statistic
-    (tfidf_top_terms ranks within a doc; THIS ranks what separates a
-    source from the rest of the corpus).  The five factors are exact
-    DECIMAL(38,0) integers bridged to double through VARCHAR (the
-    dispersion idiom — N(ad-bc)^2 can pass 1e38, so the DIVISION is
-    the only double op), det_round(3); top 3 words per source.
-
-    Scale shape: doc-distinct (source, word) agg, word-df and
-    source-size broadcasts, a per-source rank window at vocab
-    cardinality (partition = source), 3 rows out per source."""
-    from pyspark.sql import Window
-
-    docs = _t(spark, sf_dir, "documents")
-    sw = (
-        docs.select(
-            "doc_id",
-            "source",
-            F.explode(
-                F.array_distinct(
-                    TX.tokens(TX.normalize_text(F.col("text")))
-                )
-            ).alias("w"),
-        )
-        .groupBy("source", "w")
-        .agg(F.count(F.lit(1)).alias("a"))
-    )
-    srcs = docs.groupBy("source").agg(F.count(F.lit(1)).alias("n_s"))
-    dfw = sw.groupBy("w").agg(F.sum("a").alias("df_w"))
-    tot = docs.agg(F.count(F.lit(1)).alias("n_docs"))
-    j = (
-        sw.join(F.broadcast(srcs), "source")
-        .join(dfw, "w")
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "source",
-            "w",
-            "a",
-            (F.col("n_s") - F.col("a")).alias("b"),
-            (F.col("df_w") - F.col("a")).alias("c"),
-            (
-                F.col("n_docs") - F.col("n_s") - F.col("df_w")
-                + F.col("a")
-            ).alias("d"),
-            "n_docs",
-        )
-    )
-    dec = "DECIMAL(38,0)"
-    bridge = (
-        lambda e: f"CAST(CAST(CAST({e} AS {dec}) AS STRING) AS DOUBLE)"
-    )  # noqa: E731
-    num = bridge(
-        f"CAST(n_docs AS {dec})"
-        f" * (CAST(a AS {dec}) * d - CAST(b AS {dec}) * c)"
-        f" * (CAST(a AS {dec}) * d - CAST(b AS {dec}) * c)"
-    )
-    den = (
-        f"({bridge('CAST(a AS ' + dec + ') + b')}"
-        f" * {bridge('CAST(c AS ' + dec + ') + d')}"
-        f" * {bridge('CAST(a AS ' + dec + ') + c')}"
-        f" * {bridge('CAST(b AS ' + dec + ') + d')})"
-    )
-    scored = j.select(
-        "source",
-        "w",
-        "a",
-        # FLOOR returns BIGINT in Spark and "1000.0" parses as DECIMAL
-        # in SQL text — cast back to DOUBLE so the emitted type matches
-        # DuckDB's double FLOOR
-        F.expr(
-            f"(CAST(FLOOR(({num} / {den}) * 1000.0 + 0.5) AS DOUBLE)"
-            " / CAST(1000.0 AS DOUBLE))"
-        ).alias("chi2"),
-    )
-    wn = Window.partitionBy("source").orderBy(
-        F.desc("chi2"), "w"
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(wn))
-        .filter(F.col("rnk") <= 3)
-        .select("source", F.col("rnk").cast("bigint").alias("rnk"), "w", "a", "chi2")
-        .orderBy("source", "rnk")
-    )
-
-
-ORACLE_CHI2_KEYWORDS = f"""
-    WITH t AS (SELECT doc_id, source,
-            list_distinct({_TOKS}) AS toks FROM documents),
-    sw AS (SELECT source, w, CAST(COUNT(*) AS BIGINT) AS a
-        FROM (SELECT doc_id, source, unnest(toks) AS w FROM t)
-        GROUP BY 1, 2),
-    srcs AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_s
-        FROM documents GROUP BY 1),
-    dfw AS (SELECT w, CAST(SUM(a) AS BIGINT) AS df_w FROM sw GROUP BY 1),
-    tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs FROM documents),
-    j AS (SELECT sw.source, sw.w, a, n_s - a AS b, df_w - a AS c,
-            n_docs - n_s - df_w + a AS d, n_docs
-        FROM sw JOIN srcs ON sw.source = srcs.source
-        JOIN dfw ON sw.w = dfw.w CROSS JOIN tot),
-    scored AS (SELECT source, w, a,
-            (FLOOR((
-                CAST(CAST(CAST(n_docs AS HUGEINT)
-                    * (CAST(a AS HUGEINT) * d - CAST(b AS HUGEINT) * c)
-                    * (CAST(a AS HUGEINT) * d - CAST(b AS HUGEINT) * c)
-                    AS VARCHAR) AS DOUBLE)
-                / (CAST(CAST(CAST(a AS HUGEINT) + b AS VARCHAR) AS DOUBLE)
-                   * CAST(CAST(CAST(c AS HUGEINT) + d AS VARCHAR) AS DOUBLE)
-                   * CAST(CAST(CAST(a AS HUGEINT) + c AS VARCHAR) AS DOUBLE)
-                   * CAST(CAST(CAST(b AS HUGEINT) + d AS VARCHAR) AS DOUBLE))
-            ) * 1000.0 + 0.5) / 1000.0) AS chi2
-        FROM j),
-    rk AS (SELECT source, w, a, chi2,
-            ROW_NUMBER() OVER (PARTITION BY source
-                ORDER BY chi2 DESC, w) AS rnk
-        FROM scored)
-    SELECT source, CAST(rnk AS BIGINT) AS rnk, w, a, chi2
-    FROM rk WHERE rnk <= 3 ORDER BY source, rnk
-"""
-
-
-# ---------------------------------------------------------------- wave 7e
-
-
-def q_t_closeness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """t-closeness — the third rung of the anonymization ladder
-    (k_anonymity_audit: group size; l_diversity_audit: value variety;
-    THIS: value DISTRIBUTION): per quasi-group (segment, nation), the
-    Earth Mover's Distance between the group's order-priority
-    distribution and the corpus-wide one.  Priorities are ordered
-    (1-URGENT..5-LOW), so EMD = mean |cumulative-share difference| —
-    exact ppm integers: per rank, |cum_g * n_all - cum_all * n_g|
-    accumulates in DECIMAL(38,0) and one closing division normalizes.
-    Top 10 most-skewed groups — each is a quasi-identifier whose
-    order-mix leaks.
-
-    Scale shape: one agg to (group, priority) — group cardinality x 5
-    — dense 5-rank spine per group, broadcast global distribution,
-    cumulative windows partitioned by group, TakeOrdered(10)."""
-    from pyspark.sql import Window
-
-    cust = _t(spark, sf_dir, "customer").select(
-        "c_custkey", "c_mktsegment", "c_nationkey"
-    )
-    orders = _t(spark, sf_dir, "orders").select(
-        "o_custkey", "o_orderpriority"
-    )
-    rows = orders.join(
-        cust, orders["o_custkey"] == cust["c_custkey"]
-    ).select(
-        "c_mktsegment", "c_nationkey", "o_orderpriority"
-    )
-    gp = rows.groupBy(
-        "c_mktsegment", "c_nationkey", "o_orderpriority"
-    ).agg(F.count(F.lit(1)).alias("c"))
-    # dense 5-priority spine per group so missing ranks carry zeros
-    pri = rows.select("o_orderpriority").distinct()
-    groups = gp.select("c_mktsegment", "c_nationkey").distinct()
-    dense = (
-        groups.crossJoin(F.broadcast(pri))
-        .join(
-            gp, ["c_mktsegment", "c_nationkey", "o_orderpriority"], "left"
-        )
-        .select(
-            "c_mktsegment",
-            "c_nationkey",
-            "o_orderpriority",
-            F.coalesce(F.col("c"), F.lit(0)).cast("bigint").alias("c"),
-        )
-    )
-    glob = rows.groupBy("o_orderpriority").agg(
-        F.count(F.lit(1)).alias("ca")
-    )
-    tot = rows.agg(F.count(F.lit(1)).alias("n_all")).head()["n_all"]
-    wg = Window.partitionBy("c_mktsegment", "c_nationkey").orderBy(
-        "o_orderpriority"
-    )
-    wa = Window.orderBy("o_orderpriority").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    glob_cum = glob.select(
-        "o_orderpriority", F.sum("ca").over(wa).alias("cum_all")
-    )
-    j = (
-        dense.withColumn(
-            "cum_g",
-            F.sum("c").over(
-                wg.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-            ),
-        )
-        .withColumn(
-            "n_g",
-            F.sum("c").over(
-                Window.partitionBy("c_mktsegment", "c_nationkey")
-            ),
-        )
-        .join(F.broadcast(glob_cum), "o_orderpriority")
-    )
-    per = j.groupBy("c_mktsegment", "c_nationkey").agg(
-        F.max("n_g").alias("n_rows"),
-        F.sum(
-            F.expr(
-                f"abs(CAST(cum_g AS DECIMAL(38,0)) * {tot}"
-                " - CAST(cum_all AS DECIMAL(38,0)) * n_g)"
-            )
-        ).alias("s"),
-        F.count(F.lit(1)).alias("n_ranks"),
-    )
-    return (
-        per.select(
-            "c_mktsegment",
-            "c_nationkey",
-            "n_rows",
-            F.expr(
-                "CAST(s * 1000000 div (CAST(n_ranks AS DECIMAL(38,0))"
-                f" * n_rows * {tot}) AS BIGINT)"
-            ).alias("t_ppm"),
-        )
-        .orderBy(F.desc("t_ppm"), "c_mktsegment", "c_nationkey")
-        .limit(10)
-    )
-
-
-ORACLE_T_CLOSENESS = """
-    WITH rows_ AS (SELECT c_mktsegment, c_nationkey, o_orderpriority
-        FROM orders JOIN customer ON o_custkey = c_custkey),
-    gp AS (SELECT c_mktsegment, c_nationkey, o_orderpriority,
-            CAST(COUNT(*) AS BIGINT) AS c
-        FROM rows_ GROUP BY 1, 2, 3),
-    pri AS (SELECT DISTINCT o_orderpriority FROM rows_),
-    groups_ AS (SELECT DISTINCT c_mktsegment, c_nationkey FROM gp),
-    dense AS (SELECT g.c_mktsegment, g.c_nationkey, p.o_orderpriority,
-            CAST(COALESCE(gp.c, 0) AS BIGINT) AS c
-        FROM groups_ g CROSS JOIN pri p
-        LEFT JOIN gp ON gp.c_mktsegment = g.c_mktsegment
-            AND gp.c_nationkey = g.c_nationkey
-            AND gp.o_orderpriority = p.o_orderpriority),
-    tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_all FROM rows_),
-    gcum AS (SELECT o_orderpriority,
-            CAST(SUM(CAST(COUNT(*) AS BIGINT)) OVER (
-                ORDER BY o_orderpriority
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                AS BIGINT) AS cum_all
-        FROM rows_ GROUP BY 1),
-    cum AS (SELECT d.c_mktsegment, d.c_nationkey, d.o_orderpriority,
-            CAST(SUM(c) OVER (PARTITION BY d.c_mktsegment, d.c_nationkey
-                ORDER BY d.o_orderpriority
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                AS BIGINT) AS cum_g,
-            CAST(SUM(c) OVER (PARTITION BY d.c_mktsegment,
-                d.c_nationkey) AS BIGINT) AS n_g,
-            g.cum_all
-        FROM dense d JOIN gcum g
-            ON d.o_orderpriority = g.o_orderpriority),
-    per AS (SELECT c_mktsegment, c_nationkey,
-            MAX(n_g) AS n_rows,
-            CAST(SUM(ABS(CAST(cum_g AS HUGEINT) * (SELECT n_all FROM tot)
-                - CAST(cum_all AS HUGEINT) * n_g)) AS HUGEINT) AS s,
-            CAST(COUNT(*) AS BIGINT) AS n_ranks
-        FROM cum GROUP BY 1, 2)
-    SELECT c_mktsegment, c_nationkey, n_rows,
-        CAST(s * 1000000 // (CAST(n_ranks AS HUGEINT) * n_rows
-            * (SELECT n_all FROM tot)) AS BIGINT) AS t_ppm
-    FROM per
-    ORDER BY t_ppm DESC, c_mktsegment, c_nationkey LIMIT 10
-"""
-
-
-def q_simpsons_paradox_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Simpson's-paradox screen on the discount->quantity relation:
-    exact-integer regression-slope NUMERATORS (n*Sxy - Sx*Sy, the
-    sign-carrying part — denominators are positive and can't flip a
-    sign) per returnflag group AND pooled; a group whose sign
-    disagrees with the pooled sign is a confounding alarm — the
-    aggregate trend would mislead anyone acting per group.  Micro-
-    quantized values, DECIMAL(38,0) moments, zero doubles.
-
-    Scale shape: ONE fact pass aggregating per-group moments (pooled
-    moments are the group sums — no second scan), all comparisons on
-    a groups-cardinality frame."""
-    li = _t(spark, sf_dir, "lineitem")
-    x = "CAST(floor(l_discount * 1000000.0 + 0.5) AS BIGINT)"
-    y = "CAST(floor(l_quantity * 1000000.0 + 0.5) AS BIGINT)"
-    dec = "DECIMAL(38,0)"
-    g = li.groupBy("l_returnflag").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.expr(f"SUM(CAST({x} AS {dec}))").alias("sx"),
-        F.expr(f"SUM(CAST({y} AS {dec}))").alias("sy"),
-        F.expr(f"SUM(CAST({x} AS {dec}) * {y})").alias("sxy"),
-    )
-    # pooled moments are window sums OVER the groups-cardinality frame
-    # (3 rows) — reusing `g` in a crossJoin branch would re-scan the
-    # fact table; the unpartitioned window here is groups-sized, not
-    # corpus-sized (plan-guarded: exactly one parquet scan)
-    from pyspark.sql import Window
-
-    wall = Window.partitionBy()
-    pooled = g.select(
-        "l_returnflag",
-        "n",
-        "sx",
-        "sy",
-        "sxy",
-        F.sum("n").over(wall).alias("pn"),
-        F.sum("sx").over(wall).alias("psx"),
-        F.sum("sy").over(wall).alias("psy"),
-        F.sum("sxy").over(wall).alias("psxy"),
-    )
-    return (
-        pooled.select(
-            "l_returnflag",
-            "n",
-            F.expr(
-                "CAST(sign(CAST(n AS DECIMAL(38,0)) * sxy - sx * sy)"
-                " AS BIGINT)"
-            ).alias("group_sign"),
-            F.expr(
-                "CAST(sign(CAST(pn AS DECIMAL(38,0)) * psxy - psx * psy)"
-                " AS BIGINT)"
-            ).alias("pooled_sign"),
-        )
-        .withColumn(
-            "disagrees",
-            (F.col("group_sign") * F.col("pooled_sign") < 0).cast(
-                "int"
-            ),
-        )
-        .orderBy("l_returnflag")
-    )
-
-
-ORACLE_SIMPSONS = """
-    WITH g AS (SELECT l_returnflag,
-            CAST(COUNT(*) AS BIGINT) AS n,
-            CAST(SUM(CAST(CAST(FLOOR(l_discount * 1000000.0 + 0.5)
-                AS BIGINT) AS HUGEINT)) AS HUGEINT) AS sx,
-            CAST(SUM(CAST(CAST(FLOOR(l_quantity * 1000000.0 + 0.5)
-                AS BIGINT) AS HUGEINT)) AS HUGEINT) AS sy,
-            CAST(SUM(CAST(CAST(FLOOR(l_discount * 1000000.0 + 0.5)
-                AS BIGINT) AS HUGEINT)
-                * CAST(FLOOR(l_quantity * 1000000.0 + 0.5) AS BIGINT))
-                AS HUGEINT) AS sxy
-        FROM lineitem GROUP BY 1),
-    pooled AS (SELECT CAST(SIGN(CAST(SUM(n) AS HUGEINT) * SUM(sxy)
-            - SUM(sx) * SUM(sy)) AS BIGINT) AS pooled_sign
-        FROM g)
-    SELECT l_returnflag, n,
-        CAST(SIGN(CAST(n AS HUGEINT) * sxy - sx * sy) AS BIGINT)
-            AS group_sign,
-        pooled_sign,
-        CAST(CASE WHEN SIGN(CAST(n AS HUGEINT) * sxy - sx * sy)
-                * pooled_sign < 0 THEN 1 ELSE 0 END AS INT)
-            AS disagrees
-    FROM g CROSS JOIN pooled ORDER BY l_returnflag
-"""
-
-
-# ---------------------------------------------------------------- wave 7f
-
-
-def q_lm_holdout_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Held-out LM bake-off: train bigram models on EVEN doc_ids,
-    score the bigram events of ODD doc_ids, and report cross-entropy
-    + perplexity for add-one vs interpolated Kneser-Ney — the eval
-    that justifies kneser_ney_bigrams' extra machinery (KN should win
-    on held-out text; if it doesn't, the corpus is telling you its
-    bigrams don't repeat).  Every probability is an exact integer
-    ratio — add-one: (c12+1)/(c1+V); KN seen-context:
-    (max(4c12-3,0)(T+V) + 3 n1 (nc+1)) / (4 c1 (T+V)) with add-one-
-    smoothed continuation (nc+1)/(T+V), which also serves unseen
-    contexts — so both engines take ONE ln of the same bridged ratio
-    per event class (the js_divergence lesson), half-up nano-
-    quantized, integer-summed with test multiplicities.
-
-    Scale shape: train aggs at bigram/vocab cardinality; test
-    bigrams aggregated to distinct types with multiplicity BEFORE
-    joining (events never fan out); three left equi-joins; constants
-    ride a 1-row broadcast."""
-    docs = _t(spark, sf_dir, "documents")
-    toks = TX.tokens(TX.normalize_text(F.col("text")))
-    m = F.size(F.col("toks")) - 1
-    pairs_arr = F.when(
-        m >= 1,
-        F.zip_with(
-            F.slice(F.col("toks"), 1, m),
-            F.slice(F.col("toks"), 2, m),
-            lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
-        ),
-    )
-
-    def bigrams_of(pred):
-        return (
-            docs.filter(pred)
-            .select(toks.alias("toks"))
-            .select(F.explode_outer(pairs_arr).alias("p"))
-            .filter(F.col("p").isNotNull())
-            .select("p.w1", "p.w2")
-            .groupBy("w1", "w2")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-        )
-
-    train = bigrams_of(F.col("doc_id") % 2 == 0).withColumnRenamed(
-        "cnt", "c12"
-    )
-    test = bigrams_of(F.col("doc_id") % 2 == 1).withColumnRenamed(
-        "cnt", "mult"
-    )
-    left = train.groupBy("w1").agg(
-        F.sum("c12").alias("c1"), F.count(F.lit(1)).alias("n1")
-    )
-    right = train.groupBy("w2").agg(F.count(F.lit(1)).alias("nc"))
-    vocab = (
-        docs.filter(F.col("doc_id") % 2 == 0)
-        .select(F.explode(toks).alias("w"))
-        .agg(F.count_distinct("w").alias("v"))
-    )
-    types = train.agg(F.count(F.lit(1)).alias("t"))
-    consts = vocab.crossJoin(types)
-    j = (
-        test.join(train, ["w1", "w2"], "left")
-        .join(left, "w1", "left")
-        .join(right, "w2", "left")
-        .crossJoin(F.broadcast(consts))
-        .select(
-            "mult",
-            F.coalesce(F.col("c12"), F.lit(0)).alias("c12"),
-            F.coalesce(F.col("c1"), F.lit(0)).alias("c1"),
-            F.coalesce(F.col("n1"), F.lit(0)).alias("n1"),
-            F.coalesce(F.col("nc"), F.lit(0)).alias("nc"),
-            "v",
-            "t",
-        )
-    )
-    dec = "DECIMAL(38,0)"
-    br = lambda e: f"CAST(CAST({e} AS STRING) AS DOUBLE)"  # noqa: E731
-    # -ln p, half-up nano, weighted by test multiplicity
-    ao_num = f"CAST(c12 AS {dec}) + 1"
-    ao_den = f"CAST(c1 AS {dec}) + v"
-    kn_num = (
-        f"CASE WHEN c1 > 0 THEN"
-        f" greatest(CAST(4 AS {dec}) * c12 - 3, CAST(0 AS {dec}))"
-        f" * (t + v) + CAST(3 AS {dec}) * n1 * (nc + 1)"
-        f" ELSE CAST(nc AS {dec}) + 1 END"
-    )
-    kn_den = (
-        f"CASE WHEN c1 > 0 THEN CAST(4 AS {dec}) * c1 * (t + v)"
-        f" ELSE CAST(t AS {dec}) + v END"
-    )
-    scored = j.select(
-        "mult",
-        (F.col("c12") == 0).cast("bigint").alias("unseen"),
-        F.expr(
-            f"CAST(FLOOR(-ln({br(ao_num)} / {br(ao_den)})"
-            " * 1000000000.0 + 0.5) AS BIGINT)"
-        ).alias("ao_nano"),
-        F.expr(
-            f"CAST(FLOOR(-ln({br(kn_num)} / {br(kn_den)})"
-            " * 1000000000.0 + 0.5) AS BIGINT)"
-        ).alias("kn_nano"),
-    )
-    g = scored.agg(
-        F.sum("mult").alias("n_events"),
-        F.sum(F.col("unseen") * F.col("mult")).alias("n_unseen"),
-        F.sum(F.col("ao_nano") * F.col("mult")).alias("s_ao"),
-        F.sum(F.col("kn_nano") * F.col("mult")).alias("s_kn"),
-    )
-    out = g.select(
-        F.lit("add_one").alias("model"),
-        "n_events",
-        "n_unseen",
-        F.expr("s_ao div n_events").alias("xent_nano"),
-    ).unionByName(
-        g.select(
-            F.lit("kneser_ney").alias("model"),
-            "n_events",
-            "n_unseen",
-            F.expr("s_kn div n_events").alias("xent_nano"),
-        )
-    )
-    return out.select(
-        "model",
-        "n_events",
-        "n_unseen",
-        "xent_nano",
-        F.expr(
-            "CAST(FLOOR(exp(CAST(xent_nano AS DOUBLE) / 1000000000.0)"
-            " * 1000000.0 + 0.5) AS BIGINT)"
-        ).alias("ppl_micro"),
-    ).orderBy("model")
-
-
-ORACLE_LM_HOLDOUT = f"""
-    WITH d AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
-    trb AS (SELECT p.w1 AS w1, p.w2 AS w2,
-            CAST(COUNT(*) AS BIGINT) AS c12
-        FROM (SELECT unnest(list_transform(range(len(toks) - 1), i ->
-                struct_pack(w1 := toks[i + 1], w2 := toks[i + 2]))) AS p
-              FROM d WHERE doc_id % 2 = 0 AND len(toks) >= 2)
-        GROUP BY 1, 2),
-    teb AS (SELECT p.w1 AS w1, p.w2 AS w2,
-            CAST(COUNT(*) AS BIGINT) AS mult
-        FROM (SELECT unnest(list_transform(range(len(toks) - 1), i ->
-                struct_pack(w1 := toks[i + 1], w2 := toks[i + 2]))) AS p
-              FROM d WHERE doc_id % 2 = 1 AND len(toks) >= 2)
-        GROUP BY 1, 2),
-    lft AS (SELECT w1, CAST(SUM(c12) AS BIGINT) AS c1,
-            CAST(COUNT(*) AS BIGINT) AS n1 FROM trb GROUP BY 1),
-    rgt AS (SELECT w2, CAST(COUNT(*) AS BIGINT) AS nc
-        FROM trb GROUP BY 1),
-    consts AS (SELECT
-        (SELECT CAST(COUNT(DISTINCT w) AS BIGINT)
-         FROM (SELECT unnest(toks) AS w FROM d WHERE doc_id % 2 = 0))
-            AS v,
-        (SELECT CAST(COUNT(*) AS BIGINT) FROM trb) AS t),
-    j AS (SELECT mult,
-            COALESCE(trb.c12, 0) AS c12, COALESCE(c1, 0) AS c1,
-            COALESCE(n1, 0) AS n1, COALESCE(nc, 0) AS nc, v, t
-        FROM teb LEFT JOIN trb
-            ON teb.w1 = trb.w1 AND teb.w2 = trb.w2
-        LEFT JOIN lft ON teb.w1 = lft.w1
-        LEFT JOIN rgt ON teb.w2 = rgt.w2
-        CROSS JOIN consts),
-    scored AS (SELECT mult,
-            CASE WHEN c12 = 0 THEN 1 ELSE 0 END AS unseen,
-            CAST(FLOOR(-LN(
-                CAST(CAST(CAST(c12 AS HUGEINT) + 1 AS VARCHAR) AS DOUBLE)
-                / CAST(CAST(CAST(c1 AS HUGEINT) + v AS VARCHAR) AS DOUBLE))
-                * 1000000000.0 + 0.5) AS BIGINT) AS ao_nano,
-            CAST(FLOOR(-LN(
-                CAST(CAST(CASE WHEN c1 > 0 THEN
-                    GREATEST(CAST(4 AS HUGEINT) * c12 - 3,
-                             CAST(0 AS HUGEINT)) * (t + v)
-                    + CAST(3 AS HUGEINT) * n1 * (nc + 1)
-                    ELSE CAST(nc AS HUGEINT) + 1 END AS VARCHAR)
-                    AS DOUBLE)
-                / CAST(CAST(CASE WHEN c1 > 0 THEN
-                    CAST(4 AS HUGEINT) * c1 * (t + v)
-                    ELSE CAST(t AS HUGEINT) + v END AS VARCHAR)
-                    AS DOUBLE))
-                * 1000000000.0 + 0.5) AS BIGINT) AS kn_nano
-        FROM j),
-    g AS (SELECT CAST(SUM(mult) AS BIGINT) AS n_events,
-            CAST(SUM(unseen * mult) AS BIGINT) AS n_unseen,
-            CAST(SUM(ao_nano * mult) AS BIGINT) AS s_ao,
-            CAST(SUM(kn_nano * mult) AS BIGINT) AS s_kn
-        FROM scored),
-    u AS (SELECT 'add_one' AS model, n_events, n_unseen,
-            s_ao // n_events AS xent_nano FROM g
-        UNION ALL
-        SELECT 'kneser_ney', n_events, n_unseen,
-            s_kn // n_events FROM g)
-    SELECT model, n_events, n_unseen, xent_nano,
-        CAST(FLOOR(EXP(CAST(xent_nano AS DOUBLE) / 1000000000.0)
-            * 1000000.0 + 0.5) AS BIGINT) AS ppl_micro
-    FROM u ORDER BY model
-"""
-
-
-# ---------------------------------------------------------------- wave 7g
-
-
-def q_neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Neyman-optimal sample allocation: split a 10,000-row sampling
-    budget across market segments proportional to n_h * sigma_h (high-
-    variance strata earn more samples — the design that minimizes the
-    stratified estimator's variance for fixed budget).  n_h*sigma_h =
-    sqrt(n_h*Q_h - S_h^2) from exact integer moments (bridged once to
-    double for the sqrt, milli-quantized); the integer split uses the
-    LARGEST-REMAINDER method so allocations are exact integers that
-    sum to the budget on both engines — no float apportionment.
-
-    Scale shape: one fact agg to stratum cardinality; everything
-    after runs on 5 rows."""
-    from pyspark.sql import Window
-
-    budget = 10000
-    cust = _t(spark, sf_dir, "customer").select(
-        "c_custkey", "c_mktsegment"
-    )
-    orders = _t(spark, sf_dir, "orders")
-    rows = orders.join(
-        cust, orders["o_custkey"] == cust["c_custkey"]
-    ).select(
-        "c_mktsegment",
-        F.expr(
-            "CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)"
-        ).alias("x"),
-    )
-    dec = "DECIMAL(38,0)"
-    g = rows.groupBy("c_mktsegment").agg(
-        F.count(F.lit(1)).alias("n_h"),
-        F.expr(f"SUM(CAST(x AS {dec}))").alias("s"),
-        F.expr(f"SUM(CAST(x AS {dec}) * x)").alias("q"),
-    )
-    w = g.select(
-        "c_mktsegment",
-        "n_h",
-        F.expr(
-            "CAST(FLOOR(SQRT(CAST(CAST(CAST(n_h AS DECIMAL(38,0)) * q"
-            " - s * s AS STRING) AS DOUBLE)) * 0.001 + 0.5) AS BIGINT)"
-        ).alias("w_h"),
-    )
-    wall = Window.partitionBy()
-    quota = w.select(
-        "c_mktsegment",
-        "n_h",
-        "w_h",
-        F.sum("w_h").over(wall).alias("w_tot"),
-    ).select(
-        "c_mktsegment",
-        "n_h",
-        "w_h",
-        F.expr(f"({budget} * w_h) div w_tot").alias("base"),
-        F.expr(f"({budget} * w_h) % w_tot").alias("rem"),
-        "w_tot",
-    )
-    wr = Window.orderBy(F.desc("rem"), "c_mktsegment")
-    return (
-        quota.select(
-            "c_mktsegment",
-            "n_h",
-            F.col("w_h").alias("nh_sigma_milli"),
-            "base",
-            F.row_number().over(wr).alias("rrank"),
-            F.sum("base").over(wall).alias("base_tot"),
-        )
-        .select(
-            "c_mktsegment",
-            "n_h",
-            "nh_sigma_milli",
-            F.expr(
-                f"base + CASE WHEN rrank <= {budget} - base_tot"
-                " THEN 1 ELSE 0 END"
-            ).alias("alloc_n"),
-        )
-        .orderBy("c_mktsegment")
-    )
-
-
-ORACLE_NEYMAN = """
-    WITH rows_ AS (SELECT c_mktsegment,
-            CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT) AS x
-        FROM orders JOIN customer ON o_custkey = c_custkey),
-    g AS (SELECT c_mktsegment, CAST(COUNT(*) AS BIGINT) AS n_h,
-            CAST(SUM(CAST(x AS HUGEINT)) AS HUGEINT) AS s,
-            CAST(SUM(CAST(x AS HUGEINT) * x) AS HUGEINT) AS q
-        FROM rows_ GROUP BY 1),
-    w AS (SELECT c_mktsegment, n_h,
-            CAST(FLOOR(SQRT(CAST(CAST(CAST(n_h AS HUGEINT) * q - s * s
-                AS VARCHAR) AS DOUBLE)) * 0.001 + 0.5) AS BIGINT) AS w_h
-        FROM g),
-    quota AS (SELECT c_mktsegment, n_h, w_h,
-            CAST(SUM(w_h) OVER () AS BIGINT) AS w_tot
-        FROM w),
-    split AS (SELECT c_mktsegment, n_h, w_h,
-            (10000 * w_h) // w_tot AS base,
-            (10000 * w_h) % w_tot AS rem
-        FROM quota),
-    rk AS (SELECT *,
-            ROW_NUMBER() OVER (ORDER BY rem DESC, c_mktsegment)
-                AS rrank,
-            CAST(SUM(base) OVER () AS BIGINT) AS base_tot
-        FROM split)
-    SELECT c_mktsegment, n_h, w_h AS nh_sigma_milli,
-        CAST(base + CASE WHEN rrank <= 10000 - base_tot
-            THEN 1 ELSE 0 END AS BIGINT) AS alloc_n
-    FROM rk ORDER BY c_mktsegment
-"""
-
-
-def q_ratio_metric_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Delta-method CI for a RATIO metric — revenue per order by
-    segment, where both numerator and denominator vary per customer
-    (conversion_wilson_ci handles proportions; real product metrics
-    are ratios of sums, and naive per-row CIs are wrong because the
-    unit of randomization is the customer).  Var(R) ~ (sxx + R^2*syy
-    - 2R*sxy) / (n * ybar^2) on customer-level (spend, order-count)
-    pairs; all five moments are exact DECIMAL(38,0) sums bridged via
-    VARCHAR, and the closed form runs as the identical IEEE
-    expression, det_round(6) on micro units; half-width uses the
-    1.96 normal literal.
-
-    Scale shape: orders agg to customer, one agg to segment
-    cardinality, per-row closed form on 5 rows."""
-    cust = _t(spark, sf_dir, "customer").select(
-        "c_custkey", "c_mktsegment"
-    )
-    per_cust = (
-        _t(spark, sf_dir, "orders")
-        .groupBy("o_custkey")
-        .agg(
-            F.expr(
-                "SUM(CAST(floor(o_totalprice * 100.0 + 0.5)"
-                " AS BIGINT))"
-            ).alias("x"),
-            F.count(F.lit(1)).alias("y"),
-        )
-    )
-    rows = per_cust.join(
-        cust, per_cust["o_custkey"] == cust["c_custkey"]
-    )
-    dec = "DECIMAL(38,0)"
-    g = rows.groupBy("c_mktsegment").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.expr(f"SUM(CAST(x AS {dec}))").alias("sx"),
-        F.expr(f"SUM(CAST(y AS {dec}))").alias("sy"),
-        F.expr(f"SUM(CAST(x AS {dec}) * x)").alias("sxx"),
-        F.expr(f"SUM(CAST(y AS {dec}) * y)").alias("syy"),
-        F.expr(f"SUM(CAST(x AS {dec}) * y)").alias("sxy"),
-    )
-    br = lambda c: f"CAST(CAST({c} AS STRING) AS DOUBLE)"  # noqa: E731
-    dn = "CAST(n AS DOUBLE)"
-    dx, dy = br("sx"), br("sy")
-    dxx, dyy, dxy = br("sxx"), br("syy"), br("sxy")
-    r = f"({dx} / {dy})"
-    ybar = f"({dy} / {dn})"
-    sxx_c = f"(({dxx}) - ({dx}) * ({dx}) / {dn}) / ({dn} - 1.0)"
-    syy_c = f"(({dyy}) - ({dy}) * ({dy}) / {dn}) / ({dn} - 1.0)"
-    sxy_c = f"(({dxy}) - ({dx}) * ({dy}) / {dn}) / ({dn} - 1.0)"
-    var_r = (
-        f"(({sxx_c}) + ({r}) * ({r}) * ({syy_c})"
-        f" - 2.0 * ({r}) * ({sxy_c})) / ({dn} * ({ybar}) * ({ybar}))"
-    )
-    return g.select(
-        "c_mktsegment",
-        "n",
-        F.expr(
-            f"(CAST(FLOOR({r} * 1000000.0 + 0.5) AS DOUBLE)"
-            " / CAST(1000000.0 AS DOUBLE))"
-        ).alias("rev_per_order_cents"),
-        F.expr(
-            f"(CAST(FLOOR(1.96 * SQRT({var_r}) * 1000000.0 + 0.5)"
-            " AS DOUBLE) / CAST(1000000.0 AS DOUBLE))"
-        ).alias("ci_halfwidth_cents"),
-    ).orderBy("c_mktsegment")
-
-
-ORACLE_RATIO_CI = """
-    WITH per_cust AS (SELECT o_custkey,
-            CAST(SUM(CAST(FLOOR(o_totalprice * 100.0 + 0.5)
-                AS BIGINT)) AS BIGINT) AS x,
-            CAST(COUNT(*) AS BIGINT) AS y
-        FROM orders GROUP BY 1),
-    rows_ AS (SELECT c_mktsegment, x, y
-        FROM per_cust JOIN customer ON o_custkey = c_custkey),
-    g AS (SELECT c_mktsegment, CAST(COUNT(*) AS BIGINT) AS n,
-            CAST(SUM(CAST(x AS HUGEINT)) AS HUGEINT) AS sx,
-            CAST(SUM(CAST(y AS HUGEINT)) AS HUGEINT) AS sy,
-            CAST(SUM(CAST(x AS HUGEINT) * x) AS HUGEINT) AS sxx,
-            CAST(SUM(CAST(y AS HUGEINT) * y) AS HUGEINT) AS syy,
-            CAST(SUM(CAST(x AS HUGEINT) * y) AS HUGEINT) AS sxy
-        FROM rows_ GROUP BY 1),
-    b AS (SELECT c_mktsegment, n, CAST(n AS DOUBLE) AS dn,
-            CAST(CAST(sx AS VARCHAR) AS DOUBLE) AS dx,
-            CAST(CAST(sy AS VARCHAR) AS DOUBLE) AS dy,
-            CAST(CAST(sxx AS VARCHAR) AS DOUBLE) AS dxx,
-            CAST(CAST(syy AS VARCHAR) AS DOUBLE) AS dyy,
-            CAST(CAST(sxy AS VARCHAR) AS DOUBLE) AS dxy
-        FROM g)
-    SELECT c_mktsegment, n,
-        (FLOOR((dx / dy) * 1000000.0 + 0.5) / 1000000.0)
-            AS rev_per_order_cents,
-        (FLOOR(1.96 * SQRT(
-            ((dxx - dx * dx / dn) / (dn - 1.0)
-             + (dx / dy) * (dx / dy) * ((dyy - dy * dy / dn) / (dn - 1.0))
-             - 2.0 * (dx / dy) * ((dxy - dx * dy / dn) / (dn - 1.0)))
-            / (dn * (dy / dn) * (dy / dn))) * 1000000.0 + 0.5)
-         / 1000000.0) AS ci_halfwidth_cents
-    FROM b ORDER BY c_mktsegment
-"""
-
-
-def q_fd_g3_errors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Approximate functional-dependency mining (TANE's g3 error): for
-    each candidate A -> B, the fraction of rows that must be removed
-    for the FD to hold exactly — 1 - sum_a max_b count(a,b) / n, in
-    exact ppm.  Four candidates spanning clean and dirty cases: a
-    profiling pass that DISCOVERS near-keys and near-determinants the
-    schema doesn't declare (constraint_audit checks declared
-    invariants; this hunts undeclared ones).
-
-    Scale shape: per candidate, one agg to (A, B) cardinality, a max
-    per A, one 1-row rollup; candidates union at report size."""
-
-    def g3(df, a, b, name):
-        ab = df.groupBy(a, b).agg(F.count(F.lit(1)).alias("c"))
-        mx = ab.groupBy(a).agg(F.max("c").alias("mc"))
-        tot = df.agg(F.count(F.lit(1)).alias("n"))
-        return (
-            mx.agg(
-                F.sum("mc").alias("keep"),
-                F.count(F.lit(1)).alias("n_groups"),
-            )
-            .crossJoin(F.broadcast(tot))
-            .select(
-                F.lit(name).alias("fd"),
-                F.col("n").alias("n_rows"),
-                "n_groups",
-                F.expr(
-                    "CAST((n - keep) * 1000000 div n AS BIGINT)"
-                ).alias("g3_ppm"),
-            )
-        )
-
-    ev = _t(spark, sf_dir, "events")
-    orders = _t(spark, sf_dir, "orders")
-    return (
-        g3(ev, "user_id", "event_type", "user_to_type")
-        .unionByName(g3(ev, "event_type", "user_id", "type_to_user"))
-        .unionByName(
-            g3(orders, "o_custkey", "o_orderpriority", "cust_to_priority")
-        )
-        .unionByName(
-            g3(orders, "o_orderpriority", "o_orderstatus",
-               "priority_to_status")
-        )
-        .orderBy("fd")
-    )
-
-
-def _g3_sql(table: str, a: str, b: str, name: str) -> str:
-    return f"""
-    (SELECT '{name}' AS fd,
-        (SELECT CAST(COUNT(*) AS BIGINT) FROM {table}) AS n_rows,
-        CAST(COUNT(*) AS BIGINT) AS n_groups,
-        CAST(((SELECT CAST(COUNT(*) AS BIGINT) FROM {table})
-              - SUM(mc)) * 1000000
-             // (SELECT CAST(COUNT(*) AS BIGINT) FROM {table})
-             AS BIGINT) AS g3_ppm
-     FROM (SELECT {a}, CAST(MAX(c) AS BIGINT) AS mc
-           FROM (SELECT {a}, {b}, CAST(COUNT(*) AS BIGINT) AS c
-                 FROM {table} GROUP BY 1, 2)
-           GROUP BY 1))"""
-
-
-ORACLE_FD_G3 = f"""
-    SELECT * FROM (
-        {_g3_sql("events", "user_id", "event_type", "user_to_type")}
-        UNION ALL
-        {_g3_sql("events", "event_type", "user_id", "type_to_user")}
-        UNION ALL
-        {_g3_sql("orders", "o_custkey", "o_orderpriority",
-                 "cust_to_priority")}
-        UNION ALL
-        {_g3_sql("orders", "o_orderpriority", "o_orderstatus",
-                 "priority_to_status")}
-    ) ORDER BY fd
-"""
-
-
-# ---------------------------------------------------------------- wave 7h
-
-
-def q_hash_walk_visits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic pseudo-random walks on the part co-order graph —
-    the DeepWalk/node2vec precursor made engine-replayable: from every
-    node, walk 3 steps where step k leaves node v through neighbor
-    index md5(v '_' k) mod degree(v) (the md5-int idiom; a real RNG
-    would be unverifiable across engines, and hash-walks have the
-    same mixing behavior for embedding/sampling purposes).  Top 20
-    most-visited endpoints with visit counts — high-visit nodes are
-    the graph's hubs as a WALK measure, which weights connectivity
-    differently than raw degree (kcore_parts) or triangles.
-
-    Scale shape: adjacency ranked once per direction (window
-    partitioned by source node at edge cardinality); each step is
-    one broadcast-degree lookup + one equi-join on (node, index);
-    TakeOrdered(20) finish."""
-    from pyspark.sql import Window
-
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    pp = li.distinct()
-    und = G.undirected_edges_min_support(
-        pp, "l_orderkey", "l_partkey", min_support=2
-    )
-    adj = und.select(
-        F.col("a").alias("src"), F.col("b").alias("dst")
-    ).unionByName(
-        und.select(F.col("b").alias("src"), F.col("a").alias("dst"))
-    )
-    wn = Window.partitionBy("src").orderBy("dst")
-    ranked = adj.select(
-        "src", "dst", (F.row_number().over(wn) - 1).alias("idx")
-    )
-    deg = ranked.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    walk = deg.select(F.col("src").alias("v0"), F.col("src").alias("cur"))
-    for k in range(1, 4):
-        hidx = F.expr(
-            f"pmod(conv(substring(md5(concat(CAST(cur AS STRING),"
-            f" '_', '{k}')), 1, 10), 16, 10), deg)"
-        ).cast("bigint")
-        walk = (
-            walk.join(deg.withColumnRenamed("src", "cur"), "cur")
-            .select("v0", "cur", hidx.alias("idx"))
-            .join(
-                ranked.select(
-                    F.col("src").alias("cur"), "idx", "dst"
-                ),
-                ["cur", "idx"],
-            )
-            .select("v0", F.col("dst").alias("cur"))
-        )
-    return (
-        walk.groupBy(F.col("cur").alias("endpoint"))
-        .agg(F.count(F.lit(1)).alias("visits"))
-        .orderBy(F.desc("visits"), "endpoint")
-        .limit(20)
-    )
-
-
-def _hash_walk_oracle() -> str:
-    steps = []
-    prev = "w0"
-    for k in range(1, 4):
-        hidx = (
-            f"('0x' || substr(md5(CAST(cur AS VARCHAR) || '_' || '{k}'),"
-            f" 1, 10))::BIGINT % deg"
-        )
-        steps.append(
-            f"w{k} AS (SELECT v0, r.dst AS cur"
-            f" FROM (SELECT v0, {prev}.cur, {hidx} AS idx"
-            f"       FROM {prev} JOIN deg ON deg.src = {prev}.cur) s"
-            f" JOIN ranked r ON r.src = s.cur AND r.idx = s.idx)"
-        )
-        prev = f"w{k}"
-    # ranked is probed by all 3 walk steps and deg by all 4 — inlined,
-    # each consumer re-runs the 60M-row co-order self-join, and the
-    # concurrent instances spilled /tmp to death at sf10 (the same
-    # CTE-inlining class as pagerank/BPE/Bradley-Terry).  MATERIALIZED
-    # pins the edge list once (|adj| rows of 3 ints).
-    return f"""
-    WITH pp AS (SELECT DISTINCT l_orderkey AS g, l_partkey AS p
-        FROM lineitem),
-    und AS (SELECT a.p AS a, b.p AS b
-        FROM pp a JOIN pp b ON a.g = b.g AND a.p < b.p
-        GROUP BY 1, 2 HAVING COUNT(*) >= 2),
-    adj AS (SELECT a AS src, b AS dst FROM und
-        UNION ALL SELECT b, a FROM und),
-    ranked AS MATERIALIZED (SELECT src, dst,
-            ROW_NUMBER() OVER (PARTITION BY src ORDER BY dst) - 1
-                AS idx
-        FROM adj),
-    deg AS MATERIALIZED (SELECT src, CAST(COUNT(*) AS BIGINT) AS deg
-        FROM ranked GROUP BY 1),
-    w0 AS (SELECT src AS v0, src AS cur FROM deg),
-    {",".join(steps)}
-    SELECT cur AS endpoint, CAST(COUNT(*) AS BIGINT) AS visits
-    FROM {prev} GROUP BY 1 ORDER BY visits DESC, endpoint LIMIT 20
-"""
-
-
-ORACLE_HASH_WALK = _hash_walk_oracle()
-
-
-def q_markov_top1_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Holdout accuracy of the Markov next-event predictor: train
-    transition counts on EVEN user_ids, predict each ODD user's next
-    event as the argmax transition from the current state (ties to
-    the lexicographically first destination — deterministic), and
-    report top-1 accuracy per source state in exact ppm.  The eval
-    that turns markov_transitions from a description into a model —
-    and the holdout discipline (train/test by user hash) matches
-    lm_holdout_compare.
-
-    Scale shape: train agg at state-pair cardinality, argmax via a
-    src-partitioned rank window (state cardinality), test pairs join
-    the 1-per-state prediction table broadcast."""
-    from pyspark.sql import Window
-
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-
-    def pairs_of(pred):
-        return (
-            ev.filter(pred)
-            .select(
-                "user_id",
-                "ts",
-                "event_id",
-                F.col("event_type").alias("src"),
-                F.lead("event_type").over(w).alias("dst"),
-            )
-            .filter(F.col("dst").isNotNull())
-        )
-
-    train = (
-        pairs_of(F.col("user_id") % 2 == 0)
-        .groupBy("src", "dst")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    wr = Window.partitionBy("src").orderBy(F.desc("c"), "dst")
-    pred = (
-        train.withColumn("rn", F.row_number().over(wr))
-        .filter(F.col("rn") == 1)
-        .select("src", F.col("dst").alias("predicted"))
-    )
-    test = pairs_of(F.col("user_id") % 2 == 1).select("src", "dst")
-    scored = test.join(F.broadcast(pred), "src", "left").select(
-        "src",
-        (F.col("dst") == F.col("predicted")).cast("bigint").alias(
-            "hit"
-        ),
-    )
-    return (
-        scored.groupBy("src")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum("hit").alias("n_hits"),
-        )
-        .select(
-            "src",
-            "n_events",
-            "n_hits",
-            F.expr("n_hits * 1000000 div n_events").alias(
-                "top1_acc_ppm"
-            ),
-        )
-        .orderBy("src")
-    )
-
-
-ORACLE_MARKOV_TOP1 = """
-    WITH seq AS (SELECT user_id, event_type AS src,
-            LEAD(event_type) OVER (PARTITION BY user_id
-                ORDER BY ts, event_id) AS dst
-        FROM events),
-    train AS (SELECT src, dst, CAST(COUNT(*) AS BIGINT) AS c
-        FROM seq WHERE dst IS NOT NULL AND user_id % 2 = 0
-        GROUP BY 1, 2),
-    pred AS (SELECT src, dst AS predicted FROM (
-            SELECT src, dst,
-                ROW_NUMBER() OVER (PARTITION BY src
-                    ORDER BY c DESC, dst) AS rn
-            FROM train) WHERE rn = 1),
-    test AS (SELECT src, dst FROM seq
-        WHERE dst IS NOT NULL AND user_id % 2 = 1),
-    scored AS (SELECT test.src,
-            CASE WHEN test.dst = pred.predicted THEN 1 ELSE 0 END
-                AS hit
-        FROM test LEFT JOIN pred ON test.src = pred.src)
-    SELECT src, CAST(COUNT(*) AS BIGINT) AS n_events,
-        CAST(SUM(hit) AS BIGINT) AS n_hits,
-        CAST(SUM(hit) AS BIGINT) * 1000000 // CAST(COUNT(*) AS BIGINT)
-            AS top1_acc_ppm
-    FROM scored GROUP BY 1 ORDER BY src
-"""
-
-
-# ---------------------------------------------------------------- wave 7i
-
-
-def q_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Murphy decomposition of the Brier score for the quality-score-
-    predicts-English classifier (same setup as classifier_auc):
-    Brier = Reliability - Resolution + Uncertainty, the diagnosis that
-    says WHY a probabilistic score is bad — miscalibrated (REL), or
-    just uninformative (low RES).  The score takes quarter values
-    q/4, so 16*N*Brier is an exact integer; REL and RES quantize
-    per-BIN to micro via exact integer division (positive terms, so
-    both engines floor identically) before the bounded 5-row sum.
-
-    Scale shape: one partial agg to the 5-row score histogram;
-    everything else is 5-row arithmetic."""
-    docs = _t(spark, sf_dir, "documents")
-    # quality_score returns k/4; q = 4*score is integer 0..4
-    scored = docs.select(
-        (TX.quality_score(F.col("text")) * 4).cast("bigint").alias("q"),
-        (F.col("lang") == "en").cast("bigint").alias("y"),
-    )
-    hist = scored.groupBy("q").agg(
-        F.count(F.lit(1)).alias("n_k"), F.sum("y").alias("s_k")
-    )
-    from pyspark.sql import Window
-
-    wall = Window.partitionBy()
-    dec = "DECIMAL(38,0)"
-    tot = hist.select(
-        "q",
-        "n_k",
-        "s_k",
-        F.sum("n_k").over(wall).alias("n"),
-        F.sum("s_k").over(wall).alias("s"),
-    )
-    terms = tot.select(
-        "n",
-        "s",
-        F.expr(
-            f"CAST(n_k AS {dec}) * q * q - 8 * (CAST(q AS {dec}) * s_k)"
-            f" + 16 * CAST(s_k AS {dec})"
-        ).alias("b16"),
-        F.expr(
-            f"(CAST(q AS {dec}) * n_k - 4 * CAST(s_k AS {dec}))"
-            f" * (CAST(q AS {dec}) * n_k - 4 * CAST(s_k AS {dec}))"
-            f" * 1000000 div (16 * CAST(n_k AS {dec}) * n)"
-        ).alias("rel_k"),
-        # two-step floor division: X^2 alone reaches 1e36 at 1e9 docs,
-        # so *1e6 first would pass DECIMAL(38); divide by (n_k*N) before
-        # scaling (same two-step on the oracle side — engines agree)
-        F.expr(
-            f"((CAST(s_k AS {dec}) * n - CAST(s AS {dec}) * n_k)"
-            f" * (CAST(s_k AS {dec}) * n - CAST(s AS {dec}) * n_k)"
-            f" div (CAST(n_k AS {dec}) * n)) * 1000000"
-            f" div (CAST(n AS {dec}) * n)"
-        ).alias("res_k"),
-    )
-    return terms.groupBy("n", "s").agg(
-        F.expr(
-            f"CAST(SUM(b16) * 1000000 div (16 * CAST(MAX(n) AS {dec}))"
-            " AS BIGINT)"
-        ).alias("brier_micro"),
-        F.expr("CAST(SUM(rel_k) AS BIGINT)").alias("rel_micro"),
-        F.expr("CAST(SUM(res_k) AS BIGINT)").alias("res_micro"),
-    ).select(
-        F.col("n").alias("n_docs"),
-        F.col("s").alias("n_pos"),
-        "brier_micro",
-        "rel_micro",
-        "res_micro",
-        F.expr(
-            f"CAST(CAST(s AS {dec}) * (n - s) * 1000000"
-            f" div (CAST(n AS {dec}) * n) AS BIGINT)"
-        ).alias("unc_micro"),
-    )
-
-
-ORACLE_BRIER = """
-    WITH t AS (SELECT doc_id, text,
-        list_filter(string_split_regex(trim(text), '\\s+'),
-                    x -> x <> '') AS toks,
-        CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
-    FROM documents),
-    m AS (SELECT doc_id, y,
-        len(toks) AS n_tok,
-        len(list_filter(list_transform(toks, x -> lower(x)),
-            x -> list_contains(['the','a','of','to','and','in','is',
-                                'it','for','on'], x))) AS n_stop,
-        length(text) AS n_chars,
-        length(regexp_replace(text, '[^\\w\\s]', '', 'g')) AS n_nopunct,
-        list_sum(list_transform(toks, x -> length(x))) AS tok_chars
-    FROM t),
-    scored AS (SELECT y, CAST(
-        (CASE WHEN n_tok >= 10 AND n_tok <= 100000 THEN 1 ELSE 0 END) +
-        (CASE WHEN n_tok > 0
-              AND CAST(n_stop AS DOUBLE) / n_tok >= 0.01
-              THEN 1 ELSE 0 END) +
-        (CASE WHEN n_chars = 0
-              OR CAST(n_chars - n_nopunct AS DOUBLE) / n_chars <= 0.2
-              THEN 1 ELSE 0 END) +
-        (CASE WHEN n_tok > 0 AND CAST(tok_chars AS DOUBLE) / n_tok >= 2
-              AND CAST(tok_chars AS DOUBLE) / n_tok <= 12
-              THEN 1 ELSE 0 END) AS BIGINT) AS q
-    FROM m),
-    hist AS (SELECT q, CAST(COUNT(*) AS BIGINT) AS n_k,
-            CAST(SUM(y) AS BIGINT) AS s_k
-        FROM scored GROUP BY 1),
-    tot AS (SELECT q, n_k, s_k,
-            CAST(SUM(n_k) OVER () AS BIGINT) AS n,
-            CAST(SUM(s_k) OVER () AS BIGINT) AS s
-        FROM hist),
-    terms AS (SELECT n, s,
-            CAST(n_k AS HUGEINT) * q * q - 8 * (CAST(q AS HUGEINT) * s_k)
-                + 16 * CAST(s_k AS HUGEINT) AS b16,
-            (CAST(q AS HUGEINT) * n_k - 4 * CAST(s_k AS HUGEINT))
-                * (CAST(q AS HUGEINT) * n_k - 4 * CAST(s_k AS HUGEINT))
-                * 1000000 // (16 * CAST(n_k AS HUGEINT) * n) AS rel_k,
-            ((CAST(s_k AS HUGEINT) * n - CAST(s AS HUGEINT) * n_k)
-                * (CAST(s_k AS HUGEINT) * n - CAST(s AS HUGEINT) * n_k)
-                // (CAST(n_k AS HUGEINT) * n)) * 1000000
-                // (CAST(n AS HUGEINT) * n) AS res_k
-        FROM tot)
-    SELECT n AS n_docs, s AS n_pos,
-        CAST(SUM(b16) * 1000000 // (16 * CAST(MAX(n) AS HUGEINT))
-             AS BIGINT) AS brier_micro,
-        CAST(SUM(rel_k) AS BIGINT) AS rel_micro,
-        CAST(SUM(res_k) AS BIGINT) AS res_micro,
-        CAST(CAST(MAX(s) AS HUGEINT) * (MAX(n) - MAX(s)) * 1000000
-             // (CAST(MAX(n) AS HUGEINT) * MAX(n)) AS BIGINT)
-            AS unc_micro
-    FROM terms GROUP BY n, s
-"""
-
-
-def q_mde_power_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Minimum detectable effect per market segment: the A/B-test
-    planning number — with this segment's order-value variance and
-    size, the smallest revenue-per-order lift (in cents, and in ppm
-    of the mean) a 50/50 split can detect at alpha=0.05 two-sided,
-    power=0.80: MDE = (1.96 + 0.84) * sqrt(2 * s^2 / (n/2)).
-    Variance comes from exact DECIMAL moments bridged via VARCHAR;
-    the closed form is the identical IEEE expression, half-up
-    micro-quantized.  Run BEFORE an experiment; conversion_wilson_ci
-    and ratio_metric_ci grade it after.
-
-    Scale shape: one fact agg to segment cardinality, per-row closed
-    form on 5 rows."""
-    cust = _t(spark, sf_dir, "customer").select(
-        "c_custkey", "c_mktsegment"
-    )
-    rows = (
-        _t(spark, sf_dir, "orders")
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .select(
-            "c_mktsegment",
-            F.expr(
-                "CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)"
-            ).alias("x"),
-        )
-    )
-    dec = "DECIMAL(38,0)"
-    g = rows.groupBy("c_mktsegment").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.expr(f"SUM(CAST(x AS {dec}))").alias("s"),
-        F.expr(f"SUM(CAST(x AS {dec}) * x)").alias("q"),
-    )
-    br = lambda c: f"CAST(CAST({c} AS STRING) AS DOUBLE)"  # noqa: E731
-    dn = "CAST(n AS DOUBLE)"
-    var = (
-        f"(({br('q')}) - ({br('s')}) * ({br('s')}) / {dn})"
-        f" / ({dn} - 1.0)"
-    )
-    mde = f"(2.8 * SQRT(2.0 * ({var}) / ({dn} / 2.0)))"
-    return g.select(
-        "c_mktsegment",
-        "n",
-        F.expr(
-            f"(CAST(FLOOR({mde} * 1000000.0 + 0.5) AS DOUBLE)"
-            " / CAST(1000000.0 AS DOUBLE))"
-        ).alias("mde_cents"),
-        F.expr(
-            f"CAST(FLOOR({mde} * {dn} / ({br('s')}) * 1000000.0 + 0.5)"
-            " AS BIGINT)"
-        ).alias("mde_ppm_of_mean"),
-    ).orderBy("c_mktsegment")
-
-
-ORACLE_MDE = """
-    WITH rows_ AS (SELECT c_mktsegment,
-            CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT) AS x
-        FROM orders JOIN customer ON o_custkey = c_custkey),
-    g AS (SELECT c_mktsegment, CAST(COUNT(*) AS BIGINT) AS n,
-            CAST(SUM(CAST(x AS HUGEINT)) AS HUGEINT) AS s,
-            CAST(SUM(CAST(x AS HUGEINT) * x) AS HUGEINT) AS q
-        FROM rows_ GROUP BY 1),
-    b AS (SELECT c_mktsegment, n, CAST(n AS DOUBLE) AS dn,
-            CAST(CAST(s AS VARCHAR) AS DOUBLE) AS ds,
-            CAST(CAST(q AS VARCHAR) AS DOUBLE) AS dq
-        FROM g)
-    SELECT c_mktsegment, n,
-        (FLOOR((2.8 * SQRT(2.0 * ((dq - ds * ds / dn) / (dn - 1.0))
-            / (dn / 2.0))) * 1000000.0 + 0.5) / 1000000.0) AS mde_cents,
-        CAST(FLOOR((2.8 * SQRT(2.0 * ((dq - ds * ds / dn) / (dn - 1.0))
-            / (dn / 2.0))) * dn / ds * 1000000.0 + 0.5) AS BIGINT)
-            AS mde_ppm_of_mean
-    FROM b ORDER BY c_mktsegment
-"""
-
-
-# ---------------------------------------------------------------- wave 7j
-
-_MEDREG_GRID = list(range(80000, 122000, 2000))  # cents per unit
-
-
-def q_median_regression_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Median (L1) regression of extended price on quantity through the
-    origin, by exhaustive grid: for 21 candidate slopes (cents/unit)
-    evaluate the absolute-loss sum EXACTLY in DECIMAL(38,0) and rank —
-    the outlier-robust price-per-unit estimate (theil_sen_trend is the
-    pairwise-slope flavor; this is the loss-minimization flavor, and
-    the full loss curve it emits shows HOW flat the optimum is).  All
-    21 losses accumulate in ONE scan as conditional aggregate
-    expressions — no grid crossJoin, no 21x row fan-out.
-
-    Scale shape: single partial-combined 21-expression aggregate, then
-    21-row unpivot + rank."""
-    li = _t(spark, sf_dir, "lineitem").select(
-        F.expr(
-            "CAST(floor(l_extendedprice * 100.0 + 0.5) AS BIGINT)"
-        ).alias("y"),
-        F.expr("CAST(floor(l_quantity + 0.5) AS BIGINT)").alias("x"),
-    )
-    aggs = [
-        F.expr(
-            f"SUM(CAST(abs(y - {b} * x) AS DECIMAL(38,0)))"
-        ).alias(f"l_{b}")
-        for b in _MEDREG_GRID
-    ]
-    g = li.agg(F.count(F.lit(1)).alias("n"), *aggs)
-    stack = ", ".join(
-        f"CAST({b} AS BIGINT), l_{b}" for b in _MEDREG_GRID
-    )
-    unp = g.select(
-        "n",
-        F.expr(
-            f"stack({len(_MEDREG_GRID)}, {stack})"
-            " AS (slope_cents, loss)"
-        ),
-    )
-    from pyspark.sql import Window
-
-    w = Window.orderBy("loss", "slope_cents")
-    return unp.select(
-        "slope_cents",
-        F.expr("CAST(loss div n AS BIGINT)").alias("mean_abs_err_cents"),
-        F.row_number().over(w).cast("bigint").alias("rank"),
-    ).orderBy("slope_cents")
-
-
-def _medreg_oracle() -> str:
-    sums = ",\n            ".join(
-        f"CAST(SUM(CAST(ABS(y - {b} * x) AS HUGEINT)) AS HUGEINT)"
-        f" AS l_{b}"
-        for b in _MEDREG_GRID
-    )
-    rows = "\n        UNION ALL ".join(
-        f"SELECT CAST({b} AS BIGINT) AS slope_cents,"
-        f" CAST(l_{b} // n AS BIGINT) AS mean_abs_err_cents,"
-        f" l_{b} AS loss FROM g"
-        for b in _MEDREG_GRID
-    )
-    return f"""
-    WITH li AS (SELECT
-            CAST(FLOOR(l_extendedprice * 100.0 + 0.5) AS BIGINT) AS y,
-            CAST(FLOOR(l_quantity + 0.5) AS BIGINT) AS x
-        FROM lineitem),
-    g AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
-            {sums}
-        FROM li),
-    u AS ({rows})
-    SELECT slope_cents, mean_abs_err_cents,
-        CAST(ROW_NUMBER() OVER (ORDER BY loss, slope_cents) AS BIGINT)
-            AS rank
-    FROM u ORDER BY slope_cents
-"""
-
-
-ORACLE_MEDIAN_REGRESSION = _medreg_oracle()
-
-
-def q_eta_squared_factors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Variance explained (eta-squared) by calendar factors on daily
-    revenue: one-way between-group sum of squares for day-of-week and
-    for month, each against the same total SS — the screen that says
-    whether weekday seasonality or monthly seasonality is worth
-    modeling at all (seasonal_decompose_daily then extracts it).
-    Exact integers: SS_total as sum of (N*x - S)^2 / N^2-scaled terms
-    and each group's (S_g*N - S*n_g)^2 term divided by its FULL
-    divisor (n_g * N * N * 10^6) in ONE `div` — the r8 sf1 sweep
-    caught the two-step form wrapping silently: Spark's IntegralDivide
-    on decimals returns LONG and the inner quotient reached 1.15e19 >
-    int64 even though the final value fits (ANSI does NOT trap this
-    wrap).  floor(floor(x/m)/n) = floor(x/(m*n)) for positive
-    integers, so the one-step value is bit-identical to the oracle's
-    HUGEINT form.  Units are musd^2 (usd^2 div 10^6, folded into each
-    term's single divisor): the r8 sf10 sweep hit the documented usd^2
-    ceiling for real — raw SS crossed int64 (~1.3e20) and the LONG sum
-    of per-term quotients threw under ANSI — so the predicted rescale
-    path shipped.  Per-term quotients stay <=~1e14 through sf100 and
-    the DECIMAL(38,0) numerators peak ~6.6e33, leaving 4 decades of
-    headroom.
-
-    Scale shape: fact agg to day cardinality (bounded by calendar),
-    two tiny factor rollups, 2 rows out."""
-    orders = _t(spark, sf_dir, "orders")
-    daily = (
-        orders.select(
-            F.col("o_orderdate").cast("date").alias("day"),
-            F.expr(
-                "CAST(floor(o_totalprice + 0.5) AS BIGINT)"
-            ).alias("usd"),
-        )
-        .groupBy("day")
-        .agg(F.sum("usd").alias("x"))
-        .select(
-            "day",
-            "x",
-            F.dayofweek("day").alias("dow"),
-            F.month("day").alias("mon"),
-        )
-    )
-    dec = "DECIMAL(38,0)"
-    from pyspark.sql import Window
-
-    wall = Window.partitionBy()
-    base = daily.select(
-        "x",
-        "dow",
-        "mon",
-        F.count(F.lit(1)).over(wall).alias("n"),
-        F.sum("x").over(wall).alias("s"),
-    )
-    # SS_total * N^2 — exact; term (N*x - S)^2 <= (2500 * 1e15)^2 at
-    # 100 TB: a single div with the 10^6 micro-unit scale folded into
-    # the divisor (n*n*10^6) keeps the quotient inside DECIMAL(38)
-    sst = base.select(
-        F.expr(
-            f"((CAST(n AS {dec}) * x - s) * (CAST(n AS {dec}) * x - s)"
-            f" div (CAST(n AS {dec}) * n * 1000000)) "
-        ).alias("t"),
-        "n",
-    ).agg(F.max("n").alias("n"), F.sum("t").alias("ss_tot"))
-
-    def ss_between(col, label):
-        grp = base.groupBy(col).agg(
-            F.count(F.lit(1)).alias("n_g"),
-            F.sum("x").alias("s_g"),
-            F.max("n").alias("n"),
-            F.max("s").alias("s"),
-        )
-        per = grp.select(
-            # one div with the combined divisor — see the docstring:
-            # the two-step form's inner quotient wraps int64 at sf1
-            F.expr(
-                f"((CAST(s_g AS {dec}) * n - CAST(s AS {dec}) * n_g)"
-                f" * (CAST(s_g AS {dec}) * n - CAST(s AS {dec}) * n_g))"
-                f" div (CAST(n_g AS {dec}) * n * n * 1000000)"
-            ).alias("t")
-        )
-        return per.agg(
-            F.lit(label).alias("factor"),
-            F.count(F.lit(1)).alias("n_groups"),
-            F.sum("t").alias("ss_between"),
-        )
-
-    both = ss_between("dow", "day_of_week").unionByName(
-        ss_between("mon", "month")
-    )
-    return (
-        both.crossJoin(F.broadcast(sst))
-        .select(
-            "factor",
-            "n_groups",
-            F.expr("CAST(ss_between AS BIGINT)").alias("ss_between_musd2"),
-            F.expr("CAST(ss_tot AS BIGINT)").alias("ss_total_musd2"),
-            # Spark `div` returns LONG, so rescale through DECIMAL —
-            # ss * 1e6 passes int64 already at sf0.1
-            F.expr(
-                "CAST(CAST(ss_between AS DECIMAL(38,0)) * 1000000"
-                " div ss_tot AS BIGINT)"
-            ).alias("eta2_ppm"),
-        )
-        .orderBy("factor")
-    )
-
-
-ORACLE_ETA_SQUARED = """
-    WITH daily AS (SELECT CAST(o_orderdate AS DATE) AS day,
-            CAST(SUM(CAST(FLOOR(o_totalprice + 0.5) AS BIGINT))
-                AS BIGINT) AS x
-        FROM orders GROUP BY 1),
-    base AS (SELECT x, dayofweek(day) + 1 AS dow, month(day) AS mon,
-            CAST(COUNT(*) OVER () AS BIGINT) AS n,
-            CAST(SUM(x) OVER () AS BIGINT) AS s
-        FROM daily),
-    sst AS (SELECT MAX(n) AS n,
-            CAST(SUM((CAST(n AS HUGEINT) * x - s)
-                * (CAST(n AS HUGEINT) * x - s)
-                // (CAST(n AS HUGEINT) * n * 1000000)) AS HUGEINT)
-                AS ss_tot
-        FROM base),
-    dowg AS (SELECT dow, CAST(COUNT(*) AS BIGINT) AS n_g,
-            CAST(SUM(x) AS BIGINT) AS s_g,
-            MAX(n) AS n, MAX(s) AS s
-        FROM base GROUP BY 1),
-    mong AS (SELECT mon, CAST(COUNT(*) AS BIGINT) AS n_g,
-            CAST(SUM(x) AS BIGINT) AS s_g,
-            MAX(n) AS n, MAX(s) AS s
-        FROM base GROUP BY 1),
-    u AS (SELECT 'day_of_week' AS factor,
-            CAST(COUNT(*) AS BIGINT) AS n_groups,
-            CAST(SUM((CAST(s_g AS HUGEINT) * n - CAST(s AS HUGEINT)
-                * n_g) * (CAST(s_g AS HUGEINT) * n
-                - CAST(s AS HUGEINT) * n_g)
-                // (CAST(n_g AS HUGEINT) * n * n * 1000000))
-                AS HUGEINT) AS ss_between
-        FROM dowg
-        UNION ALL
-        SELECT 'month', CAST(COUNT(*) AS BIGINT),
-            CAST(SUM((CAST(s_g AS HUGEINT) * n - CAST(s AS HUGEINT)
-                * n_g) * (CAST(s_g AS HUGEINT) * n
-                - CAST(s AS HUGEINT) * n_g)
-                // (CAST(n_g AS HUGEINT) * n * n * 1000000))
-                AS HUGEINT)
-        FROM mong)
-    SELECT factor, n_groups,
-        CAST(ss_between AS BIGINT) AS ss_between_musd2,
-        CAST(ss_tot AS BIGINT) AS ss_total_musd2,
-        CAST(ss_between * 1000000 // ss_tot AS BIGINT) AS eta2_ppm
-    FROM u CROSS JOIN sst ORDER BY factor
-"""
-
-
-# ---------------------------------------------------------------- wave 7k
-
-
-def q_mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mann-Kendall trend test on daily order revenue — the
-    distribution-free companion to theil_sen_trend (which estimates the
-    slope; this tests whether a monotone trend EXISTS, robust to
-    outliers and any monotone transform of revenue).  S = sum over day
-    pairs i<j of sign(x_j - x_i), exact integer; Var(S) carries the
-    standard tie correction (sum over tied-value groups of
-    t(t-1)(2t+5)), also exact — we emit 18*Var to stay integral; the
-    z statistic applies the +-1 continuity correction and is the
-    identical IEEE sqrt/divide on both engines (det6).
-
-    Scale shape: corpus work is ONE day-cardinality aggregate; the
-    pair join runs on the ~2.4k-row daily series (bounded by the DATE
-    DOMAIN, not corpus size — the acf_daily_revenue precedent), so
-    ~3M sign evaluations regardless of SF; ties roll up at distinct-
-    value cardinality; one row out."""
-    o = _t(spark, sf_dir, "orders").select(
-        F.expr(
-            "datediff(CAST(o_orderdate AS DATE), DATE'1992-01-01')"
-        ).alias("day"),
-        F.expr(
-            "CAST(CAST(o_totalprice AS DECIMAL(12,4)) * 10000 AS LONG)"
-        ).alias("cents4"),
-    )
-    # one corpus aggregate, materialized once: the ~2.4k-row daily
-    # series is referenced three times below (both pair sides + ties),
-    # and the broadcast side could not reuse the shuffle exchange —
-    # localCheckpoint truncates the lineage so orders is scanned ONCE
-    # (roundtrip_route_topics barrier precedent; day-bounded, tiny)
-    daily = o.groupBy("day").agg(F.sum("cents4").alias("v")).localCheckpoint()
-    a = daily.select(F.col("day").alias("di"), F.col("v").alias("xi"))
-    b = daily.select(F.col("day").alias("dj"), F.col("v").alias("xj"))
-    pairs = a.join(F.broadcast(b), F.col("di") < F.col("dj"))
-    s = pairs.agg(
-        F.expr(
-            "SUM(CASE WHEN xj > xi THEN 1 WHEN xj < xi THEN -1"
-            " ELSE 0 END)"
-        ).alias("s_stat")
-    )
-    ties = (
-        daily.groupBy("v")
-        .agg(F.count(F.lit(1)).alias("t"))
-        .agg(
-            F.sum("t").alias("n"),
-            F.sum(
-                F.expr("t * (t - 1) * (2 * t + 5)")
-            ).alias("tie_term"),
-        )
-    )
-    r = s.crossJoin(F.broadcast(ties)).select(
-        F.expr("CAST(n AS BIGINT)").alias("n_days"),
-        F.expr("CAST(s_stat AS BIGINT)").alias("s_stat"),
-        F.expr(
-            "CAST(n * (n - 1) * (2 * n + 5) - tie_term AS BIGINT)"
-        ).alias("var_s_x18"),
-    )
-    zc = F.expr(
-        "CASE WHEN s_stat > 0 THEN CAST(s_stat - 1 AS DOUBLE)"
-        " WHEN s_stat < 0 THEN CAST(s_stat + 1 AS DOUBLE)"
-        " ELSE CAST(0 AS DOUBLE) END"
-        " / sqrt(CAST(var_s_x18 AS DOUBLE) / 18.0)"
-    )
-    return r.select(
-        "n_days",
-        "s_stat",
-        "var_s_x18",
-        DET.det_round(zc, 6).alias("z_score"),
-        F.expr(
-            "CASE WHEN s_stat > 0 THEN 'increasing'"
-            " WHEN s_stat < 0 THEN 'decreasing'"
-            " ELSE 'no_trend' END"
-        ).alias("direction"),
-    )
-
-
-ORACLE_MANN_KENDALL = f"""
-    WITH o AS (SELECT
-            date_diff('day', DATE '1992-01-01',
-                CAST(o_orderdate AS DATE)) AS day,
-            CAST(CAST(o_totalprice AS DECIMAL(12,4)) * 10000 AS BIGINT)
-                AS cents4
-        FROM orders),
-    daily AS (SELECT day, CAST(SUM(cents4) AS BIGINT) AS v
-        FROM o GROUP BY day),
-    s AS (SELECT CAST(SUM(CASE WHEN b.v > a.v THEN 1
-                WHEN b.v < a.v THEN -1 ELSE 0 END) AS BIGINT) AS s_stat
-        FROM daily a JOIN daily b ON a.day < b.day),
-    tg AS (SELECT v, CAST(COUNT(*) AS BIGINT) AS t
-        FROM daily GROUP BY v),
-    ties AS (SELECT CAST(SUM(t) AS BIGINT) AS n,
-            CAST(SUM(t * (t - 1) * (2 * t + 5)) AS BIGINT) AS tie_term
-        FROM tg),
-    r AS (SELECT n AS n_days, s_stat,
-            CAST(n * (n - 1) * (2 * n + 5) - tie_term AS BIGINT)
-                AS var_s_x18
-        FROM s CROSS JOIN ties)
-    SELECT n_days, s_stat, var_s_x18,
-        {DET.det_round_sql(
-            "(CASE WHEN s_stat > 0 THEN CAST(s_stat - 1 AS DOUBLE)"
-            " WHEN s_stat < 0 THEN CAST(s_stat + 1 AS DOUBLE)"
-            " ELSE CAST(0 AS DOUBLE) END)"
-            " / SQRT(CAST(var_s_x18 AS DOUBLE) / 18.0)", 6
-        )} AS z_score,
-        CASE WHEN s_stat > 0 THEN 'increasing'
-             WHEN s_stat < 0 THEN 'decreasing'
-             ELSE 'no_trend' END AS direction
-    FROM r
-"""
-
-
-def q_runs_test_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Wald-Wolfowitz runs test: is daily revenue's above/below-median
-    sequence random, or does it clump (momentum / regime persistence)?
-    Days equal to the median drop (standard treatment); the median is
-    the lower median by deterministic (value, day) rank so both
-    engines pick the identical pivot.  Run count, n_above, n_below
-    are exact integers; expected runs is emitted in exact micro-units
-    (2*n1*n2*1e6 div n + 1e6); z is the shared IEEE closed form
-    (det6).
-
-    Scale shape: one day-cardinality aggregate, then rank + lag
-    windows over the ~2.4k-row daily series — bounded by the DATE
-    DOMAIN, so the single-partition window is dimension-sized at any
-    SF (acf precedent); one row out."""
-    from pyspark.sql import Window
-
-    o = _t(spark, sf_dir, "orders").select(
-        F.expr(
-            "datediff(CAST(o_orderdate AS DATE), DATE'1992-01-01')"
-        ).alias("day"),
-        F.expr(
-            "CAST(CAST(o_totalprice AS DECIMAL(12,4)) * 10000 AS LONG)"
-        ).alias("cents4"),
-    )
-    # materialize the day-bounded series once (see mann_kendall note)
-    daily = o.groupBy("day").agg(F.sum("cents4").alias("v")).localCheckpoint()
-    wv = Window.orderBy("v", "day")
-    wall = Window.partitionBy()
-    ranked = daily.select(
-        "day",
-        "v",
-        F.row_number().over(wv).alias("rn"),
-        F.count(F.lit(1)).over(wall).alias("n_all"),
-    )
-    med = ranked.filter(
-        F.col("rn") == F.expr("(n_all + 1) div 2")
-    ).select(F.col("v").alias("med"))
-    signed = (
-        daily.crossJoin(F.broadcast(med))
-        .filter(F.col("v") != F.col("med"))
-        .select(
-            "day", F.expr("CAST(v > med AS INT)").alias("above")
-        )
-    )
-    wd = Window.orderBy("day")
-    seq = signed.select(
-        "above", F.lag("above").over(wd).alias("prev")
-    )
-    r = seq.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("above").alias("n1"),
-        F.count_if(F.col("above") == 0).alias("n2"),
-        F.count_if(
-            F.col("prev").isNull() | (F.col("above") != F.col("prev"))
-        ).alias("runs"),
-    )
-    two = "CAST(2 AS BIGINT) * n1 * n2"
-    z = F.expr(
-        f"(CAST(runs AS DOUBLE) - (CAST({two} AS DOUBLE)"
-        " / CAST(n AS DOUBLE) + 1.0))"
-        f" / sqrt(CAST({two} AS DOUBLE) * ({two} - n)"
-        " / (CAST(n AS DOUBLE) * n * (n - 1)))"
-    )
-    return r.select(
-        F.expr("CAST(n AS BIGINT)").alias("n_days_used"),
-        F.expr("CAST(n1 AS BIGINT)").alias("n_above"),
-        F.expr("CAST(n2 AS BIGINT)").alias("n_below"),
-        F.expr("CAST(runs AS BIGINT)").alias("runs"),
-        F.expr(
-            f"CAST(({two}) * 1000000 div n + 1000000 AS BIGINT)"
-        ).alias("expected_runs_micro"),
-        DET.det_round(z, 6).alias("z_score"),
-    )
-
-
-_RUNS_TWO = "CAST(2 AS BIGINT) * n1 * n2"
-
-ORACLE_RUNS_TEST = f"""
-    WITH o AS (SELECT
-            date_diff('day', DATE '1992-01-01',
-                CAST(o_orderdate AS DATE)) AS day,
-            CAST(CAST(o_totalprice AS DECIMAL(12,4)) * 10000 AS BIGINT)
-                AS cents4
-        FROM orders),
-    daily AS (SELECT day, CAST(SUM(cents4) AS BIGINT) AS v
-        FROM o GROUP BY day),
-    ranked AS (SELECT day, v,
-            ROW_NUMBER() OVER (ORDER BY v, day) AS rn,
-            COUNT(*) OVER () AS n_all
-        FROM daily),
-    med AS (SELECT v AS med FROM ranked
-        WHERE rn = (n_all + 1) // 2),
-    signed AS (SELECT day, CAST(v > med AS INT) AS above
-        FROM daily CROSS JOIN med WHERE v <> med),
-    seq AS (SELECT above,
-            LAG(above) OVER (ORDER BY day) AS prev
-        FROM signed),
-    r AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
-            CAST(SUM(above) AS BIGINT) AS n1,
-            CAST(COUNT(CASE WHEN above = 0 THEN 1 END) AS BIGINT)
-                AS n2,
-            CAST(COUNT(CASE WHEN prev IS NULL OR above <> prev
-                THEN 1 END) AS BIGINT) AS runs
-        FROM seq)
-    SELECT n AS n_days_used, n1 AS n_above, n2 AS n_below, runs,
-        CAST(({_RUNS_TWO}) * 1000000 // n + 1000000 AS BIGINT)
-            AS expected_runs_micro,
-        {DET.det_round_sql(
-            "(CAST(runs AS DOUBLE) - (CAST(" + _RUNS_TWO + " AS DOUBLE)"
-            " / CAST(n AS DOUBLE) + 1.0))"
-            " / SQRT(CAST(" + _RUNS_TWO + " AS DOUBLE)"
-            " * (" + _RUNS_TWO + " - n)"
-            " / (CAST(n AS DOUBLE) * n * (n - 1)))", 6
-        )} AS z_score
-    FROM r
-"""
-
-
-# ---------------------------------------------------------------- wave 7l
-
-_RIDGE_LAMBDA_PCTS = [0, 1, 2, 5, 10, 25]
-
-
-def q_ridge_lambda_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hyperparameter sweep as pure aggregation: 5-fold cross-validated
-    ridge regression (through the origin) of extended price on
-    quantity, for 6 shrinkage levels — 30 train/validate cells from
-    ONE corpus scan, because both the ridge slope and the validation
-    MSE are closed forms over per-fold sufficient statistics
-    (n, Sxx, Sxy, Syy): slope = Sxy/(Sxx + lambda) on the
-    leave-fold-out sums, SSE = Syy - 2b*Sxy + b^2*Sxx on the held-out
-    fold.  No model object, no per-row scoring pass, no second scan.
-    Folds are the md5 60-bit deterministic assignment (ab_test /
-    train_val_test precedent), lambda is expressed as a PERCENT of the
-    training Sxx so the grid is scale-invariant (the same sweep means
-    the same thing at sf0.001 and at 100 TB).  slope_ppm is an exact
-    integer floor division; the MSE identity runs in DECIMAL(38,0)
-    (terms bounded ~5e37 at 100 TB — inside both DECIMAL(38) and
-    HUGEINT; documented margin) and lands as exact cents^2.
-
-    Scale shape: one partial-combined 5-row fold aggregate; everything
-    after is arithmetic on 5 rows exploded x6 — the 100 TB shape of a
-    hyperparameter sweep."""
-    li = _t(spark, sf_dir, "lineitem").select(
-        F.expr(
-            "CAST(floor(l_extendedprice * 100.0 + 0.5) AS BIGINT)"
-        ).alias("y"),
-        F.expr("CAST(floor(l_quantity + 0.5) AS BIGINT)").alias("x"),
-        F.expr(
-            "pmod(CAST(conv(substring(md5(concat("
-            "CAST(l_orderkey AS STRING), '#',"
-            " CAST(l_linenumber AS STRING), '#ridge')), 1, 15), 16, 10)"
-            " AS BIGINT), 5)"
-        ).alias("fold_id"),
-    )
-    dec = "DECIMAL(38,0)"
-    folds = li.groupBy("fold_id").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.expr(f"SUM(CAST(x AS {dec}) * x)").alias("sxx"),
-        F.expr(f"SUM(CAST(x AS {dec}) * y)").alias("sxy"),
-        F.expr(f"SUM(CAST(y AS {dec}) * y)").alias("syy"),
-    )
-    tot = folds.agg(
-        F.expr("SUM(sxx)").alias("txx"), F.expr("SUM(sxy)").alias("txy")
-    )
-    lam = ", ".join(str(p) for p in _RIDGE_LAMBDA_PCTS)
-    cells = (
-        folds.crossJoin(F.broadcast(tot))
-        .select(
-            "fold_id",
-            "n",
-            "sxx",
-            "sxy",
-            "syy",
-            F.expr("txx - sxx").alias("trxx"),
-            F.expr("txy - sxy").alias("trxy"),
-            F.explode(F.expr(f"array({lam})")).alias("lam_pct"),
-        )
-        .select(
-            "lam_pct",
-            "fold_id",
-            F.expr("CAST(n AS BIGINT)").alias("n_val"),
-            F.expr(
-                "CAST(trxy * 1000000 div"
-                " (trxx + (trxx * lam_pct div 100)) AS BIGINT)"
-            ).alias("slope_ppm"),
-            "sxx",
-            "sxy",
-            "syy",
-            "n",
-        )
-    )
-    sse = (
-        "CAST(syy * 1000000000000"
-        f" - CAST(2000000 AS {dec}) * slope_ppm * sxy"
-        f" + CAST(slope_ppm AS {dec}) * slope_ppm * sxx AS {dec})"
-    )
-    return cells.select(
-        "lam_pct",
-        "fold_id",
-        "n_val",
-        "slope_ppm",
-        F.expr(
-            f"CAST({sse} div (CAST(n AS {dec}) * 1000000000000)"
-            " AS BIGINT)"
-        ).alias("val_mse_cents2"),
-    ).orderBy("lam_pct", "fold_id")
-
-
-def _ridge_oracle() -> str:
-    lams = ", ".join(f"({p})" for p in _RIDGE_LAMBDA_PCTS)
-    return f"""
-    WITH li AS (SELECT
-            CAST(FLOOR(l_extendedprice * 100.0 + 0.5) AS BIGINT) AS y,
-            CAST(FLOOR(l_quantity + 0.5) AS BIGINT) AS x,
-            ('0x' || substr(md5(CAST(l_orderkey AS VARCHAR) || '#'
-                || CAST(l_linenumber AS VARCHAR) || '#ridge'), 1, 15))
-                ::BIGINT % 5 AS fold_id
-        FROM lineitem),
-    folds AS (SELECT fold_id, CAST(COUNT(*) AS BIGINT) AS n,
-            SUM(CAST(x AS HUGEINT) * x) AS sxx,
-            SUM(CAST(x AS HUGEINT) * y) AS sxy,
-            SUM(CAST(y AS HUGEINT) * y) AS syy
-        FROM li GROUP BY fold_id),
-    tot AS (SELECT SUM(sxx) AS txx, SUM(sxy) AS txy FROM folds),
-    grid AS (SELECT * FROM (VALUES {lams}) AS g(lam_pct)),
-    cells AS (SELECT g.lam_pct, f.fold_id, f.n, f.sxx, f.sxy, f.syy,
-            CAST((t.txy - f.sxy) * 1000000 // ((t.txx - f.sxx)
-                + ((t.txx - f.sxx) * g.lam_pct // 100)) AS BIGINT)
-                AS slope_ppm
-        FROM folds f CROSS JOIN tot t CROSS JOIN grid g)
-    SELECT lam_pct, fold_id, n AS n_val, slope_ppm,
-        CAST((syy * 1000000000000
-            - CAST(2000000 AS HUGEINT) * slope_ppm * sxy
-            + CAST(slope_ppm AS HUGEINT) * slope_ppm * sxx)
-            // (CAST(n AS HUGEINT) * 1000000000000) AS BIGINT)
-            AS val_mse_cents2
-    FROM cells ORDER BY lam_pct, fold_id
-"""
-
-
-ORACLE_RIDGE_CV = _ridge_oracle()
-
-
-def q_shannon_code_lengths(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Optimal-code-length audit of the corpus vocabulary: each word
-    type's Shannon code length l = ceil(log2(n/c)) computed EXACTLY in
-    integers (smallest l with c*2^l >= n, via l = bit_length(
-    ceil(n/c) - 1) = length(bin(.)) — no float log anywhere), then the
-    per-length profile: how many types / tokens / coded bits sit at
-    each code length.  This is the storage-cost / compressibility
-    readout (total coded bits is the entropy-coding size bound within
-    one bit per token) and, by Kraft, sum over types of 2^-l is
-    guaranteed <= 1 — the emitted per-length rows let the oracle
-    verify the whole distribution, not just a summary.
-
-    Scale shape: token explode -> ONE vocab-cardinality aggregate
-    (partial-combined); the per-length profile is a second tiny
-    rollup at <= 64 rows; bit_length is string-length-of-bin, a
-    codegen expression on both engines."""
-    docs = _t(spark, sf_dir, "documents")
-    toks = docs.select(
-        F.explode(
-            F.split(F.lower(F.col("text")), "[^a-z0-9]+")
-        ).alias("w")
-    ).filter(F.col("w") != "")
-    vocab = toks.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
-    tot = vocab.agg(F.sum("c").alias("n"))
-    coded = vocab.crossJoin(F.broadcast(tot)).select(
-        "c",
-        F.expr(
-            "CASE WHEN (n + c - 1) div c - 1 = 0 THEN 0"
-            " ELSE length(bin((n + c - 1) div c - 1)) END"
-        ).alias("code_len"),
-    )
-    return (
-        coded.groupBy("code_len")
-        .agg(
-            F.count(F.lit(1)).alias("n_types"),
-            F.sum("c").alias("n_tokens"),
-        )
-        .select(
-            F.expr("CAST(code_len AS BIGINT)").alias("code_len"),
-            F.expr("CAST(n_types AS BIGINT)").alias("n_types"),
-            F.expr("CAST(n_tokens AS BIGINT)").alias("n_tokens"),
-            F.expr(
-                "CAST(n_tokens * code_len AS BIGINT)"
-            ).alias("coded_bits"),
-        )
-        .orderBy("code_len")
-    )
-
-
-ORACLE_SHANNON_CODE = """
-    WITH toks AS (SELECT w FROM (SELECT unnest(list_filter(
-            string_split_regex(lower(text), '[^a-z0-9]+'),
-            x -> x <> '')) AS w FROM documents)),
-    vocab AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS c
-        FROM toks GROUP BY w),
-    tot AS (SELECT CAST(SUM(c) AS BIGINT) AS n FROM vocab),
-    coded AS (SELECT c,
-            CASE WHEN (n + c - 1) // c - 1 = 0 THEN 0
-                 ELSE length(bin((n + c - 1) // c - 1)) END AS code_len
-        FROM vocab CROSS JOIN tot)
-    SELECT CAST(code_len AS BIGINT) AS code_len,
-        CAST(COUNT(*) AS BIGINT) AS n_types,
-        CAST(SUM(c) AS BIGINT) AS n_tokens,
-        CAST(SUM(c) * code_len AS BIGINT) AS coded_bits
-    FROM coded GROUP BY code_len ORDER BY code_len
-"""
-
-
-# ---------------------------------------------------------------- wave 7m
-
-_HRW_SHARDS = 16
-
-
-def q_hrw_shard_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rendezvous (highest-random-weight) sharding audit: every doc is
-    assigned to argmax over shards of md5(doc_id ':' shard) — the
-    consistent-placement scheme whose selling point is MINIMAL
-    MOVEMENT: adding shard 16 must move exactly the docs whose new
-    17-way winner IS the new shard, and nothing else.  The query
-    emits, per original shard: doc count (balance), docs that move to
-    the new shard on expansion, and docs that move anywhere else —
-    the last column is the protocol invariant and must be ZERO, so
-    the oracle re-proves the minimal-movement theorem on every run.
-    (shuffle_shards covers mod-N sharding, where expansion remaps
-    ~15/16 of all keys; this is the scheme that doesn't.)
-
-    Scale shape: per-row argmax over 16/17 md5 expressions (pure
-    codegen, no shuffle, no explode), ONE doc-cardinality aggregate
-    to 16 rows."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-
-    def arr(n):
-        return "array({})".format(
-            ", ".join(
-                f"md5(concat(CAST(doc_id AS STRING), ':', '{s}'))"
-                for s in range(n)
-            )
-        )
-
-    a16, a17 = arr(_HRW_SHARDS), arr(_HRW_SHARDS + 1)
-    assigned = docs.select(
-        F.expr(
-            f"array_position({a16}, array_max({a16})) - 1"
-        ).alias("shard"),
-        F.expr(
-            f"array_position({a17}, array_max({a17})) - 1"
-        ).alias("shard_plus1"),
-    )
-    return (
-        assigned.groupBy("shard")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.count_if(
-                F.col("shard_plus1") == _HRW_SHARDS
-            ).alias("n_moved_to_new"),
-            F.count_if(
-                (F.col("shard_plus1") != F.col("shard"))
-                & (F.col("shard_plus1") != _HRW_SHARDS)
-            ).alias("n_moved_elsewhere"),
-        )
-        .orderBy("shard")
-    )
-
-
-ORACLE_HRW_BALANCE = f"""
-    WITH a AS (SELECT
-            list_transform(range(0, {_HRW_SHARDS}), s ->
-                md5(CAST(doc_id AS VARCHAR) || ':' || s)) AS l16,
-            list_transform(range(0, {_HRW_SHARDS + 1}), s ->
-                md5(CAST(doc_id AS VARCHAR) || ':' || s)) AS l17
-        FROM documents),
-    s AS (SELECT
-            list_position(l16, list_aggregate(l16, 'max')) - 1 AS shard,
-            list_position(l17, list_aggregate(l17, 'max')) - 1
-                AS shard_plus1
-        FROM a)
-    SELECT CAST(shard AS BIGINT) AS shard,
-        CAST(COUNT(*) AS BIGINT) AS n_docs,
-        CAST(COUNT(CASE WHEN shard_plus1 = {_HRW_SHARDS} THEN 1 END)
-             AS BIGINT) AS n_moved_to_new,
-        CAST(COUNT(CASE WHEN shard_plus1 <> shard
-                        AND shard_plus1 <> {_HRW_SHARDS} THEN 1 END)
-             AS BIGINT) AS n_moved_elsewhere
-    FROM s GROUP BY 1 ORDER BY 1
-"""
-
-
-def q_apriori_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frequent 3-itemsets by the A-priori principle: prune to items
-    whose order-support >= 2 FIRST (lossless — a triple seen twice
-    needs every member seen twice; support is anti-monotone), then
-    enumerate p1<p2<p3 co-order triples via two self-equi-joins on
-    the order key, keep support >= 2, and score each surviving triple
-    with lift vs item independence (support * N^2 / (s1*s2*s3), exact
-    ppm in DECIMAL(38,0)).  Extends basket_lift_pairs one lattice
-    level up — the step where naive enumeration dies and pruning is
-    the whole algorithm.
-
-    Scale shape: triple fan-out is C(k,3) per order, bounded by the
-    per-order basket size (~7 in this schema), so volume stays linear
-    in orders at any SF; joins are hash equi-joins on the order key;
-    item supports ride a broadcast; TakeOrdered(20)."""
-    li = _t(spark, sf_dir, "lineitem").select(
-        F.col("l_orderkey").alias("g"), F.col("l_partkey").alias("p")
-    )
-    pp = li.distinct()
-    sup = pp.groupBy("p").agg(F.count(F.lit(1)).alias("s"))
-    freq = sup.filter(F.col("s") >= 2)
-    fpp = pp.join(F.broadcast(freq.select("p")), "p", "left_semi")
-    a = fpp.select("g", F.col("p").alias("p1"))
-    b = fpp.select("g", F.col("p").alias("p2"))
-    c = fpp.select("g", F.col("p").alias("p3"))
-    triples = (
-        a.join(b, "g")
-        .filter(F.col("p1") < F.col("p2"))
-        .join(c, "g")
-        .filter(F.col("p2") < F.col("p3"))
-        .groupBy("p1", "p2", "p3")
-        .agg(F.count(F.lit(1)).alias("support"))
-        .filter(F.col("support") >= 2)
-    )
-    n_orders = pp.select("g").distinct().count()
-    dec = "DECIMAL(38,0)"
-    scored = (
-        triples.join(
-            F.broadcast(freq.select(F.col("p").alias("p1"),
-                                    F.col("s").alias("s1"))), "p1"
-        )
-        .join(
-            F.broadcast(freq.select(F.col("p").alias("p2"),
-                                    F.col("s").alias("s2"))), "p2"
-        )
-        .join(
-            F.broadcast(freq.select(F.col("p").alias("p3"),
-                                    F.col("s").alias("s3"))), "p3"
-        )
-        .select(
-            "p1",
-            "p2",
-            "p3",
-            "support",
-            F.expr(
-                f"CAST(CAST(support AS {dec}) * {n_orders}"
-                f" * {n_orders} * 1000000"
-                f" div (CAST(s1 AS {dec}) * s2 * s3) AS BIGINT)"
-            ).alias("lift_ppm"),
-        )
-    )
-    return scored.orderBy(
-        F.desc("support"), F.desc("lift_ppm"), "p1", "p2", "p3"
-    ).limit(20)
-
-
-ORACLE_APRIORI_TRIPLES = """
-    WITH pp AS (SELECT DISTINCT l_orderkey AS g, l_partkey AS p
-        FROM lineitem),
-    sup AS (SELECT p, CAST(COUNT(*) AS BIGINT) AS s
-        FROM pp GROUP BY 1),
-    freq AS (SELECT p, s FROM sup WHERE s >= 2),
-    fpp AS (SELECT g, pp.p FROM pp JOIN freq ON pp.p = freq.p),
-    n AS (SELECT CAST(COUNT(DISTINCT g) AS BIGINT) AS n_orders FROM pp),
-    tri AS (SELECT a.p AS p1, b.p AS p2, c.p AS p3,
-            CAST(COUNT(*) AS BIGINT) AS support
-        FROM fpp a JOIN fpp b ON a.g = b.g AND a.p < b.p
-        -- equality anchored on the ADJACENT relation (b.g, not a.g):
-        -- with a.g the optimizer may reorder to a b x c inequality-only
-        -- join (observed: 52 GB / hung at sf0.01 before this fix)
-        JOIN fpp c ON b.g = c.g AND b.p < c.p
-        GROUP BY 1, 2, 3 HAVING COUNT(*) >= 2)
-    SELECT p1, p2, p3, support,
-        CAST(CAST(support AS HUGEINT) * n_orders * n_orders * 1000000
-             // (CAST(f1.s AS HUGEINT) * f2.s * f3.s) AS BIGINT)
-            AS lift_ppm
-    FROM tri CROSS JOIN n
-    JOIN freq f1 ON tri.p1 = f1.p
-    JOIN freq f2 ON tri.p2 = f2.p
-    JOIN freq f3 ON tri.p3 = f3.p
-    ORDER BY support DESC, lift_ppm DESC, p1, p2, p3 LIMIT 20
-"""
-
-
-# ---------------------------------------------------------------- wave 7n
-
-
-def q_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HITS on the customer->part purchase bipartite graph: hubs are
-    customers whose baskets concentrate on authoritative parts,
-    authorities are parts bought by strong hubs — the mutually-
-    recursive centrality pagerank doesn't give you (PageRank flows
-    along edges; HITS separates the two roles, which is what a
-    bipartite purchase graph actually has).  2 exact-integer
-    iterations via operators/graph.py::hits_int (ppm-of-max
-    normalization — rank-preserving, engine-exact); top 10 per role.
-
-    Scale shape: per half-iteration one vertex-cardinality join + one
-    partial-combined SUM + a 1-row max broadcast; TakeOrdered(10)
-    per role."""
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    e = orders.join(
-        li, orders["o_orderkey"] == li["l_orderkey"]
-    ).select(
-        F.col("o_custkey").alias("src"), F.col("l_partkey").alias("dst")
-    )
-    hubs, auths = G.hits_int(e, iterations=2)
-    top_h = (
-        hubs.select(
-            F.lit("hub").alias("role"),
-            F.col("h").cast("bigint").alias("node_id"),
-            F.col("hs").alias("score_ppm"),
-        )
-        .orderBy(F.desc("score_ppm"), "node_id")
-        .limit(10)
-    )
-    top_a = (
-        auths.select(
-            F.lit("authority").alias("role"),
-            F.col("a").cast("bigint").alias("node_id"),
-            F.col("sc").alias("score_ppm"),
-        )
-        .orderBy(F.desc("score_ppm"), "node_id")
-        .limit(10)
-    )
-    out = top_a.unionByName(top_h)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("role").orderBy(
-        F.desc("score_ppm"), "node_id"
-    )
-    return out.select(
-        "role",
-        F.row_number().over(w).cast("bigint").alias("rank"),
-        "node_id",
-        "score_ppm",
-    ).orderBy("role", "rank")
-
-
-def _hits_oracle() -> str:
-    # unrolled 2-iteration HITS, ppm-of-max normalization each half-step.
-    # Every CTE is MATERIALIZED: inlined, each step re-evaluates its
-    # whole ancestry (h2 -> a2 -> a1 -> h0 -> e), so the 6M-row edge
-    # DISTINCT ran five-plus times concurrently and filled 77 G of
-    # DuckDB temp at sf1 (same class as the triangle-oracle post-mortem).
-    steps = []
-    prev_h = "h0"
-    for i in (1, 2):
-        steps.append(
-            f"a{i}r AS MATERIALIZED (SELECT a, SUM(CAST(hs AS HUGEINT)) AS raw"
-            f" FROM e JOIN {prev_h} USING (h) GROUP BY a)"
-        )
-        steps.append(
-            f"a{i} AS MATERIALIZED (SELECT a, CAST(raw * 1000000"
-            f" // (SELECT MAX(raw) FROM a{i}r) AS BIGINT) AS sc"
-            f" FROM a{i}r)"
-        )
-        steps.append(
-            f"h{i}r AS MATERIALIZED (SELECT h, SUM(CAST(sc AS HUGEINT)) AS raw"
-            f" FROM e JOIN a{i} USING (a) GROUP BY h)"
-        )
-        steps.append(
-            f"h{i} AS MATERIALIZED (SELECT h, CAST(raw * 1000000"
-            f" // (SELECT MAX(raw) FROM h{i}r) AS BIGINT) AS hs"
-            f" FROM h{i}r)"
-        )
-        prev_h = f"h{i}"
-    joined = ",\n    ".join(steps)
-    return f"""
-    WITH e AS MATERIALIZED (
-        SELECT DISTINCT o_custkey AS h, l_partkey AS a
-        FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-    h0 AS MATERIALIZED (
-        SELECT h, CAST(1000000 AS BIGINT) AS hs
-        FROM (SELECT DISTINCT h FROM e)),
-    {joined},
-    ta AS (SELECT 'authority' AS role, CAST(a AS BIGINT) AS node_id,
-            sc AS score_ppm
-        FROM a2 ORDER BY sc DESC, a LIMIT 10),
-    th AS (SELECT 'hub' AS role, CAST(h AS BIGINT) AS node_id,
-            hs AS score_ppm
-        FROM h2 ORDER BY hs DESC, h LIMIT 10),
-    u AS (SELECT * FROM ta UNION ALL SELECT * FROM th)
-    SELECT role,
-        CAST(ROW_NUMBER() OVER (PARTITION BY role
-            ORDER BY score_ppm DESC, node_id) AS BIGINT) AS rank,
-        node_id, score_ppm
-    FROM u ORDER BY role, rank
-"""
-
-
-ORACLE_HITS = _hits_oracle()
-
-
-def q_ra_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Link prediction on the part co-order graph by the resource-
-    allocation index: for a non-adjacent pair (x, y), RA = sum over
-    common neighbors z of 1/deg(z) — the published Zhou-Lu-Zhang
-    refinement of Adamic-Adar that penalizes promiscuous middlemen
-    harder.  Engine-exact by quantizing EACH term before the sum
-    (w(z) = 1e9 div deg(z), so the fold is an integer sum — a float
-    1/deg sum would hash differently per partitioning); existing
-    edges are removed with an anti-join.  Top 20 predicted links —
-    the candidate list a recommender would re-rank.
-
-    Scale shape: the wedge join is adjacency x adjacency on the
-    middle vertex — sum of deg(z)^2 rows, kept tractable by the
-    min_support=2 edge pruning (same bound item_item_cosine and
-    hash_walk_visits live with); degree weights ride a vertex-
-    cardinality join; TakeOrdered(20)."""
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    pp = li.distinct()
-    und = G.undirected_edges_min_support(
-        pp, "l_orderkey", "l_partkey", min_support=2
-    )
-    adj = und.select(
-        F.col("a").alias("z"), F.col("b").alias("x")
-    ).unionByName(und.select(F.col("b").alias("z"), F.col("a").alias("x")))
-    deg = adj.groupBy("z").agg(F.count(F.lit(1)).alias("deg"))
-    w = deg.select("z", F.expr("1000000000 div deg").alias("w_nano"))
-    left = adj.select("z", F.col("x").alias("px"))
-    right = adj.select("z", F.col("x").alias("py"))
-    wedges = (
-        left.join(right, "z")
-        .filter(F.col("px") < F.col("py"))
-        .join(w, "z")
-        .groupBy("px", "py")
-        .agg(
-            F.sum("w_nano").alias("ra_nano"),
-            F.count(F.lit(1)).alias("n_common"),
-        )
-    )
-    cand = wedges.join(
-        und.select(F.col("a").alias("px"), F.col("b").alias("py")),
-        ["px", "py"],
-        "left_anti",
-    )
-    return (
-        cand.select(
-            F.col("px").alias("part_a"),
-            F.col("py").alias("part_b"),
-            "ra_nano",
-            "n_common",
-        )
-        .orderBy(F.desc("ra_nano"), "part_a", "part_b")
-        .limit(20)
-    )
-
-
-ORACLE_RA_LINKS = """
-    WITH pp AS (SELECT DISTINCT l_orderkey AS g, l_partkey AS p
-        FROM lineitem),
-    und AS MATERIALIZED (SELECT a.p AS a, b.p AS b
-        FROM pp a JOIN pp b ON a.g = b.g AND a.p < b.p
-        GROUP BY 1, 2 HAVING COUNT(*) >= 2),
-    adj AS (SELECT a AS z, b AS x FROM und
-        UNION ALL SELECT b, a FROM und),
-    deg AS (SELECT z, CAST(COUNT(*) AS BIGINT) AS deg
-        FROM adj GROUP BY 1),
-    w AS (SELECT z, 1000000000 // deg AS w_nano FROM deg),
-    wedges AS (SELECT l.x AS px, r.x AS py,
-            CAST(SUM(w_nano) AS BIGINT) AS ra_nano,
-            CAST(COUNT(*) AS BIGINT) AS n_common
-        FROM adj l JOIN adj r ON l.z = r.z AND l.x < r.x
-        JOIN w ON w.z = l.z
-        GROUP BY 1, 2),
-    cand AS (SELECT * FROM wedges
-        WHERE NOT EXISTS (SELECT 1 FROM und
-            WHERE und.a = wedges.px AND und.b = wedges.py))
-    SELECT px AS part_a, py AS part_b, ra_nano, n_common
-    FROM cand ORDER BY ra_nano DESC, part_a, part_b LIMIT 20
-"""
-
-
-# ---------------------------------------------------------------- wave 7o
-
-
-def q_cusum_monitor_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One-sided CUSUM monitor on daily revenue — the ONLINE drift
-    detector (changepoint_daily is the offline at-most-one-changepoint
-    scan; this is the control-chart recursion a monitoring pipeline
-    evaluates every day): S_i = max(0, S_{i-1} + x_i - mu - k), alarm
-    when S_i > h, with the standard k = 0.5 sigma slack and h = 4 sigma
-    threshold.  The recursion LOOKS sequential but has the exact
-    prefix-sum identity S_i = P_i - min(0, min_{j<=i} P_j), so it runs
-    as two windows — no iteration, no UDF.  mu is the exact integer
-    mean; sigma enters once through the shared IEEE sqrt, floored to
-    integer dollars (det) so the recursion itself is pure integer.
-
-    Scale shape: one corpus agg to the ~2.4k-row calendar-bounded
-    daily series; two single-partition windows over it (day-bounded,
-    the acf precedent); one row out."""
-    from pyspark.sql import Window
-
-    o = _t(spark, sf_dir, "orders").select(
-        F.expr(
-            "datediff(CAST(o_orderdate AS DATE), DATE'1992-01-01')"
-        ).alias("day"),
-        F.expr("CAST(floor(o_totalprice + 0.5) AS BIGINT)").alias("usd"),
-    )
-    daily = o.groupBy("day").agg(F.sum("usd").alias("x")).localCheckpoint()
-    dec = "DECIMAL(38,0)"
-    m = daily.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.expr(f"SUM(CAST(x AS {dec}))").alias("s"),
-        F.expr(f"SUM(CAST(x AS {dec}) * x)").alias("q"),
-    ).select(
-        "n",
-        F.expr("CAST(s div n AS BIGINT)").alias("mu"),
-        F.expr(
-            "CAST(FLOOR(0.5 * SQRT(CAST(CAST(CAST(n AS DECIMAL(38,0))"
-            " * q - s * s AS STRING) AS DOUBLE)) / CAST(n AS DOUBLE))"
-            " AS BIGINT)"
-        ).alias("k_usd"),
-        F.expr(
-            "CAST(FLOOR(4.0 * SQRT(CAST(CAST(CAST(n AS DECIMAL(38,0))"
-            " * q - s * s AS STRING) AS DOUBLE)) / CAST(n AS DOUBLE))"
-            " AS BIGINT)"
-        ).alias("h_usd"),
-    )
-    wp = Window.orderBy("day").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    stat = (
-        daily.crossJoin(F.broadcast(m))
-        .select(
-            "day",
-            "n",
-            "mu",
-            "k_usd",
-            "h_usd",
-            F.sum(F.expr("x - mu - k_usd")).over(wp).alias("p"),
-        )
-        .select(
-            "day",
-            "n",
-            "mu",
-            "k_usd",
-            "h_usd",
-            F.expr("p - least(min(p) OVER (ORDER BY day ROWS BETWEEN"
-                   " UNBOUNDED PRECEDING AND CURRENT ROW), 0)"
-                   ).alias("cusum"),
-        )
-    )
-    return stat.groupBy("n", "mu", "k_usd", "h_usd").agg(
-        F.count_if(F.col("cusum") > F.col("h_usd")).alias("n_alarm_days"),
-        F.max("cusum").alias("max_cusum_usd"),
-        F.min(
-            F.when(F.col("cusum") > F.col("h_usd"), F.col("day"))
-        ).cast("bigint").alias("first_alarm_day"),
-    ).select(
-        F.col("n").alias("n_days"),
-        F.col("mu").alias("mu_usd"),
-        "k_usd",
-        "h_usd",
-        "n_alarm_days",
-        "max_cusum_usd",
-        "first_alarm_day",
-    )
-
-
-ORACLE_CUSUM_MONITOR = """
-    WITH o AS (SELECT
-            date_diff('day', DATE '1992-01-01',
-                CAST(o_orderdate AS DATE)) AS day,
-            CAST(FLOOR(o_totalprice + 0.5) AS BIGINT) AS usd
-        FROM orders),
-    daily AS (SELECT day, CAST(SUM(usd) AS BIGINT) AS x
-        FROM o GROUP BY day),
-    mm AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
-            CAST(SUM(CAST(x AS HUGEINT)) AS HUGEINT) AS s,
-            CAST(SUM(CAST(x AS HUGEINT) * x) AS HUGEINT) AS q
-        FROM daily),
-    m AS (SELECT n, CAST(s // n AS BIGINT) AS mu,
-            CAST(FLOOR(0.5 * SQRT(CAST(CAST(CAST(n AS HUGEINT) * q
-                - s * s AS VARCHAR) AS DOUBLE)) / CAST(n AS DOUBLE))
-                AS BIGINT) AS k_usd,
-            CAST(FLOOR(4.0 * SQRT(CAST(CAST(CAST(n AS HUGEINT) * q
-                - s * s AS VARCHAR) AS DOUBLE)) / CAST(n AS DOUBLE))
-                AS BIGINT) AS h_usd
-        FROM mm),
-    pre AS (SELECT day, n, mu, k_usd, h_usd,
-            CAST(SUM(x - mu - k_usd) OVER (ORDER BY day ROWS BETWEEN
-                UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS p
-        FROM daily CROSS JOIN m),
-    stat AS (SELECT day, n, mu, k_usd, h_usd,
-            p - LEAST(MIN(p) OVER (ORDER BY day ROWS BETWEEN
-                UNBOUNDED PRECEDING AND CURRENT ROW), 0) AS cusum
-        FROM pre)
-    SELECT n AS n_days, mu AS mu_usd, k_usd, h_usd,
-        CAST(COUNT(CASE WHEN cusum > h_usd THEN 1 END) AS BIGINT)
-            AS n_alarm_days,
-        CAST(MAX(cusum) AS BIGINT) AS max_cusum_usd,
-        CAST(MIN(CASE WHEN cusum > h_usd THEN day END) AS BIGINT)
-            AS first_alarm_day
-    FROM stat GROUP BY n, mu, k_usd, h_usd
-"""
-
-
-def q_target_encoding_oof(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Out-of-fold target encoding of part brand against return rate —
-    the feature-engineering staple done WITHOUT leakage: each fold's
-    encoding uses only the OTHER folds' rows (train/serve symmetry),
-    smoothed toward the global prior with m = 100 pseudo-observations
-    so rare brands don't memorize their own labels.  Folds are the
-    shared md5 60-bit deterministic split; the encoding is exact:
-    enc = ((s_b - s_bf) * 1e6 + m * prior_micro) div (n_b - n_bf + m),
-    with brand totals and the global prior coming from windows over
-    the 125-row (brand x fold) aggregate — sufficient statistics, the
-    ridge_lambda_cv playbook applied to categorical features.
-
-    Scale shape: ONE fact scan (lineitem |x| broadcast part) to a
-    (brand, fold) aggregate; windows over 125 rows; 125 rows out."""
-    from pyspark.sql import Window
-
-    part = _t(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_partkey",
-        "l_orderkey",
-        "l_linenumber",
-        (F.col("l_returnflag") == "R").cast("bigint").alias("y"),
-    )
-    rows = li.join(
-        F.broadcast(part), li["l_partkey"] == part["p_partkey"]
-    ).select(
-        "p_brand",
-        "y",
-        F.expr(
-            "pmod(CAST(conv(substring(md5(concat("
-            "CAST(l_orderkey AS STRING), '#',"
-            " CAST(l_linenumber AS STRING), '#tenc')), 1, 15), 16, 10)"
-            " AS BIGINT), 5)"
-        ).alias("fold_id"),
-    )
-    bf = rows.groupBy("p_brand", "fold_id").agg(
-        F.count(F.lit(1)).alias("n_bf"), F.sum("y").alias("s_bf")
-    )
-    wb = Window.partitionBy("p_brand")
-    wall = Window.partitionBy()
-    t = bf.select(
-        "p_brand",
-        "fold_id",
-        "n_bf",
-        "s_bf",
-        F.sum("n_bf").over(wb).alias("n_b"),
-        F.sum("s_bf").over(wb).alias("s_b"),
-        F.sum("n_bf").over(wall).alias("n_all"),
-        F.sum("s_bf").over(wall).alias("s_all"),
-    )
-    return t.select(
-        "p_brand",
-        "fold_id",
-        F.expr("CAST(n_b - n_bf AS BIGINT)").alias("n_train"),
-        F.expr(
-            "CAST(((CAST(s_b AS DECIMAL(38,0)) - s_bf) * 1000000"
-            " + 100 * (CAST(s_all AS DECIMAL(38,0)) * 1000000"
-            " div n_all))"
-            " div (CAST(n_b AS DECIMAL(38,0)) - n_bf + 100) AS BIGINT)"
-        ).alias("enc_micro"),
-    ).orderBy("p_brand", "fold_id")
-
-
-ORACLE_TARGET_ENCODING = """
-    WITH rows_ AS (SELECT p_brand,
-            CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS y,
-            ('0x' || substr(md5(CAST(l_orderkey AS VARCHAR) || '#'
-                || CAST(l_linenumber AS VARCHAR) || '#tenc'), 1, 15))
-                ::BIGINT % 5 AS fold_id
-        FROM lineitem JOIN part ON l_partkey = p_partkey),
-    bf AS (SELECT p_brand, fold_id, CAST(COUNT(*) AS BIGINT) AS n_bf,
-            CAST(SUM(y) AS BIGINT) AS s_bf
-        FROM rows_ GROUP BY 1, 2),
-    t AS (SELECT p_brand, fold_id, n_bf, s_bf,
-            CAST(SUM(n_bf) OVER (PARTITION BY p_brand) AS BIGINT) AS n_b,
-            CAST(SUM(s_bf) OVER (PARTITION BY p_brand) AS BIGINT) AS s_b,
-            CAST(SUM(n_bf) OVER () AS BIGINT) AS n_all,
-            CAST(SUM(s_bf) OVER () AS BIGINT) AS s_all
-        FROM bf)
-    SELECT p_brand, fold_id, n_b - n_bf AS n_train,
-        CAST(((CAST(s_b AS HUGEINT) - s_bf) * 1000000
-            + 100 * (CAST(s_all AS HUGEINT) * 1000000 // n_all))
-            // (CAST(n_b AS HUGEINT) - n_bf + 100) AS BIGINT)
-            AS enc_micro
-    FROM t ORDER BY p_brand, fold_id
-"""
-
-
-# ---------------------------------------------------------------- wave 7p
-
-
-def q_dunning_llr_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Collocations by Dunning's log-likelihood ratio (G^2) — the
-    published fix for PMI's rare-pair bias (pmi_bigrams ranks a
-    2-occurrence oddity above 'new york'; G^2 weighs evidence mass, so
-    frequent true collocations win).  Each bigram's 2x2 table uses
-    PROPER slot marginals from the unfiltered bigram table (c1 = count
-    as left word, c2 = as right word, N = all bigram events); each of
-    the four O*ln(O N / (r k)) terms is log-space (the pmi overflow
-    lesson — no integer product ever forms) and per-ROW (a fixed
-    expression tree, not a cross-row float fold), det_round(6).
-    Counts stay below 2^53 at any conceivable corpus so the int->
-    double casts are exact.
-
-    Scale shape: one bigram-cardinality aggregate; slot marginals are
-    two rollups of it; candidates (cxy >= 5) join the marginals on the
-    word; TakeOrdered(20)."""
-    docs = _t(spark, sf_dir, "documents")
-    toks = docs.select(
-        TX.tokens(TX.normalize_text(F.col("text"))).alias("toks")
-    ).filter(F.size("toks") >= 2)
-    big = (
-        toks.select(
-            F.explode(TX.ngram_strings(F.col("toks"), 2)).alias("bg")
-        )
-        .groupBy("bg")
-        .agg(F.count(F.lit(1)).alias("cxy"))
-    )
-    parts = big.select(
-        "bg",
-        "cxy",
-        F.split(F.col("bg"), " ").getItem(0).alias("x"),
-        F.split(F.col("bg"), " ").getItem(1).alias("y"),
-    )
-    lm = parts.groupBy("x").agg(F.sum("cxy").alias("c1"))
-    rm = parts.groupBy("y").agg(F.sum("cxy").alias("c2"))
-    nn = parts.agg(F.sum("cxy").alias("nb"))
-    cand = (
-        parts.filter(F.col("cxy") >= 5)
-        .join(lm, "x")
-        .join(rm, "y")
-        .crossJoin(F.broadcast(nn))
-    )
-
-    def term(o, r, k):
-        return (
-            f"(CASE WHEN {o} > 0 THEN CAST({o} AS DOUBLE)"
-            f" * (ln(CAST({o} AS DOUBLE)) + ln(CAST(nb AS DOUBLE))"
-            f" - ln(CAST({r} AS DOUBLE)) - ln(CAST({k} AS DOUBLE)))"
-            f" ELSE CAST(0.0 AS DOUBLE) END)"
-        )
-
-    g2 = (
-        "2.0 * ("
-        + term("cxy", "c1", "c2")
-        + " + " + term("(c1 - cxy)", "c1", "(nb - c2)")
-        + " + " + term("(c2 - cxy)", "(nb - c1)", "c2")
-        + " + " + term("(nb - c1 - c2 + cxy)", "(nb - c1)", "(nb - c2)")
-        + ")"
-    )
-    return (
-        cand.select(
-            "bg",
-            "cxy",
-            "c1",
-            "c2",
-            DET.det_round(F.expr(g2), 6).alias("llr_g2"),
-        )
-        .orderBy(F.desc("llr_g2"), "bg")
-        .limit(20)
-    )
-
-
-def _dunning_oracle() -> str:
-    def term(o, r, k):
-        return (
-            f"(CASE WHEN {o} > 0 THEN CAST({o} AS DOUBLE)"
-            f" * (LN(CAST({o} AS DOUBLE)) + LN(CAST(nb AS DOUBLE))"
-            f" - LN(CAST({r} AS DOUBLE)) - LN(CAST({k} AS DOUBLE)))"
-            f" ELSE CAST(0.0 AS DOUBLE) END)"
-        )
-
-    g2 = (
-        "2.0 * ("
-        + term("cxy", "c1", "c2")
-        + " + " + term("(c1 - cxy)", "c1", "(nb - c2)")
-        + " + " + term("(c2 - cxy)", "(nb - c1)", "c2")
-        + " + " + term("(nb - c1 - c2 + cxy)", "(nb - c1)", "(nb - c2)")
-        + ")"
-    )
-    return f"""
-    WITH t AS (SELECT {_TOKS} AS toks FROM documents),
-    bt AS (SELECT toks FROM t WHERE len(toks) >= 2),
-    big AS (SELECT bg, CAST(COUNT(*) AS BIGINT) AS cxy FROM (
-            SELECT unnest(list_transform(range(len(toks) - 1),
-                i -> toks[i + 1] || ' ' || toks[i + 2])) AS bg
-            FROM bt) b
-        GROUP BY bg),
-    parts AS (SELECT bg, cxy,
-            string_split(bg, ' ')[1] AS x,
-            string_split(bg, ' ')[2] AS y
-        FROM big),
-    lm AS (SELECT x, CAST(SUM(cxy) AS BIGINT) AS c1
-        FROM parts GROUP BY 1),
-    rm AS (SELECT y, CAST(SUM(cxy) AS BIGINT) AS c2
-        FROM parts GROUP BY 1),
-    nn AS (SELECT CAST(SUM(cxy) AS BIGINT) AS nb FROM parts),
-    cand AS (SELECT bg, cxy, c1, c2, nb
-        FROM parts JOIN lm USING (x) JOIN rm USING (y) CROSS JOIN nn
-        WHERE cxy >= 5)
-    SELECT bg, cxy, c1, c2,
-        {DET.det_round_sql(g2, 6)} AS llr_g2
-    FROM cand ORDER BY llr_g2 DESC, bg LIMIT 20
-"""
-
-
-ORACLE_DUNNING = _dunning_oracle()
-
-
-def q_mcnemar_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """McNemar's test on PAIRED classifier predictions — the correct
-    way to ask 'is classifier A actually better than B on the same
-    docs?' (comparing two accuracies ignores pairing; McNemar uses
-    only the discordant cells).  A = the 4-flag quality score at
-    threshold 3/4 predicting English (the classifier_auc / brier
-    setup); B = a length-only baseline (50..5000 ws tokens).  b = A
-    right & B wrong, c = B right & A wrong; the Edwards-corrected
-    statistic (max(|b-c|-1,0))^2 / (b+c) lands in exact micro (all
-    integers; single floor division).
-
-    Scale shape: ONE doc scan, one 1-row aggregate."""
-    docs = _t(spark, sf_dir, "documents")
-    scored = docs.select(
-        (F.col("lang") == "en").cast("int").alias("y"),
-        (
-            (TX.quality_score(F.col("text")) * 4).cast("bigint") >= 3
-        ).cast("int").alias("pa"),
-        TX.token_count(F.col("text")).between(50, 5000).cast("int").alias(
-            "pb"
-        ),
-    )
-    r = scored.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.count_if(F.col("pa") == F.col("y")).alias("a_correct"),
-        F.count_if(F.col("pb") == F.col("y")).alias("b_correct"),
-        F.count_if(
-            (F.col("pa") == F.col("y")) & (F.col("pb") != F.col("y"))
-        ).alias("b_disc"),
-        F.count_if(
-            (F.col("pa") != F.col("y")) & (F.col("pb") == F.col("y"))
-        ).alias("c_disc"),
-    )
-    return r.select(
-        "n_docs",
-        F.expr("a_correct * 1000000 div n_docs").alias("a_acc_ppm"),
-        F.expr("b_correct * 1000000 div n_docs").alias("b_acc_ppm"),
-        "b_disc",
-        "c_disc",
-        F.expr(
-            "CASE WHEN b_disc + c_disc = 0 THEN CAST(0 AS BIGINT)"
-            " ELSE CAST(greatest(abs(b_disc - c_disc) - 1, 0)"
-            " * greatest(abs(b_disc - c_disc) - 1, 0) * 1000000"
-            " div (b_disc + c_disc) AS BIGINT) END"
-        ).alias("mcnemar_chi2_micro"),
-    )
-
-
-ORACLE_MCNEMAR = """
-    WITH t AS (SELECT lang, text,
-        list_filter(string_split_regex(trim(text), '\\s+'),
-                    x -> x <> '') AS toks
-    FROM documents),
-    m AS (SELECT CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y,
-        len(toks) AS n_tok,
-        len(list_filter(list_transform(toks, x -> lower(x)),
-            x -> list_contains(['the','a','of','to','and','in','is',
-                                'it','for','on'], x))) AS n_stop,
-        length(text) AS n_chars,
-        length(regexp_replace(text, '[^\\w\\s]', '', 'g')) AS n_nopunct,
-        list_sum(list_transform(toks, x -> length(x))) AS tok_chars
-    FROM t),
-    scored AS (SELECT y,
-        CASE WHEN (CASE WHEN n_tok >= 10 AND n_tok <= 100000
-                        THEN 1 ELSE 0 END)
-                + (CASE WHEN n_tok > 0
-                        AND CAST(n_stop AS DOUBLE) / n_tok >= 0.01
-                        THEN 1 ELSE 0 END)
-                + (CASE WHEN n_chars = 0 OR CAST(n_chars - n_nopunct
-                        AS DOUBLE) / n_chars <= 0.2 THEN 1 ELSE 0 END)
-                + (CASE WHEN n_tok > 0
-                        AND CAST(tok_chars AS DOUBLE) / n_tok >= 2
-                        AND CAST(tok_chars AS DOUBLE) / n_tok <= 12
-                        THEN 1 ELSE 0 END) >= 3
-             THEN 1 ELSE 0 END AS pa,
-        CASE WHEN n_tok BETWEEN 50 AND 5000 THEN 1 ELSE 0 END AS pb
-    FROM m),
-    r AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
-        CAST(COUNT(CASE WHEN pa = y THEN 1 END) AS BIGINT) AS a_correct,
-        CAST(COUNT(CASE WHEN pb = y THEN 1 END) AS BIGINT) AS b_correct,
-        CAST(COUNT(CASE WHEN pa = y AND pb <> y THEN 1 END) AS BIGINT)
-            AS b_disc,
-        CAST(COUNT(CASE WHEN pa <> y AND pb = y THEN 1 END) AS BIGINT)
-            AS c_disc
-    FROM scored)
-    SELECT n_docs,
-        a_correct * 1000000 // n_docs AS a_acc_ppm,
-        b_correct * 1000000 // n_docs AS b_acc_ppm,
-        b_disc, c_disc,
-        CASE WHEN b_disc + c_disc = 0 THEN CAST(0 AS BIGINT)
-             ELSE CAST(GREATEST(ABS(b_disc - c_disc) - 1, 0)
-                * GREATEST(ABS(b_disc - c_disc) - 1, 0) * 1000000
-                // (b_disc + c_disc) AS BIGINT) END
-            AS mcnemar_chi2_micro
-    FROM r
-"""
-
-
-# ---------------------------------------------------------------- wave 7q
-
-
-def q_chao1_distinct_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Chao1 species-richness estimation from a 20% sample, audited
-    against the exact answer: take the deterministic md5 20% of EVENT
-    ROWS (so per-user abundances shrink — the regime where naive
-    sample-distinct undercounts), form the abundance histogram's f1
-    (singletons) and f2 (doubletons), and correct: Chao1 = d + f1^2 /
-    (2 f2) (bias-corrected form when f2 = 0).  Emits the naive sample
-    distinct, the Chao1 estimate (exact milli — single floor
-    division), the true distinct, and both errors in ppm — the audit
-    that says whether count-distinct-from-a-sample is safe on this
-    distribution (kmv/hll audits grade SKETCHES; this grades the
-    much cheaper sample-and-correct path).
-
-    Scale shape: the sample filter evaluates in the scan; one agg to
-    sampled-user cardinality; the abundance rollup is 1 row; exact
-    distinct is one more user-cardinality agg."""
-    # sample on a row-content hash (event_id is unique and stable);
-    # a row-number-based sample would be partitioning-dependent and
-    # not engine-replayable
-    ev2 = _t(spark, sf_dir, "events").select("user_id", "event_id")
-    samp = ev2.filter(
-        F.expr(
-            "CAST(conv(substring(md5(concat(CAST(event_id AS STRING),"
-            " '#chao')), 1, 4), 16, 10) AS BIGINT) * 100 < 65536 * 20"
-        )
-    )
-    per = samp.groupBy("user_id").agg(F.count(F.lit(1)).alias("k"))
-    hist = per.agg(
-        F.count(F.lit(1)).alias("d"),
-        F.count_if(F.col("k") == 1).alias("f1"),
-        F.count_if(F.col("k") == 2).alias("f2"),
-    )
-    true = ev2.agg(F.count_distinct("user_id").alias("true_d"))
-    r = hist.crossJoin(F.broadcast(true))
-    est = (
-        "CASE WHEN f2 > 0 THEN d * 1000 + f1 * f1 * 1000 div (2 * f2)"
-        " ELSE d * 1000 + f1 * (f1 - 1) * 1000 div 2 END"
-    )
-    return r.select(
-        "d",
-        "f1",
-        "f2",
-        "true_d",
-        F.expr(f"CAST({est} AS BIGINT)").alias("chao1_milli"),
-        F.expr(
-            "CAST(abs(d * 1000 - true_d * 1000) * 1000 div true_d"
-            " AS BIGINT)"
-        ).alias("naive_err_ppm"),
-        F.expr(
-            f"CAST(abs(({est}) - true_d * 1000) * 1000 div true_d"
-            " AS BIGINT)"
-        ).alias("chao1_err_ppm"),
-    )
-
-
-ORACLE_CHAO1 = """
-    WITH samp AS (SELECT user_id FROM events
-        WHERE ('0x' || substr(md5(CAST(event_id AS VARCHAR)
-            || '#chao'), 1, 4))::BIGINT * 100 < 65536 * 20),
-    per AS (SELECT user_id, CAST(COUNT(*) AS BIGINT) AS k
-        FROM samp GROUP BY 1),
-    hist AS (SELECT CAST(COUNT(*) AS BIGINT) AS d,
-            CAST(COUNT(CASE WHEN k = 1 THEN 1 END) AS BIGINT) AS f1,
-            CAST(COUNT(CASE WHEN k = 2 THEN 1 END) AS BIGINT) AS f2
-        FROM per),
-    t AS (SELECT CAST(COUNT(DISTINCT user_id) AS BIGINT) AS true_d
-        FROM events),
-    r AS (SELECT d, f1, f2, true_d,
-            CAST(CASE WHEN f2 > 0
-                THEN d * 1000 + f1 * f1 * 1000 // (2 * f2)
-                ELSE d * 1000 + f1 * (f1 - 1) * 1000 // 2 END
-                AS BIGINT) AS chao1_milli
-        FROM hist CROSS JOIN t)
-    SELECT d, f1, f2, true_d, chao1_milli,
-        CAST(ABS(d * 1000 - true_d * 1000) * 1000 // true_d AS BIGINT)
-            AS naive_err_ppm,
-        CAST(ABS(chao1_milli - true_d * 1000) * 1000 // true_d
-            AS BIGINT) AS chao1_err_ppm
-    FROM r
-"""
-
-
-def q_capture_recapture_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Capture-recapture (Chapman's Lincoln-Petersen) population
-    estimate: treat even-day activity as the first capture, odd-day as
-    the recapture, and estimate total users from the overlap —
-    N_hat = (n1+1)(n2+1)/(m+1) - 1, exact milli.  The ecology
-    estimator is ALSO the standard data-quality trick for estimating
-    how many entities two incomplete extracts are missing jointly;
-    the audit column compares against the true distinct count the
-    estimator never saw.
-
-    Scale shape: one agg to user cardinality (two boolean maxes per
-    user), one 1-row rollup."""
-    ev = _t(spark, sf_dir, "events").select(
-        "user_id",
-        F.expr(
-            "CAST(unix_micros(CAST(ts AS TIMESTAMP))"
-            " div 86400000000 AS BIGINT) % 2"
-        ).alias("par"),
-    )
-    per = ev.groupBy("user_id").agg(
-        F.max(F.expr("CAST(par = 0 AS INT)")).alias("in1"),
-        F.max(F.expr("CAST(par = 1 AS INT)")).alias("in2"),
-    )
-    r = per.agg(
-        F.sum("in1").alias("n1"),
-        F.sum("in2").alias("n2"),
-        F.count_if((F.col("in1") == 1) & (F.col("in2") == 1)).alias("m"),
-        F.count(F.lit(1)).alias("true_d"),
-    )
-    est = "((n1 + 1) * (n2 + 1) * 1000 div (m + 1) - 1000)"
-    return r.select(
-        "n1",
-        "n2",
-        "m",
-        "true_d",
-        F.expr(f"CAST({est} AS BIGINT)").alias("chapman_milli"),
-        F.expr(
-            f"CAST(abs(({est}) - true_d * 1000) * 1000 div true_d"
-            " AS BIGINT)"
-        ).alias("err_ppm"),
-    )
-
-
-ORACLE_CAPTURE_RECAPTURE = """
-    WITH ev AS (SELECT user_id,
-            date_diff('day', TIMESTAMP '1970-01-01',
-                CAST(ts AS TIMESTAMP)) % 2 AS par
-        FROM events),
-    per AS (SELECT user_id,
-            MAX(CASE WHEN par = 0 THEN 1 ELSE 0 END) AS in1,
-            MAX(CASE WHEN par = 1 THEN 1 ELSE 0 END) AS in2
-        FROM ev GROUP BY 1),
-    r AS (SELECT CAST(SUM(in1) AS BIGINT) AS n1,
-            CAST(SUM(in2) AS BIGINT) AS n2,
-            CAST(COUNT(CASE WHEN in1 = 1 AND in2 = 1 THEN 1 END)
-                AS BIGINT) AS m,
-            CAST(COUNT(*) AS BIGINT) AS true_d
-        FROM per)
-    SELECT n1, n2, m, true_d,
-        CAST((n1 + 1) * (n2 + 1) * 1000 // (m + 1) - 1000 AS BIGINT)
-            AS chapman_milli,
-        CAST(ABS((n1 + 1) * (n2 + 1) * 1000 // (m + 1) - 1000
-            - true_d * 1000) * 1000 // true_d AS BIGINT) AS err_ppm
-    FROM r
-"""
-
-
-# ---------------------------------------------------------------- wave 7r
-
-
-def q_gumbel_block_maxima(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Extreme-value analysis by block maxima: monthly maxima of daily
-    revenue, fitted to a Gumbel distribution by method of moments
-    (beta = s sqrt(6)/pi, mu = xbar - gamma beta), and the 100-period
-    return level mu - beta ln(-ln(1 - 1/100)) — 'the biggest revenue
-    day a century of months would see', the capacity-planning number.
-    hill_tail_index grades the tail of ONE distribution; block maxima
-    is the other canonical EVT route and needs only calendar-bounded
-    state.  Moments are exact DECIMAL integers; the fit is the shared
-    IEEE closed form with literal constants, det_round to milli-USD.
-
-    Scale shape: corpus agg to day cardinality, max-rollup to ~84
-    months, one 1-row moment agg."""
-    o = _t(spark, sf_dir, "orders").select(
-        F.expr("CAST(o_orderdate AS DATE)").alias("day"),
-        F.expr("CAST(floor(o_totalprice + 0.5) AS BIGINT)").alias("usd"),
-    )
-    daily = o.groupBy("day").agg(F.sum("usd").alias("x"))
-    monthly = (
-        daily.select(
-            F.expr("year(day) * 12 + month(day)").alias("m"), "x"
-        )
-        .groupBy("m")
-        .agg(F.max("x").alias("mx"))
-    )
-    dec = "DECIMAL(38,0)"
-    g = monthly.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.expr(f"SUM(CAST(mx AS {dec}))").alias("s"),
-        F.expr(f"SUM(CAST(mx AS {dec}) * mx)").alias("q"),
-    )
-    br = lambda c: f"CAST(CAST({c} AS STRING) AS DOUBLE)"  # noqa: E731
-    dn = "CAST(n AS DOUBLE)"
-    xbar = f"({br('s')} / {dn})"
-    sd = (
-        f"SQRT(({br('q')} - {br('s')} * {br('s')} / {dn})"
-        f" / ({dn} - 1.0))"
-    )
-    beta = f"({sd} * 0.7796968012336093)"  # sqrt(6)/pi
-    mu = f"({xbar} - 0.5772156649015329 * {beta})"
-    rl = f"({mu} - {beta} * LN(-LN(1.0 - 0.01)))"
-    return g.select(
-        F.col("n").alias("n_months"),
-        F.expr(
-            f"CAST(FLOOR({xbar} * 1000.0 + 0.5) AS BIGINT)"
-        ).alias("mean_max_milli"),
-        F.expr(
-            f"CAST(FLOOR({beta} * 1000.0 + 0.5) AS BIGINT)"
-        ).alias("beta_milli"),
-        F.expr(
-            f"CAST(FLOOR({mu} * 1000.0 + 0.5) AS BIGINT)"
-        ).alias("mu_milli"),
-        F.expr(f"CAST(FLOOR({rl} + 0.5) AS BIGINT)").alias(
-            "return_level_100_usd"
-        ),
-    )
-
-
-def _gumbel_oracle() -> str:
-    br = lambda c: f"CAST(CAST({c} AS VARCHAR) AS DOUBLE)"  # noqa: E731
-    dn = "CAST(n AS DOUBLE)"
-    xbar = f"({br('s')} / {dn})"
-    sd = (
-        f"SQRT(({br('q')} - {br('s')} * {br('s')} / {dn})"
-        f" / ({dn} - 1.0))"
-    )
-    beta = f"({sd} * 0.7796968012336093)"
-    mu = f"({xbar} - 0.5772156649015329 * {beta})"
-    rl = f"({mu} - {beta} * LN(-LN(1.0 - 0.01)))"
-    return f"""
-    WITH daily AS (SELECT CAST(o_orderdate AS DATE) AS day,
-            CAST(SUM(CAST(FLOOR(o_totalprice + 0.5) AS BIGINT))
-                AS BIGINT) AS x
-        FROM orders GROUP BY 1),
-    monthly AS (SELECT year(day) * 12 + month(day) AS m,
-            CAST(MAX(x) AS BIGINT) AS mx
-        FROM daily GROUP BY 1),
-    g AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
-            CAST(SUM(CAST(mx AS HUGEINT)) AS HUGEINT) AS s,
-            CAST(SUM(CAST(mx AS HUGEINT) * mx) AS HUGEINT) AS q
-        FROM monthly)
-    SELECT n AS n_months,
-        CAST(FLOOR({xbar} * 1000.0 + 0.5) AS BIGINT) AS mean_max_milli,
-        CAST(FLOOR({beta} * 1000.0 + 0.5) AS BIGINT) AS beta_milli,
-        CAST(FLOOR({mu} * 1000.0 + 0.5) AS BIGINT) AS mu_milli,
-        CAST(FLOOR({rl} + 0.5) AS BIGINT) AS return_level_100_usd
-    FROM g
-"""
-
-
-ORACLE_GUMBEL = _gumbel_oracle()
-
-
-def q_good_turing_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Good-Turing count re-estimation over the unigram vocabulary:
-    the frequency-of-frequencies table N_c and the Turing-adjusted
-    count c* = (c+1) N_{c+1} / N_c for c = 1..10 — the smoothing that
-    says how much probability mass the UNSEEN words deserve (N_1/N,
-    the leave-one-out argument Kneser-Ney discounts approximate; this
-    is the estimator they approximate).  Exact milli integers — one
-    floor division per row; the N_{c+1} lookup is a lead window over
-    the count-of-counts table.
-
-    Scale shape: token explode -> vocab agg -> count-of-counts agg
-    (cardinality = distinct abundance values, O(sqrt tokens)); lead
-    window over that bounded table; 10 rows out."""
-    from pyspark.sql import Window
-
-    docs = _t(spark, sf_dir, "documents")
-    uni = (
-        docs.select(
-            F.explode(
-                TX.tokens(TX.normalize_text(F.col("text")))
-            ).alias("w")
-        )
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    fof = uni.groupBy("c").agg(F.count(F.lit(1)).alias("n_c"))
-    w = Window.orderBy("c")
-    led = fof.select(
-        "c",
-        "n_c",
-        F.lead("n_c").over(w).alias("n_next"),
-        F.lead("c").over(w).alias("c_next"),
-    )
-    return (
-        led.filter((F.col("c") >= 1) & (F.col("c") <= 10))
-        .select(
-            "c",
-            "n_c",
-            # N_{c+1} is zero unless the NEXT populated abundance is
-            # exactly c+1 (the fof table is sparse)
-            F.expr(
-                "CASE WHEN c_next = c + 1 THEN n_next"
-                " ELSE CAST(0 AS BIGINT) END"
-            ).alias("n_c_plus1"),
-            F.expr(
-                "CAST((c + 1) * (CASE WHEN c_next = c + 1 THEN n_next"
-                " ELSE CAST(0 AS BIGINT) END) * 1000 div n_c AS BIGINT)"
-            ).alias("gt_count_milli"),
-        )
-        .orderBy("c")
-    )
-
-
-ORACLE_GOOD_TURING = f"""
-    WITH t AS (SELECT {_TOKS} AS toks FROM documents),
-    uni AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS c FROM (
-            SELECT unnest(toks) AS w FROM t) u GROUP BY w),
-    fof AS (SELECT c, CAST(COUNT(*) AS BIGINT) AS n_c
-        FROM uni GROUP BY c),
-    led AS (SELECT c, n_c,
-            LEAD(n_c) OVER (ORDER BY c) AS n_next,
-            LEAD(c) OVER (ORDER BY c) AS c_next
-        FROM fof)
-    SELECT c, n_c,
-        CAST(CASE WHEN c_next = c + 1 THEN n_next ELSE 0 END AS BIGINT)
-            AS n_c_plus1,
-        CAST((c + 1) * (CASE WHEN c_next = c + 1 THEN n_next
-            ELSE 0 END) * 1000 // n_c AS BIGINT) AS gt_count_milli
-    FROM led WHERE c BETWEEN 1 AND 10 ORDER BY c
-"""
-
-
-# ---------------------------------------------------------------- wave 7s
-
-
-def q_utf8_health_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Byte/text health audit per source — the mojibake screen every
-    ingestion pipeline runs before tokenization: control characters
-    (the C0 set minus tab/newline/CR), U+FFFD replacement characters
-    (the fingerprint of a double-decode), and the non-ASCII character
-    ratio (exact ppm of characters).  A source whose repl count jumps
-    was re-encoded somewhere upstream; this corpus is clean by
-    construction, so like constraint_audit the report doubles as a
-    fixture regression guard.  Counts come from length-minus-stripped
-    (regex classes chosen inside the Java-regex/RE2 common subset).
-
-    Scale shape: per-row codegen expressions, one agg to source
-    cardinality."""
-    docs = _t(spark, sf_dir, "documents")
-    ctrl = r"[\x00-\x08\x0B\x0C\x0E-\x1F]"
-    nonascii = r"[^\x00-\x7F]"
-    per = docs.select(
-        "source",
-        F.length("text").alias("n_chars"),
-        (
-            F.length("text")
-            - F.length(F.regexp_replace("text", ctrl, ""))
-        ).alias("n_ctrl"),
-        (
-            F.length("text")
-            - F.length(F.regexp_replace("text", "�", ""))
-        ).alias("n_repl"),
-        (
-            F.length("text")
-            - F.length(F.regexp_replace("text", nonascii, ""))
-        ).alias("n_nonascii"),
-    )
-    return (
-        per.groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_chars").alias("n_chars"),
-            F.sum("n_ctrl").alias("ctrl_chars"),
-            F.count_if(F.col("n_ctrl") > 0).alias("docs_with_ctrl"),
-            F.sum("n_repl").alias("repl_chars"),
-            F.sum("n_nonascii").alias("nonascii_chars"),
-        )
-        .select(
-            "source",
-            "n_docs",
-            "n_chars",
-            "ctrl_chars",
-            "docs_with_ctrl",
-            "repl_chars",
-            F.expr(
-                "CAST(nonascii_chars * 1000000 div n_chars AS BIGINT)"
-            ).alias("nonascii_ppm"),
-        )
-        .orderBy("source")
-    )
-
-
-ORACLE_UTF8_HEALTH = r"""
-    WITH per AS (SELECT source,
-            length(text) AS n_chars,
-            length(text) - length(regexp_replace(text,
-                '[\x00-\x08\x0B\x0C\x0E-\x1F]', '', 'g')) AS n_ctrl,
-            length(text) - length(regexp_replace(text,
-                '\x{FFFD}', '', 'g')) AS n_repl,
-            length(text) - length(regexp_replace(text,
-                '[^\x00-\x7F]', '', 'g')) AS n_nonascii
-        FROM documents)
-    SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-        CAST(SUM(n_chars) AS BIGINT) AS n_chars,
-        CAST(SUM(n_ctrl) AS BIGINT) AS ctrl_chars,
-        CAST(COUNT(CASE WHEN n_ctrl > 0 THEN 1 END) AS BIGINT)
-            AS docs_with_ctrl,
-        CAST(SUM(n_repl) AS BIGINT) AS repl_chars,
-        CAST(SUM(n_nonascii) * 1000000 // SUM(n_chars) AS BIGINT)
-            AS nonascii_ppm
-    FROM per GROUP BY source ORDER BY source
-"""
-
-
-def q_nelson_aalen_hazard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Nelson-Aalen cumulative hazard for time-to-conversion — the
-    estimator-side twin of km_survival_daily (same risk sets, same
-    censoring), but H(t) = sum d_s/n_s needs NO logarithm: each step's
-    hazard is one exact integer division (nano units), so the running
-    sum — unlike KM's product — is exact end-to-end with zero float
-    ops.  Where KM answers 'what fraction survives to t', NA's slope
-    IS the instantaneous conversion intensity; flat spots are dead
-    zones in the funnel.
-
-    Scale shape: identical to km_survival_daily — two user-cardinality
-    aggs, a day-step table, bounded windows over it."""
-    from pyspark.sql import Window
-
-    ev = _t(spark, sf_dir, "events")
-    per_user = ev.groupBy("user_id").agg(
-        F.min(
-            F.when(
-                F.col("event_type") == "view",
-                F.expr("unix_micros(CAST(ts AS TIMESTAMP))"),
-            )
-        ).alias("t0"),
-        F.max(
-            F.expr("unix_micros(CAST(ts AS TIMESTAMP))")
-        ).alias("t_last"),
-    ).filter(F.col("t0").isNotNull())
-    ev2 = ev.select(
-        "user_id",
-        "event_type",
-        F.expr("unix_micros(CAST(ts AS TIMESTAMP))").alias("t_us"),
-    )
-    deaths = (
-        per_user.join(ev2, "user_id")
-        .filter(
-            (F.col("event_type") == "purchase")
-            & (F.col("t_us") >= F.col("t0"))
-        )
-        .groupBy("user_id")
-        .agg(F.min("t_us").alias("t_death"))
-    )
-    u = per_user.join(deaths, "user_id", "left").select(
-        F.expr(
-            "CASE WHEN t_death IS NOT NULL"
-            " THEN (t_death - t0) div 86400000000"
-            " ELSE (t_last - t0) div 86400000000 END"
-        ).alias("end_day"),
-        F.col("t_death").isNotNull().alias("is_death"),
-    )
-    g = u.groupBy("end_day").agg(
-        F.count_if(F.col("is_death")).alias("n_deaths"),
-        F.count_if(~F.col("is_death")).alias("n_censored"),
-    )
-    w_prev = Window.orderBy("end_day").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    w_cum = Window.orderBy("end_day").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    tot = g.agg(
-        F.sum(F.expr("n_deaths + n_censored")).alias("n_total")
-    )
-    risk = g.crossJoin(F.broadcast(tot)).select(
-        "end_day",
-        "n_deaths",
-        (
-            F.col("n_total")
-            - F.coalesce(
-                F.sum(F.expr("n_deaths + n_censored")).over(w_prev),
-                F.lit(0),
-            )
-        ).alias("n_risk"),
-    )
-    steps = risk.filter(F.col("n_deaths") > 0).select(
-        "end_day",
-        "n_risk",
-        "n_deaths",
-        F.expr(
-            "n_deaths * 1000000000 div n_risk"
-        ).alias("hazard_step_nano"),
-    )
-    return steps.select(
-        F.col("end_day").alias("day"),
-        "n_risk",
-        "n_deaths",
-        "hazard_step_nano",
-        F.sum("hazard_step_nano").over(w_cum).alias("cum_hazard_nano"),
-    ).orderBy("day")
-
-
-ORACLE_NELSON_AALEN = """
-    WITH pu AS (SELECT user_id,
-            MIN(CASE WHEN event_type = 'view' THEN epoch_us(ts) END)
-                AS t0,
-            MAX(epoch_us(ts)) AS t_last
-        FROM events GROUP BY user_id),
-    pv AS (SELECT * FROM pu WHERE t0 IS NOT NULL),
-    de AS (SELECT e.user_id, MIN(epoch_us(e.ts)) AS t_death
-        FROM events e JOIN pv ON e.user_id = pv.user_id
-        WHERE e.event_type = 'purchase' AND epoch_us(e.ts) >= pv.t0
-        GROUP BY e.user_id),
-    u AS (SELECT CASE WHEN t_death IS NOT NULL
-                 THEN (t_death - t0) // 86400000000
-                 ELSE (t_last - t0) // 86400000000 END AS end_day,
-            t_death IS NOT NULL AS is_death
-        FROM pv LEFT JOIN de ON pv.user_id = de.user_id),
-    g AS (SELECT end_day,
-            CAST(SUM(CASE WHEN is_death THEN 1 ELSE 0 END) AS BIGINT)
-                AS n_deaths,
-            CAST(SUM(CASE WHEN is_death THEN 0 ELSE 1 END) AS BIGINT)
-                AS n_censored
-        FROM u GROUP BY end_day),
-    tot AS (SELECT CAST(SUM(n_deaths + n_censored) AS BIGINT)
-            AS n_total FROM g),
-    risk AS (SELECT end_day, n_deaths,
-            n_total - COALESCE(CAST(SUM(n_deaths + n_censored)
-                OVER (ORDER BY end_day ROWS BETWEEN UNBOUNDED
-                    PRECEDING AND 1 PRECEDING) AS BIGINT), 0)
-                AS n_risk
-        FROM g CROSS JOIN tot),
-    steps AS (SELECT end_day, n_risk, n_deaths,
-            n_deaths * 1000000000 // n_risk AS hazard_step_nano
-        FROM risk WHERE n_deaths > 0)
-    SELECT end_day AS day, n_risk, n_deaths, hazard_step_nano,
-        CAST(SUM(hazard_step_nano) OVER (ORDER BY day ROWS BETWEEN
-            UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-            AS cum_hazard_nano
-    FROM steps ORDER BY day
-"""
-
-
-# ---------------------------------------------------------------- wave 7t
-
-
-def q_cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohort lifetime-value curves: users grouped by first-activity
-    week, cumulative purchase value tracked across weeks-since-signup
-    0..8 — the payback-period readout (weekly_retention_cohorts counts
-    WHO comes back; this weighs what they're WORTH, which is what
-    acquisition spend is justified against).  Exact integer cents and
-    an exact per-user milli-cents column; the cumulative axis is a
-    per-cohort window over the (cohort, week) aggregate.
-
-    Scale shape: one user-cardinality first-week agg, one fact join
-    back (equi, user key), one (cohort x 9)-cardinality agg, cum
-    window partitioned by cohort; bounded rows out."""
-    from pyspark.sql import Window
-
-    ev = _t(spark, sf_dir, "events").select(
-        "user_id",
-        F.expr(
-            "CAST(unix_micros(CAST(ts AS TIMESTAMP))"
-            " div 604800000000 AS BIGINT)"
-        ).alias("wk"),
-        F.col("event_type"),
-        F.expr(
-            "CAST(floor(value * 100.0 + 0.5) AS BIGINT)"
-        ).alias("cents"),
-    )
-    first = ev.groupBy("user_id").agg(F.min("wk").alias("cohort_wk"))
-    sized = first.groupBy("cohort_wk").agg(
-        F.count(F.lit(1)).alias("cohort_users")
-    )
-    buys = (
-        ev.filter(F.col("event_type") == "purchase")
-        .join(first, "user_id")
-        .select(
-            "cohort_wk",
-            (F.col("wk") - F.col("cohort_wk")).alias("k"),
-            "cents",
-        )
-        .filter(F.col("k") <= 8)
-        .groupBy("cohort_wk", "k")
-        .agg(F.sum("cents").alias("rev_cents"))
-    )
-    wc = Window.partitionBy("cohort_wk").orderBy("k").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    cum = buys.select(
-        "cohort_wk",
-        "k",
-        "rev_cents",
-        F.sum("rev_cents").over(wc).alias("cum_rev_cents"),
-    ).join(F.broadcast(sized), "cohort_wk")
-    return cum.select(
-        "cohort_wk",
-        "k",
-        "cohort_users",
-        "rev_cents",
-        "cum_rev_cents",
-        F.expr(
-            "CAST(cum_rev_cents * 1000 div cohort_users AS BIGINT)"
-        ).alias("ltv_per_user_milli"),
-    ).orderBy("cohort_wk", "k")
-
-
-ORACLE_COHORT_LTV = """
-    WITH ev AS (SELECT user_id,
-            epoch_us(ts) // 604800000000 AS wk,
-            event_type,
-            CAST(FLOOR(value * 100.0 + 0.5) AS BIGINT) AS cents
-        FROM events),
-    first_ AS (SELECT user_id, CAST(MIN(wk) AS BIGINT) AS cohort_wk
-        FROM ev GROUP BY 1),
-    sized AS (SELECT cohort_wk, CAST(COUNT(*) AS BIGINT)
-            AS cohort_users
-        FROM first_ GROUP BY 1),
-    buys AS (SELECT f.cohort_wk, ev.wk - f.cohort_wk AS k,
-            CAST(SUM(cents) AS BIGINT) AS rev_cents
-        FROM ev JOIN first_ f ON ev.user_id = f.user_id
-        WHERE ev.event_type = 'purchase' AND ev.wk - f.cohort_wk <= 8
-        GROUP BY 1, 2),
-    cum AS (SELECT cohort_wk, k, rev_cents,
-            CAST(SUM(rev_cents) OVER (PARTITION BY cohort_wk ORDER BY k
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                AS BIGINT) AS cum_rev_cents
-        FROM buys)
-    SELECT cum.cohort_wk AS cohort_wk, k, cohort_users, rev_cents,
-        cum_rev_cents,
-        CAST(cum_rev_cents * 1000 // cohort_users AS BIGINT)
-            AS ltv_per_user_milli
-    FROM cum JOIN sized ON cum.cohort_wk = sized.cohort_wk
-    ORDER BY cum.cohort_wk, k
-"""
-
-
-def q_hhi_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Herfindahl-Hirschman revenue concentration per nation: the sum
-    of squared customer market shares — the antitrust-grade answer to
-    'is this market one whale or a crowd' that gini_spend_by_segment's
-    inequality lens doesn't give (HHI is what merger review uses, and
-    it's defined on SQUARED shares so a single exact division suffices:
-    HHI_ppm = (sum s_c^2) * 1e6 div S^2 — no per-customer share
-    quantization, no bias).  Also emits the top-1 share and the
-    effective number of customers (1e12 div hhi_ppm rescaled — the
-    'numbers equivalent' economists quote).
-
-    Scale shape: one orders->customer equi-join, one agg to customer
-    cardinality, one agg to nation cardinality (max + sum of squares
-    in DECIMAL(38,0)); exact to the last ppm."""
-    cust = _t(spark, sf_dir, "customer").select(
-        "c_custkey", "c_nationkey"
-    )
-    per_cust = (
-        _t(spark, sf_dir, "orders")
-        .groupBy("o_custkey")
-        .agg(
-            F.expr(
-                "SUM(CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT))"
-            ).alias("cents")
-        )
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-    )
-    dec = "DECIMAL(38,0)"
-    g = per_cust.groupBy("c_nationkey").agg(
-        F.count(F.lit(1)).alias("n_cust"),
-        F.expr(f"SUM(CAST(cents AS {dec}))").alias("s"),
-        F.expr(f"SUM(CAST(cents AS {dec}) * cents)").alias("ssq"),
-        F.max("cents").alias("mx"),
-    )
-    return g.select(
-        "c_nationkey",
-        "n_cust",
-        F.expr("CAST(s AS BIGINT)").alias("total_cents"),
-        F.expr(
-            "CAST(ssq * 1000000 div (s * s) AS BIGINT)"
-        ).alias("hhi_ppm"),
-        F.expr(
-            "CAST(CAST(mx AS DECIMAL(38,0)) * 1000000 div s AS BIGINT)"
-        ).alias("top1_share_ppm"),
-        F.expr(
-            "CAST(CAST(s AS DECIMAL(38,0)) * s div ssq AS BIGINT)"
-        ).alias("effective_n_cust"),
-    ).orderBy("c_nationkey")
-
-
-ORACLE_HHI = """
-    WITH per_cust AS (SELECT o_custkey,
-            CAST(SUM(CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT))
-                AS BIGINT) AS cents
-        FROM orders GROUP BY 1),
-    rows_ AS (SELECT c_nationkey, cents
-        FROM per_cust JOIN customer ON o_custkey = c_custkey),
-    g AS (SELECT c_nationkey, CAST(COUNT(*) AS BIGINT) AS n_cust,
-            CAST(SUM(CAST(cents AS HUGEINT)) AS HUGEINT) AS s,
-            CAST(SUM(CAST(cents AS HUGEINT) * cents) AS HUGEINT)
-                AS ssq,
-            CAST(MAX(cents) AS BIGINT) AS mx
-        FROM rows_ GROUP BY 1)
-    SELECT c_nationkey, n_cust,
-        CAST(s AS BIGINT) AS total_cents,
-        CAST(ssq * 1000000 // (s * s) AS BIGINT) AS hhi_ppm,
-        CAST(CAST(mx AS HUGEINT) * 1000000 // s AS BIGINT)
-            AS top1_share_ppm,
-        CAST(s * s // ssq AS BIGINT) AS effective_n_cust
-    FROM g ORDER BY c_nationkey
-"""
-
-
-# ---------------------------------------------------------------- wave 7u
-
-
-def _late_order_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-nation 2x2 cells for exposure = URGENT priority, outcome =
-    order has a lineitem shipped more than 90 days after the order
-    date (this schema carries l_shipdate only — the q4-style lateness
-    signal available here).  One orders|x|lineitem equi-join rolled to
-    order cardinality, one customer equi-join, one nation agg."""
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_shipdate"
-    )
-    o0 = _t(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        "o_custkey",
-        "o_orderdate",
-        (F.col("o_orderpriority") == "1-URGENT").cast("int").alias(
-            "urgent"
-        ),
-    )
-    late = (
-        o0.join(li, o0["o_orderkey"] == li["l_orderkey"])
-        .groupBy("o_orderkey")
-        .agg(
-            F.max(
-                F.expr(
-                    "CAST(CAST(l_shipdate AS DATE)"
-                    " > CAST(o_orderdate AS DATE) + INTERVAL 90 DAYS"
-                    " AS INT)"
-                )
-            ).alias("late"),
-            F.max("urgent").alias("urgent"),
-            F.max("o_custkey").alias("cust"),
-        )
-    )
-    cust = _t(spark, sf_dir, "customer").select(
-        "c_custkey", "c_nationkey"
-    )
-    o = late.join(cust, F.col("cust") == F.col("c_custkey"))
-    return o.groupBy("c_nationkey").agg(
-        F.count_if(
-            (F.col("urgent") == 1) & (F.col("late") == 1)
-        ).alias("a"),
-        F.count_if(
-            (F.col("urgent") == 1) & (F.col("late") == 0)
-        ).alias("b"),
-        F.count_if(
-            (F.col("urgent") == 0) & (F.col("late") == 1)
-        ).alias("c"),
-        F.count_if(
-            (F.col("urgent") == 0) & (F.col("late") == 0)
-        ).alias("d"),
-    )
-
-
-_CELLS_SQL = """
-    late AS (SELECT o_orderkey,
-            MAX(CASE WHEN CAST(l_shipdate AS DATE)
-                > CAST(o_orderdate AS DATE) + INTERVAL 90 DAY
-                THEN 1 ELSE 0 END) AS late,
-            MAX(CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0
-                END) AS urgent,
-            MAX(o_custkey) AS cust
-        FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        GROUP BY 1),
-    o AS (SELECT c_nationkey, urgent, late
-        FROM late JOIN customer ON cust = c_custkey),
-    cells AS (SELECT c_nationkey,
-            CAST(COUNT(CASE WHEN urgent = 1 AND late = 1 THEN 1 END)
-                AS BIGINT) AS a,
-            CAST(COUNT(CASE WHEN urgent = 1 AND late = 0 THEN 1 END)
-                AS BIGINT) AS b,
-            CAST(COUNT(CASE WHEN urgent = 0 AND late = 1 THEN 1 END)
-                AS BIGINT) AS c,
-            CAST(COUNT(CASE WHEN urgent = 0 AND late = 0 THEN 1 END)
-                AS BIGINT) AS d
-        FROM o GROUP BY 1)
-"""
-
-
-def q_odds_ratio_forest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Forest-plot table of per-nation odds ratios: does URGENT
-    priority associate with late delivery, stratum by stratum — the
-    epidemiology effect-measure family (chi2 screens association
-    strength; the OR is the direction-and-magnitude estimate people
-    act on).  OR in exact micro (a*d*1e6 div (b*c)); the Woolf CI is
-    the shared IEEE closed form exp(ln OR +- 1.96 sqrt(1/a+1/b+1/c+
-    1/d)), micro-quantized.  Read with cmh_pooled_odds: strata whose
-    CI excludes the pooled value are the heterogeneity alarms.
-
-    Scale shape: lineitem semi-aggregate + two equi-joins, one
-    nation-cardinality agg, per-row closed form on 25 rows."""
-    cells = _late_order_cells(spark, sf_dir).filter(
-        (F.col("a") > 0) & (F.col("b") > 0)
-        & (F.col("c") > 0) & (F.col("d") > 0)
-    )
-    lnor = (
-        "(ln(CAST(a AS DOUBLE)) + ln(CAST(d AS DOUBLE))"
-        " - ln(CAST(b AS DOUBLE)) - ln(CAST(c AS DOUBLE)))"
-    )
-    se = (
-        "SQRT(1.0 / CAST(a AS DOUBLE) + 1.0 / CAST(b AS DOUBLE)"
-        " + 1.0 / CAST(c AS DOUBLE) + 1.0 / CAST(d AS DOUBLE))"
-    )
-    return cells.select(
-        "c_nationkey",
-        "a",
-        "b",
-        "c",
-        "d",
-        F.expr(
-            "CAST(CAST(a AS DECIMAL(38,0)) * d * 1000000"
-            " div (CAST(b AS DECIMAL(38,0)) * c) AS BIGINT)"
-        ).alias("or_micro"),
-        F.expr(
-            f"CAST(FLOOR(EXP({lnor} - 1.96 * {se}) * 1000000.0 + 0.5)"
-            " AS BIGINT)"
-        ).alias("or_lo_micro"),
-        F.expr(
-            f"CAST(FLOOR(EXP({lnor} + 1.96 * {se}) * 1000000.0 + 0.5)"
-            " AS BIGINT)"
-        ).alias("or_hi_micro"),
-    ).orderBy("c_nationkey")
-
-
-ORACLE_OR_FOREST = f"""
-    WITH {_CELLS_SQL}
-    SELECT c_nationkey, a, b, c, d,
-        CAST(CAST(a AS HUGEINT) * d * 1000000
-            // (CAST(b AS HUGEINT) * c) AS BIGINT) AS or_micro,
-        CAST(FLOOR(EXP((LN(CAST(a AS DOUBLE)) + LN(CAST(d AS DOUBLE))
-            - LN(CAST(b AS DOUBLE)) - LN(CAST(c AS DOUBLE)))
-            - 1.96 * SQRT(1.0 / CAST(a AS DOUBLE)
-            + 1.0 / CAST(b AS DOUBLE) + 1.0 / CAST(c AS DOUBLE)
-            + 1.0 / CAST(d AS DOUBLE))) * 1000000.0 + 0.5) AS BIGINT)
-            AS or_lo_micro,
-        CAST(FLOOR(EXP((LN(CAST(a AS DOUBLE)) + LN(CAST(d AS DOUBLE))
-            - LN(CAST(b AS DOUBLE)) - LN(CAST(c AS DOUBLE)))
-            + 1.96 * SQRT(1.0 / CAST(a AS DOUBLE)
-            + 1.0 / CAST(b AS DOUBLE) + 1.0 / CAST(c AS DOUBLE)
-            + 1.0 / CAST(d AS DOUBLE))) * 1000000.0 + 0.5) AS BIGINT)
-            AS or_hi_micro
-    FROM cells WHERE a > 0 AND b > 0 AND c > 0 AND d > 0
-    ORDER BY c_nationkey
-"""
-
-
-def q_cmh_pooled_odds(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cochran-Mantel-Haenszel pooled odds ratio across nation strata,
-    next to the CRUDE (collapsed) odds ratio — the pairing that
-    detects confounding-by-stratum: if pooling the 2x2s changes the
-    OR materially, nation mix was distorting the crude association
-    (the 2x2 cousin of simpsons_paradox_screen's slope version).
-    OR_MH = sum(a d / n) / sum(b c / n) with each stratum term
-    quantized to exact nano BEFORE the sum (integer fold, engine-
-    exact), one closing division.
-
-    Scale shape: the same nation-cardinality cell table; two 1-row
-    rollups."""
-    cells = _late_order_cells(spark, sf_dir)
-    dec = "DECIMAL(38,0)"
-    terms = cells.select(
-        "a",
-        "b",
-        "c",
-        "d",
-        F.expr(
-            f"CAST(a AS {dec}) * d * 1000000000 div (a + b + c + d)"
-        ).alias("t_num"),
-        F.expr(
-            f"CAST(b AS {dec}) * c * 1000000000 div (a + b + c + d)"
-        ).alias("t_den"),
-    )
-    g = terms.agg(
-        F.count(F.lit(1)).alias("n_strata"),
-        F.sum("a").alias("sa"),
-        F.sum("b").alias("sb"),
-        F.sum("c").alias("sc"),
-        F.sum("d").alias("sd"),
-        # the nano-quantized stratum terms are BIGINT (Spark `div`),
-        # but their SUM x 1e6 passes int64 already at sf1 (caught by
-        # the sf1 run: ARITHMETIC_OVERFLOW) — accumulate and divide
-        # in DECIMAL(38,0), the oracle's HUGEINT twin
-        F.expr(f"SUM(CAST(t_num AS {dec}))").alias("s_num"),
-        F.expr(f"SUM(CAST(t_den AS {dec}))").alias("s_den"),
-    )
-    return g.select(
-        "n_strata",
-        F.expr(
-            "CAST(s_num * 1000000 div s_den AS BIGINT)"
-        ).alias("cmh_or_micro"),
-        F.expr(
-            "CAST(CAST(sa AS DECIMAL(38,0)) * sd * 1000000"
-            " div (CAST(sb AS DECIMAL(38,0)) * sc) AS BIGINT)"
-        ).alias("crude_or_micro"),
-    )
-
-
-ORACLE_CMH = f"""
-    WITH {_CELLS_SQL},
-    terms AS (SELECT a, b, c, d,
-            CAST(a AS HUGEINT) * d * 1000000000 // (a + b + c + d)
-                AS t_num,
-            CAST(b AS HUGEINT) * c * 1000000000 // (a + b + c + d)
-                AS t_den
-        FROM cells),
-    g AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_strata,
-            CAST(SUM(a) AS BIGINT) AS sa, CAST(SUM(b) AS BIGINT) AS sb,
-            CAST(SUM(c) AS BIGINT) AS sc, CAST(SUM(d) AS BIGINT) AS sd,
-            CAST(SUM(t_num) AS HUGEINT) AS s_num,
-            CAST(SUM(t_den) AS HUGEINT) AS s_den
-        FROM terms)
-    SELECT n_strata,
-        CAST(s_num * 1000000 // s_den AS BIGINT) AS cmh_or_micro,
-        CAST(CAST(sa AS HUGEINT) * sd * 1000000
-            // (CAST(sb AS HUGEINT) * sc) AS BIGINT) AS crude_or_micro
-    FROM g
-"""
-
-
-# ---------------------------------------------------------------- wave 7v
-
-
-def q_pps_systematic_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Probability-proportional-to-size SYSTEMATIC sampling of the
-    corpus by character mass: walk the cumulative-size axis with a
-    fixed stride W/m from a deterministic mid-stride anchor and take
-    every document the pointer lands in — the textbook PPS design
-    whose inclusion probability is exactly size*m/W (weighted_sample_
-    docs is the A-ES order-sampling flavor; systematic PPS is what
-    survey statistics and data-pruning pipelines actually run because
-    it needs ONE pass and no priority sort).  Hit counting uses only
-    POSITIVE floor divisions (both arguments shifted by +W) so Spark
-    `div` and DuckDB `//` agree everywhere; the cumulative axis comes
-    from the distributed prefix-sum operator (operators/packing.py) —
-    never a single-task window — while the oracle replays it with a
-    plain window.
-
-    Scale shape: two-pass prefix sum (range-partitioned stage +
-    per-partition offsets), per-row hit arithmetic, one agg to source
-    cardinality."""
-    from kafka_firehose_nozzle_spark.operators.packing import (
-        with_global_running_sum,
-    )
-
-    m = 500
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id", "source", F.length("text").cast("bigint").alias("w")
-    )
-    cum = with_global_running_sum(docs, "doc_id", "w", "cum")
-    tot = docs.agg(F.sum("w").alias("big_w"))
-    hits = cum.crossJoin(F.broadcast(tot)).select(
-        "source",
-        "w",
-        F.expr(
-            f"(cum - (big_w div {m}) div 2 + big_w)"
-            f" div (big_w div {m})"
-            f" - (cum - w - (big_w div {m}) div 2 + big_w)"
-            f" div (big_w div {m})"
-        ).alias("n_hits"),
-    )
-    return (
-        hits.groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("w").alias("total_chars"),
-            F.count_if(F.col("n_hits") > 0).alias("n_sampled"),
-            F.sum(F.expr("w * CAST(n_hits > 0 AS INT)")).alias(
-                "sampled_chars"
-            ),
-        )
-        .select(
-            "source",
-            "n_docs",
-            "total_chars",
-            "n_sampled",
-            "sampled_chars",
-            F.expr(
-                "CAST(sampled_chars * 1000000 div total_chars"
-                " AS BIGINT)"
-            ).alias("mass_rate_ppm"),
-        )
-        .orderBy("source")
-    )
-
-
-ORACLE_PPS_SAMPLE = """
-    WITH d AS (SELECT doc_id, source,
-            CAST(length(text) AS BIGINT) AS w
-        FROM documents),
-    c AS (SELECT doc_id, source, w,
-            CAST(SUM(w) OVER (ORDER BY doc_id ROWS BETWEEN UNBOUNDED
-                PRECEDING AND CURRENT ROW) AS BIGINT) AS cum,
-            CAST(SUM(w) OVER () AS BIGINT) AS big_w
-        FROM d),
-    hits AS (SELECT source, w,
-            (cum - (big_w // 500) // 2 + big_w) // (big_w // 500)
-            - (cum - w - (big_w // 500) // 2 + big_w) // (big_w // 500)
-                AS n_hits
-        FROM c)
-    SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-        CAST(SUM(w) AS BIGINT) AS total_chars,
-        CAST(COUNT(CASE WHEN n_hits > 0 THEN 1 END) AS BIGINT)
-            AS n_sampled,
-        CAST(SUM(w * CASE WHEN n_hits > 0 THEN 1 ELSE 0 END) AS BIGINT)
-            AS sampled_chars,
-        CAST(SUM(w * CASE WHEN n_hits > 0 THEN 1 ELSE 0 END) * 1000000
-            // SUM(w) AS BIGINT) AS mass_rate_ppm
-    FROM hits GROUP BY source ORDER BY source
-"""
-
-
-def q_price_index_years(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Laspeyres / Paasche / Fisher price indices by ship year against
-    the 1992 base — the index-number machinery behind every 'revenue
-    grew 8%, but how much was PRICE?' decomposition.  Unit prices are
-    exact milli-cents (sum-of-extendedprice over sum-of-quantity per
-    part-year); Laspeyres weights by BASE-year quantities, Paasche by
-    the CURRENT year's, Fisher is the geometric mean (the one sqrt,
-    det-floored to ppm).  Basket = parts present in both the base and
-    comparison year.
-
-    Scale shape: one fact agg to (part, year); base-year slice joins
-    back on the part key; one rollup to year cardinality; all index
-    arithmetic in DECIMAL(38,0)."""
-    li = _t(spark, sf_dir, "lineitem").select(
-        F.col("l_partkey").alias("pk"),
-        F.expr("year(CAST(l_shipdate AS DATE))").alias("yr"),
-        F.expr(
-            "CAST(floor(l_extendedprice * 100.0 + 0.5) AS BIGINT)"
-        ).alias("cents"),
-        F.expr("CAST(floor(l_quantity + 0.5) AS BIGINT)").alias("qty"),
-    )
-    py = li.groupBy("pk", "yr").agg(
-        F.sum("cents").alias("sp"), F.sum("qty").alias("sq")
-    ).select(
-        "pk",
-        "yr",
-        "sq",
-        F.expr("sp * 1000 div sq").alias("p_milli"),
-    )
-    base = py.filter(F.col("yr") == 1992).select(
-        "pk",
-        F.col("sq").alias("q0"),
-        F.col("p_milli").alias("p0_milli"),
-    )
-    j = py.filter(F.col("yr") != 1992).join(base, "pk")
-    dec = "DECIMAL(38,0)"
-    g = j.groupBy("yr").agg(
-        F.count(F.lit(1)).alias("n_parts"),
-        F.expr(f"SUM(CAST(p_milli AS {dec}) * q0)").alias("ltq"),
-        F.expr(f"SUM(CAST(p0_milli AS {dec}) * q0)").alias("lbq"),
-        F.expr(f"SUM(CAST(p_milli AS {dec}) * sq)").alias("ptq"),
-        F.expr(f"SUM(CAST(p0_milli AS {dec}) * sq)").alias("pbq"),
-    )
-    br = lambda c: f"CAST(CAST({c} AS STRING) AS DOUBLE)"  # noqa: E731
-    fisher = (
-        f"SQRT(({br('ltq')} / {br('lbq')})"
-        f" * ({br('ptq')} / {br('pbq')}))"
-    )
-    return g.select(
-        "yr",
-        "n_parts",
-        F.expr("CAST(ltq * 1000000 div lbq AS BIGINT)").alias(
-            "laspeyres_ppm"
-        ),
-        F.expr("CAST(ptq * 1000000 div pbq AS BIGINT)").alias(
-            "paasche_ppm"
-        ),
-        F.expr(
-            f"CAST(FLOOR({fisher} * 1000000.0 + 0.5) AS BIGINT)"
-        ).alias("fisher_ppm"),
-    ).orderBy("yr")
-
-
-ORACLE_PRICE_INDEX = """
-    WITH li AS (SELECT l_partkey AS pk,
-            year(CAST(l_shipdate AS DATE)) AS yr,
-            CAST(FLOOR(l_extendedprice * 100.0 + 0.5) AS BIGINT)
-                AS cents,
-            CAST(FLOOR(l_quantity + 0.5) AS BIGINT) AS qty
-        FROM lineitem),
-    py AS (SELECT pk, yr, CAST(SUM(qty) AS BIGINT) AS sq,
-            CAST(SUM(cents) AS BIGINT) * 1000
-                // CAST(SUM(qty) AS BIGINT) AS p_milli
-        FROM li GROUP BY 1, 2),
-    base AS (SELECT pk, sq AS q0, p_milli AS p0_milli
-        FROM py WHERE yr = 1992),
-    j AS (SELECT py.yr, py.sq, py.p_milli, base.q0, base.p0_milli
-        FROM py JOIN base ON py.pk = base.pk WHERE py.yr <> 1992),
-    g AS (SELECT yr, CAST(COUNT(*) AS BIGINT) AS n_parts,
-            CAST(SUM(CAST(p_milli AS HUGEINT) * q0) AS HUGEINT) AS ltq,
-            CAST(SUM(CAST(p0_milli AS HUGEINT) * q0) AS HUGEINT)
-                AS lbq,
-            CAST(SUM(CAST(p_milli AS HUGEINT) * sq) AS HUGEINT) AS ptq,
-            CAST(SUM(CAST(p0_milli AS HUGEINT) * sq) AS HUGEINT)
-                AS pbq
-        FROM j GROUP BY 1)
-    SELECT yr, n_parts,
-        CAST(ltq * 1000000 // lbq AS BIGINT) AS laspeyres_ppm,
-        CAST(ptq * 1000000 // pbq AS BIGINT) AS paasche_ppm,
-        CAST(FLOOR(SQRT((CAST(CAST(ltq AS VARCHAR) AS DOUBLE)
-            / CAST(CAST(lbq AS VARCHAR) AS DOUBLE))
-            * (CAST(CAST(ptq AS VARCHAR) AS DOUBLE)
-            / CAST(CAST(pbq AS VARCHAR) AS DOUBLE))) * 1000000.0
-            + 0.5) AS BIGINT) AS fisher_ppm
-    FROM g ORDER BY yr
-"""
-
-
-# ---------------------------------------------------------------- wave 7w
-
-
-def q_kendall_tau_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Kendall tau-b between daily revenue and daily order count — the
-    third nonparametric association measure (spearman_lineitem ranks
-    the fact table; mann_kendall tests ONE series for trend; tau-b
-    asks whether two daily series move together, robust to any
-    monotone transform and exact under ties).  Concordant/discordant/
-    tied pair counts are exact integers from the calendar-bounded pair
-    join (the mann_kendall localCheckpoint shape); tau-b's denominator
-    is the one shared IEEE sqrt, det6.
-
-    Scale shape: ONE corpus aggregate to the ~2.4k-row daily series
-    (checkpointed), a dimension-sized pair join, one row out."""
-    o = _t(spark, sf_dir, "orders").select(
-        F.expr(
-            "datediff(CAST(o_orderdate AS DATE), DATE'1992-01-01')"
-        ).alias("day"),
-        F.expr(
-            "CAST(CAST(o_totalprice AS DECIMAL(12,4)) * 10000 AS LONG)"
-        ).alias("cents4"),
-    )
-    daily = (
-        o.groupBy("day")
-        .agg(
-            F.sum("cents4").alias("x"), F.count(F.lit(1)).alias("y")
-        )
-        .localCheckpoint()
-    )
-    a = daily.select(
-        F.col("day").alias("di"),
-        F.col("x").alias("xi"),
-        F.col("y").alias("yi"),
-    )
-    b = daily.select(
-        F.col("day").alias("dj"),
-        F.col("x").alias("xj"),
-        F.col("y").alias("yj"),
-    )
-    pairs = a.join(F.broadcast(b), F.col("di") < F.col("dj"))
-    g = pairs.agg(
-        F.count(F.lit(1)).alias("n0"),
-        F.count_if(
-            F.expr(
-                "(xi < xj AND yi < yj) OR (xi > xj AND yi > yj)"
-            )
-        ).alias("nc"),
-        F.count_if(
-            F.expr(
-                "(xi < xj AND yi > yj) OR (xi > xj AND yi < yj)"
-            )
-        ).alias("nd"),
-        F.count_if(F.expr("xi = xj AND yi <> yj")).alias("tx"),
-        F.count_if(F.expr("yi = yj AND xi <> xj")).alias("ty"),
-        F.count_if(F.expr("xi = xj AND yi = yj")).alias("txy"),
-    )
-    tau = (
-        "(CAST(nc AS DOUBLE) - CAST(nd AS DOUBLE))"
-        " / SQRT(CAST(n0 - tx - txy AS DOUBLE)"
-        " * CAST(n0 - ty - txy AS DOUBLE))"
-    )
-    return g.select(
-        "n0",
-        "nc",
-        "nd",
-        "tx",
-        "ty",
-        "txy",
-        DET.det_round(F.expr(tau), 6).alias("tau_b"),
-    )
-
-
-ORACLE_KENDALL_TAU = f"""
-    WITH o AS (SELECT
-            date_diff('day', DATE '1992-01-01',
-                CAST(o_orderdate AS DATE)) AS day,
-            CAST(CAST(o_totalprice AS DECIMAL(12,4)) * 10000 AS BIGINT)
-                AS cents4
-        FROM orders),
-    daily AS (SELECT day, CAST(SUM(cents4) AS BIGINT) AS x,
-            CAST(COUNT(*) AS BIGINT) AS y
-        FROM o GROUP BY day),
-    g AS (SELECT CAST(COUNT(*) AS BIGINT) AS n0,
-            CAST(COUNT(CASE WHEN (a.x < b.x AND a.y < b.y)
-                OR (a.x > b.x AND a.y > b.y) THEN 1 END) AS BIGINT)
-                AS nc,
-            CAST(COUNT(CASE WHEN (a.x < b.x AND a.y > b.y)
-                OR (a.x > b.x AND a.y < b.y) THEN 1 END) AS BIGINT)
-                AS nd,
-            CAST(COUNT(CASE WHEN a.x = b.x AND a.y <> b.y THEN 1 END)
-                AS BIGINT) AS tx,
-            CAST(COUNT(CASE WHEN a.y = b.y AND a.x <> b.x THEN 1 END)
-                AS BIGINT) AS ty,
-            CAST(COUNT(CASE WHEN a.x = b.x AND a.y = b.y THEN 1 END)
-                AS BIGINT) AS txy
-        FROM daily a JOIN daily b ON a.day < b.day)
-    SELECT n0, nc, nd, tx, ty, txy,
-        {DET.det_round_sql(
-            "(CAST(nc AS DOUBLE) - CAST(nd AS DOUBLE))"
-            " / SQRT(CAST(n0 - tx - txy AS DOUBLE)"
-            " * CAST(n0 - ty - txy AS DOUBLE))", 6
-        )} AS tau_b
-    FROM g
-"""
-
-
-def q_bland_altman_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bland-Altman agreement between two measurement methods —
-    whitespace tokens vs the BPE-ish count (token_counts emits both;
-    THIS says whether they agree well enough to interchange, the
-    method-comparison question correlation famously cannot answer):
-    mean difference (bias), 1.96-SD limits of agreement, and the
-    fraction of documents inside them.  The per-doc difference is a
-    SMALL INTEGER, so the whole analysis runs on its bounded value
-    histogram: moments AND the within-limits count come from ONE
-    corpus pass — the limits (det-floored to exact milli) are compared
-    against d*1000 as integer-vs-integer, no float per row.
-
-    Scale shape: one corpus agg to difference-value cardinality
-    (bounded by the token-count range), windows/arithmetic on that
-    bounded table, one row out."""
-    from pyspark.sql import Window
-
-    docs = _t(spark, sf_dir, "documents")
-    d = docs.select(
-        (
-            TX.token_count(F.col("text")).cast("long")
-            - TX.bpe_ish_token_count(F.col("text")).cast("long")
-        ).alias("d")
-    )
-    hist = d.groupBy("d").agg(F.count(F.lit(1)).alias("cnt"))
-    dec = "DECIMAL(38,0)"
-    wall = Window.partitionBy()
-    m = hist.select(
-        "d",
-        "cnt",
-        F.sum("cnt").over(wall).alias("n"),
-        F.sum(F.expr(f"CAST(cnt AS {dec}) * d")).over(wall).alias("s"),
-        F.sum(
-            F.expr(f"CAST(cnt AS {dec}) * d * d")
-        ).over(wall).alias("q"),
-    )
-    br = lambda c: f"CAST(CAST({c} AS STRING) AS DOUBLE)"  # noqa: E731
-    dn = "CAST(n AS DOUBLE)"
-    mean = f"({br('s')} / {dn})"
-    sd = (
-        f"SQRT(({br('q')} - {br('s')} * {br('s')} / {dn})"
-        f" / ({dn} - 1.0))"
-    )
-    lo = f"CAST(FLOOR(({mean} - 1.96 * {sd}) * 1000.0 + 0.5) AS BIGINT)"
-    hi = f"CAST(FLOOR(({mean} + 1.96 * {sd}) * 1000.0 + 0.5) AS BIGINT)"
-    scored = m.select(
-        "d",
-        "cnt",
-        "n",
-        F.expr(lo).alias("loa_lo_milli"),
-        F.expr(hi).alias("loa_hi_milli"),
-        F.expr(
-            f"CAST(FLOOR({mean} * 1000.0 + 0.5) AS BIGINT)"
-        ).alias("bias_milli"),
-    )
-    return scored.groupBy(
-        "n", "bias_milli", "loa_lo_milli", "loa_hi_milli"
-    ).agg(
-        F.sum(
-            F.when(
-                (F.col("d") * 1000 >= F.col("loa_lo_milli"))
-                & (F.col("d") * 1000 <= F.col("loa_hi_milli")),
-                F.col("cnt"),
-            ).otherwise(F.lit(0))
-        ).alias("n_within")
-    ).select(
-        F.col("n").alias("n_docs"),
-        "bias_milli",
-        "loa_lo_milli",
-        "loa_hi_milli",
-        "n_within",
-        F.expr("CAST(n_within * 1000000 div n AS BIGINT)").alias(
-            "within_ppm"
-        ),
-    )
-
-
-ORACLE_BLAND_ALTMAN = """
-    WITH t AS (SELECT
-        CAST(len(list_filter(string_split_regex(trim(text), '\\s+'),
-            x -> x <> '')) AS BIGINT)
-        - CAST(list_sum(list_transform(
-            list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-                x -> x <> ''),
-            w -> CASE WHEN length(w) <= 4 THEN 1
-                 ELSE CAST(ceil(length(w) / 4.0) AS BIGINT) END))
-            AS BIGINT) AS d
-    FROM documents),
-    hist AS (SELECT d, CAST(COUNT(*) AS BIGINT) AS cnt
-        FROM t GROUP BY 1),
-    m AS (SELECT d, cnt,
-            CAST(SUM(cnt) OVER () AS BIGINT) AS n,
-            CAST(SUM(CAST(cnt AS HUGEINT) * d) OVER () AS HUGEINT)
-                AS s,
-            CAST(SUM(CAST(cnt AS HUGEINT) * d * d) OVER () AS HUGEINT)
-                AS q
-        FROM hist),
-    sc AS (SELECT d, cnt, n,
-            CAST(FLOOR((CAST(CAST(s AS VARCHAR) AS DOUBLE)
-                / CAST(n AS DOUBLE)) * 1000.0 + 0.5) AS BIGINT)
-                AS bias_milli,
-            CAST(FLOOR((CAST(CAST(s AS VARCHAR) AS DOUBLE)
-                / CAST(n AS DOUBLE)
-                - 1.96 * SQRT((CAST(CAST(q AS VARCHAR) AS DOUBLE)
-                    - CAST(CAST(s AS VARCHAR) AS DOUBLE)
-                    * CAST(CAST(s AS VARCHAR) AS DOUBLE)
-                    / CAST(n AS DOUBLE)) / (CAST(n AS DOUBLE) - 1.0)))
-                * 1000.0 + 0.5) AS BIGINT) AS loa_lo_milli,
-            CAST(FLOOR((CAST(CAST(s AS VARCHAR) AS DOUBLE)
-                / CAST(n AS DOUBLE)
-                + 1.96 * SQRT((CAST(CAST(q AS VARCHAR) AS DOUBLE)
-                    - CAST(CAST(s AS VARCHAR) AS DOUBLE)
-                    * CAST(CAST(s AS VARCHAR) AS DOUBLE)
-                    / CAST(n AS DOUBLE)) / (CAST(n AS DOUBLE) - 1.0)))
-                * 1000.0 + 0.5) AS BIGINT) AS loa_hi_milli
-        FROM m)
-    SELECT n AS n_docs, bias_milli, loa_lo_milli, loa_hi_milli,
-        CAST(SUM(CASE WHEN d * 1000 >= loa_lo_milli
-            AND d * 1000 <= loa_hi_milli THEN cnt ELSE 0 END)
-            AS BIGINT) AS n_within,
-        CAST(SUM(CASE WHEN d * 1000 >= loa_lo_milli
-            AND d * 1000 <= loa_hi_milli THEN cnt ELSE 0 END)
-            * 1000000 // n AS BIGINT) AS within_ppm
-    FROM sc GROUP BY n, bias_milli, loa_lo_milli, loa_hi_milli
-"""
-
-
-# ---------------------------------------------------------------- wave 7x
-
-
-def q_sprt_conversion_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Wald's SPRT replayed over the daily conversion stream: H0
-    p=0.19 vs H1 p=0.21 (bracketing the design rate), alpha = beta =
-    0.05 — the SEQUENTIAL test that examines evidence day by day and
-    stops at the ln(19) boundaries, the statistical core of every
-    always-on experiment monitor (mde_power_analysis plans the fixed-
-    horizon test; SPRT is what you run when you won't wait for the
-    horizon).  The two per-observation log-likelihood increments are
-    CONSTANTS, det-quantized to nano ONCE — so each day's increment is
-    k*c1 + (n-k)*c2 in pure integers and the cumulative walk is exact;
-    first boundary crossing is a windowed min.
-
-    Scale shape: one corpus agg to the daily (trials, successes)
-    series; windows over the calendar-bounded walk; one row out."""
-    from pyspark.sql import Window
-
-    ev = _t(spark, sf_dir, "events").select(
-        F.expr(
-            "CAST(unix_micros(CAST(ts AS TIMESTAMP))"
-            " div 86400000000 AS BIGINT)"
-        ).alias("day"),
-        (F.col("event_type") == "purchase").cast("long").alias("k"),
-    )
-    daily = ev.groupBy("day").agg(
-        F.count(F.lit(1)).alias("n"), F.sum("k").alias("k")
-    )
-    # pre-quantized nano constants (ln(0.21/0.19), ln(0.79/0.81),
-    # ln(19)): engine-side LN differs in the last ulp between JVM and
-    # DuckDB libm, and at NANO resolution that flips the floor — so the
-    # hyperparameters ship as integer literals, identical in both
-    # engines (caught by the sf0.001 oracle run: 1313099084 vs
-    # 1312900868 on max_llr before this change)
-    c1 = "100083459"
-    c2 = "-25001302"
-    bound = "2944438979"
-    wc = Window.orderBy("day").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    walk = daily.select(
-        "day",
-        F.expr(f"k * ({c1}) + (n - k) * ({c2})").alias("inc"),
-    ).select("day", F.sum("inc").over(wc).alias("llr"))
-    return walk.agg(
-        F.count(F.lit(1)).alias("n_days"),
-        F.max("llr").alias("max_llr_nano"),
-        F.min("llr").alias("min_llr_nano"),
-        # F.last over an unordered aggregate is partitioning-dependent;
-        # max_by pins "the last day's walk value" deterministically
-        F.expr("max_by(llr, day)").alias("final_llr_nano"),
-        F.min(
-            F.when(F.expr(f"llr >= {bound} OR llr <= -({bound})"),
-                   F.col("day"))
-        ).alias("first_cross_day"),
-    ).select(
-        "n_days",
-        "max_llr_nano",
-        "min_llr_nano",
-        "final_llr_nano",
-        "first_cross_day",
-        F.expr(
-            f"CASE WHEN final_llr_nano >= {bound} THEN 'accept_h1'"
-            f" WHEN final_llr_nano <= -({bound}) THEN 'accept_h0'"
-            " ELSE 'undecided' END"
-        ).alias("verdict"),
-    )
-
-
-ORACLE_SPRT = """
-    WITH ev AS (SELECT epoch_us(ts) // 86400000000 AS day,
-            CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS k
-        FROM events),
-    daily AS (SELECT day, CAST(COUNT(*) AS BIGINT) AS n,
-            CAST(SUM(k) AS BIGINT) AS k
-        FROM ev GROUP BY 1),
-    walk AS (SELECT day,
-            CAST(SUM(k * 100083459 + (n - k) * (-25001302))
-                OVER (ORDER BY day ROWS BETWEEN UNBOUNDED PRECEDING
-                    AND CURRENT ROW) AS BIGINT) AS llr
-        FROM daily),
-    b AS (SELECT CAST(2944438979 AS BIGINT) AS bound),
-    g AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_days,
-            CAST(MAX(llr) AS BIGINT) AS max_llr_nano,
-            CAST(MIN(llr) AS BIGINT) AS min_llr_nano,
-            CAST(MAX(CASE WHEN rn = 1 THEN llr END) AS BIGINT)
-                AS final_llr_nano,
-            CAST(MIN(CASE WHEN llr >= bound OR llr <= -bound
-                THEN day END) AS BIGINT) AS first_cross_day,
-            MAX(bound) AS bound
-        FROM (SELECT day, llr,
-                ROW_NUMBER() OVER (ORDER BY day DESC) AS rn
-              FROM walk) CROSS JOIN b)
-    SELECT n_days, max_llr_nano, min_llr_nano, final_llr_nano,
-        first_cross_day,
-        CASE WHEN final_llr_nano >= bound THEN 'accept_h1'
-             WHEN final_llr_nano <= -bound THEN 'accept_h0'
-             ELSE 'undecided' END AS verdict
-    FROM g
-"""
-
-
-def q_youden_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Operating-point selection for the quality->English classifier:
-    per candidate threshold t (predict positive when the 0..4 flag
-    score >= t), the exact confusion counts, TPR/FPR in ppm, and
-    Youden's J = TPR - FPR — the threshold a deployment actually has
-    to pick, which classifier_auc's ranking number deliberately
-    abstracts away.  All rows come from the 5-bin score histogram via
-    suffix sums — one corpus pass, 5 candidate rows out, argmax by J.
-
-    Scale shape: one agg to the 5-row score histogram; suffix-sum
-    windows over 5 rows."""
-    from pyspark.sql import Window
-
-    docs = _t(spark, sf_dir, "documents")
-    scored = docs.select(
-        (TX.quality_score(F.col("text")) * 4).cast("bigint").alias("q"),
-        (F.col("lang") == "en").cast("bigint").alias("y"),
-    )
-    hist = scored.groupBy("q").agg(
-        F.count(F.lit(1)).alias("n_k"), F.sum("y").alias("s_k")
-    )
-    wall = Window.partitionBy()
-    wsuf = Window.orderBy(F.desc("q")).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    t = hist.select(
-        F.col("q").alias("threshold"),
-        F.sum("s_k").over(wsuf).alias("tp"),
-        (F.sum("n_k").over(wsuf) - F.sum("s_k").over(wsuf)).alias("fp"),
-        F.sum("s_k").over(wall).alias("pos"),
-        (F.sum("n_k").over(wall) - F.sum("s_k").over(wall)).alias("neg"),
-    )
-    j = t.select(
-        "threshold",
-        "tp",
-        "fp",
-        F.expr("tp * 1000000 div pos").alias("tpr_ppm"),
-        F.expr("fp * 1000000 div neg").alias("fpr_ppm"),
-        F.expr(
-            "tp * 1000000 div pos - fp * 1000000 div neg"
-        ).alias("youden_j_ppm"),
-    )
-    w = Window.orderBy(F.desc("youden_j_ppm"), F.desc("threshold"))
-    return j.select(
-        "threshold",
-        "tp",
-        "fp",
-        "tpr_ppm",
-        "fpr_ppm",
-        "youden_j_ppm",
-        F.row_number().over(w).cast("bigint").alias("rank"),
-    ).orderBy("threshold")
-
-
-ORACLE_YOUDEN = """
-    WITH t AS (SELECT lang, text,
-        list_filter(string_split_regex(trim(text), '\\s+'),
-                    x -> x <> '') AS toks
-    FROM documents),
-    m AS (SELECT CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y,
-        len(toks) AS n_tok,
-        len(list_filter(list_transform(toks, x -> lower(x)),
-            x -> list_contains(['the','a','of','to','and','in','is',
-                                'it','for','on'], x))) AS n_stop,
-        length(text) AS n_chars,
-        length(regexp_replace(text, '[^\\w\\s]', '', 'g')) AS n_nopunct,
-        list_sum(list_transform(toks, x -> length(x))) AS tok_chars
-    FROM t),
-    scored AS (SELECT y, CAST(
-        (CASE WHEN n_tok >= 10 AND n_tok <= 100000 THEN 1 ELSE 0 END) +
-        (CASE WHEN n_tok > 0
-              AND CAST(n_stop AS DOUBLE) / n_tok >= 0.01
-              THEN 1 ELSE 0 END) +
-        (CASE WHEN n_chars = 0
-              OR CAST(n_chars - n_nopunct AS DOUBLE) / n_chars <= 0.2
-              THEN 1 ELSE 0 END) +
-        (CASE WHEN n_tok > 0 AND CAST(tok_chars AS DOUBLE) / n_tok >= 2
-              AND CAST(tok_chars AS DOUBLE) / n_tok <= 12
-              THEN 1 ELSE 0 END) AS BIGINT) AS q
-    FROM m),
-    hist AS (SELECT q, CAST(COUNT(*) AS BIGINT) AS n_k,
-            CAST(SUM(y) AS BIGINT) AS s_k
-        FROM scored GROUP BY 1),
-    suf AS (SELECT q AS threshold,
-            CAST(SUM(s_k) OVER (ORDER BY q DESC ROWS BETWEEN UNBOUNDED
-                PRECEDING AND CURRENT ROW) AS BIGINT) AS tp,
-            CAST(SUM(n_k) OVER (ORDER BY q DESC ROWS BETWEEN UNBOUNDED
-                PRECEDING AND CURRENT ROW)
-              - SUM(s_k) OVER (ORDER BY q DESC ROWS BETWEEN UNBOUNDED
-                PRECEDING AND CURRENT ROW) AS BIGINT) AS fp,
-            CAST(SUM(s_k) OVER () AS BIGINT) AS pos,
-            CAST(SUM(n_k) OVER () - SUM(s_k) OVER () AS BIGINT) AS neg
-        FROM hist),
-    j AS (SELECT threshold, tp, fp,
-            tp * 1000000 // pos AS tpr_ppm,
-            fp * 1000000 // neg AS fpr_ppm,
-            tp * 1000000 // pos - fp * 1000000 // neg AS youden_j_ppm
-        FROM suf)
-    SELECT threshold, tp, fp, tpr_ppm, fpr_ppm, youden_j_ppm,
-        CAST(ROW_NUMBER() OVER (ORDER BY youden_j_ppm DESC,
-            threshold DESC) AS BIGINT) AS rank
-    FROM j ORDER BY threshold
-"""
-
-
-# ---------------------------------------------------------------- wave 7y
-
-
-def q_elias_fano_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Index-compression planner for posting lists: per high-df term,
-    the EXACT Elias-Fano storage bound n*(2 + ceil(log2(U/n))) bits
-    against the raw 64-bit and bitmap (U bits) encodings — the math
-    that decides an inverted index's physical format (posting_lists
-    builds the lists; this prices them).  ceil(log2(U/n)) uses the
-    shannon_code_lengths integer bit-length idiom (length(bin(
-    ceil(U/n) - 1))) — no float log anywhere; compression ratio in
-    exact ppm.  Top 20 terms by document frequency.
-
-    Scale shape: one (term, doc) distinct aggregate, a term-
-    cardinality df rollup, a 1-row corpus max broadcast; bit math is
-    per-row integer expressions; TakeOrdered(20)."""
-    docs = _t(spark, sf_dir, "documents")
-    td = docs.select(
-        "doc_id",
-        F.explode(
-            F.array_distinct(
-                TX.tokens(TX.normalize_text(F.col("text")))
-            )
-        ).alias("term"),
-    )
-    dfreq = td.groupBy("term").agg(
-        F.count(F.lit(1)).alias("df")
-    )
-    u = docs.agg(F.max("doc_id").cast("long").alias("u"))
-    scored = dfreq.crossJoin(F.broadcast(u)).select(
-        "term",
-        "df",
-        "u",
-        F.expr(
-            "CASE WHEN (u + df - 1) div df - 1 = 0 THEN 0"
-            " ELSE length(bin((u + df - 1) div df - 1)) END"
-        ).alias("low_bits"),
-    )
-    return (
-        scored.select(
-            "term",
-            "df",
-            F.expr("df * (2 + low_bits)").alias("ef_bits"),
-            F.expr("df * 64").alias("raw_bits"),
-            F.col("u").alias("bitmap_bits"),
-            F.expr(
-                "CAST(df * (2 + low_bits) * 1000000 div (df * 64)"
-                " AS BIGINT)"
-            ).alias("ef_vs_raw_ppm"),
-        )
-        .orderBy(F.desc("df"), "term")
-        .limit(20)
-    )
-
-
-ORACLE_ELIAS_FANO = f"""
-    WITH td AS (SELECT DISTINCT doc_id, w AS term
-        FROM (SELECT doc_id, unnest({_TOKS}) AS w FROM documents)),
-    dfreq AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS df
-        FROM td GROUP BY 1),
-    u AS (SELECT CAST(MAX(doc_id) AS BIGINT) AS u FROM documents),
-    scored AS (SELECT term, df, u,
-            CASE WHEN (u + df - 1) // df - 1 = 0 THEN 0
-                 ELSE length(bin((u + df - 1) // df - 1)) END
-                AS low_bits
-        FROM dfreq CROSS JOIN u)
-    SELECT term, df,
-        CAST(df * (2 + low_bits) AS BIGINT) AS ef_bits,
-        CAST(df * 64 AS BIGINT) AS raw_bits,
-        u AS bitmap_bits,
-        CAST(df * (2 + low_bits) * 1000000 // (df * 64) AS BIGINT)
-            AS ef_vs_raw_ppm
-    FROM scored ORDER BY df DESC, term LIMIT 20
-"""
-
-
-def q_fleiss_kappa_raters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fleiss' kappa across THREE deterministic raters (the 4-flag
-    quality classifier at >= 3, the 50..5000-token length gate, the
-    1% stopword-ratio gate), each labeling every document
-    positive/negative — the multi-rater generalization Cohen's kappa
-    (classifier_kappa) can't express.  With 3 raters and 2 categories
-    the per-doc agreement is a pure function of r = number of positive
-    votes (P_i = (r(r-1) + (3-r)(2-r)) / 6), so the WHOLE statistic
-    reduces to the 4-bin histogram of r: kappa = (P_bar - P_e) /
-    (1 - P_e) computed as one exact rational in DECIMAL, emitted in
-    micro.
-
-    Scale shape: one corpus agg to the 4-row vote histogram; exact
-    arithmetic on 4 rows."""
-    docs = _t(spark, sf_dir, "documents")
-    r = docs.select(
-        (
-            ((TX.quality_score(F.col("text")) * 4).cast("bigint") >= 3)
-            .cast("long")
-            + TX.token_count(F.col("text")).between(50, 5000).cast(
-                "long"
-            )
-            + (
-                TX.stopword_ratio(F.col("text")) >= F.lit(0.01)
-            ).cast("long")
-        ).alias("r")
-    )
-    hist = r.groupBy("r").agg(F.count(F.lit(1)).alias("cnt"))
-    dec = "DECIMAL(38,0)"
-    g = hist.agg(
-        F.sum("cnt").alias("n"),
-        F.expr(f"SUM(CAST(cnt AS {dec}) * r)").alias("votes"),
-        F.expr(
-            f"SUM(CAST(cnt AS {dec})"
-            " * (r * (r - 1) + (3 - r) * (2 - r)))"
-        ).alias("agree6"),
-    )
-    # P_bar = agree6 / (6n); P_e = (v^2 + (3n-v)^2) / (3n)^2
-    # kappa = (P_bar - P_e) / (1 - P_e)
-    #       = (agree6 * 3n^2 * 1.5 - ...) — clear denominators exactly:
-    # kappa = (agree6*(3n)^2 - 6n*(v^2+(3n-v)^2))
-    #       / (6n*(3n)^2 - 6n*(v^2+(3n-v)^2))
-    num = (
-        f"(agree6 * CAST(9 AS {dec}) * n * n"
-        f" - CAST(6 AS {dec}) * n * (votes * votes"
-        f" + (CAST(3 AS {dec}) * n - votes)"
-        f" * (CAST(3 AS {dec}) * n - votes)))"
-    )
-    den = (
-        f"(CAST(54 AS {dec}) * n * n * n"
-        f" - CAST(6 AS {dec}) * n * (votes * votes"
-        f" + (CAST(3 AS {dec}) * n - votes)"
-        f" * (CAST(3 AS {dec}) * n - votes)))"
-    )
-    return g.select(
-        F.expr("CAST(n AS BIGINT)").alias("n_docs"),
-        F.expr("CAST(votes AS BIGINT)").alias("pos_votes"),
-        F.expr(
-            "CAST(agree6 * 1000000 div (CAST(6 AS DECIMAL(38,0)) * n)"
-            " AS BIGINT)"
-        ).alias("p_bar_micro"),
-        # sign-safe division (ORACLE_TRIMMED idiom): Spark `div`
-        # truncates toward zero, DuckDB `//` floors — run the division
-        # on |num| and reapply the sign so a negative kappa (observed
-        # agreement below chance) cannot diverge between engines;
-        # den = 0 (P_e = 1, all raters unanimous corpus-wide) yields 0
-        F.expr(
-            f"CASE WHEN {den} = 0 THEN CAST(0 AS BIGINT)"
-            f" ELSE CAST(CASE WHEN {num} < 0 THEN -1 ELSE 1 END"
-            f" * (abs({num}) * 1000000 div {den}) AS BIGINT) END"
-        ).alias("fleiss_kappa_micro"),
-    )
-
-
-ORACLE_FLEISS = """
-    WITH t AS (SELECT text,
-        list_filter(string_split_regex(trim(text), '\\s+'),
-                    x -> x <> '') AS toks
-    FROM documents),
-    m AS (SELECT
-        len(toks) AS n_tok,
-        len(list_filter(list_transform(toks, x -> lower(x)),
-            x -> list_contains(['the','a','of','to','and','in','is',
-                                'it','for','on'], x))) AS n_stop,
-        length(text) AS n_chars,
-        length(regexp_replace(text, '[^\\w\\s]', '', 'g')) AS n_nopunct,
-        list_sum(list_transform(toks, x -> length(x))) AS tok_chars
-    FROM t),
-    votes AS (SELECT
-        (CASE WHEN (CASE WHEN n_tok >= 10 AND n_tok <= 100000
-                    THEN 1 ELSE 0 END)
-            + (CASE WHEN n_tok > 0
-                    AND CAST(n_stop AS DOUBLE) / n_tok >= 0.01
-                    THEN 1 ELSE 0 END)
-            + (CASE WHEN n_chars = 0 OR CAST(n_chars - n_nopunct
-                    AS DOUBLE) / n_chars <= 0.2 THEN 1 ELSE 0 END)
-            + (CASE WHEN n_tok > 0
-                    AND CAST(tok_chars AS DOUBLE) / n_tok >= 2
-                    AND CAST(tok_chars AS DOUBLE) / n_tok <= 12
-                    THEN 1 ELSE 0 END) >= 3 THEN 1 ELSE 0 END)
-        + (CASE WHEN n_tok BETWEEN 50 AND 5000 THEN 1 ELSE 0 END)
-        + (CASE WHEN n_tok > 0
-                AND CAST(n_stop AS DOUBLE) / n_tok >= 0.01
-                THEN 1 ELSE 0 END) AS r
-    FROM m),
-    hist AS (SELECT r, CAST(COUNT(*) AS BIGINT) AS cnt
-        FROM votes GROUP BY 1),
-    g AS (SELECT CAST(SUM(cnt) AS HUGEINT) AS n,
-            CAST(SUM(CAST(cnt AS HUGEINT) * r) AS HUGEINT) AS votes,
-            CAST(SUM(CAST(cnt AS HUGEINT)
-                * (r * (r - 1) + (3 - r) * (2 - r))) AS HUGEINT)
-                AS agree6
-        FROM hist)
-    SELECT CAST(n AS BIGINT) AS n_docs,
-        CAST(votes AS BIGINT) AS pos_votes,
-        CAST(agree6 * 1000000 // (6 * n) AS BIGINT) AS p_bar_micro,
-        CASE WHEN (54 * n * n * n
-              - 6 * n * (votes * votes + (3 * n - votes)
-                * (3 * n - votes))) = 0 THEN CAST(0 AS BIGINT)
-        ELSE CAST((CASE WHEN (agree6 * 9 * n * n
-              - 6 * n * (votes * votes + (3 * n - votes)
-                * (3 * n - votes))) < 0 THEN -1 ELSE 1 END)
-             * (ABS(agree6 * 9 * n * n
-              - 6 * n * (votes * votes + (3 * n - votes)
-                * (3 * n - votes))) * 1000000
-             // (54 * n * n * n
-              - 6 * n * (votes * votes + (3 * n - votes)
-                * (3 * n - votes)))) AS BIGINT) END
-            AS fleiss_kappa_micro
-    FROM g
-"""
-
-
-# ---------------------------------------------------------------- wave 7z
-
-_RAND_PERMS = 60
-
-
-def q_randomization_test_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Approximate randomization test for the BUILDING-vs-rest gap in
-    mean order value: 60 pseudo-random relabelings, each the b-th BIT
-    of ONE md5 per order (60 independent fair coin splits from a
-    single hash — no per-permutation hashing, no RNG), evaluated as 60
-    conditional aggregates in a single scan (the median_regression_
-    grid trick).  p = fraction of relabelings whose |mean gap| meets
-    or beats the observed one — distribution-free significance where
-    ab_test_zscores assumes normality.  Gap comparison cross-
-    multiplies to integers (|d1*n0a*n0b| vs |d0*nba*nbb| over common
-    denominators) — EXACT, no division at all.
-
-    Scale shape: ONE corpus scan with 121 conditional integer sums,
-    one 1-row finish; nothing else."""
-    cust = _t(spark, sf_dir, "customer").select(
-        "c_custkey", "c_mktsegment"
-    )
-    rows = (
-        _t(spark, sf_dir, "orders")
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .select(
-            (F.col("c_mktsegment") == "BUILDING").cast("long").alias(
-                "g"
-            ),
-            F.expr(
-                "CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)"
-            ).alias("x"),
-            F.expr(
-                "CAST(conv(substring(md5(concat(CAST(o_orderkey"
-                " AS STRING), '#rand')), 1, 15), 16, 10) AS BIGINT)"
-            ).alias("h"),
-        )
-    )
-    perm_aggs = []
-    for b in range(_RAND_PERMS):
-        bit = f"((h div {2 ** b}) % 2)"
-        perm_aggs.append(
-            F.expr(f"SUM(x * {bit})").alias(f"sx_{b}")
-        )
-        perm_aggs.append(
-            F.expr(f"SUM({bit})").alias(f"n_{b}")
-        )
-    g = rows.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.expr("SUM(x)").alias("sx"),
-        F.expr("SUM(x * g)").alias("sx1"),
-        F.expr("SUM(g)").alias("n1"),
-        *perm_aggs,
-    )
-    # gaps compared at exact MILLI-cent resolution (each side is a
-    # difference of two positive floor divisions — no division of a
-    # negative, no cross-multiplied product that could pass
-    # DECIMAL(38) at extreme corpus sizes)
-    dec = "DECIMAL(38,0)"
-    obs = (
-        f"abs(CAST(sx1 AS {dec}) * 1000 div n1"
-        f" - (CAST(sx AS {dec}) - sx1) * 1000 div (n - n1))"
-    )
-    flags = []
-    for b in range(_RAND_PERMS):
-        gb = (
-            f"abs(CAST(sx_{b} AS {dec}) * 1000 div n_{b}"
-            f" - (CAST(sx AS {dec}) - sx_{b}) * 1000 div (n - n_{b}))"
-        )
-        flags.append(f"CAST({gb} >= {obs} AS INT)")
-    n_extreme = " + ".join(flags)
-    return g.select(
-        F.expr("CAST(n AS BIGINT)").alias("n_orders"),
-        F.expr("CAST(n1 AS BIGINT)").alias("n_building"),
-        F.expr(
-            "CAST(CAST(sx1 AS DECIMAL(38,0)) * 1000 div n1"
-            " - (CAST(sx AS DECIMAL(38,0)) - sx1) * 1000 div (n - n1)"
-            " AS BIGINT)"
-        ).alias("obs_gap_milli_cents"),
-        F.lit(_RAND_PERMS).cast("bigint").alias("n_perms"),
-        F.expr(f"CAST({n_extreme} AS BIGINT)").alias("n_extreme"),
-        F.expr(
-            f"CAST(({n_extreme}) * 1000 div {_RAND_PERMS} AS BIGINT)"
-        ).alias("p_milli"),
-    )
-
-
-def _randomization_oracle() -> str:
-    perm_sums = ",\n            ".join(
-        f"CAST(SUM(x * ((h // {2 ** b}) % 2)) AS BIGINT) AS sx_{b},"
-        f" CAST(SUM((h // {2 ** b}) % 2) AS BIGINT) AS n_{b}"
-        for b in range(_RAND_PERMS)
-    )
-    obs = (
-        "ABS(CAST(sx1 AS HUGEINT) * 1000 // n1"
-        " - (CAST(sx AS HUGEINT) - sx1) * 1000 // (n - n1))"
-    )
-    flags = " + ".join(
-        f"CAST(ABS(CAST(sx_{b} AS HUGEINT) * 1000 // n_{b}"
-        f" - (CAST(sx AS HUGEINT) - sx_{b}) * 1000 // (n - n_{b}))"
-        f" >= {obs} AS INT)"
-        for b in range(_RAND_PERMS)
-    )
-    return f"""
-    WITH rows_ AS (SELECT
-            CASE WHEN c_mktsegment = 'BUILDING' THEN 1 ELSE 0 END AS g,
-            CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT) AS x,
-            ('0x' || substr(md5(CAST(o_orderkey AS VARCHAR)
-                || '#rand'), 1, 15))::BIGINT AS h
-        FROM orders JOIN customer ON o_custkey = c_custkey),
-    g AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
-            CAST(SUM(x) AS BIGINT) AS sx,
-            CAST(SUM(x * g) AS BIGINT) AS sx1,
-            CAST(SUM(g) AS BIGINT) AS n1,
-            {perm_sums}
-        FROM rows_)
-    SELECT n AS n_orders, n1 AS n_building,
-        CAST(CAST(sx1 AS HUGEINT) * 1000 // n1
-            - (CAST(sx AS HUGEINT) - sx1) * 1000 // (n - n1)
-            AS BIGINT) AS obs_gap_milli_cents,
-        CAST({_RAND_PERMS} AS BIGINT) AS n_perms,
-        CAST({flags} AS BIGINT) AS n_extreme,
-        CAST(({flags}) * 1000 // {_RAND_PERMS} AS BIGINT) AS p_milli
-    FROM g
-"""
-
-
-ORACLE_RANDOMIZATION = _randomization_oracle()
-
-
-def q_jackknife_nation_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Delete-one-GROUP jackknife for the mean order value, groups =
-    customer nations: 25 leave-one-nation-out means computed purely
-    from per-nation sufficient statistics (no resampled scans), then
-    the jackknife variance (g-1)/g * sum (theta_i - theta_bar)^2 —
-    the clustered-uncertainty answer when observations within a
-    nation correlate and the iid bootstrap (poisson_bootstrap_mean)
-    understates the error.  Leave-one-out means are exact micro
-    integers; the variance accumulates their squared deviations in
-    DECIMAL(38,0), one closing division.
-
-    Scale shape: one fact agg to nation cardinality; everything after
-    is arithmetic on 25 rows."""
-    from pyspark.sql import Window
-
-    cust = _t(spark, sf_dir, "customer").select(
-        "c_custkey", "c_nationkey"
-    )
-    g = (
-        _t(spark, sf_dir, "orders")
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .groupBy("c_nationkey")
-        .agg(
-            F.count(F.lit(1)).alias("n_g"),
-            F.expr(
-                "SUM(CAST(floor(o_totalprice * 100.0 + 0.5)"
-                " AS BIGINT))"
-            ).alias("s_g"),
-        )
-    )
-    wall = Window.partitionBy()
-    loo = g.select(
-        "c_nationkey",
-        F.count(F.lit(1)).over(wall).alias("k"),
-        # corpus-total cents x 1e6 passes int64 at sf1 (ANSI overflow,
-        # caught by the sf1 timing gate) — scale in DECIMAL(38,0)
-        F.expr(
-            "(CAST(SUM(s_g) OVER () AS DECIMAL(38,0)) - s_g) * 1000000"
-            " div (SUM(n_g) OVER () - n_g)"
-        ).alias("theta_micro"),
-    )
-    dec = "DECIMAL(38,0)"
-    m = loo.select(
-        "k",
-        "theta_micro",
-        F.expr("SUM(theta_micro) OVER ()").alias("st"),
-        F.expr(
-            f"SUM(CAST(theta_micro AS {dec}) * theta_micro) OVER ()"
-        ).alias("qt"),
-    )
-    return m.groupBy("k", "st", "qt").agg(
-        F.min("theta_micro").alias("theta_min_micro"),
-        F.max("theta_micro").alias("theta_max_micro"),
-    ).select(
-        F.col("k").alias("n_groups"),
-        F.expr("CAST(st div k AS BIGINT)").alias("theta_bar_micro"),
-        "theta_min_micro",
-        "theta_max_micro",
-        # var = (k-1)/k * sum (theta_i - bar)^2 = (k-1)(qt - st^2/k)/k;
-        # micro^2 variance passes int64 (caught at sf0.001: 4.98e21),
-        # so emit the STANDARD ERROR in micro-cents — exact integer
-        # numerator bridged once to double for the single sqrt
-        F.expr(
-            "CAST(FLOOR(SQRT(CAST(CAST("
-            f"(CAST(qt AS {dec}) * k - CAST(st AS {dec}) * st)"
-            f" * (k - 1) AS STRING) AS DOUBLE)"
-            " / (CAST(k AS DOUBLE) * k * k))) AS BIGINT)"
-        ).alias("jack_se_micro"),
-    )
-
-
-ORACLE_JACKKNIFE = """
-    WITH g AS (SELECT c_nationkey, CAST(COUNT(*) AS BIGINT) AS n_g,
-            CAST(SUM(CAST(FLOOR(o_totalprice * 100.0 + 0.5)
-                AS BIGINT)) AS BIGINT) AS s_g
-        FROM orders JOIN customer ON o_custkey = c_custkey
-        GROUP BY 1),
-    loo AS (SELECT c_nationkey,
-            CAST(COUNT(*) OVER () AS BIGINT) AS k,
-            CAST((SUM(s_g) OVER () - s_g) * 1000000
-                // (SUM(n_g) OVER () - n_g) AS BIGINT) AS theta_micro
-        FROM g),
-    m AS (SELECT k, theta_micro,
-            CAST(SUM(theta_micro) OVER () AS BIGINT) AS st,
-            CAST(SUM(CAST(theta_micro AS HUGEINT) * theta_micro)
-                OVER () AS HUGEINT) AS qt
-        FROM loo)
-    SELECT k AS n_groups,
-        CAST(st // k AS BIGINT) AS theta_bar_micro,
-        CAST(MIN(theta_micro) AS BIGINT) AS theta_min_micro,
-        CAST(MAX(theta_micro) AS BIGINT) AS theta_max_micro,
-        CAST(FLOOR(SQRT(CAST(CAST(
-            (CAST(MAX(qt) AS HUGEINT) * k - CAST(MAX(st) AS HUGEINT)
-            * MAX(st)) * (k - 1) AS VARCHAR) AS DOUBLE)
-            / (CAST(k AS DOUBLE) * k * k))) AS BIGINT)
-            AS jack_se_micro
-    FROM m GROUP BY k, st, qt
-"""
-
-
-# ---------------------------------------------------------------- wave 8a
-
-
-def q_fd_histogram_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Freedman-Diaconis histogram planning for order values: exact
-    Q1/Q3 via the iterative-histogram selection operator (the 100 TB
-    exact-quantile path — driver sees <=1024-row histograms, never
-    data), then the FD bin width 2*IQR/cbrt(n) and the implied bin
-    count over the exact min/max range.  The binning-decision every
-    histogram/quantile-sketch consumer upstream of this engine makes
-    by rule of thumb, here made from exact order statistics.
-
-    Scale shape: exact_kth's predicate-pushed narrowing scans (bounded
-    driver state) twice, one 1-row min/max agg; closed form after."""
-    from kafka_firehose_nozzle_spark.operators.selection import exact_kth
-
-    o = _t(spark, sf_dir, "orders")
-    n_row = o.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min("o_totalprice").alias("lo"),
-        F.max("o_totalprice").alias("hi"),
-    ).head()
-    n, lo, hi = n_row["n"], n_row["lo"], n_row["hi"]
-    q1 = exact_kth(o, "o_totalprice", max((n + 1) // 4, 1))
-    q3 = exact_kth(o, "o_totalprice", min((3 * n + 3) // 4, n))
-    return spark.range(1).select(
-        F.lit(n).cast("bigint").alias("n"),
-        F.lit(q1).cast("double").alias("q1"),
-        F.lit(q3).cast("double").alias("q3"),
-        DET.det_round(
-            F.lit(2.0) * (F.lit(q3) - F.lit(q1))
-            / F.expr(f"cbrt(CAST({n} AS DOUBLE))"),
-            6,
-        ).alias("fd_width"),
-        F.expr(
-            f"CAST(FLOOR((CAST({hi!r} AS DOUBLE) - CAST({lo!r} AS"
-            " DOUBLE)) / "
-            + DET.det_round_sql(
-                f"2.0 * (CAST({q3!r} AS DOUBLE) - CAST({q1!r} AS"
-                f" DOUBLE)) / cbrt(CAST({n} AS DOUBLE))", 6
-            )
-            + ") + 1 AS BIGINT)"
-        ).alias("n_bins"),
-    )
-
-
-ORACLE_FD_PLAN = f"""
-    WITH v AS (SELECT CAST(o_totalprice AS DOUBLE) AS x
-        FROM orders WHERE o_totalprice IS NOT NULL),
-    n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
-            MIN(x) AS lo, MAX(x) AS hi FROM v),
-    q AS (SELECT
-        (SELECT x FROM v ORDER BY x LIMIT 1
-            OFFSET GREATEST(((SELECT n FROM n) + 1) // 4, 1) - 1)
-            AS q1,
-        (SELECT x FROM v ORDER BY x LIMIT 1
-            OFFSET LEAST((3 * (SELECT n FROM n) + 3) // 4,
-                (SELECT n FROM n)) - 1) AS q3)
-    SELECT n.n AS n, q1, q3,
-        {DET.det_round_sql(
-            "2.0 * (q3 - q1) / cbrt(CAST(n.n AS DOUBLE))", 6)}
-            AS fd_width,
-        CAST(FLOOR((hi - lo) / {DET.det_round_sql(
-            "2.0 * (q3 - q1) / cbrt(CAST(n.n AS DOUBLE))", 6)})
-            + 1 AS BIGINT) AS n_bins
-    FROM n CROSS JOIN q
-"""
-
-
-def q_grubbs_daily_outlier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Grubbs' test statistic for the most extreme revenue day:
-    G = max|x - mean| / sd over the daily series — the single-outlier
-    test a reporting pipeline runs before trusting its worst day
-    (robust_outlier_events flags by MAD rule-of-thumb; Grubbs is the
-    parametric test with a distributional null).  The argmax day is
-    found on EXACT integers (max |n*x - S|, ties to the earliest
-    day), G itself is the one bridged IEEE closed form, det6.
-
-    Scale shape: corpus agg to the day-bounded series (checkpointed),
-    one 1-row moment agg broadcast back, exact-integer argmax."""
-    o = _t(spark, sf_dir, "orders").select(
-        F.expr(
-            "datediff(CAST(o_orderdate AS DATE), DATE'1992-01-01')"
-        ).alias("day"),
-        F.expr("CAST(floor(o_totalprice + 0.5) AS BIGINT)").alias("usd"),
-    )
-    daily = o.groupBy("day").agg(F.sum("usd").alias("x")).localCheckpoint()
-    dec = "DECIMAL(38,0)"
-    mo = daily.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.expr(f"SUM(CAST(x AS {dec}))").alias("s"),
-        F.expr(f"SUM(CAST(x AS {dec}) * x)").alias("q"),
-    )
-    dev = daily.crossJoin(F.broadcast(mo)).select(
-        "day",
-        "n",
-        "s",
-        "q",
-        F.expr(f"abs(CAST(n AS {dec}) * x - s)").alias("ad"),
-    )
-    # argmax day with deterministic ties (earliest): a second bounded
-    # pass over the checkpointed day series, filtered on the exact max
-    m = dev.agg(F.max("ad").alias("mad"))
-    arg = (
-        dev.crossJoin(F.broadcast(m.select(F.col("mad").alias("m2"))))
-        .filter(F.col("ad") == F.col("m2"))
-        .agg(F.min("day").alias("outlier_day"))
-    )
-    br = lambda c: f"CAST(CAST({c} AS STRING) AS DOUBLE)"  # noqa: E731
-    dn = "CAST(n AS DOUBLE)"
-    gstat = (
-        f"{br('mad')} / ({dn}"
-        f" * SQRT(({br('q')} - {br('s')} * {br('s')} / {dn})"
-        f" / ({dn} - 1.0)))"
-    )
-    base = dev.groupBy("n", "s", "q").agg(F.max("ad").alias("mad"))
-    return base.crossJoin(F.broadcast(arg)).select(
-        F.expr("CAST(n AS BIGINT)").alias("n_days"),
-        F.col("outlier_day").cast("bigint").alias("outlier_day"),
-        F.expr("CAST(mad div n AS BIGINT)").alias("max_absdev_usd"),
-        DET.det_round(F.expr(gstat), 6).alias("grubbs_g"),
-    )
-
-
-ORACLE_GRUBBS = f"""
-    WITH o AS (SELECT
-            date_diff('day', DATE '1992-01-01',
-                CAST(o_orderdate AS DATE)) AS day,
-            CAST(FLOOR(o_totalprice + 0.5) AS BIGINT) AS usd
-        FROM orders),
-    daily AS (SELECT day, CAST(SUM(usd) AS BIGINT) AS x
-        FROM o GROUP BY day),
-    mo AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
-            CAST(SUM(CAST(x AS HUGEINT)) AS HUGEINT) AS s,
-            CAST(SUM(CAST(x AS HUGEINT) * x) AS HUGEINT) AS q
-        FROM daily),
-    dev AS (SELECT day, n, s, q,
-            ABS(CAST(n AS HUGEINT) * x - s) AS ad
-        FROM daily CROSS JOIN mo),
-    m AS (SELECT MAX(ad) AS mad FROM dev),
-    arg AS (SELECT CAST(MIN(day) AS BIGINT) AS outlier_day
-        FROM dev CROSS JOIN m WHERE ad = mad)
-    SELECT n AS n_days, outlier_day,
-        CAST(mad // n AS BIGINT) AS max_absdev_usd,
-        {DET.det_round_sql(
-            "CAST(CAST(mad AS VARCHAR) AS DOUBLE) / (CAST(n AS DOUBLE)"
-            " * SQRT((CAST(CAST(q AS VARCHAR) AS DOUBLE)"
-            " - CAST(CAST(s AS VARCHAR) AS DOUBLE)"
-            " * CAST(CAST(s AS VARCHAR) AS DOUBLE) / CAST(n AS DOUBLE))"
-            " / (CAST(n AS DOUBLE) - 1.0)))", 6
-        )} AS grubbs_g
-    FROM dev CROSS JOIN m CROSS JOIN arg
-    GROUP BY n, s, q, outlier_day, mad
-"""
-
-
-# ---------------------------------------------------------------- wave 8b
-
-
-def q_newsvendor_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Newsvendor stocking level from the daily demand distribution:
-    with underage cost 4x overage, the optimal order-up-to level is
-    the 80th-percentile demand day (critical ratio cu/(cu+co)) — and
-    the query PROVES it on the data by pricing both that level and the
-    naive mean-demand level with the exact piecewise-linear cost
-    sum(co*max(Q-d,0) + cu*max(d-Q,0)): the quantile's cost column
-    must come out <= the mean's.  Demand = daily shipped quantity;
-    every quantity is an exact integer (rank by row_number on the
-    day-bounded series, costs as integer sums).
-
-    Scale shape: one fact agg to the ~2.4k-day series (checkpointed);
-    rank window + two cost aggregates over it; one row out."""
-    from pyspark.sql import Window
-
-    li = _t(spark, sf_dir, "lineitem").select(
-        F.expr(
-            "datediff(CAST(l_shipdate AS DATE), DATE'1992-01-01')"
-        ).alias("day"),
-        F.expr("CAST(floor(l_quantity + 0.5) AS BIGINT)").alias("q"),
-    )
-    daily = li.groupBy("day").agg(F.sum("q").alias("d")).localCheckpoint()
-    w = Window.orderBy("d", "day")
-    wall = Window.partitionBy()
-    ranked = daily.select(
-        "d",
-        F.row_number().over(w).alias("rn"),
-        F.count(F.lit(1)).over(wall).alias("n"),
-        F.sum("d").over(wall).alias("sd"),
-    )
-    qstar = ranked.filter(
-        F.col("rn") == F.expr("(4 * n + 4) div 5")
-    ).select(
-        F.col("d").alias("q_star"),
-        "n",
-        F.expr("sd div n").alias("q_mean"),
-    )
-    costed = daily.crossJoin(F.broadcast(qstar)).agg(
-        F.max("n").alias("n_days"),
-        F.max("q_star").alias("q_star"),
-        F.max("q_mean").alias("q_mean"),
-        F.sum(
-            F.expr(
-                "greatest(q_star - d, CAST(0 AS BIGINT))"
-                " + 4 * greatest(d - q_star, CAST(0 AS BIGINT))"
-            )
-        ).alias("cost_at_qstar"),
-        F.sum(
-            F.expr(
-                "greatest(q_mean - d, CAST(0 AS BIGINT))"
-                " + 4 * greatest(d - q_mean, CAST(0 AS BIGINT))"
-            )
-        ).alias("cost_at_mean"),
-    )
-    return costed.select(
-        "n_days",
-        "q_star",
-        "q_mean",
-        "cost_at_qstar",
-        "cost_at_mean",
-        (F.col("cost_at_qstar") <= F.col("cost_at_mean")).alias(
-            "quantile_wins"
-        ),
-    )
-
-
-ORACLE_NEWSVENDOR = """
-    WITH li AS (SELECT
-            date_diff('day', DATE '1992-01-01',
-                CAST(l_shipdate AS DATE)) AS day,
-            CAST(FLOOR(l_quantity + 0.5) AS BIGINT) AS q
-        FROM lineitem),
-    daily AS (SELECT day, CAST(SUM(q) AS BIGINT) AS d
-        FROM li GROUP BY day),
-    ranked AS (SELECT d,
-            ROW_NUMBER() OVER (ORDER BY d, day) AS rn,
-            CAST(COUNT(*) OVER () AS BIGINT) AS n,
-            CAST(SUM(d) OVER () AS BIGINT) AS sd
-        FROM daily),
-    qs AS (SELECT d AS q_star, n, sd // n AS q_mean
-        FROM ranked WHERE rn = (4 * n + 4) // 5)
-    SELECT MAX(n) AS n_days,
-        CAST(MAX(q_star) AS BIGINT) AS q_star,
-        CAST(MAX(q_mean) AS BIGINT) AS q_mean,
-        CAST(SUM(GREATEST(q_star - d, 0)
-            + 4 * GREATEST(d - q_star, 0)) AS BIGINT) AS cost_at_qstar,
-        CAST(SUM(GREATEST(q_mean - d, 0)
-            + 4 * GREATEST(d - q_mean, 0)) AS BIGINT) AS cost_at_mean,
-        CAST(SUM(GREATEST(q_star - d, 0) + 4 * GREATEST(d - q_star, 0))
-            <= SUM(GREATEST(q_mean - d, 0)
-                + 4 * GREATEST(d - q_mean, 0)) AS BOOLEAN)
-            AS quantile_wins
-    FROM daily CROSS JOIN qs
-"""
-
-
-def q_cold_start_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cold-start audit for a temporal train/test split (train =
-    orders before 1996-01-01, test = from then on): what share of
-    test-period lineitems reference a part or a customer the training
-    period never saw — the number that bounds any recommender or
-    demand model trained on history (split_leakage_audit checks the
-    split doesn't LEAK; this checks the split doesn't leave the model
-    blind).  Exact ppm counts via anti-join semantics expressed as
-    left joins on distinct key sets.
-
-    Scale shape: two distinct-key builds at part/customer cardinality
-    (broadcast), one pass over test lineitems, one row out."""
-    orders = _t(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        "o_custkey",
-        F.expr(
-            "CAST(o_orderdate AS DATE) < DATE'1996-01-01'"
-        ).alias("is_train"),
-    )
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    rows = li.join(
-        orders, li["l_orderkey"] == orders["o_orderkey"]
-    ).select("is_train", "l_partkey", "o_custkey")
-    train_parts = (
-        rows.filter("is_train").select("l_partkey").distinct()
-        .withColumn("seen_p", F.lit(1))
-    )
-    train_custs = (
-        rows.filter("is_train").select("o_custkey").distinct()
-        .withColumn("seen_c", F.lit(1))
-    )
-    test = (
-        rows.filter(~F.col("is_train"))
-        .join(F.broadcast(train_parts), "l_partkey", "left")
-        .join(F.broadcast(train_custs), "o_custkey", "left")
-    )
-    return test.agg(
-        F.count(F.lit(1)).alias("n_test_rows"),
-        F.count_if(F.col("seen_p").isNull()).alias("cold_part_rows"),
-        F.count_if(F.col("seen_c").isNull()).alias("cold_cust_rows"),
-    ).select(
-        "n_test_rows",
-        "cold_part_rows",
-        F.expr(
-            "CAST(cold_part_rows * 1000000 div n_test_rows AS BIGINT)"
-        ).alias("cold_part_ppm"),
-        "cold_cust_rows",
-        F.expr(
-            "CAST(cold_cust_rows * 1000000 div n_test_rows AS BIGINT)"
-        ).alias("cold_cust_ppm"),
-    )
-
-
-ORACLE_COLD_START = """
-    WITH rows_ AS (SELECT
-            CAST(o_orderdate AS DATE) < DATE '1996-01-01' AS is_train,
-            l_partkey, o_custkey
-        FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-    tp AS (SELECT DISTINCT l_partkey FROM rows_ WHERE is_train),
-    tc AS (SELECT DISTINCT o_custkey FROM rows_ WHERE is_train),
-    test AS (SELECT r.l_partkey, r.o_custkey,
-            tp.l_partkey IS NOT NULL AS seen_p,
-            tc.o_custkey IS NOT NULL AS seen_c
-        FROM rows_ r
-        LEFT JOIN tp ON r.l_partkey = tp.l_partkey
-        LEFT JOIN tc ON r.o_custkey = tc.o_custkey
-        WHERE NOT r.is_train)
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_test_rows,
-        CAST(COUNT(CASE WHEN NOT seen_p THEN 1 END) AS BIGINT)
-            AS cold_part_rows,
-        CAST(COUNT(CASE WHEN NOT seen_p THEN 1 END) * 1000000
-            // COUNT(*) AS BIGINT) AS cold_part_ppm,
-        CAST(COUNT(CASE WHEN NOT seen_c THEN 1 END) AS BIGINT)
-            AS cold_cust_rows,
-        CAST(COUNT(CASE WHEN NOT seen_c THEN 1 END) * 1000000
-            // COUNT(*) AS BIGINT) AS cold_cust_ppm
-    FROM test
-"""
-
-
-# ---------------------------------------------------------------- wave 8c
-
-
-def q_revenue_bridge_yoy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Year-over-year revenue BRIDGE: the delta decomposed into a
-    volume effect ((n_t - n_prev) * AOV_prev) and a price/mix effect
-    (n_t * (AOV_t - AOV_prev)) — the metric-tree arithmetic every
-    revenue review runs, done with exact integer accounting: AOV is
-    exact micro-cents, both effects land back in cents by one floor
-    division each, and the emitted RESIDUAL column equals delta minus
-    the two effects EXACTLY (it absorbs only the micro-quantization,
-    so the bridge provably adds up — no silent rounding leak).
-
-    Scale shape: one fact agg to year cardinality; lag window +
-    arithmetic over ~7 rows."""
-    from pyspark.sql import Window
-
-    o = _t(spark, sf_dir, "orders").select(
-        F.expr("year(CAST(o_orderdate AS DATE))").alias("yr"),
-        F.expr(
-            "CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)"
-        ).alias("cents"),
-    )
-    g = o.groupBy("yr").agg(
-        F.count(F.lit(1)).alias("n"), F.sum("cents").alias("r")
-    )
-    w = Window.orderBy("yr")
-    dec = "DECIMAL(38,0)"
-    j = g.select(
-        "yr",
-        "n",
-        "r",
-        F.expr(f"CAST(r AS {dec}) * 1000000 div n").alias("aov_micro"),
-        F.lag("n").over(w).alias("n_prev"),
-        F.lag("r").over(w).alias("r_prev"),
-        F.lag(
-            F.expr(f"CAST(r AS {dec}) * 1000000 div n")
-        ).over(w).alias("aov_prev_micro"),
-    ).filter(F.col("n_prev").isNotNull())
-    return j.select(
-        "yr",
-        "n",
-        F.expr("r - r_prev").alias("delta_cents"),
-        F.expr(
-            f"CAST((CAST(n AS {dec}) - n_prev) * aov_prev_micro"
-            " div 1000000 AS BIGINT)"
-        ).alias("volume_effect_cents"),
-        F.expr(
-            f"CAST(CAST(n AS {dec})"
-            " * (aov_micro - aov_prev_micro) div 1000000 AS BIGINT)"
-        ).alias("price_mix_effect_cents"),
-        F.expr(
-            "r - r_prev"
-            f" - CAST((CAST(n AS {dec}) - n_prev) * aov_prev_micro"
-            " div 1000000 AS BIGINT)"
-            f" - CAST(CAST(n AS {dec})"
-            " * (aov_micro - aov_prev_micro) div 1000000 AS BIGINT)"
-        ).alias("residual_cents"),
-    ).orderBy("yr")
-
-
-ORACLE_REVENUE_BRIDGE = """
-    WITH o AS (SELECT year(CAST(o_orderdate AS DATE)) AS yr,
-            CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT) AS cents
-        FROM orders),
-    g AS (SELECT yr, CAST(COUNT(*) AS BIGINT) AS n,
-            CAST(SUM(cents) AS BIGINT) AS r
-        FROM o GROUP BY 1),
-    j AS (SELECT yr, n, r,
-            CAST(r AS HUGEINT) * 1000000 // n AS aov_micro,
-            LAG(n) OVER (ORDER BY yr) AS n_prev,
-            LAG(r) OVER (ORDER BY yr) AS r_prev,
-            LAG(CAST(r AS HUGEINT) * 1000000 // n)
-                OVER (ORDER BY yr) AS aov_prev_micro
-        FROM g)
-    SELECT yr, n,
-        CAST(r - r_prev AS BIGINT) AS delta_cents,
-        CAST((CAST(n AS HUGEINT) - n_prev) * aov_prev_micro // 1000000
-            AS BIGINT) AS volume_effect_cents,
-        CAST(CAST(n AS HUGEINT) * (aov_micro - aov_prev_micro)
-            // 1000000 AS BIGINT) AS price_mix_effect_cents,
-        CAST(r - r_prev
-            - CAST((CAST(n AS HUGEINT) - n_prev) * aov_prev_micro
-                // 1000000 AS BIGINT)
-            - CAST(CAST(n AS HUGEINT) * (aov_micro - aov_prev_micro)
-                // 1000000 AS BIGINT) AS BIGINT) AS residual_cents
-    FROM j WHERE n_prev IS NOT NULL ORDER BY yr
-"""
-
-
-_DP_EPS_MILLI = [100, 500, 1000, 2000]
-
-
-def q_dp_noise_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Differential-privacy budget planner for per-nation customer
-    counts: for each epsilon in the grid, the Laplace scale b = 1/eps
-    a count release (sensitivity 1) would add, and the EXPECTED
-    relative error b/n in exact ppm per nation — the table that says
-    which epsilon makes which cohort unusable BEFORE any noisy release
-    ships (the planning companion to the k-anonymity/l-diversity/
-    t-closeness audit ladder; no noise is sampled — planning is
-    deterministic).  All integer: eps in milli, b in micro,
-    rel err = b_micro * 1e6 div (n * 1e6).
-
-    Scale shape: one agg to nation cardinality, explode x4 epsilons,
-    100 rows out."""
-    cust = _t(spark, sf_dir, "customer")
-    g = cust.groupBy("c_nationkey").agg(
-        F.count(F.lit(1)).alias("n_cust")
-    )
-    eps = ", ".join(str(e) for e in _DP_EPS_MILLI)
-    return (
-        g.select(
-            "c_nationkey",
-            "n_cust",
-            F.explode(F.expr(f"array({eps})")).alias("eps_milli"),
-        )
-        .select(
-            "c_nationkey",
-            "n_cust",
-            F.col("eps_milli").cast("bigint").alias("eps_milli"),
-            F.expr("1000000000 div eps_milli").alias(
-                "laplace_b_micro"
-            ),
-            F.expr(
-                "CAST((1000000000 div eps_milli) * 1000000"
-                " div (CAST(n_cust AS DECIMAL(38,0)) * 1000000)"
-                " AS BIGINT)"
-            ).alias("exp_rel_err_ppm"),
-        )
-        .orderBy("c_nationkey", "eps_milli")
-    )
-
-
-def _dp_oracle() -> str:
-    eps = ", ".join(f"({e})" for e in _DP_EPS_MILLI)
-    return f"""
-    WITH g AS (SELECT c_nationkey, CAST(COUNT(*) AS BIGINT) AS n_cust
-        FROM customer GROUP BY 1),
-    e AS (SELECT * FROM (VALUES {eps}) AS t(eps_milli))
-    SELECT c_nationkey, n_cust,
-        CAST(eps_milli AS BIGINT) AS eps_milli,
-        CAST(CAST(1000000000 AS BIGINT) // eps_milli AS BIGINT)
-            AS laplace_b_micro,
-        CAST((CAST(1000000000 AS BIGINT) // eps_milli)
-            * CAST(1000000 AS HUGEINT)
-            // (CAST(n_cust AS HUGEINT) * 1000000) AS BIGINT)
-            AS exp_rel_err_ppm
-    FROM g CROSS JOIN e ORDER BY c_nationkey, eps_milli
-"""
-
-
-ORACLE_DP_PLAN = _dp_oracle()
-
-
-# ---------------------------------------------------------------- wave 8d
-
-
-def q_littles_law_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Little's law cross-check on the order pipeline: L = lambda * W,
-    with the three quantities measured by TWO INDEPENDENT computation
-    paths — W from per-order durations (orderdate to last shipment,
-    inclusive), L from a +1/-1 interval sweep with piecewise-constant
-    gap weighting (the peak_concurrency machinery).  Because both
-    paths ultimately integrate the same order-day area, the audit's
-    identity gap must be EXACTLY zero — any nonzero value means the
-    sweep (the reusable concurrency operator) and the direct sum
-    disagree, i.e. an off-by-one in interval closure.  Queueing-theory
-    sanity made a regression test.
-
-    Scale shape: one orders|x|lineitem rollup to order cardinality,
-    a delta-day aggregate + prefix-sum window at day cardinality,
-    1-row finish."""
-    from pyspark.sql import Window
-
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_orderkey",
-        F.expr(
-            "datediff(CAST(l_shipdate AS DATE), DATE'1992-01-01')"
-        ).alias("sday"),
-    )
-    o = _t(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        F.expr(
-            "datediff(CAST(o_orderdate AS DATE), DATE'1992-01-01')"
-        ).alias("aday"),
-    )
-    spans = (
-        o.join(li, o["o_orderkey"] == li["l_orderkey"])
-        .groupBy("o_orderkey")
-        .agg(F.max("aday").alias("a"), F.max("sday").alias("d"))
-    ).localCheckpoint()
-    direct = spans.agg(
-        F.count(F.lit(1)).alias("n_orders"),
-        F.sum(F.expr("d - a + 1")).alias("sum_dur"),
-        F.min("a").alias("t0"),
-        F.max("d").alias("t1"),
-    )
-    deltas = (
-        spans.select(F.col("a").alias("day"), F.lit(1).alias("delta"))
-        .unionByName(
-            spans.select(
-                (F.col("d") + 1).alias("day"), F.lit(-1).alias("delta")
-            )
-        )
-        .groupBy("day")
-        .agg(F.sum("delta").alias("nd"))
-    )
-    w = Window.orderBy("day").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    wl = Window.orderBy("day")
-    sweep = deltas.select(
-        "day",
-        F.sum("nd").over(w).alias("inflight"),
-        F.lead("day").over(wl).alias("nxt"),
-    ).agg(
-        F.sum(
-            F.expr(
-                "CAST(inflight AS BIGINT)"
-                " * (coalesce(nxt, day + 1) - day)"
-            )
-        ).alias("area")
-    )
-    return direct.crossJoin(F.broadcast(sweep)).select(
-        "n_orders",
-        F.expr("t1 - t0 + 1").alias("n_obs_days"),
-        F.expr(
-            "n_orders * 1000 div (t1 - t0 + 1)"
-        ).alias("lambda_milli"),
-        F.expr("sum_dur * 1000 div n_orders").alias("w_milli"),
-        F.expr(
-            "sum_dur * 1000 div (t1 - t0 + 1)"
-        ).alias("l_littles_milli"),
-        F.expr(
-            "area * 1000 div (t1 - t0 + 1)"
-        ).alias("l_sweep_milli"),
-        F.expr("area - sum_dur").alias("identity_gap_order_days"),
-    )
-
-
-ORACLE_LITTLES_LAW = """
-    WITH spans AS (SELECT o_orderkey,
-            MAX(date_diff('day', DATE '1992-01-01',
-                CAST(o_orderdate AS DATE))) AS a,
-            MAX(date_diff('day', DATE '1992-01-01',
-                CAST(l_shipdate AS DATE))) AS d
-        FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        GROUP BY 1),
-    direct AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_orders,
-            CAST(SUM(d - a + 1) AS BIGINT) AS sum_dur,
-            MIN(a) AS t0, MAX(d) AS t1
-        FROM spans),
-    deltas AS (SELECT day, CAST(SUM(delta) AS BIGINT) AS nd
-        FROM (SELECT a AS day, 1 AS delta FROM spans
-              UNION ALL SELECT d + 1, -1 FROM spans)
-        GROUP BY 1),
-    sweep AS (SELECT CAST(SUM(inflight
-                * (COALESCE(nxt, day + 1) - day)) AS BIGINT) AS area
-        FROM (SELECT day,
-                SUM(nd) OVER (ORDER BY day ROWS BETWEEN UNBOUNDED
-                    PRECEDING AND CURRENT ROW) AS inflight,
-                LEAD(day) OVER (ORDER BY day) AS nxt
-              FROM deltas))
-    SELECT n_orders,
-        CAST(t1 - t0 + 1 AS BIGINT) AS n_obs_days,
-        CAST(n_orders * 1000 // (t1 - t0 + 1) AS BIGINT)
-            AS lambda_milli,
-        CAST(sum_dur * 1000 // n_orders AS BIGINT) AS w_milli,
-        CAST(sum_dur * 1000 // (t1 - t0 + 1) AS BIGINT)
-            AS l_littles_milli,
-        CAST(area * 1000 // (t1 - t0 + 1) AS BIGINT) AS l_sweep_milli,
-        CAST(area - sum_dur AS BIGINT) AS identity_gap_order_days
-    FROM direct CROSS JOIN sweep
-"""
-
-
-def q_bootstrap_median_days(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Poisson-bootstrap sampling distribution of the MEDIAN daily
-    revenue: 32 deterministic Poisson(1)-weighted replicates of the
-    day series, each replicate's weighted median found by cumulative-
-    weight threshold (smallest value whose cum weight reaches
-    ceil(total/2)) — extends poisson_bootstrap_mean to a rank
-    statistic the sufficient-statistics trick can't reach.  The 32
-    rows ARE the sampling distribution; sort for CI bounds.  Same
-    md5 multiplicity ladder, windows ride the day-bounded series.
-
-    Scale shape: one corpus agg to days (checkpointed), 32x bounded
-    explode, per-replicate cum-weight windows over <=2.4k rows."""
-    from pyspark.sql import Window
-
-    o = _t(spark, sf_dir, "orders").select(
-        F.expr(
-            "datediff(CAST(o_orderdate AS DATE), DATE'1992-01-01')"
-        ).alias("day"),
-        F.expr("CAST(floor(o_totalprice + 0.5) AS BIGINT)").alias("usd"),
-    )
-    daily = o.groupBy("day").agg(F.sum("usd").alias("x")).localCheckpoint()
-    ex = daily.select(
-        "day",
-        "x",
-        F.explode(
-            F.sequence(F.lit(0), F.lit(_PB_REPLICATES - 1))
-        ).alias("b"),
-    )
-    h = F.expr(
-        "CAST(conv(substring(md5(concat(CAST(day AS STRING), '#bmed',"
-        " CAST(b AS STRING))), 1, 15), 16, 10) AS BIGINT)"
-    )
-    wtd = ex.withColumn("u_ppm", h % F.lit(1000000)).withColumn(
-        "w", F.expr(_poisson_weight_case("u_ppm"))
-    )
-    wcum = Window.partitionBy("b").orderBy("x", "day").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    wall = Window.partitionBy("b")
-    c = wtd.select(
-        "b",
-        "x",
-        F.sum("w").over(wcum).alias("cumw"),
-        F.sum("w").over(wall).alias("totw"),
-    )
-    return (
-        c.filter(F.expr("cumw >= (totw + 1) div 2"))
-        .groupBy("b")
-        .agg(F.min("x").alias("median_usd"), F.max("totw").alias("totw"))
-        .select(
-            F.col("b").cast("bigint").alias("replicate"),
-            F.col("totw").alias("total_weight"),
-            "median_usd",
-        )
-        .orderBy("replicate")
-    )
-
-
-ORACLE_BOOTSTRAP_MEDIAN = f"""
-    WITH daily AS (SELECT
-            date_diff('day', DATE '1992-01-01',
-                CAST(o_orderdate AS DATE)) AS day,
-            CAST(SUM(CAST(FLOOR(o_totalprice + 0.5) AS BIGINT))
-                AS BIGINT) AS x
-        FROM orders GROUP BY 1),
-    ex AS (SELECT day, x, r.b AS b FROM daily,
-            unnest(generate_series(0, {_PB_REPLICATES - 1})) AS r(b)),
-    wtd AS (SELECT b, day, x,
-            ('0x' || substr(md5(CAST(day AS VARCHAR) || '#bmed'
-                || CAST(b AS VARCHAR)), 1, 15))::BIGINT % 1000000
-                AS u_ppm
-        FROM ex),
-    ww AS (SELECT b, day, x,
-            {_poisson_weight_case('u_ppm')} AS w
-        FROM wtd),
-    c AS (SELECT b, x,
-            SUM(w) OVER (PARTITION BY b ORDER BY x, day ROWS BETWEEN
-                UNBOUNDED PRECEDING AND CURRENT ROW) AS cumw,
-            SUM(w) OVER (PARTITION BY b) AS totw
-        FROM ww)
-    SELECT CAST(b AS BIGINT) AS replicate,
-        CAST(MAX(totw) AS BIGINT) AS total_weight,
-        CAST(MIN(x) AS BIGINT) AS median_usd
-    FROM c WHERE cumw >= (totw + 1) // 2
-    GROUP BY b ORDER BY replicate
-"""
-
-
-# ---------------------------------------------------------------- wave 8e
-
-
-def q_hosmer_lemeshow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hosmer-Lemeshow goodness-of-fit for the quality-score-as-
-    probability classifier: treating score k/4 as the predicted
-    English probability, per interior bin (k = 1..3; the 0 and 1
-    endpoint bins have zero binomial variance and are excluded, as HL
-    requires) the statistic sums (observed - expected)^2 / (n p (1-p))
-    — calibration_curve SHOWS the miscalibration, this TESTS it.
-    Exactly integer: with p = k/4, the bin term is
-    (4 s_k - k n_k)^2 * 1e6 div (n_k k (4-k)), summed over 3 bins —
-    one micro quantization per bin, nothing else.
-
-    Scale shape: one corpus agg to the 5-row score histogram; 3-row
-    arithmetic."""
-    docs = _t(spark, sf_dir, "documents")
-    scored = docs.select(
-        (TX.quality_score(F.col("text")) * 4).cast("bigint").alias("q"),
-        (F.col("lang") == "en").cast("bigint").alias("y"),
-    )
-    hist = scored.groupBy("q").agg(
-        F.count(F.lit(1)).alias("n_k"), F.sum("y").alias("s_k")
-    )
-    dec = "DECIMAL(38,0)"
-    terms = hist.filter((F.col("q") >= 1) & (F.col("q") <= 3)).select(
-        "q",
-        "n_k",
-        "s_k",
-        F.expr(
-            f"CAST((CAST(4 AS {dec}) * s_k - CAST(q AS {dec}) * n_k)"
-            f" * (CAST(4 AS {dec}) * s_k - CAST(q AS {dec}) * n_k)"
-            f" * 1000000 div (CAST(n_k AS {dec}) * q * (4 - q))"
-            " AS BIGINT)"
-        ).alias("term_micro"),
-    )
-    return terms.agg(
-        F.count(F.lit(1)).alias("n_bins"),
-        F.sum("n_k").alias("n_docs_tested"),
-        F.sum("term_micro").alias("hl_chi2_micro"),
-    )
-
-
-ORACLE_HOSMER = """
-    WITH t AS (SELECT lang, text,
-        list_filter(string_split_regex(trim(text), '\\s+'),
-                    x -> x <> '') AS toks
-    FROM documents),
-    m AS (SELECT CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y,
-        len(toks) AS n_tok,
-        len(list_filter(list_transform(toks, x -> lower(x)),
-            x -> list_contains(['the','a','of','to','and','in','is',
-                                'it','for','on'], x))) AS n_stop,
-        length(text) AS n_chars,
-        length(regexp_replace(text, '[^\\w\\s]', '', 'g')) AS n_nopunct,
-        list_sum(list_transform(toks, x -> length(x))) AS tok_chars
-    FROM t),
-    scored AS (SELECT y, CAST(
-        (CASE WHEN n_tok >= 10 AND n_tok <= 100000 THEN 1 ELSE 0 END) +
-        (CASE WHEN n_tok > 0
-              AND CAST(n_stop AS DOUBLE) / n_tok >= 0.01
-              THEN 1 ELSE 0 END) +
-        (CASE WHEN n_chars = 0
-              OR CAST(n_chars - n_nopunct AS DOUBLE) / n_chars <= 0.2
-              THEN 1 ELSE 0 END) +
-        (CASE WHEN n_tok > 0 AND CAST(tok_chars AS DOUBLE) / n_tok >= 2
-              AND CAST(tok_chars AS DOUBLE) / n_tok <= 12
-              THEN 1 ELSE 0 END) AS BIGINT) AS q
-    FROM m),
-    hist AS (SELECT q, CAST(COUNT(*) AS BIGINT) AS n_k,
-            CAST(SUM(y) AS BIGINT) AS s_k
-        FROM scored GROUP BY 1),
-    terms AS (SELECT q, n_k, s_k,
-            CAST((CAST(4 AS HUGEINT) * s_k - CAST(q AS HUGEINT) * n_k)
-                * (CAST(4 AS HUGEINT) * s_k - CAST(q AS HUGEINT) * n_k)
-                * 1000000 // (CAST(n_k AS HUGEINT) * q * (4 - q))
-                AS BIGINT) AS term_micro
-        FROM hist WHERE q BETWEEN 1 AND 3)
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_bins,
-        CAST(SUM(n_k) AS BIGINT) AS n_docs_tested,
-        CAST(SUM(term_micro) AS BIGINT) AS hl_chi2_micro
-    FROM terms
-"""
-
-
-def q_cooks_distance_top(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Regression diagnostics: the 20 most influential lineitems for
-    the through-origin price-on-quantity fit, ranked by Cook's
-    distance D_i = r_i^2 h_i / (p s^2 (1 - h_i)^2) with leverage
-    h_i = x_i^2 / Sxx — the rows whose deletion moves the fitted slope
-    most (regression_price_qty reports the fit; this says which rows
-    OWN it).  Slope and Sxx come from one exact-moment pass; per-row
-    leverage and residual are exact rationals bridged once to a shared
-    IEEE expression, ranked det6 with a key tie-break.
-
-    Scale shape: one 1-row moment aggregate broadcast back, per-row
-    closed form in the scan projection, TakeOrdered(20)."""
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_orderkey",
-        "l_linenumber",
-        F.expr(
-            "CAST(floor(l_extendedprice * 100.0 + 0.5) AS BIGINT)"
-        ).alias("y"),
-        F.expr("CAST(floor(l_quantity + 0.5) AS BIGINT)").alias("x"),
-    )
-    dec = "DECIMAL(38,0)"
-    mo = li.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.expr(f"SUM(CAST(x AS {dec}) * x)").alias("sxx"),
-        F.expr(f"SUM(CAST(x AS {dec}) * y)").alias("sxy"),
-        F.expr(f"SUM(CAST(y AS {dec}) * y)").alias("syy"),
-    )
-    br = lambda c: f"CAST(CAST({c} AS STRING) AS DOUBLE)"  # noqa: E731
-    # slope b = sxy/sxx; residual r = y - b x; SSE = syy - sxy^2/sxx;
-    # s^2 = SSE/(n-1); h = x^2/sxx; D = r^2 h / (s^2 (1-h)^2)
-    b = f"({br('sxy')} / {br('sxx')})"
-    s2 = (
-        f"(({br('syy')} - {br('sxy')} * {br('sxy')} / {br('sxx')})"
-        f" / (CAST(n AS DOUBLE) - 1.0))"
-    )
-    h = f"(CAST(x AS DOUBLE) * CAST(x AS DOUBLE) / {br('sxx')})"
-    r = f"(CAST(y AS DOUBLE) - {b} * CAST(x AS DOUBLE))"
-    d = (
-        f"({r} * {r} * {h})"
-        f" / ({s2} * (1.0 - {h}) * (1.0 - {h}))"
-    )
-    scored = li.crossJoin(F.broadcast(mo)).select(
-        "l_orderkey",
-        "l_linenumber",
-        "x",
-        "y",
-        DET.det_round(F.expr(f"{d} * 1000000.0"), 6).alias(
-            "cooks_d_micro"
-        ),
-    )
-    return scored.orderBy(
-        F.desc("cooks_d_micro"), "l_orderkey", "l_linenumber"
-    ).limit(20)
-
-
-ORACLE_COOKS = f"""
-    WITH li AS (SELECT l_orderkey, l_linenumber,
-            CAST(FLOOR(l_extendedprice * 100.0 + 0.5) AS BIGINT) AS y,
-            CAST(FLOOR(l_quantity + 0.5) AS BIGINT) AS x
-        FROM lineitem),
-    mo AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
-            CAST(SUM(CAST(x AS HUGEINT) * x) AS HUGEINT) AS sxx,
-            CAST(SUM(CAST(x AS HUGEINT) * y) AS HUGEINT) AS sxy,
-            CAST(SUM(CAST(y AS HUGEINT) * y) AS HUGEINT) AS syy
-        FROM li),
-    b AS (SELECT n,
-            CAST(CAST(sxx AS VARCHAR) AS DOUBLE) AS dxx,
-            CAST(CAST(sxy AS VARCHAR) AS DOUBLE) AS dxy,
-            CAST(CAST(syy AS VARCHAR) AS DOUBLE) AS dyy
-        FROM mo),
-    scored AS (SELECT l_orderkey, l_linenumber, x, y,
-            {DET.det_round_sql(
-                "(((CAST(y AS DOUBLE) - (dxy / dxx) * CAST(x AS DOUBLE))"
-                " * (CAST(y AS DOUBLE) - (dxy / dxx) * CAST(x AS DOUBLE))"
-                " * (CAST(x AS DOUBLE) * CAST(x AS DOUBLE) / dxx))"
-                " / (((dyy - dxy * dxy / dxx) / (CAST(n AS DOUBLE) - 1.0))"
-                " * (1.0 - CAST(x AS DOUBLE) * CAST(x AS DOUBLE) / dxx)"
-                " * (1.0 - CAST(x AS DOUBLE) * CAST(x AS DOUBLE) / dxx)))"
-                " * 1000000.0", 6
-            )} AS cooks_d_micro
-        FROM li CROSS JOIN b)
-    SELECT l_orderkey, l_linenumber, x, y, cooks_d_micro
-    FROM scored
-    ORDER BY cooks_d_micro DESC, l_orderkey, l_linenumber LIMIT 20
-"""
-
-
-# ---------------------------------------------------------------- wave 8f
-
-
-def _quality_flags(docs: DataFrame) -> DataFrame:
-    """The 4 quality-score component flags as separate integer columns
-    (same definitions the score sums — see ORACLE_QUALITY)."""
-    n_tok = TX.token_count(F.col("text"))
-    return docs.select(
-        n_tok.between(10, 100000).cast("long").alias("f1"),
-        (
-            (n_tok > 0)
-            & (TX.stopword_ratio(F.col("text")) >= F.lit(0.01))
-        ).cast("long").alias("f2"),
-        (
-            (F.length("text") == 0)
-            | (TX.punct_ratio(F.col("text")) <= F.lit(0.2))
-        ).cast("long").alias("f3"),
-        (
-            (n_tok > 0)
-            & TX.avg_word_len(F.col("text")).between(2, 12)
-        ).cast("long").alias("f4"),
-    )
-
-
-def q_cronbach_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cronbach's alpha for the 4-item quality scale: do the four
-    flags measure ONE latent 'document quality', or four unrelated
-    things?  alpha = (k/(k-1)) (1 - sum item variances / total-score
-    variance) — the reliability number that decides whether summing
-    the flags into quality_score was statistically legitimate.  With
-    binary items every variance is exact: n*s_i - s_i^2 over n^2, and
-    the common n^2 cancels, so alpha is ONE sign-safe rational in
-    DECIMAL(38,0), emitted in exact micro.
-
-    Scale shape: one corpus scan aggregating 4 item sums + the total-
-    score second moment; 1-row arithmetic."""
-    docs = _t(spark, sf_dir, "documents")
-    f = _quality_flags(docs).withColumn(
-        "t", F.expr("f1 + f2 + f3 + f4")
-    )
-    dec = "DECIMAL(38,0)"
-    g = f.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("f1").alias("s1"),
-        F.sum("f2").alias("s2"),
-        F.sum("f3").alias("s3"),
-        F.sum("f4").alias("s4"),
-        F.sum("t").alias("st"),
-        F.expr(f"SUM(CAST(t AS {dec}) * t)").alias("qt"),
-    )
-    items = (
-        f"((CAST(n AS {dec}) * s1 - CAST(s1 AS {dec}) * s1)"
-        f" + (CAST(n AS {dec}) * s2 - CAST(s2 AS {dec}) * s2)"
-        f" + (CAST(n AS {dec}) * s3 - CAST(s3 AS {dec}) * s3)"
-        f" + (CAST(n AS {dec}) * s4 - CAST(s4 AS {dec}) * s4))"
-    )
-    tot = f"(CAST(n AS {dec}) * qt - CAST(st AS {dec}) * st)"
-    num = f"({tot} - {items})"
-    return g.select(
-        F.expr("CAST(n AS BIGINT)").alias("n_docs"),
-        F.expr(
-            f"CAST({items} * 1000000 div {tot} AS BIGINT)"
-        ).alias("item_var_share_ppm"),
-        F.expr(
-            f"CASE WHEN {tot} = 0 THEN CAST(0 AS BIGINT)"
-            f" ELSE CAST(CASE WHEN {num} < 0 THEN -1 ELSE 1 END"
-            f" * (abs(CAST(4 AS {dec}) * {num}) * 1000000"
-            f" div (CAST(3 AS {dec}) * {tot})) AS BIGINT) END"
-        ).alias("cronbach_alpha_micro"),
-    )
-
-
-ORACLE_CRONBACH = """
-    WITH t AS (SELECT text,
-        list_filter(string_split_regex(trim(text), '\\s+'),
-                    x -> x <> '') AS toks
-    FROM documents),
-    m AS (SELECT
-        len(toks) AS n_tok,
-        len(list_filter(list_transform(toks, x -> lower(x)),
-            x -> list_contains(['the','a','of','to','and','in','is',
-                                'it','for','on'], x))) AS n_stop,
-        length(text) AS n_chars,
-        length(regexp_replace(text, '[^\\w\\s]', '', 'g')) AS n_nopunct,
-        list_sum(list_transform(toks, x -> length(x))) AS tok_chars
-    FROM t),
-    fl AS (SELECT
-        CASE WHEN n_tok >= 10 AND n_tok <= 100000 THEN 1 ELSE 0 END
-            AS f1,
-        CASE WHEN n_tok > 0 AND CAST(n_stop AS DOUBLE) / n_tok >= 0.01
-            THEN 1 ELSE 0 END AS f2,
-        CASE WHEN n_chars = 0 OR CAST(n_chars - n_nopunct AS DOUBLE)
-            / n_chars <= 0.2 THEN 1 ELSE 0 END AS f3,
-        CASE WHEN n_tok > 0 AND CAST(tok_chars AS DOUBLE) / n_tok >= 2
-            AND CAST(tok_chars AS DOUBLE) / n_tok <= 12
-            THEN 1 ELSE 0 END AS f4
-    FROM m),
-    g AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
-            CAST(SUM(f1) AS BIGINT) AS s1,
-            CAST(SUM(f2) AS BIGINT) AS s2,
-            CAST(SUM(f3) AS BIGINT) AS s3,
-            CAST(SUM(f4) AS BIGINT) AS s4,
-            CAST(SUM(f1 + f2 + f3 + f4) AS BIGINT) AS st,
-            CAST(SUM(CAST(f1 + f2 + f3 + f4 AS HUGEINT)
-                * (f1 + f2 + f3 + f4)) AS HUGEINT) AS qt
-        FROM fl)
-    SELECT n AS n_docs,
-        CAST(((CAST(n AS HUGEINT) * s1 - CAST(s1 AS HUGEINT) * s1)
-            + (CAST(n AS HUGEINT) * s2 - CAST(s2 AS HUGEINT) * s2)
-            + (CAST(n AS HUGEINT) * s3 - CAST(s3 AS HUGEINT) * s3)
-            + (CAST(n AS HUGEINT) * s4 - CAST(s4 AS HUGEINT) * s4))
-            * 1000000
-            // (CAST(n AS HUGEINT) * qt - CAST(st AS HUGEINT) * st)
-            AS BIGINT) AS item_var_share_ppm,
-        CASE WHEN (CAST(n AS HUGEINT) * qt - CAST(st AS HUGEINT) * st)
-                = 0 THEN CAST(0 AS BIGINT)
-        ELSE CAST((CASE WHEN ((CAST(n AS HUGEINT) * qt
-                - CAST(st AS HUGEINT) * st)
-            - ((CAST(n AS HUGEINT) * s1 - CAST(s1 AS HUGEINT) * s1)
-            + (CAST(n AS HUGEINT) * s2 - CAST(s2 AS HUGEINT) * s2)
-            + (CAST(n AS HUGEINT) * s3 - CAST(s3 AS HUGEINT) * s3)
-            + (CAST(n AS HUGEINT) * s4 - CAST(s4 AS HUGEINT) * s4)))
-            < 0 THEN -1 ELSE 1 END)
-            * (ABS(CAST(4 AS HUGEINT)
-                * ((CAST(n AS HUGEINT) * qt - CAST(st AS HUGEINT) * st)
-            - ((CAST(n AS HUGEINT) * s1 - CAST(s1 AS HUGEINT) * s1)
-            + (CAST(n AS HUGEINT) * s2 - CAST(s2 AS HUGEINT) * s2)
-            + (CAST(n AS HUGEINT) * s3 - CAST(s3 AS HUGEINT) * s3)
-            + (CAST(n AS HUGEINT) * s4 - CAST(s4 AS HUGEINT) * s4))))
-            * 1000000
-            // (CAST(3 AS HUGEINT)
-               * (CAST(n AS HUGEINT) * qt - CAST(st AS HUGEINT) * st)))
-            AS BIGINT) END AS cronbach_alpha_micro
-    FROM g
-"""
-
-
-def q_item_rest_correlations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Item-rest (corrected item-total) correlations for the 4 quality
-    flags: each item against the sum of the OTHER three — the
-    companion diagnostic to cronbach_alpha that names WHICH flag drags
-    the scale down (a near-zero or negative item-rest correlation
-    marks a flag measuring something else).  All moments come from
-    ONE scan (item sums, rest-score sums, cross products); each
-    correlation is the bridged IEEE Pearson closed form, det6.
-
-    Scale shape: one corpus scan with 14 integer sums; 4-row finish
-    via stack."""
-    docs = _t(spark, sf_dir, "documents")
-    f = _quality_flags(docs)
-    dec = "DECIMAL(38,0)"
-    aggs = [F.count(F.lit(1)).alias("n")]
-    for i in (1, 2, 3, 4):
-        rest = " + ".join(f"f{j}" for j in (1, 2, 3, 4) if j != i)
-        aggs.append(F.sum(f"f{i}").alias(f"s{i}"))
-        aggs.append(
-            F.expr(f"SUM(CAST({rest} AS {dec}))").alias(f"r{i}")
-        )
-        aggs.append(
-            F.expr(
-                f"SUM(CAST({rest} AS {dec}) * ({rest}))"
-            ).alias(f"rr{i}")
-        )
-        aggs.append(
-            F.expr(f"SUM(CAST(f{i} AS {dec}) * ({rest}))").alias(
-                f"xr{i}"
-            )
-        )
-    g = f.agg(*aggs)
-    br = lambda c: f"CAST(CAST({c} AS STRING) AS DOUBLE)"  # noqa: E731
-    dn = "CAST(n AS DOUBLE)"
-    rows = []
-    for i in (1, 2, 3, 4):
-        num = f"({dn} * {br(f'xr{i}')} - {br(f's{i}')} * {br(f'r{i}')})"
-        den = (
-            f"SQRT(({dn} * {br(f's{i}')} - {br(f's{i}')}"
-            f" * {br(f's{i}')})"
-            f" * ({dn} * {br(f'rr{i}')} - {br(f'r{i}')}"
-            f" * {br(f'r{i}')}))"
-        )
-        # Spark-side det quantization: FLOOR returns BIGINT and a bare
-        # "1000000.0" literal parses as DECIMAL in Spark SQL text (the
-        # chi2_keywords lesson) — cast both stages back to DOUBLE
-        rows.append(
-            f"'f{i}', CAST(s{i} AS BIGINT),"
-            f" (CAST(FLOOR(({num} / NULLIF({den}, CAST(0.0 AS DOUBLE)))"
-            " * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE))"
-            " AS DOUBLE) / CAST(1000000.0 AS DOUBLE))"
-        )
-    stack = ", ".join(rows)
-    return g.select(
-        F.expr("CAST(n AS BIGINT)").alias("n_docs"),
-        F.expr(
-            f"stack(4, {stack}) AS (item, item_sum, item_rest_corr)"
-        ),
-    ).orderBy("item")
-
-
-def _item_rest_oracle() -> str:
-    sums = []
-    for i in (1, 2, 3, 4):
-        rest = " + ".join(f"f{j}" for j in (1, 2, 3, 4) if j != i)
-        sums.append(f"CAST(SUM(f{i}) AS BIGINT) AS s{i}")
-        sums.append(f"CAST(SUM(CAST({rest} AS HUGEINT))"
-                    f" AS HUGEINT) AS r{i}")
-        sums.append(
-            f"CAST(SUM(CAST({rest} AS HUGEINT) * ({rest})) AS HUGEINT)"
-            f" AS rr{i}"
-        )
-        sums.append(
-            f"CAST(SUM(CAST(f{i} AS HUGEINT) * ({rest})) AS HUGEINT)"
-            f" AS xr{i}"
-        )
-    br = lambda c: f"CAST(CAST({c} AS VARCHAR) AS DOUBLE)"  # noqa: E731
-    dn = "CAST(n AS DOUBLE)"
-    sel = []
-    for i in (1, 2, 3, 4):
-        num = f"({dn} * {br(f'xr{i}')} - {br(f's{i}')} * {br(f'r{i}')})"
-        den = (
-            f"SQRT(({dn} * {br(f's{i}')} - {br(f's{i}')}"
-            f" * {br(f's{i}')})"
-            f" * ({dn} * {br(f'rr{i}')} - {br(f'r{i}')}"
-            f" * {br(f'r{i}')}))"
-        )
-        sel.append(
-            f"SELECT n AS n_docs, 'f{i}' AS item,"
-            f" CAST(s{i} AS BIGINT) AS item_sum, "
-            + DET.det_round_sql(f"{num} / NULLIF({den}, 0.0)", 6)
-            + " AS item_rest_corr FROM g"
-        )
-    union = "\n        UNION ALL ".join(sel)
-    return f"""
-    WITH t AS (SELECT text,
-        list_filter(string_split_regex(trim(text), '\\s+'),
-                    x -> x <> '') AS toks
-    FROM documents),
-    m AS (SELECT
-        len(toks) AS n_tok,
-        len(list_filter(list_transform(toks, x -> lower(x)),
-            x -> list_contains(['the','a','of','to','and','in','is',
-                                'it','for','on'], x))) AS n_stop,
-        length(text) AS n_chars,
-        length(regexp_replace(text, '[^\\w\\s]', '', 'g')) AS n_nopunct,
-        list_sum(list_transform(toks, x -> length(x))) AS tok_chars
-    FROM t),
-    fl AS (SELECT
-        CASE WHEN n_tok >= 10 AND n_tok <= 100000 THEN 1 ELSE 0 END
-            AS f1,
-        CASE WHEN n_tok > 0 AND CAST(n_stop AS DOUBLE) / n_tok >= 0.01
-            THEN 1 ELSE 0 END AS f2,
-        CASE WHEN n_chars = 0 OR CAST(n_chars - n_nopunct AS DOUBLE)
-            / n_chars <= 0.2 THEN 1 ELSE 0 END AS f3,
-        CASE WHEN n_tok > 0 AND CAST(tok_chars AS DOUBLE) / n_tok >= 2
-            AND CAST(tok_chars AS DOUBLE) / n_tok <= 12
-            THEN 1 ELSE 0 END AS f4
-    FROM m),
-    g AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
-            {", ".join(sums)}
-        FROM fl)
-    SELECT * FROM ({union}) ORDER BY item
-"""
-
-
-ORACLE_ITEM_REST = _item_rest_oracle()
-
-
-# ---------------------------------------------------------------- wave 8g
-
-
-def q_inspection_paradox_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Inspection (length-biased sampling) paradox on customer order
-    gaps: the plain mean inter-order gap vs the SIZE-BIASED mean
-    (sum g^2 / sum g) — the gap a randomly-timed probe actually lands
-    in.  The ratio is the correction factor for every 'average wait'
-    metric measured by sampling at random instants instead of at
-    arrivals (latency dashboards systematically over-sample long
-    gaps by exactly this factor).  Exact integer day gaps, DECIMAL
-    second moment, two floor divisions.
-
-    Scale shape: one per-customer lag window at order-key cardinality
-    (the order_gap_median shuffle), one 1-row moment agg."""
-    from pyspark.sql import Window
-
-    o = _t(spark, sf_dir, "orders").select(
-        "o_custkey",
-        F.expr(
-            "datediff(CAST(o_orderdate AS DATE), DATE'1992-01-01')"
-        ).alias("day"),
-        "o_orderkey",
-    )
-    w = Window.partitionBy("o_custkey").orderBy("day", "o_orderkey")
-    gaps = o.select(
-        (F.col("day") - F.lag("day").over(w)).alias("g")
-    ).filter(F.col("g").isNotNull())
-    dec = "DECIMAL(38,0)"
-    r = gaps.agg(
-        F.count(F.lit(1)).alias("n_gaps"),
-        F.expr(f"SUM(CAST(g AS {dec}))").alias("sg"),
-        F.expr(f"SUM(CAST(g AS {dec}) * g)").alias("sgg"),
-    )
-    return r.select(
-        "n_gaps",
-        F.expr(
-            "CAST(sg * 1000 div n_gaps AS BIGINT)"
-        ).alias("mean_gap_milli_days"),
-        F.expr(
-            "CAST(sgg * 1000 div sg AS BIGINT)"
-        ).alias("size_biased_mean_milli_days"),
-        F.expr(
-            "CAST(sgg * 1000000 * n_gaps div (sg * sg) AS BIGINT)"
-        ).alias("inflation_ppm"),
-    )
-
-
-ORACLE_INSPECTION = """
-    WITH o AS (SELECT o_custkey,
-            date_diff('day', DATE '1992-01-01',
-                CAST(o_orderdate AS DATE)) AS day,
-            o_orderkey
-        FROM orders),
-    gaps AS (SELECT day - LAG(day) OVER (PARTITION BY o_custkey
-                ORDER BY day, o_orderkey) AS g
-        FROM o),
-    r AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_gaps,
-            CAST(SUM(CAST(g AS HUGEINT)) AS HUGEINT) AS sg,
-            CAST(SUM(CAST(g AS HUGEINT) * g) AS HUGEINT) AS sgg
-        FROM gaps WHERE g IS NOT NULL)
-    SELECT n_gaps,
-        CAST(sg * 1000 // n_gaps AS BIGINT) AS mean_gap_milli_days,
-        CAST(sgg * 1000 // sg AS BIGINT)
-            AS size_biased_mean_milli_days,
-        CAST(sgg * 1000000 * n_gaps // (sg * sg) AS BIGINT)
-            AS inflation_ppm
-    FROM r
-"""
-
-
-def q_birthday_collision_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Birthday-bound audit of the repo's OWN fingerprint space: the
-    md5-prefix 60-bit integers every dedup/sampling/split operator
-    keys on collide with expected count ~ n(n-1)/2^61 — this query
-    prices that risk for each keyed population (documents, users,
-    orders, lineitems) in exact micro-collisions, the table that says
-    when 60 bits stops being enough (at 1e9 keys: ~0.4 expected
-    collisions; at 1e12: ~430k — switch to the full 128 bits).  Exact
-    integer arithmetic: n(n-1)*1e6 div 2^61.
-
-    Scale shape: four count/count-distinct aggregates, 4 rows out."""
-    docs = _t(spark, sf_dir, "documents").agg(
-        F.count_distinct("doc_id").alias("n")
-    ).select(F.lit("doc_id").alias("population"), "n")
-    users = _t(spark, sf_dir, "events").agg(
-        F.count_distinct("user_id").alias("n")
-    ).select(F.lit("user_id").alias("population"), "n")
-    orders = _t(spark, sf_dir, "orders").agg(
-        F.count_distinct("o_orderkey").alias("n")
-    ).select(F.lit("o_orderkey").alias("population"), "n")
-    li = _t(spark, sf_dir, "lineitem").agg(
-        F.count(F.lit(1)).alias("n")
-    ).select(F.lit("lineitem_rows").alias("population"), "n")
-    u = docs.unionByName(users).unionByName(orders).unionByName(li)
-    dec = "DECIMAL(38,0)"
-    return u.select(
-        "population",
-        F.col("n").cast("bigint").alias("n_keys"),
-        F.expr(
-            f"CAST(CAST(n AS {dec}) * (n - 1) * 1000000"
-            f" div {2 ** 61} AS BIGINT)"
-        ).alias("expected_collisions_micro"),
-    ).orderBy("population")
-
-
-ORACLE_BIRTHDAY = f"""
-    WITH u AS (
-        SELECT 'doc_id' AS population,
-            CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n FROM documents
-        UNION ALL SELECT 'user_id',
-            CAST(COUNT(DISTINCT user_id) AS BIGINT) FROM events
-        UNION ALL SELECT 'o_orderkey',
-            CAST(COUNT(DISTINCT o_orderkey) AS BIGINT) FROM orders
-        UNION ALL SELECT 'lineitem_rows',
-            CAST(COUNT(*) AS BIGINT) FROM lineitem)
-    SELECT population, n AS n_keys,
-        CAST(CAST(n AS HUGEINT) * (n - 1) * 1000000
-            // {2 ** 61} AS BIGINT) AS expected_collisions_micro
-    FROM u ORDER BY population
-"""
-
-
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "route_topics": q_route_topics,
-    "route_topics_salted": q_route_topics_salted,
-    "stats_counters": q_stats_counters,
-    "doc_stats": q_doc_stats,
-    "lang_pred_counts": q_lang_pred_counts,
-    "dedup_exact": q_dedup_exact,
-    "q18_big_orders": q_q18_big_orders,
-    "doc_fingerprints": q_doc_fingerprints,
-    "minhash_signatures": q_minhash_signatures,
-    "ann_cosine_topk": q_ann_cosine_topk,
-    "embedding_dup_pairs": q_embedding_dup_pairs,
-    "simhash_fingerprints": q_simhash_fingerprints,
-    "simhash_near_pairs": q_simhash_near_pairs,
-    "lsh_planted_dups": q_lsh_planted_dups,
-    "jaccard_planted_dups": q_jaccard_planted_dups,
-    "token_counts": q_token_counts,
-    "quality_scores": q_quality_scores,
-    "pivot_event_counts": q_pivot_event_counts,
-    "asof_purchase_orders": q_asof_purchase_orders,
-    "asof_next_order": q_asof_next_order,
-    "asof_nearest_order": q_asof_nearest_order,
-    "sliding_window_rates": q_sliding_window_rates,
-    "ivf_ann_topk": q_ivf_ann_topk,
-    "ivf_trained_topk": q_ivf_trained_topk,
-    "pq_ann_topk": q_pq_ann_topk,
-    "zorder_layout": q_zorder_layout,
-    "scd2_user_history": q_scd2_user_history,
-    "domain_cap_docs": q_domain_cap_docs,
-    "supplier_pagerank": q_supplier_pagerank,
-    "histogram_quantiles": q_histogram_quantiles,
-    "profile_lineitem": q_profile_lineitem,
-    "count_min_freq": q_count_min_freq,
-    "kmv_distinct_per_type": q_kmv_distinct_per_type,
-    "vocab_coverage": q_vocab_coverage,
-    "bpe_merges": q_bpe_merges,
-    "changelog_compact": q_changelog_compact,
-    "media_resize_plan": q_media_resize_plan,
-    "curriculum_stages": q_curriculum_stages,
-    "lang_rebalance": q_lang_rebalance,
-    "supplier_triangles": q_supplier_triangles,
-    "prefix_jaccard_pairs": q_prefix_jaccard_pairs,
-    "embedding_centroid_norms": q_embedding_centroid_norms,
-    "media_batch_stats": q_media_batch_stats,
-    "media_decoded_dims": q_media_decoded_dims,
-    "media_av_durations": q_media_av_durations,
-    "frame_extract_hashes": q_frame_extract_hashes,
-    "av_frame_plan": q_av_frame_plan,
-    "frame_sample_plan": q_frame_sample_plan,
-    "session_window_agg": q_session_window_agg,
-    "roundtrip_route_topics": q_roundtrip_route_topics,
-    "props_json_stats": q_props_json_stats,
-    "range_frame_peers": q_range_frame_peers,
-    "train_val_test_split": q_train_val_test_split,
-    "quality_filter_funnel": q_quality_filter_funnel,
-    "bm25_scores": q_bm25_scores,
-    "char_trigram_topk": q_char_trigram_topk,
-    "ewma_user_values": q_ewma_user_values,
-    "bigram_topk": q_bigram_topk,
-    "lang_confusion": q_lang_confusion,
-    "source_doc_profile": q_source_doc_profile,
-    "segment_listagg": q_segment_listagg,
-    "unpivot_customer": q_unpivot_customer,
-    "embedding_hof_stats": q_embedding_hof_stats,
-    "percentile_quantities": q_percentile_quantities,
-    "order_linenumber_sets": q_order_linenumber_sets,
-    "token_positions": q_token_positions,
-    "rare_terms": q_rare_terms,
-    "lsh_dup_components": q_lsh_dup_components,
-    "dedup_corpus": q_dedup_corpus,
-    "pii_scrubbed": q_pii_scrubbed,
-    "repetition_scores": q_repetition_scores,
-    "ngram_containment": q_ngram_containment,
-    "bloom_contamination": q_bloom_contamination,
-    "incremental_dedup": q_incremental_dedup,
-    "edit_distance_pairs": q_edit_distance_pairs,
-    "doc_chunks": q_doc_chunks,
-    "resample_ffill": q_resample_ffill,
-    "weighted_sample_docs": q_weighted_sample_docs,
-    "unigram_logprob_scores": q_unigram_logprob_scores,
-    "pack_sequences": q_pack_sequences,
-    "stratified_sample": q_stratified_sample,
-    "hash_fraction_docs": q_hash_fraction_docs,
-    "kmv_distinct_users": q_kmv_distinct_users,
-    "tfidf_top_terms": q_tfidf_top_terms,
-    "minhash_jaccard_estimate": q_minhash_jaccard_estimate,
-    "embedding_quantization_error": q_embedding_quantization_error,
-    "knn_graph": q_knn_graph,
-    "semdedup_keep": q_semdedup_keep,
-    "constraint_audit": q_constraint_audit,
-    "dup_window_stats": q_dup_window_stats,
-    "posting_lists": q_posting_lists,
-    "conjunctive_search": q_conjunctive_search,
-    "dedup_keep_best": q_dedup_keep_best,
-    "rrf_hybrid": q_rrf_hybrid,
-    "mmr_diverse_topk": q_mmr_diverse_topk,
-    "pca_top_component": q_pca_top_component,
-    "bpe_encode": q_bpe_encode,
-    "embedding_outliers": q_embedding_outliers,
-    "weekly_retention_cohorts": q_weekly_retention_cohorts,
-    "merge_upsert": q_merge_upsert,
-    "skew_report": q_skew_report,
-    "contrastive_pairs": q_contrastive_pairs,
-    "quality_classifier_scores": q_quality_classifier_scores,
-    "corpus_datasheet": q_corpus_datasheet,
-    "curation_pipeline": q_curation_pipeline,
-    "substring_dup_spans": q_substring_dup_spans,
-    "loglog_distinct_users": q_loglog_distinct_users,
-    "part_name_matches": q_part_name_matches,
-    "trimmed_event_stats": q_trimmed_event_stats,
-    "user_activity_similarity": q_user_activity_similarity,
-    "daily_distinct_estimates": q_daily_distinct_estimates,
-    "boilerplate_topk": q_boilerplate_topk,
-    "hourly_seasonality": q_hourly_seasonality,
-    "corpus_manifest": q_corpus_manifest,
-    "dsir_log_weights": q_dsir_log_weights,
-    "shuffle_shards": q_shuffle_shards,
-    "lang_entropy_by_source": q_lang_entropy_by_source,
-    "tokenizer_fertility": q_tokenizer_fertility,
-    "robust_outlier_events": q_robust_outlier_events,
-    "benchmark_decontam": q_benchmark_decontam,
-    "snapshot_asof": q_snapshot_asof,
-    "quality_percentile_by_source": q_quality_percentile_by_source,
-    "psi_value_drift": q_psi_value_drift,
-    "pareto_frontier_docs": q_pareto_frontier_docs,
-    "classifier_auc": q_classifier_auc,
-    "kmv_vocab_overlap": q_kmv_vocab_overlap,
-    "snapshot_diff": q_snapshot_diff,
-    "benford_price_audit": q_benford_price_audit,
-    "emb_truncation_recall": q_emb_truncation_recall,
-    "calibration_curve": q_calibration_curve,
-    "peak_concurrency": q_peak_concurrency,
-    "exact_median_price": q_exact_median_price,
-    "markov_transitions": q_markov_transitions,
-    "theil_sen_trend": q_theil_sen_trend,
-    "lead_lag_correlation": q_lead_lag_correlation,
-    "gini_spend_by_segment": q_gini_spend_by_segment,
-    "lorenz_deciles": q_lorenz_deciles,
-    "dup_cluster_sizes": q_dup_cluster_sizes,
-    "bounded_funnel": q_bounded_funnel,
-    "embedding_separability": q_embedding_separability,
-    "top_parts_with_ties": q_top_parts_with_ties,
-    "burstiness_fano": q_burstiness_fano,
-    "order_gap_median": q_order_gap_median,
-    "session_bounce_rate": q_session_bounce_rate,
-    "pmi_bigrams": q_pmi_bigrams,
-    "bigram_lm_scores": q_bigram_lm_scores,
-    "winnow_fingerprints": q_winnow_fingerprints,
-    "gram_novelty": q_gram_novelty,
-    "winnow_dup_pairs": q_winnow_dup_pairs,
-    "gopher_quality_flags": q_gopher_quality_flags,
-    "heaps_vocab_growth": q_heaps_vocab_growth,
-    "feature_hashing": q_feature_hashing,
-    "rfm_segments": q_rfm_segments,
-    "changepoint_daily": q_changepoint_daily,
-    "span_corruption_plan": q_span_corruption_plan,
-    "jl_distortion_pairs": q_jl_distortion_pairs,
-    "ngram_diversity": q_ngram_diversity,
-    "token_budget_waterfill": q_token_budget_waterfill,
-    "seasonal_decompose_daily": q_seasonal_decompose_daily,
-    "zipf_slope_by_source": q_zipf_slope_by_source,
-    "ab_test_zscores": q_ab_test_zscores,
-    "basket_lift_pairs": q_basket_lift_pairs,
-    "lsh_recall_eval": q_lsh_recall_eval,
-    "ks_grid_drift": q_ks_grid_drift,
-    "mutual_info_cells": q_mutual_info_cells,
-    "classifier_kappa": q_classifier_kappa,
-    "twap_user_value": q_twap_user_value,
-    "png_pixel_stats": q_png_pixel_stats,
-    "split_leakage_audit": q_split_leakage_audit,
-    "markov_entropy_rate": q_markov_entropy_rate,
-    "lineitem_corr_matrix": q_lineitem_corr_matrix,
-    "hll_error_audit": q_hll_error_audit,
-    "label_silhouette": q_label_silhouette,
-    "last_touch_attribution": q_last_touch_attribution,
-    "session_path_trigrams": q_session_path_trigrams,
-    "quality_length_confound": q_quality_length_confound,
-    "norm_quantile_ranks": q_norm_quantile_ranks,
-    "conversion_latency_buckets": q_conversion_latency_buckets,
-    "km_survival_daily": q_km_survival_daily,
-    "cross_source_dup_matrix": q_cross_source_dup_matrix,
-    "embedding_dim_stats": q_embedding_dim_stats,
-    "k_anonymity_audit": q_k_anonymity_audit,
-    "gini_stump_split": q_gini_stump_split,
-    "ndcg_retrieval_eval": q_ndcg_retrieval_eval,
-    "loo_source_influence": q_loo_source_influence,
-    "activity_transition_matrix": q_activity_transition_matrix,
-    "did_estimate": q_did_estimate,
-    "conversion_wilson_ci": q_conversion_wilson_ci,
-    "vocab_psi_drift": q_vocab_psi_drift,
-    "order_backlog_timeseries": q_order_backlog_timeseries,
-    "percolator_alerts": q_percolator_alerts,
-    "char_entropy_by_source": q_char_entropy_by_source,
-    "abc_part_classes": q_abc_part_classes,
-    "hill_tail_index": q_hill_tail_index,
-    "lateness_histogram": q_lateness_histogram,
-    "media_ahash": q_media_ahash,
-    "ahash_dedup_eval": q_ahash_dedup_eval,
-    "graph_assortativity": q_graph_assortativity,
-    "boilerplate_shingles": q_boilerplate_shingles,
-    "phrase_search": q_phrase_search,
-    "bradley_terry_brands": q_bradley_terry_brands,
-    "poisson_bootstrap_mean": q_poisson_bootstrap_mean,
-    "conformal_length_bounds": q_conformal_length_bounds,
-    "selection_parity_audit": q_selection_parity_audit,
-    "kcore_parts": q_kcore_parts,
-    "acf_daily_revenue": q_acf_daily_revenue,
-    "ppmi_window_cooc": q_ppmi_window_cooc,
-    "rake_keywords": q_rake_keywords,
-    "greedy_cover_docs": q_greedy_cover_docs,
-    "label_prop_communities": q_label_prop_communities,
-    "kfold_balance_audit": q_kfold_balance_audit,
-    "time_decay_user_value": q_time_decay_user_value,
-    "negative_sampling_table": q_negative_sampling_table,
-    "mixture_interleave_schedule": q_mixture_interleave_schedule,
-    "burrows_delta_sources": q_burrows_delta_sources,
-    "revenue_drawdown": q_revenue_drawdown,
-    "spearman_lineitem": q_spearman_lineitem,
-    "huber_mean_price": q_huber_mean_price,
-    "js_divergence_sources": q_js_divergence_sources,
-    "kneser_ney_bigrams": q_kneser_ney_bigrams,
-    "gains_curve_purchases": q_gains_curve_purchases,
-    "propensity_strata_att": q_propensity_strata_att,
-    "wav_rms_energy": q_wav_rms_energy,
-    "sigma_band_days": q_sigma_band_days,
-    "cdc_chunk_stats": q_cdc_chunk_stats,
-    "pq_recall_eval": q_pq_recall_eval,
-    "seasonal_naive_backtest": q_seasonal_naive_backtest,
-    "l_diversity_audit": q_l_diversity_audit,
-    "hilbert_layout": q_hilbert_layout,
-    "shrunk_return_rates": q_shrunk_return_rates,
-    "pruning_skip_audit": q_pruning_skip_audit,
-    "chi2_keywords_by_source": q_chi2_keywords_by_source,
-    "t_closeness_audit": q_t_closeness_audit,
-    "simpsons_paradox_screen": q_simpsons_paradox_screen,
-    "lm_holdout_compare": q_lm_holdout_compare,
-    "neyman_allocation": q_neyman_allocation,
-    "ratio_metric_ci": q_ratio_metric_ci,
-    "fd_g3_errors": q_fd_g3_errors,
-    "hash_walk_visits": q_hash_walk_visits,
-    "markov_top1_accuracy": q_markov_top1_accuracy,
-    "brier_decomposition": q_brier_decomposition,
-    "mde_power_analysis": q_mde_power_analysis,
-    "median_regression_grid": q_median_regression_grid,
-    "eta_squared_factors": q_eta_squared_factors,
-    "mann_kendall_trend": q_mann_kendall_trend,
-    "runs_test_daily": q_runs_test_daily,
-    "ridge_lambda_cv": q_ridge_lambda_cv,
-    "shannon_code_lengths": q_shannon_code_lengths,
-    "hrw_shard_balance": q_hrw_shard_balance,
-    "apriori_triples": q_apriori_triples,
-    "hits_scores": q_hits_scores,
-    "ra_link_prediction": q_ra_link_prediction,
-    "cusum_monitor_daily": q_cusum_monitor_daily,
-    "target_encoding_oof": q_target_encoding_oof,
-    "dunning_llr_bigrams": q_dunning_llr_bigrams,
-    "mcnemar_compare": q_mcnemar_compare,
-    "chao1_distinct_estimate": q_chao1_distinct_estimate,
-    "capture_recapture_users": q_capture_recapture_users,
-    "gumbel_block_maxima": q_gumbel_block_maxima,
-    "good_turing_counts": q_good_turing_counts,
-    "utf8_health_audit": q_utf8_health_audit,
-    "nelson_aalen_hazard": q_nelson_aalen_hazard,
-    "cohort_ltv_curve": q_cohort_ltv_curve,
-    "hhi_concentration": q_hhi_concentration,
-    "odds_ratio_forest": q_odds_ratio_forest,
-    "cmh_pooled_odds": q_cmh_pooled_odds,
-    "pps_systematic_sample": q_pps_systematic_sample,
-    "price_index_years": q_price_index_years,
-    "kendall_tau_daily": q_kendall_tau_daily,
-    "bland_altman_tokens": q_bland_altman_tokens,
-    "sprt_conversion_monitor": q_sprt_conversion_monitor,
-    "youden_threshold": q_youden_threshold,
-    "elias_fano_audit": q_elias_fano_audit,
-    "fleiss_kappa_raters": q_fleiss_kappa_raters,
-    "randomization_test_diff": q_randomization_test_diff,
-    "jackknife_nation_mean": q_jackknife_nation_mean,
-    "fd_histogram_plan": q_fd_histogram_plan,
-    "grubbs_daily_outlier": q_grubbs_daily_outlier,
-    "newsvendor_quantile": q_newsvendor_quantile,
-    "cold_start_coverage": q_cold_start_coverage,
-    "revenue_bridge_yoy": q_revenue_bridge_yoy,
-    "dp_noise_plan": q_dp_noise_plan,
-    "littles_law_audit": q_littles_law_audit,
-    "bootstrap_median_days": q_bootstrap_median_days,
-    "hosmer_lemeshow": q_hosmer_lemeshow,
-    "cooks_distance_top": q_cooks_distance_top,
-    "cronbach_alpha": q_cronbach_alpha,
-    "item_rest_correlations": q_item_rest_correlations,
-    "inspection_paradox_audit": q_inspection_paradox_audit,
-    "birthday_collision_plan": q_birthday_collision_plan,
-    "flesch_by_source": q_flesch_by_source,
-    "simpson_diversity_sources": q_simpson_diversity_sources,
-    "item_item_cosine": q_item_item_cosine,
-}
-
-ORACLES: dict[str, str] = {
-    "route_topics": ORACLE_ROUTE_TOPICS,
-    "route_topics_salted": ORACLE_ROUTE_TOPICS,
-    "stats_counters": ORACLE_STATS_COUNTERS,
-    "doc_stats": ORACLE_DOC_STATS,
-    "lang_pred_counts": ORACLE_LANG_PRED,
-    "dedup_exact": ORACLE_DEDUP_EXACT,
-    "q18_big_orders": ORACLE_Q18,
-    "doc_fingerprints": ORACLE_DOC_FINGERPRINTS,
-    "minhash_signatures": ORACLE_MINHASH,
-    "ann_cosine_topk": ORACLE_ANN,
-    "embedding_dup_pairs": ORACLE_EMB_DUPS,
-    "simhash_fingerprints": _oracle_simhash(),
-    "simhash_near_pairs": _oracle_simhash_near_pairs(),
-    "lsh_planted_dups": ORACLE_LSH_PLANTED,
-    "jaccard_planted_dups": ORACLE_JACCARD_PLANTED,
-    "token_counts": ORACLE_TOKEN_COUNTS,
-    "quality_scores": ORACLE_QUALITY,
-    "pivot_event_counts": ORACLE_PIVOT,
-    "asof_purchase_orders": ORACLE_ASOF,
-    "asof_next_order": ORACLE_ASOF_FWD,
-    "asof_nearest_order": ORACLE_ASOF_NEAREST,
-    "sliding_window_rates": ORACLE_SLIDING,
-    "ivf_ann_topk": ORACLE_IVF,
-    "ivf_trained_topk": ORACLE_IVF_TRAINED,
-    "pq_ann_topk": ORACLE_PQ_ANN,
-    "zorder_layout": ORACLE_ZORDER,
-    "scd2_user_history": ORACLE_SCD2,
-    "domain_cap_docs": ORACLE_DOMAIN_CAP,
-    "supplier_pagerank": ORACLE_PAGERANK,
-    "histogram_quantiles": ORACLE_HISTOGRAM_Q,
-    "profile_lineitem": ORACLE_PROFILE,
-    "count_min_freq": ORACLE_COUNT_MIN,
-    "kmv_distinct_per_type": ORACLE_KMV_PER_TYPE,
-    "vocab_coverage": ORACLE_VOCAB,
-    "bpe_merges": ORACLE_BPE_MERGES,
-    "changelog_compact": ORACLE_CHANGELOG,
-    "media_resize_plan": ORACLE_RESIZE_PLAN,
-    "curriculum_stages": ORACLE_CURRICULUM,
-    "lang_rebalance": ORACLE_REBALANCE,
-    "supplier_triangles": ORACLE_TRIANGLES,
-    "prefix_jaccard_pairs": ORACLE_PREFIX_JACCARD,
-    "embedding_centroid_norms": ORACLE_CENTROID_NORMS,
-    "media_batch_stats": ORACLE_MEDIA,
-    "media_decoded_dims": ORACLE_MEDIA_DIMS,
-    "media_av_durations": ORACLE_MEDIA_AV,
-    "frame_extract_hashes": ORACLE_FRAME_EXTRACT,
-    "av_frame_plan": ORACLE_AV_FRAME_PLAN,
-    "frame_sample_plan": ORACLE_FRAME_PLAN,
-    "session_window_agg": ORACLE_SESSION_WINDOW,
-    "roundtrip_route_topics": ORACLE_ROUTE_TOPICS,
-    "props_json_stats": ORACLE_PROPS_JSON,
-    "range_frame_peers": ORACLE_RANGE_FRAME,
-    "train_val_test_split": ORACLE_SPLIT,
-    "quality_filter_funnel": ORACLE_FUNNEL,
-    "bm25_scores": ORACLE_BM25,
-    "char_trigram_topk": ORACLE_CHAR_TRIGRAMS,
-    "ewma_user_values": ORACLE_EWMA,
-    "bigram_topk": ORACLE_BIGRAM_TOPK,
-    "lang_confusion": ORACLE_LANG_CONFUSION,
-    "source_doc_profile": ORACLE_SOURCE_PROFILE,
-    "segment_listagg": ORACLE_SEGMENT_LISTAGG,
-    "unpivot_customer": ORACLE_UNPIVOT,
-    "embedding_hof_stats": ORACLE_EMB_HOF,
-    "percentile_quantities": ORACLE_PERCENTILES,
-    "order_linenumber_sets": ORACLE_LINENUMBER_SETS,
-    "token_positions": ORACLE_TOKEN_POSITIONS,
-    "rare_terms": ORACLE_RARE_TERMS,
-    "lsh_dup_components": ORACLE_DUP_COMPONENTS,
-    "dedup_corpus": ORACLE_DEDUP_CORPUS,
-    "pii_scrubbed": ORACLE_PII,
-    "repetition_scores": ORACLE_REPETITION,
-    "ngram_containment": ORACLE_CONTAINMENT,
-    "bloom_contamination": ORACLE_BLOOM,
-    "incremental_dedup": ORACLE_INCREMENTAL_DEDUP,
-    "edit_distance_pairs": ORACLE_EDIT_DISTANCE,
-    "doc_chunks": ORACLE_DOC_CHUNKS,
-    "resample_ffill": ORACLE_RESAMPLE,
-    "weighted_sample_docs": ORACLE_WEIGHTED_SAMPLE,
-    "unigram_logprob_scores": ORACLE_UNIGRAM,
-    "pack_sequences": ORACLE_PACK_SEQUENCES,
-    "stratified_sample": ORACLE_STRATIFIED,
-    "hash_fraction_docs": ORACLE_HASH_FRACTION,
-    "kmv_distinct_users": ORACLE_KMV,
-    "tfidf_top_terms": ORACLE_TFIDF,
-    "minhash_jaccard_estimate": ORACLE_MINHASH_EST,
-    "embedding_quantization_error": ORACLE_QUANT,
-    "knn_graph": ORACLE_KNN_GRAPH,
-    "semdedup_keep": ORACLE_SEMDEDUP,
-    "constraint_audit": ORACLE_AUDIT,
-    "dup_window_stats": ORACLE_DUP_WINDOWS,
-    "posting_lists": ORACLE_POSTINGS,
-    "conjunctive_search": ORACLE_CONJUNCTIVE,
-    "dedup_keep_best": ORACLE_KEEP_BEST,
-    "rrf_hybrid": ORACLE_RRF,
-    "mmr_diverse_topk": ORACLE_MMR,
-    "pca_top_component": ORACLE_PCA,
-    "bpe_encode": ORACLE_BPE_ENCODE,
-    "embedding_outliers": ORACLE_EMB_OUTLIERS,
-    "weekly_retention_cohorts": ORACLE_RETENTION,
-    "merge_upsert": ORACLE_MERGE,
-    "skew_report": ORACLE_SKEW,
-    "contrastive_pairs": ORACLE_CONTRASTIVE,
-    "quality_classifier_scores": ORACLE_QUALITY_CLF,
-    "corpus_datasheet": ORACLE_DATASHEET,
-    "curation_pipeline": ORACLE_CURATION,
-    "substring_dup_spans": ORACLE_SUBSTRING_SPANS,
-    "loglog_distinct_users": ORACLE_LOGLOG,
-    "part_name_matches": ORACLE_PART_MATCHES,
-    "trimmed_event_stats": ORACLE_TRIMMED,
-    "user_activity_similarity": ORACLE_USER_SIM,
-    "daily_distinct_estimates": ORACLE_DAILY_LL,
-    "boilerplate_topk": ORACLE_BOILERPLATE,
-    "hourly_seasonality": ORACLE_SEASONALITY,
-    "corpus_manifest": ORACLE_MANIFEST,
-    "dsir_log_weights": ORACLE_DSIR,
-    "shuffle_shards": ORACLE_SHUFFLE_SHARDS,
-    "lang_entropy_by_source": ORACLE_LANG_ENTROPY,
-    "tokenizer_fertility": ORACLE_FERTILITY,
-    "robust_outlier_events": ORACLE_ROBUST_OUTLIERS,
-    "benchmark_decontam": ORACLE_DECONTAM,
-    "snapshot_asof": ORACLE_SNAPSHOT_ASOF,
-    "quality_percentile_by_source": ORACLE_QUALITY_PCT,
-    "psi_value_drift": ORACLE_PSI,
-    "pareto_frontier_docs": ORACLE_PARETO,
-    "classifier_auc": ORACLE_AUC,
-    "kmv_vocab_overlap": ORACLE_KMV_VOCAB,
-    "snapshot_diff": ORACLE_SNAPSHOT_DIFF,
-    "benford_price_audit": ORACLE_BENFORD,
-    "emb_truncation_recall": ORACLE_TRUNC_RECALL,
-    "calibration_curve": ORACLE_CALIBRATION,
-    "peak_concurrency": ORACLE_PEAK_CONCURRENCY,
-    "exact_median_price": ORACLE_EXACT_MEDIAN,
-    "markov_transitions": ORACLE_MARKOV,
-    "theil_sen_trend": ORACLE_THEIL_SEN,
-    "lead_lag_correlation": ORACLE_LEAD_LAG,
-    "gini_spend_by_segment": ORACLE_GINI,
-    "lorenz_deciles": ORACLE_LORENZ,
-    "dup_cluster_sizes": ORACLE_DUP_CLUSTER_SIZES,
-    "bounded_funnel": ORACLE_BOUNDED_FUNNEL,
-    "embedding_separability": ORACLE_SEPARABILITY,
-    "top_parts_with_ties": ORACLE_TOP_TIES,
-    "burstiness_fano": ORACLE_FANO,
-    "order_gap_median": ORACLE_ORDER_GAP,
-    "session_bounce_rate": ORACLE_BOUNCE,
-    "pmi_bigrams": ORACLE_PMI,
-    "bigram_lm_scores": ORACLE_BIGRAM_LM,
-    "winnow_fingerprints": ORACLE_WINNOW,
-    "gram_novelty": ORACLE_GRAM_NOVELTY,
-    "winnow_dup_pairs": ORACLE_WINNOW_PAIRS,
-    "gopher_quality_flags": ORACLE_GOPHER,
-    "heaps_vocab_growth": ORACLE_HEAPS,
-    "feature_hashing": ORACLE_FEATURE_HASH,
-    "rfm_segments": ORACLE_RFM,
-    "changepoint_daily": ORACLE_CHANGEPOINT,
-    "span_corruption_plan": ORACLE_SPAN_PLAN,
-    "jl_distortion_pairs": ORACLE_JL,
-    "ngram_diversity": ORACLE_NGRAM_DIVERSITY,
-    "token_budget_waterfill": ORACLE_WATERFILL,
-    "seasonal_decompose_daily": ORACLE_SEASONAL_DECOMP,
-    "zipf_slope_by_source": ORACLE_ZIPF,
-    "ab_test_zscores": ORACLE_AB_TEST,
-    "basket_lift_pairs": ORACLE_BASKET_LIFT,
-    "lsh_recall_eval": ORACLE_LSH_RECALL,
-    "ks_grid_drift": ORACLE_KS_GRID,
-    "mutual_info_cells": ORACLE_MUTUAL_INFO,
-    "classifier_kappa": ORACLE_KAPPA,
-    "twap_user_value": ORACLE_TWAP,
-    "png_pixel_stats": ORACLE_PNG_PIXELS,
-    "split_leakage_audit": ORACLE_SPLIT_LEAKAGE,
-    "markov_entropy_rate": ORACLE_MARKOV_ENTROPY,
-    "lineitem_corr_matrix": ORACLE_CORR_MATRIX,
-    "hll_error_audit": ORACLE_HLL_ERROR,
-    "label_silhouette": ORACLE_SILHOUETTE,
-    "last_touch_attribution": ORACLE_ATTRIBUTION,
-    "session_path_trigrams": ORACLE_PATH_TRIGRAMS,
-    "quality_length_confound": ORACLE_LEN_CONFOUND,
-    "norm_quantile_ranks": ORACLE_NORM_QUANTILES,
-    "conversion_latency_buckets": ORACLE_CONVERSION_LATENCY,
-    "km_survival_daily": ORACLE_KM_SURVIVAL,
-    "cross_source_dup_matrix": ORACLE_CROSS_SOURCE_DUPS,
-    "embedding_dim_stats": ORACLE_EMB_DIM_STATS,
-    "k_anonymity_audit": ORACLE_K_ANONYMITY,
-    "gini_stump_split": ORACLE_GINI_STUMP,
-    "ndcg_retrieval_eval": ORACLE_NDCG,
-    "loo_source_influence": ORACLE_LOO_SOURCE,
-    "activity_transition_matrix": ORACLE_ACTIVITY_TRANSITION,
-    "did_estimate": ORACLE_DID,
-    "conversion_wilson_ci": ORACLE_WILSON,
-    "vocab_psi_drift": ORACLE_VOCAB_PSI,
-    "order_backlog_timeseries": ORACLE_BACKLOG,
-    "percolator_alerts": ORACLE_PERCOLATOR,
-    "char_entropy_by_source": ORACLE_CHAR_ENTROPY,
-    "abc_part_classes": ORACLE_ABC,
-    "hill_tail_index": ORACLE_HILL,
-    "lateness_histogram": ORACLE_LATENESS,
-    "media_ahash": ORACLE_MEDIA_AHASH,
-    "ahash_dedup_eval": ORACLE_AHASH_DEDUP,
-    "graph_assortativity": ORACLE_ASSORTATIVITY,
-    "boilerplate_shingles": ORACLE_BOILERPLATE_SHINGLES,
-    "phrase_search": ORACLE_PHRASE_SEARCH,
-    "bradley_terry_brands": ORACLE_BRADLEY_TERRY,
-    "poisson_bootstrap_mean": ORACLE_POISSON_BOOTSTRAP,
-    "conformal_length_bounds": ORACLE_CONFORMAL,
-    "selection_parity_audit": ORACLE_SELECTION_PARITY,
-    "kcore_parts": ORACLE_KCORE,
-    "acf_daily_revenue": ORACLE_ACF,
-    "ppmi_window_cooc": ORACLE_PPMI_COOC,
-    "rake_keywords": ORACLE_RAKE,
-    "greedy_cover_docs": ORACLE_GREEDY_COVER,
-    "label_prop_communities": ORACLE_LABEL_PROP,
-    "kfold_balance_audit": ORACLE_KFOLD,
-    "time_decay_user_value": ORACLE_TIME_DECAY,
-    "negative_sampling_table": ORACLE_NEG_SAMPLING,
-    "mixture_interleave_schedule": ORACLE_MIXTURE_INTERLEAVE,
-    "burrows_delta_sources": ORACLE_BURROWS_DELTA,
-    "revenue_drawdown": ORACLE_REVENUE_DRAWDOWN,
-    "spearman_lineitem": ORACLE_SPEARMAN,
-    "huber_mean_price": ORACLE_HUBER,
-    "js_divergence_sources": ORACLE_JS_DIVERGENCE,
-    "kneser_ney_bigrams": ORACLE_KNESER_NEY,
-    "gains_curve_purchases": ORACLE_GAINS_CURVE,
-    "propensity_strata_att": ORACLE_PROPENSITY_ATT,
-    "wav_rms_energy": ORACLE_WAV_RMS,
-    "sigma_band_days": ORACLE_SIGMA_BANDS,
-    "cdc_chunk_stats": ORACLE_CDC_CHUNKS,
-    "pq_recall_eval": ORACLE_PQ_RECALL,
-    "seasonal_naive_backtest": ORACLE_SEASONAL_NAIVE,
-    "l_diversity_audit": ORACLE_L_DIVERSITY,
-    "hilbert_layout": ORACLE_HILBERT,
-    "shrunk_return_rates": ORACLE_SHRUNK_RATES,
-    "pruning_skip_audit": ORACLE_PRUNING_AUDIT,
-    "chi2_keywords_by_source": ORACLE_CHI2_KEYWORDS,
-    "t_closeness_audit": ORACLE_T_CLOSENESS,
-    "simpsons_paradox_screen": ORACLE_SIMPSONS,
-    "lm_holdout_compare": ORACLE_LM_HOLDOUT,
-    "neyman_allocation": ORACLE_NEYMAN,
-    "ratio_metric_ci": ORACLE_RATIO_CI,
-    "fd_g3_errors": ORACLE_FD_G3,
-    "hash_walk_visits": ORACLE_HASH_WALK,
-    "markov_top1_accuracy": ORACLE_MARKOV_TOP1,
-    "brier_decomposition": ORACLE_BRIER,
-    "mde_power_analysis": ORACLE_MDE,
-    "median_regression_grid": ORACLE_MEDIAN_REGRESSION,
-    "eta_squared_factors": ORACLE_ETA_SQUARED,
-    "mann_kendall_trend": ORACLE_MANN_KENDALL,
-    "runs_test_daily": ORACLE_RUNS_TEST,
-    "ridge_lambda_cv": ORACLE_RIDGE_CV,
-    "shannon_code_lengths": ORACLE_SHANNON_CODE,
-    "hrw_shard_balance": ORACLE_HRW_BALANCE,
-    "apriori_triples": ORACLE_APRIORI_TRIPLES,
-    "hits_scores": ORACLE_HITS,
-    "ra_link_prediction": ORACLE_RA_LINKS,
-    "cusum_monitor_daily": ORACLE_CUSUM_MONITOR,
-    "target_encoding_oof": ORACLE_TARGET_ENCODING,
-    "dunning_llr_bigrams": ORACLE_DUNNING,
-    "mcnemar_compare": ORACLE_MCNEMAR,
-    "chao1_distinct_estimate": ORACLE_CHAO1,
-    "capture_recapture_users": ORACLE_CAPTURE_RECAPTURE,
-    "gumbel_block_maxima": ORACLE_GUMBEL,
-    "good_turing_counts": ORACLE_GOOD_TURING,
-    "utf8_health_audit": ORACLE_UTF8_HEALTH,
-    "nelson_aalen_hazard": ORACLE_NELSON_AALEN,
-    "cohort_ltv_curve": ORACLE_COHORT_LTV,
-    "hhi_concentration": ORACLE_HHI,
-    "odds_ratio_forest": ORACLE_OR_FOREST,
-    "cmh_pooled_odds": ORACLE_CMH,
-    "pps_systematic_sample": ORACLE_PPS_SAMPLE,
-    "price_index_years": ORACLE_PRICE_INDEX,
-    "kendall_tau_daily": ORACLE_KENDALL_TAU,
-    "bland_altman_tokens": ORACLE_BLAND_ALTMAN,
-    "sprt_conversion_monitor": ORACLE_SPRT,
-    "youden_threshold": ORACLE_YOUDEN,
-    "elias_fano_audit": ORACLE_ELIAS_FANO,
-    "fleiss_kappa_raters": ORACLE_FLEISS,
-    "randomization_test_diff": ORACLE_RANDOMIZATION,
-    "jackknife_nation_mean": ORACLE_JACKKNIFE,
-    "fd_histogram_plan": ORACLE_FD_PLAN,
-    "grubbs_daily_outlier": ORACLE_GRUBBS,
-    "newsvendor_quantile": ORACLE_NEWSVENDOR,
-    "cold_start_coverage": ORACLE_COLD_START,
-    "revenue_bridge_yoy": ORACLE_REVENUE_BRIDGE,
-    "dp_noise_plan": ORACLE_DP_PLAN,
-    "littles_law_audit": ORACLE_LITTLES_LAW,
-    "bootstrap_median_days": ORACLE_BOOTSTRAP_MEDIAN,
-    "hosmer_lemeshow": ORACLE_HOSMER,
-    "cooks_distance_top": ORACLE_COOKS,
-    "cronbach_alpha": ORACLE_CRONBACH,
-    "item_rest_correlations": ORACLE_ITEM_REST,
-    "inspection_paradox_audit": ORACLE_INSPECTION,
-    "birthday_collision_plan": ORACLE_BIRTHDAY,
-    "flesch_by_source": ORACLE_FLESCH,
-    "simpson_diversity_sources": ORACLE_SIMPSON,
-    "item_item_cosine": ORACLE_ITEM_COSINE,
-}
-
-
-def _shared_query(sql: str) -> Callable[[SparkSession, str], DataFrame]:
-    # memoized per (session, sf_dir, sql): spark.sql() analyzes eagerly,
-    # so the memoized DataFrame is already resolved against THIS sf_dir's
-    # temp views — re-registering views for another sf_dir later cannot
-    # retarget it (same guarantee the alternating-sf M1 test pins). The
-    # cached object is an unexecuted plan; every action re-scans parquet.
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        key = (spark.sparkContext.applicationId, sf_dir, sql)
-        df = _PLAN_MEMO.get(key)
-        if df is None:
-            _register_views(spark, sf_dir)
-            df = spark.sql(sql)
-            _memo_put(_PLAN_MEMO, key, df)
-        return df
-
-    return run
+def oracle_sql() -> dict[str, str]:
+    return {name: sql for name, (_, sql) in REGISTRY.items()}
 
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: the reference's routing pipeline over the sf0.001 event
     stream, aggregated per destination topic."""
-    return q_route_topics(spark, "/root/testdata/sf0.001")
-
-
-# Queries allowed to ship WITHOUT a DuckDB oracle (driver then applies
-# only the weak rows-only check). Every name here needs a comment saying
-# why ANSI SQL can't replay it; tests/test_registry_guard.py rejects any
-# rows-only query not listed, and any listed name that has an oracle.
-ROWS_ONLY_ALLOWED: frozenset[str] = frozenset()
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    out: dict[str, Callable[[SparkSession, str], DataFrame]] = dict(QUERIES)
-    for name, sql in SHARED_SQL.items():
-        out[name] = _shared_query(sql)
-    return out
-
-
-def oracle_sql() -> dict[str, str]:
-    out = dict(ORACLES)
-    out.update(SHARED_SQL)
-    return out
+    return REGISTRY["route_topics"][0](spark, "/root/testdata/sf0.001")

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
 from kafka_firehose_nozzle_spark.session import get_spark
+from queries._base import _parquet_nrows, _t
 
 # headline set: routing parity + heavy joins/aggs + dedup/similarity/text
 BENCH_QUERIES = [
@@ -357,14 +358,14 @@ def _wide_ann_bench_isolated() -> dict:
     not a code change: the r11 code in a clean subprocess reads
     expr 0.886 / blas 0.879, inside the r10 band. One subprocess per
     family keeps every timed section in a JVM that only ever compiled
-    its own family's code, and a run that had to fall back in-session
-    now SAYS so (ann_dim256_isolated: false) instead of publishing a
-    polluted number as if it were clean."""
+    its own family's code. There is no in-session fallback: a family
+    whose subprocess fails publishes no timing, only
+    ``ann_dim256_<family>_isolated: false`` and the subprocess's last
+    stderr line in ``ann_dim256_<family>_error``."""
     import subprocess
 
     here = os.path.dirname(os.path.abspath(__file__))
     out: dict = {}
-    fallback = False
     for fam in ("cosine", "pq"):
         code = (
             "import sys, json; sys.path.insert(0, %r); "
@@ -373,7 +374,6 @@ def _wide_ann_bench_isolated() -> dict:
             "print('WIDEANN ' + json.dumps(bench._wide_ann_%s_bench("
             "get_spark('kfn-bench-ann-%s'))))" % (here, fam, fam)
         )
-        got = None
         try:
             res = subprocess.run(
                 [sys.executable, "-c", code],
@@ -382,21 +382,19 @@ def _wide_ann_bench_isolated() -> dict:
                 timeout=900,
                 cwd=here,
             )
-            for line in res.stdout.splitlines():
-                if line.startswith("WIDEANN "):
-                    got = json.loads(line[len("WIDEANN "):])
-        except Exception:
-            got = None
-        if got is None:
-            # never lose the metric — but FLAG the polluted conditions
-            from kafka_firehose_nozzle_spark.session import get_spark
-
-            fn = _wide_ann_cosine_bench if fam == "cosine" else _wide_ann_pq_bench
-            got = fn(get_spark("kfn-bench"))
-            fallback = True
-        out.update(got)
-    if fallback:
-        out["ann_dim256_isolated"] = False
+        except subprocess.TimeoutExpired:
+            out[f"ann_dim256_{fam}_isolated"] = False
+            out[f"ann_dim256_{fam}_error"] = "timed out after 900 s"
+            continue
+        lines = [
+            line for line in res.stdout.splitlines() if line.startswith("WIDEANN ")
+        ]
+        if lines:
+            out.update(json.loads(lines[-1][len("WIDEANN "):]))
+        else:
+            err = res.stderr.strip().splitlines() or [f"exit {res.returncode}"]
+            out[f"ann_dim256_{fam}_isolated"] = False
+            out[f"ann_dim256_{fam}_error"] = err[-1]
     return out
 
 
@@ -469,16 +467,6 @@ def _wide_ann_pq_bench(spark, n: int = 100_000, dim: int = 256) -> dict:
     }
 
 
-def _wide_ann_bench(spark, n: int = 100_000, dim: int = 256) -> dict:
-    """In-session combination of both families — kept as the never-lose-
-    the-metric fallback path and for manual use; the isolated runner
-    above is what the bench publishes."""
-    return {
-        **_wide_ann_cosine_bench(spark, n, dim),
-        **_wide_ann_pq_bench(spark, n, dim),
-    }
-
-
 def _lsh_pair_scoring_bench(spark, sf_dir: str) -> dict:
     """ALL-pairs scoring inside sign-LSH buckets, expr fold vs
     bucket-batched GEMM (applyInPandas): the gemm path ships vectors
@@ -487,8 +475,8 @@ def _lsh_pair_scoring_bench(spark, sf_dir: str) -> dict:
     tests/test_operators.py::test_lsh_pairs_gemm_matches_expr."""
     from kafka_firehose_nozzle_spark.operators import dedup as D
 
-    emb = entrymod._t(spark, sf_dir, "embeddings")
-    n = entrymod._parquet_nrows(f"{sf_dir}/embeddings.parquet")
+    emb = _t(spark, sf_dir, "embeddings")
+    n = _parquet_nrows(f"{sf_dir}/embeddings.parquet")
     out = {}
     for impl in ("expr", "gemm"):
         best = float("inf")

@@ -6,7 +6,7 @@ module is that front door: one call registers every known table of an
 sf directory as a temporary view (names match the DuckDB oracle's —
 ``region nation customer supplier part orders lineitem events
 documents embeddings``), so any ANSI query — including the oracle SQL
-strings in ``__spark_entry__`` — runs directly via ``spark.sql(...)``.
+strings in ``queries.relational`` — runs directly via ``spark.sql(...)``.
 
 Views are metadata only: registering ten tables costs ten parquet
 footer reads, no data scan; Catalyst still pushes filters/prunes

@@ -25,7 +25,7 @@ decimal-string rounding — irrelevant here: the contract is
 formula (``det_round_sql`` is the oracle-side twin).
 
 For averages of integer or exact-decimal sums, prefer exact integer
-micro-units (``__spark_entry__._avg_micro_expr``) — no double is even
+micro-units (``queries._base._avg_micro_expr``) — no double is even
 produced until the final exact int->double cast.  det_round is for
 values that are irreducibly double (cosines, log-probabilities,
 ratios) but bit-identical across engines by construction.

@@ -480,7 +480,7 @@ def kmeans_centroids(
     its ``init`` modes) and every component average is an exact decimal
     sum, so training is bit-reproducible run-to-run and — with
     ``init="mod"`` — replayable by a plain-SQL oracle (the 4-iteration
-    unrolled CTE in ``__spark_entry__.ORACLE_IVF_TRAINED``). Returns
+    unrolled CTE in ``queries.similarity.ORACLE_IVF_TRAINED``). Returns
     [cell_id, centroid] compatible with ivf_assign/ivf_topk.
 
     ``mode`` gates the assignment's physical form exactly like

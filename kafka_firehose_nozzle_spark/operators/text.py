@@ -355,7 +355,7 @@ def bpe_learn_merges(
     replace-chain lineage flat; at production scale each round would
     persist to the lake instead.  Fully deterministic (count-desc,
     pair-asc tie break): a plain-SQL oracle replays the whole training
-    run (__spark_entry__.ORACLE_BPE_MERGES)."""
+    run (queries.text.ORACLE_BPE_MERGES)."""
     spark = df.sparkSession
     # Fan the spaced corpus ONCE before the rounds and checkpoint it:
     # every round's pair explode + replace is dense per-char work

@@ -9,6 +9,8 @@ operators ARE that downstream, Spark-first:
   CounterEvent deltas via ``applyInPandasWithState``. State is one row of
   (total, n_deltas) per key — O(distinct counters), not O(events); each
   micro-batch emits the updated totals for keys seen in that batch.
+  (Spark 4's ``transformWithStateInPandas`` is not used: its driver
+  worker needs ``google.protobuf``.)
 - ``windowed_event_rates``: watermarked tumbling-window counts per event
   type — the distributed, event-time upgrade of the reference's 1-second
   processing-time rate (stats.go:98-111).
@@ -67,25 +69,21 @@ def counter_deltas(envelopes: DataFrame) -> DataFrame:
     )
 
 
-def _fold_counter_batches(
-    total: int, n: int, pdfs: Iterator["pd.DataFrame"]
-) -> tuple:
-    """THE per-key fold both stateful APIs share: add each batch's delta
-    sum (nulls count as 0 — a CounterEvent with no delta moves nothing)
-    and row count onto the carried (total, n). Kept as one function so
-    applyInPandasWithState and transformWithStateInPandas cannot drift
-    semantically (VERDICT r6 item 7)."""
+def _accumulate(
+    key: tuple,
+    pdfs: Iterator["pd.DataFrame"],
+    state: GroupState,
+) -> Iterator["pd.DataFrame"]:
+    import pandas as pd
+
+    total, n = state.get if state.exists else (0, 0)
+    total, n = int(total), int(n)
+    # nulls count as 0 — a CounterEvent with no delta moves nothing
     for pdf in pdfs:
         total += int(pdf["delta"].fillna(0).sum())
         n += len(pdf)
-    return total, n
-
-
-def _totals_row(key: tuple, total: int, n: int) -> "pd.DataFrame":
-    """One post-batch output row per key — shared by both API paths."""
-    import pandas as pd
-
-    return pd.DataFrame(
+    state.update((total, n))
+    yield pd.DataFrame(
         {
             "origin": [key[0]],
             "name": [key[1]],
@@ -93,17 +91,6 @@ def _totals_row(key: tuple, total: int, n: int) -> "pd.DataFrame":
             "n_deltas": [n],
         }
     )
-
-
-def _accumulate(
-    key: tuple,
-    pdfs: Iterator["pd.DataFrame"],
-    state: GroupState,
-) -> Iterator["pd.DataFrame"]:
-    total, n = state.get if state.exists else (0, 0)
-    total, n = _fold_counter_batches(int(total), int(n), pdfs)
-    state.update((total, n))
-    yield _totals_row(key, total, n)
 
 
 def counter_running_totals(envelopes: DataFrame) -> DataFrame:
@@ -254,58 +241,6 @@ def dedup_envelopes(
     else:
         deduped = with_ts.dropDuplicates(keys)
     return deduped.drop("event_time")
-
-
-from pyspark.sql.streaming.stateful_processor import (  # noqa: E402
-    StatefulProcessor as _StatefulProcessor,
-)
-
-
-class _CounterTotalsProcessor(_StatefulProcessor):
-    """transformWithState processor: per-(origin, name) running totals.
-
-    Spark 4's arbitrary-state API (the successor of
-    applyInPandasWithState): typed ValueState per key, Arrow-batched
-    input, update-mode emission of the post-batch totals. The fold itself
-    is the shared ``_fold_counter_batches`` — this class only adapts the
-    state API, so the two paths cannot diverge semantically."""
-
-    def init(self, handle) -> None:
-        self._state = handle.getValueState("totals", "total LONG, n LONG")
-
-    def handleInputRows(self, key, rows, timer_values):
-        total, n = 0, 0
-        if self._state.exists():
-            prev = self._state.get()
-            total, n = int(prev[0]), int(prev[1])
-        total, n = _fold_counter_batches(total, n, rows)
-        self._state.update((total, n))
-        yield _totals_row(key, total, n)
-
-    def handleExpiredTimer(self, key, timer_values, expired_timer_info):
-        return iter(())
-
-    def handleInitialState(self, key, initial_state, timer_values) -> None:
-        pass
-
-    def close(self) -> None:
-        pass
-
-
-def counter_running_totals_tws(envelopes: DataFrame) -> DataFrame:
-    """counter_running_totals on the transformWithStateInPandas API —
-    identical output contract, Spark-4-native state management (TTL,
-    timers, and multiple typed state variables become available)."""
-    return (
-        counter_deltas(envelopes)
-        .groupBy("origin", "name")
-        .transformWithStateInPandas(
-            _CounterTotalsProcessor(),
-            outputStructType=COUNTER_TOTALS_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
-    )
 
 
 ANOMALY_SCHEMA = T.StructType(

@@ -1255,11 +1255,11 @@ def test_pca_top_component_matches_numpy(spark):
 
 
 def test_lsh_pairs_gemm_matches_expr(spark):
-    import __spark_entry__ as e
+    from queries._base import _parquet_nrows, _t
 
     sf = "/root/testdata/sf0.01"
-    emb = e._t(spark, sf, "embeddings")
-    n = e._parquet_nrows(f"{sf}/embeddings.parquet")
+    emb = _t(spark, sf, "embeddings")
+    n = _parquet_nrows(f"{sf}/embeddings.parquet")
     a = {
         (r.id_a, r.id_b): r.cos_sim
         for r in D.embedding_lsh_dup_pairs(emb, threshold=0.2, n=n).collect()
@@ -1457,10 +1457,10 @@ def test_rrf_fuse_reference_model(spark):
 
 
 def test_semdedup_gemm_matches_expr(spark):
-    import __spark_entry__ as e
+    from queries._base import _t
 
     sf = "/root/testdata/sf0.01"
-    emb = e._t(spark, sf, "embeddings")
+    emb = _t(spark, sf, "embeddings")
     cents = S.medoid_centroids(emb, 8)
     a = {r["vec_id"] for r in S.semantic_dedup_keep(emb, cents, 0.35).collect()}
     gemm = S.semantic_dedup_keep(emb, cents, 0.35, impl="gemm")
@@ -1578,7 +1578,7 @@ def test_blocked_name_pairs_rarest_token_blocking(spark):
 def test_trimmed_mean_robust_to_outliers(spark, tmp_path):
     """The 5% trim must remove planted extreme outliers: 100 values of
     10.0 plus 5 values of 1e6 -> trimmed mean stays 10.0."""
-    import __spark_entry__ as mod
+    from queries.relational import q_trimmed_event_stats
 
     rows = [(i, "2024-01-01 00:00:00", i, "buy", 10.0, "{}")
             for i in range(100)]
@@ -1593,7 +1593,7 @@ def test_trimmed_mean_robust_to_outliers(spark, tmp_path):
     ).withColumn("ts", F_ts()).write.mode("overwrite").parquet(
         os.path.join(d, "events.parquet")
     )
-    out = mod.q_trimmed_event_stats(spark, d).collect()
+    out = q_trimmed_event_stats(spark, d).collect()
     assert len(out) == 1
     assert out[0]["trimmed_mean"] == 10.0
     assert out[0]["n_kept"] == 105 - 2 * (105 // 20)
@@ -1643,7 +1643,7 @@ def test_avg_micro_expr_matches_fraction_reference(spark):
     import random
     from fractions import Fraction
 
-    import __spark_entry__ as entry
+    from queries._base import _avg_micro_expr
 
     rng = random.Random(4242)
     # stay inside the expression's documented int64-safe domain:
@@ -1657,7 +1657,7 @@ def test_avg_micro_expr_matches_fraction_reference(spark):
     got = {
         (r["s"], r["n"]): r["m"]
         for r in df.select(
-            "s", "n", entry._avg_micro_expr("s", "n").alias("m")
+            "s", "n", _avg_micro_expr("s", "n").alias("m")
         ).collect()
     }
     for s, n in cases:
@@ -2235,13 +2235,15 @@ def test_kcore_converges_within_round_budget(spark):
     import __spark_entry__ as entry
     from pyspark.sql import functions as F
 
+    from queries.graph import _KCORE_K
+
     core = entry.queries()["kcore_parts"](
         spark, "/root/testdata/sf0.001"
     )
     # every surviving vertex already has degree >= k, so a further
     # peel is a no-op exactly when min(core_degree) >= k
     mind = core.agg(F.min("core_degree").alias("m")).head()["m"]
-    assert mind is None or mind >= entry._KCORE_K
+    assert mind is None or mind >= _KCORE_K
 
 
 def test_avi_build_parse_roundtrip_and_quarantine():
@@ -2343,10 +2345,10 @@ def test_lsh_star_edges_same_components_as_clique(spark):
     clique, O(c^2) edges) — the equivalence that licenses the sf10
     giant-bucket fix. Checked on the real sf0.001 corpus + planted
     mutations."""
-    import __spark_entry__ as entry
     from kafka_firehose_nozzle_spark.operators import dedup as D
+    from queries.dedup import _planted_docs
 
-    docs2 = entry._planted_docs(spark, "/root/testdata/sf0.001")
+    docs2 = _planted_docs(spark, "/root/testdata/sf0.001")
     clique = {
         (r["doc_id"], r["component_id"])
         for r in D.dup_components(
@@ -2367,10 +2369,10 @@ def test_lsh_candidate_pairs_bucket_cap(spark):
     100 TB stop-shingle valve): uncapped output is a superset of capped
     output, a generous cap is a no-op, and a cap of 1 kills every pair
     (every pair needs a bucket of >= 2)."""
-    import __spark_entry__ as entry
     from kafka_firehose_nozzle_spark.operators import dedup as D
+    from queries.dedup import _planted_docs
 
-    docs2 = entry._planted_docs(spark, "/root/testdata/sf0.001")
+    docs2 = _planted_docs(spark, "/root/testdata/sf0.001")
     full = {
         (r["id_a"], r["id_b"])
         for r in D.lsh_candidate_pairs(docs2).collect()

@@ -34,6 +34,7 @@ import pytest
 sys.path.insert(0, "/root/repo")
 
 import __spark_entry__ as entrymod
+from queries._base import TABLES
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -59,7 +60,7 @@ STRINGIFIED_FLOAT_AGG = re.compile(
 @pytest.fixture(scope="module")
 def con():
     c = duckdb.connect()
-    for t in entrymod.TABLES:
+    for t in TABLES:
         c.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'"
         )

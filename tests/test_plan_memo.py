@@ -1,13 +1,18 @@
-"""The r11 wave-2 plan memo (_PLAN_MEMO / _pure_plan) caches
-CONSTRUCTION only: the memoized object must be an unexecuted plan keyed
-by (session, sf_dir), so alternating scale factors inside one session
-returns each sf_dir's own data, and repeated calls return the identical
-plan object (the optimization's whole point — zero rebuild cost).
+"""The plan memo (``queries._base.memo``, behind ``_t`` and
+``_pure_plan``) caches CONSTRUCTION only: the memoized object must be an
+unexecuted plan keyed by (session, sf_dir), so alternating scale factors
+inside one session returns each sf_dir's own data, and repeated calls
+return the identical plan object (the optimization's whole point — zero
+rebuild cost).
 """
 
 from __future__ import annotations
 
+import types
+
 import __spark_entry__ as entrymod
+from queries import _base
+from queries.dedup import _build_planted_docs, _planted_component_edges
 
 SF_A = "/root/testdata/sf0.001"
 SF_B = "/root/testdata/sf0.01"
@@ -58,40 +63,49 @@ def test_planted_edges_memo_consistency(spark):
     from kafka_firehose_nozzle_spark.operators import dedup as D
 
     fresh = D.lsh_component_edges(
-        entrymod._build_planted_docs(spark, SF_A),
+        _build_planted_docs(spark, SF_A),
         num_hashes=8,
         num_bands=4,
         dedup_edges=False,
     )
-    memod = entrymod._planted_component_edges(spark, SF_A)
+    memod = _planted_component_edges(spark, SF_A)
     assert _rows(fresh) == _rows(memod)
 
 
-def test_memo_growth_bounded_and_dead_sessions_evicted_first():
-    """VERDICT r11 item 7: the construction memos must not grow without
+def _session(app_id: str):
+    return types.SimpleNamespace(
+        sparkContext=types.SimpleNamespace(applicationId=app_id)
+    )
+
+
+def test_memo_growth_bounded_and_dead_sessions_evicted_first(monkeypatch):
+    """VERDICT r11 item 7: the construction memo must not grow without
     bound across many sf_dirs in one long-lived session, and entries
     from other (dead) applicationIds must be evicted before the live
     session loses anything."""
     memo: dict = {}
-    cap = entrymod._MEMO_CAP
+    monkeypatch.setattr(_base, "_MEMO", memo)
+    cap = _base._MEMO_CAP
+    dead, live = _session("dead-app"), _session("live-app")
     # fill with a dead session's keys up to the cap
     for i in range(cap):
-        entrymod._memo_put(memo, ("dead-app", f"sf{i}", "t"), i)
+        _base.memo(dead, (f"sf{i}", "t"), lambda: i)
     assert len(memo) == cap
     # a live session's insert evicts ONLY the dead session's entries
-    entrymod._memo_put(memo, ("live-app", "sfX", "t"), "x")
+    _base.memo(live, ("sfX", "t"), lambda: "x")
     assert memo == {("live-app", "sfX", "t"): "x"}
     # a single session exceeding the cap clears rather than grows
     for i in range(cap + 10):
-        entrymod._memo_put(memo, ("live-app", f"sf{i}", "t"), i)
+        _base.memo(live, (f"sf{i}", "t"), lambda: i)
     assert len(memo) <= cap
 
 
-def test_memo_put_used_by_table_memo(spark):
-    """_t routes through the bounded put (no raw unbounded insert)."""
-    before = len(entrymod._TABLE_MEMO)
-    entrymod._t(spark, SF_A, "region")
-    entrymod._t(spark, SF_A, "region")  # hit, no growth
-    after = len(entrymod._TABLE_MEMO)
+def test_table_reads_go_through_bounded_memo(spark):
+    """_t routes through the bounded memo (no raw unbounded insert)."""
+    before = len(_base._MEMO)
+    _base._t(spark, SF_A, "region")
+    _base._t(spark, SF_A, "region")  # hit, no growth
+    after = len(_base._MEMO)
     assert after <= before + 1
-    assert after <= entrymod._MEMO_CAP
+    assert after <= _base._MEMO_CAP
+    assert (spark.sparkContext.applicationId, "_t", SF_A, "region") in _base._MEMO

@@ -7,6 +7,7 @@ dims stay under the broadcast threshold at every SF we test.)"""
 import pytest
 
 import __spark_entry__ as entry
+from queries._base import _t
 
 SF = "/root/testdata/sf0.001"
 
@@ -1011,10 +1012,10 @@ def test_bradley_terry_duels_equi_self_join(spark):
     from kafka_firehose_nozzle_spark.operators import ranking as RK
     from pyspark.sql import functions as F
 
-    li = entry._t(spark, SF, "lineitem").select(
+    li = _t(spark, SF, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_partkey", "l_quantity"
     )
-    part = entry._t(spark, SF, "part").select("p_partkey", "p_brand")
+    part = _t(spark, SF, "part").select("p_partkey", "p_brand")
     lb = li.join(
         F.broadcast(part), F.col("l_partkey") == F.col("p_partkey")
     ).select(
@@ -1534,10 +1535,10 @@ def test_lsh_component_edges_no_self_join(spark):
     """The component edge build must be the window-min star (one bucket
     shuffle + sort-based min), NOT the all-pairs band self-join —
     no join operator of any kind before the edge list exists."""
-    import __spark_entry__ as entry
     from kafka_firehose_nozzle_spark.operators import dedup as D
+    from queries.dedup import _planted_docs
 
-    docs2 = entry._planted_docs(spark, SF)
+    docs2 = _planted_docs(spark, SF)
     edges = D.lsh_component_edges(docs2, num_hashes=8, num_bands=4)
     plan = edges._jdf.queryExecution().executedPlan().toString()
     assert "Window" in plan

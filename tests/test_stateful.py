@@ -294,56 +294,6 @@ def test_windowed_rates_drop_late_rows(spark, tmp_path):
     assert str(late_window) not in starts
 
 
-def test_transform_with_state_matches_apply_in_pandas(spark, tmp_path):
-    """Both stateful APIs (applyInPandasWithState and Spark 4's
-    transformWithStateInPandas) produce the same final running totals.
-
-    transformWithState's driver worker needs google.protobuf (not shipped
-    in this container) — skip when absent; the operator itself is plain
-    DataFrame code and imports fine either way."""
-    import pytest as _pytest
-
-    _pytest.importorskip("google.protobuf.descriptor")
-    from kafka_firehose_nozzle_spark.streaming.stateful import (
-        counter_running_totals_tws,
-    )
-
-    src = str(tmp_path / "env_tws")
-    _write_batches(spark, src, 2000, batches=2)
-
-    q = (
-        counter_running_totals_tws(_stream(spark, src))
-        .writeStream.format("memory")
-        .queryName("tws_out")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt_tws"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    out = spark.sql("SELECT * FROM tws_out").toPandas()
-    finals = out.groupby(["origin", "name"]).last().reset_index()
-
-    batch_env = spark.read.schema(schemas.ENVELOPE_SCHEMA).parquet(src)
-    expected = (
-        counter_deltas(batch_env)
-        .groupBy("origin", "name")
-        .agg(
-            F.sum("delta").alias("running_total"),
-            F.count(F.lit(1)).alias("n_deltas"),
-        )
-        .toPandas()
-    )
-    key = ["origin", "name"]
-    f = finals.sort_values(key).reset_index(drop=True)
-    e = expected.sort_values(key).reset_index(drop=True)
-    assert (f["running_total"].values == e["running_total"].values).all()
-    assert (f["n_deltas"].values == e["n_deltas"].values).all()
-
-
 def test_ewma_anomalies_stream_matches_sequential_model(spark, tmp_path):
     """The streaming EWMA detector, fed the event log in two
     ts-ordered micro-batches, must flag exactly the rows a sequential

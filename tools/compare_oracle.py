@@ -24,6 +24,7 @@ import pandas as pd
 sys.path.insert(0, "/root/repo")
 
 import __spark_entry__ as entrymod
+from queries._base import TABLES
 
 
 def canon(df: pd.DataFrame) -> pd.DataFrame:
@@ -68,7 +69,7 @@ def oracle_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
     from kafka_firehose_nozzle_spark.catalog import _TS_COLS
 
     con = duckdb.connect()
-    for t in entrymod.TABLES:
+    for t in TABLES:
         src = f"{sf_dir}/{t}.parquet"
         replaces = []
         for c in _TS_COLS.get(t, []):

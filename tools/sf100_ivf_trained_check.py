@@ -51,6 +51,8 @@ import time
 sys.path.insert(0, "/root/repo")
 
 import __spark_entry__ as entrymod
+from queries._base import _t
+from queries.similarity import _sim_sql
 from tools.compare_oracle import oracle_connection
 
 from kafka_firehose_nozzle_spark.session import get_spark
@@ -160,7 +162,7 @@ def main() -> int:
     from kafka_firehose_nozzle_spark.session import configure_shuffle_for_input
 
     configure_shuffle_for_input(spark, sf_dir)
-    emb = entrymod._t(spark, sf_dir, "embeddings")
+    emb = _t(spark, sf_dir, "embeddings")
     strained = {
         int(r["cell_id"]): [float(x) for x in r["centroid"]]
         for r in S.kmeans_centroids(
@@ -181,7 +183,7 @@ def main() -> int:
 
     # final search: assign -> probes (nprobe=2) -> candidates -> top-10,
     # the oracle's own tail with c4 injected as literals
-    sim = entrymod._sim_sql
+    sim = _sim_sql
     tail = con.execute(
         f"WITH {E_CTE}, "
         f"c AS (SELECT cell_id, centroid FROM {_cent_values(cents)}), "

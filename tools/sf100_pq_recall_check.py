@@ -39,6 +39,7 @@ import time
 sys.path.insert(0, "/root/repo")
 
 import __spark_entry__ as entrymod
+from queries.similarity import ORACLE_ANN, ORACLE_PQ_ANN
 from tools.compare_oracle import oracle_connection
 
 from kafka_firehose_nozzle_spark.session import get_spark
@@ -51,14 +52,14 @@ def main() -> int:
     con.execute("SET memory_limit='48GB'")
 
     exact_ids = {
-        int(r[0]) for r in con.execute(entrymod.ORACLE_ANN).fetchall()
+        int(r[0]) for r in con.execute(ORACLE_ANN).fetchall()
     }
     t1 = time.time()
     print(f"stage 1 ORACLE_ANN: {len(exact_ids)} ids in {t1 - t0:.1f}s",
           flush=True)
 
     pq_ids = {
-        int(r[0]) for r in con.execute(entrymod.ORACLE_PQ_ANN).fetchall()
+        int(r[0]) for r in con.execute(ORACLE_PQ_ANN).fetchall()
     }
     t2 = time.time()
     print(f"stage 2 ORACLE_PQ_ANN: {len(pq_ids)} ids in {t2 - t1:.1f}s",

@@ -44,6 +44,7 @@ sys.path.insert(0, "/root/repo")
 import pandas as pd
 
 import __spark_entry__ as entrymod
+from queries.dedup import _ORACLE_LSH_CAND
 from tools.compare_oracle import canon, compare_query, oracle_connection
 
 from kafka_firehose_nozzle_spark.session import get_spark
@@ -82,7 +83,7 @@ _DOCS_SQL_TAIL = "SELECT doc_id, length(text) AS n_chars FROM docs2"
 def _bucket_prefix_sql() -> str:
     """The registry's own LSH oracle text, truncated before the
     pairwise cand join (which is what's quadratic)."""
-    sql = entrymod._ORACLE_LSH_CAND
+    sql = _ORACLE_LSH_CAND
     cut = sql.index(",\n    cand AS")
     return sql[:cut]
 

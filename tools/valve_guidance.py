@@ -34,10 +34,10 @@ sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F
 
-from __spark_entry__ import _PLANT_OFFSET, _planted_docs
 from kafka_firehose_nozzle_spark.operators.dedup import with_minhash
 from kafka_firehose_nozzle_spark.operators.text import word_ngrams
 from kafka_firehose_nozzle_spark.session import get_spark
+from queries.dedup import _PLANT_OFFSET, _planted_docs
 
 LSH_CAPS = [20, 50, 100, 200, 500, 1000, None]
 DECONTAM_CAPS = [2, 5, 10, 20, 50, 100, None]
