@@ -20,7 +20,11 @@ Source options (all strings, per the DataSource API):
 - ``retryCount``  reconnect budget before the stream errors
   (ST4; cli.go:53, default 5)
 - ``maxBatchRows``  cap per micro-batch (backpressure, replaces the
-  reference's channel-buffer tuning, kafka.go:24-25)
+  reference's channel-buffer tuning, kafka.go:24-25). A live batch
+  does not wait to fill it: after the batch's first frame it waits at
+  most ``BATCH_WAIT`` (50 ms) for more, then takes only frames already
+  buffered. A flood still fills every batch to the cap; a steady
+  stream's batch holds its backlog plus about 50 ms of frames.
 - ``filterType``  server-side event filter (SRC3): ``logs`` or
   ``metrics``, appended to the websocket URL as ``filter-type=...``
   exactly like noaa (noaa/consumer/filter.go:3-20, firehose.go:42-44);
@@ -45,6 +49,7 @@ from __future__ import annotations
 
 import json
 import logging
+import time
 from collections.abc import Iterator
 
 import pyarrow as pa
@@ -67,6 +72,8 @@ DEFAULT_UAA_TIMEOUT = 20  # cli.go:42
 DEFAULT_MAX_BATCH_ROWS = 10_000
 DEFAULT_MIN_RETRY_DELAY = 0.5  # noaa async.go:21 DefaultMinRetryDelay
 DEFAULT_MAX_RETRY_DELAY = 60.0  # noaa async.go:22 DefaultMaxRetryDelay
+# how long a live batch keeps waiting for frames after its first one
+BATCH_WAIT = 0.05
 
 
 def fetch_uaa_token(
@@ -184,8 +191,6 @@ class FirehoseStreamReader(SimpleDataSourceStreamReader):
         """Burn one reconnect attempt, with noaa's doubling backoff
         (async.go:327-350). Exhausting the budget fails the stream with
         the reference's ErrMaxRetriesReached message (async.go:29)."""
-        import time
-
         if self._retries_left <= 0:
             raise RuntimeError(
                 "maximum number of connection retries reached"
@@ -326,17 +331,26 @@ class FirehoseStreamReader(SimpleDataSourceStreamReader):
         return iter([batch] if batch.num_rows else [])
 
     def _recv_frames(self, conn) -> Iterator[bytes]:
-        """Frames off the socket until the batch is full or the socket
-        goes quiet, fails or closes."""
+        """Frames off the socket for one batch. The first frame waits up
+        to ``idleTimeout``; the batch then takes what arrives within
+        ``BATCH_WAIT`` of that frame, and after that only frames already
+        buffered, up to ``maxBatchRows``. A failure or close ends the
+        batch early."""
         from kafka_firehose_nozzle_spark.sources import rfc6455
 
         idle = float(self.options.get("idleTimeout", DEFAULT_IDLE_TIMEOUT))
+        deadline = 0.0
         for n_read in range(self.max_batch):
             try:
-                # quick drain once the batch has frames; full idle wait
-                # only while empty (the stdlib analog of gorilla's
-                # per-read deadline, noaa async.go:255-257)
-                msg = conn.recv(timeout=0.05 if n_read else idle)
+                # full idle wait only while empty, then one read deadline
+                # for the whole batch (gorilla's SetReadDeadline, noaa
+                # async.go:255-257); past it, timeout=0 is a
+                # non-blocking poll of what is already buffered
+                msg = conn.recv(
+                    timeout=max(0.0, deadline - time.monotonic())
+                    if n_read
+                    else idle
+                )
             except TimeoutError:
                 if not n_read:
                     # a full idleTimeout with zero messages means the
@@ -365,6 +379,8 @@ class FirehoseStreamReader(SimpleDataSourceStreamReader):
                 self._drop_connection()
                 self._spend_retry(str(e))
                 return
+            if not n_read:
+                deadline = time.monotonic() + BATCH_WAIT
             yield msg
 
     def read(self, start: dict) -> tuple[Iterator, dict]:

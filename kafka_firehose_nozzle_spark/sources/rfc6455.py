@@ -147,8 +147,9 @@ class _FrameIO:
         whole frame (header + payload) sits in ``self._buf``: a recv()
         timeout mid-frame leaves the buffer positioned at the frame
         boundary, so the next call resumes cleanly instead of parsing
-        payload bytes as a header (the firehose quick-drain loop reads
-        with timeout=0.05 and relies on this)."""
+        payload bytes as a header (the firehose reader polls with short
+        and zero timeouts once a batch has frames, and relies on
+        this)."""
         while True:
             frame = self._parse_buffered_frame()
             if frame is not None:
@@ -214,7 +215,9 @@ class _FrameIO:
         frame (after echoing it, §5.5.1) and TimeoutError when
         ``timeout`` expires — the caller's idle-timeout signal, the
         stdlib analog of gorilla's SetReadDeadline
-        (noaa async.go:255-257)."""
+        (noaa async.go:255-257). ``timeout=0`` is a non-blocking poll:
+        a message already complete in the buffer or the kernel's is
+        returned, otherwise TimeoutError."""
         if self._closed:
             raise WSClosed(1006, "recv on closed websocket")
         self._sock.settimeout(timeout)
@@ -223,7 +226,14 @@ class _FrameIO:
             while True:
                 try:
                     fin, opcode, payload = self._read_frame()
-                except (TimeoutError, socket.timeout) as e:
+                except (
+                    TimeoutError,
+                    socket.timeout,
+                    # timeout=0 leaves the socket non-blocking: "no data
+                    # yet" is BlockingIOError, or SSLWantReadError on TLS
+                    BlockingIOError,
+                    ssl_mod.SSLWantReadError,
+                ) as e:
                     raise TimeoutError("websocket recv timed out") from e
                 if opcode == OP_PING:
                     self._send_frame(OP_PONG, payload)

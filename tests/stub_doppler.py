@@ -12,6 +12,10 @@ external egress.
 Session scripting: each accepted websocket consumes the next session
 spec, a dict of
   frames: list[bytes]      binary payloads to send after the upgrade
+  interval: float          optional: seconds between frames, on a fixed
+                           schedule from the upgrade (the first frame
+                           goes out one interval after it); default 0
+                           sends them back to back
   then:   "close"          normal close (1000)
           "close1008"      policy-violation close — go-nozzle's
                            slow-consumer signal (detector.go:71-99)
@@ -28,6 +32,7 @@ import json
 import socket
 import ssl
 import threading
+import time
 import urllib.parse
 from http.server import BaseHTTPRequestHandler, HTTPServer
 
@@ -119,8 +124,14 @@ class StubDoppler:
         if sess.get("set_token") is not None:
             with self._lock:
                 self.token = sess["set_token"]
+        interval = sess.get("interval", 0)
+        t0 = time.monotonic()
         try:
-            for frame in sess.get("frames", ()):
+            for i, frame in enumerate(sess.get("frames", ())):
+                if interval and self._stop.wait(
+                    max(0.0, t0 + (i + 1) * interval - time.monotonic())
+                ):
+                    return
                 conn.send_binary(frame)
             then = sess.get("then", "silent")
             if then == "close":

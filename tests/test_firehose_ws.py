@@ -189,21 +189,28 @@ def test_fragment_split_across_recv_timeout_resumes():
 
 
 @pytest.mark.parametrize(
-    "split",
-    [1, 2, 4],  # mid-header, header|payload boundary, mid-payload
-    ids=["mid_header", "after_header", "mid_payload"],
+    "split,timeout",
+    [
+        pytest.param(split, timeout, id=name + suffix)
+        # mid-header, header|payload boundary, mid-payload
+        for split, name in [(1, "mid_header"), (2, "after_header"), (4, "mid_payload")]
+        for timeout, suffix in [(0.2, ""), (0, "_poll")]
+    ],
 )
-def test_frame_split_across_recv_timeout_resumes(split):
+def test_frame_split_across_recv_timeout_resumes(split, timeout):
     """A recv() that times out MID-FRAME must leave the parser at the
     frame boundary. Previously _read_frame consumed the 2-byte header
     (and extended length/mask) destructively, so a timeout while
     awaiting the payload desynced the stream — the next recv parsed
     payload bytes as a header and raised
-    WSProtocolError('server sent a masked frame'). The firehose read
-    loop quick-drains with timeout=0.05, so this killed healthy
-    connections."""
+    WSProtocolError('server sent a masked frame'). The firehose reader
+    polls with short and zero timeouts once a batch has frames, so this
+    killed healthy connections. ``timeout=0`` is a non-blocking poll: it
+    must raise TimeoutError too, not the socket's BlockingIOError, which
+    the reader would take for a dead connection."""
     import socket
     import threading
+    import time
 
     payload = b"envelope-bytes"
     raw = rfc6455.encode_frame(rfc6455.OP_BINARY, payload, mask=False)
@@ -213,12 +220,14 @@ def test_frame_split_across_recv_timeout_resumes(split):
     lst.bind(("127.0.0.1", 0))
     lst.listen(1)
     port = lst.getsockname()[1]
+    sent = threading.Event()
     release = threading.Event()
 
     def server():
         sock, _ = lst.accept()
         rfc6455.server_handshake(sock)
         sock.sendall(raw[:split])  # first fragment of the FRAME itself
+        sent.set()
         release.wait(5)  # hold the rest until the client timed out
         sock.sendall(raw[split:])
         # then a second complete frame to prove the stream stays in sync
@@ -227,8 +236,11 @@ def test_frame_split_across_recv_timeout_resumes(split):
     t = threading.Thread(target=server, daemon=True)
     t.start()
     client = rfc6455.connect(f"ws://127.0.0.1:{port}/x", timeout=5)
+    assert sent.wait(5)
+    time.sleep(0.05)  # let the partial frame reach the client's kernel
     with pytest.raises(TimeoutError):
-        client.recv(timeout=0.2)  # partial frame buffered, nothing lost
+        client.recv(timeout=timeout)  # partial frame buffered, nothing lost
+    assert client._buf == raw[:split]
     release.set()
     assert client.recv(timeout=5) == payload
     assert client.recv(timeout=5) == b"next"
@@ -263,6 +275,41 @@ def test_connect_auth_filter_and_decode_over_live_socket():
     assert len(rows) == sum(
         1 for e in canonical_envelopes() if e["eventType"] == schemas.LOG_MESSAGE
     )
+
+
+def test_steady_stream_batch_ends_50ms_after_first_frame():
+    """A steady stream is never silent, so a batch must not wait to fill
+    ``maxBatchRows``: one frame every 2 ms for 2 s, and the first read()
+    returns after about 50 ms of frames, not all 1000 of them."""
+    import time
+
+    with StubDoppler(
+        [{"frames": wire_frames() * 125, "interval": 0.002}], token=TOKEN
+    ) as stub:
+        reader = FirehoseStreamReader(reader_opts(stub, maxBatchRows=10_000))
+        t0 = time.monotonic()
+        batches, end = reader.read({"n": 0})
+        n_rows = len(rows_of(batches))
+        elapsed = time.monotonic() - t0
+        reader._drop_connection()
+    assert elapsed < 0.5, elapsed
+    assert 0 < n_rows < 300
+    assert end == {"n": n_rows}
+
+
+def test_backlog_still_fills_batches_to_max_batch_rows():
+    """Frames already buffered join the batch after its 50 ms are up:
+    a backlog of twice ``maxBatchRows`` is read as two full batches."""
+    import time
+
+    with StubDoppler([{"frames": wire_frames() * 50}], token=TOKEN) as stub:
+        reader = FirehoseStreamReader(reader_opts(stub, maxBatchRows=200))
+        reader._connect()
+        time.sleep(0.3)  # the whole backlog reaches the socket first
+        rows1, end1 = reader.read({"n": 0})
+        rows2, end2 = reader.read(end1)
+        assert len(rows_of(rows1)) == 200 and end1 == {"n": 200}
+        assert len(rows_of(rows2)) == 200 and end2 == {"n": 400}
 
 
 def test_unauthorized_401_exhausts_retry_budget():
@@ -504,6 +551,32 @@ def test_wss_handshake_verified_against_minted_ca(tmp_path):
             timeout=5,
             ssl_context=ctx,
         )
+        assert client.recv(timeout=5) == frames[0]
+        client.close()
+
+
+def test_wss_zero_timeout_poll_on_idle_connection(tmp_path):
+    """``recv(timeout=0)`` on an idle TLS connection is a poll: it raises
+    TimeoutError, not the SSL layer's SSLWantReadError (which the reader
+    would take for a dead connection), and the connection stays usable
+    for the next frame."""
+    from tests.tls_certs import mint
+
+    certs = mint(tmp_path)
+    frames = wire_frames(1)
+    with StubDoppler(
+        [{"frames": frames, "interval": 0.5, "then": "silent"}],
+        token=TOKEN,
+        ssl_context=_server_ssl_context(certs),
+    ) as stub:
+        client = rfc6455.connect(
+            f"wss://127.0.0.1:{stub.port}/firehose/sub",
+            headers={"Authorization": TOKEN},
+            timeout=5,
+            ssl_context=ssl.create_default_context(cafile=certs["ca_cert"]),
+        )
+        with pytest.raises(TimeoutError):
+            client.recv(timeout=0)
         assert client.recv(timeout=5) == frames[0]
         client.close()
 
