@@ -53,8 +53,7 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     analyzed schema through later actions), so the prior session value
     is restored on exit — a bare ``conf.set`` here would permanently
     flip how UNRELATED reads in the same session interpret
-    TIMESTAMP(NANOS) parquet (round-5 ADVICE; ``sinks/lake.py`` already
-    uses this save/restore pattern)."""
+    TIMESTAMP(NANOS) parquet (round-5 ADVICE)."""
     prev = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     try:

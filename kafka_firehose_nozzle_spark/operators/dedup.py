@@ -448,22 +448,6 @@ def exact_dup_groups(
     )
 
 
-def dedup_exact_keep_first(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Keep the lowest-id row per identical (normalized) text."""
-    from pyspark.sql import Window
-
-    from kafka_firehose_nozzle_spark.operators.text import fingerprint
-
-    w = Window.partitionBy(fingerprint(F.col(text_col))).orderBy(F.col(id_col))
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-
-
 def embedding_dup_pairs(
     df: DataFrame,
     id_col: str = "vec_id",

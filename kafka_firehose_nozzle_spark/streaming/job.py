@@ -96,17 +96,10 @@ def start_pipeline(
     sink: str = "kafka",
     stats: Stats | None = None,
     memory_sink_name: str = "nozzle_out",
-    transform=None,
 ) -> PipelineHandle:
-    """Transform + sink + stats listener.
+    """Routing + sink + stats listener.
 
     ``sink``: kafka (K1) | console (K6, -debug mode) | memory (tests).
-    ``transform``: optional DataFrame -> DataFrame stage applied to the
-    envelope stream BEFORE routing (e.g.
-    ``streaming.stateful.dedup_envelopes`` for the ST1
-    effectively-once upgrade); the consume counters then observe the
-    post-transform stream, matching where the reference counts
-    (kafka.go:308-331 counts what reaches the producer loop).
     """
     stats = stats or Stats()
     listener = make_streaming_listener(stats)
@@ -116,8 +109,6 @@ def start_pipeline(
     # session and repeated failed attempts stack listeners
     spark.streams.addListener(listener)
     try:
-        if transform is not None:
-            envelopes = transform(envelopes)
         routed = route_envelopes_config(envelopes, config, with_observe=True)
 
         if sink == "kafka":

@@ -738,10 +738,8 @@ SHARED_SQL: dict[str, str] = {
                 / ((n * sxx - sx * sx) * (n * syy - sy * sy)) AS r2
         FROM m
     """,
-    # interval self-join (batch analog of the streaming error<-http
-    # correlation, streaming/stateful.correlate_errors_with_http): for
-    # each error event, how many views the same user made in the prior
-    # 10 minutes
+    # interval self-join: for each error event, how many views the same
+    # user made in the prior 10 minutes
     "error_prior_views": """
         SELECT e.user_id, e.event_id AS error_event_id,
             COUNT(v.event_id) AS prior_views

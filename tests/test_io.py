@@ -154,110 +154,6 @@ def test_schema_evolution_mergeschema_read(spark, tmp_path):
     assert df.filter("quality > 0.6").count() == 1
 
 
-def test_jsonl_split_quarantines_bad_lines(spark, tmp_path):
-    """JSONL ingestion: parseable rows flow typed, unparseable and
-    foreign-schema lines land in quarantine with the raw line and a
-    reason — counted-drop semantics, never silent."""
-    from kafka_firehose_nozzle_spark.sources.jsonl import read_jsonl_split
-
-    p = tmp_path / "events.jsonl"
-    lines = [
-        '{"event_id": 1, "ts": "2024-01-01 00:00:00", "user_id": 7,'
-        ' "event_type": "view", "value": 1.5, "props": "{}"}',
-        '{"event_id": 2, "ts": "2024-01-01 00:00:01", "user_id": 8,'
-        ' "event_type": "click", "value": 2.0, "props": "{}"}',
-        '{"event_id": 3, "ts": "2024-01-01 00:00:02", "user',  # truncated
-        '{"totally": "different", "payload": 42}',  # foreign schema
-        "not json at all %%%",
-    ]
-    p.write_text("\n".join(lines) + "\n")
-
-    good, quarantine, unpersist = read_jsonl_split(spark, str(p))
-    assert sorted(r["event_id"] for r in good.collect()) == [1, 2]
-    assert quarantine.count() == 3
-    bad = [r for r in quarantine.collect()]
-    reasons = sorted(r["reason"] for r in bad)
-    assert reasons == ["foreign_schema", "unparseable", "unparseable"]
-    # raw lines are byte-preserved in BOTH failure modes (a foreign
-    # schema line must stay repairable, not collapse to '{}')
-    raws = {r["raw"] for r in bad}
-    assert "not json at all %%%" in raws
-    assert '{"totally": "different", "payload": 42}' in raws
-    unpersist()  # releases the shared parse cache — no leaked blocks
-
-
-def test_jsonl_good_rows_feed_routing_pipeline(spark, tmp_path):
-    """The typed half of the split plugs straight into the envelope
-    adapter + router — JSONL is a first-class ingestion edge."""
-    from kafka_firehose_nozzle_spark.sources.events_adapter import (
-        events_to_envelopes,
-    )
-    from kafka_firehose_nozzle_spark.sources.jsonl import read_jsonl_split
-    from pyspark.sql import functions as F
-
-    p = tmp_path / "ev.jsonl"
-    p.write_text(
-        '{"event_id": 1, "ts": "2024-01-01 00:00:00", "user_id": 7,'
-        ' "event_type": "view", "value": 1.0, "props": "{}"}\n'
-        '{"event_id": 2, "ts": "2024-01-01 00:00:01", "user_id": 8,'
-        ' "event_type": "error", "value": 0.0, "props": "{}"}\n'
-    )
-    good, _, _unpersist = read_jsonl_split(spark, str(p))
-    good = good.withColumn("ts", F.to_timestamp("ts"))
-    env = events_to_envelopes(good)
-    types = sorted(r["eventType"] for r in env.collect())
-    assert types == [4, 8]  # HttpStartStop, Error
-
-
-def test_dynamic_partition_overwrite_touches_only_written_partitions(
-    spark, tmp_path
-):
-    """overwrite_partitions replaces exactly the partitions present in
-    the written frame; untouched partitions survive byte-for-byte —
-    the incremental-backfill contract (static overwrite would wipe the
-    whole table)."""
-    from pyspark.sql import functions as F
-
-    from kafka_firehose_nozzle_spark.sinks.lake import overwrite_partitions
-
-    lake = str(tmp_path / "lake")
-    ev = (
-        spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-        .withColumn("day", F.dayofmonth("ts"))
-        .filter(F.col("day") <= 4)
-    )
-    overwrite_partitions(ev, lake, ["day"])
-    before = {
-        r["day"]: r["n"]
-        for r in spark.read.parquet(lake)
-        .groupBy("day")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    assert set(before) == {1, 2, 3, 4}
-
-    # backfill day 2 with half its rows: only day 2 may change
-    day2 = ev.filter(F.col("day") == 2).filter(F.col("event_id") % 2 == 0)
-    n_day2 = day2.count()
-    overwrite_partitions(day2, lake, ["day"])
-    after = {
-        r["day"]: r["n"]
-        for r in spark.read.parquet(lake)
-        .groupBy("day")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    assert after[2] == n_day2 != before[2]
-    assert {d: n for d, n in after.items() if d != 2} == {
-        d: n for d, n in before.items() if d != 2
-    }
-    # the session setting must be restored (it is session-global)
-    assert (
-        spark.conf.get("spark.sql.sources.partitionOverwriteMode").upper()
-        == "STATIC"
-    )
-
-
 def test_wire_batch_decode_roundtrip_and_quarantine(spark, tmp_path):
     """A binary column of encoded wire frames decodes back to the exact
     envelope rows (byte-exact wire roundtrip through the lake shape),

@@ -82,18 +82,6 @@ def test_asof_join_preserves_left_rowcount(spark):
 # --- dedup -------------------------------------------------------------------
 
 
-def test_dedup_exact_keep_first(spark):
-    docs = spark.createDataFrame(
-        [
-            Row(doc_id=1, text="Hello  World"),
-            Row(doc_id=2, text="hello world"),   # same after normalization
-            Row(doc_id=3, text="something else"),
-        ]
-    )
-    kept = D.dedup_exact_keep_first(docs)
-    assert sorted(r["doc_id"] for r in kept.collect()) == [1, 3]
-
-
 def test_lsh_finds_planted_near_dup(spark):
     base = (
         "the quick brown fox jumps over the lazy dog and runs far away "
@@ -620,42 +608,6 @@ def test_quantization_error_bounded_by_grid_step(spark):
     for r in got:
         assert 0 <= r.avg_err <= bound, (r.label, r.avg_err, bound)
         assert r.max_err <= bound
-
-
-def test_extension_pandas_udf_matches_jvm_cosine(spark):
-    """The documented pandas-UDF escape hatch must agree with the
-    engine's JVM-side cosine to float precision."""
-    from kafka_firehose_nozzle_spark.operators.extension import (
-        cosine_sim_pandas_udf,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    pair = emb.limit(50).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("a")
-    ).withColumn("b", F.reverse(F.col("a")))
-    jvm = S.cosine(F.col("a"), F.col("b"))
-    got = pair.select(
-        "vec_id",
-        cosine_sim_pandas_udf("a", "b").alias("py"),
-        jvm.alias("jv"),
-    ).collect()
-    assert got
-    for r in got:
-        assert abs(r.py - r.jv) < 1e-12, (r.vec_id, r.py, r.jv)
-
-
-def test_extension_udtf_extracts_spans(spark):
-    from kafka_firehose_nozzle_spark.operators.extension import ExtractSpans
-
-    spark.udtf.register("extract_spans", ExtractSpans)
-    rows = spark.sql(
-        "SELECT s.* FROM VALUES ('One. Two two. Three.') t(txt), "
-        "LATERAL extract_spans(txt) s"
-    ).collect()
-    spans = [(r.span_ix, r.span) for r in rows]
-    assert spans == [(0, "One"), (1, "Two two"), (2, "Three")]
-    # offsets point back into the source text
-    assert all(r.start >= 0 and r.length > 0 for r in rows)
 
 
 def test_global_running_sum_matches_serial(spark):

@@ -88,54 +88,3 @@ def test_tls_options():
     assert opts["kafka.ssl.keystore.certificate.chain"] == PEM
     assert opts["kafka.ssl.keystore.key"] == KEY
     assert opts["kafka.ssl.truststore.certificates"] == PEM
-
-
-def test_foreachbatch_idempotent_parquet_sink(spark, tmp_path):
-    """Replaying a batch id overwrites its partition instead of
-    duplicating rows (effectively-once on a plain parquet lake)."""
-    from pyspark.sql import functions as F
-
-    from kafka_firehose_nozzle_spark.fixtures import synthetic_envelope_df
-    from kafka_firehose_nozzle_spark.pipeline import route_envelopes
-    from kafka_firehose_nozzle_spark.sinks.batchwise import (
-        write_stream_parquet_idempotent,
-    )
-    from kafka_firehose_nozzle_spark import schemas
-    from kafka_firehose_nozzle_spark.config import TopicConfig
-
-    cfg = TopicConfig(log_message="t-log", value_metric="t-vm",
-                      http_start_stop="t-http", counter_event="t-ce",
-                      error="t-err", container_metric="t-cm")
-    src = str(tmp_path / "src")
-    out = str(tmp_path / "lake")
-    synthetic_envelope_df(spark, 500).coalesce(1).write.parquet(src)
-
-    stream = (
-        spark.readStream.schema(schemas.ENVELOPE_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = write_stream_parquet_idempotent(
-        route_envelopes(stream, cfg), out, str(tmp_path / "ck1")
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    first = spark.read.parquet(out)
-    n1 = first.count()
-    batches1 = first.select("_batch_id").distinct().count()
-    assert n1 > 0
-
-    # simulate a replay of batch 0: fresh checkpoint, same source/output.
-    # The rewritten batch-0 partition REPLACES the old one (no dupes).
-    q2 = write_stream_parquet_idempotent(
-        route_envelopes(stream, cfg), out, str(tmp_path / "ck2")
-    )
-    try:
-        q2.processAllAvailable()
-    finally:
-        q2.stop()
-    again = spark.read.parquet(out)
-    assert again.count() == n1
-    assert again.select("_batch_id").distinct().count() == batches1
