@@ -20,11 +20,17 @@ Source options (all strings, per the DataSource API):
 - ``retryCount``  reconnect budget before the stream errors
   (ST4; cli.go:53, default 5)
 - ``maxBatchRows``  cap per micro-batch (backpressure, replaces the
-  reference's channel-buffer tuning, kafka.go:24-25). A live batch
-  does not wait to fill it: after the batch's first frame it waits at
-  most ``BATCH_WAIT`` (50 ms) for more, then takes only frames already
-  buffered. A flood still fills every batch to the cap; a steady
-  stream's batch holds its backlog plus about 50 ms of frames.
+  reference's channel-buffer tuning, kafka.go:24-25). A live
+  connection has a pump thread that receives and decodes frames into a
+  queue of at most 2 x ``maxBatchRows`` rows while Spark processes the
+  last batch (go-nozzle's reader goroutine feeding ``eventCh``); a full
+  queue stops ``recv``, so TCP backpressure and the server's
+  slow-consumer close still apply. A batch does not wait to fill the
+  cap: after its first frame was received it waits at most
+  ``BATCH_WAIT`` (50 ms) for more, then takes only what is queued. A
+  flood fills batches to the cap; a steady stream's batch holds what
+  arrived since the last one. Queued rows not yet read are
+  lost on a crash, like frames in the kernel's socket buffer.
 - ``filterType``  server-side event filter (SRC3): ``logs`` or
   ``metrics``, appended to the websocket URL as ``filter-type=...``
   exactly like noaa (noaa/consumer/filter.go:3-20, firehose.go:42-44);
@@ -37,9 +43,9 @@ Source options (all strings, per the DataSource API):
   third-party websocket package required). The envelopes are encoded
   to wire frames and decoded like live traffic.
 
-``read()`` hands Spark one Arrow batch per micro-batch, built by
-``wire_batch.decode_frames`` — the same decode the lake path runs — in
-``wire_batch.FRAME_SCHEMA``: the envelope fields plus ``_decode_error``
+``read()`` hands Spark one Arrow batch per micro-batch, made of the
+pump's chunks, each built by ``wire_batch.decode_frames`` — the same
+decode the lake path runs — in ``wire_batch.FRAME_SCHEMA``: the envelope fields plus ``_decode_error``
 and ``_raw``, so a bad frame is a quarantined row, not a failed query.
 ``streaming.job.firehose_stream`` splits the good rows (ENVELOPE_SCHEMA)
 from the bad ones (counted and logged).
@@ -49,7 +55,9 @@ from __future__ import annotations
 
 import json
 import logging
+import threading
 import time
+from collections import deque
 from collections.abc import Iterator
 
 import pyarrow as pa
@@ -74,6 +82,10 @@ DEFAULT_MIN_RETRY_DELAY = 0.5  # noaa async.go:21 DefaultMinRetryDelay
 DEFAULT_MAX_RETRY_DELAY = 60.0  # noaa async.go:22 DefaultMaxRetryDelay
 # how long a live batch keeps waiting for frames after its first one
 BATCH_WAIT = 0.05
+# how long the pump keeps receiving after a chunk's first frame: spreads
+# decode_frames' fixed cost per call (about 0.3 ms) over a few ms of
+# frames, well inside BATCH_WAIT
+CHUNK_WAIT = 0.005
 
 
 def fetch_uaa_token(
@@ -145,6 +157,65 @@ def firehose_url(
     return url
 
 
+class _Chunks:
+    """The decoded chunks one connection's pump hands to ``read()``, in
+    arrival order, bounded in rows. An item is ``(batch, t_first)``, with
+    ``t_first`` the ``time.monotonic()`` at which the batch's first frame
+    was received, or an exception that ends the connection: the pump
+    queues it last, and it stays at the head once reached."""
+
+    def __init__(self, max_rows: int) -> None:
+        self.max_rows = max_rows
+        self.rows = 0
+        self._items: deque = deque()
+        self._closed = False
+        self._cond = threading.Condition()
+
+    def room(self) -> int:
+        """Rows the pump may queue, waiting while the queue is full; 0
+        once the reader has closed it."""
+        with self._cond:
+            while self.rows >= self.max_rows and not self._closed:
+                self._cond.wait()
+            return 0 if self._closed else self.max_rows - self.rows
+
+    def put(self, item, t_first: float = 0.0) -> None:
+        with self._cond:
+            if isinstance(item, pa.RecordBatch):
+                self.rows += item.num_rows
+                item = (item, t_first)
+            self._items.append(item)
+            self._cond.notify_all()
+
+    def take(self, limit: int, deadline: float | None):
+        """The head item, cut to at most ``limit`` rows (the rest stays
+        queued). Waits for one until ``deadline`` (monotonic; ``None``
+        waits as long as it takes), then returns ``None``."""
+        with self._cond:
+            while not self._items:
+                wait = None if deadline is None else deadline - time.monotonic()
+                if wait is not None and wait <= 0:
+                    return None
+                self._cond.wait(wait)
+            head = self._items[0]
+            if isinstance(head, Exception):
+                return head
+            batch, t_first = head
+            if batch.num_rows > limit:
+                self._items[0] = (batch.slice(limit), t_first)
+                batch = batch.slice(0, limit)
+            else:
+                self._items.popleft()
+            self.rows -= batch.num_rows
+            self._cond.notify_all()
+            return batch, t_first
+
+    def close(self) -> None:
+        with self._cond:
+            self._closed = True
+            self._cond.notify_all()
+
+
 class FirehoseStreamReader(SimpleDataSourceStreamReader):
     """Driver-side reader. Offsets are a monotonically increasing record
     counter; SimpleDataSourceStreamReader caches read batches until the
@@ -155,6 +226,9 @@ class FirehoseStreamReader(SimpleDataSourceStreamReader):
         self.options = options
         self.max_batch = int(options.get("maxBatchRows", DEFAULT_MAX_BATCH_ROWS))
         self.fixture_rows = int(options.get("fixtureRows", 0))
+        self.idle_timeout = float(
+            options.get("idleTimeout", DEFAULT_IDLE_TIMEOUT)
+        )
         self.filter_type = options.get("filterType", "")
         if self.filter_type and self.filter_type not in FILTER_EVENT_TYPES:
             raise ValueError(
@@ -165,6 +239,8 @@ class FirehoseStreamReader(SimpleDataSourceStreamReader):
         # server via the filter-type query param (noaa filter.go:11-19)
         self._allowed = FILTER_EVENT_TYPES.get(self.filter_type)
         self._conn = None
+        # the live connection's pump queue (see _pump)
+        self._chunks: _Chunks | None = None
         self._token = options.get("token", "")
         # live-restart replay loss tally (ADVICE: the reference counts
         # its drops, kafka.go:272; unobservable loss is not parity)
@@ -207,6 +283,9 @@ class FirehoseStreamReader(SimpleDataSourceStreamReader):
         self._retry_sleep = min(self._retry_sleep * 2, DEFAULT_MAX_RETRY_DELAY)
 
     def _drop_connection(self) -> None:
+        if self._chunks is not None:
+            self._chunks.close()
+            self._chunks = None
         if self._conn is not None:
             try:
                 self._conn.close()
@@ -237,9 +316,6 @@ class FirehoseStreamReader(SimpleDataSourceStreamReader):
                 if self.options.get("insecureSSLSkipVerify", "false") == "true"
                 else ssl.create_default_context()
             )
-        open_timeout = float(
-            self.options.get("idleTimeout", DEFAULT_IDLE_TIMEOUT)
-        )
         if not self._token:
             # config VALIDATION is fatal and happens ONCE, outside the
             # retry loop (token.go:69-83) — so that inside the loop any
@@ -279,7 +355,7 @@ class FirehoseStreamReader(SimpleDataSourceStreamReader):
                 self._conn = rfc6455.connect(
                     url,
                     headers={"Authorization": self._token, "Origin": doppler},
-                    timeout=open_timeout,
+                    timeout=self.idle_timeout,
                     ssl_context=ssl_context,
                 )
             except (rfc6455.WSError, OSError) as e:
@@ -299,6 +375,15 @@ class FirehoseStreamReader(SimpleDataSourceStreamReader):
                 continue
             self._retries_left = self.retry_count
             self._retry_sleep = self._min_retry_delay
+            self._chunks = _Chunks(2 * self.max_batch)
+            threading.Thread(
+                target=self._pump,
+                args=(self._conn, self._chunks),
+                name="firehose-pump",
+                # a simple reader gets no stop(): the socket and this
+                # thread end when the source's worker process exits
+                daemon=True,
+            ).start()
             return self._conn
 
     def _fixture_frames(self, start_n: int, count: int) -> list[bytes]:
@@ -330,67 +415,111 @@ class FirehoseStreamReader(SimpleDataSourceStreamReader):
             )
         return iter([batch] if batch.num_rows else [])
 
-    def _recv_frames(self, conn) -> Iterator[bytes]:
-        """Frames off the socket for one batch. The first frame waits up
-        to ``idleTimeout``; the batch then takes what arrives within
-        ``BATCH_WAIT`` of that frame, and after that only frames already
-        buffered, up to ``maxBatchRows``. A failure or close ends the
-        batch early."""
+    def _pump(self, conn, chunks: _Chunks) -> None:
+        """Receive and decode one connection's frames into ``chunks``
+        until it fails or the reader drops it; runs in its own daemon
+        thread, so the socket is read while Spark runs the last batch.
+        A chunk is the frames that arrive within ``CHUNK_WAIT`` of its
+        first one, and never more than the queue has room for: a full
+        queue stops ``recv``, leaving the backlog to TCP backpressure and
+        the server's slow-consumer close, as a reader that is not called
+        does. The connection's end (idle timeout, close, socket error)
+        is queued behind its rows, and so is any other exception, for
+        ``read()`` to act on."""
         from kafka_firehose_nozzle_spark.sources import rfc6455
 
-        idle = float(self.options.get("idleTimeout", DEFAULT_IDLE_TIMEOUT))
-        deadline = 0.0
-        for n_read in range(self.max_batch):
-            try:
-                # full idle wait only while empty, then one read deadline
-                # for the whole batch (gorilla's SetReadDeadline, noaa
-                # async.go:255-257); past it, timeout=0 is a
-                # non-blocking poll of what is already buffered
-                msg = conn.recv(
-                    timeout=max(0.0, deadline - time.monotonic())
-                    if n_read
-                    else idle
+        try:
+            while True:
+                room = chunks.room()
+                if not room:
+                    return  # the reader dropped the connection
+                frames, fault = [], None
+                try:
+                    # the first frame waits up to idleTimeout: a full
+                    # idleTimeout with no message means the connection
+                    # is dead (ST5; noaa returns a retry error on the
+                    # read deadline, async.go:266-268)
+                    frames.append(conn.recv(timeout=self.idle_timeout))
+                    t_first = time.monotonic()
+                    deadline = t_first + CHUNK_WAIT
+                    while len(frames) < room:
+                        wait = deadline - time.monotonic()
+                        if wait <= 0:
+                            break
+                        frames.append(conn.recv(timeout=wait))
+                except TimeoutError as e:
+                    if not frames:
+                        fault = e
+                except (rfc6455.WSError, OSError) as e:
+                    fault = e
+                if frames:
+                    chunks.put(decode_frames(frames, _ARROW_SCHEMA), t_first)
+                if fault is not None:
+                    chunks.put(fault)
+                    return
+        except Exception as e:  # re-raised by read(), never swallowed
+            chunks.put(e)
+
+    def _connection_lost(self, fault: Exception) -> None:
+        """Act on the end of a connection the pump reported: drop it and
+        spend a reconnect attempt (the next read() redials), counting a
+        1008 close as a SlowConsumerAlert. Any other exception is the
+        stream's failure."""
+        from kafka_firehose_nozzle_spark.sources import rfc6455
+
+        if isinstance(fault, TimeoutError):
+            reason = f"idle timeout after {self.idle_timeout}s"
+        elif isinstance(fault, rfc6455.WSClosed):
+            if fault.code == rfc6455.CLOSE_POLICY_VIOLATION:
+                # go-nozzle detector.go:71-99: ClosePolicyViolation
+                # (1008) = server dropped us for being too slow
+                self.slow_consumer_close_alerts += 1
+                logging.getLogger("kafka_firehose_nozzle_spark").warning(
+                    "websocket terminates the connection because "
+                    "connection is too slow (ClosePolicyViolation)"
                 )
-            except TimeoutError:
-                if not n_read:
-                    # a full idleTimeout with zero messages means the
-                    # connection is dead (ST5; noaa returns a retry
-                    # error on the read deadline, async.go:266-268) —
-                    # drop it and spend a reconnect attempt; the next
-                    # micro-batch redials
-                    self._drop_connection()
-                    self._spend_retry(f"idle timeout after {idle}s")
-                return
-            except rfc6455.WSClosed as e:
-                if e.code == rfc6455.CLOSE_POLICY_VIOLATION:
-                    # go-nozzle detector.go:71-99: ClosePolicyViolation
-                    # (1008) = server dropped us for being too slow
-                    self.slow_consumer_close_alerts += 1
-                    logging.getLogger(
-                        "kafka_firehose_nozzle_spark"
-                    ).warning(
-                        "websocket terminates the connection because "
-                        "connection is too slow (ClosePolicyViolation)"
-                    )
-                self._drop_connection()
-                self._spend_retry(f"connection closed ({e.code} {e.reason})")
-                return
-            except (rfc6455.WSError, OSError) as e:
-                self._drop_connection()
-                self._spend_retry(str(e))
-                return
-            if not n_read:
-                deadline = time.monotonic() + BATCH_WAIT
-            yield msg
+            reason = f"connection closed ({fault.code} {fault.reason})"
+        elif isinstance(fault, (rfc6455.WSError, OSError)):
+            reason = str(fault)
+        else:
+            raise fault
+        self._drop_connection()
+        self._spend_retry(reason)
+
+    def _take(self) -> pa.RecordBatch:
+        """One batch of rows off the pump's queue. The first row waits
+        for the pump (which waits up to ``idleTimeout``); the batch then
+        takes what is queued until ``BATCH_WAIT`` after its first frame
+        was received, and after that only what is already queued, up to
+        ``maxBatchRows``. The end of the connection ends the batch."""
+        chunks = self._chunks
+        parts, n, deadline = [], 0, None
+        while n < self.max_batch:
+            item = chunks.take(self.max_batch - n, deadline)
+            if item is None:
+                break
+            if isinstance(item, Exception):
+                self._connection_lost(item)
+                break
+            part, t_first = item
+            if deadline is None:
+                deadline = t_first + BATCH_WAIT
+            parts.append(part)
+            n += part.num_rows
+        if not parts:
+            return pa.RecordBatch.from_pylist([], schema=_ARROW_SCHEMA)
+        return pa.Table.from_batches(parts).combine_chunks().to_batches()[0]
 
     def read(self, start: dict) -> tuple[Iterator, dict]:
         n = start["n"]
         if self.fixture_rows:
-            frames = self._fixture_frames(n, self.fixture_rows)
+            batch = decode_frames(
+                self._fixture_frames(n, self.fixture_rows), _ARROW_SCHEMA
+            )
         else:
-            frames = self._recv_frames(self._connect())
+            self._connect()
+            batch = self._take()
         # one row per frame consumed, good or bad
-        batch = decode_frames(frames, _ARROW_SCHEMA)
         return self._kept(batch), {"n": n + batch.num_rows}
 
     def readBetweenOffsets(self, start: dict, end: dict) -> Iterator:
@@ -408,7 +537,12 @@ class FirehoseStreamReader(SimpleDataSourceStreamReader):
         instead of failing the restart.  The reference COUNTS those drops
         (delay counter, kafka.go:272), so the live path logs the lost
         offset range and tallies it in ``dropped_replay_rows`` rather
-        than losing it unobservably."""
+        than losing it unobservably.
+
+        A crash also loses the rows the pump had queued but ``read()``
+        had not yet taken: at most 2 x ``maxBatchRows``, the same window
+        as frames still in the kernel's socket buffer. They never got an
+        offset, so ``dropped_replay_rows`` does not count them."""
         n, n_end = start["n"], end["n"]
         if self.fixture_rows:
             frames = self._fixture_frames(n, n_end - n)

@@ -16,7 +16,7 @@ of undecoded capture frames (the Kafka-archive / pcap-dump shape) in
 - Undecodable frames follow the reference's counted-drop stance
   (kafka.go:269-271): they land in a ``_decode_error`` column with
   their raw bytes instead of killing the job or the stream, and the
-  caller splits good/bad exactly like the JSONL quarantine source.
+  caller splits good rows from bad ones on ``_decode_error``.
 
 Reference parity: S1 (protobuf decode).
 """
@@ -66,9 +66,9 @@ def _decoded(payload_type) -> T.StructType:
         ]
         + [
             T.StructField("_decode_error", T.StringType()),
-            # raw frame bytes, populated ONLY for quarantined rows (same
-            # contract as the JSONL source: the byte-exact original is
-            # preserved for repair/replay, good rows don't double-store it)
+            # raw frame bytes, populated ONLY for quarantined rows: the
+            # byte-exact original is kept for repair/replay, and good
+            # rows do not store it twice
             T.StructField("_raw", T.BinaryType()),
         ]
     )

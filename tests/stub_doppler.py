@@ -22,6 +22,9 @@ spec, a dict of
           "silent"         keep the socket open and send nothing (lets
                            the client's idle timeout fire, ST5)
           "drop"           drop TCP without a close frame
+          "await_close"    keep the socket open and block in recv until
+                           the client closes it; the time.monotonic() of
+                           the close is appended to ``closed``
 When the script runs out, extra connections get a "silent" session, so
 a reconnecting client parks harmlessly instead of erroring the test.
 """
@@ -51,6 +54,7 @@ class StubDoppler:
         self.ssl_context = ssl_context
         self.requests: list[dict] = []  # {"path":…, "headers":…} per conn
         self.rejected: list[dict] = []  # same shape, 401-refused dials
+        self.closed: list[float] = []  # client closes seen by "await_close"
         self._lock = threading.Lock()
         self._stop = threading.Event()
         self._threads: list[threading.Thread] = []
@@ -140,6 +144,16 @@ class StubDoppler:
                 conn.close(rfc6455.CLOSE_POLICY_VIOLATION, "slow consumer")
             elif then == "drop":
                 sock.close()
+            elif then == "await_close":
+                while not self._stop.is_set():
+                    try:
+                        conn.recv(timeout=0.2)
+                    except TimeoutError:
+                        continue
+                    except (OSError, rfc6455.WSError):
+                        with self._lock:
+                            self.closed.append(time.monotonic())
+                        return
             else:  # "silent": hold the socket open until the test ends
                 self._stop.wait()
                 conn.close(rfc6455.CLOSE_GOING_AWAY)

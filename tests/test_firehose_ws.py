@@ -312,6 +312,92 @@ def test_backlog_still_fills_batches_to_max_batch_rows():
         assert len(rows_of(rows2)) == 200 and end2 == {"n": 400}
 
 
+def test_pump_backpressure_bounds_queue_and_keeps_order(monkeypatch):
+    """The pump stops receiving once 2 x ``maxBatchRows`` rows are
+    queued, and read() then hands every frame over exactly once, in
+    order: 10 x ``maxBatchRows`` frames sent back to back while the
+    reader is not called for 0.5 s. A short thread switch interval
+    makes the pump and read() interleave often."""
+    import sys
+    import time
+
+    from kafka_firehose_nozzle_spark.sources import firehose
+
+    per_batch, n_total = 200, 2000
+    canon = canonical_envelopes()
+    frames = []
+    for i in range(n_total):
+        e = dict(canon[i % len(canon)])
+        e["timestamp"] = i
+        frames.append(encode_envelope(e))
+    queued = []  # rows queued after each put
+    put = firehose._Chunks.put
+
+    def put_and_record(self, item, t_first=0.0):
+        put(self, item, t_first)
+        queued.append(self.rows)
+
+    monkeypatch.setattr(firehose._Chunks, "put", put_and_record)
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with StubDoppler([{"frames": frames}], token=TOKEN) as stub:
+            reader = FirehoseStreamReader(
+                reader_opts(stub, maxBatchRows=per_batch)
+            )
+            reader._connect()
+            time.sleep(0.5)
+            # the pump waits on the full queue instead of reading on
+            assert reader._chunks.rows == 2 * per_batch
+            got, off = [], {"n": 0}
+            while off["n"] < n_total:
+                batches, end = reader.read(off)
+                rows = rows_of(batches)
+                assert 0 < len(rows) <= per_batch
+                assert end == {"n": off["n"] + len(rows)}
+                got += rows
+                off = end
+            reader._drop_connection()
+    finally:
+        sys.setswitchinterval(switch)
+    assert off == {"n": n_total}
+    assert [r["timestamp"] for r in got] == list(range(n_total))
+    assert max(queued) <= 2 * per_batch
+
+
+def test_pump_error_is_raised_by_read_and_ends_the_stream(monkeypatch):
+    """An unexpected error in the pump is not swallowed: the read() that
+    reaches it raises it, and so does every later read(), with no row
+    from past the error (no silent fallback)."""
+    import time
+
+    from kafka_firehose_nozzle_spark.sources import firehose
+
+    calls = []
+    decode = firehose.decode_frames
+
+    def decode_then_fail(frames, schema):
+        frames = list(frames)
+        calls.append(len(frames))
+        if len(calls) == 2:
+            raise RuntimeError("decode blew up")
+        return decode(frames, schema)
+
+    monkeypatch.setattr(firehose, "decode_frames", decode_then_fail)
+    with StubDoppler(
+        [{"frames": wire_frames(4), "interval": 0.3}], token=TOKEN
+    ) as stub:
+        reader = FirehoseStreamReader(reader_opts(stub, idleTimeout=5))
+        rows1, end1 = reader.read({"n": 0})
+        assert len(rows_of(rows1)) == 1 and end1 == {"n": 1}
+        with pytest.raises(RuntimeError, match="decode blew up"):
+            reader.read(end1)
+        time.sleep(0.8)  # frames 3 and 4 have been sent
+        with pytest.raises(RuntimeError, match="decode blew up"):
+            reader.read(end1)
+    assert calls == [1, 1]
+
+
 def test_unauthorized_401_exhausts_retry_budget():
     """Bad token -> real 401 on the upgrade -> the dial spends its
     budget and fails with noaa's ErrMaxRetriesReached message
@@ -973,6 +1059,49 @@ def test_live_websocket_through_spark_stream(spark, tmp_path):
         want[e["eventType"]] = want.get(e["eventType"], 0) + 1
     assert {r.eventType: r.n for r in got} == want
     assert stub.requests[0]["path"] == "/firehose/kafka-firehose-nozzle"
+
+
+def test_query_stop_closes_the_live_socket(spark, tmp_path):
+    """Stopping the query closes the firehose connection. Spark does not
+    forward stop() to a simple reader, so the socket and its pump thread
+    must end with the source's worker process. Sessions 1 and 2 end from
+    the server, so processAllAvailable() returns on an empty batch;
+    session 3 stays open (idle timeout 60 s) until the client closes
+    it."""
+    import time
+
+    from kafka_firehose_nozzle_spark.streaming.job import start_pipeline
+
+    with StubDoppler(
+        [
+            {"frames": wire_frames(8), "then": "close"},
+            {"frames": [], "then": "close"},
+            {"frames": [], "then": "await_close"},
+        ],
+        token=TOKEN,
+    ) as stub:
+        cfg = stream_config(stub, token=TOKEN, idle_timeout=60)
+        cfg.kafka = ROUTING
+        handle = start_pipeline(
+            spark,
+            firehose_stream(spark, cfg, retryDelaySeconds=0.01),
+            cfg,
+            str(tmp_path / "ckpt"),
+            sink="memory",
+            memory_sink_name="query_stop_sink",
+        )
+        try:
+            handle.query.processAllAvailable()
+            deadline = time.monotonic() + 30
+            while len(stub.requests) < 3 and time.monotonic() < deadline:
+                time.sleep(0.05)
+            assert len(stub.requests) == 3 and not stub.closed
+        finally:
+            t_stop = time.monotonic()
+            handle.stop()
+        while not stub.closed and time.monotonic() < t_stop + 10:
+            time.sleep(0.05)
+    assert stub.closed and stub.closed[0] - t_stop < 10
 
 
 def test_bad_frames_mid_stream_quarantined_counted_and_logged(
