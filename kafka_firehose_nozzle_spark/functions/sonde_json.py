@@ -336,16 +336,3 @@ def envelopes_from_json(df: DataFrame, col: str = "value") -> DataFrame:
     """
     raw = df.select(F.from_json(F.col(col), _decode_read_schema()).alias("_raw"))
     return raw.select(*_envelope_columns(F.col("_raw")))
-
-
-def envelopes_from_json_with_value(
-    df: DataFrame, col: str = "value"
-) -> DataFrame:
-    """Like ``envelopes_from_json`` but keeps the original JSON string
-    column alongside the decoded envelope columns, so downstream routing
-    can forward the already-encoded payload verbatim
-    (``route_envelopes(..., value_col=col)``) instead of re-serializing."""
-    raw = df.select(
-        F.col(col), F.from_json(F.col(col), _decode_read_schema()).alias("_raw")
-    )
-    return raw.select(F.col(col), *_envelope_columns(F.col("_raw")))

@@ -22,44 +22,26 @@ from pyspark.sql import functions as F
 from kafka_firehose_nozzle_spark.config import Config, TopicConfig
 from kafka_firehose_nozzle_spark.functions.routing import route_topic_expr
 from kafka_firehose_nozzle_spark.functions.sonde_json import sonde_json
-from kafka_firehose_nozzle_spark.stats import observe_consume, observe_routed
+from kafka_firehose_nozzle_spark.stats import OBS_COUNTERS, counters
 
 
 def route_envelopes(
-    df: DataFrame,
-    topics: TopicConfig,
-    with_observe: bool = False,
-    consume_observation=None,
-    routed_observation=None,
-    value_col: str | None = None,
+    df: DataFrame, topics: TopicConfig, with_observe: bool = False
 ) -> DataFrame:
     """Envelope DataFrame -> routed DataFrame[(topic, value)].
 
     Rows with no destination (unknown event type, or type disabled in
     config) are dropped, matching kafka.go:333-338. With ``with_observe``,
-    the reference's consume/ignore/forward counters (stats.go:19-37) ride
-    along as observed metrics — computed inside the same stage, no extra
-    pass. Pass Observation objects for batch mode; streaming uses the
-    default named observations read by the listener.
-
-    ``value_col``: for streams that already carry the encoded payload
-    (e.g. envelopes parsed from a sonde-JSON source), name the column to
-    forward verbatim instead of re-encoding. Mirrors the reference, which
-    serializes exactly once per message (encoder.go:15-18) — and avoids
-    composing to_json over from_json in one plan, which Catalyst
-    optimizes pathologically (predicate substitution through the paired
-    parse/serialize tree).
+    the reference's consume/ignore/forward counters (stats.go:19-37,
+    ``stats.counters``) ride along as the one observation
+    ``OBS_COUNTERS``, placed after routing and before the drop — computed
+    inside the same stage, no extra pass — for the stats listener to read.
     """
-    if with_observe:
-        df = observe_consume(df, consume_observation)
     routed = df.withColumn("topic", route_topic_expr(df, topics))
     if with_observe:
-        routed = observe_routed(routed, routed_observation)
-    value = (
-        F.col(value_col) if value_col is not None else sonde_json(routed)
-    )
+        routed = routed.observe(OBS_COUNTERS, *counters(routed))
     return routed.filter(F.col("topic").isNotNull()).select(
-        "topic", value.alias("value")
+        "topic", sonde_json(routed).alias("value")
     )
 
 
@@ -68,7 +50,7 @@ def route_envelopes_config(df: DataFrame, config: Config, **kw) -> DataFrame:
 
 
 def route_envelopes_dlq(
-    df: DataFrame, topics: TopicConfig, value_col: str | None = None
+    df: DataFrame, topics: TopicConfig
 ) -> tuple[DataFrame, DataFrame]:
     """Routed stream + dead-letter stream, from ONE routing evaluation.
 
@@ -91,9 +73,7 @@ def route_envelopes_dlq(
     from kafka_firehose_nozzle_spark import schemas
 
     routed_all = df.withColumn("topic", route_topic_expr(df, topics))
-    value = (
-        F.col(value_col) if value_col is not None else sonde_json(routed_all)
-    )
+    value = sonde_json(routed_all)
     good = routed_all.filter(F.col("topic").isNotNull()).select(
         "topic", value.alias("value")
     )

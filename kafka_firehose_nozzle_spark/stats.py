@@ -3,9 +3,12 @@
 The reference keeps 15 atomic counters updated from the hot path
 (stats.go:19-74, Inc stats.go:113-146) and renders them as JSON over HTTP
 (stats.go:93-96, golden stats_test.go:64-92). Spark mapping (A1):
-``df.observe(...)`` attaches the counting aggregates to the *same* batch
-plan (no second pass over the data); a StreamingQueryListener (or direct
-observed-metrics read in batch) accumulates across micro-batches.
+``counters`` is the one definition of the 11 counters the routed stream
+can count; ``pipeline.route_envelopes`` attaches them as one observation
+(``OBS_COUNTERS``) to the *same* batch plan (no second pass over the
+data), and ``streaming.job.firehose_stream`` attaches the decode-failure
+one (``OBS_DECODE``). A StreamingQueryListener accumulates both across
+micro-batches; a batch caller can ``df.agg(*counters(df))`` instead.
 
 JSON key order and names — including the reference's literal
 ``subinupt_buffer`` typo (stats.go:64) — match the golden.
@@ -19,14 +22,13 @@ import os
 import threading
 import time
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from kafka_firehose_nozzle_spark import schemas
 
 # observation names
-OBS_CONSUME = "nozzle_consume"
-OBS_ROUTED = "nozzle_routed"
+OBS_COUNTERS = "nozzle_counters"
 OBS_DECODE = "nozzle_decode"
 
 # slow-consumer alert predicate (go-nozzle/detector.go:116-124): a
@@ -43,32 +45,39 @@ def slow_consumer_predicate(df: DataFrame):
     )
 
 
-def observe_consume(df: DataFrame, observation=None) -> DataFrame:
-    """Attach consume-side counters (kafka.go:308-331, cli.go:297-303).
-
-    ``observation``: a pyspark.sql.Observation for batch mode (read its
-    ``.get`` after an action); default is a named observation readable from
-    a StreamingQueryListener in streaming mode.
-    """
+def counters(df: DataFrame) -> list[Column]:
+    """The consume, per-type, slow-consumer, ignored and forwarded counts
+    (kafka.go:308-337, cli.go:297-303) over rows that carry ``topic``."""
     et = df["eventType"]
-    return df.observe(
-        observation if observation is not None else OBS_CONSUME,
+
+    def n(cond, name: str) -> Column:
+        # count(when), not count_if: count_if is rewritten into one
+        # _common_expr alias per predicate, in a Project above the topic
+        # CASE that repeats the eventType tests; constraint propagation
+        # then doubles per alias, and every micro-batch pays it in
+        # planning (about 3x on the live path)
+        return F.count(F.when(cond, F.lit(1))).alias(name)
+
+    return [
         F.count(F.lit(1)).alias("consume"),
-        F.count_if(et == schemas.HTTP_START_STOP).alias("consume_http_start_stop"),
-        F.count_if(et == schemas.VALUE_METRIC).alias("consume_value_metric"),
-        F.count_if(et == schemas.COUNTER_EVENT).alias("consume_counter_event"),
-        F.count_if(et == schemas.LOG_MESSAGE).alias("consume_log_message"),
-        F.count_if(et == schemas.ERROR).alias("consume_error"),
-        F.count_if(et == schemas.CONTAINER_METRIC).alias("consume_container_metric"),
-        # isNull() is explicit: ~NULL.isin(...) is NULL and count_if
-        # would skip it, leaving a NULL-typed envelope counted in
-        # `consume` but in NO per-type bucket — the reference's default
-        # switch arm counts every unmatched event (nozzle.go)
-        F.count_if(
-            et.isNull() | ~et.isin(list(schemas.EVENT_TYPE_NAMES))
-        ).alias("consume_unknown"),
-        F.count_if(slow_consumer_predicate(df)).alias("slow_consumer_alert"),
-    )
+        n(et == schemas.HTTP_START_STOP, "consume_http_start_stop"),
+        n(et == schemas.VALUE_METRIC, "consume_value_metric"),
+        n(et == schemas.COUNTER_EVENT, "consume_counter_event"),
+        n(et == schemas.LOG_MESSAGE, "consume_log_message"),
+        n(et == schemas.ERROR, "consume_error"),
+        n(et == schemas.CONTAINER_METRIC, "consume_container_metric"),
+        # isNull() is explicit: ~NULL.isin(...) is NULL and count would
+        # skip it, leaving a NULL-typed envelope counted in `consume`
+        # but in NO per-type bucket — the reference's default switch
+        # arm counts every unmatched event (nozzle.go)
+        n(
+            et.isNull() | ~et.isin(list(schemas.EVENT_TYPE_NAMES)),
+            "consume_unknown",
+        ),
+        n(slow_consumer_predicate(df), "slow_consumer_alert"),
+        n(df["topic"].isNull(), "ignored"),
+        n(df["topic"].isNotNull(), "forwarded"),
+    ]
 
 
 def observe_decode(df: DataFrame) -> DataFrame:
@@ -79,7 +88,7 @@ def observe_decode(df: DataFrame) -> DataFrame:
     bad = F.col("_decode_error").isNotNull()
     return df.observe(
         OBS_DECODE,
-        F.count_if(bad).alias("consume_fail"),
+        F.count(F.when(bad, F.lit(1))).alias("consume_fail"),  # see counters
         F.collect_list(
             F.when(
                 bad,
@@ -91,15 +100,6 @@ def observe_decode(df: DataFrame) -> DataFrame:
                 ),
             )
         ).alias("bad_frames"),
-    )
-
-
-def observe_routed(df: DataFrame, observation=None) -> DataFrame:
-    """Attach routed-side counters; expects a ``topic`` column (P2)."""
-    return df.observe(
-        observation if observation is not None else OBS_ROUTED,
-        F.count_if(F.col("topic").isNull()).alias("ignored"),
-        F.count_if(F.col("topic").isNotNull()).alias("forwarded"),
     )
 
 
@@ -229,7 +229,7 @@ def make_streaming_listener(stats: Stats, query_id=None):
             if self.query_id is not None and str(prog.id) != str(self.query_id):
                 return
             om = prog.observedMetrics or {}
-            for name in (OBS_CONSUME, OBS_ROUTED, OBS_DECODE):
+            for name in (OBS_COUNTERS, OBS_DECODE):
                 row = om.get(name)
                 if row is not None:
                     stats.merge_observation(row.asDict())

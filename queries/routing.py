@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from kafka_firehose_nozzle_spark.functions.routing import route_topic_expr
 from kafka_firehose_nozzle_spark.pipeline import route_envelopes
 from kafka_firehose_nozzle_spark.sources.events_adapter import events_to_envelopes
+from kafka_firehose_nozzle_spark.stats import counters
 
 from ._base import ROUTE_TOPICS, _pure_plan, _t, memo, query
 
@@ -123,24 +124,22 @@ ORACLE_STATS_COUNTERS = f"""
 @_pure_plan
 def q_stats_counters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1: the reference's consume/ignore/forward counters as one
-    aggregation over the envelope stream (stats.go:19-37)."""
-    from kafka_firehose_nozzle_spark import schemas
-
+    aggregation over the envelope stream (stats.go:19-37), from the same
+    ``stats.counters`` definition the live observation uses."""
     # fan=False: one CASE projection + one 1-row aggregate — scan-class
     # work, the fan-out exchange measured as pure loss (see _envelopes)
     env = _envelopes(spark, sf_dir, fan=False)
     env = env.withColumn("topic", route_topic_expr(env, ROUTE_TOPICS))
-    et = F.col("eventType")
-    return env.agg(
-        F.count(F.lit(1)).alias("consume"),
-        F.count_if(et == schemas.HTTP_START_STOP).alias("consume_http_start_stop"),
-        F.count_if(et == schemas.LOG_MESSAGE).alias("consume_log_message"),
-        F.count_if(et == schemas.VALUE_METRIC).alias("consume_value_metric"),
-        F.count_if(et == schemas.COUNTER_EVENT).alias("consume_counter_event"),
-        F.count_if(et == schemas.ERROR).alias("consume_error"),
-        F.count_if(~et.isin(list(schemas.EVENT_TYPE_NAMES))).alias("consume_unknown"),
-        F.count_if(F.col("topic").isNull()).alias("ignored"),
-        F.count_if(F.col("topic").isNotNull()).alias("forwarded"),
+    return env.agg(*counters(env)).select(
+        "consume",
+        "consume_http_start_stop",
+        "consume_log_message",
+        "consume_value_metric",
+        "consume_counter_event",
+        "consume_error",
+        "consume_unknown",
+        "ignored",
+        "forwarded",
     )
 
 
@@ -201,7 +200,6 @@ def q_roundtrip_route_topics(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the fields routing touches, but OptimizeJsonExprs can then prune
     # the parse to those leaves (1.36 s vs 2.00 s for this half at
     # sf0.1, results identical; equivalence pinned in test_routing.py).
-    # Forwarding pipelines keep envelopes_from_json_with_value.
     from kafka_firehose_nozzle_spark.functions.routing import (
         route_topic_from_wire,
     )

@@ -74,6 +74,12 @@ class StubDoppler:
 
     def __exit__(self, *exc) -> None:
         self._stop.set()
+        # close() alone leaves the accept thread blocked in accept();
+        # shutdown wakes it, so the join below does not wait its timeout
+        try:
+            self._listener.shutdown(socket.SHUT_RDWR)
+        except OSError:
+            pass
         try:
             self._listener.close()
         except OSError:

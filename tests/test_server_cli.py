@@ -205,19 +205,16 @@ def test_streaming_listener_scoped_to_query_id():
 
 def test_null_event_type_lands_in_consume_unknown(spark):
     """A NULL eventType row must count in consume_unknown, not vanish:
-    ~NULL.isin(...) is NULL and count_if skips it, which broke the
+    ~NULL.isin(...) is NULL and count skips it, which broke the
     reference invariant consume == sum(per-type) + unknown."""
-    from pyspark.sql import Observation
-
-    from kafka_firehose_nozzle_spark.stats import observe_consume
+    from kafka_firehose_nozzle_spark.stats import counters
 
     df = spark.createDataFrame(
-        [(None, "o", None), (4, "o", None), (999, "o", None)],
-        "eventType int, origin string, counterEvent struct<name:string>",
+        [(None, "o", None, None), (4, "o", None, None), (999, "o", None, None)],
+        "eventType int, origin string, counterEvent struct<name:string>, "
+        "topic string",
     )
-    obs = Observation()
-    observe_consume(df, obs).count()
-    got = obs.get
+    got = df.agg(*counters(df)).first()
     assert got["consume"] == 3
     assert got["consume_http_start_stop"] == 1
     assert got["consume_unknown"] == 2  # the NULL row AND the 999 row

@@ -1,13 +1,15 @@
 """Stats tests: golden JSON (stats_test.go:37-93), concurrency
 (stats_test.go:11-35), and observe()-based counter accumulation (A1)."""
 
+import dataclasses
 import json
 import threading
 
 from kafka_firehose_nozzle_spark.config import TopicConfig
 from kafka_firehose_nozzle_spark.fixtures import canonical_envelope_df
+from kafka_firehose_nozzle_spark.functions.routing import route_topic_expr
 from kafka_firehose_nozzle_spark.pipeline import route_envelopes
-from kafka_firehose_nozzle_spark.stats import OBS_CONSUME, OBS_ROUTED, Stats
+from kafka_firehose_nozzle_spark.stats import Stats, counters
 
 FULL = TopicConfig(
     log_message="log",
@@ -60,23 +62,13 @@ def test_stats_concurrent_inc():
 
 
 def test_observe_counters_batch(spark):
-    """Batch-mode observed metrics replicate the consume/route counters."""
-    from pyspark.sql import Observation
-
-    consume_obs = Observation("consume")
-    routed_obs = Observation("routed")
+    """The counters aggregated over routed rows replicate the
+    consume/route counters; the observed route keeps its 7 rows."""
     df = canonical_envelope_df(spark)
-    out = route_envelopes(
-        df,
-        FULL,
-        with_observe=True,
-        consume_observation=consume_obs,
-        routed_observation=routed_obs,
-    )
-    collected = out.collect()  # action materializes observations
+    routed = df.withColumn("topic", route_topic_expr(df, FULL))
     stats = Stats()
-    stats.merge_observation(consume_obs.get)
-    stats.merge_observation(routed_obs.get)
+    stats.merge_observation(routed.agg(*counters(routed)).first().asDict())
+    collected = route_envelopes(df, FULL, with_observe=True).collect()
     snap = stats.snapshot()
     assert snap["consume"] == 8
     assert snap["consume_log_message"] == 1
@@ -87,3 +79,16 @@ def test_observe_counters_batch(spark):
     assert snap["slow_consumer_alert"] == 1  # slow1
     assert snap["delay"] == 7  # nothing published yet
     assert len(collected) == 7
+
+
+def test_route_envelopes_observes_once_without_common_exprs(spark):
+    """One CollectMetrics node per routed stream, and no count_if
+    rewrite aliases (_common_expr_N) above the topic CASE: constraint
+    propagation doubles its work per alias, which multiplied each live
+    batch's planning time."""
+    templated = dataclasses.replace(FULL, log_message="", log_message_fmt="log-%s")
+    df = canonical_envelope_df(spark)
+    out = route_envelopes(df, templated, with_observe=True)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("CollectMetrics") == 1
+    assert "_common_expr" not in plan
