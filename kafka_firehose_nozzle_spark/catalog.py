@@ -1,22 +1,14 @@
-"""SQL surface: register the lake tables as temp views.
+"""The lake tables of an sf directory: their names and one typed read.
 
-A user of the reference interacts through config + a binary; a user of
-this engine may prefer ``spark.sql`` over the DataFrame API.  This
-module is that front door: one call registers every known table of an
-sf directory as a temporary view (names match the DuckDB oracle's —
+``TABLES`` lists the tables (names match the DuckDB oracle's —
 ``region nation customer supplier part orders lineitem events
-documents embeddings``), so any ANSI query — including the oracle SQL
-strings in ``queries.relational`` — runs directly via ``spark.sql(...)``.
+documents embeddings``); the query registry reads each one through
+:func:`read_table`.
 
-Views are metadata only: registering ten tables costs ten parquet
-footer reads, no data scan; Catalyst still pushes filters/prunes
-columns through a view exactly as through ``spark.read.parquet``.
-
-This module owns the testdata's one physical quirk so SQL users never
+This module owns the testdata's one physical quirk so queries never
 see it: the driver's parquet carries TIMESTAMP(NANOS), which Spark
 reads as int64 under ``nanosAsLong``; the known timestamp columns are
-derived back to TimestampType (micros — exact for this data) before
-the view is created.
+derived back to TimestampType (micros — exact for this data).
 """
 
 from __future__ import annotations
@@ -70,16 +62,3 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             )
     return df
 
-
-def register_tables(
-    spark: SparkSession, sf_dir: str, prefix: str = ""
-) -> list[str]:
-    """Create/replace one temp view per table of ``sf_dir``; returns the
-    view names.  ``prefix`` namespaces them (e.g. two SFs side by
-    side: ``register_tables(spark, sf1_dir, prefix="sf1_")``)."""
-    names = []
-    for t in TABLES:
-        name = f"{prefix}{t}"
-        read_table(spark, sf_dir, t).createOrReplaceTempView(name)
-        names.append(name)
-    return names

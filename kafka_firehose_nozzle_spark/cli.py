@@ -17,14 +17,17 @@ import os
 import sys
 import tempfile
 
-from kafka_firehose_nozzle_spark.config import Config, load_config
+from kafka_firehose_nozzle_spark.config import (
+    DEFAULT_IDLE_TIMEOUT,
+    DEFAULT_RETRY_COUNT,
+    Config,
+    load_config,
+)
 
 DEFAULT_CFG_PATH = "example/kafka-firehose-nozzle.toml"  # cli.go:31
 DEFAULT_STATS_INTERVAL = 10  # seconds, cli.go:35
 DEFAULT_USERNAME = "admin"  # cli.go:38
 DEFAULT_SUBSCRIPTION_ID = "debug-kafka-firehose-nozzle"  # cli.go:46
-DEFAULT_IDLE_TIMEOUT = 60  # cli.go:50
-DEFAULT_RETRY_COUNT = 5  # cli.go:53
 ENV_PASSWORD = "UAA_PASSWORD"  # cli.go:57
 
 EXIT_OK = 0

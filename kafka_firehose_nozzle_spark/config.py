@@ -14,6 +14,9 @@ import os
 import tomllib
 from dataclasses import dataclass, field
 
+DEFAULT_IDLE_TIMEOUT = 60  # cli.go:50
+DEFAULT_RETRY_COUNT = 5  # cli.go:53
+
 
 @dataclass
 class TopicConfig:

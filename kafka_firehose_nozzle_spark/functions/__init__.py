@@ -9,15 +9,11 @@ from kafka_firehose_nozzle_spark.functions.routing import (
     route_topic_expr,
 )
 from kafka_firehose_nozzle_spark.functions.sonde_json import sonde_json
-from kafka_firehose_nozzle_spark.functions.uuid_codec import (
-    str_to_uuid_struct,
-    uuid_to_str,
-)
+from kafka_firehose_nozzle_spark.functions.uuid_codec import uuid_to_str
 
 __all__ = [
     "app_id_expr",
     "route_topic_expr",
     "sonde_json",
-    "str_to_uuid_struct",
     "uuid_to_str",
 ]

@@ -1,8 +1,9 @@
-"""UUID {low, high} <-> canonical string, as native Spark expressions.
+"""UUID {low, high} -> canonical string, as a native Spark expression.
 
 The reference stores a 128-bit id as two *little-endian* uint64s and renders
 ``%x-%x-%x-%x-%x`` over the 16-byte LE concatenation (uuid2str, reference
-kafka.go:214-219; inverse str2uuid in helper_test.go:17-24). Golden vector
+kafka.go:214-219; its inverse str2uuid is a test helper there,
+helper_test.go:17-24, and in tests/test_uuid_codec.py here). Golden vector
 (kafka_test.go:542-555):
 
     {low: 0x7243cc580bc17af4, high: 0x79d4c3b2020e67a5}
@@ -58,30 +59,3 @@ def uuid_to_str(uuid_struct: Column) -> Column:
         F.substring(full, 21, 12),
     )
 
-
-def _hex_to_long(hex16: Column) -> Column:
-    """16 LE hex chars -> signed long, handling values >= 2^63.
-
-    ``conv(x, 16, 10)`` returns the *unsigned* decimal string; go through
-    Decimal(20,0) and wrap negatives to match two's-complement semantics.
-    """
-    be = F.concat(*[F.substring(hex16, 15 - 2 * i, 2) for i in range(8)])
-    unsigned = F.conv(be, 16, 10).cast("decimal(20,0)")
-    two63 = F.lit("9223372036854775808").cast("decimal(20,0)")
-    two64 = F.lit("18446744073709551616").cast("decimal(21,0)")
-    signed = F.when(unsigned >= two63, (unsigned - two64)).otherwise(unsigned)
-    return signed.cast("long")
-
-
-def str_to_uuid_struct(s: Column) -> Column:
-    """Inverse of uuid_to_str (reference str2uuid, helper_test.go:17-24)."""
-    clean = F.lower(F.regexp_replace(s, "-", ""))
-    lo_hex = F.substring(clean, 1, 16)
-    hi_hex = F.substring(clean, 17, 16)
-    return F.when(
-        s.isNotNull(),
-        F.struct(
-            _hex_to_long(lo_hex).alias("low"),
-            _hex_to_long(hi_hex).alias("high"),
-        ),
-    )

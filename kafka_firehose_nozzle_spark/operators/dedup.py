@@ -153,15 +153,6 @@ def minhash_from_hashed(hashed: Column, num_hashes: int = 8) -> Column:
     )
 
 
-def minhash_signature(text: Column, num_hashes: int = 8) -> Column:
-    """MinHash signature (array<long>, length num_hashes) over 3-word
-    token-hash shingles. Per-row, no shuffle: min_j over affine lane
-    hashes. Convenience form for single-expression use (the shingle
-    array is rebuilt once per lane here — interpreted HOFs get no CSE);
-    pipelines should stage the hashed shingles first (with_minhash)."""
-    return minhash_from_hashed(token_hash_shingles(text), num_hashes)
-
-
 def minhash_bands(sig: Column, num_bands: int = 4, rows_per_band: int = 2) -> Column:
     """LSH band hashes: array<string> of md5(band slice). Two documents
     agree on a band iff that band's signature rows all match."""
@@ -397,17 +388,6 @@ def simhash_from_hashes(hashes: Column, bits: int = 16) -> Column:
     return acc
 
 
-def simhash(text: Column, bits: int = 16) -> Column:
-    """SimHash fingerprint of a document (see simhash_from_hashes).
-
-    NOTE: as a single Column expression this inlines ``token_hashes``
-    into every per-bit term (~``bits``× evaluation). Inside a DataFrame
-    pipeline prefer :func:`with_simhash`, which stages the hash array in
-    its own projection so it is computed once per row.
-    """
-    return simhash_from_hashes(token_hashes(text), bits)
-
-
 def with_simhash(
     df: DataFrame,
     text_col: str = "text",
@@ -445,53 +425,6 @@ def exact_dup_groups(
             F.min("id").alias("canonical_id"),
             F.count(F.lit(1)).alias("n_copies"),
         )
-    )
-
-
-def embedding_dup_pairs(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    block_col: str | None = "label",
-    threshold: float = 0.99,
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs.
-
-    ``block_col`` is the blocking key (a cluster/bucket id): pairs are only
-    compared within a block, turning O(n^2) into sum of per-block
-    quadratics. At 100 TB the block id comes from a coarse LSH / IVF
-    assignment (similarity.py); here any low-cardinality column works.
-    """
-    from kafka_firehose_nozzle_spark.operators.similarity import (
-        cosine_prenormed,
-        l2_norm,
-    )
-
-    sel = df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-        *( [F.col(block_col).alias("blk")] if block_col else [F.lit(0).alias("blk")] ),
-    )
-    # hoist the per-row norm out of the O(pairs) join: computed once per
-    # row here, reused for every pair the row participates in
-    sel = sel.withColumn("nrm", l2_norm(F.col("v")))
-    a, b = sel.alias("a"), sel.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.blk") == F.col("b.blk")) & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            det_round(
-                cosine_prenormed(
-                    F.col("a.v"), F.col("b.v"), F.col("a.nrm"), F.col("b.nrm")
-                ),
-                6,
-            ).alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim") >= threshold)
     )
 
 
@@ -878,118 +811,6 @@ def dup_components(
     )
 
 
-def simhash_near_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bits: int = 16,
-    chunks: int = 4,
-    max_hamming: int = 2,
-) -> DataFrame:
-    """Near-duplicate pairs by SimHash Hamming distance <= max_hamming.
-
-    Banded chunk join (the SimHash analog of MinHash banding): split the
-    fingerprint into ``chunks`` equal bit ranges; by pigeonhole, any pair
-    within ``chunks - 1`` differing bits agrees on at least one chunk, so
-    an equi-join per chunk finds every qualifying pair without a cross
-    product. Candidates are then verified exactly with
-    bit_count(a XOR b). Shuffle volume: (chunk_ix, chunk_val, id) rows.
-    """
-    assert max_hamming < chunks, "pigeonhole recall requires hamming < chunks"
-    sh = (
-        with_simhash(df, text_col, "sh", bits)
-        .select(F.col(id_col).alias("id"), "sh")
-        .localCheckpoint(eager=False)  # computed once, reused by both sides
-    )
-    if bits <= 24:
-        # VALUE-SPACE enumeration (the r7 sf10 fix): with a small
-        # fingerprint space the chunk buckets are corpus fractions —
-        # 4-bit chunks hold n/16 docs each, so the chunk self-join is
-        # QUADRATIC in corpus size (timed out >600 s at sf10, 1 M
-        # docs). Instead enumerate the bounded value space: distinct
-        # fingerprints (<= 2^bits rows regardless of corpus size), each
-        # exploded to its sum C(bits, k<=max_hamming) flip-mask
-        # neighbors (137 for 16/2), semi-joined against the values that
-        # actually occur, then mapped back to doc pairs by two
-        # value-equi-joins. The only corpus-sized stages are one
-        # distinct over fingerprints and the final doc-pair emission —
-        # which IS the output, so nothing intermediate is quadratic.
-        from itertools import combinations
-
-        masks = [0]
-        positions = range(bits)
-        for k in range(1, max_hamming + 1):
-            masks += [
-                sum(1 << p for p in combo)
-                for combo in combinations(positions, k)
-            ]
-        vals = sh.select("sh").distinct()
-        nbrs = vals.select(
-            "sh",
-            F.explode(
-                F.array(*[
-                    F.col("sh").bitwiseXOR(F.lit(m)) for m in masks
-                ])
-            ).alias("sh2"),
-        ).join(
-            vals.select(F.col("sh").alias("sh2")).hint("broadcast"),
-            "sh2",
-            "left_semi",
-        )
-        a = sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sha"))
-        b = sh.select(F.col("id").alias("id_b"), F.col("sh").alias("shb"))
-        return (
-            nbrs.join(a, nbrs["sh"] == a["sha"])
-            .join(b, nbrs["sh2"] == b["shb"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select(
-                "id_a",
-                "id_b",
-                F.bit_count(
-                    F.col("sha").bitwiseXOR(F.col("shb"))
-                ).alias("hamming"),
-            )
-            .distinct()
-        )
-    # wide fingerprints (value space too big to enumerate): pigeonhole
-    # chunk-banded join — chunk width bits/chunks must be large enough
-    # that buckets are selective (16-bit chunks of a 64-bit simhash)
-    width = bits // chunks
-    mask = (1 << width) - 1
-    chunked = sh.select(
-        "id",
-        "sh",
-        F.posexplode_outer(
-            F.array(
-                *[
-                    F.shiftrightunsigned(F.col("sh"), width * c).bitwiseAND(
-                        F.lit(mask)
-                    )
-                    for c in range(chunks)
-                ]
-            )
-        ).alias("chunk_ix", "chunk_val"),
-    )
-    a, b = chunked.alias("a"), chunked.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.chunk_ix") == F.col("b.chunk_ix"))
-            & (F.col("a.chunk_val") == F.col("b.chunk_val"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.bit_count(
-                F.col("a.sh").bitwiseXOR(F.col("b.sh"))
-            ).alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
-
-
 def simhash_hamming_pair_counts(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -998,8 +819,8 @@ def simhash_hamming_pair_counts(
     max_hamming: int = 2,
 ) -> DataFrame:
     """(hamming, n_pairs) histogram over ALL doc pairs at Hamming
-    distance <= max_hamming — the sufficient-statistics twin of
-    :func:`simhash_near_pairs` for consumers that only need COUNTS.
+    distance <= max_hamming, for consumers that only need COUNTS of
+    SimHash near-duplicate pairs, not the pairs.
 
     The r7 sf10 audit lesson: on a low-entropy corpus the qualifying
     pair SET is itself quadratic (~40% of all pairs at sf0.01; ~2e11
@@ -1078,11 +899,6 @@ def char_ngram_set(text: Column, k: int = 5) -> Column:
     return F.when(m >= 1, F.array_distinct(grams)).otherwise(
         F.array(F.lit(""))
     )
-
-
-def char_trigram_set(text: Column) -> Column:
-    """Back-compat alias: distinct character trigrams."""
-    return char_ngram_set(text, 3)
 
 
 def prefix_jaccard_pairs(

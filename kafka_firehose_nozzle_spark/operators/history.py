@@ -117,51 +117,3 @@ def merge_upsert(
         .filter(F.col("_rn") == 1)
         .drop("_prio", "_rn")
     )
-
-
-def merge_rollup(
-    old_agg: DataFrame,
-    new_rows: DataFrame,
-    group_cols: list[str],
-    sum_cols: list[str],
-) -> DataFrame:
-    """Incremental materialized-rollup maintenance: fold a new batch of
-    raw rows into an existing (group, count, sums...) aggregate WITHOUT
-    recomputing history — the pattern that keeps a 100 TB daily rollup
-    a one-partition job instead of a full-table scan.
-
-    Works for any algebraic aggregate expressible as (count, sums):
-    the new batch partial-aggregates (one shuffle over the BATCH only),
-    then a union + re-aggregate folds it into the old table — whose
-    size is group-cardinality rows, not history rows.  The result is
-    bit-identical to aggregating (history + batch) from scratch for
-    integer/decimal sums (addition is associative-commutative there;
-    float sums would need the repo's DECIMAL-quantization idiom first),
-    which tests/test_operators.py pins.
-
-    ``old_agg`` schema: group_cols + ['n'] + sum_cols (as produced by a
-    prior merge_rollup or the bootstrap aggregate below).
-    """
-    batch_agg = new_rows.groupBy(*group_cols).agg(
-        F.count(F.lit(1)).alias("n"),
-        *[F.sum(c).alias(c) for c in sum_cols],
-    )
-    return (
-        old_agg.select(*group_cols, "n", *sum_cols)
-        .unionByName(batch_agg)
-        .groupBy(*group_cols)
-        .agg(
-            F.sum("n").alias("n"),
-            *[F.sum(c).alias(c) for c in sum_cols],
-        )
-    )
-
-
-def bootstrap_rollup(
-    rows: DataFrame, group_cols: list[str], sum_cols: list[str]
-) -> DataFrame:
-    """The from-scratch aggregate merge_rollup maintains incrementally."""
-    return rows.groupBy(*group_cols).agg(
-        F.count(F.lit(1)).alias("n"),
-        *[F.sum(c).alias(c) for c in sum_cols],
-    )

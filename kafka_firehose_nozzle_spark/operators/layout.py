@@ -22,15 +22,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def minmax_scale(c: Column, lo: Column, hi: Column, bits: int) -> Column:
-    """Scale a value with known [lo, hi] bounds to [0, 2^bits) — integer
-    arithmetic only: (v - lo) * (2^bits - 1) DIV max(hi - lo, 1).  The
-    bounds come from a separate aggregate (or table stats); passing them
-    as columns keeps the scaling a pure projection."""
-    span = F.greatest(hi - lo, F.lit(1)).cast("bigint")
-    return ((c - lo).cast("bigint") * F.lit((1 << bits) - 1)) / span
-
-
 def _floor_div(num: Column, den: Column) -> Column:
     # inputs are non-negative here, so CAST-truncation == floor in both
     # engines; spelled once so the oracle fragment mirrors it exactly
@@ -82,62 +73,6 @@ def scaled_zorder2(
         F.greatest(b_hi - b_lo, F.lit(1)).cast("bigint"),
     )
     return zorder_key2(sa, sb, bits)
-
-
-def compact_small_files(
-    spark,
-    src: str,
-    dst: str,
-    target_bytes: int = 128 * 1024 * 1024,
-    sort_col: str | None = None,
-) -> int:
-    """Small-file compaction — the housekeeping pass every long-lived
-    lake table needs (streaming ingest and per-partition writers leave
-    thousands of KB-scale files; at 100 TB the scan's task-scheduling
-    and footer-read overhead comes to dominate actual IO).
-
-    Sizing reads ONLY filesystem metadata (total on-disk bytes), never
-    data: target file count = ceil(total / target_bytes). The rewrite
-    is one job — ``repartition(n)`` (round-robin, even output sizes)
-    or, with ``sort_col``, ``repartitionByRange + sortWithinPartitions``
-    so compaction simultaneously restores clustering (and with it
-    min/max data skipping) instead of destroying it.
-
-    Metadata listing goes through the Hadoop FileSystem API, so the
-    helper sizes correctly on ANY supported scheme (file://, hdfs://,
-    s3a://...), not just the driver's local disk — a driver-local
-    ``os.walk`` would silently report total=0 on a remote store and
-    collapse the whole table into one partition.
-
-    Returns the output file count. Correctness (row preservation) and
-    the file-count/size invariants are pinned by
-    tests/test_operators.py::test_compact_small_files."""
-    import math
-
-    def _parquet_bytes_and_count(path_str: str) -> tuple[int, int]:
-        jvm = spark._jvm
-        jpath = jvm.org.apache.hadoop.fs.Path(path_str)
-        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        total, count = 0, 0
-        it = fs.listFiles(jpath, True)  # recursive remote iterator
-        while it.hasNext():
-            st = it.next()
-            if st.getPath().getName().endswith(".parquet"):
-                total += st.getLen()
-                count += 1
-        return total, count
-
-    total, _ = _parquet_bytes_and_count(src)
-    n_out = max(1, math.ceil(total / target_bytes))
-    df = spark.read.parquet(src)
-    if sort_col is not None:
-        out = df.repartitionByRange(n_out, F.col(sort_col)).sortWithinPartitions(
-            sort_col
-        )
-    else:
-        out = df.repartition(n_out)
-    out.write.mode("overwrite").parquet(dst)
-    return _parquet_bytes_and_count(dst)[1]
 
 
 def hilbert_stages(df, x: str, y: str, out: str = "hkey", bits: int = 5):

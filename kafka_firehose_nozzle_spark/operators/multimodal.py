@@ -21,9 +21,9 @@ Design for 100 TB multimodal corpora (images/audio/video as columns):
   fps-grid sampling, oracle-checked pixel hashes).  Only entropy-coded
   decode (JPEG/GIF pixels, H.264 frames) remains gated — those rows
   yield NULL features/quarantine rows rather than crashing; ffmpeg
-  would slot in at the same seams.  ``media_features`` exercises the
-  same plumbing with deterministic features (byte length, content
-  hash).
+  would slot in at the same seams.  ``media_features_builtin`` computes
+  the deterministic features (byte length, content hash) with built-in
+  functions, no Python evaluator.
 """
 
 from __future__ import annotations
@@ -55,15 +55,6 @@ MEDIA_SCHEMA = T.StructType(
     ]
 )
 
-FEATURES_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("n_bytes", T.IntegerType(), True),
-        T.StructField("content_hash", T.StringType(), True),
-    ]
-)
-
-
 def documents_as_media(docs: DataFrame) -> DataFrame:
     """Adapter: the documents table as a media table (text bytes as the
     opaque payload) — lets the multimodal plumbing run on driver
@@ -89,41 +80,12 @@ def documents_as_media(docs: DataFrame) -> DataFrame:
     )
 
 
-def media_features(media: DataFrame, batch_size_hint: int = 1024) -> DataFrame:
-    """Arrow-batched feature extraction over payload bytes (mapInPandas).
-
-    Features here are deterministic (length + md5) so the distributed
-    plumbing is testable without codec libraries; a real pipeline swaps
-    the inner function for image embeddings etc. without touching the
-    plan shape.
-    """
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        for pdf in batches:
-            payload = pdf["payload"]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "n_bytes": payload.map(lambda b: len(b) if b is not None else 0),
-                    "content_hash": payload.map(
-                        lambda b: hashlib.md5(b).hexdigest() if b is not None else None
-                    ),
-                }
-            )
-
-    return media.select("media_id", "payload").mapInPandas(
-        extract, schema=FEATURES_SCHEMA
-    )
-
-
 def media_features_builtin(media: DataFrame) -> DataFrame:
-    """JVM-side equivalent of :func:`media_features` for features that
-    built-in functions can express (byte length, md5). Stays inside
-    whole-stage codegen — no Python evaluator in the plan — so this is
-    the path for anything expressible without a codec; ``media_features``
-    (mapInPandas) remains the seam for real decode work only.
+    """Deterministic per-media features (byte length, md5) from built-in
+    functions. Stays inside whole-stage codegen — no Python evaluator in
+    the plan — so this is the path for anything expressible without a
+    codec; real decode work runs Arrow-batched (``decode_image``,
+    ``sample_frames``).
     """
     return media.select(
         "media_id",

@@ -573,17 +573,6 @@ def kmeans_centroids(
 # --- Product quantization (compressed ANN) ----------------------------------
 
 
-def sq_dist(a: Column, b: Column) -> Column:
-    """Squared L2 distance as the same left fold both engines use:
-    zip -> (x-y)*(x-y) -> left-fold add.  Bit-identical to DuckDB's
-    list_sum(list_transform(...)) on the same inputs."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
 def pq_codebook(
     df: DataFrame,
     num_sub: int = 4,
@@ -742,7 +731,7 @@ def pq_encode(
     codes = []
     # single-parse literal codebooks (r11): one py4j round trip per
     # subspace instead of num_codes x subdim — see _matrix_double_sql;
-    # the parsed slice/sq_dist folds are the Column API's exact trees
+    # the parsed slice/(x-y)*(x-y) folds are the Column API's exact trees
     vsql = f"CAST(`{vec_col}` AS ARRAY<DOUBLE>)"
     for s in range(num_sub):
         cents_sql = _matrix_double_sql(
@@ -776,8 +765,8 @@ def pq_topk(
 
     The query's distance to every codebook centroid is a num_sub ×
     num_codes lookup table computed driver-side in pure IEEE doubles
-    (same (x-y)*(x-y) left fold as sq_dist, so the table is
-    bit-identical to what either engine would compute).  Scoring is
+    (the (x-y)*(x-y) left fold the code assignment uses, so the table
+    is bit-identical to what either engine would compute).  Scoring is
     then a pure map over the codes column: zip the row's codes with
     the literal LUT, pick one double per subspace, left-fold add —
     4 array lookups + 4 adds per row, no join, no shuffle; top-k is a
@@ -816,17 +805,6 @@ def pq_topk(
         .limit(k)
         .select(id_col, det_round(F.col("_dist"), 6).alias("pq_dist"))
     )
-
-
-def write_ivf_partitioned(assigned: DataFrame, path: str) -> None:
-    """Persist an IVF-assigned corpus PARTITIONED BY cell id — the
-    storage layout that turns ivf_topk's probe semi-join into parquet
-    partition pruning: a query that probes nprobe of C cells reads
-    nprobe/C of the files, decided at planning time from directory
-    names, before any row is touched. This is the 100 TB deployment
-    shape the ivf_assign docstring promises; asserted by
-    tests/test_operators.py::test_ivf_partitioned_storage_prunes_scan."""
-    assigned.write.partitionBy("cell_id").mode("overwrite").parquet(path)
 
 
 def ivf_topk(

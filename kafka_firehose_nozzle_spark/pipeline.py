@@ -48,44 +48,3 @@ def route_envelopes(
 def route_envelopes_config(df: DataFrame, config: Config, **kw) -> DataFrame:
     return route_envelopes(df, config.kafka.topic, **kw)
 
-
-def route_envelopes_dlq(
-    df: DataFrame, topics: TopicConfig
-) -> tuple[DataFrame, DataFrame]:
-    """Routed stream + dead-letter stream, from ONE routing evaluation.
-
-    The reference counts unroutable messages and drops them
-    (kafka.go:333-338 + stats.go ignored counter); production pipelines
-    usually quarantine them instead so schema drift is debuggable after
-    the fact. Returns ``(routed, dead)``:
-
-    - ``routed``: exactly route_envelopes' output [(topic, value)];
-    - ``dead``: the dropped rows as [eventType, origin, reason, value],
-      reason distinguishing 'unknown_event_type' (a type the dispatch
-      table has never heard of — the schema-drift signal) from
-      'topic_disabled' (known type, operator turned the topic off).
-
-    Both sides are filters over the same single-projection routing
-    stage; in streaming, write them from one foreachBatch so the split
-    stays one source read per micro-batch
-    (tests/test_streaming.py::test_stream_dead_letter_quarantine).
-    """
-    from kafka_firehose_nozzle_spark import schemas
-
-    routed_all = df.withColumn("topic", route_topic_expr(df, topics))
-    value = sonde_json(routed_all)
-    good = routed_all.filter(F.col("topic").isNotNull()).select(
-        "topic", value.alias("value")
-    )
-    # single source of truth for "known type" — a hand-enumerated list
-    # would silently drift if a type is ever added to the schema map
-    known = list(schemas.EVENT_TYPE_NAMES)
-    dead = routed_all.filter(F.col("topic").isNull()).select(
-        "eventType",
-        "origin",
-        F.when(F.col("eventType").isin(known), F.lit("topic_disabled"))
-        .otherwise(F.lit("unknown_event_type"))
-        .alias("reason"),
-        value.alias("value"),
-    )
-    return good, dead

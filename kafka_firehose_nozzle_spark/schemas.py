@@ -137,9 +137,8 @@ ENVELOPE_SCHEMA = T.StructType(
         T.StructField("error", ERROR_SCHEMA, True),
         T.StructField("containerMetric", CONTAINER_METRIC_SCHEMA, True),
         # raw unknown-field residue from the wire decode — gogo proto's
-        # XXX_unrecognized (envelope.pb.go:116) carried through the
-        # DataFrame boundary so decode -> DataFrame -> re-encode loses
-        # nothing when a newer Doppler adds envelope fields. NULL on
+        # XXX_unrecognized (envelope.pb.go:116) kept with the row, so
+        # envelope fields a newer Doppler adds are not silently lost. NULL on
         # every non-wire source; NEVER emitted into sonde JSON (easyjson
         # has no unknown-field concept, encoder parity is byte-exact).
         T.StructField("_unrecognized", T.BinaryType(), True),

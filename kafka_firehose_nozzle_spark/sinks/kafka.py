@@ -153,8 +153,3 @@ def write_stream_kafka(routed: DataFrame, config: Config, checkpoint: str):
     )
     return writer.start()
 
-
-def write_batch_kafka(routed: DataFrame, config: Config) -> None:
-    """Batch variant (used by tests against an embedded broker, and for
-    backfill jobs)."""
-    routed.write.format("kafka").options(**kafka_sink_options(config)).save()

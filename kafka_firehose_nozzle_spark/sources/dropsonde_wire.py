@@ -16,8 +16,8 @@ importable on every executor with no native deps.
 
 Decoded output is the plain-dict envelope format used by
 ``fixtures.canonical_envelopes``; ``wire_batch.decode_frames`` turns a
-list of frames into one Arrow batch of such rows for both the live
-firehose reader and the lake decode.
+list of frames into one Arrow batch of such rows for the live firehose
+reader.
 
 Integer conventions (see schemas.py): uint64 fields are carried as signed
 64-bit longs (two's-complement wrap), matching how the UUID codec and JSON
@@ -271,6 +271,6 @@ def _append_len(out: bytearray, field_no: int, payload: bytes) -> None:
 
 def encode_envelope(env: dict) -> bytes:
     """Plain envelope dict -> events.Envelope wire bytes. Inverse of
-    :func:`decode_envelope`; used by the reader's fixture mode, the lake
-    encoder (wire_batch.encode_wire_frames) and golden tests."""
+    :func:`decode_envelope`; used by the reader's fixture mode, the
+    benchmark's frame generator and golden tests."""
     return _encode_message(env, ENVELOPE_DESC)

@@ -31,10 +31,6 @@ Source options (all strings, per the DataSource API):
   flood fills batches to the cap; a steady stream's batch holds what
   arrived since the last one. Queued rows not yet read are
   lost on a crash, like frames in the kernel's socket buffer.
-- ``filterType``  server-side event filter (SRC3): ``logs`` or
-  ``metrics``, appended to the websocket URL as ``filter-type=...``
-  exactly like noaa (noaa/consumer/filter.go:3-20, firehose.go:42-44);
-  also enforced client-side so fixture mode honors it
 - ``retryDelaySeconds``  initial reconnect backoff; doubles per failure
   up to 60 s (noaa async.go:21-23 DefaultMinRetryDelay/MaxRetryDelay)
 - ``fixtureRows``  TEST MODE: emit N deterministic canonical envelopes
@@ -44,8 +40,8 @@ Source options (all strings, per the DataSource API):
   to wire frames and decoded like live traffic.
 
 ``read()`` hands Spark one Arrow batch per micro-batch, made of the
-pump's chunks, each built by ``wire_batch.decode_frames`` — the same
-decode the lake path runs — in ``wire_batch.FRAME_SCHEMA``: the envelope fields plus ``_decode_error``
+pump's chunks, each built by ``wire_batch.decode_frames`` in
+``wire_batch.FRAME_SCHEMA``: the envelope fields plus ``_decode_error``
 and ``_raw``, so a bad frame is a quarantined row, not a failed query.
 ``streaming.job.firehose_stream`` splits the good rows (ENVELOPE_SCHEMA)
 from the bad ones (counted and logged).
@@ -61,21 +57,18 @@ from collections import deque
 from collections.abc import Iterator
 
 import pyarrow as pa
-import pyarrow.compute as pc
 from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
-from pyspark.sql.pandas.types import to_arrow_schema
 
-from kafka_firehose_nozzle_spark import schemas
+from kafka_firehose_nozzle_spark.config import (
+    DEFAULT_IDLE_TIMEOUT,
+    DEFAULT_RETRY_COUNT,
+)
 from kafka_firehose_nozzle_spark.sources.dropsonde_wire import encode_envelope
 from kafka_firehose_nozzle_spark.sources.wire_batch import (
     FRAME_SCHEMA,
     decode_frames,
 )
 
-_ARROW_SCHEMA = to_arrow_schema(FRAME_SCHEMA)
-
-DEFAULT_IDLE_TIMEOUT = 60  # cli.go:50
-DEFAULT_RETRY_COUNT = 5  # cli.go:53
 DEFAULT_UAA_TIMEOUT = 20  # cli.go:42
 DEFAULT_MAX_BATCH_ROWS = 10_000
 DEFAULT_MIN_RETRY_DELAY = 0.5  # noaa async.go:21 DefaultMinRetryDelay
@@ -136,25 +129,10 @@ def fetch_uaa_token(
     return f"{body['token_type']} {body['access_token']}"
 
 
-# filterType -> allowed eventType set (noaa filter.go:3-20 semantics:
-# logs = LogMessage only; metrics = the three metric envelope types)
-FILTER_EVENT_TYPES = {
-    "logs": frozenset({schemas.LOG_MESSAGE}),
-    "metrics": frozenset(
-        {schemas.VALUE_METRIC, schemas.COUNTER_EVENT, schemas.CONTAINER_METRIC}
-    ),
-}
-
-
-def firehose_url(
-    doppler_addr: str, subscription_id: str, filter_type: str = ""
-) -> str:
-    """wss URL for the firehose endpoint (noaa firehose.go:42-44), with
-    the optional server-side filter-type query param (filter.go:11-19)."""
-    url = f"{doppler_addr.rstrip('/')}/firehose/{subscription_id}"
-    if filter_type:
-        url += f"?filter-type={filter_type}"
-    return url
+def firehose_url(doppler_addr: str, subscription_id: str) -> str:
+    """wss URL for the firehose endpoint (noaa firehose.go:42-44). The
+    reference nozzle dials it with no filter: it reads all envelopes."""
+    return f"{doppler_addr.rstrip('/')}/firehose/{subscription_id}"
 
 
 class _Chunks:
@@ -229,15 +207,6 @@ class FirehoseStreamReader(SimpleDataSourceStreamReader):
         self.idle_timeout = float(
             options.get("idleTimeout", DEFAULT_IDLE_TIMEOUT)
         )
-        self.filter_type = options.get("filterType", "")
-        if self.filter_type and self.filter_type not in FILTER_EVENT_TYPES:
-            raise ValueError(
-                f"filterType must be 'logs' or 'metrics', got "
-                f"{self.filter_type!r}"
-            )
-        # client-side guard; live connections ALSO push the filter to the
-        # server via the filter-type query param (noaa filter.go:11-19)
-        self._allowed = FILTER_EVENT_TYPES.get(self.filter_type)
         self._conn = None
         # the live connection's pump queue (see _pump)
         self._chunks: _Chunks | None = None
@@ -304,9 +273,7 @@ class FirehoseStreamReader(SimpleDataSourceStreamReader):
         from kafka_firehose_nozzle_spark.sources import rfc6455
 
         doppler = self.options["dopplerAddress"]
-        url = firehose_url(
-            doppler, self.options["subscriptionID"], self.filter_type
-        )
+        url = firehose_url(doppler, self.options["subscriptionID"])
         ssl_context = None
         if url.startswith("wss"):
             import ssl
@@ -398,21 +365,9 @@ class FirehoseStreamReader(SimpleDataSourceStreamReader):
         return frames
 
     def _kept(self, batch) -> Iterator:
-        """``batch`` as an iterator of at most one batch, without the
-        rows ``filterType`` excludes. Empty when no row is left: Spark
-        rejects a non-empty result whose offset did not advance."""
-        if self._allowed is not None:
-            # belt over the server-side filter; quarantined rows stay so
-            # they are still counted
-            batch = batch.filter(
-                pc.or_kleene(
-                    pc.is_in(
-                        batch.column("eventType"),
-                        value_set=pa.array(sorted(self._allowed), pa.int32()),
-                    ),
-                    pc.is_valid(batch.column("_decode_error")),
-                )
-            )
+        """``batch`` as an iterator of at most one batch: empty when the
+        batch has no rows, since Spark rejects a non-empty result whose
+        offset did not advance."""
         return iter([batch] if batch.num_rows else [])
 
     def _pump(self, conn, chunks: _Chunks) -> None:
@@ -453,7 +408,7 @@ class FirehoseStreamReader(SimpleDataSourceStreamReader):
                 except (rfc6455.WSError, OSError) as e:
                     fault = e
                 if frames:
-                    chunks.put(decode_frames(frames, _ARROW_SCHEMA), t_first)
+                    chunks.put(decode_frames(frames), t_first)
                 if fault is not None:
                     chunks.put(fault)
                     return
@@ -507,15 +462,13 @@ class FirehoseStreamReader(SimpleDataSourceStreamReader):
             parts.append(part)
             n += part.num_rows
         if not parts:
-            return pa.RecordBatch.from_pylist([], schema=_ARROW_SCHEMA)
+            return decode_frames([])
         return pa.Table.from_batches(parts).combine_chunks().to_batches()[0]
 
     def read(self, start: dict) -> tuple[Iterator, dict]:
         n = start["n"]
         if self.fixture_rows:
-            batch = decode_frames(
-                self._fixture_frames(n, self.fixture_rows), _ARROW_SCHEMA
-            )
+            batch = decode_frames(self._fixture_frames(n, self.fixture_rows))
         else:
             self._connect()
             batch = self._take()
@@ -546,7 +499,7 @@ class FirehoseStreamReader(SimpleDataSourceStreamReader):
         n, n_end = start["n"], end["n"]
         if self.fixture_rows:
             frames = self._fixture_frames(n, n_end - n)
-            return self._kept(decode_frames(frames, _ARROW_SCHEMA))
+            return self._kept(decode_frames(frames))
         lost = max(0, n_end - n)
         self.dropped_replay_rows += lost
         logging.getLogger("kafka_firehose_nozzle_spark").warning(

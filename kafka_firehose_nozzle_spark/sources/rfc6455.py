@@ -9,7 +9,7 @@ frames, fragmentation reassembly, ping/pong, and close-code surfacing —
 everything the firehose path needs, nothing more.
 
 The server half exists so tests can stand up a loopback stub Doppler
-and drive the REAL client end-to-end (connect -> auth -> filter-type ->
+and drive the REAL client end-to-end (connect -> auth ->
 binary envelope frames -> idle timeout -> close-1008), mirroring how
 the reference's own suite runs against httptest websocket servers.
 

@@ -201,16 +201,16 @@ class Stats:
         )
 
 
-def make_streaming_listener(stats: Stats, query_id=None):
+def make_streaming_listener(stats: Stats):
     """StreamingQueryListener folding per-batch observed metrics + sink
     progress into ``stats`` (the A1 accumulation across micro-batches).
 
-    ``query_id`` scopes the listener to ONE query: listeners receive
-    events for EVERY query on the shared session, and two pipelines use
-    the same observation names, so an unscoped listener double-counts
-    the other pipeline's consume/forwarded and folds foreign sink rows
-    into ``publish``. The id isn't known until ``.start()`` returns, so
-    callers may also assign ``listener.query_id`` right after start
+    Assigning ``listener.query_id`` scopes the listener to ONE query:
+    listeners receive events for EVERY query on the shared session, and
+    two pipelines use the same observation names, so an unscoped
+    listener double-counts the other pipeline's consume/forwarded and
+    folds foreign sink rows into ``publish``. The id isn't known until
+    ``.start()`` returns, so the caller assigns it right after start
     (streaming/job.py does); events arriving while it is None are
     counted unscoped — progress events only fire after a completed
     batch, so the post-start assignment wins that race in practice."""
@@ -219,7 +219,7 @@ def make_streaming_listener(stats: Stats, query_id=None):
     class StatsListener(StreamingQueryListener):
         def __init__(self):
             super().__init__()
-            self.query_id = query_id
+            self.query_id = None
 
         def onQueryStarted(self, event):
             pass

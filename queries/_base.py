@@ -12,8 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 # single source of truth for table names / TIMESTAMP(NANOS) columns /
-# the typed read lives in the package's catalog module — the SQL front
-# door and this driver contract must never drift apart
+# the typed read lives in the package's catalog module
 from kafka_firehose_nozzle_spark import catalog as CAT
 from kafka_firehose_nozzle_spark.config import TopicConfig
 
@@ -123,8 +122,7 @@ _VIEWS_CURRENT: dict[str, str] = {}
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     def build() -> DataFrame:
         # typed read (nanosAsLong + TIMESTAMP(NANOS) column derivation) is
-        # catalog.read_table — ONE implementation for the SQL views and the
-        # driver contract.
+        # catalog.read_table.
         df = CAT.read_table(spark, sf_dir, name)
         # The local testdata is one single-row-group file per table, so the
         # scan yields ONE split no matter how many cores exist. On a real lake

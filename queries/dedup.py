@@ -275,8 +275,7 @@ def q_simhash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     quadratic at any blocking — while the counts need only the <= 2^16
     value histogram and popcount-mask arithmetic; the old chunk-join
     enumeration timed out >600 s in the sf10 audit, this runs in the
-    one corpus scan). Pair-set completeness of the enumerating operator
-    (simhash_near_pairs) stays pinned by its own unit tests."""
+    one corpus scan)."""
     return D.simhash_hamming_pair_counts(
         _planted_docs(spark, sf_dir), bits=16, max_hamming=2
     )

@@ -47,9 +47,8 @@ ORACLE_MEDIA = """
 def q_media_batch_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal plumbing: documents as opaque binary media. Features
     that built-ins can express (length, md5) stay JVM-side — no Python
-    evaluator in this plan; the Arrow-batched mapInPandas path
-    (media_features) remains the seam for real codec work and keeps its
-    own unit test."""
+    evaluator in this plan; real codec work runs Arrow-batched
+    (``decode_image``, ``sample_frames``)."""
     from kafka_firehose_nozzle_spark.operators.multimodal import (
         documents_as_media,
         media_features_builtin,

@@ -5,7 +5,7 @@ websocket test servers (noaa consumer tests use httptest +
 gorilla/websocket); this is the same idea on stdlib sockets, built on
 the package's own RFC 6455 server half (rfc6455.server_handshake), so
 the REAL client path — TCP connect, HTTP Upgrade, auth header,
-filter-type query param, binary dropsonde frames, close codes — is
+binary dropsonde frames, close codes — is
 exercised end-to-end with zero third-party dependencies and zero
 external egress.
 

@@ -1,40 +1,13 @@
-"""SQL front door: registered views answer ANSI queries identically to
-the DataFrame path, with pruning/pushdown intact through the view."""
+"""The typed table read keeps column pruning and filter pushdown, also
+through a temp view (the query registry's SQL runs over such views)."""
 
-from pyspark.sql import functions as F
-
-from kafka_firehose_nozzle_spark.catalog import read_table, register_tables
+from kafka_firehose_nozzle_spark.catalog import read_table
 
 SF = "/root/testdata/sf0.001"
 
 
-def test_register_tables_and_query_via_sql(spark):
-    names = register_tables(spark, SF)
-    assert len(names) == 10
-    got = spark.sql(
-        """
-        SELECT o_orderpriority, COUNT(*) AS n
-        FROM orders
-        WHERE o_orderdate >= TIMESTAMP '2024-01-10 00:00:00'
-        GROUP BY o_orderpriority
-        """
-    )
-    want = (
-        read_table(spark, SF, "orders")
-        .filter(
-            F.col("o_orderdate")
-            >= F.lit("2024-01-10 00:00:00").cast("timestamp")
-        )
-        .groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    assert {tuple(r) for r in got.collect()} == {
-        tuple(r) for r in want.collect()
-    }
-
-
 def test_view_keeps_column_pruning_and_pushdown(spark):
-    register_tables(spark, SF)
+    read_table(spark, SF, "lineitem").createOrReplaceTempView("lineitem")
     df = spark.sql(
         "SELECT l_orderkey FROM lineitem WHERE l_quantity > 45"
     )
@@ -44,11 +17,3 @@ def test_view_keeps_column_pruning_and_pushdown(spark):
     read_schema = plan.split("ReadSchema: ")[1].splitlines()[0]
     # projection pruned to the two referenced columns, not the table
     assert "l_extendedprice" not in read_schema
-
-
-def test_prefix_namespacing_two_sfs(spark):
-    register_tables(spark, SF, prefix="a_")
-    register_tables(spark, "/root/testdata/sf0.01", prefix="b_")
-    na = spark.sql("SELECT COUNT(*) AS n FROM a_lineitem").head()["n"]
-    nb = spark.sql("SELECT COUNT(*) AS n FROM b_lineitem").head()["n"]
-    assert nb > na > 0

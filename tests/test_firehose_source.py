@@ -44,36 +44,6 @@ def test_token_validation(kw, msg):
         fetch_uaa_token(**kw)
 
 
-def test_firehose_url_with_filter_type():
-    # noaa filter.go:11-19: the filter is a server-side query param
-    assert (
-        firehose_url("wss://doppler.example.com:443", "my-sub", "logs")
-        == "wss://doppler.example.com:443/firehose/my-sub?filter-type=logs"
-    )
-
-
-def test_filter_type_logs_surfaces_only_log_messages():
-    # SRC3: filterType=logs -> only LogMessage envelopes (eventType 5)
-    reader = FirehoseStreamReader({"fixtureRows": "8", "filterType": "logs"})
-    rows, end = reader.read({"n": 0})
-    rows = rows_of(rows)
-    assert rows and all(r["eventType"] == 5 for r in rows)
-    # offsets still advance by envelopes consumed, not rows surfaced
-    assert end == {"n": 8}
-
-
-def test_filter_type_metrics_surfaces_only_metric_envelopes():
-    reader = FirehoseStreamReader({"fixtureRows": "8", "filterType": "metrics"})
-    rows, _ = reader.read({"n": 0})
-    types = {r["eventType"] for r in rows_of(rows)}
-    assert types and types <= {6, 7, 9}  # ValueMetric/CounterEvent/ContainerMetric
-
-
-def test_filter_type_validation():
-    with pytest.raises(ValueError, match="filterType"):
-        FirehoseStreamReader({"fixtureRows": "8", "filterType": "bogus"})
-
-
 def test_live_replay_drop_is_counted_and_logged(caplog):
     """The live (non-fixture) path cannot replay a crashed range; the
     loss must be observable — counted and logged — matching the

@@ -104,7 +104,10 @@ def test_minhash_signature_matches_python_reference(spark, docs):
     got = {
         r.i: list(r.sig)
         for r in df.select(
-            "i", D.minhash_signature(F.col("text"), 8).alias("sig")
+            "i",
+            D.minhash_from_hashed(
+                D.token_hash_shingles(F.col("text")), 8
+            ).alias("sig"),
         ).collect()
     }
     for i, t in enumerate(docs):

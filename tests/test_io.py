@@ -154,265 +154,50 @@ def test_schema_evolution_mergeschema_read(spark, tmp_path):
     assert df.filter("quality > 0.6").count() == 1
 
 
-def test_wire_batch_decode_roundtrip_and_quarantine(spark, tmp_path):
-    """A binary column of encoded wire frames decodes back to the exact
-    envelope rows (byte-exact wire roundtrip through the lake shape),
-    and corrupt frames land in _decode_error instead of failing the
-    job — then the typed half routes identically to the original."""
-    from kafka_firehose_nozzle_spark.sources.dropsonde_wire import (
-        encode_envelope,
-    )
-    from kafka_firehose_nozzle_spark.sources.wire_batch import (
-        decode_wire_frames,
-    )
-    from kafka_firehose_nozzle_spark.fixtures import synthetic_envelope_df
-
-    env = synthetic_envelope_df(spark, 300, seed=11)
-    dicts = [r.asDict(recursive=True) for r in env.collect()]
-    frames = [(encode_envelope(d),) for d in dicts]
-    frames.append((b"\x99\x99garbage-not-a-frame",))
-    raw = spark.createDataFrame(frames, "payload binary")
-    # lake shape: write/read the capture file
-    cap = str(tmp_path / "capture")
-    raw.write.parquet(cap)
-
-    decoded = decode_wire_frames(spark.read.parquet(cap))
-    good = decoded.filter("_decode_error IS NULL").drop(
-        "_decode_error", "_raw"
-    )
-    bad = decoded.filter("_decode_error IS NOT NULL")
-    assert bad.count() == 1
-    # the quarantined frame keeps its byte-exact raw bytes for repair
-    assert bytes(bad.head()["_raw"]) == b"\x99\x99garbage-not-a-frame"
-    assert good.count() == 300
-
-    # typed half equals the original envelopes on scalar fields
-    key = ["origin", "eventType", "timestamp", "deployment", "index"]
-    want = {tuple(r[k] for k in key) for r in env.collect()}
-    got = {tuple(r[k] for k in key) for r in good.collect()}
-    assert got == want
-
-    # and it feeds the routing pipeline like any other source
-    routed = route_envelopes(good, CFG)
-    assert routed.count() == good.filter(
-        F.col("eventType").isin(4, 5, 6, 7, 8, 9)
-    ).count()
-
-
-def test_wire_roundtrip_through_dataframe_preserves_unknown_fields(spark):
-    """VERDICT r9 item 7: _unrecognized is now an ENVELOPE_SCHEMA column,
-    so unknown-field residue survives the DataFrame boundary — wire ->
-    decode_wire_frames -> encode_wire_frames is byte-exact INCLUDING
-    envelopes a newer Doppler extended with fields this schema doesn't
-    know (gogo XXX_unrecognized parity, envelope.pb.go:116)."""
-    from kafka_firehose_nozzle_spark.fixtures import canonical_envelopes
-    from kafka_firehose_nozzle_spark.sources.dropsonde_wire import (
-        encode_envelope,
-    )
-    from kafka_firehose_nozzle_spark.sources.wire_batch import (
-        decode_wire_frames,
-        encode_wire_frames,
-    )
-
-    # field 99 varint + field 98 length-delimited, appended verbatim
-    residue = b"\x98\x06\x2a" + b"\x92\x06\x03xyz"
-    frames = []
-    for i, e in enumerate(canonical_envelopes()):
-        f = encode_envelope(e)
-        frames.append(f + residue if i % 2 == 0 else f)
-
-    raw = spark.createDataFrame([(f,) for f in frames], "payload binary")
-    decoded = decode_wire_frames(raw).filter("_decode_error IS NULL")
-    # the residue is visible as a typed binary column, exact bytes
-    resid_rows = decoded.filter("_unrecognized IS NOT NULL")
-    assert resid_rows.count() == (len(frames) + 1) // 2
-    assert all(
-        bytes(r["_unrecognized"]) == residue for r in resid_rows.collect()
-    )
-
-    reencoded = encode_wire_frames(decoded.drop("_decode_error", "_raw"))
-    got = sorted(bytes(r["payload"]) for r in reencoded.collect())
-    assert got == sorted(frames)
-
-
-def test_wire_roundtrip_streaming_preserves_unknown_fields(spark, tmp_path):
-    """The same decode -> re-encode round trip under Structured
-    Streaming: raw capture files stream in, unknown-field residue rides
-    the envelope rows through the micro-batch, and the re-encoded
-    frames match the inputs byte-exactly."""
-    from kafka_firehose_nozzle_spark.fixtures import canonical_envelopes
-    from kafka_firehose_nozzle_spark.sources.dropsonde_wire import (
-        encode_envelope,
-    )
-    from kafka_firehose_nozzle_spark.sources.wire_batch import (
-        decode_wire_frames,
-        encode_wire_frames,
-    )
-
-    residue = b"\x98\x06\x2a"
-    frames = [
-        encode_envelope(e) + (residue if i % 3 == 0 else b"")
-        for i, e in enumerate(canonical_envelopes() * 5)
-    ]
-    src = str(tmp_path / "capture")
-    spark.createDataFrame([(f,) for f in frames], "payload binary").write.parquet(src)
-
-    sdf = spark.readStream.schema("payload binary").parquet(src)
-    out = encode_wire_frames(
-        decode_wire_frames(sdf).filter("_decode_error IS NULL")
-    )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("wire_rt_sink")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = sorted(
-        bytes(r["payload"]) for r in spark.table("wire_rt_sink").collect()
-    )
-    assert got == sorted(frames)
-
-
-def test_wire_roundtrip_dataframe_mixed_null_batches_exact_ints(spark):
-    """Regression guard for the Arrow conversion hazards: a ~100-row
-    batch mixing null and non-null struct parents converts nullable
-    int64 children to float64 under pandas, silently rounding ns
-    timestamps (> 2^53) to 256-ns multiples — encode_wire_frames uses
-    mapInArrow precisely to dodge that. All six payload shapes, null
-    structs, and unknown residues of all four wire types ride one
-    round trip byte-exactly."""
-    from kafka_firehose_nozzle_spark.sources.dropsonde_wire import (
-        _write_uvarint,
-        encode_envelope,
-    )
-    from kafka_firehose_nozzle_spark.sources.wire_batch import (
-        decode_wire_frames,
-        encode_wire_frames,
-    )
-
-    env = synthetic_envelope_df(spark, 400, seed=3)
-    dicts = [r.asDict(recursive=True) for r in env.collect()]
-    # residues: varint, fixed64, length-delimited, fixed32 (field 99)
-    residues = [
-        bytes(_write_uvarint(99 << 3 | 0)) + bytes(_write_uvarint(7)),
-        bytes(_write_uvarint(99 << 3 | 1)) + (2**63 + 5).to_bytes(8, "little"),
-        bytes(_write_uvarint(99 << 3 | 2)) + bytes(_write_uvarint(3)) + b"abc",
-        bytes(_write_uvarint(99 << 3 | 5)) + (12345).to_bytes(4, "little"),
-    ]
-    frames = [
-        encode_envelope(d) + (residues[i % 4] if i % 7 == 0 else b"")
-        for i, d in enumerate(dicts)
-    ]
-    # 4 partitions -> ~100-row Arrow batches mixing null/non-null structs
-    raw = spark.createDataFrame(
-        [(f,) for f in frames], "payload binary"
-    ).repartition(4)
-    out = encode_wire_frames(
-        decode_wire_frames(raw).filter("_decode_error IS NULL")
-    )
-    got = sorted(bytes(r["payload"]) for r in out.collect())
-    assert got == sorted(frames)
-
-
-def test_wire_roundtrip_nested_residue_and_nan_survive_dataframe(spark):
-    """code-review r10 closures: (a) unknown fields inside NESTED
-    messages (gogo keeps XXX_unrecognized on every struct) survive the
-    DataFrame boundary — DECODED_SCHEMA slots a residue subfield per
-    payload struct and encode re-emits it after that level's known
-    fields; (b) a NaN ValueMetric is a VALUE, not a null — it must
-    re-encode, not vanish."""
+def test_wire_decode_null_payload_quarantined_not_job_fail():
+    """A NULL payload must land in the quarantine like any other
+    undecodable frame — the counted-drop handler itself must not raise
+    (bytes(None) inside the except block would fail the whole batch).
+    So must frames that parse but lack a proto2-required field: an
+    empty frame, and one with ``origin`` but no ``eventType`` — neither
+    may pass through as an all-NULL envelope. A frame whose int32
+    ``eventType`` overflows its column is quarantined alone, and the
+    good frames of the same call survive: a NaN metric value stays a
+    value, not a null, and a timestamp above 2^53 stays exact."""
     import math
-    import struct as _struct
 
     from kafka_firehose_nozzle_spark.fixtures import canonical_envelopes
     from kafka_firehose_nozzle_spark.sources.dropsonde_wire import (
-        decode_envelope,
         encode_envelope,
     )
     from kafka_firehose_nozzle_spark.sources.wire_batch import (
-        decode_wire_frames,
-        encode_wire_frames,
+        FRAME_SCHEMA,
+        decode_frames,
     )
 
     vm = next(
         e for e in canonical_envelopes() if e.get("valueMetric") is not None
     )
-    # (a) unknown field INSIDE the valueMetric submessage (field 99
-    # varint = tag bytes 0x98 0x06), normalized-to-tail at that level
-    d = decode_envelope(encode_envelope(vm))
-    d["valueMetric"]["_unrecognized"] = b"\x98\x06\x2a"
-    frame_nested = encode_envelope(d)
-    assert decode_envelope(frame_nested)["valueMetric"]["_unrecognized"] == b"\x98\x06\x2a"
-
-    # (b) NaN metric value
-    nan_env = dict(vm, valueMetric=dict(vm["valueMetric"], value=float("nan")))
-    frame_nan = encode_envelope(nan_env)
-
-    frames = [frame_nested, frame_nan, encode_envelope(vm)]
-    raw = spark.createDataFrame([(f,) for f in frames], "payload binary")
-    decoded = decode_wire_frames(raw).filter("_decode_error IS NULL")
-    assert decoded.count() == 3
-    # nested residue is visible as a typed subfield
-    got_res = [
-        bytes(r)
-        for (r,) in decoded.select("valueMetric._unrecognized").collect()
-        if r is not None
-    ]
-    assert got_res == [b"\x98\x06\x2a"]
-    # NaN survived decode as a value, not a null
-    vals = [
-        v
-        for (v,) in decoded.select("valueMetric.value").collect()
-        if v is not None and math.isnan(v)
-    ]
-    assert len(vals) == 1
-
-    out = encode_wire_frames(decoded.drop("_decode_error", "_raw"))
-    got = sorted(bytes(r["payload"]) for r in out.collect())
-    assert got == sorted(frames)
-
-
-def test_wire_decode_null_payload_quarantined_not_job_fail(spark):
-    """A NULL payload cell must land in the quarantine like any other
-    undecodable frame — the counted-drop handler itself must not raise
-    (bytes(None) inside the except block would fail the whole job).
-    So must frames that parse but lack a proto2-required field: an
-    empty frame, and one with ``origin`` but no ``eventType`` — neither
-    may pass through as an all-NULL envelope. A frame whose int32
-    ``eventType`` overflows its column is quarantined alone, without
-    failing the rest of its Arrow batch."""
-    from kafka_firehose_nozzle_spark.sources.dropsonde_wire import (
-        encode_envelope,
+    nan = encode_envelope(
+        dict(vm, valueMetric=dict(vm["valueMetric"], value=float("nan")))
     )
-    from kafka_firehose_nozzle_spark.sources.wire_batch import (
-        decode_wire_frames,
-    )
-
-    good = encode_envelope(
-        __import__(
-            "kafka_firehose_nozzle_spark.fixtures", fromlist=["x"]
-        ).canonical_envelopes()[0]
-    )
+    big_ts = 2**53 + 1
+    exact = encode_envelope(dict(vm, timestamp=big_ts))
     origin_only = encode_envelope({"origin": "fake-origin-1"})
     overflow = encode_envelope({"origin": "fake-origin-1", "eventType": 2**40})
-    raw = spark.createDataFrame(
-        [(good,), (None,), (b"",), (origin_only,), (overflow,)],
-        "payload binary",
-    ).coalesce(1)
-    decoded = decode_wire_frames(raw)
-    bad = decoded.filter("_decode_error IS NOT NULL").collect()
-    assert len(bad) == 4
-    by_raw = {
-        None if r["_raw"] is None else bytes(r["_raw"]): r for r in bad
-    }
+    batch = decode_frames([nan, None, b"", origin_only, overflow, exact])
+    assert batch.schema.names == FRAME_SCHEMA.names
+    rows = batch.to_pylist()
+    assert len(rows) == 6
+    bad = [r for r in rows if r["_decode_error"] is not None]
+    by_raw = {r["_raw"]: r for r in bad}
     assert set(by_raw) == {None, b"", origin_only, overflow}
     assert "null payload" in by_raw[None]["_decode_error"]
     assert "ArrowInvalid" in by_raw[overflow]["_decode_error"]
     for frame in (b"", origin_only):
         assert "missing required field" in by_raw[frame]["_decode_error"]
         assert by_raw[frame]["origin"] is None
-    assert decoded.filter("_decode_error IS NULL").count() == 1
+    assert rows[0]["_decode_error"] is None
+    assert math.isnan(rows[0]["valueMetric"]["value"])
+    assert rows[5]["_decode_error"] is None
+    assert rows[5]["timestamp"] == big_ts

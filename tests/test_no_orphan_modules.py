@@ -1,9 +1,10 @@
-"""Every package module is reachable from something that runs (no Spark).
+"""Every package module, and every top-level package function and class,
+is reachable from something that runs (no Spark).
 
 The roots are what a user or the benchmark executes: the CLI, the Spark
 entry file, the query registry, ``bench.py`` and ``perfbench/``. A module
-that only tests import is code nobody runs; this ``ast`` import walk names
-any such module so it is deleted rather than left to grow.
+or definition that only tests use is code nobody runs; these ``ast``
+walks name any such one so it is deleted rather than left to grow.
 """
 
 import ast
@@ -79,4 +80,84 @@ def test_every_package_module_is_reachable_from_a_root():
     assert not orphans, (
         "package modules that cli.py, __spark_entry__.py, queries/, "
         f"bench.py and perfbench/ never import: {orphans}"
+    )
+
+
+# Top-level definitions that no root reaches but tests need, each with
+# its reason; everything else a root never reaches is deleted.
+KEPT_FOR_TESTS = {
+    "kafka_firehose_nozzle_spark.functions.sonde_json.envelopes_from_json":
+        "the reference route_topic_from_wire and the sonde-JSON round "
+        "trip are compared against",
+    "kafka_firehose_nozzle_spark.operators.asof.asof_join_pandas":
+        "the pandas reference for asof_join",
+    "kafka_firehose_nozzle_spark.sinks.kafka.ssl_context_from_options":
+        "turns the TLS sink options into a real handshake in test_kafka_tls",
+    "kafka_firehose_nozzle_spark.fixtures.canonical_envelope_df":
+        "a test fixture",
+}
+
+_DEF = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+
+
+def _names(nodes) -> set[str]:
+    """Every name the code under ``nodes`` reads, bare or as an
+    attribute (``D.simhash`` names ``simhash``)."""
+    out = set()
+    for node in nodes:
+        for n in ast.walk(node):
+            if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load):
+                out.add(n.id)
+            elif isinstance(n, ast.Attribute):
+                out.add(n.attr)
+    return out
+
+
+def _is_export(stmt) -> bool:
+    return isinstance(stmt, (ast.Import, ast.ImportFrom)) or (
+        isinstance(stmt, ast.Assign)
+        and any(getattr(t, "id", None) == "__all__" for t in stmt.targets)
+    )
+
+
+def test_every_package_definition_is_reachable_from_a_root():
+    """A top-level function or class is reached when a root, a package
+    module's own top-level code or a reached definition names it.
+    Matching is by name, so a name shared with anything reached counts
+    as reached: the guard may miss an orphan but never flags a
+    definition that runs. ``__init__`` re-exports, imports and
+    ``__all__`` do not count."""
+    defs: dict[str, list] = {}  # bare name -> [(qualified name, node)]
+    todo = _names(ast.parse(p.read_text()) for p in ROOTS)
+    for path in PKG.rglob("*.py"):
+        if path.name == "__init__.py":
+            continue
+        module = _module_name(path)
+        for stmt in ast.parse(path.read_text()).body:
+            if isinstance(stmt, _DEF):
+                defs.setdefault(stmt.name, []).append(
+                    (f"{module}.{stmt.name}", stmt)
+                )
+            elif not _is_export(stmt):
+                todo |= _names([stmt])
+    qualified = {q: node for ds in defs.values() for q, node in ds}
+    assert set(KEPT_FOR_TESTS) <= set(qualified)
+    todo |= _names(qualified[q] for q in KEPT_FOR_TESTS)
+    reached: set[str] = set()
+    while todo:
+        name = todo.pop()
+        if name in reached:
+            continue
+        reached.add(name)
+        todo |= _names(node for _, node in defs.get(name, ())) - reached
+    orphans = sorted(
+        q
+        for name, ds in defs.items()
+        if name not in reached
+        for q, _ in ds
+        if q not in KEPT_FOR_TESTS
+    )
+    assert not orphans, (
+        "package definitions that no root reaches (delete them, or add "
+        f"one to KEPT_FOR_TESTS with its reason): {orphans}"
     )

@@ -15,7 +15,7 @@ from kafka_firehose_nozzle_spark.operators.asof import asof_join
 from kafka_firehose_nozzle_spark.operators.multimodal import (
     decode_image,
     documents_as_media,
-    media_features,
+    media_features_builtin,
     sample_frames,
 )
 
@@ -115,9 +115,7 @@ def test_simhash_near_dup_small_hamming(spark):
     )
     sh = {
         r["doc_id"]: r["h"]
-        for r in docs.select(
-            "doc_id", D.simhash(F.col("text"), bits=16).alias("h")
-        ).collect()
+        for r in D.with_simhash(docs, "text", "h", bits=16).collect()
     }
     ham_dup = bin(sh[1] ^ sh[2]).count("1")
     ham_diff = bin(sh[1] ^ sh[3]).count("1")
@@ -478,28 +476,6 @@ def test_bpe_learn_and_apply(spark):
 # --- text ----------------------------------------------------------------------
 
 
-def test_ivf_partitioned_storage_prunes_scan(spark, tmp_path):
-    """Cell-partitioned parquet + a cell filter must prune at the
-    partition level (PartitionFilters on cell_id, fewer files read) and
-    return exactly the probed cells' vectors."""
-    from pyspark.sql import functions as F
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    cents = S.medoid_centroids(emb, 8)
-    assigned = S.ivf_assign(emb, cents)
-    path = str(tmp_path / "ivf")
-    S.write_ivf_partitioned(assigned, path)
-
-    back = spark.read.parquet(path).filter(F.col("cell_id").isin(1, 3))
-    plan = back._jdf.queryExecution().executedPlan().toString()
-    pf = plan.split("PartitionFilters: [")[1].split("]")[0]
-    assert "cell_id" in pf, plan[:800]
-    # pruning is semantic, not just cosmetic: the pruned read equals the
-    # full read filtered post-hoc
-    want = assigned.filter(F.col("cell_id").isin(1, 3)).count()
-    assert back.count() == want > 0
-
-
 def test_lang_id_heuristic(spark):
     df = spark.createDataFrame(
         [
@@ -676,7 +652,7 @@ def test_media_features_deterministic(spark):
 
     docs = spark.createDataFrame([Row(doc_id=1, text="hello"), Row(doc_id=2, text="")])
     media = documents_as_media(docs)
-    got = {r["media_id"]: r for r in media_features(media).collect()}
+    got = {r["media_id"]: r for r in media_features_builtin(media).collect()}
     assert got[1]["n_bytes"] == 5
     assert got[1]["content_hash"] == hashlib.md5(b"hello").hexdigest()
     assert got[2]["n_bytes"] == 0
@@ -1227,56 +1203,6 @@ def test_lsh_pairs_gemm_matches_expr(spark):
     assert max(abs(a[k] - b[k]) for k in a) <= 1e-6
 
 
-def test_compact_small_files(spark, tmp_path):
-    from kafka_firehose_nozzle_spark.operators.layout import (
-        compact_small_files,
-    )
-
-    src = str(tmp_path / "frag")
-    dst = str(tmp_path / "compact")
-    docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    # fragment: 64 tiny files, the streaming-ingest pathology
-    docs.repartition(64).write.parquet(src)
-    import os
-
-    n_src = sum(1 for f in os.listdir(src) if f.endswith(".parquet"))
-    assert n_src == 64
-    total = sum(
-        os.path.getsize(os.path.join(src, f))
-        for f in os.listdir(src)
-        if f.endswith(".parquet")
-    )
-    # target sized so compaction lands on ~4 files
-    n_out = compact_small_files(
-        spark, src, dst, target_bytes=total // 4 + 1, sort_col="doc_id"
-    )
-    assert n_out <= 5
-    a = spark.read.parquet(src)
-    b = spark.read.parquet(dst)
-    assert b.count() == a.count() == 500
-    # range-partitioned + sorted: per-file doc_id spans must not overlap
-    import pyarrow.parquet as pq
-
-    spans = []
-    for f in sorted(os.listdir(dst)):
-        if not f.endswith(".parquet"):
-            continue
-        md = pq.ParquetFile(os.path.join(dst, f)).metadata
-        idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
-        lo = min(
-            md.row_group(g).column(idx["doc_id"]).statistics.min
-            for g in range(md.num_row_groups)
-        )
-        hi = max(
-            md.row_group(g).column(idx["doc_id"]).statistics.max
-            for g in range(md.num_row_groups)
-        )
-        spans.append((lo, hi))
-    spans.sort()
-    for (lo1, hi1), (lo2, _hi2) in zip(spans, spans[1:]):
-        assert hi1 < lo2
-
-
 # --- edge cases for wave-4 operators ---------------------------------------
 
 
@@ -1638,48 +1564,6 @@ def test_loglog_rank_matches_python_reference(spark):
         v = int(tail, 16)
         want_rank = 49 if v == 0 else (48 - v.bit_length()) + 1
         assert got[k] == (want_reg, want_rank), (k, got[k], (want_reg, want_rank))
-
-
-def test_incremental_rollup_matches_full_recompute(spark):
-    """merge_rollup folded over daily batches must equal the
-    from-scratch aggregate over the full log, cell for cell — the
-    invariant that makes incremental maintenance trustworthy.  Sums run
-    in exact integer micro-units so associativity is exact."""
-    from pyspark.sql import functions as F
-
-    from kafka_firehose_nozzle_spark.operators.history import (
-        bootstrap_rollup,
-        merge_rollup,
-    )
-
-    ev = (
-        spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-        .withColumn("day", F.dayofmonth("ts"))
-        .withColumn(
-            "vm",
-            F.floor(F.col("value") * F.lit(1000000.0) + F.lit(0.5)).cast(
-                "bigint"
-            ),
-        )
-        .select("event_type", "day", "vm")
-    )
-    days = sorted(r["day"] for r in ev.select("day").distinct().collect())
-    assert len(days) >= 3
-    first, rest = days[0], days[1:]
-    rolled = bootstrap_rollup(
-        ev.filter(F.col("day") == first), ["event_type"], ["vm"]
-    )
-    for d in rest:
-        rolled = merge_rollup(
-            rolled, ev.filter(F.col("day") == d), ["event_type"], ["vm"]
-        )
-    full = bootstrap_rollup(ev, ["event_type"], ["vm"])
-
-    got = {
-        r["event_type"]: (r["n"], r["vm"]) for r in rolled.collect()
-    }
-    want = {r["event_type"]: (r["n"], r["vm"]) for r in full.collect()}
-    assert got == want and len(want) >= 3
 
 
 def test_exact_kth_matches_sorted_reference_across_ranks(spark):

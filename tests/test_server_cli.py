@@ -183,7 +183,8 @@ def test_streaming_listener_scoped_to_query_id():
     from kafka_firehose_nozzle_spark.stats import Stats, make_streaming_listener
 
     stats = Stats()
-    listener = make_streaming_listener(stats, query_id="q-mine")
+    listener = make_streaming_listener(stats)
+    listener.query_id = "q-mine"
 
     def progress_event(qid, rows):
         return SimpleNamespace(

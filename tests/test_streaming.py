@@ -158,54 +158,6 @@ def test_stream_drops_counted(spark, tmp_path):
     assert snap["ignored"] > 0
 
 
-def test_stream_dead_letter_quarantine(spark, tmp_path):
-    """DLQ split (pipeline.route_envelopes_dlq) in streaming: with
-    counter_event disabled, its envelopes land in the quarantine with
-    reason=topic_disabled while everything else forwards; both sinks are
-    written from ONE foreachBatch (one source read per micro-batch)."""
-    from kafka_firehose_nozzle_spark.pipeline import route_envelopes_dlq
-
-    src = str(tmp_path / "envelopes")
-    n = 1200
-    synthetic_envelope_df(spark, n).write.mode("overwrite").parquet(src)
-
-    cfg = _config()
-    cfg.kafka.topic.counter_event = ""  # disable -> these must quarantine
-
-    good_dir = str(tmp_path / "routed")
-    dlq_dir = str(tmp_path / "quarantine")
-
-    def split_batch(batch_df, batch_id):
-        good, dead = route_envelopes_dlq(batch_df, cfg.kafka.topic)
-        good.write.mode("append").parquet(good_dir)
-        dead.write.mode("append").parquet(dlq_dir)
-
-    q = (
-        file_replay_stream(spark, src)
-        .writeStream.foreachBatch(split_batch)
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    good = spark.read.parquet(good_dir)
-    dead = spark.read.parquet(dlq_dir)
-    n_dead = dead.count()
-    assert good.count() + n_dead == n
-    assert n_dead > 0
-    reasons = {r["reason"] for r in dead.select("reason").distinct().collect()}
-    assert reasons == {"topic_disabled"}
-    from kafka_firehose_nozzle_spark import schemas
-
-    types = {r["eventType"] for r in dead.select("eventType").distinct().collect()}
-    assert types == {schemas.COUNTER_EVENT}
-    # quarantined rows keep their encoded payload for later replay
-    assert dead.filter(F.col("value").startswith('{"origin":')).count() == n_dead
-
-
 def test_chaos_midbatch_crash_exactly_once(spark, tmp_path):
     """Whole-pipeline crash chaos (VERDICT r6 item 5, the ST1/K5 claim
     tested as ONE flow, not per-operator): firehose wire-replay source

@@ -4,13 +4,11 @@ import uuid as pyuuid
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from kafka_firehose_nozzle_spark.functions.uuid_codec import (
-    str_to_uuid_struct,
-    uuid_to_str,
-)
+from kafka_firehose_nozzle_spark.functions.uuid_codec import uuid_to_str
 
 UUID_ROW = T.StructType(
     [
@@ -25,6 +23,34 @@ UUID_ROW = T.StructType(
         )
     ]
 )
+
+
+def _hex_to_long(hex16: Column) -> Column:
+    """16 LE hex chars -> signed long, handling values >= 2^63.
+
+    ``conv(x, 16, 10)`` returns the *unsigned* decimal string; go through
+    Decimal(20,0) and wrap negatives to match two's-complement semantics.
+    """
+    be = F.concat(*[F.substring(hex16, 15 - 2 * i, 2) for i in range(8)])
+    unsigned = F.conv(be, 16, 10).cast("decimal(20,0)")
+    two63 = F.lit("9223372036854775808").cast("decimal(20,0)")
+    two64 = F.lit("18446744073709551616").cast("decimal(21,0)")
+    signed = F.when(unsigned >= two63, (unsigned - two64)).otherwise(unsigned)
+    return signed.cast("long")
+
+
+def str_to_uuid_struct(s: Column) -> Column:
+    """Inverse of uuid_to_str (reference str2uuid, helper_test.go:17-24)."""
+    clean = F.lower(F.regexp_replace(s, "-", ""))
+    lo_hex = F.substring(clean, 1, 16)
+    hi_hex = F.substring(clean, 17, 16)
+    return F.when(
+        s.isNotNull(),
+        F.struct(
+            _hex_to_long(lo_hex).alias("low"),
+            _hex_to_long(hi_hex).alias("high"),
+        ),
+    )
 
 
 def _signed(v: int) -> int:
