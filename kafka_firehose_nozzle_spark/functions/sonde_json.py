@@ -334,5 +334,5 @@ def envelopes_from_json(df: DataFrame, col: str = "value") -> DataFrame:
     then costs minutes at any data size. Put a materialization boundary
     (the topic itself, a file, or ``localCheckpoint``) between the halves.
     """
-    raw = df.select(F.from_json(F.col(col), _decode_read_schema()).alias("_raw"))
-    return raw.select(*_envelope_columns(F.col("_raw")))
+    raw = df.select(F.from_json(F.col(col), _decode_read_schema()).alias("_parsed"))
+    return raw.select(*_envelope_columns(F.col("_parsed")))

@@ -35,25 +35,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("media_type", T.StringType(), True),  # image|audio|video
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("width", T.IntegerType(), True),
-                    T.StructField("height", T.IntegerType(), True),
-                    T.StructField("duration_ms", T.IntegerType(), True),
-                    T.StructField("codec", T.StringType(), True),
-                ]
-            ),
-            True,
-        ),
-    ]
-)
 
 def documents_as_media(docs: DataFrame) -> DataFrame:
     """Adapter: the documents table as a media table (text bytes as the

@@ -30,7 +30,7 @@ LLM-pipeline surface per the build brief.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 MICRO = 10**6

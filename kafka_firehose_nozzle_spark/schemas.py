@@ -41,7 +41,6 @@ MESSAGE_TYPE_OUT = 1
 MESSAGE_TYPE_ERR = 2
 
 # PeerType (http.pb.go:21-26)
-PEER_TYPE_CLIENT = 1
 PEER_TYPE_SERVER = 2
 
 # --- UUID (uuid.pb.go:23-27): 128-bit id as two little-endian u64 ----------
@@ -142,14 +141,5 @@ ENVELOPE_SCHEMA = T.StructType(
         # every non-wire source; NEVER emitted into sonde JSON (easyjson
         # has no unknown-field concept, encoder parity is byte-exact).
         T.StructField("_unrecognized", T.BinaryType(), True),
-    ]
-)
-
-# Columns of the routed output stream (pipeline.py): Kafka sink contract —
-# per-row topic routing uses a `topic` column (kafka.go:305-340 ~ K1).
-ROUTED_SCHEMA = T.StructType(
-    [
-        T.StructField("topic", T.StringType(), True),
-        T.StructField("value", T.StringType(), True),
     ]
 )

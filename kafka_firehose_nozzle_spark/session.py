@@ -128,7 +128,6 @@ def parquet_expansion(
     non-local/non-parquet paths or unreadable footers — the estimate
     degrades, never errors. Clamped to [1, 8]: a ratio below 1 means a
     pathological footer, above 8 a corrupt one."""
-    import glob
     import os as _os
 
     try:

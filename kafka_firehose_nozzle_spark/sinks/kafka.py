@@ -25,7 +25,6 @@ from kafka_firehose_nozzle_spark.config import Config
 
 DEFAULT_RETRY_MAX = 1  # kafka.go:21
 DEFAULT_RETRY_BACKOFF_MS = 100  # kafka.go:22
-DEFAULT_REPARTITION_MAX = 5  # kafka.go:20
 
 _COMPRESSION = {"gzip": "gzip", "snappy": "snappy", "none": None, "": None}
 

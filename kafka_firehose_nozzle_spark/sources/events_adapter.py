@@ -31,13 +31,6 @@ EVENT_TYPE_MAP = {
     "error": schemas.ERROR,
 }
 
-# the same mapping as an ANSI-SQL CASE expression, for oracle queries
-EVENT_TYPE_CASE_SQL = (
-    "CASE event_type WHEN 'view' THEN 4 WHEN 'click' THEN 5 "
-    "WHEN 'purchase' THEN 6 WHEN 'signup' THEN 7 WHEN 'error' THEN 8 "
-    "ELSE -1 END"
-)
-
 
 def _ts_micros(events: DataFrame) -> F.Column:
     """Epoch-microseconds of ``ts`` regardless of how the parquet was

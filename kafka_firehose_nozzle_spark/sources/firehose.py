@@ -39,16 +39,26 @@ Source options (all strings, per the DataSource API):
   third-party websocket package required). The envelopes are encoded
   to wire frames and decoded like live traffic.
 
-``read()`` hands Spark one Arrow batch per micro-batch, made of the
-pump's chunks, each built by ``wire_batch.decode_frames`` in
-``wire_batch.FRAME_SCHEMA``: the envelope fields plus ``_decode_error``
-and ``_raw``, so a bad frame is a quarantined row, not a failed query.
-``streaming.job.firehose_stream`` splits the good rows (ENVELOPE_SCHEMA)
-from the bad ones (counted and logged).
+``read()`` joins the pump's chunks, each built by
+``wire_batch.decode_frames`` in ``wire_batch.FRAME_SCHEMA`` (the
+envelope fields plus ``_decode_error`` and ``_raw``), into one Arrow
+batch, and splits the quarantined rows off it: each bad frame is logged
+at WARN with its raw bytes (base64), and Spark gets the good rows'
+envelope columns only (``SOURCE_SCHEMA``). A bad frame is a counted
+drop, not a failed query.
+
+The offset is ``{"n": frames consumed, good or bad}`` plus the reader's
+cumulative tallies, each present once nonzero and carried over from the
+batch's start offset, so a restart keeps them: ``consume_fail`` (bad
+frames, go-nozzle's ConsumeFail) and ``slow_consumer_alert`` (1008
+closes, detector.go:71-99). Spark writes the offset to its offset log
+and reports it in ``progress.sources[].endOffset``, where the stats
+listener (stats.py) adds what each tally grew by to ``Stats``.
 """
 
 from __future__ import annotations
 
+import base64
 import json
 import logging
 import threading
@@ -57,8 +67,10 @@ from collections import deque
 from collections.abc import Iterator
 
 import pyarrow as pa
+from pyspark.sql import types as T
 from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 
+from kafka_firehose_nozzle_spark import schemas
 from kafka_firehose_nozzle_spark.config import (
     DEFAULT_IDLE_TIMEOUT,
     DEFAULT_RETRY_COUNT,
@@ -79,6 +91,21 @@ BATCH_WAIT = 0.05
 # decode_frames' fixed cost per call (about 0.3 ms) over a few ms of
 # frames, well inside BATCH_WAIT
 CHUNK_WAIT = 0.005
+# the envelope columns of FRAME_SCHEMA (every field nullable): what the
+# reader hands Spark once the quarantine columns are split off
+SOURCE_SCHEMA = T.StructType(FRAME_SCHEMA.fields[: len(schemas.ENVELOPE_SCHEMA)])
+# the reader's tallies its offset carries, named as their Stats counters
+TALLIES = ("consume_fail", "slow_consumer_alert")
+
+
+def _check_uaa_credentials(uaa_addr: str, username: str, password: str) -> None:
+    """The UAA settings a token fetch needs; errors match token.go:69-83."""
+    if not uaa_addr:
+        raise ValueError("UaaAddr must not be empty")
+    if not username:
+        raise ValueError("Username must not be empty")
+    if not password:
+        raise ValueError("Password must not be empty")
 
 
 def fetch_uaa_token(
@@ -93,14 +120,8 @@ def fetch_uaa_token(
 
     Validation errors match token.go:69-83.
     """
-    if not uaa_addr:
-        raise ValueError("UaaAddr must not be empty")
-    if not username:
-        raise ValueError("Username must not be empty")
-    if not password:
-        raise ValueError("Password must not be empty")
+    _check_uaa_credentials(uaa_addr, username, password)
 
-    import base64
     import ssl
     import urllib.parse
     import urllib.request
@@ -216,8 +237,10 @@ class FirehoseStreamReader(SimpleDataSourceStreamReader):
         self.dropped_replay_rows = 0
         # connection-level SlowConsumerAlert tally: go-nozzle's detector
         # raises the alert when the server closes 1008
-        # (detector.go:71-99, websocket.ClosePolicyViolation)
+        # (detector.go:71-99, websocket.ClosePolicyViolation); read()
+        # folds the closes since its last offset into the next one
         self.slow_consumer_close_alerts = 0
+        self._alerts_in_offset = 0
         # reconnect budget + exponential backoff (noaa retryAction,
         # async.go:315-351: sleep doubles from min to max; count resets
         # on a successful connect via the on-connect callback,
@@ -283,24 +306,18 @@ class FirehoseStreamReader(SimpleDataSourceStreamReader):
                 if self.options.get("insecureSSLSkipVerify", "false") == "true"
                 else ssl.create_default_context()
             )
+        uaa = [self.options.get(k, "") for k in ("uaaAddress", "username", "password")]
         if not self._token:
             # config VALIDATION is fatal and happens ONCE, outside the
             # retry loop (token.go:69-83) — so that inside the loop any
             # ValueError from the fetch is a transient body-parse
             # failure, not a misconfiguration
-            if not self.options.get("uaaAddress", ""):
-                raise ValueError("UaaAddr must not be empty")
-            if not self.options.get("username", ""):
-                raise ValueError("Username must not be empty")
-            if not self.options.get("password", ""):
-                raise ValueError("Password must not be empty")
+            _check_uaa_credentials(*uaa)
         while True:
             if not self._token:
                 try:
                     self._token = fetch_uaa_token(
-                        self.options.get("uaaAddress", ""),
-                        self.options.get("username", ""),
-                        self.options.get("password", ""),
+                        *uaa,
                         insecure=self.options.get(
                             "insecureSSLSkipVerify", "false"
                         )
@@ -364,11 +381,25 @@ class FirehoseStreamReader(SimpleDataSourceStreamReader):
             frames.append(encode_envelope(r))
         return frames
 
-    def _kept(self, batch) -> Iterator:
-        """``batch`` as an iterator of at most one batch: empty when the
-        batch has no rows, since Spark rejects a non-empty result whose
-        offset did not advance."""
-        return iter([batch] if batch.num_rows else [])
+    def _split(self, batch) -> tuple[Iterator, int]:
+        """The good rows of ``batch`` in ``SOURCE_SCHEMA``, as an iterator
+        of at most one batch (empty when none is left, since Spark
+        rejects a non-empty result whose offset did not advance), and the
+        number of quarantined rows, each logged at WARN with its error
+        and raw bytes."""
+        error = batch.column("_decode_error")
+        bad = len(error) - error.null_count
+        if bad:
+            quarantined = batch.filter(error.is_valid())
+            for row in quarantined.select(["_decode_error", "_raw"]).to_pylist():
+                logging.getLogger("kafka_firehose_nozzle_spark").warning(
+                    "firehose frame quarantined: %s; raw frame (base64): %r",
+                    row["_decode_error"],
+                    base64.b64encode(row["_raw"] or b"").decode(),
+                )
+            batch = batch.filter(error.is_null())
+        batch = batch.select(SOURCE_SCHEMA.names)
+        return iter([batch] if batch.num_rows else []), bad
 
     def _pump(self, conn, chunks: _Chunks) -> None:
         """Receive and decode one connection's frames into ``chunks``
@@ -472,8 +503,17 @@ class FirehoseStreamReader(SimpleDataSourceStreamReader):
         else:
             self._connect()
             batch = self._take()
-        # one row per frame consumed, good or bad
-        return self._kept(batch), {"n": n + batch.num_rows}
+        rows, bad = self._split(batch)
+        closes = self.slow_consumer_close_alerts - self._alerts_in_offset
+        self._alerts_in_offset = self.slow_consumer_close_alerts
+        # one n per frame consumed, good or bad; the tallies accumulate
+        # from the start offset and appear once nonzero
+        end = {"n": n + batch.num_rows}
+        for key, grew in zip(TALLIES, (bad, closes)):
+            total = start.get(key, 0) + grew
+            if total:
+                end[key] = total
+        return rows, end
 
     def readBetweenOffsets(self, start: dict, end: dict) -> Iterator:
         """Crash-recovery replay: after a restart Spark re-reads every
@@ -499,7 +539,7 @@ class FirehoseStreamReader(SimpleDataSourceStreamReader):
         n, n_end = start["n"], end["n"]
         if self.fixture_rows:
             frames = self._fixture_frames(n, n_end - n)
-            return self._kept(decode_frames(frames))
+            return self._split(decode_frames(frames))[0]
         lost = max(0, n_end - n)
         self.dropped_replay_rows += lost
         logging.getLogger("kafka_firehose_nozzle_spark").warning(
@@ -526,7 +566,7 @@ class FirehoseDataSource(DataSource):
         return "firehose"
 
     def schema(self):
-        return FRAME_SCHEMA
+        return SOURCE_SCHEMA
 
     def simpleStreamReader(self, schema) -> FirehoseStreamReader:
         return FirehoseStreamReader(self.options)

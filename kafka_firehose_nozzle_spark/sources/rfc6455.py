@@ -40,7 +40,6 @@ OP_PING = 0x9
 OP_PONG = 0xA
 
 CLOSE_NORMAL = 1000
-CLOSE_GOING_AWAY = 1001
 CLOSE_POLICY_VIOLATION = 1008  # go-nozzle's slow-consumer close
 
 

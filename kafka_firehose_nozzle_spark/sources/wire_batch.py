@@ -2,13 +2,13 @@
 stream.
 
 :func:`decode_frames` is the one decode loop: a list of raw frames in,
-one Arrow ``RecordBatch`` in ``FRAME_SCHEMA`` out, which the firehose
-reader (firehose.py) hands Spark as is. The pure-python proto2 parser
-(sources/dropsonde_wire.py) needs no protobuf runtime. Undecodable
-frames follow the reference's counted-drop stance (kafka.go:269-271):
-they land in a ``_decode_error`` column with their raw bytes instead of
-killing the stream, and ``streaming.job.firehose_stream`` splits good
-rows from bad ones on ``_decode_error``.
+one Arrow ``RecordBatch`` in ``FRAME_SCHEMA`` out. The pure-python
+proto2 parser (sources/dropsonde_wire.py) needs no protobuf runtime.
+Undecodable frames follow the reference's counted-drop stance
+(kafka.go:269-271): they land in a ``_decode_error`` column with their
+raw bytes instead of killing the stream. The firehose reader
+(firehose.py) splits those rows off, logs and counts them, and hands
+Spark the envelope columns of the rest.
 
 Reference parity: S1 (protobuf decode).
 """

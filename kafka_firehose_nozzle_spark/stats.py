@@ -6,9 +6,11 @@ The reference keeps 15 atomic counters updated from the hot path
 ``counters`` is the one definition of the 11 counters the routed stream
 can count; ``pipeline.route_envelopes`` attaches them as one observation
 (``OBS_COUNTERS``) to the *same* batch plan (no second pass over the
-data), and ``streaming.job.firehose_stream`` attaches the decode-failure
-one (``OBS_DECODE``). A StreamingQueryListener accumulates both across
-micro-batches; a batch caller can ``df.agg(*counters(df))`` instead.
+data). The firehose reader counts what never reaches the plan, bad
+frames (``consume_fail``) and 1008 closes (``slow_consumer_alert``), in
+its source offset. A StreamingQueryListener accumulates the observation
+and the growth of those offset tallies across micro-batches; a batch
+caller can ``df.agg(*counters(df))`` instead.
 
 JSON key order and names — including the reference's literal
 ``subinupt_buffer`` typo (stats.go:64) — match the golden.
@@ -16,20 +18,18 @@ JSON key order and names — including the reference's literal
 
 from __future__ import annotations
 
+import ast
 import json
-import logging
 import os
 import threading
-import time
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from kafka_firehose_nozzle_spark import schemas
 
-# observation names
+# observation name
 OBS_COUNTERS = "nozzle_counters"
-OBS_DECODE = "nozzle_decode"
 
 # slow-consumer alert predicate (go-nozzle/detector.go:116-124): a
 # doppler-originated CounterEvent named TruncatingBuffer.DroppedMessages.
@@ -80,29 +80,6 @@ def counters(df: DataFrame) -> list[Column]:
     ]
 
 
-def observe_decode(df: DataFrame) -> DataFrame:
-    """Attach decode-failure counters to a decoded frame stream (the
-    ``_decode_error``/``_raw`` columns of wire_batch.FRAME_SCHEMA):
-    quarantined frames count into ``consume_fail``, and each one's error
-    and base64 raw bytes ride along for the listener to log."""
-    bad = F.col("_decode_error").isNotNull()
-    return df.observe(
-        OBS_DECODE,
-        F.count(F.when(bad, F.lit(1))).alias("consume_fail"),  # see counters
-        F.collect_list(
-            F.when(
-                bad,
-                F.struct(
-                    F.col("_decode_error").alias("error"),
-                    # unchunked: Spark's base64 breaks lines every 76
-                    # chars, which would split one log line
-                    F.regexp_replace(F.base64("_raw"), "\\s", "").alias("raw"),
-                ),
-            )
-        ).alias("bad_frames"),
-    )
-
-
 _STATS_FIELDS = [
     # (json key, initial) in reference struct order (stats.go:41-74)
     ("consume", 0),
@@ -125,6 +102,7 @@ _STATS_FIELDS = [
     ("delay", 0),
     ("instance_id", 0),
 ]
+_STATS_KEYS = frozenset(k for k, _ in _STATS_FIELDS)
 
 
 class Stats:
@@ -201,9 +179,22 @@ class Stats:
         )
 
 
+def _offset(raw) -> dict:
+    """A source offset as progress reports it: JSON, or the Python repr
+    of the offset dict once PySpark has parsed the event; null or
+    ``'None'`` (no offset yet) is empty."""
+    if raw is None or raw == "None":
+        return {}
+    try:
+        return json.loads(raw)
+    except ValueError:
+        return ast.literal_eval(raw)
+
+
 def make_streaming_listener(stats: Stats):
-    """StreamingQueryListener folding per-batch observed metrics + sink
-    progress into ``stats`` (the A1 accumulation across micro-batches).
+    """StreamingQueryListener folding per-batch observed metrics, source
+    offset tallies and sink progress into ``stats`` (the A1 accumulation
+    across micro-batches).
 
     Assigning ``listener.query_id`` scopes the listener to ONE query:
     listeners receive events for EVERY query on the shared session, and
@@ -228,18 +219,16 @@ def make_streaming_listener(stats: Stats):
             prog = event.progress
             if self.query_id is not None and str(prog.id) != str(self.query_id):
                 return
-            om = prog.observedMetrics or {}
-            for name in (OBS_COUNTERS, OBS_DECODE):
-                row = om.get(name)
-                if row is not None:
-                    stats.merge_observation(row.asDict())
-            if om.get(OBS_DECODE) is not None:
-                for bad in om[OBS_DECODE]["bad_frames"]:
-                    logging.getLogger("kafka_firehose_nozzle_spark").warning(
-                        "firehose frame quarantined: %s; raw frame (base64): %r",
-                        bad["error"],
-                        bad["raw"],
-                    )
+            row = (prog.observedMetrics or {}).get(OBS_COUNTERS)
+            if row is not None:
+                stats.merge_observation(row.asDict())
+            # a source offset key named as a counter is a cumulative
+            # tally (the firehose reader's): add what it grew by
+            for src in prog.sources:
+                start, end = _offset(src.startOffset), _offset(src.endOffset)
+                stats.merge_observation(
+                    {k: end[k] - start.get(k, 0) for k in end.keys() & _STATS_KEYS}
+                )
             # rows that reached the sink count as published (cli.go:309-313)
             if prog.sink is not None and prog.sink.numOutputRows is not None:
                 n = prog.sink.numOutputRows

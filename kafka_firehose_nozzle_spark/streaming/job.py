@@ -2,31 +2,29 @@
 
 Wires source -> routing transform -> sink with the stats listener, the
 Spark restatement of the goroutine DAG in SURVEY.md §3.2. One function
-per concern so tests can assemble partial pipelines.
+per concern so tests can assemble partial pipelines. The firehose
+source needs no transform of its own: its reader drops and counts bad
+frames and 1008 closes, and the listener reads those tallies from the
+source offset.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from kafka_firehose_nozzle_spark import schemas
 from kafka_firehose_nozzle_spark.config import Config
 from kafka_firehose_nozzle_spark.pipeline import route_envelopes_config
-from kafka_firehose_nozzle_spark.stats import (
-    Stats,
-    make_streaming_listener,
-    observe_decode,
-)
+from kafka_firehose_nozzle_spark.stats import Stats, make_streaming_listener
 
 
 def firehose_stream(spark: SparkSession, config: Config, **extra_options) -> DataFrame:
     """Streaming envelope DataFrame (ENVELOPE_SCHEMA columns) from the
     firehose DataSource (SRC1/SRC2; options map config.go fields).
 
-    Frames that fail to decode are split off here: ``observe_decode``
-    counts them into ``consume_fail`` and hands their error and raw
-    bytes to the stats listener, which logs each at WARN."""
+    The reader itself drops frames that fail to decode: it logs each
+    one's raw bytes at WARN and counts it in its offset's
+    ``consume_fail``, which the stats listener adds to ``Stats``."""
     from kafka_firehose_nozzle_spark.sources.firehose import FirehoseDataSource
 
     spark.dataSource.register(FirehoseDataSource)
@@ -49,8 +47,7 @@ def firehose_stream(spark: SparkSession, config: Config, **extra_options) -> Dat
         reader = reader.option("retryCount", str(config.cf.retry_count))
     for k, v in extra_options.items():
         reader = reader.option(k, str(v))
-    good = observe_decode(reader.load()).filter(F.col("_decode_error").isNull())
-    return good.select(*schemas.ENVELOPE_SCHEMA.fieldNames())
+    return reader.load()
 
 
 def file_replay_stream(spark: SparkSession, path: str) -> DataFrame:

@@ -208,7 +208,7 @@ def q_roundtrip_route_topics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # The decode-tail COLUMNS are unresolved expressions over field
-    # names ("value", "_raw"), so they are reusable against any parent —
+    # names ("value", "_parsed"), so they are reusable against any parent —
     # memoizing them saves ~0.2 s of py4j construction per pass (the
     # route dispatch + uuid-hex branch is dozens of JVM round trips).
     # They attach to THIS pass's fresh checkpoint below.
@@ -216,8 +216,8 @@ def q_roundtrip_route_topics(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         ("_rt_decode_cols",),
         lambda: (
-            F.from_json(F.col("value"), _decode_read_schema()).alias("_raw"),
-            route_topic_from_wire(F.col("_raw"), ROUTE_TOPICS).alias("topic"),
+            F.from_json(F.col("value"), _decode_read_schema()).alias("_parsed"),
+            route_topic_from_wire(F.col("_parsed"), ROUTE_TOPICS).alias("topic"),
         ),
     )
     return (

@@ -162,7 +162,7 @@ class StubDoppler:
                         return
             else:  # "silent": hold the socket open until the test ends
                 self._stop.wait()
-                conn.close(rfc6455.CLOSE_GOING_AWAY)
+                conn.close(1001)  # going away
         except (OSError, rfc6455.WSError):
             pass
 

@@ -239,20 +239,19 @@ def test_double_wire_is_fixed64_little_endian():
 def test_reader_batch_rows_equal_decode_envelope():
     """The reader's Arrow batch carries exactly what decode_envelope
     yields for each fixture frame, field for field, in ENVELOPE_SCHEMA
-    column order, with the quarantine columns NULL."""
+    column order, and no quarantine columns."""
     reader = FirehoseStreamReader({"fixtureRows": "8"})
     batches, end = reader.read({"n": 0})
     (batch,) = list(batches)
     assert end == {"n": 8}
     names = [f.name for f in schemas.ENVELOPE_SCHEMA.fields]
-    assert batch.schema.names == names + ["_decode_error", "_raw"]
+    assert batch.schema.names == names
     frames = reader._fixture_frames(0, 8)
     assert frames[0] == GOLDEN_LOG
     for row, frame in zip(batch.to_pylist(), frames, strict=True):
         want = decode_envelope(frame)
         assert {k: row[k] for k in want} == want
         assert row["_unrecognized"] is None
-        assert row["_decode_error"] is None and row["_raw"] is None
     # spot-check the positional contract against ENVELOPE_SCHEMA
     first = batch.to_pylist()[0]
     assert first["origin"] == "fake-origin-1"

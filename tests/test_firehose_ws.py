@@ -447,7 +447,8 @@ def test_idle_timeout_spends_retry_then_reconnect_resets_budget():
 
 def test_close_1008_raises_slow_consumer_alert_and_reconnects():
     """ST3 end-to-end: server closes 1008 after one envelope ->
-    SlowConsumerAlert counted (detector.go:71-99), connection dropped,
+    SlowConsumerAlert counted (detector.go:71-99) on the reader and in
+    the offset's cumulative ``slow_consumer_alert``, connection dropped,
     next batch redials."""
     frames = wire_frames(4)
     with StubDoppler(
@@ -459,13 +460,15 @@ def test_close_1008_raises_slow_consumer_alert_and_reconnects():
     ) as stub:
         reader = FirehoseStreamReader(reader_opts(stub))
         rows1, end1 = reader.read({"n": 0})
-        assert len(rows_of(rows1)) == 1 and end1 == {"n": 1}
+        assert len(rows_of(rows1)) == 1
+        assert end1 == {"n": 1, "slow_consumer_alert": 1}
         assert reader.slow_consumer_close_alerts == 1
         assert reader._conn is None
 
         rows2, end2 = reader.read(end1)
-        assert len(rows_of(rows2)) == 3 and end2 == {"n": 4}
-        assert reader.slow_consumer_close_alerts == 1  # clean session
+        assert len(rows_of(rows2)) == 3
+        assert end2 == {"n": 4, "slow_consumer_alert": 1}  # clean session
+        assert reader.slow_consumer_close_alerts == 1
     assert len(stub.requests) == 2
 
 
@@ -1102,18 +1105,56 @@ def test_query_stop_closes_the_live_socket(spark, tmp_path):
     assert stub.closed and stub.closed[0] - t_stop < 10
 
 
-def test_bad_frames_mid_stream_quarantined_counted_and_logged(
-    spark, tmp_path, caplog
-):
-    """A truncated frame and an empty frame in the middle of a live
-    stream: the query keeps running, the sink holds exactly what
-    route_envelopes_config makes of the good envelopes as a batch,
-    /stats/app counts the good frames in ``consume`` and the two bad
+def bad_frame_stream() -> tuple[list[bytes], bytes]:
+    """The 8 canonical frames with a truncated frame and an empty frame
+    in the middle, and the truncated frame."""
+    good = wire_frames(8)
+    truncated = good[0][:-3]
+    return good[:3] + [truncated] + good[3:5] + [b""] + good[5:], truncated
+
+
+def test_reader_quarantines_and_logs_bad_frames(caplog):
+    """The reader splits bad frames off the batch: Spark gets the 8 good
+    envelopes, the offset counts all 10 frames in ``n`` and the 2 bad
     ones in ``consume_fail``, and both raw payloads are logged at WARN
     (base64)."""
     import base64
-    import json
     import re
+
+    frames, truncated = bad_frame_stream()
+    with StubDoppler([{"frames": frames, "then": "silent"}], token=TOKEN) as stub:
+        reader = FirehoseStreamReader(reader_opts(stub))
+        reader._connect()
+        with caplog.at_level("WARNING", logger="kafka_firehose_nozzle_spark"):
+            got, off = [], {"n": 0}
+            while off["n"] < len(frames):
+                batches, off = reader.read(off)
+                got += rows_of(batches)
+        reader._drop_connection()
+    assert off == {"n": 10, "consume_fail": 2}
+    assert [r["eventType"] for r in got] == [
+        e["eventType"] for e in canonical_envelopes()
+    ]
+    logged = [
+        m.group(1)
+        for rec in caplog.records
+        if rec.levelname == "WARNING"
+        for m in [re.search(r"raw frame \(base64\): '([^']*)'", rec.getMessage())]
+        if m
+    ]
+    assert sorted(logged) == sorted(
+        [base64.b64encode(truncated).decode(), ""]
+    )
+
+
+def test_bad_frames_mid_stream_quarantined_counted_and_logged(spark, tmp_path):
+    """A truncated frame and an empty frame in the middle of a live
+    stream: the query keeps running, the sink holds exactly what
+    route_envelopes_config makes of the good envelopes as a batch, and
+    /stats/app counts the good frames in ``consume`` and the two bad
+    ones in ``consume_fail``. The reader logs them in the source's
+    process (test_reader_quarantines_and_logs_bad_frames)."""
+    import json
     import time
     import urllib.request
 
@@ -1121,9 +1162,7 @@ def test_bad_frames_mid_stream_quarantined_counted_and_logged(
     from kafka_firehose_nozzle_spark.server import start_stats_server
     from kafka_firehose_nozzle_spark.streaming.job import start_pipeline
 
-    good = wire_frames(8)
-    truncated = good[0][:-3]
-    frames = good[:3] + [truncated] + good[3:5] + [b""] + good[5:]
+    frames, _ = bad_frame_stream()
     with StubDoppler(
         [{"frames": frames, "then": "silent"}], token=TOKEN
     ) as stub:
@@ -1140,24 +1179,23 @@ def test_bad_frames_mid_stream_quarantined_counted_and_logged(
         server = start_stats_server(handle.stats, port=0)
         url = f"http://127.0.0.1:{server.server_port}/stats/app"
         try:
-            with caplog.at_level("WARNING", logger="kafka_firehose_nozzle_spark"):
-                deadline = time.time() + 60
-                while time.time() < deadline:
-                    with urllib.request.urlopen(url) as r:
-                        snap = json.loads(r.read())
-                    if (
-                        snap["consume"] >= 8
-                        and snap["consume_fail"] >= 2
-                        and snap["publish"] >= snap["forwarded"]
-                    ):
-                        break
-                    time.sleep(0.2)
-                assert handle.query.isActive
-                assert handle.query.exception() is None
-                got = sorted(
-                    (r.topic, r.value)
-                    for r in spark.table("bad_frames_sink").collect()
-                )
+            deadline = time.time() + 60
+            while time.time() < deadline:
+                with urllib.request.urlopen(url) as r:
+                    snap = json.loads(r.read())
+                if (
+                    snap["consume"] >= 8
+                    and snap["consume_fail"] >= 2
+                    and snap["publish"] >= snap["forwarded"]
+                ):
+                    break
+                time.sleep(0.2)
+            assert handle.query.isActive
+            assert handle.query.exception() is None
+            got = sorted(
+                (r.topic, r.value)
+                for r in spark.table("bad_frames_sink").collect()
+            )
         finally:
             server.shutdown()
             handle.stop()
@@ -1171,16 +1209,66 @@ def test_bad_frames_mid_stream_quarantined_counted_and_logged(
     assert got == want
     assert snap["consume"] == 8
     assert snap["consume_fail"] == 2
-    logged = [
-        m.group(1)
-        for rec in caplog.records
-        if rec.levelname == "WARNING"
-        for m in [re.search(r"raw frame \(base64\): '([^']*)'", rec.getMessage())]
-        if m
-    ]
-    assert sorted(logged) == sorted(
-        [base64.b64encode(truncated).decode(), ""]
+
+
+def test_close_1008_reaches_stats_slow_consumer_alert(spark, tmp_path):
+    """ST3(b) through Spark: a session that the server ends with a 1008
+    close, then a session with the rest of the frames. /stats/app
+    ``slow_consumer_alert`` counts the doppler TruncatingBuffer rows
+    (ST3(a)) plus the one close (cli.go:297-303)."""
+    import json
+    import time
+    import urllib.request
+
+    from kafka_firehose_nozzle_spark.server import start_stats_server
+    from kafka_firehose_nozzle_spark.stats import (
+        DOPPLER_ORIGIN,
+        TRUNCATING_BUFFER_COUNTER,
     )
+    from kafka_firehose_nozzle_spark.streaming.job import start_pipeline
+
+    truncating = sum(
+        e["eventType"] == schemas.COUNTER_EVENT
+        and e["origin"] == DOPPLER_ORIGIN
+        and e["counterEvent"]["name"] == TRUNCATING_BUFFER_COUNTER
+        for e in canonical_envelopes()
+    )
+    assert truncating == 1
+    frames = wire_frames(8)
+    with StubDoppler(
+        [
+            {"frames": frames[:3], "then": "close1008"},
+            {"frames": frames[3:], "then": "silent"},
+        ],
+        token=TOKEN,
+    ) as stub:
+        cfg = stream_config(stub, token=TOKEN, idle_timeout=30)
+        cfg.kafka = ROUTING
+        handle = start_pipeline(
+            spark,
+            firehose_stream(spark, cfg, retryDelaySeconds=0.01),
+            cfg,
+            str(tmp_path / "ckpt"),
+            sink="memory",
+            memory_sink_name="close_1008_sink",
+        )
+        server = start_stats_server(handle.stats, port=0)
+        url = f"http://127.0.0.1:{server.server_port}/stats/app"
+        try:
+            deadline = time.time() + 60
+            while time.time() < deadline:
+                with urllib.request.urlopen(url) as r:
+                    snap = json.loads(r.read())
+                if snap["consume"] >= 8 and snap["slow_consumer_alert"] >= 2:
+                    break
+                time.sleep(0.2)
+            assert handle.query.exception() is None
+        finally:
+            server.shutdown()
+            handle.stop()
+    assert len(stub.requests) >= 2  # redialled after the close
+    assert snap["consume"] == 8
+    assert snap["slow_consumer_alert"] == truncating + 1
 
 
 def test_nested_unknown_field_never_reaches_sink_json(spark, tmp_path):

@@ -1,5 +1,6 @@
-"""Every package module, and every top-level package function and class,
-is reachable from something that runs (no Spark).
+"""Every package module, and every top-level package function, class and
+assignment, is reachable from something that runs, and every import a
+package module makes is read (no Spark).
 
 The roots are what a user or the benchmark executes: the CLI, the Spark
 entry file, the query registry, ``bench.py`` and ``perfbench/``. A module
@@ -97,7 +98,8 @@ KEPT_FOR_TESTS = {
         "a test fixture",
 }
 
-_DEF = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+_FUNC = (ast.FunctionDef, ast.AsyncFunctionDef)
+_DEF = (*_FUNC, ast.ClassDef)
 
 
 def _names(nodes) -> set[str]:
@@ -113,6 +115,25 @@ def _names(nodes) -> set[str]:
     return out
 
 
+def _defined(stmt) -> list[str]:
+    """The names a top-level statement defines: a function or class, or
+    the names an assignment binds."""
+    if isinstance(stmt, _DEF):
+        return [stmt.name]
+    if isinstance(stmt, ast.Assign):
+        targets = stmt.targets
+    elif isinstance(stmt, ast.AnnAssign):
+        targets = [stmt.target]
+    else:
+        return []
+    return [
+        n.id
+        for t in targets
+        for n in ast.walk(t)
+        if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Store)
+    ]
+
+
 def _is_export(stmt) -> bool:
     return isinstance(stmt, (ast.Import, ast.ImportFrom)) or (
         isinstance(stmt, ast.Assign)
@@ -121,11 +142,11 @@ def _is_export(stmt) -> bool:
 
 
 def test_every_package_definition_is_reachable_from_a_root():
-    """A top-level function or class is reached when a root, a package
-    module's own top-level code or a reached definition names it.
-    Matching is by name, so a name shared with anything reached counts
-    as reached: the guard may miss an orphan but never flags a
-    definition that runs. ``__init__`` re-exports, imports and
+    """A top-level function, class or assigned name is reached when a
+    root, a package module's own other top-level code or a reached
+    definition names it. Matching is by name, so a name shared with
+    anything reached counts as reached: the guard may miss an orphan but
+    never flags a definition that runs. ``__init__`` re-exports, imports and
     ``__all__`` do not count."""
     defs: dict[str, list] = {}  # bare name -> [(qualified name, node)]
     todo = _names(ast.parse(p.read_text()) for p in ROOTS)
@@ -134,11 +155,12 @@ def test_every_package_definition_is_reachable_from_a_root():
             continue
         module = _module_name(path)
         for stmt in ast.parse(path.read_text()).body:
-            if isinstance(stmt, _DEF):
-                defs.setdefault(stmt.name, []).append(
-                    (f"{module}.{stmt.name}", stmt)
-                )
-            elif not _is_export(stmt):
+            if _is_export(stmt):
+                continue
+            names = _defined(stmt)
+            for name in names:
+                defs.setdefault(name, []).append((f"{module}.{name}", stmt))
+            if not names:
                 todo |= _names([stmt])
     qualified = {q: node for ds in defs.values() for q, node in ds}
     assert set(KEPT_FOR_TESTS) <= set(qualified)
@@ -161,3 +183,41 @@ def test_every_package_definition_is_reachable_from_a_root():
         "package definitions that no root reaches (delete them, or add "
         f"one to KEPT_FOR_TESTS with its reason): {orphans}"
     )
+
+
+def _scope_imports(scope):
+    """The import statements of ``scope`` outside its nested functions."""
+    for child in ast.iter_child_nodes(scope):
+        if isinstance(child, (ast.Import, ast.ImportFrom)):
+            yield child
+        elif not isinstance(child, (*_FUNC, ast.Lambda)):
+            yield from _scope_imports(child)
+
+
+def test_every_package_import_is_read():
+    """Each name a package module imports is read in the module, or, for
+    an import inside a function, in that function. ``__future__`` imports
+    and the ``__init__`` files, whose imports are re-exports and the only
+    ``__all__`` lists, are skipped."""
+    unread = []
+    for path in sorted(PKG.rglob("*.py")):
+        if path.name == "__init__.py":
+            continue
+        tree = ast.parse(path.read_text())
+        scopes = [tree, *(n for n in ast.walk(tree) if isinstance(n, _FUNC))]
+        for scope in scopes:
+            read = {
+                n.id
+                for n in ast.walk(scope)
+                if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load)
+            }
+            for imp in _scope_imports(scope):
+                if isinstance(imp, ast.ImportFrom) and imp.module == "__future__":
+                    continue
+                for a in imp.names:
+                    bound = a.asname or a.name.split(".")[0]
+                    if bound not in read:
+                        unread.append(
+                            f"{_module_name(path)}:{imp.lineno} {bound}"
+                        )
+    assert not unread, f"imports their module never reads: {unread}"

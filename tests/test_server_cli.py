@@ -192,6 +192,7 @@ def test_streaming_listener_scoped_to_query_id():
                 id=qid,
                 observedMetrics={},
                 sink=SimpleNamespace(numOutputRows=rows),
+                sources=[],
             )
         )
 

@@ -92,3 +92,79 @@ def test_route_envelopes_observes_once_without_common_exprs(spark):
     plan = out._jdf.queryExecution().optimizedPlan().toString()
     assert plan.count("CollectMetrics") == 1
     assert "_common_expr" not in plan
+
+
+def test_live_plan_observes_once_and_never_sees_quarantine_columns(
+    spark, tmp_path
+):
+    """The started live query (fixture source, memory sink) has one
+    CollectMetrics, the routed counters: the reader drops and counts
+    bad frames itself, so the plan has no decode observation and no
+    ``_decode_error`` column."""
+    from kafka_firehose_nozzle_spark.config import Config, KafkaConfig
+    from kafka_firehose_nozzle_spark.streaming.job import (
+        firehose_stream,
+        start_pipeline,
+    )
+
+    cfg = Config(kafka=KafkaConfig(topic=FULL))
+    handle = start_pipeline(
+        spark,
+        firehose_stream(spark, cfg, fixtureRows=8),
+        cfg,
+        str(tmp_path / "ckpt"),
+        sink="memory",
+        memory_sink_name="live_plan_sink",
+    )
+    try:
+        handle.wait_for_stats(8)  # the fixture source never runs dry
+        execution = handle.query._jsq.streamingQuery().lastExecution()
+        plan = execution.optimizedPlan().toString()
+    finally:
+        handle.stop()
+    assert plan.count("CollectMetrics") == 1
+    assert "_decode_error" not in plan
+
+
+def test_listener_adds_source_offset_tally_growth():
+    """The listener adds what each source-offset key named as a counter
+    grew by in the batch: a null start and a missing key count as 0, a
+    restart's start already carries the tally, ``n`` and a file source's
+    ``logOffset`` name no counter. Offsets come as JSON or as the Python
+    repr PySpark makes of a parsed event."""
+    from types import SimpleNamespace
+
+    from kafka_firehose_nozzle_spark.stats import make_streaming_listener
+
+    stats = Stats()
+    listener = make_streaming_listener(stats)
+
+    def progress(start, end):
+        source = SimpleNamespace(startOffset=start, endOffset=end)
+        return SimpleNamespace(
+            progress=SimpleNamespace(
+                id="q", observedMetrics={}, sink=None, sources=[source]
+            )
+        )
+
+    def tallies():
+        snap = stats.snapshot()
+        return snap["consume_fail"], snap["slow_consumer_alert"], snap["consume"]
+
+    listener.onQueryProgress(progress(None, '{"n": 5, "consume_fail": 2}'))
+    assert tallies() == (2, 0, 0)
+    listener.onQueryProgress(
+        progress('{"n": 5}', "{'n': 9, 'consume_fail': 3, 'slow_consumer_alert': 1}")
+    )
+    assert tallies() == (5, 1, 0)
+    # a restarted query's first batch starts from the committed offset
+    listener.onQueryProgress(
+        progress(
+            "{'n': 9, 'consume_fail': 3, 'slow_consumer_alert': 1}",
+            "{'n': 12, 'consume_fail': 4, 'slow_consumer_alert': 1}",
+        )
+    )
+    assert tallies() == (6, 1, 0)
+    listener.onQueryProgress(progress('{"logOffset": 3}', '{"logOffset": 4}'))
+    listener.onQueryProgress(progress("None", '{"logOffset": 0}'))
+    assert tallies() == (6, 1, 0)
