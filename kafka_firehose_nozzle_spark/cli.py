@@ -20,6 +20,7 @@ import tempfile
 from kafka_firehose_nozzle_spark.config import (
     DEFAULT_IDLE_TIMEOUT,
     DEFAULT_RETRY_COUNT,
+    LOG_FORMAT,
     Config,
     load_config,
 )
@@ -67,7 +68,7 @@ def setup_logging(level_str: str) -> int:
     logging.basicConfig(
         level=level,
         stream=sys.stderr,
-        format="%(asctime)s [%(levelname)s] %(message)s",
+        format=LOG_FORMAT,
     )
     logging.getLogger("kafka_firehose_nozzle_spark").setLevel(level)
     return level

@@ -16,6 +16,9 @@ from dataclasses import dataclass, field
 
 DEFAULT_IDLE_TIMEOUT = 60  # cli.go:50
 DEFAULT_RETRY_COUNT = 5  # cli.go:53
+# the nozzle's log line, on the driver (cli.setup_logging) and in Spark's
+# Python source worker (sources/firehose.py)
+LOG_FORMAT = "%(asctime)s [%(levelname)s] %(message)s"
 
 
 @dataclass

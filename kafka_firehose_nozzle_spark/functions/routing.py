@@ -6,6 +6,13 @@ application id into a ``%s`` template when configured. An empty resolved
 topic means "drop" (kafka.go:333-338) — expressed here as NULL so the
 pipeline can ``filter(topic IS NOT NULL)`` (P2) and Catalyst can push the
 whole thing into one projection.
+
+Like the reference's switch, each templated case reads only its own
+event's app id (kafka.go:312, 315, 327), and the HttpStartStop UUID
+rendering is built only when its template is set. An app-id ``CASE``
+shared by all types, UUID rendering included, would be copied into each
+template and grow the routed projection's generated method past HotSpot's
+8000-byte compile limit, so that it would run interpreted on every row.
 """
 
 from __future__ import annotations
@@ -18,41 +25,7 @@ from kafka_firehose_nozzle_spark.config import TopicConfig
 from kafka_firehose_nozzle_spark.functions.uuid_codec import uuid_to_str
 
 
-def app_id_expr(df: DataFrame) -> Column:
-    """Application id of an envelope, per event type (P4; kafka.go:312,315,327).
-
-    LogMessage -> logMessage.app_id; ContainerMetric ->
-    containerMetric.applicationId; HttpStartStop -> uuid2str(applicationId).
-    Other types have no app id (and no templated topics).
-    """
-    return (
-        F.when(
-            df["eventType"] == schemas.LOG_MESSAGE, df["logMessage.app_id"]
-        )
-        .when(
-            df["eventType"] == schemas.CONTAINER_METRIC,
-            df["containerMetric.applicationId"],
-        )
-        .when(
-            df["eventType"] == schemas.HTTP_START_STOP,
-            # Go's nil-safe getters render a missing applicationId as the
-            # zero UUID (uuid2str(nil) -> GetLow()==0), so default the
-            # fields to 0 rather than propagating NULL.
-            uuid_to_str(
-                F.struct(
-                    F.coalesce(
-                        df["httpStartStop.applicationId.low"], F.lit(0)
-                    ).alias("low"),
-                    F.coalesce(
-                        df["httpStartStop.applicationId.high"], F.lit(0)
-                    ).alias("high"),
-                )
-            ),
-        )
-    )
-
-
-def _fmt_topic(topic: str, topic_fmt: str, app_id: Column) -> Column:
+def _fmt_topic(topic: str, topic_fmt: str, app_id: Column | None = None) -> Column:
     """fmtTopic (kafka.go:183-188): %s template over app id, else static.
 
     Go's Sprintf("%s", nil-string) renders ""; format_string on a NULL
@@ -60,9 +33,7 @@ def _fmt_topic(topic: str, topic_fmt: str, app_id: Column) -> Column:
     topic -> NULL (drop marker).
     """
     if topic_fmt:
-        return F.format_string(
-            topic_fmt.replace("%s", "%s"), F.coalesce(app_id, F.lit(""))
-        )
+        return F.format_string(topic_fmt, F.coalesce(app_id, F.lit("")))
     if topic:
         return F.lit(topic)
     return F.lit(None).cast("string")
@@ -75,7 +46,14 @@ def route_topic_expr(df: DataFrame, topics: TopicConfig) -> Column:
     The whole dispatch is a single CASE WHEN — one codegen'd projection,
     no shuffle, no UDF.
     """
-    return _topic_case(df["eventType"], app_id_expr(df), topics)
+    return _topic_case(
+        df["eventType"],
+        topics,
+        log_app=df["logMessage.app_id"],
+        cm_app=df["containerMetric.applicationId"],
+        hss_low=df["httpStartStop.applicationId.low"],
+        hss_high=df["httpStartStop.applicationId.high"],
+    )
 
 
 def route_topic_from_wire(raw: Column, topics: TopicConfig) -> Column:
@@ -99,59 +77,60 @@ def route_topic_from_wire(raw: Column, topics: TopicConfig) -> Column:
     decoded envelope columns keep the envelopes_from_json path."""
     from kafka_firehose_nozzle_spark.functions.sonde_json import _signed
 
-    et = raw.getField("eventType")
-    hss_app = raw.getField("httpStartStop").getField("applicationId")
-    app_id = (
-        F.when(
-            et == schemas.LOG_MESSAGE,
-            raw.getField("logMessage").getField("app_id"),
-        )
-        .when(
-            et == schemas.CONTAINER_METRIC,
-            raw.getField("containerMetric").getField("applicationId"),
-        )
-        .when(
-            et == schemas.HTTP_START_STOP,
-            uuid_to_str(
-                F.struct(
-                    F.coalesce(
-                        _signed(hss_app.getField("low")), F.lit(0)
-                    ).alias("low"),
-                    F.coalesce(
-                        _signed(hss_app.getField("high")), F.lit(0)
-                    ).alias("high"),
-                )
-            ),
-        )
+    hss_id = raw.getField("httpStartStop").getField("applicationId")
+    return _topic_case(
+        raw.getField("eventType"),
+        topics,
+        log_app=raw.getField("logMessage").getField("app_id"),
+        cm_app=raw.getField("containerMetric").getField("applicationId"),
+        hss_low=_signed(hss_id.getField("low")),
+        hss_high=_signed(hss_id.getField("high")),
     )
-    return _topic_case(et, app_id, topics)
 
 
-def _topic_case(et: Column, app_id: Column, topics: TopicConfig) -> Column:
+def _topic_case(
+    et: Column,
+    topics: TopicConfig,
+    *,
+    log_app: Column,
+    cm_app: Column,
+    hss_low: Column,
+    hss_high: Column,
+) -> Column:
     """The per-event-type topic dispatch (kafka.go:305-340), shared by
     route_topic_expr (envelope columns) and route_topic_from_wire
-    (parsed wire struct) so there is ONE implementation of the CASE."""
+    (parsed wire struct) so there is ONE implementation of the CASE.
+
+    Each templated type formats its own app id: LogMessage
+    ``logMessage.app_id``, ContainerMetric ``containerMetric.applicationId``,
+    HttpStartStop ``uuid2str(applicationId)``. Go's nil-safe getters render
+    a missing HttpStartStop applicationId as the zero UUID (uuid2str(nil)
+    -> GetLow()==0), so its halves default to 0 rather than NULL.
+    """
+    hss_app = None
+    if topics.http_start_stop_fmt:
+        hss_app = uuid_to_str(
+            F.struct(
+                F.coalesce(hss_low, F.lit(0)).alias("low"),
+                F.coalesce(hss_high, F.lit(0)).alias("high"),
+            )
+        )
+
     return (
         F.when(
             et == schemas.HTTP_START_STOP,
-            _fmt_topic(topics.http_start_stop, topics.http_start_stop_fmt, app_id),
+            _fmt_topic(topics.http_start_stop, topics.http_start_stop_fmt, hss_app),
         )
         .when(
             et == schemas.LOG_MESSAGE,
-            _fmt_topic(topics.log_message, topics.log_message_fmt, app_id),
+            _fmt_topic(topics.log_message, topics.log_message_fmt, log_app),
         )
-        .when(
-            et == schemas.VALUE_METRIC,
-            _fmt_topic(topics.value_metric, "", app_id),
-        )
-        .when(
-            et == schemas.COUNTER_EVENT,
-            _fmt_topic(topics.counter_event, "", app_id),
-        )
-        .when(et == schemas.ERROR, _fmt_topic(topics.error, "", app_id))
+        .when(et == schemas.VALUE_METRIC, _fmt_topic(topics.value_metric, ""))
+        .when(et == schemas.COUNTER_EVENT, _fmt_topic(topics.counter_event, ""))
+        .when(et == schemas.ERROR, _fmt_topic(topics.error, ""))
         .when(
             et == schemas.CONTAINER_METRIC,
-            _fmt_topic(topics.container_metric, topics.container_metric_fmt, app_id),
+            _fmt_topic(topics.container_metric, topics.container_metric_fmt, cm_app),
         )
         .otherwise(F.lit(None).cast("string"))
     )

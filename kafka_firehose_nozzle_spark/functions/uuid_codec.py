@@ -12,8 +12,12 @@ helper_test.go:17-24, and in tests/test_uuid_codec.py here). Golden vector
 Implemented as pure JVM codegen, no UDF: an arithmetic byteswap (7
 shift/mask/or steps) turns the little-endian u64 into the big-endian value
 whose ``hex()`` rendering IS the byte sequence the reference prints — one
-``hex`` call per long instead of 16 substring slices, keeping the routing
-projection's generated code small enough for JIT.
+``hex`` call per long instead of 16 substring slices. The 32 hex digits are
+rendered once and the four dashes inserted with ``overlay``: Spark does no
+common-subexpression elimination inside a ``CASE`` branch, so slicing the
+digits five times would render them five times. Small as it is, the
+rendering still weighs on the generated code it sits in; routing builds it
+only for a templated HttpStartStop topic (``functions/routing.py``).
 """
 
 from __future__ import annotations
@@ -49,13 +53,7 @@ def uuid_to_str(uuid_struct: Column) -> Column:
     """
     lo = _le_hex(uuid_struct.getField("low"))
     hi = _le_hex(uuid_struct.getField("high"))
-    full = F.concat(lo, hi)  # 32 hex chars, little-endian byte order
-    return F.concat_ws(
-        "-",
-        F.substring(full, 1, 8),
-        F.substring(full, 9, 4),
-        F.substring(full, 13, 4),
-        F.substring(full, 17, 4),
-        F.substring(full, 21, 12),
-    )
-
+    out = F.concat(lo, hi)  # 32 hex chars, little-endian byte order
+    for pos in (9, 14, 19, 24):
+        out = F.overlay(out, F.lit("-"), pos, 0)
+    return out

@@ -12,6 +12,11 @@ Operationally it is a single narrow projection + filter: no shuffle, fully
 whole-stage-codegen'd, trivially scalable — throughput is bounded by source
 read + Kafka write, which is exactly the property the reference engineered
 for with easyjson + N workers (encoder_test.go:41-67, cli.go:341-349).
+The generated code is only fast once HotSpot compiles it, which it does
+not for a method over 8000 bytes of bytecode: routing keeps the topic
+projection's method under that (functions/routing.py), and
+tests/test_routing.py::test_routed_plan_methods_fit_the_jit_limit holds
+every method of this plan to it.
 """
 
 from __future__ import annotations

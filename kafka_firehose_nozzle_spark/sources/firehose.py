@@ -37,7 +37,16 @@ Source options (all strings, per the DataSource API):
   per batch instead of connecting (keeps CI network-free; live mode
   uses the hand-rolled stdlib RFC 6455 client in rfc6455.py — no
   third-party websocket package required). The envelopes are encoded
-  to wire frames and decoded like live traffic.
+  to wire frames and decoded like live traffic. A fixture stream never
+  runs dry: every ``latestOffset`` offers N more rows, so
+  ``query.processAllAvailable()`` never returns on it. Bound a fixture
+  query with ``trigger(availableNow=True)`` or wait for a row count.
+- ``logLevel``  numeric level of the nozzle's logger in the reader's
+  process. ``streaming.job.firehose_stream`` passes the driver logger's
+  level (``-log-level``), since Spark runs the reader in a Python
+  worker that the driver's logging setup does not reach; there the
+  reader also adds a stderr handler in ``config.LOG_FORMAT``, unless
+  the process has one configured already.
 
 ``read()`` joins the pump's chunks, each built by
 ``wire_batch.decode_frames`` in ``wire_batch.FRAME_SCHEMA`` (the
@@ -74,6 +83,7 @@ from kafka_firehose_nozzle_spark import schemas
 from kafka_firehose_nozzle_spark.config import (
     DEFAULT_IDLE_TIMEOUT,
     DEFAULT_RETRY_COUNT,
+    LOG_FORMAT,
 )
 from kafka_firehose_nozzle_spark.sources.dropsonde_wire import encode_envelope
 from kafka_firehose_nozzle_spark.sources.wire_batch import (
@@ -96,6 +106,20 @@ CHUNK_WAIT = 0.005
 SOURCE_SCHEMA = T.StructType(FRAME_SCHEMA.fields[: len(schemas.ENVELOPE_SCHEMA)])
 # the reader's tallies its offset carries, named as their Stats counters
 TALLIES = ("consume_fail", "slow_consumer_alert")
+
+log = logging.getLogger("kafka_firehose_nozzle_spark")
+
+
+def _setup_logging(level: str | None) -> None:
+    """Give the reader's process the driver's log level and line format
+    (see the ``logLevel`` option); a handler the process already has is
+    left to do the formatting."""
+    if level:
+        log.setLevel(int(level))
+    if not log.hasHandlers():
+        handler = logging.StreamHandler()
+        handler.setFormatter(logging.Formatter(LOG_FORMAT))
+        log.addHandler(handler)
 
 
 def _check_uaa_credentials(uaa_addr: str, username: str, password: str) -> None:
@@ -223,6 +247,7 @@ class FirehoseStreamReader(SimpleDataSourceStreamReader):
 
     def __init__(self, options: dict) -> None:
         self.options = options
+        _setup_logging(options.get("logLevel"))
         self.max_batch = int(options.get("maxBatchRows", DEFAULT_MAX_BATCH_ROWS))
         self.fixture_rows = int(options.get("fixtureRows", 0))
         self.idle_timeout = float(
@@ -264,7 +289,7 @@ class FirehoseStreamReader(SimpleDataSourceStreamReader):
                 "maximum number of connection retries reached"
             )
         self._retries_left -= 1
-        logging.getLogger("kafka_firehose_nozzle_spark").warning(
+        log.warning(
             "firehose connection error: %s. Retrying... "
             "(%d attempt(s) left, backoff %.2fs)",
             reason,
@@ -392,7 +417,7 @@ class FirehoseStreamReader(SimpleDataSourceStreamReader):
         if bad:
             quarantined = batch.filter(error.is_valid())
             for row in quarantined.select(["_decode_error", "_raw"]).to_pylist():
-                logging.getLogger("kafka_firehose_nozzle_spark").warning(
+                log.warning(
                     "firehose frame quarantined: %s; raw frame (base64): %r",
                     row["_decode_error"],
                     base64.b64encode(row["_raw"] or b"").decode(),
@@ -460,7 +485,7 @@ class FirehoseStreamReader(SimpleDataSourceStreamReader):
                 # go-nozzle detector.go:71-99: ClosePolicyViolation
                 # (1008) = server dropped us for being too slow
                 self.slow_consumer_close_alerts += 1
-                logging.getLogger("kafka_firehose_nozzle_spark").warning(
+                log.warning(
                     "websocket terminates the connection because "
                     "connection is too slow (ClosePolicyViolation)"
                 )
@@ -542,7 +567,7 @@ class FirehoseStreamReader(SimpleDataSourceStreamReader):
             return self._split(decode_frames(frames))[0]
         lost = max(0, n_end - n)
         self.dropped_replay_rows += lost
-        logging.getLogger("kafka_firehose_nozzle_spark").warning(
+        log.warning(
             "firehose restart: live socket cannot replay offsets [%d, %d); "
             "dropping %d prefetched-but-uncommitted row(s) "
             "(at-least-once bound; total dropped this reader: %d)",

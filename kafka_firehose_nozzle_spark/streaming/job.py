@@ -25,7 +25,7 @@ def firehose_stream(spark: SparkSession, config: Config, **extra_options) -> Dat
     The reader itself drops frames that fail to decode: it logs each
     one's raw bytes at WARN and counts it in its offset's
     ``consume_fail``, which the stats listener adds to ``Stats``."""
-    from kafka_firehose_nozzle_spark.sources.firehose import FirehoseDataSource
+    from kafka_firehose_nozzle_spark.sources.firehose import FirehoseDataSource, log
 
     spark.dataSource.register(FirehoseDataSource)
     reader = (
@@ -40,6 +40,7 @@ def firehose_stream(spark: SparkSession, config: Config, **extra_options) -> Dat
             "insecureSSLSkipVerify",
             "true" if config.insecure_ssl_skip_verify else "false",
         )
+        .option("logLevel", str(log.getEffectiveLevel()))
     )
     if config.cf.idle_timeout:
         reader = reader.option("idleTimeout", str(config.cf.idle_timeout))

@@ -2,7 +2,11 @@
 through the full DataSource plumbing, URL building, token validation,
 checkpoint crash-recovery."""
 
+import logging
 import os
+import re
+import subprocess
+import sys
 import time
 
 import pytest
@@ -58,6 +62,66 @@ def test_live_replay_drop_is_counted_and_logged(caplog):
     # tallies accumulate across restarts of the same reader
     list(reader.readBetweenOffsets({"n": 25}, {"n": 30}))
     assert reader.dropped_replay_rows == 20
+
+
+# A process like Spark's Python source worker: no logging set up unless
+# argv[2] == "configured". The reader logs one WARNING (a live restart's
+# replay drop) at the level given as its logLevel option, argv[1].
+_READER_LOG_PROBE = """
+import logging, sys
+if sys.argv[2] == "configured":
+    logging.basicConfig(format="root handler: %(message)s")
+from kafka_firehose_nozzle_spark.sources.firehose import FirehoseStreamReader
+reader = FirehoseStreamReader({"logLevel": sys.argv[1]})
+list(reader.readBetweenOffsets({"n": 0}, {"n": 3}))
+"""
+_STAMP = r"\d{4}-\d\d-\d\d \d\d:\d\d:\d\d,\d{3}"
+
+
+@pytest.mark.parametrize(
+    "level,setup,want",
+    [
+        (logging.WARNING, "bare", rf"{_STAMP} \[WARNING\] firehose restart: .*dropping 3 "),
+        (logging.ERROR, "bare", None),
+        (logging.WARNING, "configured", r"root handler: firehose restart: .*dropping 3 "),
+    ],
+)
+def test_reader_logs_in_the_nozzle_format_at_the_driver_level(level, setup, want):
+    """Where nothing configured logging, the reader writes the nozzle's
+    log line to stderr and drops what is below the level it was given;
+    a handler the process has already writes each line once, its own
+    way."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    run = subprocess.run(
+        [sys.executable, "-c", _READER_LOG_PROBE, str(level), setup],
+        capture_output=True, text=True, cwd=root, timeout=120,
+        env={**os.environ, "PYTHONPATH": root},
+    )
+    assert run.returncode == 0, run.stderr
+    lines = run.stderr.splitlines()
+    if want is None:
+        assert lines == []
+    else:
+        assert len(lines) == 1 and re.match(want, lines[0]), lines
+
+
+def test_firehose_stream_passes_the_driver_log_level(spark, monkeypatch):
+    """The reader's process gets the driver logger's effective level."""
+    from pyspark.sql.streaming import DataStreamReader
+
+    seen = {}
+    option = DataStreamReader.option
+
+    def record(self, key, value):
+        seen[key] = value
+        return option(self, key, value)
+
+    monkeypatch.setattr(DataStreamReader, "option", record)
+    monkeypatch.setattr(
+        logging.getLogger("kafka_firehose_nozzle_spark"), "level", logging.ERROR
+    )
+    firehose_stream(spark, Config(), fixtureRows=1)
+    assert seen["logLevel"] == str(logging.ERROR)
 
 
 def test_reader_offsets_fixture_mode():

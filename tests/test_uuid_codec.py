@@ -99,3 +99,12 @@ def test_roundtrip_matches_reference_semantics(spark, low, high):
     df = spark.createDataFrame([(got,)], ["s"])
     back = df.select(str_to_uuid_struct(F.col("s")).alias("u")).collect()[0].u
     assert back.low == _signed(low) and back.high == _signed(high)
+
+
+def test_null_struct_or_half_renders_null(spark):
+    """A null struct, or a null low or high, renders NULL, not ''."""
+    rows = [{"u": None}, {"u": {"low": None, "high": 1}}, {"u": {"low": 1, "high": None}}]
+    df = spark.createDataFrame(rows, UUID_ROW)
+    assert [r.s for r in df.select(uuid_to_str(F.col("u")).alias("s")).collect()] == [
+        None, None, None
+    ]
